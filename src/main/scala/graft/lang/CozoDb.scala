@@ -52,6 +52,8 @@ class CozoDb(val spark: SparkSession) {
                     validity: Option[String] = None,
                     validityAssert: Option[String] = None): Unit = {
     relations(name) = df
+    dropRelationIndexCaches(name)
+    bumpVersion(name)
     relationKeys(name) = if (keys.nonEmpty) keys else df.columns.toSeq
     validity.foreach { v =>
       if (!df.columns.contains(v))
@@ -151,6 +153,8 @@ class CozoDb(val spark: SparkSession) {
     * of the same name silently inherit validity coercion (phantom
     * assert columns, bogus sentinel errors on ordinary array values). */
   def removeRelation(name: String): Unit = {
+    dropRelationIndexCaches(name)
+    forgetVersion(name)
     relations.remove(name); relationKeys.remove(name)
     relationValidity.remove(name); relationAssert.remove(name)
     relationDeclared.remove(name); relationDefaults.remove(name)
@@ -345,6 +349,8 @@ class CozoDb(val spark: SparkSession) {
     def commit(): Unit = if (!done) close()
     def abort(): Unit = {
       if (!done) {
+        val changed = (relations.keySet ++ snapRelations.keySet).filterNot(n =>
+          relations.get(n).exists(df => snapRelations.get(n).exists(_ eq df)))
         relations.clear(); relations ++= snapRelations
         relationKeys.clear(); relationKeys ++= snapKeys
         relationValidity.clear(); relationValidity ++= snapValidity
@@ -352,7 +358,14 @@ class CozoDb(val spark: SparkSession) {
         indexes.clear(); indexes ++= snapIndexes
         indexCreateTexts.clear(); indexCreateTexts ++= snapIndexTexts
         scriptTriggers.clear(); scriptTriggers ++= snapTriggers
-        mutationEpoch += 1
+        // relations whose rows the transaction changed get a new
+        // version (their index caches were patched to the aborted
+        // state), and indexes it created lose their caches
+        changed.foreach { n =>
+          dropRelationIndexCaches(n)
+          if (relations.contains(n)) bumpVersion(n) else forgetVersion(n)
+        }
+        cachedIndexTargets.filterNot(indexes.contains).foreach(dropIndexCaches)
         close()
       }
     }
@@ -639,8 +652,10 @@ class CozoDb(val spark: SparkSession) {
         // lineage into checkpoint blocks, and drop index delta chains
         // so the next probe serves a freshly compacted artifact
         relationNames.foreach(r => relations(r) = relations(r).ckpt())
-        ftsCache.clear(); ftsDeltaCount.clear()
-        lshCache.clear(); lshDeltaCount.clear()
+        indexCacheLock.synchronized {
+          ftsCache.clear(); ftsDeltaCount.clear()
+          lshCache.clear(); lshDeltaCount.clear()
+        }
         Seq(Tuple1("ok")).toDF("status")
       case "running" =>
         runningQueries.asScala.toSeq.map { case (id, desc) => (id, desc) }
@@ -878,18 +893,50 @@ class CozoDb(val spark: SparkSession) {
     * db.rs:644-700 — replay reaches the same post-restore behavior
     * without a second serialization format for IndexSpec). */
   private val indexCreateTexts = mutable.LinkedHashMap.empty[String, String]
-  /** Bumped on every mutation; index artifacts cache against it so a
+  /** Per-relation data version, drawn from one counter so a number is
+    * never reused — not even by a removed and re-created relation.
+    * Bumped on every change of a relation's rows: a mutation, a
+    * (re-)registration (`:create`/`:replace`, [[registerTable]],
+    * [[importRelations]], [[restore]], `::rename`), and a transaction
+    * abort that restores it; forgotten on removal. Every index artifact
+    * caches against the version of ITS OWN relation, so a write to one
+    * relation never rebuilds or reloads another relation's index. A
     * probe after a put sees the new rows (the reference updates indexes
-    * inside the mutating tx, stored.rs:322-328 — we rebuild lazily,
-    * which at scale is a deliberate trade: bulk loads don't pay
-    * per-row index maintenance). */
-  @volatile private var mutationEpoch = 0L
+    * inside the mutating tx, stored.rs:322-328): the mutation patches
+    * the cached artifact, or the next probe rebuilds it. */
+  private val relationVersions = mutable.HashMap.empty[String, Long]
+  private val versionCounter = new java.util.concurrent.atomic.AtomicLong(0)
+  private def versionOf(rel: String): Long =
+    indexCacheLock.synchronized(relationVersions.getOrElse(rel, 0L))
+  private def forgetVersion(rel: String): Unit =
+    indexCacheLock.synchronized(relationVersions.remove(rel))
+  private def bumpVersion(rel: String): Long = indexCacheLock.synchronized {
+    val v = versionCounter.incrementAndGet()
+    relationVersions(rel) = v
+    v
+  }
   /** Guards the probe-time get-or-build of every index cache: cache
     * fills happen under the SHARED read lock (concurrent readers), so
     * they need their own monitor; mutation-path refreshes run under
     * the exclusive write lock and take this monitor too for the same
     * happens-before edge. */
   private val indexCacheLock = new Object
+  /** Driver-resident indexes. An FTS or walkable HNSW index whose
+    * estimated heap footprint is at most [[driverIndexGateBytes]] (a
+    * [[graft.plan.Knee.gate]] decision per build, logged as
+    * `op=fts_index|hnsw_index`) is held on the driver: FTS as
+    * [[graft.search.DriverFts]] maps, HNSW as the same 32 hash-bucket
+    * graphs the distributed build writes ([[graft.similarity.HnswBuckets]]).
+    * A probe then walks driver memory — no Spark job for the index
+    * side — and a mutation patches the index in place from the changed
+    * rows. Larger indexes take the distributed caches below, unchanged.
+    * Both branches return the same results (DriverIndexSpec). */
+  private val ftsDriver = mutable.HashMap.empty[String, (Long, graft.search.DriverFts)]
+  private val hnswDriver = mutable.HashMap.empty[String, (Long, graft.similarity.HnswBuckets)]
+  /** The driver-index byte gate: 1/16 of the driver heap. Tests set a
+    * negative value to pin the distributed branch. */
+  private[lang] var driverIndexGateBytes: Long = Runtime.getRuntime.maxMemory / 16
+  /** Distributed FTS indexes (postings/lens DataFrames). */
   private val ftsCache = mutable.HashMap.empty[String, (Long, graft.search.Fts.Index)]
   /** Cached per-document LSH band table (key, band) — minhash
     * signatures are the expensive part of a `~rel:lsh` probe and are
@@ -897,30 +944,53 @@ class CozoDb(val spark: SparkSession) {
     * mutations as deltas exactly like the FTS postings. */
   private val lshCache = mutable.HashMap.empty[String, (Long, DataFrame)]
   /** Persisted partition-local HNSW graphs for `::hnsw create ... m:`
-    * indexes (Ann.hnswWriteIndex artifacts), keyed like the FTS/LSH
-    * caches: built once per mutation epoch, probes restore and walk
-    * the graphs instead of rebuilding them per probe (the reference
-    * builds its graph at create time and walks it per probe). Rebuild
-    * on epoch change is the same lazy trade the other index caches
-    * document. */
+    * indexes above the driver gate (Ann.hnswWriteIndex artifacts),
+    * keyed like the FTS/LSH caches: built once per relation version,
+    * probes restore and walk the graphs instead of rebuilding them per
+    * probe (the reference builds its graph at create time and walks it
+    * per probe). */
   private val hnswGraphCache = mutable.HashMap.empty[String, (Long, String)]
   /** RESTORED graphs ([[graft.similarity.Ann.hnswLoadIndex]]) per
-    * index, epoch-keyed like the artifact cache: the index-sized
-    * restore shuffle is paid once per epoch, after which every probe
+    * index, version-keyed like the artifact cache: the index-sized
+    * restore shuffle is paid once per version, after which every probe
     * walks executor-cached graphs with zero further shuffle or I/O. */
   private val hnswLoadedCache =
     mutable.HashMap.empty[String, (Long, org.apache.spark.rdd.RDD[graft.similarity.HnswIndex])]
 
-  /** The cached restored graphs of a walk-eligible index at the
-    * CURRENT epoch (building artifact + restore caches as needed). */
-  private def hnswLoadedGraphs(target: String, v: VecIdx)
+  /** Targets holding any cached artifact, and the persisted HNSW graph
+    * directories (test hooks for cache cleanup). */
+  private[lang] def cachedIndexTargets: Set[String] = indexCacheLock.synchronized {
+    (ftsDriver.keySet ++ hnswDriver.keySet ++ ftsCache.keySet ++ lshCache.keySet ++
+      hnswGraphCache.keySet ++ hnswLoadedCache.keySet).toSet
+  }
+  private[lang] def indexArtifactDirs: Seq[String] =
+    indexCacheLock.synchronized(hnswGraphCache.values.map(_._2).toSeq)
+
+  /** Drop every cached artifact of one index: driver maps, FTS/LSH
+    * frames, HNSW graph dirs and executor-cached graph RDDs. */
+  private def dropIndexCaches(target: String): Unit = indexCacheLock.synchronized {
+    ftsDriver.remove(target); hnswDriver.remove(target)
+    ftsCache.remove(target); ftsDeltaCount.remove(target)
+    lshCache.remove(target); lshDeltaCount.remove(target)
+    dropHnswGraph(target)
+  }
+
+  /** Drop the cached artifacts of every index over `rel`, including
+    * indexes whose definition is already gone. */
+  private def dropRelationIndexCaches(rel: String): Unit =
+    cachedIndexTargets.filter(_.takeWhile(_ != ':') == rel).foreach(dropIndexCaches) // rel:name
+
+  /** The restored graphs of a distributed walk-eligible index, cached
+    * per relation version. */
+  private def hnswLoadedGraphs(target: String, v: VecIdx, dir: String)
       : org.apache.spark.rdd.RDD[graft.similarity.HnswIndex] = indexCacheLock.synchronized {
+    val ver = versionOf(v.rel)
     hnswLoadedCache.get(target) match {
-      case Some((ep, rdd)) if ep == mutationEpoch => rdd
+      case Some((vv, rdd)) if vv == ver => rdd
       case stale =>
         stale.foreach { case (_, old) => old.unpersist(blocking = false) }
-        val rdd = graft.similarity.Ann.hnswLoadIndex(spark, hnswGraphDir(target, v))
-        hnswLoadedCache(target) = (mutationEpoch, rdd)
+        val rdd = graft.similarity.Ann.hnswLoadIndex(spark, dir)
+        hnswLoadedCache(target) = (ver, rdd)
         indexGraphLoads += 1
         rdd
     }
@@ -974,38 +1044,59 @@ class CozoDb(val spark: SparkSession) {
     }.reduce(_ unionByName _)
   }
 
-  /** Persisted partition-local HNSW graphs over the admitted corpus of
-    * a walk-eligible vector index, built once per mutation epoch and
-    * cached; shared by probes and the index-internals graph scan. The
-    * create-time admission filter is param-free by construction. */
-  private def hnswGraphDir(target: String, v: VecIdx): String = indexCacheLock.synchronized {
-    hnswGraphCache.get(target) match {
-      case Some((ep, d)) if ep == mutationEpoch => d
-      case stale =>
-        // reclaim the superseded epoch's artifacts before rebuilding
+  /** The index-admitted rows of a vector index (the create-time
+    * admission filter is param-free by construction). */
+  private def hnswAdmitted(v: VecIdx): DataFrame =
+    v.filter.fold(relation(v.rel))(e =>
+      relation(v.rel).filter(compiler(_ => None, Map.empty).compileExpr(e)))
+
+  /** (m, ef_construction) as the graph builds use them: the reference
+    * accepts ef_construction < m; HnswIndex needs a beam at least m
+    * wide. */
+  private def hnswBuildParams(v: VecIdx): (Int, Int) = {
+    val mEff = math.max(v.m.get, 2)
+    (mEff, math.max(v.efConstruction.getOrElse(mEff * 6), mEff))
+  }
+
+  /** The graphs of a walk-eligible vector index at its relation's
+    * current version, built on first use: driver-resident when the
+    * corpus fits the byte gate, else persisted partition-local graphs
+    * (a directory of [[graft.similarity.Ann.hnswWriteIndex]] artifacts).
+    * Shared by probes and the index-internals graph scan. */
+  private def hnswIndexOf(target: String, v: VecIdx)
+      : Either[graft.similarity.HnswBuckets, String] = indexCacheLock.synchronized {
+    val ver = versionOf(v.rel)
+    hnswDriver.get(target).collect { case (vv, b) if vv == ver => Left(b) }
+      .orElse(hnswGraphCache.get(target).collect { case (vv, d) if vv == ver => Right(d) })
+      .getOrElse {
+        // reclaim the superseded version's artifacts before rebuilding
         // (long sessions with many mutations would otherwise
         // accumulate dead graph dirs)
-        stale.foreach { case (_, old) =>
-          scala.util.Try(org.apache.commons.io.FileUtils
-            .deleteDirectory(new java.io.File(old)))
-        }
-        val key = keyColOf(v.rel)
-        val admitted = v.filter.fold(relation(v.rel))(e =>
-          relation(v.rel).filter(compiler(_ => None, Map.empty).compileExpr(e)))
-        val corpus = hnswCorpus(v, admitted, key)
-        // the reference accepts ef_construction < m; HnswIndex needs a
-        // beam at least m wide
-        val mEff = math.max(v.m.get, 2)
-        val efcEff = math.max(v.efConstruction.getOrElse(mEff * 6), mEff)
-        val d = java.nio.file.Files
-          .createTempDirectory("graft_hnsw").toString
-        graft.similarity.Ann.hnswWriteIndex(d, corpus, mEff, efcEff,
-          metric = hnswWalkMetric(v.distance).get,
-          extendCandidates = v.extendCandidates, keepPruned = v.keepPruned)
-        hnswGraphCache(target) = (mutationEpoch, d)
+        dropHnswGraph(target)
+        val corpus = hnswCorpus(v, hnswAdmitted(v), keyColOf(v.rel))
+        val (mEff, efcEff) = hnswBuildParams(v)
+        val metric = hnswWalkMetric(v.distance).get
         indexFullBuilds += 1
-        d
-    }
+        val st = corpus.agg(count(lit(1)), sum(size(col("vec")))).head()
+        val bytes = graft.similarity.HnswBuckets.estimateBytes(
+          st.getLong(0), if (st.isNullAt(1)) 0L else st.getLong(1), mEff)
+        if (graft.plan.Knee.gate("hnsw_index", bytes, driverIndexGateBytes)) {
+          val b = graft.similarity.HnswBuckets.build(
+            corpus.filter(col("vec").isNotNull).collect().toSeq
+              .map(r => (r.getLong(0), r.getSeq[Float](1).toArray)),
+            mEff, efcEff, metric = metric,
+            extendCandidates = v.extendCandidates, keepPruned = v.keepPruned)
+          hnswDriver(target) = (ver, b)
+          indexDriverBuilds += 1
+          Left(b)
+        } else {
+          val d = java.nio.file.Files.createTempDirectory("graft_hnsw").toString
+          graft.similarity.Ann.hnswWriteIndex(d, corpus, mEff, efcEff, metric = metric,
+            extendCandidates = v.extendCandidates, keepPruned = v.keepPruned)
+          hnswGraphCache(target) = (ver, d)
+          Right(d)
+        }
+      }
   }
 
   /** The graph node ids a set of changed KEYS touches: one per field. */
@@ -1022,7 +1113,7 @@ class CozoDb(val spark: SparkSession) {
     * (same corruption class as duplicate multi-field ids). Composite
     * keys fall back to the exact scan. */
   private def keyTypeIntegral(rel: String): Boolean =
-    relationKeys.getOrElse(rel, relation(rel).columns.toSeq).lengthIs == 1 &&
+    singleKey(rel) &&
       (relation(rel).schema(keyColOf(rel)).dataType match {
         case org.apache.spark.sql.types.LongType |
              org.apache.spark.sql.types.IntegerType |
@@ -1070,19 +1161,49 @@ class CozoDb(val spark: SparkSession) {
     best
   }
 
-  private def ftsIndex(target: String, spec: FtsIdx): graft.search.Fts.Index = indexCacheLock.synchronized {
-    ftsCache.get(target) match {
-      case Some((epoch, ix)) if epoch == mutationEpoch => ix
-      case _ =>
-        val ix = graft.search.Fts.Index.build(
-          extractFiltered(relation(spec.rel), spec.extractor, spec.extractFilter),
-          keyColOf(spec.rel), spec.extractor, spec.pipe)
-        ftsCache(target) = (mutationEpoch, ix)
+  /** The FTS index of `target` at its relation's current version, built
+    * on first use: driver-resident ([[graft.search.DriverFts]]) when the
+    * relation has a single key column and the index fits the byte gate
+    * (estimated from the extractor text length, one scan), else the
+    * distributed postings/lens frames. */
+  private def ftsIndex(target: String, spec: FtsIdx)
+      : Either[graft.search.DriverFts, graft.search.Fts.Index] = indexCacheLock.synchronized {
+    import graft.search.DriverFts
+    val ver = versionOf(spec.rel)
+    ftsDriver.get(target).collect { case (v, d) if v == ver => Left(d) }
+      .orElse(ftsCache.get(target).collect { case (v, ix) if v == ver => Right(ix) })
+      .getOrElse {
+        ftsDriver.remove(target); ftsCache.remove(target)
+        val key = keyColOf(spec.rel)
+        val docs = extractFiltered(relation(spec.rel), spec.extractor, spec.extractFilter)
         indexFullBuilds += 1
-        ftsDeltaCount(target) = 0
-        ix
-    }
+        val driver = singleKey(spec.rel) && {
+          val st = docs.agg(count(lit(1)), sum(length(col(spec.extractor)))).head()
+          val chars = if (st.isNullAt(1)) 0L else st.getLong(1)
+          graft.plan.Knee.gate("fts_index",
+            DriverFts.estimateBytes(st.getLong(0), DriverFts.tokenBound(chars, spec.pipe)),
+            driverIndexGateBytes)
+        }
+        if (driver) {
+          val d = DriverFts.empty(spec.pipe).patch(Nil,
+            DriverFts.tokenRows(DriverFts.docTokens(docs, key, spec.extractor, spec.pipe)
+              .collect().toSeq))
+          ftsDriver(target) = (ver, d)
+          indexDriverBuilds += 1
+          Left(d)
+        } else {
+          val ix = graft.search.Fts.Index.build(docs, key, spec.extractor, spec.pipe)
+          ftsCache(target) = (ver, ix)
+          ftsDeltaCount(target) = 0
+          Right(ix)
+        }
+      }
   }
+
+  /** The relation is keyed by exactly one column, so its key column
+    * identifies a row (the driver indexes map key → document). */
+  private def singleKey(rel: String): Boolean =
+    relationKeys.getOrElse(rel, relation(rel).columns.toSeq).lengthIs == 1
 
   /** extract_filter semantics (parse/sys.rs:374-382): rows failing
     * the condition get a NULL extractor value — no tokens, no
@@ -1113,11 +1234,12 @@ class CozoDb(val spark: SparkSession) {
   }
 
   private def lshBandTable(target: String, l: LshIdx): DataFrame = indexCacheLock.synchronized {
+    val ver = versionOf(l.rel)
     lshCache.get(target) match {
-      case Some((epoch, df)) if epoch == mutationEpoch => df
+      case Some((v, df)) if v == ver => df
       case _ =>
         val df = lshBandsOf(relation(l.rel), keyColOf(l.rel), l).ckptLazy()
-        lshCache(target) = (mutationEpoch, df)
+        lshCache(target) = (ver, df)
         indexFullBuilds += 1 // shared observability counter for tests
         lshDeltaCount(target) = 0
         df
@@ -1138,6 +1260,7 @@ class CozoDb(val spark: SparkSession) {
       // extra column beyond the reference (BM25's term frequency).
       val key = keyColOf(f.rel)
       val ix = ftsIndex(target, f)
+        .fold(_.toIndex(spark, relation(f.rel).schema(key).dataType), identity)
       ix.postings.join(ix.lens, Seq("id"))
         .select(col("term").as("word"), col("id").as(s"src_$key"),
           lit(null).cast("array<bigint>").as("offset_from"),
@@ -1160,16 +1283,21 @@ class CozoDb(val spark: SparkSession) {
       // NEGATIVE going up), fr_<key>/to_<key> + __field/__sub_idx,
       // dist, hash, ignore_link; one self-loop row (fr = to, dist 0)
       // per node per occupied layer (hnsw.rs:763-781 scans them per
-      // layer on removal). Our persisted partition-local graphs
-      // (Ann.hnswWriteIndex) provide the rows: node id decodes to
+      // layer on removal). Our partition-local graphs (driver-resident
+      // or persisted by Ann.hnswWriteIndex) provide the rows: node id decodes to
       // (key, field) and __sub_idx is always 0 (list-of-vector fields
       // are not walk-eligible). hash is the reference's
       // conflict-detection vector hash — internal, emitted as NULL.
       import org.apache.spark.sql.functions.{explode, sequence}
       val nF = v.fields.length
       val key = keyColOf(v.rel)
-      val rows = spark.read.schema(graft.similarity.Ann.graphSchema)
-        .parquet(s"${hnswGraphDir(target, v)}/graph")
+      val rows = hnswIndexOf(target, v) match {
+        case Left(b) => spark.createDataFrame(b.rows.map { case (p, id, vec, lvl, ns, el) =>
+            Row(p, id, vec, lvl, ns, el)
+          }.toSeq.asJava, graft.similarity.Ann.graphSchema)
+        case Right(dir) => spark.read.schema(graft.similarity.Ann.graphSchema)
+          .parquet(s"$dir/graph")
+      }
       // gid = key*nF + f: (gid - pmod) is an exact multiple of nF, so
       // integral `div` recovers the key bit-exactly for any sign
       def decodeKey(c: String) = expr(s"($c - pmod($c, $nF)) div $nF")
@@ -1257,6 +1385,10 @@ class CozoDb(val spark: SparkSession) {
     }
   }
 
+  /** A DataFrame over driver rows (a local relation). */
+  private def localFrame(rows: Seq[Row], fields: StructField*): DataFrame =
+    spark.createDataFrame(rows.asJava, StructType(fields))
+
   /** `~rel:idx{cols | query: …, k: …, bind_…: var}` probes
     * (search_apply; HnswSearchRA/FtsSearchRA/LshSearchRA,
     * query/ra.rs:896-1066). The probe is a top-k search joined back to
@@ -1319,7 +1451,7 @@ class CozoDb(val spark: SparkSession) {
         df.filter(compiler(_ => None, params).compileExpr(e)))
     spec match {
       case f: FtsIdx =>
-        val ix = ftsIndex(target, f)
+        val handle = ftsIndex(target, f)
         // `score_kind:` (program.rs:1283-1297): 'tf_idf' (default) and
         // 'tf' are the reference's scorers (fts/indexing.rs:231-247 —
         // its BM25 was never implemented, k1/b are commented out);
@@ -1327,6 +1459,7 @@ class CozoDb(val spark: SparkSession) {
         val scoreKind = optConst("score_kind").map(_.toString).getOrElse("tf_idf")
         if (!Seq("tf_idf", "tf", "bm25").contains(scoreKind))
           throw CompileException(s"unknown FTS score_kind: $scoreKind")
+        val keyField = base.schema(key)
         opts.get("query") match {
           // left-stream-driven probe (FtsSearchRA resolves query: per
           // left tuple, ra.rs:628-700): one BM25 top-k per DISTINCT
@@ -1344,21 +1477,45 @@ class CozoDb(val spark: SparkSession) {
             // a filter cuts candidates BEFORE k results accumulate, so
             // the per-query cut must happen after it
             val kEff = if (opts.contains("filter")) Int.MaxValue else k
-            val res = graft.search.Fts.searchMany(ix, qs, kEff, scoreKind = scoreKind)
-              .select(col("query").as("__q"), col("id").as(key), col("score"))
+            val res = (handle match {
+              case Left(d) =>
+                indexDriverProbes += 1
+                localFrame(d.searchMany(qs, kEff, scoreKind = scoreKind)
+                  .map { case (q, id, sc) => Row(q, id, sc) },
+                  StructField("query", StringType), keyField.copy(name = "id"),
+                  StructField("score", DoubleType))
+              case Right(ix) => graft.search.Fts.searchMany(ix, qs, kEff, scoreKind = scoreKind)
+            }).select(col("query").as("__q"), col("id").as(key), col("score"))
             val top = graft.operators.TopK.perGroup(
               probeFilter(qdf.join(res, Seq("__q")).join(base, Seq(key))),
               Seq("__q"), Seq(col("score").desc, col(key).asc), k)
             top.select((col("__q0").as(n) +: (pairs.map { case (c, vr) => col(c).as(vr) } ++
               bindVar("bind_score").map(b => col("score").as(b)))): _*)
           case _ =>
-            val hits = graft.search.Fts.parseQueryOpt(queryString) match {
-              case None => ix.lens.limit(0).select(col("id"), lit(0.0).as("score"))
-              case Some(ast) if scoreKind == "bm25" => graft.search.Fts.search(ix, ast)
-              case Some(ast) => graft.search.Fts.searchRef(ix, ast, scoreKind)
+            val ast = graft.search.Fts.parseQueryOpt(queryString)
+            val hits = handle match {
+              case Left(d) =>
+                indexDriverProbes += 1
+                val all = ast.fold(collection.Map.empty[Any, Double])(q =>
+                  if (scoreKind == "bm25") d.search(q) else d.searchRef(q, scoreKind))
+                // without a filter only the k best can survive the cut
+                val kept = if (opts.contains("filter")) all.toSeq
+                           else graft.search.DriverFts.topWithTies(all, k)
+                localFrame(kept.map { case (id, sc) => Row(id, sc) },
+                  keyField.copy(name = "id"), StructField("score", DoubleType))
+              case Right(ix) => ast match {
+                case None => ix.lens.limit(0).select(col("id"), lit(0.0).as("score"))
+                case Some(q) if scoreKind == "bm25" => graft.search.Fts.search(ix, q)
+                case Some(q) => graft.search.Fts.searchRef(ix, q, scoreKind)
+              }
             }
-            val scored = probeFilter(base.join(hits.withColumnRenamed("id", key), Seq(key)))
-              .orderBy(col("score").desc, col(key).asc).limit(k)
+            // a driver hit list is already exactly the indexed rows, so
+            // a probe binding only the key needs no base scan
+            val joined =
+              if (handle.isLeft && !opts.contains("filter") && pairs.forall(_._1 == key))
+                hits.withColumnRenamed("id", key)
+              else probeFilter(base.join(hits.withColumnRenamed("id", key), Seq(key)))
+            val scored = joined.orderBy(col("score").desc, col(key).asc).limit(k)
             select(scored, bindVar("bind_score").map(_ -> col("score")))
         }
       case l: LshIdx =>
@@ -1479,8 +1636,8 @@ class CozoDb(val spark: SparkSession) {
             .fold(filtered)(r => filtered.filter(col("__dist") <= r))
         }
         // `m:` on `::hnsw create` (parse/sys.rs:611) opts into the REAL
-        // partition-local graph walk (Ann.hnswProbeIndex — the
-        // HnswSearchRA mechanism): cosine, single field, integral key,
+        // partition-local graph walk (HnswBuckets.probe on the driver or
+        // Ann.hnswProbeLoaded — the HnswSearchRA mechanism): integral key,
         // no per-probe filter/radius (those compose with the exact
         // scan, which remains the default and is a semantic superset of
         // any walk). Applies to constant-vector probes AND left-stream-
@@ -1502,6 +1659,25 @@ class CozoDb(val spark: SparkSession) {
         val efS = math.max(
           optConst("ef").collect { case n: Long => n.toInt }
             .getOrElse(math.max(k * 4, 64)), k + 1)
+        /** Driver walk results as the (query_id, id, score) frame
+          * [[graft.similarity.Ann.hnswProbeLoaded]] returns. */
+        def walkedFrame(hits: Seq[(Long, Long, Double)]): DataFrame =
+          localFrame(hits.map { case (q, id, sc) => Row(q, id, sc) },
+            StructField("query_id", LongType), StructField("id", LongType),
+            StructField("score", DoubleType))
+        /** Walk hits (`__hid`, `__dist`, …) with the matched rows'
+          * columns and `__best` against `q`. A driver index is current
+          * by construction, so when the probe binds nothing beyond the
+          * key and the distance the key is just the decoded hit id —
+          * no base scan. */
+        def withWalkedRows(top: DataFrame, q: Column, driver: Boolean): DataFrame =
+          if (driver && pairs.forall(_._1 == key) &&
+              Seq("bind_field", "bind_field_idx", "bind_vector").forall(bindVar(_).isEmpty))
+            top.withColumn(key, col("__hid").cast(base.schema(key).dataType))
+              .withColumn("__best", lit(null))
+          else
+            top.join(admitted, col("__hid") === admitted(key).cast("long"))
+              .withColumn("__best", bestTo(q))
         opts.get("query") match {
           // left-stream-driven probe: one top-k per distinct bound
           // query vector (HnswSearchRA, ra.rs:1068-1122)
@@ -1519,20 +1695,33 @@ class CozoDb(val spark: SparkSession) {
               // suppresses a legitimate match and a probe can still
               // return its own stored row (the reference does).
               import graft.plan._
-              val qids = queries
-                .withColumn("__qid",
-                  monotonically_increasing_id() + lit(Long.MinValue))
-                .ckpt()
-              val top = graft.similarity.Ann.hnswProbeLoaded(
-                  hnswLoadedGraphs(target, v),
-                  qids.select(col("__qid").as("query_id"),
-                    col("__qvec").cast("array<float>").as("vec")),
-                  k, efSearch = efS, fieldsPerId = v.fields.length)
-                .select(col("query_id").as("__qid"), col("id").as("__hid"),
-                  walkDist(col("score")).as("__dist"))
-              top.join(qids, Seq("__qid"))
-                .join(admitted, col("__hid") === admitted(key).cast("long"))
-                .withColumn("__best", bestTo(col("__qvec").cast("array<float>")))
+              val handle = hnswIndexOf(target, v)
+              val (qids, walked) = handle match {
+                case Left(b) =>
+                  indexDriverProbes += 1
+                  val qs = queries.select(col("__qvec"), col("__qvec").cast("array<float>"))
+                    .collect().toSeq.filterNot(_.isNullAt(1)).zipWithIndex
+                    .map { case (r, i) => (Long.MinValue + i, r) }
+                  val hits = b.probe(qs.map { case (q, r) => (q, r.getSeq[Float](1).toArray) },
+                    k, efS, v.fields.length)
+                  (localFrame(qs.map { case (q, r) => Row(r.get(0), q) },
+                    queries.schema.head, StructField("__qid", LongType)),
+                    walkedFrame(hits))
+                case Right(dir) =>
+                  val qids = queries
+                    .withColumn("__qid",
+                      monotonically_increasing_id() + lit(Long.MinValue))
+                    .ckpt()
+                  (qids, graft.similarity.Ann.hnswProbeLoaded(
+                    hnswLoadedGraphs(target, v, dir),
+                    qids.select(col("__qid").as("query_id"),
+                      col("__qvec").cast("array<float>").as("vec")),
+                    k, efSearch = efS, fieldsPerId = v.fields.length))
+              }
+              val top = walked.select(col("query_id").as("__qid"), col("id").as("__hid"),
+                walkDist(col("score")).as("__dist"))
+                .join(qids, Seq("__qid"))
+              withWalkedRows(top, col("__qvec").cast("array<float>"), handle.isLeft)
                 .select((col("__qvec").as(n) +: (pairs.map { case (c, vr) => col(c).as(vr) } ++
                   extraBinds(col("__best"), col("__dist")))): _*)
             } else {
@@ -1562,16 +1751,20 @@ class CozoDb(val spark: SparkSession) {
             if (graphEligible) {
               import spark.implicits._
               // query id outside any plausible key domain (see above)
-              val qDf = Seq((Long.MinValue, qvec.toArray))
-                .toDF("query_id", "vec")
-              val qArr = array(qvec.map(lit): _*).cast("array<float>")
-              val top = graft.similarity.Ann.hnswProbeLoaded(
-                hnswLoadedGraphs(target, v), qDf, k,
-                efSearch = efS, fieldsPerId = v.fields.length)
-                .select(col("id").as("__hid"),
-                  walkDist(col("score")).as("__dist"))
-              top.join(admitted, top("__hid") === admitted(key).cast("long"))
-                .withColumn("__best", bestTo(qArr))
+              val handle = hnswIndexOf(target, v)
+              val walked = handle match {
+                case Left(b) =>
+                  indexDriverProbes += 1
+                  walkedFrame(b.probe(Seq((Long.MinValue, qvec.toArray)), k, efS,
+                    v.fields.length))
+                case Right(dir) =>
+                  graft.similarity.Ann.hnswProbeLoaded(
+                    hnswLoadedGraphs(target, v, dir),
+                    Seq((Long.MinValue, qvec.toArray)).toDF("query_id", "vec"), k,
+                    efSearch = efS, fieldsPerId = v.fields.length)
+              }
+              val top = walked.select(col("id").as("__hid"), walkDist(col("score")).as("__dist"))
+              withWalkedRows(top, array(qvec.map(lit): _*).cast("array<float>"), handle.isLeft)
                 .select(pairs.map { case (c, vr) => col(c).as(vr) } ++
                   extraBinds(col("__best"), col("__dist")): _*)
             } else {
@@ -1597,15 +1790,12 @@ class CozoDb(val spark: SparkSession) {
     import spark.implicits._
     if (sub == "drop") {
       val existed = indexes.remove(target).isDefined
-      ftsCache.remove(target)
-      ftsDeltaCount.remove(target)
-      lshCache.remove(target)
-      lshDeltaCount.remove(target)
-      dropHnswGraph(target)
+      dropIndexCaches(target)
       return Seq(((if (existed) "dropped" else "absent"), target)).toDF("status", "index")
     }
     val rel = target.split(":")(0)
     relation(rel) // must exist
+    dropIndexCaches(target) // a re-created index must not serve the old one's artifacts
     def asStr(e: Expr): String = e match {
       case Lit(s: String) => s
       case V(n) => n
@@ -2411,8 +2601,11 @@ class CozoDb(val spark: SparkSession) {
     // reads of the stored relation don't recompute its defining query,
     // and mutation chains don't grow unbounded lineage
     if (op != "create") requireAccess(rel, "normal", s":$op")
-    mutationEpoch += 1 // stale any index artifact caches
-    val epochOfThisMutation = mutationEpoch
+    // a row-changing op stales this relation's index caches (only)
+    val prevVersion = versionOf(rel)
+    val thisVersion =
+      if (op == "ensure" || op == "ensure_not") prevVersion else bumpVersion(rel)
+    val schemaBefore = relations.get(rel).map(_.schema)
     // fill declared-but-omitted columns with their default generators
     // (relation.rs:114-118; stored.rs applies default_gen on put)
     val withDefaults = relationDeclared.get(rel) match {
@@ -2479,114 +2672,179 @@ class CozoDb(val spark: SparkSession) {
       case other => throw CompileException(s"unknown relation op :$other")
     }
     if (Seq("put", "insert", "update", "rm", "delete").contains(op))
-      maintainFtsIndexes(rel, delta, epochOfThisMutation)
+      maintainIndexes(rel, op, delta, prevVersion, thisVersion, schemaBefore)
     delta
   }
 
   /** Incremental search-index maintenance on mutation (the reference
-    * updates index entries inside the mutation tx, fts/indexing.rs):
-    * a cached FTS index or LSH band table absorbs the mutation as a
-    * broadcast anti-join on the changed keys plus an O(|delta|)
-    * tokenization/signature pass over the new rows — NOT the
-    * full-corpus recompute a cache drop would cost on the next probe.
-    * Chains are bounded: after [[ftsMaxDeltas]] stacked deltas the
-    * cache is dropped and the next probe compacts to a freshly built
-    * artifact (checkpoint-block hygiene — the LSM compaction
-    * analogue). `::replace` and schema changes drop caches via the
-    * epoch mismatch as before. */
+    * updates index entries inside the mutation tx, fts/indexing.rs).
+    * Driver-resident indexes patch in place from the changed rows: the
+    * changed keys and their post-mutation rows are collected (one small
+    * job each), FTS re-tokenizes those documents, HNSW rebuilds only the
+    * hash buckets they touch. A distributed FTS index or LSH band table
+    * absorbs the mutation as a broadcast anti-join on the changed keys
+    * plus an O(|delta|) tokenization/signature pass over the new rows —
+    * NOT the full-corpus recompute a cache drop would cost on the next
+    * probe. Distributed chains are bounded: after [[ftsMaxDeltas]]
+    * stacked deltas the cache is dropped and the next probe compacts to
+    * a freshly built artifact (checkpoint-block hygiene — the LSM
+    * compaction analogue). `::replace` and schema changes re-register
+    * the relation, which bumps its version and drops its caches. */
   private val ftsDeltaCount = mutable.HashMap.empty[String, Int]
   private val lshDeltaCount = mutable.HashMap.empty[String, Int]
   private[lang] val ftsMaxDeltas = 32
-  private[lang] var indexFullBuilds = 0 // observability for tests
-  private[lang] var indexPatches = 0    // HNSW partition patches, for tests
-  private[lang] var indexGraphLoads = 0 // HNSW restore shuffles, for tests
-  private def maintainFtsIndexes(rel: String, delta: DataFrame,
-                                 epochOfThisMutation: Long): Unit = {
+  /** Above this many changed keys a driver index is dropped instead of
+    * patched: the next probe rebuilds it (and re-decides its branch). */
+  private val maxDriverPatchKeys = 10000
+  private[lang] var indexFullBuilds = 0 // full builds, both branches; observability for tests
+  private[lang] var indexPatches = 0    // distributed HNSW partition patches, for tests
+  private[lang] var indexGraphLoads = 0 // distributed HNSW restore shuffles, for tests
+  private[lang] var indexDriverBuilds = 0  // full builds that chose the driver branch
+  private[lang] var indexDriverPatches = 0 // driver-index patches (FTS and HNSW)
+  private[lang] var indexDriverProbes = 0  // probes served by a driver-resident index
+  private def maintainIndexes(rel: String, op: String, delta: DataFrame, prev: Long, cur: Long,
+                              schemaBefore: Option[StructType]): Unit = indexCacheLock.synchronized {
+    import graft.search.DriverFts
     val targets = indexes.collect { case (t, f: FtsIdx) if f.rel == rel => (t, f) }.toSeq
     val lshTargets = indexes.collect { case (t, l: LshIdx) if l.rel == rel => (t, l) }.toSeq
     val vecTargets = indexes.collect { case (t, v: VecIdx) if v.rel == rel => (t, v) }.toSeq
     if (targets.isEmpty && lshTargets.isEmpty && vecTargets.isEmpty) return
     val key = keyColOf(rel)
-    if (!delta.columns.contains(key)) {
-      targets.foreach { case (t, _) => ftsCache.remove(t); ftsDeltaCount.remove(t) }
-      lshTargets.foreach { case (t, _) => lshCache.remove(t); lshDeltaCount.remove(t) }
-      vecTargets.foreach { case (t, _) => dropHnswGraph(t) }
-      return
-    }
-    val changedIds = delta.select(col(key)).dropDuplicates().ckptLazy()
+    // A cache may be patched ONLY if it was current right before this
+    // mutation (stamped `prev`) and the relation still is at this
+    // mutation's version. Anything older is stale (an interleaved
+    // mutation, a tx abort) — applying a delta to it and re-stamping
+    // would launder the staleness into a "fresh" wrong index, so drop
+    // it instead. Anything stamped `cur` or later (a trigger probed and
+    // rebuilt mid-mutation, which sees post-mutation data) is already
+    // correct — leave it alone.
+    val patchable = delta.columns.contains(key) && versionOf(rel) == cur
+    def fresh(stamp: Long) = stamp >= cur
+    def canPatch(stamp: Long) = stamp == prev && patchable
+    lazy val changedIds = delta.select(col(key)).dropDuplicates().ckptLazy()
     // post-mutation rows for the changed keys: present for put/insert/
     // update, naturally empty for rm/delete
-    val added = relation(rel).join(changedIds, Seq(key), "left_semi")
-    // A delta may be stacked ONLY onto a cache that was current right
-    // before this mutation (cached epoch == epoch-1). Anything older is
-    // stale (an unmaintained ::replace, a tx abort, an interleaved
-    // mutation) — applying a delta to it and re-stamping would launder
-    // the staleness into a "fresh" wrong index, so drop it instead.
-    // Anything NEWER (a trigger probed and rebuilt mid-mutation, which
-    // sees post-mutation data) is already correct — leave it alone.
-    def deltaApplicable(cachedEpoch: Long): Boolean =
-      cachedEpoch == epochOfThisMutation - 1
-    for ((target, spec) <- targets) ftsCache.get(target) match {
-      case Some((cachedEpoch, _)) if cachedEpoch >= epochOfThisMutation => ()
-      case Some((cachedEpoch, ix)) =>
-        val n = ftsDeltaCount.getOrElse(target, 0)
-        if (!deltaApplicable(cachedEpoch) || n >= ftsMaxDeltas ||
-          !relation(rel).columns.contains(spec.extractor)) {
-          ftsCache.remove(target); ftsDeltaCount.remove(target)
-        } else {
+    lazy val added = relation(rel).join(changedIds, Seq(key), "left_semi")
+    // Driver indexes patch from the changed keys and their post-mutation
+    // rows, in the relation's column types: a put/insert's rows are its
+    // delta (no read of the new relation), an update's are read back,
+    // an rm's are none. A write that changes the relation's column types
+    // or touches more than maxDriverPatchKeys keys drops them instead
+    // (the next probe rebuilds and re-decides the branch).
+    val driverPatchable = patchable &&
+      schemaBefore.map(_.map(f => f.name -> f.dataType)) ==
+        Some(relation(rel).schema.map(f => f.name -> f.dataType))
+    /** (changed keys as `keyCol` reads them, their post-mutation rows
+      * through `project`, whose first column is `keyCol`), or None past
+      * maxDriverPatchKeys. */
+    def driverDelta(keyCol: Column)(project: DataFrame => DataFrame)
+        : Option[(Seq[Any], Seq[Row])] = {
+      def bounded(df: DataFrame): Option[Seq[Row]] = {
+        val rs = df.limit(maxDriverPatchKeys + 1).collect().toSeq
+        if (rs.length > maxDriverPatchKeys) None else Some(rs)
+      }
+      if (op == "put" || op == "insert")
+        bounded(project(delta.select(relation(rel).schema.map(f =>
+          col(f.name).cast(f.dataType)): _*))).map(rs => (rs.map(_.get(0)).distinct, rs))
+      else bounded(delta.select(keyCol)).map(_.map(_.get(0)).distinct).map { keys =>
+        val rows =
+          if (op != "update") Nil
+          else project(relation(rel).filter(col(key).isin(keys: _*))).collect().toSeq
+        (keys, rows)
+      }
+    }
+    for ((target, spec) <- targets) {
+      val hasText = relation(rel).columns.contains(spec.extractor)
+      ftsCache.get(target) match {
+        case Some((v, _)) if fresh(v) => ()
+        case Some((v, ix)) if canPatch(v) && hasText &&
+            ftsDeltaCount.getOrElse(target, 0) < ftsMaxDeltas =>
           val ix2 = graft.search.Fts.Index.applyDelta(
             ix, changedIds,
             extractFiltered(added, spec.extractor, spec.extractFilter),
             key, spec.extractor)
-          ftsCache(target) = (epochOfThisMutation, ix2)
-          ftsDeltaCount(target) = n + 1
-        }
-      case None => () // nothing cached: the next probe builds fresh
+          ftsCache(target) = (cur, ix2)
+          ftsDeltaCount(target) = ftsDeltaCount.getOrElse(target, 0) + 1
+        case Some(_) => ftsCache.remove(target); ftsDeltaCount.remove(target)
+        case None => () // nothing cached: the next probe builds fresh
+      }
+      ftsDriver.get(target) match {
+        case Some((v, _)) if fresh(v) => ()
+        case Some((v, d)) if canPatch(v) && driverPatchable && hasText =>
+          driverDelta(col(key))(df => DriverFts.docTokens(
+            extractFiltered(df, spec.extractor, spec.extractFilter),
+            key, spec.extractor, spec.pipe)).map { case (keys, rows) =>
+            d.patch(keys, DriverFts.tokenRows(rows))
+          } match {
+            case Some(d2) if graft.plan.Knee.gate("fts_index", d2.bytes, driverIndexGateBytes) =>
+              ftsDriver(target) = (cur, d2)
+              indexDriverPatches += 1
+            case _ => ftsDriver.remove(target)
+          }
+        case Some(_) => ftsDriver.remove(target)
+        case None => ()
+      }
     }
     for ((target, spec) <- lshTargets) lshCache.get(target) match {
-      case Some((cachedEpoch, _)) if cachedEpoch >= epochOfThisMutation => ()
-      case Some((cachedEpoch, bands)) =>
-        val n = lshDeltaCount.getOrElse(target, 0)
-        if (!deltaApplicable(cachedEpoch) || n >= ftsMaxDeltas ||
-          !relation(rel).columns.contains(spec.extractor)) {
-          lshCache.remove(target); lshDeltaCount.remove(target)
-        } else {
-          val df = bands.join(broadcast(changedIds), Seq(key), "left_anti")
-            .unionByName(lshBandsOf(added, key, spec))
-            .ckptLazy()
-          lshCache(target) = (epochOfThisMutation, df)
-          lshDeltaCount(target) = n + 1
-        }
+      case Some((v, _)) if fresh(v) => ()
+      case Some((v, bands)) if canPatch(v) &&
+          relation(rel).columns.contains(spec.extractor) &&
+          lshDeltaCount.getOrElse(target, 0) < ftsMaxDeltas =>
+        val df = bands.join(broadcast(changedIds), Seq(key), "left_anti")
+          .unionByName(lshBandsOf(added, key, spec))
+          .ckptLazy()
+        lshCache(target) = (cur, df)
+        lshDeltaCount(target) = lshDeltaCount.getOrElse(target, 0) + 1
+      case Some(_) => lshCache.remove(target); lshDeltaCount.remove(target)
       case None => ()
     }
-    // persisted HNSW graphs: rows hash to their partition by key, so a
-    // mutation rebuilds ONLY the affected hash buckets' graphs — and a
-    // patched artifact equals a full rebuild exactly (per-partition
-    // insertion order is pinned), so no delta chain and no compaction
-    // bound apply
-    for ((target, vi) <- vecTargets) hnswGraphCache.get(target) match {
-      case Some((cachedEpoch, _)) if cachedEpoch >= epochOfThisMutation => ()
-      case Some((cachedEpoch, dir)) =>
-        if (!deltaApplicable(cachedEpoch) || !hnswIndexEligible(vi)) dropHnswGraph(target)
-        else {
-          val c = compiler(_ => None, Map.empty)
-          val admitted = vi.filter.fold(relation(rel))(e => relation(rel).filter(c.compileExpr(e)))
-          val corpus = hnswCorpus(vi, admitted, key)
-          val mEff = math.max(vi.m.get, 2)
-          val efcEff = math.max(vi.efConstruction.getOrElse(mEff * 6), mEff)
-          graft.similarity.Ann.hnswPatchIndex(dir, corpus,
+    // HNSW graphs: rows hash to their bucket by node id, so a mutation
+    // rebuilds ONLY the affected buckets' graphs — and a patched index
+    // equals a full rebuild exactly (per-bucket insertion order is
+    // pinned), so no delta chain and no compaction bound apply
+    for ((target, vi) <- vecTargets) {
+      hnswGraphCache.get(target) match {
+        case Some((v, _)) if fresh(v) => ()
+        case Some((v, dir)) if canPatch(v) && hnswIndexEligible(vi) =>
+          val (mEff, efcEff) = hnswBuildParams(vi)
+          graft.similarity.Ann.hnswPatchIndex(dir, hnswCorpus(vi, hnswAdmitted(vi), key),
             hnswChangedGids(vi, changedIds, key),
             mEff, efcEff, metric = hnswWalkMetric(vi.distance).get,
             extendCandidates = vi.extendCandidates, keepPruned = vi.keepPruned)
-          hnswGraphCache(target) = (epochOfThisMutation, dir)
+          hnswGraphCache(target) = (cur, dir)
           indexPatches += 1
-        }
-      case None => ()
+        case Some(_) => dropHnswGraph(target)
+        case None => ()
+      }
+      hnswDriver.get(target) match {
+        case Some((v, _)) if fresh(v) => ()
+        case Some((v, b)) if canPatch(v) && driverPatchable && hnswIndexEligible(vi) =>
+          val nF = vi.fields.length
+          val admitted = vi.filter.fold(lit(true))(e =>
+            coalesce(compiler(_ => None, Map.empty).compileExpr(e), lit(false)))
+          driverDelta(col(key).cast("long"))(_.select(col(key).cast("long") +: vi.fields.map(f =>
+            when(admitted, col(f).cast("array<float>"))): _*)).map { case (keys, rows) =>
+            b.patch(
+              keys.flatMap(k => (0 until nF).map(i => k.asInstanceOf[Long] * nF + i)),
+              rows.flatMap(r => (0 until nF).collect { case i if !r.isNullAt(i + 1) =>
+                (r.getLong(0) * nF + i, r.getSeq[Float](i + 1).toArray)
+              }))._1
+          } match {
+            case Some(b2) if graft.plan.Knee.gate("hnsw_index", b2.bytes, driverIndexGateBytes) =>
+              hnswDriver(target) = (cur, b2)
+              indexDriverPatches += 1
+            case _ => hnswDriver.remove(target)
+          }
+        case Some(_) => hnswDriver.remove(target)
+        case None => ()
+      }
     }
   }
 
-  /** Drop a cached persisted HNSW graph and reclaim its directory. */
+  /** Drop a cached HNSW index of either branch: the driver graphs, the
+    * executor-cached restored graphs, and the persisted directory. */
   private def dropHnswGraph(target: String): Unit = {
+    hnswDriver.remove(target)
     hnswLoadedCache.remove(target).foreach { case (_, rdd) =>
       rdd.unpersist(blocking = false)
     }
@@ -2616,6 +2874,21 @@ class CozoDb(val spark: SparkSession) {
         case ("-", a: Long, b: Long) => a - b
         case ("*", a: Long, b: Long) => a * b
         case (o, a, b) => throw CompileException(s"cannot fold constant $a $o $b")
+      }
+    // vec() of a literal numeric list folds on the driver with the
+    // `vec` builtin's own narrowing (a cast to array<float>; a list
+    // mixing ints and floats is an array<double> first), sparing a
+    // vector probe the one-row job of the general fold below
+    case App("vec", Seq(arg @ ListE(items))) if items.forall {
+        case Lit(_: Long) | Lit(_: Double) => true
+        case Un("-", Lit(_: Long) | Lit(_: Double)) => true
+        case _ => false
+      } =>
+      val xs = evalConst(arg, params).asInstanceOf[Seq[Any]]
+      val allLong = xs.forall(_.isInstanceOf[Long])
+      xs.map {
+        case l: Long => if (allLong) l.toFloat else l.toDouble.toFloat
+        case d: Double => d.toFloat
       }
     case other =>
       // general constant folding: any variable-free expression (vec(),

@@ -382,9 +382,7 @@ object Fts {
     * conjuncts, like the reference dropping the token at tokenize
     * time); on an NGram index a term expands to the conjunction of its
     * grams (substring search). None = the whole query normalized away. */
-  private def normalizeQ(ix: Index, q: Q): Option[Q] = normalizeQ(ix.pipe, q)
-
-  private def normalizeQ(pipe: Pipeline, q: Q): Option[Q] = q match {
+  private[search] def normalizeQ(pipe: Pipeline, q: Q): Option[Q] = q match {
     // prefix literals are NEVER tokenized — the reference range-scans
     // the raw value (fts/ast.rs FtsLiteral::tokenize is_prefix branch)
     case t @ Term(_, true, _) => Some(t)
@@ -566,20 +564,7 @@ object Fts {
       s"unknown FTS score_kind: $scoreKind")
     val spark = ix.postings.sparkSession
     import spark.implicits._
-    /** flat = And/Or of bare non-prefix terms: (terms, isAnd) */
-    def flat(q: Q): Option[(Seq[Term], Boolean)] = q match {
-      case t: Term if !t.prefix => Some((Seq(t), true))
-      case And(qs) if qs.forall { case t: Term => !t.prefix; case _ => false } =>
-        Some((qs.collect { case t: Term => t }, true))
-      case Or(qs) if qs.forall { case t: Term => !t.prefix; case _ => false } =>
-        Some((qs.collect { case t: Term => t }, false))
-      case _ => None
-    }
-    val parsed = queries.distinct.filter(_.trim.nonEmpty)
-      .map(q => (q, normalizeQ(ix, parseQuery(q))))
-    val flats = parsed.collect { case (q, Some(ast)) => (q, flat(ast)) }
-      .collect { case (q, Some(f)) => (q, f) }
-    val others = parsed.collect { case (q, Some(ast)) if flat(ast).isEmpty => (q, ast) }
+    val (flats, others) = planMany(ix.pipe, queries)
     val batched: Seq[DataFrame] = if (flats.isEmpty) Seq.empty else {
       val qterms = flats.flatMap { case (q, (ts, isAnd)) =>
         // bm25 keeps its legacy distinct-term sum; the reference
@@ -632,6 +617,27 @@ object Fts {
         graft.operators.TopK.perGroup(dfs.reduce(_ unionByName _), Seq("query"),
           Seq(col("score").desc, col("id").asc), k)
     }
+  }
+
+  /** The [[searchMany]] query plan, shared with [[DriverFts.searchMany]]:
+    * distinct non-blank queries, normalized through `pipe`, split into
+    * flat ones (an And/Or of bare non-prefix terms: (terms, isAnd)),
+    * which share one batched plan, and the rest, which evaluate per
+    * query. Queries that normalize away appear in neither. */
+  private[search] def planMany(pipe: Pipeline, queries: Seq[String])
+      : (Seq[(String, (Seq[Term], Boolean))], Seq[(String, Q)]) = {
+    def flat(q: Q): Option[(Seq[Term], Boolean)] = q match {
+      case t: Term if !t.prefix => Some((Seq(t), true))
+      case And(qs) if qs.forall { case t: Term => !t.prefix; case _ => false } =>
+        Some((qs.collect { case t: Term => t }, true))
+      case Or(qs) if qs.forall { case t: Term => !t.prefix; case _ => false } =>
+        Some((qs.collect { case t: Term => t }, false))
+      case _ => None
+    }
+    val parsed = queries.distinct.filter(_.trim.nonEmpty)
+      .flatMap(q => normalizeQ(pipe, parseQuery(q)).map(q -> _))
+    (parsed.flatMap { case (q, ast) => flat(ast).map(q -> _) },
+      parsed.filter { case (_, ast) => flat(ast).isEmpty })
   }
 
   /** Mini query-string parser: terms, AND/OR/NOT (left-assoc, AND binds

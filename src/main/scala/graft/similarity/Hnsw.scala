@@ -341,3 +341,112 @@ object HnswIndex {
     idx
   }
 }
+
+/** The hash-bucket graphs of [[Ann.hnswWriteIndex]] held on the driver:
+  * node ids route to `numParts` buckets by the Murmur3 hash (seed 42)
+  * that `repartition(numParts, col("id"))` uses, and each bucket's
+  * graph inserts its nodes in ascending id order, as the distributed
+  * build's `sortWithinPartitions("id")` pins. Every graph is therefore
+  * the one the distributed build writes, and [[probe]] merges the walks
+  * exactly as [[Ann.hnswProbeLoaded]] does, so the two branches return
+  * identical results by construction — without a parquet artifact or a
+  * restore shuffle.
+  *
+  * Immutable: [[patch]] returns a new value that rebuilds only the
+  * buckets a change touches and shares the rest, so concurrent probes
+  * always walk one consistent snapshot. The raw (unprepared) vectors
+  * are kept per bucket because a cosine graph stores normalized ones,
+  * and re-normalizing them would not reproduce the distributed build.
+  */
+final class HnswBuckets private (m: Int, efConstruction: Int,
+                                 metric: String, extendCandidates: Boolean,
+                                 keepPruned: Boolean,
+                                 raw: Vector[scala.collection.immutable.TreeMap[Long, Array[Float]]],
+                                 graphs: Vector[HnswIndex]) {
+  def numParts: Int = raw.length
+  def size: Int = raw.iterator.map(_.size).sum
+
+  /** Heap estimate, on the scale of [[HnswBuckets.estimateBytes]]. */
+  def bytes: Long = HnswBuckets.estimateBytes(size.toLong,
+    raw.iterator.flatMap(_.valuesIterator).map(_.length.toLong).sum, m)
+
+  private def graphOf(nodes: scala.collection.immutable.TreeMap[Long, Array[Float]]): HnswIndex = {
+    val idx = new HnswIndex(m, efConstruction, metric, extendCandidates, keepPruned)
+    nodes.foreach { case (id, v) => idx.insert(id, v) }
+    idx
+  }
+
+  /** Remove `removed` node ids, add or replace `upserts`, and rebuild
+    * the graphs of the buckets either touches. Returns the new value
+    * and the number of buckets rebuilt. */
+  def patch(removed: Iterable[Long], upserts: Iterable[(Long, Array[Float])]): (HnswBuckets, Int) = {
+    val r = raw.toArray
+    val touched = mutable.SortedSet.empty[Int]
+    removed.foreach { id =>
+      val b = HnswBuckets.bucketOf(id, numParts); r(b) -= id; touched += b
+    }
+    upserts.foreach { case (id, v) =>
+      val b = HnswBuckets.bucketOf(id, numParts); r(b) = r(b).updated(id, v); touched += b
+    }
+    val g = graphs.toArray
+    touched.foreach(b => g(b) = graphOf(r(b)))
+    (new HnswBuckets(m, efConstruction, metric, extendCandidates, keepPruned,
+      r.toVector, g.toVector), touched.size)
+  }
+
+  /** Global top-k per query, as [[Ann.hnswProbeLoaded]] computes it:
+    * every bucket walked with a beam of `fieldsPerId * k + 1`, node ids
+    * decoded to payload keys, the query's own id excluded, each key's
+    * best score kept, then (score desc, id asc). Returns (query_id, id,
+    * score). */
+  def probe(queries: Seq[(Long, Array[Float])], k: Int, efSearch: Int,
+            fieldsPerId: Int = 1): Seq[(Long, Long, Double)] = {
+    val fetchWidth = fieldsPerId * k + 1
+    queries.flatMap { case (qid, qv) =>
+      val best = mutable.HashMap.empty[Long, Double]
+      graphs.foreach { g =>
+        g.search(qv, fetchWidth, efSearch).iterator
+          .map { case (gid, s) => (Math.floorDiv(gid, fieldsPerId.toLong), s) }
+          .filter { case (id, _) => id != qid }
+          .take(fetchWidth - 1)
+          .foreach { case (id, s) => best(id) = best.get(id).fold(s)(math.max(_, s)) }
+      }
+      best.toSeq.sortWith { case ((i1, s1), (i2, s2)) =>
+        val c = graft.search.DriverFts.compareScore(s1, s2)
+        c > 0 || (c == 0 && i1 < i2)
+      }.take(k).map { case (id, s) => (qid, id, s) }
+    }
+  }
+
+  /** The graphs as [[Ann.graphSchema]] rows (part, id, vec, level, nbrs,
+    * edge_level): node rows, then adjacency rows, per bucket. */
+  def rows: Iterator[(Int, Long, Array[Float], Int, Array[Long], Int)] =
+    graphs.iterator.zipWithIndex.flatMap { case (g, p) =>
+      g.nodes.map { case (id, v, lvl) => (p, id, v, lvl, null.asInstanceOf[Array[Long]], -1) } ++
+        g.edges.map { case (id, l, ns) => (p, id, null.asInstanceOf[Array[Float]], -1, ns, l) }
+    }
+}
+
+object HnswBuckets {
+  /** The bucket of node `id`: pmod(Murmur3(id, seed 42), numParts), the
+    * routing of Spark's hash partitioning on a long column. */
+  def bucketOf(id: Long, numParts: Int): Int = {
+    val h = org.apache.spark.unsafe.hash.Murmur3_x86_32.hashLong(id, 42)
+    ((h % numParts) + numParts) % numParts
+  }
+
+  /** Heap bytes of `nodes` graph nodes holding `dims` vector
+    * components in total, in an `m` graph: raw and prepared vectors,
+    * level-0 adjacency and per-node bookkeeping. */
+  def estimateBytes(nodes: Long, dims: Long, m: Int): Long =
+    8L * dims + nodes * (16L * m + 160L)
+
+  def build(corpus: Iterable[(Long, Array[Float])], m: Int, efConstruction: Int,
+            numParts: Int = 32, metric: String = "cosine",
+            extendCandidates: Boolean = false, keepPruned: Boolean = false): HnswBuckets = {
+    val empty = new HnswBuckets(m, efConstruction, metric, extendCandidates, keepPruned,
+      Vector.fill(numParts)(scala.collection.immutable.TreeMap.empty[Long, Array[Float]]),
+      Vector.fill(numParts)(new HnswIndex(m, efConstruction, metric, extendCandidates, keepPruned)))
+    empty.patch(Nil, corpus)._1
+  }
+}

@@ -99,4 +99,43 @@ class ConcurrencySpec extends AnyFunSuite {
     val keys = db.run("?[k, v] := *base[k, v]").collect().map(_.getLong(0)).toSet
     assert(keys == Set(1L, 11L, 12L, 13L))
   }
+
+  test("concurrent FTS and HNSW probes while a writer patches the indexes see whole snapshots") {
+    for (gate <- Seq(Runtime.getRuntime.maxMemory / 16, -1L)) {
+      val db = new CozoDb(spark)
+      db.driverIndexGateBytes = gate
+      def v(i: Int) = Seq(math.sin(i * 0.7), math.cos(i * 1.3), math.sin(i * 0.29 + 1))
+        .map(x => f"$x%.4f").mkString("vec([", ", ", "])")
+      db.run("?[k, t] <- [[0, 'seed marker']] :create cd {k => t}")
+      db.run(s"?[k, e] <- [${(0 until 20).map(i => s"[$i, ${v(i)}]").mkString(", ")}] :create ce {k => e}")
+      db.run("::fts create cd:ix {extractor: t}")
+      db.run("::hnsw create ce:g {fields: [e], distance: Cosine, dim: 3, m: 4}")
+      val writes = 6
+      @volatile var done = false
+      inThreads(4) { i =>
+        if (i == 0) {
+          try for (w <- 1 to writes) {
+            db.run(s"?[k, t] <- [[$w, 'marker number $w']] :put cd {k => t}")
+            db.run(s"?[k, e] <- [[${100 + w}, ${v(100 + w)}]] :put ce {k => e}")
+          } finally done = true
+        } else {
+          var last = 0
+          while (!done) {
+            // the writer puts keys 1..writes in order: a probe sees a
+            // prefix of them, and never fewer than an earlier probe saw
+            val ks = db.run("?[k] := ~cd:ix{k | query: 'marker', k: 50}")
+              .collect().map(_.getLong(0)).toSet
+            val n = ks.size - 1
+            assert(ks == (0 to n).map(_.toLong).toSet && n >= last, s"gate $gate: $ks")
+            last = n
+            assert(db.run(s"?[k] := ~ce:g{k | query: ${v(3)}, k: 3}").count() == 3L)
+          }
+        }
+      }
+      assert(db.run("?[k] := ~cd:ix{k | query: 'marker', k: 50}").count() == writes + 1L)
+      val nearest = db.run(s"?[k] := ~ce:g{k | query: ${v(100 + writes)}, k: 1}")
+        .collect().map(_.getLong(0)).toSeq
+      assert(nearest == Seq(100L + writes), s"gate $gate")
+    }
+  }
 }

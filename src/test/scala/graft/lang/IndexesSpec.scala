@@ -201,6 +201,7 @@ class IndexesSpec extends AnyFunSuite {
 
   test("::hnsw create with m: opts the probe into the real graph walk (agrees with exact scan)") {
     val db = new CozoDb(spark)
+    db.driverIndexGateBytes = -1L // the distributed branch: its counters are asserted
     // deterministic 4-dim vectors over a numeric key
     val rows = (0 until 60).map { i =>
       val v = Seq(math.sin(i * 0.7), math.cos(i * 1.3),
@@ -266,6 +267,7 @@ class IndexesSpec extends AnyFunSuite {
   test("multi-field ::hnsw with m: walks one graph node per (key, field) and agrees with exact scan") {
     import spark.implicits._
     val db = new CozoDb(spark)
+    db.driverIndexGateBytes = -1L // the distributed branch: its counters are asserted
     val data = (0 until 50).map { i =>
       val v1 = Array(math.sin(i * 0.7), math.cos(i * 1.3), math.sin(i * 0.29 + 1), math.cos(i * 0.11)).map(_.toFloat)
       (i.toLong, v1, v1.map(x => -x * 0.5f)) // v2: different direction AND norm
@@ -392,6 +394,7 @@ class IndexesSpec extends AnyFunSuite {
   test("randomized put/rm/probe interleave keeps graph ≡ exact across epochs (cache-invalidation stress)") {
     import spark.implicits._
     val db = new CozoDb(spark)
+    db.driverIndexGateBytes = -1L // the distributed branch: its counters are asserted
     val rng = new scala.util.Random(7)
     def v4(seed: Int): Array[Float] = Array(math.sin(seed * 0.7), math.cos(seed * 1.1),
       math.sin(seed * 0.37 + 1), math.cos(seed * 0.19)).map(_.toFloat)
@@ -535,6 +538,7 @@ class IndexesSpec extends AnyFunSuite {
   test("repeated graph probes reuse executor-cached restored graphs: one restore shuffle per epoch") {
     import spark.implicits._
     val db = new CozoDb(spark)
+    db.driverIndexGateBytes = -1L // the distributed branch: its counters are asserted
     val data = (0 until 60).map { i =>
       (i.toLong, Array(math.sin(i * 0.9), math.cos(i * 0.4),
         math.sin(i * 0.17 + 2), math.cos(i * 0.31)).map(_.toFloat))
@@ -622,6 +626,7 @@ class IndexesSpec extends AnyFunSuite {
 
   test("bound-variable probe STREAM routes through the graph walk and agrees with exact scan (VERDICT r6 #1)") {
     val db = new CozoDb(spark)
+    db.driverIndexGateBytes = -1L // the distributed branch: its counters are asserted
     val rows = (0 until 60).map { i =>
       val v = Seq(math.sin(i * 0.7), math.cos(i * 1.3),
         math.sin(i * 0.29 + 1), math.cos(i * 0.11)).map(x => f"$x%.4f")
@@ -683,6 +688,7 @@ class IndexesSpec extends AnyFunSuite {
 
   test("FTS index absorbs put/rm as deltas — no full rebuild per mutation") {
     val db = new CozoDb(spark)
+    db.driverIndexGateBytes = -1L // the distributed branch: its counters are asserted
     db.run("?[k, v] <- [['a', 'red apples'], ['b', 'green pears']] :create d {k}")
     db.run("::fts create d:fts { extractor: v, tokenizer: Simple, filters: [Lowercase] }")
     def search(q: String): Set[Any] =
@@ -737,6 +743,7 @@ class IndexesSpec extends AnyFunSuite {
 
   test("FTS delta chain compacts to a fresh build after ftsMaxDeltas mutations") {
     val db = new CozoDb(spark)
+    db.driverIndexGateBytes = -1L // the distributed branch: its counters are asserted
     db.run("?[k, v] <- [[0, 'seed document']] :create d {k}")
     db.run("::fts create d:fts { extractor: v, tokenizer: Simple, filters: [Lowercase] }")
     def search(q: String): Set[Any] =
