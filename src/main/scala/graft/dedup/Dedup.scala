@@ -15,8 +15,9 @@ import org.apache.spark.sql.functions._
   * cosine) as shuffle-conscious DataFrame programs:
   *   - candidate generation is always a band/bucket equi-join (never an
   *     all-pairs cross join) so it scales linearly with collisions;
-  *   - signature computation is explode-once + k codegen'd aggregates
-  *     (one shuffle, linear work — no interpreted HOF re-walks);
+  *   - a MinHash signature is one codegen'd kernel pass per document
+  *     over its shingle hashes (TextFunctions.minhashSignatures: each
+  *     shingle hashed once, no explode, no shuffle);
   *   - verification runs only on candidates;
   *   - all hashes are xxhash64-based and deterministic across runs,
   *     partitionings and cluster sizes.
@@ -33,8 +34,8 @@ object Dedup {
       .withColumn("keep", row_number().over(w) === 1)
   }
 
-  /** MinHash-LSH candidate pairs (minhash_lsh.rs:29-204): shingle →
-    * k-minhash signature (explode + groupBy, one linear shuffle) →
+  /** MinHash-LSH candidate pairs (minhash_lsh.rs:29-204): shingle
+    * hashes → k-minhash signature (one per-document kernel pass) →
     * `bands`×`rowsPerBand` banding → band-key equi-self-join → estimated
     * Jaccard from signature agreement.
     * Returns (id_a, id_b, est_jaccard) with id_a < id_b, est ≥ `threshold`.
@@ -49,7 +50,10 @@ object Dedup {
     // — see Parallelism.ensureIngestParallelism)
     val df = Parallelism.ensureIngestParallelism(df0, Seq(col(idCol)))
     val k = bands * rowsPerBand
-    val sigs = TF.minhashSignatures(df, idCol, TF.wordShingles(col(textCol), shingleN), k).ckpt()
+    // checkpointed inside, with the no-shingle filter above the ckpt so
+    // the signature kernel runs only above the guard's exchange
+    val sigs = TF.minhashSignatures(df, idCol,
+      TF.windowHashes(TF.tokens(col(textCol)), shingleN), k)
     // the band self-join shuffles (id, band) ONLY — the k-long signature
     // rides once per doc, not once per band, and is joined back after
     // candidate pairs are deduped (at 100 TB the sig is ~512 B/doc; a
@@ -92,8 +96,7 @@ object Dedup {
     // minhash draws hash the 8-byte identity instead of the string —
     // an equally uniform family over shingle identities
     val shAll = df.select(col(idCol).as("id"),
-        explode(transform(TF.wordShingles(col(textCol), shingleN),
-          x => xxhash64(x))).as("s"))
+        explode(TF.windowHashes(TF.tokens(col(textCol)), shingleN)).as("s"))
       .distinct().ckpt()
     // EXACT-TWIN COLLAPSE (full argument at ngramJaccard/twinCollapse):
     // identical shingle sets ⇒ identical minhash signatures ⇒ identical
@@ -156,8 +159,7 @@ object Dedup {
     // order, and (df asc, hash) is one. Collision stance as elsewhere:
     // the driver's string-keyed oracle certifies it on every run.
     val sh = df.select(col(idCol).as("id"),
-        explode(transform(TF.wordShingles(col(textCol), shingleN),
-          x => xxhash64(x))).as("s"))
+        explode(TF.windowHashes(TF.tokens(col(textCol)), shingleN)).as("s"))
       .distinct()
     val freq = sh.groupBy("s").agg(count(lit(1)).as("df"))
     val shfAll = sh.join(freq.filter(col("df") <= cutoff), Seq("s")).ckpt()

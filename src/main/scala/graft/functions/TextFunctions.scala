@@ -2,22 +2,30 @@ package graft.functions
 
 import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.graftbridge.ColumnBridge.{column, expression}
 
 /** Column-level text primitives shared by dedup / FTS / text-analysis
-  * operators. All pure `org.apache.spark.sql.functions` compositions —
-  * codegen'd, no UDFs — so they inline into whole-stage codegen at scan
-  * time.
+  * operators. Compositions of `org.apache.spark.sql.functions` and the
+  * native one-pass kernels of TextKernels.scala — all codegen'd, no
+  * UDFs — so they inline into whole-stage codegen at scan time.
   *
   * The reference's tokenizer pipeline lives in
   * cozo-core/src/fts/mod.rs:77-238 (Simple tokenizer + LowerCase /
   * AlphaNumOnly filters); shingling+minhash in
-  * runtime/minhash_lsh.rs:29-204.
+  * runtime/minhash_lsh.rs:29-204, where a document's signature is one
+  * loop over its shingles — the shape [[MinhashSignature]] keeps.
   */
 object TextFunctions {
 
-  /** Lowercased word tokens; drops empty strings (fts/mod.rs:96 Simple tokenizer). */
-  def tokens(text: Column): Column =
-    filter(split(lower(text), "[^\\p{L}\\p{N}]+"), t => length(t) > 0)
+  /** Lowercased word tokens; drops empty strings (fts/mod.rs:96 Simple
+    * tokenizer): the [[alnumRuns]] of Spark's own `lower(text)`. */
+  def tokens(text: Column): Column = alnumRuns(lower(text))
+
+  /** Maximal `\p{L}`/`\p{N}` runs of a string, no empty token — the
+    * result of `filter(split(s, "[^\\p{L}\\p{N}]+"), t -> length(t) > 0)`
+    * from one byte scan ([[AlnumTokens]]) instead of a regex split and an
+    * interpreted lambda. */
+  def alnumRuns(s: Column): Column = column(AlnumTokens(expression(s)))
 
   def tokenCount(text: Column): Column = size(tokens(text))
 
@@ -32,50 +40,17 @@ object TextFunctions {
       // replaces re-ran the regex tokenizer once per WINDOW (lambdas
       // re-evaluate captured expressions per element) — see
       // WordShingleWindows for the measurement
-      import org.apache.spark.sql.graftbridge.ColumnBridge.{column, expression}
       column(WordShingleWindows(expression(toks), n))
     }
   }
 
-  /** Positional n-token window HASHES (one per start offset, no
-    * distinct), equivalent to hashing the joined window string for
-    * counting/joining purposes (injective up to xxhash64 collisions).
-    * Two regimes, picked by n — higher-order functions evaluate
-    * interpreted (CodegenFallback), so per-element cost and array
-    * allocations rule:
-    *  - small n (≤4): hash each token once, combine positionally with
-    *    an (n−1)-stage `zip_with` chain of long pairs — ~2.5× faster
-    *    than rebuilding 2-3-token substrings per window;
-    *  - large n: ONE `transform` doing `slice`+`concat_ws`+hash per
-    *    window — the chain's n−1 intermediate array materializations
-    *    per document overtake the single string build (measured at
-    *    n=10: chain 6.0 s vs string 3.1 s on the sf0.1 corpus). */
-  def windowHashes(toks0: Column, n: Int): Column = Let.once(toks0) { toks =>
-    // Let-bound: with an EXPRESSION argument (a tokenizer) the n>4
-    // branch re-evaluated it per window and the n<=4 branch per part
-    val combined =
-      if (n <= 4) {
-        Let.once(transform(toks, t => xxhash64(t))) { th =>
-          val len = size(toks) - lit(n - 1)
-          val parts = (0 until n).map(o => slice(th, lit(o + 1), len))
-          parts.reduce((a, b) => zip_with(a, b, (x, y) => xxhash64(x, y)))
-        }
-      } else
-        transform(sequence(lit(0), size(toks) - lit(n)),
-          i => xxhash64(concat_ws(" ", slice(toks, i + 1, lit(n)))))
-    when(size(toks) >= n, combined).otherwise(array().cast("array<bigint>"))
-  }
-
-  /** Lowercased character n-gram shingles (fts/mod.rs:107 NGram
-    * tokenizer; minhash_lsh over chars) — strings shorter than n shingle
-    * to themselves so they can still match exactly. */
-  def charNgrams(text: Column, n: Int): Column = {
-    val lc = lower(text)
-    when(length(lc) >= n,
-      array_distinct(transform(sequence(lit(1), length(lc) - n + 1),
-        i => lc.substr(i, lit(n)))))
-      .otherwise(array(lc))
-  }
+  /** Positional n-token window hashes of a token array, one per start
+    * offset, no distinct: element i is
+    * `xxhash64(concat_ws(" ", slice(toks, i + 1, n)))`, so a window's
+    * hash is its shingle string's hash ([[WindowHashes]] hashes the
+    * window bytes in place; no shingle string is built). Fewer than n
+    * tokens, or NULL tokens, give an empty array. */
+  def windowHashes(toks: Column, n: Int): Column = column(WindowHashes(expression(toks), n))
 
   /** Exact Jaccard similarity of two (deduped) shingle arrays. */
   def jaccard(a: Column, b: Column): Column =
@@ -83,40 +58,41 @@ object TextFunctions {
       size(array_intersect(a, b)).cast("double") / size(array_union(a, b)))
       .otherwise(lit(0.0))
 
-  /** One 64-bit minhash per seed: min over shingles of xxhash64(shingle, seed).
-    * xxhash64 with a constant second input acts as an independent hash
-    * family member per seed — deterministic across runs and engines.
-    */
-  def minhash(shingles: Column, seed: Int): Column =
-    array_min(transform(shingles, s => xxhash64(s, lit(seed))))
-
-  /** Full minhash signature as an array column of `k` hashes.
-    * NOTE: inlines the shingle expression k times in interpreted HOF
-    * evaluation — fine for tests/small inputs; the scale path is
-    * [[minhashSignatures]] (explode once, k codegen'd min-aggregates).
+  /** Full minhash signature as an array column of `k` hashes: element
+    * j is `min(xxhash64(s, j))` over the shingles s (array<string>, or
+    * their seed-42 xxhash64s as array<bigint>) — one kernel pass
+    * ([[MinhashSignature]]) hashes each shingle once, not k times. NULL
+    * or empty shingles give k NULLs: no minimum for any permutation.
     */
   def minhashSignature(shingles: Column, k: Int): Column =
-    array((0 until k).map(i => minhash(shingles, i)): _*)
+    coalesce(column(MinhashSignature(expression(shingles), k)),
+      array_repeat(lit(null).cast("bigint"), k))
 
-  /** Scale path for minhash: explode shingles once, then ONE shuffle with
-    * `k` whole-stage-codegen `min(xxhash64(s, i))` aggregates — work is
-    * O(total shingles · k hash calls), linear in corpus size, no
-    * interpreted higher-order functions. Docs with zero shingles produce
-    * no row (they cannot near-dup by shingle overlap anyway, and a shared
-    * null signature would otherwise collide in every LSH band).
-    * Returns (id, sig: array<long> of length k).
+  /** Per-document minhash signatures: (id, sig: array<bigint> of length
+    * k), computed by the same kernel as [[minhashSignature]] in one
+    * projection — no explode, no shuffle. `shingles` is normally
+    * [[windowHashes]] of the tokens (positional, with repeats: min is
+    * idempotent, so no distinct pass is needed). Docs with zero shingles
+    * produce no row (they cannot near-dup by shingle overlap anyway, and
+    * a shared null signature would otherwise collide in every LSH band).
+    *
+    * The result is eagerly checkpointed and the no-shingle filter sits
+    * ABOVE the checkpoint, deliberately: placed below it, Catalyst pushes
+    * the `sig IS NOT NULL` predicate through an ingest-guard exchange to
+    * the scan, and the (possibly single-task) map side computes every
+    * signature once for the filter before the reduce side computes them
+    * all again for the projection.
     */
   def minhashSignatures(df: DataFrame, idCol: String, shingles: Column, k: Int): DataFrame = {
-    val sh = df.select(col(idCol).as("id"), explode(shingles).as("s"))
-    val aggs = (0 until k).map(i => min(xxhash64(col("s"), lit(i))).as(s"__h$i"))
-    sh.groupBy("id").agg(aggs.head, aggs.tail: _*)
-      .select(col("id"), array((0 until k).map(i => col(s"__h$i")): _*).as("sig"))
+    import graft.plan._
+    df.select(col(idCol).as("id"), column(MinhashSignature(expression(shingles), k)).as("sig"))
+      .ckpt()
+      .filter(col("sig").isNotNull)
   }
 
-  /** Scale path for simhash: explode tokens once (keeping multiplicity),
-    * hash each token once, then 64 codegen'd sum-aggregates count the
-    * +1/-1 bit votes in a single shuffle. Docs with zero tokens produce
-    * no row. Returns (id, fp: long).
+  /** Per-document simhash: one [[Simhash64]] pass over each doc's
+    * tokens (multiplicity kept, each token hashed once), no shuffle.
+    * Docs with zero tokens produce no row. Returns (id, fp: long).
     */
   def simhashFingerprints(df: DataFrame, idCol: String, toks: Column): DataFrame = {
     // one-pass per-doc projection (r13): the explode → xxhash64 →
@@ -126,7 +102,6 @@ object TextFunctions {
     // ZERO shuffle. The isNotNull filter reproduces the old
     // dropped-row behavior for empty/NULL token arrays (explode emitted
     // no row for them). TextSpec pins new == old per doc.
-    import org.apache.spark.sql.graftbridge.ColumnBridge.{column, expression}
     df.select(col(idCol).as("id"), column(Simhash64(expression(toks))).as("fp"))
       .filter(col("fp").isNotNull)
   }
@@ -141,21 +116,6 @@ object TextFunctions {
       // xxhash64 hashes complex types (arrays) natively
       xxhash64(slice(signature, b * rowsPerBand + 1, rowsPerBand), lit(b))
     }: _*)
-
-  /** 64-bit SimHash over tokens: per bit, sum +1/-1 weighted by token
-    * hash bit, take the sign. Computed without explode: fold the token
-    * array per bit with bitwise ops (all codegen'd).
-    */
-  def simhash64(toks: Column): Column = {
-    val hashes = transform(toks, t => xxhash64(t))
-    val bits = (0 until 64).map { b =>
-      // count of tokens with bit b set, minus count with bit unset
-      val setCnt = aggregate(hashes, lit(0L),
-        (acc, h) => acc + shiftright(h, b).bitwiseAND(lit(1L)) * lit(2L) - lit(1L))
-      when(setCnt > 0, shiftleft(lit(1L), b)).otherwise(lit(0L))
-    }
-    bits.reduce((a, b) => a.bitwiseOR(b))
-  }
 
   /** Hamming distance between two 64-bit fingerprints. */
   def hamming64(a: Column, b: Column): Column = bit_count(a.bitwiseXOR(b)).cast("int")

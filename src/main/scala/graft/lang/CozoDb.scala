@@ -1219,10 +1219,11 @@ class CozoDb(val spark: SparkSession) {
     graft.search.Fts.lshShingles(col(l.extractor), l.pipe, l.nGram)
 
   /** The per-document (key, band) table of an LSH index. Shingles and
-    * signature are STAGED as materialized columns: minhashSignature
-    * inlines its input expression once per permutation and lshBandKeys
-    * once per band — inlining the pipeline tree 200× would blow up
-    * Catalyst analysis quadratically. */
+    * signature are STAGED as columns: lshBandKeys inlines its input once
+    * per band, and inlining the tokenizer pipeline tree that many times
+    * would blow up Catalyst analysis. minhashSignature is one kernel
+    * pass over the staged shingles (each hashed once, not once per
+    * permutation). */
   private def lshBandsOf(docs: DataFrame, key: String, l: LshIdx): DataFrame = {
     import graft.functions.{TextFunctions => TF}
     val nPerm = l.bands * l.rowsPerBand

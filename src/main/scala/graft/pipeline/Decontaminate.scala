@@ -8,8 +8,10 @@ import org.apache.spark.sql.functions._
   * documents that share word n-grams with an evaluation/benchmark set
   * (the standard 13-gram-overlap test, run here with a configurable n).
   *
-  * Shape: explode both sides to distinct (doc, shingle) rows, equi-join
-  * on the shingle, aggregate per training doc. The eval side of the join
+  * Shape: explode both sides to (doc, shingle-hash) rows — one
+  * TextFunctions.windowHashes kernel pass per document, no shingle
+  * strings — equi-join on the hash, count distinct hits per training
+  * doc. The eval side of the join
   * is the full benchmark suite — millions of shingles at most — so Spark
   * broadcasts it and the pass over 100 TB of training text is a single
   * map-side join in whole-stage codegen, no shuffle of the corpus.
@@ -41,17 +43,16 @@ object Decontaminate {
     // key through the broadcast probe + distinct aggregation instead of
     // a ~(8n)-byte n-gram string. Counting hashes equals counting
     // strings up to 64-bit collisions (P ≈ m²/2⁶⁵ per doc — negligible
-    // at any real eval-suite size).
+    // at any real eval-suite size). A window repeated inside a doc
+    // explodes once per occurrence; countDistinct absorbs it.
     val tsh = trainP.select(col(trainId).as("train_id"),
-        explode(TF.wordShingles(col(trainText), n)).as("s"))
-      .select(col("train_id"), xxhash64(col("s")).as("h"))
+        explode(TF.windowHashes(TF.tokens(col(trainText)), n)).as("h"))
     // esh has exactly ONE consumer here (the join) — no ckpt: a persist
     // would be pure overhead, and its stats reset could demote the
     // unhinted join when broadcastEval=false (bloomOverlap, whose esh
     // feeds three sequential consumers, is where the lazy ckpt lives)
     val esh = eval.select(col(evalId).as("eval_id"),
-        explode(TF.wordShingles(col(evalText), n)).as("s"))
-      .select(col("eval_id"), xxhash64(col("s")).as("h"))
+        explode(TF.windowHashes(TF.tokens(col(evalText)), n)).as("h"))
     tsh.join(if (broadcastEval) broadcast(esh) else esh, Seq("h"))
       .groupBy("train_id")
       .agg(countDistinct(col("h")).as("overlap_ngrams"),
@@ -123,15 +124,13 @@ object Decontaminate {
     val spark = train.sparkSession
     val trainP = graft.plan.Parallelism.ensureIngestParallelism(train, Seq(col(trainId)))
     val tsh = trainP.select(col(trainId).as("train_id"),
-        explode(TF.wordShingles(col(trainText), n)).as("s"))
-      .select(col("train_id"), xxhash64(col("s")).as("h"))
+        explode(TF.windowHashes(TF.tokens(col(trainText)), n)).as("h"))
     // esh is consumed three times sequentially (distinct count, Bloom
     // aggregate, verify-join broadcast) — the lazy ckpt materializes in
     // the count job and spares two shingle re-passes (r9 audit)
     import graft.plan._
     val esh = eval.select(col(evalId).as("eval_id"),
-        explode(TF.wordShingles(col(evalText), n)).as("s"))
-      .select(col("eval_id"), xxhash64(col("s")).as("h"))
+        explode(TF.windowHashes(TF.tokens(col(evalText)), n)).as("h"))
       .ckptLazy()
     val evalHashes = esh.select("h").distinct()
     val expected = math.max(evalHashes.count(), 1L)

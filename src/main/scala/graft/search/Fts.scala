@@ -214,7 +214,7 @@ object Fts {
         val hmm = p.cangjieHmm
         udf((s: String) => Cangjie.cut(s, kind, hmm)).apply(lowered)
       case _ => // Simple: split on non-alphanumeric
-        filter(split(lowered, "[^\\p{L}\\p{N}]+"), t => length(t) > 0)
+        graft.functions.TextFunctions.alnumRuns(lowered)
     }
     val alnum =
       if (p.alphaNumOnly) filter(base, t => t.rlike("^[\\p{L}\\p{N}]+$"))

@@ -70,16 +70,14 @@ object Streaming {
     import graft.functions.{TextFunctions => TF}
     val spark = stream.sparkSession
     val hashes: Array[Long] = eval
-      .select(explode(TF.wordShingles(col(evalText), n)).as("s"))
-      .select(xxhash64(col("s")).as("h")).distinct()
+      .select(explode(TF.windowHashes(TF.tokens(col(evalText)), n)).as("h")).distinct()
       .collect().map(_.getLong(0)).sorted
     val bc = spark.sparkContext.broadcast(hashes)
     val hit = udf((h: Long) => java.util.Arrays.binarySearch(bc.value, h) >= 0)
-    val shingles = coalesce(TF.wordShingles(col(textCol), n),
-      array().cast("array<string>"))
+    val shingles = array_distinct(TF.windowHashes(TF.tokens(col(textCol)), n))
     stream
       .withColumn("overlap_ngrams",
-        size(filter(array_distinct(shingles), s => hit(xxhash64(s)))).cast("long"))
+        size(filter(shingles, h => hit(h))).cast("long"))
       .withColumn("contaminated", col("overlap_ngrams") >= minOverlap)
   }
 
@@ -124,7 +122,6 @@ object Streaming {
                       shingleN: Int = 3, bands: Int = 16,
                       rowsPerBand: Int = 4): org.apache.spark.sql.streaming.StreamingQuery = {
     import graft.functions.{TextFunctions => TF}
-    import graft.plan._
     val spark = stream.sparkSession
     import spark.implicits._
     val bandsRoot = s"${checkpointDir.stripSuffix("/")}/graft_accepted_bands"
@@ -140,11 +137,13 @@ object Streaming {
       .foreachBatch { (batch: DataFrame, batchId: Long) =>
         if (!batch.isEmpty) {
           val k = bands * rowsPerBand
+          // checkpointed signatures: the three band consumers below
+          // re-derive the cheap band keys instead of the signatures
           val sigs = TF.minhashSignatures(batch, idCol,
-            TF.wordShingles(col(textCol), shingleN), k)
+            TF.windowHashes(TF.tokens(col(textCol)), shingleN), k)
           val banded = sigs
             .withColumn("band", explode(TF.lshBandKeys(col("sig"), bands, rowsPerBand)))
-            .select(col("id"), col("band")).ckpt()
+            .select(col("id"), col("band"))
           // collides with durable history, or with a smaller id in this batch
           val historyHit = banded.join(acceptedBefore(batchId), Seq("band"))
             .select("id").distinct()

@@ -1,13 +1,18 @@
 package graft.text
 
-import graft.functions.{TextFunctions => TF}
+import graft.functions.{TextStats, TextFunctions => TF}
 import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.functions._
 
 /** Text analysis for training-data pipelines: token statistics, quality
-  * scoring, language identification, fingerprinting. All codegen'd
-  * column expressions over the scan — no UDFs, so a 100 TB pass stays in
-  * whole-stage codegen and reads only the text column (pruned scan).
+  * scoring, language identification, fingerprinting. Column expressions
+  * over the scan, no UDFs, reading only the text column (pruned scan).
+  * The per-token work (tokenizer, quality counts, window hashes) is the
+  * native one-pass kernels of graft.functions.TextKernels, which stay
+  * in whole-stage codegen. Spark's higher-order functions (`filter`,
+  * `aggregate`, `transform`) are CodegenFallback and run interpreted:
+  * what remains of them here (gopherRules, chunk, fingerprint) is off
+  * the curation chain.
   */
 object TextAnalysis {
 
@@ -16,23 +21,34 @@ object TextAnalysis {
 
   /** Per-document statistics: token count, char count, mean token
     * length, punctuation ratio, stopword ratio, uppercase ratio.
+    * One [[graft.functions.TextStats]] pass counts everything; the
+    * ratios keep the arithmetic (and so the doubles) of the column
+    * formula it replaced — size/aggregate/filter over TF.tokens and
+    * `length(text) - length(regexp_replace(text, re, ""))` counts.
     */
   def stats(df: DataFrame, idCol: String, textCol: String): DataFrame = {
-    val toks = TF.tokens(col(textCol))
-    val nChars = length(col(textCol))
-    val nToks = size(toks)
-    val stopArr = array(stopwordsEn.map(lit): _*)
-    df.select(
+    import org.apache.spark.sql.graftbridge.ColumnBridge.{column, expression}
+    val text = col(textCol)
+    // its own projection, read six times: CollapseProject keeps a
+    // non-cheap producer referenced more than once, so the struct is
+    // computed once (a filter on the ratios pushed below it inlines the
+    // struct per reference instead, which the kernel's memo absorbs)
+    val counted = df.select(col(idCol),
+      column(TextStats(expression(text), expression(lower(text)), stopwordsEn)).as("__st"))
+    // NULL text: size(NULL) under the session's sizeOfNull rule, as before
+    val nToks = coalesce(col("__st.n_tokens"), size(lit(null).cast("array<string>")))
+    val nChars = col("__st.n_chars")
+    counted.select(
       col(idCol),
       nToks.as("n_tokens"),
       nChars.as("n_chars"),
-      when(nToks > 0, aggregate(toks, lit(0L), (acc, t) => acc + length(t)).cast("double") / nToks)
+      when(nToks > 0, col("__st.token_chars").cast("double") / nToks)
         .otherwise(lit(0.0)).as("mean_token_len"),
-      when(nChars > 0, (nChars - length(regexp_replace(col(textCol), "\\p{Punct}", ""))).cast("double") / nChars)
+      when(nChars > 0, col("__st.punct").cast("double") / nChars)
         .otherwise(lit(0.0)).as("punct_ratio"),
-      when(nToks > 0, size(filter(toks, t => array_contains(stopArr, t))).cast("double") / nToks)
+      when(nToks > 0, col("__st.stopwords").cast("double") / nToks)
         .otherwise(lit(0.0)).as("stopword_ratio"),
-      when(nChars > 0, (nChars - length(regexp_replace(col(textCol), "[A-Z]", ""))).cast("double") / nChars)
+      when(nChars > 0, col("__st.upper").cast("double") / nChars)
         .otherwise(lit(0.0)).as("upper_ratio"))
   }
 
@@ -184,14 +200,6 @@ object TextAnalysis {
       .otherwise(lit("en"))
   }
 
-  /** Whitespace + BPE-ish subword token count estimate: words are split
-    * into ceil(len/4) subword units (the common ~4 chars/token rule),
-    * numbers and punctuation count one each.
-    */
-  def tokenEstimate(text: Column): Column =
-    aggregate(TF.tokens(text), lit(0L), (acc, t) => acc + ceil(length(t) / lit(4.0)).cast("long")) +
-      length(regexp_replace(text, "[^\\p{Punct}]", "")).cast("long")
-
   /** Order-sensitive 64-bit document fingerprint (rolling hash). */
   def fingerprint(df: DataFrame, idCol: String, textCol: String): DataFrame =
     df.select(col(idCol), TF.rollingFingerprint(TF.tokens(col(textCol))).as("fingerprint"))
@@ -220,7 +228,8 @@ object TextAnalysis {
               n: Int = 6): DataFrame = {
     import graft.plan._
     val df = graft.plan.Parallelism.ensureIngestParallelism(df0, Seq(col(idCol)))
-    // 8-byte xxhash64 shingle keys, not the shingle strings — the
+    // 8-byte xxhash64 shingle keys (each the hash of its shingle
+    // string, distinct per doc), not the shingle strings — the
     // corpus-scale shuffle carries ~5× fewer bytes (same stance as
     // Decontaminate/Dedup; the driver's string-keyed SQL oracle
     // certifies collision-freedom on every run)
@@ -229,16 +238,16 @@ object TextAnalysis {
     // each partition computes twice with block-lock contention
     // (measured at sf1: 80 vs 38 core-sec, 48 s vs 12 s wall).
     // The ≥1-shingle filter comes AFTER the ckpt, deliberately: its
-    // predicate references the shingle transform, and placed before the
+    // predicate references the shingle hashes, and placed before the
     // ckpt Catalyst pushes it through the ingest-guard exchange down to
     // the scan — the (possibly single-split) map side then computes the
-    // FULL shingle transform just to evaluate the filter and the reduce
+    // FULL tokenize + shingle pass just to evaluate the filter and the reduce
     // side recomputes it for the projection (measured at sf1: 74
     // core-sec, 38 of them in one map task, 47 s wall). The ckpt leaf
     // stops the pushdown; post-ckpt the filter is a trivial size()
     // probe of the persisted arrays.
     val withSh = df.select(col(idCol).as("id"),
-        transform(TF.wordShingles(col(textCol), n), s => xxhash64(s)).as("__sh"))
+        array_distinct(TF.windowHashes(TF.tokens(col(textCol)), n)).as("__sh"))
       .ckpt()
       .filter(size(col("__sh")) >= 1)
     val novel = withSh.select(col("id"), explode(col("__sh")).as("s"))
