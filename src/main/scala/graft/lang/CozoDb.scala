@@ -15,9 +15,15 @@ import scala.jdk.CollectionConverters._
   * run_script:298, relation store relation.rs, triggers
   * relation.rs:553-585, callbacks db.rs:789-830) on Spark terms: a
   * stored relation is a named DataFrame (parquet/delta-backed in
-  * production, in-memory registered here), a script run builds one
-  * Catalyst plan per rule stratum, and mutations produce the relation's
-  * next state via key-equi joins (Mutations).
+  * production, in-memory registered here) and a script run builds one
+  * Catalyst plan per rule stratum. A relation is an unchanged base plus
+  * a driver-resident write overlay (key → row, or a tombstone): small
+  * `:put`/`:rm`/`:update`/`:insert`/`:delete` writes touch only their
+  * keys in the overlay and run no job beyond an existence probe, and
+  * reads see `base ANTI JOIN overlay keys UNION overlay rows`. A write
+  * the overlay cannot take folds: the base is rewritten through the
+  * key-equi joins of [[graft.operators.Mutations]] and the overlay
+  * resets.
   *
   * Rule evaluation is stratified bottom-up: rules are grouped into
   * strongly-connected components (query/stratify.rs:225), evaluated in
@@ -29,8 +35,14 @@ import scala.jdk.CollectionConverters._
 class CozoDb(val spark: SparkSession) {
 
   import Compiler.CompileException
+  import CozoDb.Overlay
 
+  /** Each stored relation as its readers see it: the base itself, or
+    * the view over its base and write overlay ([[overlayView]]). */
   private val relations = mutable.LinkedHashMap.empty[String, DataFrame]
+  /** Write overlays of the relations that have one (see
+    * [[overlayWrite]]); immutable values, so a snapshot is a map copy. */
+  private val overlays = mutable.HashMap.empty[String, Overlay]
   private val relationKeys = mutable.HashMap.empty[String, Seq[String]]
   private val putTriggers = mutable.HashMap.empty[String, List[DataFrame => Unit]]
   private val rmTriggers = mutable.HashMap.empty[String, List[DataFrame => Unit]]
@@ -52,6 +64,7 @@ class CozoDb(val spark: SparkSession) {
                     validity: Option[String] = None,
                     validityAssert: Option[String] = None): Unit = {
     relations(name) = df
+    overlays.remove(name)
     dropRelationIndexCaches(name)
     bumpVersion(name)
     relationKeys(name) = if (keys.nonEmpty) keys else df.columns.toSeq
@@ -155,7 +168,7 @@ class CozoDb(val spark: SparkSession) {
   def removeRelation(name: String): Unit = {
     dropRelationIndexCaches(name)
     forgetVersion(name)
-    relations.remove(name); relationKeys.remove(name)
+    relations.remove(name); overlays.remove(name); relationKeys.remove(name)
     relationValidity.remove(name); relationAssert.remove(name)
     relationDeclared.remove(name); relationDefaults.remove(name)
     bareCreates.remove(name)
@@ -326,6 +339,7 @@ class CozoDb(val spark: SparkSession) {
     * Prefer [[transact]], which closes in a finally. */
   final class Transaction private[CozoDb] () {
     private val snapRelations = relations.clone()
+    private val snapOverlays = overlays.clone()
     private val snapKeys = relationKeys.clone()
     private val snapValidity = relationValidity.clone()
     private val snapAssert = relationAssert.clone()
@@ -352,6 +366,7 @@ class CozoDb(val spark: SparkSession) {
         val changed = (relations.keySet ++ snapRelations.keySet).filterNot(n =>
           relations.get(n).exists(df => snapRelations.get(n).exists(_ eq df)))
         relations.clear(); relations ++= snapRelations
+        overlays.clear(); overlays ++= snapOverlays
         relationKeys.clear(); relationKeys ++= snapKeys
         relationValidity.clear(); relationValidity ++= snapValidity
         relationAssert.clear(); relationAssert ++= snapAssert
@@ -649,9 +664,12 @@ class CozoDb(val spark: SparkSession) {
         // the Spark-native analogue of the reference's storage
         // compaction (db.rs Compact → RocksDB): eagerly materialize
         // every stored relation, collapsing accumulated mutation-chain
-        // lineage into checkpoint blocks, and drop index delta chains
-        // so the next probe serves a freshly compacted artifact
+        // lineage and every write overlay into checkpoint blocks, and
+        // drop index delta chains so the next probe serves a freshly
+        // compacted artifact
         relationNames.foreach(r => relations(r) = relations(r).ckpt())
+        overlayFolds += overlays.size
+        overlays.clear()
         indexCacheLock.synchronized {
           ftsCache.clear(); ftsDeltaCount.clear()
           lshCache.clear(); lshDeltaCount.clear()
@@ -2070,11 +2088,9 @@ class CozoDb(val spark: SparkSession) {
           case _ => None
         }
         // set semantics apply to const rules too (utilities/constant.rs
-        // pre-evaluates into a deduped store); rows are driver-side so
-        // the dedup is cheap
-        CozoDb.rowsToDf(spark, rows,
-          if (head.nonEmpty) Some(head.map(_.v)) else paramNames)
-          .dropDuplicates()
+        // pre-evaluates into a deduped store)
+        CozoDb.constRelation(spark, rows,
+          if (head.nonEmpty) Some(head.map(_.v)) else paramNames, maxDriverPatchKeys)
       case FixedApply(_, head, algo, rels, opts) =>
         val impl = FixedRules.get(algo)
           .getOrElse(throw CompileException(s"unknown fixed rule $algo"))
@@ -2598,9 +2614,6 @@ class CozoDb(val spark: SparkSession) {
 
   private def relationMutation(op: String, rel: String, schemaKeys: Seq[String],
                                delta0: DataFrame): DataFrame = {
-    // materialize the mutation result lazily (first action) so repeated
-    // reads of the stored relation don't recompute its defining query,
-    // and mutation chains don't grow unbounded lineage
     if (op != "create") requireAccess(rel, "normal", s":$op")
     // a row-changing op stales this relation's index caches (only)
     val prevVersion = versionOf(rel)
@@ -2619,25 +2632,37 @@ class CozoDb(val spark: SparkSession) {
         }.select(declared.map(col): _*)
       case _ => delta0
     }
-    val delta = coerceValidity(rel, withDefaults).ckptLazy()
+    val coerced = coerceValidity(rel, withDefaults)
+    val rowOp = Seq("put", "insert", "update", "rm", "delete").contains(op)
+    val wasBare = bareCreates.contains(rel)
+    val overlayable = rowOp && !wasBare && relationKeys.contains(rel)
+    // The delta as a driver-local frame: as it is when it already is one
+    // (a const rule), else fetched in one bounded collect when the write
+    // may go to the overlay. Anything else is checkpointed lazily so
+    // repeated reads of the relation don't recompute its defining query
+    // — note that under AQE `localCheckpoint(eager = false)` still runs
+    // every shuffle map stage when the checkpoint is created.
+    val local: Option[DataFrame] =
+      if (isLocal(coerced)) Some(coerced)
+      else if (!overlayable) None
+      else {
+        val rows = coerced.limit(maxDriverPatchKeys + 1).collect()
+        if (rows.length > maxDriverPatchKeys) None
+        else Some(localFrame(rows.toSeq, coerced.schema.fields.toSeq: _*))
+      }
+    val delta = local.getOrElse(coerced.ckptLazy())
     // first FULL-WIDTH data into a schema-only relation: adopt the
     // delta's Spark schema (the placeholder's column NAMES stay
     // authoritative). A keys-only rm/delete must NOT narrow the schema
     // (tests.rs deletion: a failed partial delete used to corrupt the
     // relation to its key columns).
-    if (op != "create" && bareCreates.contains(rel)
+    if (op != "create" && wasBare
         && relationDeclared.get(rel).forall(_.forall(delta.columns.contains))) {
       bareCreates.remove(rel)
       relations(rel) = delta.limit(0)
     }
     def keys: Seq[String] = relationKeys.getOrElse(rel,
       if (schemaKeys.nonEmpty) schemaKeys else delta.columns.toSeq)
-    // rows about to be replaced/removed — `_old` for triggers/callbacks
-    // (stored.rs:714; captured as an immutable plan before the swap)
-    def oldRows: DataFrame = {
-      val before = relation(rel)
-      before.join(delta.select(keys.map(col): _*).dropDuplicates(), keys, "left_semi")
-    }
     op match {
       case "create" =>
         if (relations.contains(rel))
@@ -2648,33 +2673,170 @@ class CozoDb(val spark: SparkSession) {
         registerTable(rel, delta, if (schemaKeys.nonEmpty) schemaKeys
           else relationKeys.getOrElse(rel, delta.columns.toSeq))
         before.foreach(b => fireMutation(rel, "replace", delta, b))
-      case "put" =>
-        val old = oldRows
-        relations(rel) = Mutations.put(relation(rel), delta, keys).ckptLazy()
-        fireMutation(rel, "put", delta, old)
-      case "insert" =>
-        val old = oldRows
-        relations(rel) = Mutations.insert(relation(rel), delta, keys).ckptLazy()
-        fireMutation(rel, "put", delta, old)
-      case "update" =>
-        val old = oldRows
-        relations(rel) = Mutations.update(relation(rel), delta, keys).ckptLazy()
-        fireMutation(rel, "put", delta, old)
-      case "rm" =>
-        val old = oldRows
-        relations(rel) = Mutations.rm(relation(rel), delta, keys).ckptLazy()
-        fireMutation(rel, "rm", delta, old)
-      case "delete" =>
-        val old = oldRows
-        relations(rel) = Mutations.delete(relation(rel), delta, keys).ckptLazy()
-        fireMutation(rel, "rm", delta, old)
+      case _ if rowOp =>
+        // rows about to be replaced/removed — `_old` for triggers and
+        // callbacks (stored.rs:714; an immutable plan over the view
+        // before the write)
+        val old = Mutations.keyFilter(relation(rel), delta, keys, "left_semi")
+        if (!(overlayable && local.isDefined && overlayWrite(op, rel, delta))) {
+          val cur = relation(rel)
+          relations(rel) = (op match {
+            case "put" => Mutations.put(cur, delta, keys)
+            case "insert" => Mutations.insert(cur, delta, keys)
+            case "update" => Mutations.update(cur, delta, keys)
+            case "rm" => Mutations.rm(cur, delta, keys)
+            case _ => Mutations.delete(cur, delta, keys)
+          }).ckptLazy()
+          overlays.remove(rel)
+          overlayFolds += 1
+        }
+        fireMutation(rel, if (op == "rm" || op == "delete") "rm" else "put", delta, old)
       case "ensure" => Mutations.ensure(relation(rel), delta)
       case "ensure_not" => Mutations.ensureNot(relation(rel), delta)
       case other => throw CompileException(s"unknown relation op :$other")
     }
-    if (Seq("put", "insert", "update", "rm", "delete").contains(op))
-      maintainIndexes(rel, op, delta, prevVersion, thisVersion, schemaBefore)
+    if (rowOp) maintainIndexes(rel, op, delta, prevVersion, thisVersion, schemaBefore)
     delta
+  }
+
+  /** True when `df` plans to a driver-local relation: collecting it
+    * runs no Spark job, and its statistics are exact. */
+  private def isLocal(df: DataFrame): Boolean =
+    df.queryExecution.optimizedPlan.isInstanceOf[org.apache.spark.sql.catalyst.plans.logical.LocalRelation]
+
+  private[lang] var overlayWrites = 0 // row writes the overlay absorbed, for tests
+  private[lang] var overlayFolds = 0  // base rewrites: folded row writes and compacted overlays
+
+  /** `base` minus every overlay key, plus the overlay's live rows. */
+  private def overlayView(rel: String, ov: Overlay): DataFrame = {
+    val kept = overlayMatch(ov.base, relationKeys(rel), ov.rows.keys, hit = false)
+    val live = ov.rows.values.flatten.toSeq
+    if (live.isEmpty) kept
+    else kept.unionByName(localFrame(live, ov.base.schema.fields.map(_.copy(nullable = true)).toSeq: _*))
+  }
+
+  /** The rows of `base` whose key is (`hit`) or is not among `keySet`
+    * (keys of [[overlayKey]]), matched as Spark's NULL-safe `<=>` does,
+    * by an IN filter, which adds no job to a read: over the key column
+    * when there is one, else over the struct of the key columns
+    * (compared field by field, NULLs equal). */
+  private def overlayMatch(base: DataFrame, keys: Seq[String], keySet: Iterable[Seq[Any]],
+                           hit: Boolean): DataFrame = {
+    val types = keys.map(k => base.schema(k).dataType)
+    val tuples = keySet.toSeq
+    val matched =
+      if (keys.length == 1) {
+        val vs = tuples.map(_.head)
+        // a hashed IN compares floats by boxed equality: list -0.0 beside 0.0
+        val lits = vs.filter(_ != null).flatMap {
+          case d: Double if d == 0.0 => Seq(0.0, -0.0)
+          case f: Float if f == 0.0f => Seq(0.0f, -0.0f)
+          case v => Seq(v)
+        }.map(lit(_).cast(types.head))
+        val in = if (lits.isEmpty) lit(false) else coalesce(col(keys.head).isin(lits: _*), lit(false))
+        if (vs.contains(null)) in || col(keys.head).isNull else in
+      } else if (tuples.isEmpty) lit(false)
+      else struct(keys.indices.map(i => col(keys(i)).as(s"_$i")): _*).isin(tuples.map(vs =>
+        struct(vs.indices.map(i => lit(vs(i)).cast(types(i)).as(s"_$i")): _*)): _*)
+    base.filter(if (hit) matched else !matched)
+  }
+
+  /** The overlay key of `values` (types as the relation's key columns),
+    * or None when the overlay and [[overlayMatch]] could disagree on it:
+    * a NaN, or a type whose driver equality is not Spark's (a key of
+    * such a type takes the fold path). */
+  private def overlayKey(values: Seq[Any], types: Seq[DataType]): Option[Seq[Any]] = {
+    val out = values.zip(types).map {
+      case (null, _) => Some(null)
+      case (d: Double, _) => if (d.isNaN) None else Some(if (d == 0.0) 0.0 else d)
+      case (f: Float, _) => if (f.isNaN) None else Some(if (f == 0.0f) 0.0f else f)
+      case (v, LongType | IntegerType | ShortType | ByteType | StringType | BooleanType |
+               DateType | TimestampType | TimestampNTZType) => Some(v)
+      case _ => None
+    }
+    if (out.forall(_.isDefined)) Some(out.map(_.get)) else None
+  }
+
+  /** Apply a row write to `rel`'s write overlay. `delta` is driver-local.
+    * put and rm run no job; insert, delete and update collect the base
+    * rows of the keys the overlay does not hold ([[overlayMatch]], one
+    * job) to check existence or fetch the old rows. Raises the op's
+    * errors with the state unchanged. Returns false — the caller folds
+    * — when the write would change a column type, holds two rows for
+    * one key, has a key the overlay cannot hold, takes the overlay past
+    * [[maxDriverPatchKeys]] keys, or probes a key the base holds twice. */
+  private def overlayWrite(op: String, rel: String, delta: DataFrame): Boolean = {
+    val keys = relationKeys(rel)
+    val cur = relation(rel)
+    val cols = op match {
+      case "put" | "insert" => cur.columns.toSeq
+      case "update" => keys ++ delta.columns.filterNot(keys.contains)
+      case _ => keys
+    }
+    if (!cols.forall(c => delta.columns.contains(c) && cur.columns.contains(c))) return false
+    val target = cur.select(cols.map(col): _*)
+    // a write that would change a column type folds (the union's types
+    // come from analysis alone, no job)
+    val unionTypes = scala.util.Try(
+      target.unionByName(delta.select(cols.map(col): _*)).schema.map(_.dataType)).toOption
+    if (!unionTypes.contains(target.schema.map(_.dataType))) return false
+    // the delta's rows in the relation's types, readable by name
+    val typed = delta.select(target.schema.map(f => col(f.name).cast(f.dataType).as(f.name)): _*)
+      .collect().toSeq
+    if (typed.length > maxDriverPatchKeys) return false
+    val keyTypes = keys.map(k => target.schema(k).dataType)
+    val keyOpts = typed.map(r => overlayKey(keys.map(k => r.getAs[Any](k)), keyTypes))
+    if (keyOpts.exists(_.isEmpty)) return false
+    val deltaKeys = keyOpts.flatten
+    if (op != "rm" && op != "delete" && deltaKeys.distinct.length != deltaKeys.length) return false
+    // a new overlay pins its base lazily — the next read materializes it,
+    // no job here — so reads of a written relation scan checkpoint blocks
+    // instead of recomputing the base's defining plan
+    val ov = overlays.getOrElse(rel, Overlay(cur.queryExecution.logical match {
+      case _: org.apache.spark.sql.execution.LogicalRDD |
+           _: org.apache.spark.sql.catalyst.plans.logical.LocalRelation => cur
+      case _ => cur.ckptLazy()
+    }, Map.empty))
+    if ((ov.rows.keySet ++ deltaKeys).size > maxDriverPatchKeys) return false
+    // base rows of the keys the overlay does not hold, for the ops that
+    // check existence or read old rows
+    val unknown = deltaKeys.distinct.filterNot(ov.rows.contains)
+    val baseRows: Map[Seq[Any], Row] =
+      if (op == "put" || op == "rm" || unknown.isEmpty) Map.empty
+      else {
+        val got = overlayMatch(ov.base, keys, unknown, hit = true).collect().toSeq
+        val byKey = got.flatMap(r => overlayKey(keys.map(r.getAs[Any](_)), keyTypes).map(_ -> r)).toMap
+        // more rows than keys: the base holds a key twice — fold
+        if (got.length > unknown.length || byKey.size != got.length) return false
+        byKey
+      }
+    def current(k: Seq[Any]): Option[Row] = ov.rows.getOrElse(k, baseRows.get(k))
+    val written: Seq[(Seq[Any], Option[Row])] = op match {
+      case "put" => deltaKeys.zip(typed.map(Some(_)))
+      case "rm" => deltaKeys.map(_ -> None)
+      case "insert" =>
+        val clash = deltaKeys.count(current(_).isDefined)
+        if (clash > 0) throw new IllegalStateException(s"insert: $clash key(s) already exist")
+        deltaKeys.zip(typed.map(Some(_)))
+      case "delete" =>
+        val missing = deltaKeys.count(current(_).isEmpty)
+        if (missing > 0) throw new IllegalStateException(s"delete: $missing key(s) not present")
+        deltaKeys.map(_ -> None)
+      case _ => // update: the old row with the delta's non-key columns
+        val schema = StructType(cur.schema.fields)
+        val at = cols.filterNot(keys.contains).map(c => cur.columns.indexOf(c) -> c)
+        deltaKeys.zip(typed).map { case (k, r) =>
+          val vs = current(k).getOrElse(
+            throw new IllegalStateException("update: key to update does not exist")).toSeq.toArray
+          at.foreach { case (j, c) => vs(j) = r.getAs[Any](c) }
+          k -> Some(new org.apache.spark.sql.catalyst.expressions.GenericRowWithSchema(vs, schema))
+        }
+    }
+    val next = Overlay(ov.base, ov.rows ++ written)
+    overlays(rel) = next
+    relations(rel) = overlayView(rel, next)
+    overlayWrites += 1
+    true
   }
 
   /** Incremental search-index maintenance on mutation (the reference
@@ -2696,7 +2858,7 @@ class CozoDb(val spark: SparkSession) {
   private[lang] val ftsMaxDeltas = 32
   /** Above this many changed keys a driver index is dropped instead of
     * patched: the next probe rebuilds it (and re-decides its branch). */
-  private val maxDriverPatchKeys = 10000
+  private[lang] var maxDriverPatchKeys: Int = CozoDb.maxLocalRows
   private[lang] var indexFullBuilds = 0 // full builds, both branches; observability for tests
   private[lang] var indexPatches = 0    // distributed HNSW partition patches, for tests
   private[lang] var indexGraphLoads = 0 // distributed HNSW restore shuffles, for tests
@@ -2939,6 +3101,12 @@ class CozoDb(val spark: SparkSession) {
 
 object CozoDb {
 
+  /** A relation's write overlay: per key (the key columns' values, in
+    * the relation's key order, floats with -0.0 read as 0.0), the
+    * written row in the relation's column order and types, or None for
+    * a removed key. Readers see `CozoDb.overlayView`. */
+  private final case class Overlay(base: DataFrame, rows: Map[Seq[Any], Option[Row]])
+
   /** Monotone id for per-instance job-group nonces (see dbNonce). */
   private[lang] val dbCounter = new java.util.concurrent.atomic.AtomicLong(0)
 
@@ -2947,11 +3115,58 @@ object CozoDb {
   val meetAggrs: Set[String] =
     Set("min", "max", "min_cost", "shortest", "choice", "and", "or", "bit_and", "bit_or")
 
+  /** Row count up to which literal rows become a driver-local relation
+    * (a `LocalRelation`: no Spark job to read, exact statistics), and
+    * up to which a write goes to a relation's write overlay. */
+  private[lang] val maxLocalRows = 10000
+
   /** Build a DataFrame from rows of literals (const rules `<-`,
     * Constant fixed rule). Column types are inferred column-wise with
-    * Long+Double unifying to Double; names default to _0.._n.
+    * Long+Double unifying to Double; names default to _0.._n. Up to
+    * [[maxLocalRows]] rows the frame is driver-local.
     */
   def rowsToDf(spark: SparkSession, rows: Seq[Any], names: Option[Seq[String]]): DataFrame = {
+    val (schema, data) = typedRows(rows, names)
+    frame(spark, schema, data, maxLocalRows)
+  }
+
+  /** A const rule's relation: [[rowsToDf]] under set semantics. Up to
+    * `localMax` rows dedupe on the driver into a local relation, with
+    * `dropDuplicates`' identity and output: floats normalized (-0.0 is
+    * 0.0, every NaN the one NaN), also inside arrays. Larger inputs run
+    * `dropDuplicates` as a Spark job. */
+  private[lang] def constRelation(spark: SparkSession, rows: Seq[Any],
+                                  names: Option[Seq[String]], localMax: Int): DataFrame = {
+    val (schema, data) = typedRows(rows, names)
+    if (data.length > localMax) frame(spark, schema, data, localMax).dropDuplicates()
+    else {
+      def norm(v: Any): Any = v match {
+        case d: Double => if (d.isNaN) Double.NaN else if (d == 0.0) 0.0 else d
+        case f: Float => if (f.isNaN) Float.NaN else if (f == 0.0f) 0.0f else f
+        case s: scala.collection.Seq[_] => s.map(norm)
+        case other => other
+      }
+      // equality by bits: a NaN equals itself here, as in Spark's grouping
+      def ident(v: Any): Any = v match {
+        case d: Double => ("d", java.lang.Double.doubleToLongBits(d))
+        case f: Float => ("f", java.lang.Float.floatToIntBits(f))
+        case s: scala.collection.Seq[_] => s.map(ident)
+        case other => other
+      }
+      val seen = mutable.HashSet.empty[Any]
+      val distinct = data.map(r => Row.fromSeq(r.toSeq.map(norm))).filter(r => seen.add(ident(r.toSeq)))
+      frame(spark, schema, distinct, localMax)
+    }
+  }
+
+  private def frame(spark: SparkSession, schema: StructType, data: Seq[Row],
+                    localMax: Int): DataFrame =
+    if (data.length <= localMax) spark.createDataFrame(data.asJava, schema)
+    else spark.createDataFrame(
+      spark.sparkContext.parallelize(data, math.max(1, data.length / 10000)), schema)
+
+  /** The typed schema and rows of literal `rows` (see [[rowsToDf]]). */
+  private def typedRows(rows: Seq[Any], names: Option[Seq[String]]): (StructType, Seq[Row]) = {
     val tuples: Seq[Seq[Any]] = rows.map {
       case s: Seq[_] => s
       case other => Seq(other) // list of scalars = single-column rows
@@ -3018,6 +3233,6 @@ object CozoDb {
     val data = tuples.map(t => Row.fromSeq(t.zipWithIndex.map { case (v, i) =>
       if (anyCols(i)) AnyValue.encode(v) else coerce(v, types(i))
     }))
-    spark.createDataFrame(spark.sparkContext.parallelize(data, math.max(1, data.length / 10000)), schema)
+    (schema, data)
   }
 }

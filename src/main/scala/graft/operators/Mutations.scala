@@ -1,6 +1,6 @@
 package graft.operators
 
-import org.apache.spark.sql.DataFrame
+import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.functions._
 
 import graft.plan._
@@ -13,22 +13,36 @@ import graft.plan._
   *
   * Spark-first shape: each mutation is a read-join-write producing the
   * new table state (Delta-style MERGE composed from anti/semi joins).
-  * All joins are key-equi joins, so at scale they broadcast when the
-  * delta is small and shuffle-hash otherwise; the write is a full or
-  * partition-overwrite commit.
+  * Keys match NULL-safely (`<=>`): cozo stores Null as an ordinary key
+  * value, and Datalog joins unify NULLs too. The joins are equi joins,
+  * so a delta with exact statistics (a driver-local `LocalRelation`)
+  * broadcasts; a checkpointed delta carries default leaf statistics
+  * and shuffles.
   */
 object Mutations {
 
+  /** `current` rows whose key does (`left_semi`) or does not
+    * (`left_anti`) occur in `other`, keys matched NULL-safely. */
+  def keyFilter(current: DataFrame, other: DataFrame, keys: Seq[String], how: String): DataFrame =
+    current.join(keysApart(other, keys), nullSafeOn(keys), how)
+
+  /** `other`'s key columns renamed apart (`__rk<i>`), plus `carry`. */
+  private def keysApart(other: DataFrame, keys: Seq[String], carry: Seq[String] = Nil): DataFrame =
+    other.select(keys.indices.map(i => col(keys(i)).as(s"__rk$i")) ++ carry.map(col): _*)
+
+  /** NULL-safe equality of the left side's keys with [[keysApart]]'s. */
+  private def nullSafeOn(keys: Seq[String]): Column =
+    keys.indices.map(i => col(keys(i)) <=> col(s"__rk$i")).reduce(_ && _)
+
   /** Upsert: rows of `delta` replace current rows with the same key
     * (stored.rs:208 put_into_relation). */
-  def put(current: DataFrame, delta: DataFrame, keys: Seq[String]): DataFrame = {
-    val kept = current.join(delta.select(keys.map(col): _*).dropDuplicates(), keys, "left_anti")
-    kept.unionByName(delta.select(current.columns.map(col): _*))
-  }
+  def put(current: DataFrame, delta: DataFrame, keys: Seq[String]): DataFrame =
+    keyFilter(current, delta, keys, "left_anti")
+      .unionByName(delta.select(current.columns.map(col): _*))
 
   /** Insert: like put, but raises if any key already exists (stored.rs:199). */
   def insert(current: DataFrame, delta: DataFrame, keys: Seq[String]): DataFrame = {
-    val clash = current.join(delta, keys, "left_semi")
+    val clash = keyFilter(current, delta, keys, "left_semi")
     if (!clash.isEmpty)
       throw new IllegalStateException(s"insert: ${clash.count()} key(s) already exist")
     current.unionByName(delta.select(current.columns.map(col): _*))
@@ -46,16 +60,15 @@ object Mutations {
     // the extracted value verbatim, nulls included
     val renamed = updCols.foldLeft(delta)((d, c) => d.withColumnRenamed(c, s"__new_$c"))
       .withColumn("__hit", lit(true))
-    // ONE broadcastable left join carries the merge, materialized once
-    // (LAZY checkpoint: the existence-check action below computes it,
-    // the final select reuses the persisted blocks — an eager ckpt here
-    // paid a third traversal). The existence check derives from the
-    // SAME frame (matched delta keys vs delta keys — a missing key is
-    // one the join never hit), and BOTH distinct-key counts ride ONE
-    // Spark action as a two-row union (the sentinel-row trick
-    // Classifier.train uses) — the r8 shape paid an eager ckpt plus two
-    // separate count actions and regressed 0.60→1.02 s at bench scale.
-    val joined = current.join(renamed, keys, "left").ckptLazy()
+    val payload = keysApart(renamed, keys, renamed.columns.filterNot(keys.contains).toSeq)
+    // ONE left join carries the merge, materialized once (LAZY
+    // checkpoint: the existence-check action below computes it, the
+    // final select reuses the persisted blocks). The existence check
+    // derives from the SAME frame (matched delta keys vs delta keys — a
+    // missing key is one the join never hit), and BOTH distinct-key
+    // counts ride ONE Spark action as a two-row union.
+    val joined = current.join(payload, nullSafeOn(keys), "left")
+      .drop(keys.indices.map(i => s"__rk$i"): _*).ckptLazy()
     val keyCols = keys.map(col)
     val counts = joined.filter(col("__hit")).select(keyCols: _*).distinct()
       .agg(count(lit(1)).as("__c")).select(lit("matched").as("__k"), col("__c"))
@@ -73,11 +86,11 @@ object Mutations {
 
   /** Delete by key; missing keys are ignored (stored.rs `rm`). */
   def rm(current: DataFrame, keysDf: DataFrame, keys: Seq[String]): DataFrame =
-    current.join(keysDf.select(keys.map(col): _*).dropDuplicates(), keys, "left_anti")
+    keyFilter(current, keysDf, keys, "left_anti")
 
   /** Delete by key; raises if any key is missing (stored.rs:148). */
   def delete(current: DataFrame, keysDf: DataFrame, keys: Seq[String]): DataFrame = {
-    val missing = keysDf.join(current, keys, "left_anti")
+    val missing = keyFilter(keysDf, current, keys, "left_anti")
     if (!missing.isEmpty)
       throw new IllegalStateException(s"delete: ${missing.count()} key(s) not present")
     rm(current, keysDf, keys)
