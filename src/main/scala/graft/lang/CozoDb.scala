@@ -6,6 +6,7 @@ import graft.operators.Mutations
 import org.apache.spark.sql.{Column, DataFrame, Row, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types._
+import scala.collection.immutable.VectorMap
 import scala.collection.mutable
 import scala.jdk.CollectionConverters._
 
@@ -16,13 +17,20 @@ import scala.jdk.CollectionConverters._
   * relation.rs:553-585, callbacks db.rs:789-830) on Spark terms: a
   * stored relation is a named DataFrame (parquet/delta-backed in
   * production, in-memory registered here) and a script run builds one
-  * Catalyst plan per rule stratum. A relation is an unchanged base plus
-  * a driver-resident write overlay (key → row, or a tombstone): small
-  * `:put`/`:rm`/`:update`/`:insert`/`:delete` writes touch only their
-  * keys in the overlay and run no job beyond an existence probe, and
-  * reads see `base ANTI JOIN overlay keys UNION overlay rows`. A write
-  * the overlay cannot take folds: the base is rewritten through the
-  * key-equi joins of [[graft.operators.Mutations]] and the overlay
+  * Catalyst plan per rule stratum.
+  *
+  * State is one map of immutable [[StoredRelation]] records (rows,
+  * overlay, keys, validity, defaults, access, description, version,
+  * indexes, triggers) plus one cache of index artifacts stamped with
+  * the relation version they were built for. A write or sys op replaces
+  * a record, removal drops it, `::rename` re-keys it, and a transaction
+  * snapshot copies the map. A relation's rows are an unchanged base
+  * plus a driver-resident write overlay (key → row, or a tombstone):
+  * small `:put`/`:rm`/`:update`/`:insert`/`:delete` writes touch only
+  * their keys in the overlay and run no job beyond an existence probe,
+  * and reads see `base ANTI JOIN overlay keys UNION overlay rows`. A
+  * write the overlay cannot take folds: the base is rewritten through
+  * the key-equi joins of [[graft.operators.Mutations]] and the overlay
   * resets.
   *
   * Rule evaluation is stratified bottom-up: rules are grouped into
@@ -35,51 +43,41 @@ import scala.jdk.CollectionConverters._
 class CozoDb(val spark: SparkSession) {
 
   import Compiler.CompileException
-  import CozoDb.Overlay
+  import IndexArtifact._
 
-  /** Each stored relation as its readers see it: the base itself, or
-    * the view over its base and write overlay ([[overlayView]]). */
-  private val relations = mutable.LinkedHashMap.empty[String, DataFrame]
-  /** Write overlays of the relations that have one (see
-    * [[overlayWrite]]); immutable values, so a snapshot is a map copy. */
-  private val overlays = mutable.HashMap.empty[String, Overlay]
-  private val relationKeys = mutable.HashMap.empty[String, Seq[String]]
-  private val putTriggers = mutable.HashMap.empty[String, List[DataFrame => Unit]]
-  private val rmTriggers = mutable.HashMap.empty[String, List[DataFrame => Unit]]
+  /** Every stored relation by name (see [[StoredRelation]]). */
+  private val records = mutable.LinkedHashMap.empty[String, StoredRelation]
 
-  private val relationValidity = mutable.HashMap.empty[String, String]
-  private val relationAssert = mutable.HashMap.empty[String, String]
-  /** Declared column order and per-column default generators from the
-    * `:create` schema braces (relation.rs:114-118 default_gen): puts
-    * that omit a declared column get its default (or null). */
-  private val relationDeclared = mutable.HashMap.empty[String, Seq[String]]
-  private val relationDefaults = mutable.HashMap.empty[String, Map[String, Expr]]
+  private def stored(name: String): StoredRelation =
+    records.getOrElse(name, throw CompileException(s"stored relation *$name not found"))
+  private def update(name: String)(f: StoredRelation => StoredRelation): Unit =
+    records(name) = f(stored(name))
 
   /** Register a stored relation. A validity column (+ optional assert
     * flag column) makes the relation time-travelable: both become part
     * of the logical key, so puts append VERSIONS instead of replacing
     * (the reference models both as one trailing Validity key column,
-    * data/value.rs:112-131). */
+    * data/value.rs:112-131). Re-registering a name replaces its rows,
+    * keys and validity, and keeps its other metadata. */
   def registerTable(name: String, df: DataFrame, keys: Seq[String] = Nil,
                     validity: Option[String] = None,
                     validityAssert: Option[String] = None): Unit = {
-    relations(name) = df
-    overlays.remove(name)
-    dropRelationIndexCaches(name)
-    bumpVersion(name)
-    relationKeys(name) = if (keys.nonEmpty) keys else df.columns.toSeq
     validity.foreach { v =>
       if (!df.columns.contains(v))
         throw CompileException(s"validity column $v not in $name")
-      relationValidity(name) = v
     }
     validityAssert.foreach { a =>
       if (validity.isEmpty)
         throw CompileException(s"assert column $a requires a validity column")
       if (!df.columns.contains(a))
         throw CompileException(s"assert column $a not in $name")
-      relationAssert(name) = a
     }
+    dropRelationIndexCaches(name)
+    val r = StoredRelation(df, if (keys.nonEmpty) keys else df.columns.toSeq,
+      versionCounter.incrementAndGet(), validity = validity, assertCol = validityAssert)
+    records(name) = records.get(name).fold(r)(_.copy(view = r.view, keys = r.keys,
+      version = r.version, overlay = None, validity = validity,
+      assertCol = validityAssert, bare = false))
   }
 
   /** `*rel[...] @ t` (StoredWithValidityRA, data/value.rs:112-131,
@@ -88,12 +86,11 @@ class CozoDb(val spark: SparkSession) {
     * identical timestamps the assert outranks the retract, matching the
     * reference's (Reverse(ts), Reverse(is_assert)) key order. */
   private def validityScan(name: String, asOf: org.apache.spark.sql.Column): DataFrame = {
-    val vcol = relationValidity.getOrElse(name,
+    val r = records.get(name).filter(_.validity.isDefined).getOrElse(
       throw CompileException(s"relation *$name has no validity column (register with validity=...)"))
-    val acol = relationAssert.get(name)
+    val (vcol, acol) = (r.validity.get, r.assertCol)
     val df = relation(name)
-    val keys = relationKeys.getOrElse(name, df.columns.toSeq)
-      .filterNot(c => c == vcol || acol.contains(c))
+    val keys = r.keys.filterNot(c => c == vcol || acol.contains(c))
     graft.operators.TimeTravel.asOf(df, keys, vcol, asOf.cast("timestamp"),
       assertCol = acol, tieBreak = acol.toSeq)
   }
@@ -103,10 +100,10 @@ class CozoDb(val spark: SparkSession) {
     * "ASSERT"/"RETRACT" means now, an RFC3339 timestamp asserts at that
     * instant, and a `~`-prefixed RFC3339 timestamp retracts; the assert
     * flag column defaults to true when absent. */
-  private def coerceValidity(rel: String, delta: DataFrame): DataFrame =
-    relationValidity.get(rel) match {
+  private def coerceValidity(rel: String, validity: Option[String], acol: Option[String],
+                             delta: DataFrame): DataFrame =
+    validity match {
       case Some(vcol) if delta.columns.contains(vcol) =>
-        val acol = relationAssert.get(rel)
         val withVld = delta.schema(vcol).dataType match {
           case StringType =>
             val isNowOp = col(vcol) === "ASSERT" || col(vcol) === "RETRACT"
@@ -155,28 +152,16 @@ class CozoDb(val spark: SparkSession) {
 
   def relation(name: String): DataFrame = {
     requireAccess(name, "read_only", "read")
-    relations.getOrElse(name, indexes.get(name) match {
-      case Some(spec) => indexInternals(name, spec)
-      case None => throw CompileException(s"stored relation *$name not found")
-    })
+    records.get(name).map(_.view)
+      .orElse(indexSpec(name).map(indexInternals(name, _)))
+      .getOrElse(throw CompileException(s"stored relation *$name not found"))
   }
-  def relationNames: Seq[String] = relations.keys.toSeq
-  /** Drop a relation AND all of its per-relation metadata. Leaving
-    * validity/assert/declared/defaults behind made a recreated relation
-    * of the same name silently inherit validity coercion (phantom
-    * assert columns, bogus sentinel errors on ordinary array values). */
+  def relationNames: Seq[String] = records.keys.toSeq
+  /** Drop a relation with all of its metadata, indexes and cached
+    * index artifacts. */
   def removeRelation(name: String): Unit = {
     dropRelationIndexCaches(name)
-    forgetVersion(name)
-    relations.remove(name); overlays.remove(name); relationKeys.remove(name)
-    relationValidity.remove(name); relationAssert.remove(name)
-    relationDeclared.remove(name); relationDefaults.remove(name)
-    bareCreates.remove(name)
-    putTriggers.remove(name); rmTriggers.remove(name)
-    scriptTriggers.remove(name)
-    relationAccess.remove(name); relationDescriptions.remove(name)
-    indexes.filterInPlace { case (_, s) => s.rel != name }
-    indexCreateTexts.filterInPlace { case (t, _) => indexes.contains(t) }
+    records.remove(name)
   }
 
   /** Export stored relations as DataFrames (db.rs:448-474
@@ -194,33 +179,37 @@ class CozoDb(val spark: SparkSession) {
     * (db.rs:644-700 backup_db). */
   def backup(dir: String): Unit = {
     new java.io.File(dir).mkdirs()
-    relations.foreach { case (n, df) =>
-      df.write.mode("overwrite").parquet(s"$dir/$n.parquet")
-    }
+    records.foreach { case (n, r) => r.view.write.mode("overwrite").parquet(s"$dir/$n.parquet") }
     // manifest rows: name, keys, validity column, assert column — so a
     // restore round-trips time-travel registration, not just data
-    val manifest = relations.keys.map { n =>
-      s"$n\t${relationKeys.getOrElse(n, Nil).mkString(",")}" +
-        s"\t${relationValidity.getOrElse(n, "")}\t${relationAssert.getOrElse(n, "")}"
+    val manifest = records.map { case (n, r) =>
+      s"$n\t${r.keys.mkString(",")}\t${r.validity.getOrElse("")}\t${r.assertCol.getOrElse("")}"
     }.mkString("\n")
     java.nio.file.Files.writeString(java.nio.file.Paths.get(s"$dir/_keys.tsv"), manifest)
-    // DDL side-manifest: index create statements (replayed on restore),
-    // script triggers, and non-default access levels — the reference's
-    // backup_db carries all three inside the storage snapshot
-    // (db.rs:644-700); bodies are base64ed so multiline scripts stay
-    // one TSV row
-    def b64(s: String) =
-      java.util.Base64.getEncoder.encodeToString(s.getBytes("UTF-8"))
-    val ddl =
-      indexCreateTexts.map { case (t, s) => s"IDX\t$t\t${b64(s)}" } ++
-      scriptTriggers.flatMap { case (rel, (puts, rms, reps)) =>
-        puts.map(q => s"TRG\t$rel\tput\t${b64(q)}") ++
-          rms.map(q => s"TRG\t$rel\trm\t${b64(q)}") ++
-          reps.map(q => s"TRG\t$rel\treplace\t${b64(q)}")
-      } ++
-      relationAccess.collect { case (rel, lvl) if lvl != "normal" =>
-        s"ACC\t$rel\t$lvl"
-      }
+    // DDL side-manifest, base64ed so multiline scripts stay one TSV row:
+    // index create statements (replayed on restore, before any access
+    // level applies), script triggers, access levels, descriptions, and
+    // declared columns with their Java-serialized default generators —
+    // the reference's backup_db keeps them in the storage snapshot
+    // (db.rs:644-700)
+    def b64(bytes: Array[Byte]) = java.util.Base64.getEncoder.encodeToString(bytes)
+    def b64s(s: String) = b64(s.getBytes("UTF-8"))
+    def ser(o: AnyRef) = {
+      val bytes = new java.io.ByteArrayOutputStream()
+      scala.util.Using.resource(new java.io.ObjectOutputStream(bytes))(_.writeObject(o))
+      b64(bytes.toByteArray)
+    }
+    val ddl = records.values.toSeq.flatMap(_.indexes.map { case (t, (_, text)) =>
+      s"IDX\t$t\t${b64s(text)}"
+    }) ++ records.toSeq.flatMap { case (rel, r) =>
+      val (puts, rms, reps) = r.triggers
+      puts.map(q => s"TRG\t$rel\tput\t${b64s(q)}") ++
+        rms.map(q => s"TRG\t$rel\trm\t${b64s(q)}") ++
+        reps.map(q => s"TRG\t$rel\treplace\t${b64s(q)}") ++
+        Option.when(r.access != "normal")(s"ACC\t$rel\t${r.access}") ++
+        Option.when(r.description.nonEmpty)(s"DESC\t$rel\t${b64s(r.description)}") ++
+        Option.when(r.declared.nonEmpty)(s"DEF\t$rel\t${ser((r.declared, r.defaults))}")
+    }
     java.nio.file.Files.writeString(java.nio.file.Paths.get(s"$dir/_ddl.tsv"),
       ddl.mkString("\n"))
   }
@@ -240,19 +229,26 @@ class CozoDb(val spark: SparkSession) {
     }
     val ddlPath = java.nio.file.Paths.get(s"$dir/_ddl.tsv")
     if (java.nio.file.Files.exists(ddlPath)) {
-      def unb64(s: String) = new String(java.util.Base64.getDecoder.decode(s), "UTF-8")
+      def unb64(s: String) = java.util.Base64.getDecoder.decode(s)
+      def unb64s(s: String) = new String(unb64(s), "UTF-8")
       java.nio.file.Files.readString(ddlPath).split("\n").filter(_.nonEmpty).foreach { line =>
         line.split("\t", -1) match {
-          case Array("IDX", _, b) => run(unb64(b))
-          case Array("TRG", rel, kind, b) =>
-            val (p, r, rp) = scriptTriggers.getOrElse(rel, (Nil, Nil, Nil))
-            val q = unb64(b)
-            scriptTriggers(rel) = kind match {
-              case "put" => (p :+ q, r, rp)
-              case "rm" => (p, r :+ q, rp)
-              case _ => (p, r, rp :+ q)
-            }
-          case Array("ACC", rel, lvl) => relationAccess(rel) = lvl
+          case Array("IDX", _, b) => run(unb64s(b))
+          case Array("TRG", rel, kind, b) => update(rel) { r =>
+            val (p, rm, rp) = r.triggers
+            val q = unb64s(b)
+            r.copy(triggers = kind match {
+              case "put" => (p :+ q, rm, rp)
+              case "rm" => (p, rm :+ q, rp)
+              case _ => (p, rm, rp :+ q)
+            })
+          }
+          case Array("ACC", rel, lvl) => update(rel)(_.copy(access = lvl))
+          case Array("DESC", rel, b) => update(rel)(_.copy(description = unb64s(b)))
+          case Array("DEF", rel, b) =>
+            val in = new java.io.ObjectInputStream(new java.io.ByteArrayInputStream(unb64(b)))
+            val (declared, defaults) = in.readObject().asInstanceOf[(Seq[String], Map[String, Expr])]
+            update(rel)(_.copy(declared = declared, defaults = defaults))
           case _ => ()
         }
       }
@@ -262,24 +258,16 @@ class CozoDb(val spark: SparkSession) {
   /** Programmatic mutations through the same path scripts use — they
     * coerce validity payloads, fire triggers/callbacks, and bump index
     * epochs (used by the streaming bridge, Streaming.intoRelation). */
-  def put(rel: String, delta: DataFrame): Unit = { relationMutation("put", rel, Nil, delta); () }
-  def rm(rel: String, delta: DataFrame): Unit = { relationMutation("rm", rel, Nil, delta); () }
+  def put(rel: String, delta: DataFrame): Unit = { relationMutation("put", rel, SchemaSpec(), delta); () }
+  def rm(rel: String, delta: DataFrame): Unit = { relationMutation("rm", rel, SchemaSpec(), delta); () }
 
   /** Register a trigger fired after a put/rm mutation on `rel` with the
     * mutation delta (relation.rs:553-585). */
-  def onPut(rel: String)(f: DataFrame => Unit): Unit =
-    putTriggers(rel) = f :: putTriggers.getOrElse(rel, Nil)
-  def onRm(rel: String)(f: DataFrame => Unit): Unit =
-    rmTriggers(rel) = f :: rmTriggers.getOrElse(rel, Nil)
+  def onPut(rel: String)(f: DataFrame => Unit): Unit = update(rel)(r => r.copy(onPut = f :: r.onPut))
+  def onRm(rel: String)(f: DataFrame => Unit): Unit = update(rel)(r => r.copy(onRm = f :: r.onRm))
 
   // ——————————— script triggers + change callbacks (db.rs:789-830) ———————————
 
-  /** Per-relation CozoScript trigger texts (put, rm, replace), set via
-    * `::set_triggers rel on put { … } on rm { … }` — each text runs as a
-    * query with `_new` / `_old` bound as const rules
-    * (query/stored.rs:696-737). */
-  private val scriptTriggers =
-    mutable.HashMap.empty[String, (List[String], List[String], List[String])]
   private val changeCallbacks =
     mutable.LinkedHashMap.empty[Int, (String, (String, DataFrame, DataFrame) => Unit)]
   private var nextCallbackId = 0
@@ -301,10 +289,13 @@ class CozoDb(val spark: SparkSession) {
 
   private def fireMutation(rel: String, kind: String,
                            newDf: DataFrame, oldDf: DataFrame): Unit = {
-    if (kind == "put") putTriggers.getOrElse(rel, Nil).foreach(_(newDf))
-    if (kind == "rm") rmTriggers.getOrElse(rel, Nil).foreach(_(newDf))
+    val r = stored(rel)
+    if (kind == "put") r.onPut.foreach(_(newDf))
+    if (kind == "rm") r.onRm.foreach(_(newDf))
     if (!inTrigger) {
-      val (puts, rms, reps) = scriptTriggers.getOrElse(rel, (Nil, Nil, Nil))
+      // script triggers (`::set_triggers`) run as queries with `_new` /
+      // `_old` bound as const rules (query/stored.rs:696-737)
+      val (puts, rms, reps) = r.triggers
       val texts = kind match {
         case "put" => puts
         case "rm" => rms
@@ -328,8 +319,9 @@ class CozoDb(val spark: SparkSession) {
 
   /** A driver-side transaction over the relation registry: statements
     * see their own writes; `abort` restores the pre-transaction state
-    * exactly (DataFrames are immutable plans, so the snapshot is map
-    * copies, not data copies). Weaker isolation than the reference's
+    * exactly (relation records are immutable values over immutable
+    * DataFrame plans, so the snapshot is a copy of the record map, not
+    * of data). Weaker isolation than the reference's
     * MVCC — concurrent readers of this CozoDb observe uncommitted
     * writes — as documented in the build survey.
     *
@@ -338,14 +330,7 @@ class CozoDb(val spark: SparkSession) {
     * cleanup for the whole session (temps are tx-scoped, db.rs:298).
     * Prefer [[transact]], which closes in a finally. */
   final class Transaction private[CozoDb] () {
-    private val snapRelations = relations.clone()
-    private val snapOverlays = overlays.clone()
-    private val snapKeys = relationKeys.clone()
-    private val snapValidity = relationValidity.clone()
-    private val snapAssert = relationAssert.clone()
-    private val snapIndexes = indexes.clone()
-    private val snapIndexTexts = indexCreateTexts.clone()
-    private val snapTriggers = scriptTriggers.clone()
+    private val snapshot = records.clone()
     private var done = false
     openTxCount.incrementAndGet()
     def run(script: String, params: Map[String, Any] = Map.empty): DataFrame = {
@@ -363,24 +348,14 @@ class CozoDb(val spark: SparkSession) {
     def commit(): Unit = if (!done) close()
     def abort(): Unit = {
       if (!done) {
-        val changed = (relations.keySet ++ snapRelations.keySet).filterNot(n =>
-          relations.get(n).exists(df => snapRelations.get(n).exists(_ eq df)))
-        relations.clear(); relations ++= snapRelations
-        overlays.clear(); overlays ++= snapOverlays
-        relationKeys.clear(); relationKeys ++= snapKeys
-        relationValidity.clear(); relationValidity ++= snapValidity
-        relationAssert.clear(); relationAssert ++= snapAssert
-        indexes.clear(); indexes ++= snapIndexes
-        indexCreateTexts.clear(); indexCreateTexts ++= snapIndexTexts
-        scriptTriggers.clear(); scriptTriggers ++= snapTriggers
-        // relations whose rows the transaction changed get a new
-        // version (their index caches were patched to the aborted
-        // state), and indexes it created lose their caches
-        changed.foreach { n =>
-          dropRelationIndexCaches(n)
-          if (relations.contains(n)) bumpVersion(n) else forgetVersion(n)
-        }
-        cachedIndexTargets.filterNot(indexes.contains).foreach(dropIndexCaches)
+        // relations whose rows or indexes the transaction changed lose
+        // their index caches (patched to the aborted state, or built for
+        // an aborted index) and get a new version
+        val changed = (records.keySet ++ snapshot.keySet).filterNot(n =>
+          records.get(n).exists(r => snapshot.get(n).exists(s =>
+            (s.view eq r.view) && (s.indexes eq r.indexes))))
+        records.clear(); records ++= snapshot
+        changed.foreach { n => dropRelationIndexCaches(n); bumpVersion(n) }
         close()
       }
     }
@@ -399,9 +374,6 @@ class CozoDb(val spark: SparkSession) {
 
   // ————— access levels (runtime/relation.rs:122 AccessLevel) —————
 
-  /** hidden < read_only < protected < normal. */
-  private val relationAccess = mutable.HashMap.empty[String, String]
-  private val relationDescriptions = mutable.HashMap.empty[String, String]
   /** Queries currently inside [[run]], for ::running / ::kill (the
     * analogue of the reference's Poison registry, db.rs:1931-1955 —
     * here a Spark job-group cancel). */
@@ -422,7 +394,8 @@ class CozoDb(val spark: SparkSession) {
     case _ => 3
   }
   private def requireAccess(rel: String, need: String, what: String): Unit = {
-    val have = relationAccess.getOrElse(rel, "normal")
+    // hidden < read_only < protected < normal
+    val have = records.get(rel).fold("normal")(_.access)
     if (accessRank(have) < accessRank(need))
       throw new IllegalStateException(
         s"insufficient access level for $what on $rel: $have < $need")
@@ -535,13 +508,12 @@ class CozoDb(val spark: SparkSession) {
         // 671). Column TYPES come from the first data-bearing mutation
         // (relationMutation adopts the delta's schema) — declared types
         // are parsed but Spark schemas come from data.
-        case Some(("create", rel, spec)) if prog.rules.isEmpty && spec.all.nonEmpty =>
-          bareCreates += rel
+        case Some(("create", _, spec)) if prog.rules.isEmpty && spec.all.nonEmpty =>
           spark.createDataFrame(spark.sparkContext.emptyRDD[Row],
             StructType(spec.all.map(c => StructField(c, StringType, nullable = true))))
         case _ => evalProgram(prog, params, preBound)
       }
-      applyOptions(prog.options, result)
+      applyOptions(prog.options, result, bare = prog.rules.isEmpty)
     }
     // :sleep runs AFTER evaluation, before returning (db.rs:903-911)
     prog.options.sleep.foreach { secs =>
@@ -589,11 +561,6 @@ class CozoDb(val spark: SparkSession) {
         out
     }
 
-  /** Relations created schema-only (no rows yet): their placeholder
-    * StringType schema is replaced wholesale by the first data-bearing
-    * mutation's schema. */
-  private val bareCreates = mutable.Set.empty[String]
-
   // ———————————————————————— sys ops (parse/sys.rs) ————————————————————————
 
   private val indexOpRe =
@@ -603,10 +570,7 @@ class CozoDb(val spark: SparkSession) {
     import spark.implicits._
     op match {
       case indexOpRe(kind, sub, target, optsRaw) =>
-        val res = indexOp(kind, sub, target, Option(optsRaw), params)
-        if (sub == "create") indexCreateTexts(target) = "::" + op
-        else indexCreateTexts.remove(target)
-        return res
+        return indexOp(kind, sub, target, Option(optsRaw), params, "::" + op)
       case _ => ()
     }
     if (op.startsWith("set_triggers"))
@@ -614,17 +578,16 @@ class CozoDb(val spark: SparkSession) {
     if (op.startsWith("show_triggers")) {
       val rel = op.stripPrefix("show_triggers").trim.stripPrefix("*")
       relation(rel)
-      val (puts, rms, reps) = scriptTriggers.getOrElse(rel, (Nil, Nil, Nil))
+      val (puts, rms, reps) = stored(rel).triggers
       return (puts.map(("put", _)) ++ rms.map(("rm", _)) ++ reps.map(("replace", _)))
         .toDF("kind", "query")
     }
     val parts = op.split("\\s+").toSeq
     parts.head match {
       case "relations" =>
-        (relations.toSeq.map { case (n, df) =>
-          (n, df.columns.length, relationKeys.getOrElse(n, Nil).mkString(","),
-            relationAccess.getOrElse(n, "normal"), relationDescriptions.getOrElse(n, ""))
-        } ++ indexes.toSeq.collect { case (n, p: PlainIdx) =>
+        (records.toSeq.map { case (n, r) =>
+          (n, r.view.columns.length, r.keys.mkString(","), r.access, r.description)
+        } ++ records.values.toSeq.flatMap(_.indexes).collect { case (n, (p: PlainIdx, _)) =>
           // the reference lists plain indexes among relations with kind
           // "index" (tests.rs:580 test_index_short asserts it)
           (n, indexInternals(n, p).columns.length,
@@ -632,8 +595,9 @@ class CozoDb(val spark: SparkSession) {
         }).sortBy(_._1).toDF("name", "arity", "keys", "access_level", "description")
       case "columns" =>
         val rel = parts(1).stripPrefix("*")
+        val keys = records.get(rel).fold(Seq.empty[String])(_.keys)
         relation(rel).columns.zipWithIndex
-          .map { case (c, i) => (c, i, relationKeys.getOrElse(rel, Nil).contains(c)) }
+          .map { case (c, i) => (c, i, keys.contains(c)) }
           .toSeq.toDF("column", "index", "is_key")
       case "remove" =>
         val rel = parts(1).stripPrefix("*")
@@ -646,10 +610,7 @@ class CozoDb(val spark: SparkSession) {
         if (!Seq("normal", "protected", "read_only", "hidden").contains(level))
           throw CompileException(s"unknown access level $level")
         val rels = parts.drop(2).map(_.stripPrefix("*"))
-        rels.foreach { r =>
-          if (!relations.contains(r)) throw CompileException(s"stored relation *$r not found")
-          relationAccess(r) = level
-        }
+        rels.foreach(update(_)(_.copy(access = level)))
         rels.map((_, level)).toDF("relation", "access_level")
       // ::describe rel 'text' stores documentation (sys.rs DescribeRelation)
       case "describe" =>
@@ -657,7 +618,7 @@ class CozoDb(val spark: SparkSession) {
         relation(rel)
         val desc = op.stripPrefix("describe").trim.stripPrefix(parts(1)).trim
           .stripPrefix("'").stripSuffix("'")
-        relationDescriptions(rel) = desc
+        update(rel)(_.copy(description = desc))
         Seq(("described", rel)).toDF("status", "relation")
       // storage housekeeping is a no-op on immutable parquet state
       case "compact" =>
@@ -667,12 +628,11 @@ class CozoDb(val spark: SparkSession) {
         // lineage and every write overlay into checkpoint blocks, and
         // drop index delta chains so the next probe serves a freshly
         // compacted artifact
-        relationNames.foreach(r => relations(r) = relations(r).ckpt())
-        overlayFolds += overlays.size
-        overlays.clear()
+        overlayFolds += records.values.count(_.overlay.isDefined)
+        records.mapValuesInPlace((_, r) => r.copy(view = r.view.ckpt(), overlay = None))
         indexCacheLock.synchronized {
-          ftsCache.clear(); ftsDeltaCount.clear()
-          lshCache.clear(); lshDeltaCount.clear()
+          indexArtifacts.filterInPlace { case (_, (_, a)) =>
+            !a.isInstanceOf[DistFts] && !a.isInstanceOf[LshBands] }
         }
         Seq(Tuple1("ok")).toDF("status")
       case "running" =>
@@ -697,7 +657,7 @@ class CozoDb(val spark: SparkSession) {
           .toDF("name", "arity")
       case "indices" =>
         val rel = parts(1).stripPrefix("*")
-        indexes.toSeq.collect { case (n, s) if s.rel == rel =>
+        records.get(rel).toSeq.flatMap(_.indexes).map { case (n, (s, _)) =>
           (n, s match {
             case _: FtsIdx => "fts"; case _: LshIdx => "lsh"
             case _: VecIdx => "hnsw"; case _: PlainIdx => "index"
@@ -706,16 +666,13 @@ class CozoDb(val spark: SparkSession) {
       case "rename" =>
         // ::rename old new (parse/sys.rs rename_relations_op)
         val (from, to) = (parts(1).stripPrefix("*"), parts(2).stripPrefix("*"))
-        if (relations.contains(to))
+        // the record moves whole; indexes over the old name are dropped
+        if (records.contains(to))
           throw new IllegalStateException(s"::rename — relation $to already exists")
-        val df = relation(from)
-        val keys = relationKeys.getOrElse(from, df.columns.toSeq)
-        val validity = relationValidity.get(from)
-        val vassert = relationAssert.get(from)
+        relation(from) // must exist and be readable
+        val r = stored(from)
         removeRelation(from)
-        relationValidity.remove(from)
-        relationAssert.remove(from)
-        registerTable(to, df, keys, validity, vassert)
+        records(to) = r.copy(indexes = VectorMap.empty, version = versionCounter.incrementAndGet())
         Seq(("renamed", from, to)).toDF("status", "from", "to")
       case "explain" =>
         val inner = op.stripPrefix("explain").trim.stripPrefix("{").stripSuffix("}")
@@ -775,7 +732,7 @@ class CozoDb(val spark: SparkSession) {
       }
       ws()
     }
-    scriptTriggers(rel) = (puts, rms, reps)
+    update(rel)(_.copy(triggers = (puts, rms, reps)))
     Seq(("ok", rel, puts.length.toLong, rms.length.toLong, reps.length.toLong))
       .toDF("status", "relation", "put_triggers", "rm_triggers", "replace_triggers")
   }
@@ -878,119 +835,72 @@ class CozoDb(val spark: SparkSession) {
 
   // ———————————————— indexes (parse/sys.rs:391-655) ————————————————
 
-  private sealed trait IndexSpec { def rel: String }
-  /** `extractFilter` = the reference's extract_filter option
-    * (parse/sys.rs:374-382): rows failing the condition extract
-    * nothing and are absent from the index (the reference wraps the
-    * extractor in `if(cond, extractor)`). */
-  private case class FtsIdx(rel: String, extractor: String,
-                            pipe: graft.search.Fts.Pipeline,
-                            extractFilter: Option[Expr] = None) extends IndexSpec
-  /** LSH shingles are TOKEN n-grams through `pipe` — the reference's
-    * unique_ngrams (tokenizer_impl.rs:105-123), not char n-grams. */
-  private case class LshIdx(rel: String, extractor: String,
-                            pipe: graft.search.Fts.Pipeline, nGram: Int,
-                            threshold: Double, bands: Int, rowsPerBand: Int,
-                            extractFilter: Option[Expr] = None) extends IndexSpec
-  /** `fields` may list several vector columns (multi_index_vec,
-    * hnsw_index in runtime/tests.rs): the reference indexes every
-    * field's vector; a probe matches a row through its CLOSEST field. */
-  private case class VecIdx(rel: String, fields: Seq[String], distance: String,
-                            filter: Option[Expr] = None,
-                            dim: Option[Int] = None,
-                            m: Option[Int] = None,
-                            efConstruction: Option[Int] = None,
-                            extendCandidates: Boolean = false,
-                            keepPruned: Boolean = false) extends IndexSpec
-  private case class PlainIdx(rel: String, cols: Seq[String]) extends IndexSpec
+  /** The spec of index `target` (`rel:idx`). */
+  private def indexSpec(target: String): Option[IndexSpec] =
+    records.get(target.takeWhile(_ != ':')).flatMap(_.indexes.get(target)).map(_._1)
 
-  private val indexes = mutable.LinkedHashMap.empty[String, IndexSpec]
-  /** The raw `::… create` statement for every live index, so backup can
-    * round-trip index DEFINITIONS by replaying them on restore (the
-    * reference's backup_db persists index state with the storage,
-    * db.rs:644-700 — replay reaches the same post-restore behavior
-    * without a second serialization format for IndexSpec). */
-  private val indexCreateTexts = mutable.LinkedHashMap.empty[String, String]
-  /** Per-relation data version, drawn from one counter so a number is
-    * never reused — not even by a removed and re-created relation.
-    * Bumped on every change of a relation's rows: a mutation, a
+  /** Draws every relation version, so a number is never reused — not
+    * even by a removed and re-created relation. A relation gets a new
+    * version on every change of its rows: a mutation, a
     * (re-)registration (`:create`/`:replace`, [[registerTable]],
-    * [[importRelations]], [[restore]], `::rename`), and a transaction
-    * abort that restores it; forgotten on removal. Every index artifact
-    * caches against the version of ITS OWN relation, so a write to one
-    * relation never rebuilds or reloads another relation's index. A
-    * probe after a put sees the new rows (the reference updates indexes
-    * inside the mutating tx, stored.rs:322-328): the mutation patches
-    * the cached artifact, or the next probe rebuilds it. */
-  private val relationVersions = mutable.HashMap.empty[String, Long]
+    * [[importRelations]], [[restore]]), `::rename`, and a transaction
+    * abort that restores it. Every index artifact caches against the
+    * version of ITS OWN relation, so a write to one relation never
+    * rebuilds or reloads another relation's index. A probe after a put
+    * sees the new rows (the reference updates indexes inside the
+    * mutating tx, stored.rs:322-328): the mutation patches the cached
+    * artifact, or the next probe rebuilds it. */
   private val versionCounter = new java.util.concurrent.atomic.AtomicLong(0)
-  private def versionOf(rel: String): Long =
-    indexCacheLock.synchronized(relationVersions.getOrElse(rel, 0L))
-  private def forgetVersion(rel: String): Unit =
-    indexCacheLock.synchronized(relationVersions.remove(rel))
-  private def bumpVersion(rel: String): Long = indexCacheLock.synchronized {
+  private def versionOf(rel: String): Long = records.get(rel).fold(0L)(_.version)
+  private def bumpVersion(rel: String): Long = {
     val v = versionCounter.incrementAndGet()
-    relationVersions(rel) = v
+    records.get(rel).foreach(r => records(rel) = r.copy(version = v))
     v
   }
-  /** Guards the probe-time get-or-build of every index cache: cache
+  /** Guards the probe-time get-or-build of the artifact cache: cache
     * fills happen under the SHARED read lock (concurrent readers), so
     * they need their own monitor; mutation-path refreshes run under
     * the exclusive write lock and take this monitor too for the same
     * happens-before edge. */
   private val indexCacheLock = new Object
-  /** Driver-resident indexes. An FTS or walkable HNSW index whose
-    * estimated heap footprint is at most [[driverIndexGateBytes]] (a
-    * [[graft.plan.Knee.gate]] decision per build, logged as
+  /** The artifact of every index target that has one, stamped with the
+    * relation version it was built for. An FTS or walkable HNSW index
+    * whose estimated heap footprint is at most [[driverIndexGateBytes]]
+    * (a [[graft.plan.Knee.gate]] decision per build, logged as
     * `op=fts_index|hnsw_index`) is held on the driver: FTS as
     * [[graft.search.DriverFts]] maps, HNSW as the same 32 hash-bucket
     * graphs the distributed build writes ([[graft.similarity.HnswBuckets]]).
     * A probe then walks driver memory — no Spark job for the index
     * side — and a mutation patches the index in place from the changed
-    * rows. Larger indexes take the distributed caches below, unchanged.
-    * Both branches return the same results (DriverIndexSpec). */
-  private val ftsDriver = mutable.HashMap.empty[String, (Long, graft.search.DriverFts)]
-  private val hnswDriver = mutable.HashMap.empty[String, (Long, graft.similarity.HnswBuckets)]
+    * rows. Larger indexes are distributed: FTS postings, LSH band tables
+    * (minhash signatures are pure per-document state) and persisted
+    * HNSW graphs, restored once per version for probes to walk. Both
+    * branches return the same results (DriverIndexSpec). */
+  private val indexArtifacts = mutable.HashMap.empty[String, (Long, IndexArtifact)]
   /** The driver-index byte gate: 1/16 of the driver heap. Tests set a
     * negative value to pin the distributed branch. */
   private[lang] var driverIndexGateBytes: Long = Runtime.getRuntime.maxMemory / 16
-  /** Distributed FTS indexes (postings/lens DataFrames). */
-  private val ftsCache = mutable.HashMap.empty[String, (Long, graft.search.Fts.Index)]
-  /** Cached per-document LSH band table (key, band) — minhash
-    * signatures are the expensive part of a `~rel:lsh` probe and are
-    * pure per-document state, so they persist across probes and absorb
-    * mutations as deltas exactly like the FTS postings. */
-  private val lshCache = mutable.HashMap.empty[String, (Long, DataFrame)]
-  /** Persisted partition-local HNSW graphs for `::hnsw create ... m:`
-    * indexes above the driver gate (Ann.hnswWriteIndex artifacts),
-    * keyed like the FTS/LSH caches: built once per relation version,
-    * probes restore and walk the graphs instead of rebuilding them per
-    * probe (the reference builds its graph at create time and walks it
-    * per probe). */
-  private val hnswGraphCache = mutable.HashMap.empty[String, (Long, String)]
-  /** RESTORED graphs ([[graft.similarity.Ann.hnswLoadIndex]]) per
-    * index, version-keyed like the artifact cache: the index-sized
-    * restore shuffle is paid once per version, after which every probe
-    * walks executor-cached graphs with zero further shuffle or I/O. */
-  private val hnswLoadedCache =
-    mutable.HashMap.empty[String, (Long, org.apache.spark.rdd.RDD[graft.similarity.HnswIndex])]
+
+  /** The artifact of `target` if it was built for version `ver`. */
+  private def cachedAt(target: String, ver: Long): Option[IndexArtifact] =
+    indexArtifacts.get(target).collect { case (v, a) if v == ver => a }
 
   /** Targets holding any cached artifact, and the persisted HNSW graph
     * directories (test hooks for cache cleanup). */
-  private[lang] def cachedIndexTargets: Set[String] = indexCacheLock.synchronized {
-    (ftsDriver.keySet ++ hnswDriver.keySet ++ ftsCache.keySet ++ lshCache.keySet ++
-      hnswGraphCache.keySet ++ hnswLoadedCache.keySet).toSet
-  }
-  private[lang] def indexArtifactDirs: Seq[String] =
-    indexCacheLock.synchronized(hnswGraphCache.values.map(_._2).toSeq)
+  private[lang] def cachedIndexTargets: Set[String] =
+    indexCacheLock.synchronized(indexArtifacts.keySet.toSet)
+  private[lang] def indexArtifactDirs: Seq[String] = indexCacheLock.synchronized(
+    indexArtifacts.values.collect { case (_, DistHnsw(dir, _)) => dir }.toSeq)
 
-  /** Drop every cached artifact of one index: driver maps, FTS/LSH
-    * frames, HNSW graph dirs and executor-cached graph RDDs. */
+  /** Drop the cached artifact of one index, with the executor-cached
+    * graphs and the graph directory of a distributed HNSW index. */
   private def dropIndexCaches(target: String): Unit = indexCacheLock.synchronized {
-    ftsDriver.remove(target); hnswDriver.remove(target)
-    ftsCache.remove(target); ftsDeltaCount.remove(target)
-    lshCache.remove(target); lshDeltaCount.remove(target)
-    dropHnswGraph(target)
+    indexArtifacts.remove(target).foreach {
+      case (_, DistHnsw(dir, loaded)) =>
+        loaded.foreach(_.unpersist(blocking = false))
+        scala.util.Try(org.apache.commons.io.FileUtils.deleteDirectory(new java.io.File(dir)))
+      case _ => ()
+    }
   }
 
   /** Drop the cached artifacts of every index over `rel`, including
@@ -998,17 +908,15 @@ class CozoDb(val spark: SparkSession) {
   private def dropRelationIndexCaches(rel: String): Unit =
     cachedIndexTargets.filter(_.takeWhile(_ != ':') == rel).foreach(dropIndexCaches) // rel:name
 
-  /** The restored graphs of a distributed walk-eligible index, cached
-    * per relation version. */
-  private def hnswLoadedGraphs(target: String, v: VecIdx, dir: String)
+  /** The restored graphs of a distributed walk-eligible index, kept in
+    * its artifact until a patch or a rebuild replaces it. */
+  private def hnswLoadedGraphs(target: String, dir: String)
       : org.apache.spark.rdd.RDD[graft.similarity.HnswIndex] = indexCacheLock.synchronized {
-    val ver = versionOf(v.rel)
-    hnswLoadedCache.get(target) match {
-      case Some((vv, rdd)) if vv == ver => rdd
-      case stale =>
-        stale.foreach { case (_, old) => old.unpersist(blocking = false) }
+    indexArtifacts.get(target) match {
+      case Some((_, DistHnsw(_, Some(rdd)))) => rdd
+      case entry =>
         val rdd = graft.similarity.Ann.hnswLoadIndex(spark, dir)
-        hnswLoadedCache(target) = (ver, rdd)
+        entry.foreach { case (ver, _) => indexArtifacts(target) = (ver, DistHnsw(dir, Some(rdd))) }
         indexGraphLoads += 1
         rdd
     }
@@ -1084,13 +992,14 @@ class CozoDb(val spark: SparkSession) {
   private def hnswIndexOf(target: String, v: VecIdx)
       : Either[graft.similarity.HnswBuckets, String] = indexCacheLock.synchronized {
     val ver = versionOf(v.rel)
-    hnswDriver.get(target).collect { case (vv, b) if vv == ver => Left(b) }
-      .orElse(hnswGraphCache.get(target).collect { case (vv, d) if vv == ver => Right(d) })
-      .getOrElse {
+    cachedAt(target, ver) match {
+      case Some(DriverHnsw(b)) => Left(b)
+      case Some(DistHnsw(d, _)) => Right(d)
+      case _ =>
         // reclaim the superseded version's artifacts before rebuilding
         // (long sessions with many mutations would otherwise
         // accumulate dead graph dirs)
-        dropHnswGraph(target)
+        dropIndexCaches(target)
         val corpus = hnswCorpus(v, hnswAdmitted(v), keyColOf(v.rel))
         val (mEff, efcEff) = hnswBuildParams(v)
         val metric = hnswWalkMetric(v.distance).get
@@ -1104,17 +1013,17 @@ class CozoDb(val spark: SparkSession) {
               .map(r => (r.getLong(0), r.getSeq[Float](1).toArray)),
             mEff, efcEff, metric = metric,
             extendCandidates = v.extendCandidates, keepPruned = v.keepPruned)
-          hnswDriver(target) = (ver, b)
+          indexArtifacts(target) = (ver, DriverHnsw(b))
           indexDriverBuilds += 1
           Left(b)
         } else {
           val d = java.nio.file.Files.createTempDirectory("graft_hnsw").toString
           graft.similarity.Ann.hnswWriteIndex(d, corpus, mEff, efcEff, metric = metric,
             extendCandidates = v.extendCandidates, keepPruned = v.keepPruned)
-          hnswGraphCache(target) = (ver, d)
+          indexArtifacts(target) = (ver, DistHnsw(d, None))
           Right(d)
         }
-      }
+    }
   }
 
   /** The graph node ids a set of changed KEYS touches: one per field. */
@@ -1139,11 +1048,8 @@ class CozoDb(val spark: SparkSession) {
         case _ => false
       })
 
-  private def keyColOf(rel: String): String =
-    relationKeys.getOrElse(rel, relation(rel).columns.toSeq).head
+  private def keyColOf(rel: String): String = stored(rel).keys.head
 
-  /** `(1/b)^(1/r) ≈ threshold` — the banding curve's midpoint
-    * (minhash_lsh.rs:260-289 find_optimal_params, discrete version). */
   /** find_optimal_params (minhash_lsh.rs:259-289, itself adapted from
     * the MIT-licensed rust-minhash): choose (bands, rows) with
     * b·r ≤ nPerm minimizing the weighted false-positive +
@@ -1186,42 +1092,40 @@ class CozoDb(val spark: SparkSession) {
     * distributed postings/lens frames. */
   private def ftsIndex(target: String, spec: FtsIdx)
       : Either[graft.search.DriverFts, graft.search.Fts.Index] = indexCacheLock.synchronized {
-    import graft.search.DriverFts
     val ver = versionOf(spec.rel)
-    ftsDriver.get(target).collect { case (v, d) if v == ver => Left(d) }
-      .orElse(ftsCache.get(target).collect { case (v, ix) if v == ver => Right(ix) })
-      .getOrElse {
-        ftsDriver.remove(target); ftsCache.remove(target)
+    cachedAt(target, ver) match {
+      case Some(DriverFts(d)) => Left(d)
+      case Some(DistFts(ix, _)) => Right(ix)
+      case _ =>
+        dropIndexCaches(target)
         val key = keyColOf(spec.rel)
         val docs = extractFiltered(relation(spec.rel), spec.extractor, spec.extractFilter)
         indexFullBuilds += 1
         val driver = singleKey(spec.rel) && {
           val st = docs.agg(count(lit(1)), sum(length(col(spec.extractor)))).head()
           val chars = if (st.isNullAt(1)) 0L else st.getLong(1)
-          graft.plan.Knee.gate("fts_index",
-            DriverFts.estimateBytes(st.getLong(0), DriverFts.tokenBound(chars, spec.pipe)),
+          graft.plan.Knee.gate("fts_index", graft.search.DriverFts.estimateBytes(
+            st.getLong(0), graft.search.DriverFts.tokenBound(chars, spec.pipe)),
             driverIndexGateBytes)
         }
         if (driver) {
-          val d = DriverFts.empty(spec.pipe).patch(Nil,
-            DriverFts.tokenRows(DriverFts.docTokens(docs, key, spec.extractor, spec.pipe)
-              .collect().toSeq))
-          ftsDriver(target) = (ver, d)
+          val d = graft.search.DriverFts.empty(spec.pipe).patch(Nil,
+            graft.search.DriverFts.tokenRows(graft.search.DriverFts.docTokens(
+              docs, key, spec.extractor, spec.pipe).collect().toSeq))
+          indexArtifacts(target) = (ver, DriverFts(d))
           indexDriverBuilds += 1
           Left(d)
         } else {
           val ix = graft.search.Fts.Index.build(docs, key, spec.extractor, spec.pipe)
-          ftsCache(target) = (ver, ix)
-          ftsDeltaCount(target) = 0
+          indexArtifacts(target) = (ver, DistFts(ix, 0))
           Right(ix)
         }
-      }
+    }
   }
 
   /** The relation is keyed by exactly one column, so its key column
     * identifies a row (the driver indexes map key → document). */
-  private def singleKey(rel: String): Boolean =
-    relationKeys.getOrElse(rel, relation(rel).columns.toSeq).lengthIs == 1
+  private def singleKey(rel: String): Boolean = stored(rel).keys.lengthIs == 1
 
   /** extract_filter semantics (parse/sys.rs:374-382): rows failing
     * the condition get a NULL extractor value — no tokens, no
@@ -1254,13 +1158,12 @@ class CozoDb(val spark: SparkSession) {
 
   private def lshBandTable(target: String, l: LshIdx): DataFrame = indexCacheLock.synchronized {
     val ver = versionOf(l.rel)
-    lshCache.get(target) match {
-      case Some((v, df)) if v == ver => df
+    cachedAt(target, ver) match {
+      case Some(LshBands(df, _)) => df
       case _ =>
         val df = lshBandsOf(relation(l.rel), keyColOf(l.rel), l).ckptLazy()
-        lshCache(target) = (ver, df)
+        indexArtifacts(target) = (ver, LshBands(df, 0))
         indexFullBuilds += 1 // shared observability counter for tests
-        lshDeltaCount(target) = 0
         df
     }
   }
@@ -1364,16 +1267,13 @@ class CozoDb(val spark: SparkSession) {
       // non-walkable vector index (no m:, non-integral key, …): no
       // graph exists, so the scannable surface is the flat admitted
       // set (key, vectors) — a semantic subset of the reference's
-      val admitted = v.filter.fold(relation(v.rel))(e =>
-        relation(v.rel).filter(compiler(_ => None, Map.empty).compileExpr(e)))
-      admitted.select(col(keyColOf(v.rel)) +: v.fields.map(col): _*)
+      hnswAdmitted(v).select(col(keyColOf(v.rel)) +: v.fields.map(col): _*)
     case p: PlainIdx =>
       // the reference's covering index stores the named columns plus the
       // REMAINING KEY columns only (runtime/relation.rs:1232) — enough
       // to locate the base row, nothing more
-      val base = relation(p.rel)
-      val keys = relationKeys.getOrElse(p.rel, base.columns.toSeq)
-      base.select((p.cols ++ keys.filterNot(p.cols.contains)).map(col): _*)
+      val keys = stored(p.rel).keys
+      relation(p.rel).select((p.cols ++ keys.filterNot(p.cols.contains)).map(col): _*)
   }
 
   /** choose_index (runtime/relation.rs:196-246): a named-field stored
@@ -1383,26 +1283,24 @@ class CozoDb(val spark: SparkSession) {
     * base relation on the full key recovers the remaining columns with
     * the base schema. Chosen names are recorded for `::explain`. */
   private[lang] val chosenIndexes = mutable.Buffer.empty[String]
-  private def chooseIndex(rel: String, bound: Set[String]): Option[DataFrame] = {
-    if (bound.isEmpty || !relations.contains(rel)) return None
-    val base = relations(rel)
-    val keys = relationKeys.getOrElse(rel, base.columns.toSeq)
-    if (keys.headOption.exists(bound.contains)) return None // base prefix scan wins
-    indexes.collectFirst {
-      case (iname, p: PlainIdx)
-          if p.rel == rel && p.cols.headOption.exists(bound.contains) =>
-        chosenIndexes += iname
-        val idx = indexInternals(iname, p)
-        val covered = idx.columns.toSeq
-        if (base.columns.forall(covered.contains))
-          idx.select(base.columns.map(col).toIndexedSeq: _*)
-        else {
-          val rest = base.columns.filterNot(covered.contains)
-          idx.join(base.select((keys ++ rest).distinct.map(col): _*), keys)
-            .select(base.columns.map(col).toIndexedSeq: _*)
-        }
+  private def chooseIndex(rel: String, bound: Set[String]): Option[DataFrame] =
+    records.get(rel).filter(r => bound.nonEmpty &&
+      !r.keys.headOption.exists(bound.contains)).flatMap { r => // else the base prefix scan wins
+      val (base, keys) = (r.view, r.keys)
+      r.indexes.collectFirst {
+        case (iname, (p: PlainIdx, _)) if p.cols.headOption.exists(bound.contains) =>
+          chosenIndexes += iname
+          val idx = indexInternals(iname, p)
+          val covered = idx.columns.toSeq
+          if (base.columns.forall(covered.contains))
+            idx.select(base.columns.map(col).toIndexedSeq: _*)
+          else {
+            val rest = base.columns.filterNot(covered.contains)
+            idx.join(base.select((keys ++ rest).distinct.map(col): _*), keys)
+              .select(base.columns.map(col).toIndexedSeq: _*)
+          }
+      }
     }
-  }
 
   /** A DataFrame over driver rows (a local relation). */
   private def localFrame(rows: Seq[Row], fields: StructField*): DataFrame =
@@ -1417,7 +1315,7 @@ class CozoDb(val spark: SparkSession) {
                           params: Map[String, Any],
                           frame: Option[DataFrame] = None): DataFrame = {
     import graft.functions.{TextFunctions => TF, VectorFunctions => VF}
-    val spec = indexes.getOrElse(target,
+    val spec = indexSpec(target).getOrElse(
       throw CompileException(s"no search index $target (::fts/::lsh/::hnsw create first)"))
     val base = relation(spec.rel)
     val key = keyColOf(spec.rel)
@@ -1732,7 +1630,7 @@ class CozoDb(val spark: SparkSession) {
                       monotonically_increasing_id() + lit(Long.MinValue))
                     .ckpt()
                   (qids, graft.similarity.Ann.hnswProbeLoaded(
-                    hnswLoadedGraphs(target, v, dir),
+                    hnswLoadedGraphs(target, dir),
                     qids.select(col("__qid").as("query_id"),
                       col("__qvec").cast("array<float>").as("vec")),
                     k, efSearch = efS, fieldsPerId = v.fields.length))
@@ -1778,7 +1676,7 @@ class CozoDb(val spark: SparkSession) {
                     v.fields.length))
                 case Right(dir) =>
                   graft.similarity.Ann.hnswProbeLoaded(
-                    hnswLoadedGraphs(target, v, dir),
+                    hnswLoadedGraphs(target, dir),
                     Seq((Long.MinValue, qvec.toArray)).toDF("query_id", "vec"), k,
                     efSearch = efS, fieldsPerId = v.fields.length)
               }
@@ -1805,14 +1703,16 @@ class CozoDb(val spark: SparkSession) {
   /** `::index/::fts/::lsh/::hnsw create rel:idx { … }` / `… drop rel:idx`
     * (parse/sys.rs:391-655). */
   private def indexOp(kind: String, sub: String, target: String,
-                      optsRaw: Option[String], params: Map[String, Any]): DataFrame = {
+                      optsRaw: Option[String], params: Map[String, Any],
+                      text: String): DataFrame = {
     import spark.implicits._
+    val rel = target.split(":")(0)
     if (sub == "drop") {
-      val existed = indexes.remove(target).isDefined
+      val existed = indexSpec(target).isDefined
+      if (existed) update(rel)(r => r.copy(indexes = r.indexes - target))
       dropIndexCaches(target)
       return Seq(((if (existed) "dropped" else "absent"), target)).toDF("status", "index")
     }
-    val rel = target.split(":")(0)
     relation(rel) // must exist
     dropIndexCaches(target) // a re-created index must not serve the old one's artifacts
     def asStr(e: Expr): String = e match {
@@ -1873,15 +1773,7 @@ class CozoDb(val spark: SparkSession) {
               "Filter Stopwords requires language name or a list of stopwords")
           }
       }
-    if (kind == "index") {
-      // bare column list, a permuted covering copy (runtime/relation.rs:1232)
-      val cols = optsRaw.toSeq.flatMap(_.split(",")).map(_.trim).filter(_.nonEmpty)
-      val bad = cols.filterNot(relation(rel).columns.contains)
-      if (bad.nonEmpty) throw CompileException(s"::index create — unknown columns ${bad.mkString(", ")}")
-      indexes(target) = PlainIdx(rel, cols)
-      return Seq(("created", target)).toDF("status", "index")
-    }
-    val opts = Parser.parseOptMap(optsRaw.getOrElse(""))
+    lazy val opts = Parser.parseOptMap(optsRaw.getOrElse(""))
     /** tokenizer/filters options → a [[graft.search.Fts.Pipeline]]
       * (shared by ::fts and ::lsh — the reference's LSH shingles run
       * through the same tokenizer machinery, minhash_lsh.rs via
@@ -1957,7 +1849,13 @@ class CozoDb(val spark: SparkSession) {
       case d: Double => d
       case n: Long => n.toDouble
     }
-    kind match {
+    val spec: IndexSpec = kind match {
+      case "index" =>
+        // bare column list, a permuted covering copy (runtime/relation.rs:1232)
+        val cols = optsRaw.toSeq.flatMap(_.split(",")).map(_.trim).filter(_.nonEmpty)
+        val bad = cols.filterNot(relation(rel).columns.contains)
+        if (bad.nonEmpty) throw CompileException(s"::index create — unknown columns ${bad.mkString(", ")}")
+        PlainIdx(rel, cols)
       case "fts" =>
         // option surface of parse/sys.rs:417-497; unknown options
         // error like the reference
@@ -1966,7 +1864,7 @@ class CozoDb(val spark: SparkSession) {
             throw CompileException(s"Unknown option $o for FTS index"))
         val extractor = opts.get("extractor").map(asStr)
           .getOrElse(throw CompileException("::fts create — missing extractor:"))
-        indexes(target) = FtsIdx(rel, extractor, parsePipelineOpts(opts),
+        FtsIdx(rel, extractor, parsePipelineOpts(opts),
           extractFilter = opts.get("extract_filter"))
       case "lsh" =>
         // option surface of parse/sys.rs:236-382; unknown options
@@ -1985,7 +1883,7 @@ class CozoDb(val spark: SparkSession) {
         val (b, r) = lshParamsFor(threshold, nPerm,
           numOpt("false_positive_weight").getOrElse(1.0),
           numOpt("false_negative_weight").getOrElse(1.0))
-        indexes(target) = LshIdx(rel, extractor, parsePipelineOpts(opts),
+        LshIdx(rel, extractor, parsePipelineOpts(opts),
           nGram, threshold, b, r, extractFilter = opts.get("extract_filter"))
       case "hnsw" =>
         // full option surface of parse/sys.rs:540-640 with its
@@ -2014,7 +1912,7 @@ class CozoDb(val spark: SparkSession) {
         // vectors, indexed per element (hnsw.rs:699-705). Bare-created
         // relations carry a placeholder schema until their first
         // data-bearing put, so only data-backed schemas can validate.
-        if (relations.contains(rel) && !bareCreates.contains(rel)) fields.foreach { f =>
+        if (!stored(rel).bare) fields.foreach { f =>
           if (!relation(rel).columns.contains(f)) throw CompileException(
             s"Cannot create HNSW index with non-existent field $f")
           relation(rel).schema(f).dataType match {
@@ -2023,7 +1921,7 @@ class CozoDb(val spark: SparkSession) {
               s"Cannot create HNSW index with non-vector field $f")
           }
         }
-        indexes(target) = VecIdx(rel, fields,
+        VecIdx(rel, fields,
           opts.get("distance").orElse(opts.get("dist")).map(asStr).getOrElse("L2"),
           opts.get("filter"),
           dim = numOpt("dim").map(_.toInt),
@@ -2033,6 +1931,7 @@ class CozoDb(val spark: SparkSession) {
           keepPruned = boolHnswOpt("keep_pruned_connections"))
       case other => throw CompileException(s"unknown index kind ::$other")
     }
+    update(rel)(r => r.copy(indexes = r.indexes.updated(target, (spec, text))))
     Seq(("created", target)).toDF("status", "index")
   }
 
@@ -2250,7 +2149,7 @@ class CozoDb(val spark: SparkSession) {
       * own joins/filters run. */
     def seedSource(body: Seq[Atom], v: String): Option[DataFrame] = {
       def availDf(name: String, stored: Boolean): Option[DataFrame] =
-        if (stored) relations.get(name) else evaluated.get(name)
+        if (stored) records.get(name).map(_.view) else evaluated.get(name)
       body.collectFirst {
         case RelApply(name2, args2, stored2, None)
             if !inScc(name2) && args2.contains(V(v)) &&
@@ -2258,12 +2157,12 @@ class CozoDb(val spark: SparkSession) {
           val df = availDf(name2, stored2).get
           df.select(col(df.columns(args2.indexOf(V(v)))).as("__seed"))
         case NamedApply(name2, pairs2, None)
-            if !inScc(name2) && relations.contains(name2) &&
+            if !inScc(name2) && records.contains(name2) &&
               pairs2.exists { case (f, b) => b.contains(V(v)) || (b.isEmpty && f == v) } =>
           val f = pairs2.collectFirst {
             case (f0, b) if b.contains(V(v)) || (b.isEmpty && f0 == v) => f0
           }.get
-          relations(name2).select(col(f).as("__seed"))
+          records(name2).view.select(col(f).as("__seed"))
       }
     }
     // a position seeds when EVERY caller either passes a compile-time
@@ -2553,7 +2452,8 @@ class CozoDb(val spark: SparkSession) {
 
   // ———————————————————————— options & mutations ————————————————————————
 
-  private def applyOptions(o: Options, df0: DataFrame): DataFrame = {
+  /** `bare`: a `:create` among these options is schema-only. */
+  private def applyOptions(o: Options, df0: DataFrame, bare: Boolean): DataFrame = {
     var df = df0
     if (o.sort.nonEmpty) {
       // an `aggr(var)` sort key refers to the aggregate's display column
@@ -2587,55 +2487,43 @@ class CozoDb(val spark: SparkSession) {
     if (o.assertSome && df.isEmpty)
       throw new IllegalStateException(":assert some failed — result is empty")
     o.relationOp.foreach { case (op, rel, spec) =>
-      if (op == "create" || op == "replace") {
-        if (spec.all.nonEmpty) relationDeclared(rel) = spec.all
-        else relationDeclared.remove(rel)
-        if (spec.defaults.nonEmpty) relationDefaults(rel) = spec.defaults
-        else relationDefaults.remove(rel)
-        // `col: Validity` in the schema braces: the relation becomes
-        // time-travelable; the assert flag lives in a synthesized
-        // companion column (the reference packs (ts, assert) into one
-        // Validity value, value.rs:112-131). A create WITHOUT the
-        // annotation must reset any validity metadata a same-named
-        // earlier relation left behind.
-        spec.validity match {
-          case Some(v) =>
-            relationValidity(rel) = v
-            relationAssert(rel) = s"${v}__assert"
-          case None =>
-            relationValidity.remove(rel)
-            relationAssert.remove(rel)
-        }
-      }
-      df = relationMutation(op, rel, spec.keys, df)
+      df = relationMutation(op, rel, spec, df, bare)
     }
     df
   }
 
-  private def relationMutation(op: String, rel: String, schemaKeys: Seq[String],
-                               delta0: DataFrame): DataFrame = {
+  private def relationMutation(op: String, rel: String, spec: SchemaSpec,
+                               delta0: DataFrame, bare: Boolean = false): DataFrame = {
     if (op != "create") requireAccess(rel, "normal", s":$op")
+    val rowOp = Seq("put", "insert", "update", "rm", "delete").contains(op)
+    val before = records.get(rel)
     // a row-changing op stales this relation's index caches (only)
     val prevVersion = versionOf(rel)
-    val thisVersion =
-      if (op == "ensure" || op == "ensure_not") prevVersion else bumpVersion(rel)
-    val schemaBefore = relations.get(rel).map(_.schema)
+    val thisVersion = if (rowOp) bumpVersion(rel) else prevVersion
+    // :create/:replace take their declared columns, defaults and
+    // validity from the schema braces: `col: Validity` makes the
+    // relation time-travelable, with the assert flag in a synthesized
+    // companion column (the reference packs (ts, assert) into one
+    // Validity value, value.rs:112-131); a schema without it resets
+    // validity. Every other op writes through the relation's own.
+    val meta =
+      if (op == "create" || op == "replace")
+        StoredRelation(delta0, spec.keys, 0L, validity = spec.validity,
+          assertCol = spec.validity.map(v => s"${v}__assert"),
+          declared = spec.all, defaults = spec.defaults)
+      else stored(rel)
     // fill declared-but-omitted columns with their default generators
     // (relation.rs:114-118; stored.rs applies default_gen on put)
-    val withDefaults = relationDeclared.get(rel) match {
-      case Some(declared) if Seq("create", "replace", "put", "insert").contains(op)
-          && declared.exists(!delta0.columns.contains(_)) =>
+    val withDefaults =
+      if (Seq("create", "replace", "put", "insert").contains(op) &&
+          meta.declared.exists(!delta0.columns.contains(_))) {
         val c = compiler(_ => None, Map.empty)
-        val defs = relationDefaults.getOrElse(rel, Map.empty)
-        declared.filterNot(delta0.columns.contains).foldLeft(delta0) { (d, name) =>
-          d.withColumn(name, defs.get(name).map(c.compileExpr).getOrElse(lit(null)))
-        }.select(declared.map(col): _*)
-      case _ => delta0
-    }
-    val coerced = coerceValidity(rel, withDefaults)
-    val rowOp = Seq("put", "insert", "update", "rm", "delete").contains(op)
-    val wasBare = bareCreates.contains(rel)
-    val overlayable = rowOp && !wasBare && relationKeys.contains(rel)
+        meta.declared.filterNot(delta0.columns.contains).foldLeft(delta0) { (d, name) =>
+          d.withColumn(name, meta.defaults.get(name).map(c.compileExpr).getOrElse(lit(null)))
+        }.select(meta.declared.map(col): _*)
+      } else delta0
+    val coerced = coerceValidity(rel, meta.validity, meta.assertCol, withDefaults)
+    val overlayable = rowOp && !meta.bare
     // The delta as a driver-local frame: as it is when it already is one
     // (a const rule), else fetched in one bounded collect when the write
     // may go to the overlay. Anything else is checkpointed lazily so
@@ -2656,38 +2544,32 @@ class CozoDb(val spark: SparkSession) {
     // authoritative). A keys-only rm/delete must NOT narrow the schema
     // (tests.rs deletion: a failed partial delete used to corrupt the
     // relation to its key columns).
-    if (op != "create" && wasBare
-        && relationDeclared.get(rel).forall(_.forall(delta.columns.contains))) {
-      bareCreates.remove(rel)
-      relations(rel) = delta.limit(0)
-    }
-    def keys: Seq[String] = relationKeys.getOrElse(rel,
-      if (schemaKeys.nonEmpty) schemaKeys else delta.columns.toSeq)
+    if (meta.bare && meta.declared.forall(delta.columns.contains))
+      update(rel)(_.copy(view = delta.limit(0), bare = false))
     op match {
-      case "create" =>
-        if (relations.contains(rel))
+      case "create" | "replace" =>
+        if (op == "create" && before.isDefined)
           throw new IllegalStateException(s":create $rel — relation already exists")
-        registerTable(rel, delta, if (schemaKeys.nonEmpty) schemaKeys else delta.columns.toSeq)
-      case "replace" =>
-        val before = relations.get(rel)
-        registerTable(rel, delta, if (schemaKeys.nonEmpty) schemaKeys
-          else relationKeys.getOrElse(rel, delta.columns.toSeq))
-        before.foreach(b => fireMutation(rel, "replace", delta, b))
+        registerTable(rel, delta,
+          if (spec.keys.nonEmpty) spec.keys else before.fold(delta.columns.toSeq)(_.keys),
+          meta.validity, meta.assertCol)
+        update(rel)(_.copy(declared = meta.declared, defaults = meta.defaults, bare = bare))
+        before.foreach(b => fireMutation(rel, "replace", delta, b.view))
       case _ if rowOp =>
         // rows about to be replaced/removed — `_old` for triggers and
         // callbacks (stored.rs:714; an immutable plan over the view
         // before the write)
-        val old = Mutations.keyFilter(relation(rel), delta, keys, "left_semi")
+        val old = Mutations.keyFilter(relation(rel), delta, meta.keys, "left_semi")
         if (!(overlayable && local.isDefined && overlayWrite(op, rel, delta))) {
           val cur = relation(rel)
-          relations(rel) = (op match {
-            case "put" => Mutations.put(cur, delta, keys)
-            case "insert" => Mutations.insert(cur, delta, keys)
-            case "update" => Mutations.update(cur, delta, keys)
-            case "rm" => Mutations.rm(cur, delta, keys)
-            case _ => Mutations.delete(cur, delta, keys)
+          val next = (op match {
+            case "put" => Mutations.put(cur, delta, meta.keys)
+            case "insert" => Mutations.insert(cur, delta, meta.keys)
+            case "update" => Mutations.update(cur, delta, meta.keys)
+            case "rm" => Mutations.rm(cur, delta, meta.keys)
+            case _ => Mutations.delete(cur, delta, meta.keys)
           }).ckptLazy()
-          overlays.remove(rel)
+          update(rel)(_.copy(view = next, overlay = None))
           overlayFolds += 1
         }
         fireMutation(rel, if (op == "rm" || op == "delete") "rm" else "put", delta, old)
@@ -2695,7 +2577,7 @@ class CozoDb(val spark: SparkSession) {
       case "ensure_not" => Mutations.ensureNot(relation(rel), delta)
       case other => throw CompileException(s"unknown relation op :$other")
     }
-    if (rowOp) maintainIndexes(rel, op, delta, prevVersion, thisVersion, schemaBefore)
+    if (rowOp) maintainIndexes(rel, op, delta, prevVersion, thisVersion, before.map(_.view.schema))
     delta
   }
 
@@ -2708,8 +2590,8 @@ class CozoDb(val spark: SparkSession) {
   private[lang] var overlayFolds = 0  // base rewrites: folded row writes and compacted overlays
 
   /** `base` minus every overlay key, plus the overlay's live rows. */
-  private def overlayView(rel: String, ov: Overlay): DataFrame = {
-    val kept = overlayMatch(ov.base, relationKeys(rel), ov.rows.keys, hit = false)
+  private def overlayView(keys: Seq[String], ov: Overlay): DataFrame = {
+    val kept = overlayMatch(ov.base, keys, ov.rows.keys, hit = false)
     val live = ov.rows.values.flatten.toSeq
     if (live.isEmpty) kept
     else kept.unionByName(localFrame(live, ov.base.schema.fields.map(_.copy(nullable = true)).toSeq: _*))
@@ -2766,7 +2648,8 @@ class CozoDb(val spark: SparkSession) {
     * one key, has a key the overlay cannot hold, takes the overlay past
     * [[maxDriverPatchKeys]] keys, or probes a key the base holds twice. */
   private def overlayWrite(op: String, rel: String, delta: DataFrame): Boolean = {
-    val keys = relationKeys(rel)
+    val r = stored(rel)
+    val keys = r.keys
     val cur = relation(rel)
     val cols = op match {
       case "put" | "insert" => cur.columns.toSeq
@@ -2792,7 +2675,7 @@ class CozoDb(val spark: SparkSession) {
     // a new overlay pins its base lazily — the next read materializes it,
     // no job here — so reads of a written relation scan checkpoint blocks
     // instead of recomputing the base's defining plan
-    val ov = overlays.getOrElse(rel, Overlay(cur.queryExecution.logical match {
+    val ov = r.overlay.getOrElse(Overlay(cur.queryExecution.logical match {
       case _: org.apache.spark.sql.execution.LogicalRDD |
            _: org.apache.spark.sql.catalyst.plans.logical.LocalRelation => cur
       case _ => cur.ckptLazy()
@@ -2833,8 +2716,7 @@ class CozoDb(val spark: SparkSession) {
         }
     }
     val next = Overlay(ov.base, ov.rows ++ written)
-    overlays(rel) = next
-    relations(rel) = overlayView(rel, next)
+    update(rel)(_.copy(overlay = Some(next), view = overlayView(keys, next)))
     overlayWrites += 1
     true
   }
@@ -2853,8 +2735,6 @@ class CozoDb(val spark: SparkSession) {
     * a freshly built artifact (checkpoint-block hygiene — the LSM
     * compaction analogue). `::replace` and schema changes re-register
     * the relation, which bumps its version and drops its caches. */
-  private val ftsDeltaCount = mutable.HashMap.empty[String, Int]
-  private val lshDeltaCount = mutable.HashMap.empty[String, Int]
   private[lang] val ftsMaxDeltas = 32
   /** Above this many changed keys a driver index is dropped instead of
     * patched: the next probe rebuilds it (and re-decides its branch). */
@@ -2867,11 +2747,9 @@ class CozoDb(val spark: SparkSession) {
   private[lang] var indexDriverProbes = 0  // probes served by a driver-resident index
   private def maintainIndexes(rel: String, op: String, delta: DataFrame, prev: Long, cur: Long,
                               schemaBefore: Option[StructType]): Unit = indexCacheLock.synchronized {
-    import graft.search.DriverFts
-    val targets = indexes.collect { case (t, f: FtsIdx) if f.rel == rel => (t, f) }.toSeq
-    val lshTargets = indexes.collect { case (t, l: LshIdx) if l.rel == rel => (t, l) }.toSeq
-    val vecTargets = indexes.collect { case (t, v: VecIdx) if v.rel == rel => (t, v) }.toSeq
-    if (targets.isEmpty && lshTargets.isEmpty && vecTargets.isEmpty) return
+    // indexes with nothing cached rebuild fresh on their next probe
+    val targets = records.get(rel).toSeq.flatMap(_.indexes).filter(t => indexArtifacts.contains(t._1))
+    if (targets.isEmpty) return
     val key = keyColOf(rel)
     // A cache may be patched ONLY if it was current right before this
     // mutation (stamped `prev`) and the relation still is at this
@@ -2882,12 +2760,11 @@ class CozoDb(val spark: SparkSession) {
     // rebuilt mid-mutation, which sees post-mutation data) is already
     // correct — leave it alone.
     val patchable = delta.columns.contains(key) && versionOf(rel) == cur
-    def fresh(stamp: Long) = stamp >= cur
-    def canPatch(stamp: Long) = stamp == prev && patchable
     lazy val changedIds = delta.select(col(key)).dropDuplicates().ckptLazy()
     // post-mutation rows for the changed keys: present for put/insert/
     // update, naturally empty for rm/delete
     lazy val added = relation(rel).join(changedIds, Seq(key), "left_semi")
+    def hasCol(c: String) = relation(rel).columns.contains(c)
     // Driver indexes patch from the changed keys and their post-mutation
     // rows, in the relation's column types: a put/insert's rows are its
     // delta (no read of the new relation), an update's are read back,
@@ -2916,104 +2793,56 @@ class CozoDb(val spark: SparkSession) {
         (keys, rows)
       }
     }
-    for ((target, spec) <- targets) {
-      val hasText = relation(rel).columns.contains(spec.extractor)
-      ftsCache.get(target) match {
-        case Some((v, _)) if fresh(v) => ()
-        case Some((v, ix)) if canPatch(v) && hasText &&
-            ftsDeltaCount.getOrElse(target, 0) < ftsMaxDeltas =>
-          val ix2 = graft.search.Fts.Index.applyDelta(
-            ix, changedIds,
-            extractFiltered(added, spec.extractor, spec.extractFilter),
-            key, spec.extractor)
-          ftsCache(target) = (cur, ix2)
-          ftsDeltaCount(target) = ftsDeltaCount.getOrElse(target, 0) + 1
-        case Some(_) => ftsCache.remove(target); ftsDeltaCount.remove(target)
-        case None => () // nothing cached: the next probe builds fresh
-      }
-      ftsDriver.get(target) match {
-        case Some((v, _)) if fresh(v) => ()
-        case Some((v, d)) if canPatch(v) && driverPatchable && hasText =>
-          driverDelta(col(key))(df => DriverFts.docTokens(
-            extractFiltered(df, spec.extractor, spec.extractFilter),
-            key, spec.extractor, spec.pipe)).map { case (keys, rows) =>
-            d.patch(keys, DriverFts.tokenRows(rows))
-          } match {
-            case Some(d2) if graft.plan.Knee.gate("fts_index", d2.bytes, driverIndexGateBytes) =>
-              ftsDriver(target) = (cur, d2)
-              indexDriverPatches += 1
-            case _ => ftsDriver.remove(target)
-          }
-        case Some(_) => ftsDriver.remove(target)
-        case None => ()
-      }
-    }
-    for ((target, spec) <- lshTargets) lshCache.get(target) match {
-      case Some((v, _)) if fresh(v) => ()
-      case Some((v, bands)) if canPatch(v) &&
-          relation(rel).columns.contains(spec.extractor) &&
-          lshDeltaCount.getOrElse(target, 0) < ftsMaxDeltas =>
-        val df = bands.join(broadcast(changedIds), Seq(key), "left_anti")
-          .unionByName(lshBandsOf(added, key, spec))
-          .ckptLazy()
-        lshCache(target) = (cur, df)
-        lshDeltaCount(target) = lshDeltaCount.getOrElse(target, 0) + 1
-      case Some(_) => lshCache.remove(target); lshDeltaCount.remove(target)
-      case None => ()
-    }
-    // HNSW graphs: rows hash to their bucket by node id, so a mutation
-    // rebuilds ONLY the affected buckets' graphs — and a patched index
-    // equals a full rebuild exactly (per-bucket insertion order is
-    // pinned), so no delta chain and no compaction bound apply
-    for ((target, vi) <- vecTargets) {
-      hnswGraphCache.get(target) match {
-        case Some((v, _)) if fresh(v) => ()
-        case Some((v, dir)) if canPatch(v) && hnswIndexEligible(vi) =>
-          val (mEff, efcEff) = hnswBuildParams(vi)
-          graft.similarity.Ann.hnswPatchIndex(dir, hnswCorpus(vi, hnswAdmitted(vi), key),
-            hnswChangedGids(vi, changedIds, key),
-            mEff, efcEff, metric = hnswWalkMetric(vi.distance).get,
-            extendCandidates = vi.extendCandidates, keepPruned = vi.keepPruned)
-          hnswGraphCache(target) = (cur, dir)
-          indexPatches += 1
-        case Some(_) => dropHnswGraph(target)
-        case None => ()
-      }
-      hnswDriver.get(target) match {
-        case Some((v, _)) if fresh(v) => ()
-        case Some((v, b)) if canPatch(v) && driverPatchable && hnswIndexEligible(vi) =>
-          val nF = vi.fields.length
-          val admitted = vi.filter.fold(lit(true))(e =>
-            coalesce(compiler(_ => None, Map.empty).compileExpr(e), lit(false)))
-          driverDelta(col(key).cast("long"))(_.select(col(key).cast("long") +: vi.fields.map(f =>
-            when(admitted, col(f).cast("array<float>"))): _*)).map { case (keys, rows) =>
-            b.patch(
-              keys.flatMap(k => (0 until nF).map(i => k.asInstanceOf[Long] * nF + i)),
-              rows.flatMap(r => (0 until nF).collect { case i if !r.isNullAt(i + 1) =>
-                (r.getLong(0) * nF + i, r.getSeq[Float](i + 1).toArray)
-              }))._1
-          } match {
-            case Some(b2) if graft.plan.Knee.gate("hnsw_index", b2.bytes, driverIndexGateBytes) =>
-              hnswDriver(target) = (cur, b2)
-              indexDriverPatches += 1
-            case _ => hnswDriver.remove(target)
-          }
-        case Some(_) => hnswDriver.remove(target)
-        case None => ()
-      }
-    }
-  }
-
-  /** Drop a cached HNSW index of either branch: the driver graphs, the
-    * executor-cached restored graphs, and the persisted directory. */
-  private def dropHnswGraph(target: String): Unit = {
-    hnswDriver.remove(target)
-    hnswLoadedCache.remove(target).foreach { case (_, rdd) =>
-      rdd.unpersist(blocking = false)
-    }
-    hnswGraphCache.remove(target).foreach { case (_, dir) =>
-      scala.util.Try(org.apache.commons.io.FileUtils
-        .deleteDirectory(new java.io.File(dir)))
+    /** A patched driver index that still fits the byte gate. */
+    def gated[A](gate: String, bytes: A => Long)(patched: Option[A]): Option[A] =
+      patched.filter(a => graft.plan.Knee.gate(gate, bytes(a), driverIndexGateBytes))
+        .map { a => indexDriverPatches += 1; a }
+    for ((target, (spec, _)) <- targets) indexArtifacts(target) match {
+      case (v, _) if v >= cur => ()
+      case (v, artifact) =>
+        val next: Option[IndexArtifact] = if (v != prev || !patchable) None else (spec, artifact) match {
+          case (f: FtsIdx, DistFts(ix, n)) if hasCol(f.extractor) && n < ftsMaxDeltas =>
+            Some(DistFts(graft.search.Fts.Index.applyDelta(ix, changedIds,
+              extractFiltered(added, f.extractor, f.extractFilter), key, f.extractor), n + 1))
+          case (f: FtsIdx, DriverFts(d)) if driverPatchable && hasCol(f.extractor) =>
+            gated[graft.search.DriverFts]("fts_index", _.bytes)(driverDelta(col(key))(df =>
+              graft.search.DriverFts.docTokens(extractFiltered(df, f.extractor, f.extractFilter),
+                key, f.extractor, f.pipe)).map { case (keys, rows) =>
+              d.patch(keys, graft.search.DriverFts.tokenRows(rows))
+            }).map(DriverFts)
+          case (l: LshIdx, LshBands(bands, n)) if hasCol(l.extractor) && n < ftsMaxDeltas =>
+            Some(LshBands(bands.join(broadcast(changedIds), Seq(key), "left_anti")
+              .unionByName(lshBandsOf(added, key, l)).ckptLazy(), n + 1))
+          // HNSW graphs: rows hash to their bucket by node id, so a
+          // mutation rebuilds ONLY the affected buckets' graphs — and a
+          // patched index equals a full rebuild exactly (per-bucket
+          // insertion order is pinned), so no delta chain and no
+          // compaction bound apply; the next probe reloads the graphs.
+          case (vi: VecIdx, DistHnsw(dir, loaded)) if hnswIndexEligible(vi) =>
+            val (mEff, efcEff) = hnswBuildParams(vi)
+            graft.similarity.Ann.hnswPatchIndex(dir, hnswCorpus(vi, hnswAdmitted(vi), key),
+              hnswChangedGids(vi, changedIds, key),
+              mEff, efcEff, metric = hnswWalkMetric(vi.distance).get,
+              extendCandidates = vi.extendCandidates, keepPruned = vi.keepPruned)
+            indexPatches += 1
+            loaded.foreach(_.unpersist(blocking = false))
+            Some(DistHnsw(dir, None))
+          case (vi: VecIdx, DriverHnsw(b)) if driverPatchable && hnswIndexEligible(vi) =>
+            val nF = vi.fields.length
+            val admitted = vi.filter.fold(lit(true))(e =>
+              coalesce(compiler(_ => None, Map.empty).compileExpr(e), lit(false)))
+            gated[graft.similarity.HnswBuckets]("hnsw_index", _.bytes)(
+              driverDelta(col(key).cast("long"))(_.select(col(key).cast("long") +: vi.fields.map(f =>
+                when(admitted, col(f).cast("array<float>"))): _*)).map { case (keys, rows) =>
+                b.patch(
+                  keys.flatMap(k => (0 until nF).map(i => k.asInstanceOf[Long] * nF + i)),
+                  rows.flatMap(r => (0 until nF).collect { case i if !r.isNullAt(i + 1) =>
+                    (r.getLong(0) * nF + i, r.getSeq[Float](i + 1).toArray)
+                  }))._1
+              }).map(DriverHnsw)
+          case _ => None
+        }
+        next.fold(dropIndexCaches(target))(a => indexArtifacts(target) = (cur, a))
     }
   }
 
@@ -3100,12 +2929,6 @@ class CozoDb(val spark: SparkSession) {
 }
 
 object CozoDb {
-
-  /** A relation's write overlay: per key (the key columns' values, in
-    * the relation's key order, floats with -0.0 read as 0.0), the
-    * written row in the relation's column order and types, or None for
-    * a removed key. Readers see `CozoDb.overlayView`. */
-  private final case class Overlay(base: DataFrame, rows: Map[Seq[Any], Option[Row]])
 
   /** Monotone id for per-instance job-group nonces (see dbNonce). */
   private[lang] val dbCounter = new java.util.concurrent.atomic.AtomicLong(0)

@@ -25,6 +25,7 @@ class BackupFuzzSpec extends AnyFunSuite {
       val db = new CozoDb(spark)
       val nRels = 2 + rnd.nextInt(3)
       val queries = scala.collection.mutable.ArrayBuffer.empty[String]
+      val defaulted = scala.collection.mutable.ArrayBuffer.empty[String]
 
       for (r <- 0 until nRels) {
         val rel = s"r$r"
@@ -33,6 +34,7 @@ class BackupFuzzSpec extends AnyFunSuite {
             db.run(s"?[k, a, b] <- [[1, 10, 'x'], [2, 20, 'y']] :create $rel {k => a, b default 'd'}")
             db.run(s"?[k, a] <- [[3, 30]] :put $rel {k => a}") // b defaults
             queries += s"?[k, a, b] := *$rel[k, a, b]"
+            defaulted += rel
           case 1 => // validity relation with history
             db.run(s":create $rel {k, v: Validity => d}")
             db.run(s"?[k, v, d] <- [[1, [5, true], 50], [1, [9, false], 0], [2, [3, true], 30]] :put $rel {k, v => d}")
@@ -59,6 +61,13 @@ class BackupFuzzSpec extends AnyFunSuite {
 
       for (q <- queries)
         assert(rows(db2, q) == rows(db, q), s"seed $seed query $q")
+      // descriptions, access levels and keys restore
+      assert(rows(db2, "::relations") == rows(db, "::relations"), s"seed $seed ::relations")
+      // declared defaults restore: a put that omits b fills it
+      for (rel <- defaulted) {
+        db2.run(s"?[k, a] <- [[4, 40]] :put $rel {k => a}")
+        assert(rows(db2, s"?[b] := *$rel[4, a, b]") == Set(Seq("d")), s"seed $seed default of $rel")
+      }
       // behavior: a restored trigger still fires
       val triggered = (0 until nRels).find { r =>
         db.run("::relations").collect().exists(_.getString(0) == s"r${r}_log")

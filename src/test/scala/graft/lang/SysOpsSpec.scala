@@ -221,4 +221,102 @@ class SysOpsSpec extends AnyFunSuite {
     // every declared arity in the listing matches FixedRules.arity
     for ((n, a) <- rows) assert(a.map(_.toInt) == FixedRules.arity(n), n)
   }
+
+  private def rowSet(db: CozoDb, q: String): Set[Seq[Any]] =
+    db.run(q).collect().map(_.toSeq).toSet
+  private def relationsRow(db: CozoDb, name: String): Seq[Any] =
+    db.run("::relations").collect().find(_.getString(0) == name).get.toSeq.tail
+
+  /** Relation metadata that an aborted transaction or a `::rename` must
+    * carry or restore: the bare-create flag, access level, description,
+    * declared columns and their defaults. */
+  private val lifecycleCases: Seq[(String, CozoDb => Unit)] = Seq(
+    "an aborted bare :create leaves no schema-only flag behind" -> { db =>
+      val tx = db.multiTransaction()
+      tx.run(":create t {a => b}")
+      tx.abort()
+      db.run("?[a, b] <- [[1, 2]] :create t {a => b}")
+      db.run("?[a, b] <- [[3, 4]] :put t {a => b}")
+      assert(rowSet(db, "?[a, b] := *t[a, b]") == Set(Seq(1L, 2L), Seq(3L, 4L)))
+    },
+    "an aborted ::access_level is rolled back" -> { db =>
+      val tx = db.multiTransaction()
+      tx.run("::access_level read_only kv")
+      tx.abort()
+      db.run("?[k, v] <- [[3, 'c']] :put kv {k => v}")
+      assert(db.relation("kv").count() == 3)
+    },
+    "an aborted ::describe and :replace defaults are rolled back" -> { db =>
+      db.run("?[a, b] <- [[1, 2]] :create d {a => b default 0}")
+      val tx = db.multiTransaction()
+      tx.run("::describe d 'inside'")
+      tx.run("?[a, b] <- [[5, 6]] :replace d {a => b default 9}")
+      tx.abort()
+      assert(relationsRow(db, "d").last == "")
+      db.run("?[a] <- [[7]] :put d {a}")
+      assert(rowSet(db, "?[a, b] := *d[a, b]") == Set(Seq(1L, 2L), Seq(7L, 0L)))
+    },
+    "::rename keeps declared defaults and the description" -> { db =>
+      db.run("?[a, b] <- [[1, 2]] :create r {a => b default 5}")
+      db.run("::describe r 'doc'")
+      db.run("::rename r s")
+      assert(relationsRow(db, "s").last == "doc")
+      db.run("?[a] <- [[3]] :put s {a}")
+      assert(rowSet(db, "?[a, b] := *s[a, b]") == Set(Seq(1L, 2L), Seq(3L, 5L)))
+    },
+    "an aborted ::rename restores the access level and defaults" -> { db =>
+      db.run("?[a, b] <- [[1, 2]] :create r {a => b default 5}")
+      db.run("::access_level protected r")
+      val tx = db.multiTransaction()
+      tx.run("::rename r s")
+      tx.abort()
+      assert(!db.relationNames.contains("s"))
+      assert(relationsRow(db, "r")(2) == "protected")
+      db.run("::access_level normal r")
+      db.run("?[a] <- [[3]] :put r {a}")
+      assert(rowSet(db, "?[a, b] := *r[a, b]") == Set(Seq(1L, 2L), Seq(3L, 5L)))
+    })
+
+  for ((name, body) <- lifecycleCases)
+    test(s"relation lifecycle: $name")(body(freshDb()))
+
+  test("::rename moves the whole relation and drops the indexes over the old name") {
+    val db = freshDb()
+    db.run("?[k] <- [[0]] :create log {k}")
+    db.run("?[k, vt, v, d] <- [[1, 'ASSERT', 'one fox', 'x'], [2, 'ASSERT', 'two fox', 'y']] " +
+      ":create r {k, vt: Validity => v, d default 'dd'}")
+    db.run("::fts create r:ix {extractor: v}")
+    assert(db.run("?[k] := ~r:ix{k | query: 'fox', k: 5}").count() == 2)
+    // a live write overlay
+    val writes = db.overlayWrites
+    db.run("?[k, vt, v] <- [[3, 'ASSERT', 'three']] :put r {k, vt => v}")
+    assert(db.overlayWrites == writes + 1)
+    db.run("::set_triggers r on put { ?[k] := _new[k, vt, v, d, a] :put log {k} }")
+    db.run("::describe r 'renamed relation'")
+    db.run("::access_level protected r")
+    def snapshot(rel: String) = (
+      db.relation(rel).collect().map(_.toSeq).toSet,
+      db.run(s"::columns $rel").collect().map(_.toSeq).toSeq,
+      rowSet(db, s"?[k, v, d] := *$rel{k, v, d @ 'NOW'}"),
+      relationsRow(db, rel),
+      db.run(s"::show_triggers $rel").collect().map(_.toSeq).toSeq)
+    val before = snapshot("r")
+    assert(before._3.map(_.head) == Set(1L, 2L, 3L))
+    db.run("::rename r s")
+    assert(snapshot("s") == before)
+    assert(!db.relationNames.contains("r"))
+    // the indexes over the old name are gone with their cached artifacts
+    assert(db.run("::indices s").isEmpty && db.run("::indices r").isEmpty)
+    assert(!db.cachedIndexTargets.exists(_.startsWith("r:")))
+    intercept[Exception](db.run("?[k] := ~r:ix{k | query: 'fox', k: 5}"))
+    // the triggers fire and the defaults fill on the new name
+    db.run("::access_level normal s")
+    db.run("?[k, vt, v] <- [[9, 'ASSERT', 'nine']] :put s {k, vt => v}")
+    assert(rowSet(db, "?[k] := *log[k]") == Set(Seq(0L), Seq(9L)))
+    assert(rowSet(db, "?[d] := *s{k: 9, d @ 'NOW'}") == Set(Seq("dd")))
+    // renaming onto an existing name raises and changes nothing
+    val (s0, log0) = (snapshot("s"), rowSet(db, "?[k] := *log[k]"))
+    intercept[IllegalStateException](db.run("::rename s log"))
+    assert(snapshot("s") == s0 && rowSet(db, "?[k] := *log[k]") == log0)
+  }
 }
