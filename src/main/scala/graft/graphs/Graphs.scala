@@ -2,9 +2,10 @@ package graft.graphs
 
 import graft.plan._
 import graft.fixpoint.Fixpoint
-import org.apache.spark.sql.DataFrame
+import org.apache.spark.sql.{DataFrame, Row, SparkSession}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.types.{DoubleType, IntegerType, LongType, StructField}
 
 /** Graph fixed rules of the reference
   * (cozo-core/src/fixed_rule/algos, registry fixed_rule/mod.rs:706-835)
@@ -12,10 +13,14 @@ import org.apache.spark.sql.functions._
   *
   * Edge convention: a DataFrame with `src`, `dst` (LongType) and an
   * optional `weight` (DoubleType). The reference materializes edges into
-  * a compact in-memory graph before running (fixed_rule/mod.rs:136-260);
-  * here every algorithm is a sequence of joins/aggregations so it
-  * partitions across executors — no driver materialization except where
-  * the algorithm is inherently sequential (which we then document).
+  * a compact in-memory graph before running (fixed_rule/mod.rs:136-260).
+  * Here most algorithms are a scale knee (`graft.plan.Knee`): a graph
+  * with at most `maxDriverEdges` edges is fetched once into a
+  * [[LocalGraph]] and the same algorithm runs in memory on the driver;
+  * above the gate a sequence of joins/aggregations partitions across
+  * executors. The inherently sequential walks (DFS order, exact
+  * Brandes, A*, Dijkstra/Yen witness paths) always run on a
+  * [[LocalGraph]] and raise an error past `maxEdges`.
   *
   * Scale notes: all self-joins are equi-joins on node ids (shuffle-hash
   * or broadcast via AQE); iterative algorithms localCheckpoint per round
@@ -54,14 +59,11 @@ object Graphs {
   def nodes(edges: DataFrame): DataFrame =
     edges.select(col("src").as("node")).union(edges.select(col("dst").as("node"))).distinct()
 
-  /** Guard for the scale-knee driver mirrors: BOTH endpoint columns must
-    * be LongType (the mirrors call getLong on both — an Int dst would
-    * pass a src-only check and ClassCast at collect time where the
-    * distributed path worked). */
-  private def longEndpoints(df: DataFrame): Boolean = {
-    import org.apache.spark.sql.types.LongType
+  /** Guard of the Long-keyed knee mirrors: BOTH endpoint columns must be
+    * LongType (their driver rows are Long columns; a graph with any other
+    * key type, an Int dst included, runs the distributed program). */
+  private def longEndpoints(df: DataFrame): Boolean =
     df.schema("src").dataType == LongType && df.schema("dst").dataType == LongType
-  }
 
   /** DegreeCentrality (algos/degree_centrality.rs): node, total, in, out. */
   def degreeCentrality(edges: DataFrame): DataFrame = {
@@ -80,20 +82,14 @@ object Graphs {
     * Returns (node, rank) with ranks summing to ~1.
     */
   def pageRank(edges: DataFrame, iters: Int = 10, damping: Double = 0.85,
-               maxDriverEdges: Long = 2000000L): DataFrame = {
-    val e = edges.select("src", "dst").distinct().ckpt()
-    // scale knee (same pattern as louvain/dfs/betweenness): a graph
-    // that fits the driver runs the identical synchronous iteration in
-    // memory — the reference is in-memory always; above the cap the
-    // distributed loop below takes over. Collected edges are SORTED so
-    // float accumulation order is run-deterministic.
-    if (longEndpoints(e) &&
-        graft.plan.Knee.gate("pageRank", e.count(), maxDriverEdges)) {
-      val rows = e.collect().map(r => (r.getLong(0), r.getLong(1))).sorted
-      val spark = e.sparkSession
-      import spark.implicits._
-      return pageRankDriver(rows, iters, damping).toSeq.toDF("node", "rank")
-    }
+               maxDriverEdges: Long = LocalGraph.KneeEdges): DataFrame = {
+    val (e, nE) = edges.select("src", "dst").distinct().ckptCount()
+    // scale knee: a graph that fits the driver runs the identical
+    // synchronous iteration in memory — the reference is in-memory
+    // always; above the cap the distributed loop below takes over.
+    // Edges are SORTED so float accumulation order is run-deterministic.
+    for (g <- LocalGraph.fetch("pageRank", e, nE, maxDriverEdges, guard = longEndpoints(e)))
+      return pageRankDriver(e.sparkSession, g.sorted(), iters, damping)
     val ns = nodes(e).ckpt()
     val n = ns.count().toDouble
     val outDeg = e.groupBy(col("src").as("node")).agg(count(lit(1)).as("deg")).ckpt()
@@ -131,24 +127,19 @@ object Graphs {
     * synchronous power iteration with dangling mass redistributed
     * uniformly, start 1/n — the same update the DataFrame program (and
     * the DuckDB oracle's unrolled CTE chain) computes. */
-  private def pageRankDriver(es: Array[(Long, Long)], iters: Int,
-                             d: Double): Map[Long, Double] = {
-    val ns = (es.iterator.map(_._1) ++ es.iterator.map(_._2)).toArray.distinct.sorted
-    val n = ns.length.toDouble
-    val outDeg = scala.collection.mutable.Map.empty[Long, Int].withDefaultValue(0)
-    for ((s, _) <- es) outDeg(s) += 1
-    var ranks = scala.collection.mutable.Map.empty[Long, Double]
-    for (v <- ns) ranks(v) = 1.0 / n
+  private def pageRankDriver(spark: SparkSession, g: LocalGraph, iters: Int,
+                             d: Double): DataFrame = {
+    val n = g.n.toDouble
+    var ranks = Array.fill(g.n)(1.0 / n)
     for (_ <- 0 until iters) {
-      val contrib = scala.collection.mutable.Map.empty[Long, Double].withDefaultValue(0.0)
-      for ((s, t) <- es) contrib(t) += ranks(s) / outDeg(s)
+      val contrib = new Array[Double](g.n)
+      for (i <- g.src.indices) contrib(g.dst(i)) += ranks(g.src(i)) / g.out.deg(g.src(i))
       var dangling = 0.0
-      for (v <- ns if outDeg(v) == 0) dangling += ranks(v)
-      val next = scala.collection.mutable.Map.empty[Long, Double]
-      for (v <- ns) next(v) = (1 - d) / n + d * (contrib(v) + dangling / n)
-      ranks = next
+      for (v <- 0 until g.n if g.out.deg(v) == 0) dangling += ranks(v)
+      ranks = Array.tabulate(g.n)(v => (1 - d) / n + d * (contrib(v) + dangling / n))
     }
-    ns.iterator.map(v => v -> ranks(v)).toMap
+    import spark.implicits._
+    ranks.indices.map(v => (g.long(v), ranks(v))).toDF("node", "rank")
   }
 
   /** ConnectedComponents (algos/strongly_connected_components.rs handles
@@ -172,23 +163,22 @@ object Graphs {
     df.schema(c).dataType.isInstanceOf[org.apache.spark.sql.types.NumericType]
 
   def connectedComponents(edges: DataFrame, maxIter: Int = 50,
-                          maxDriverEdges: Long = 2000000L): DataFrame = {
+                          maxDriverEdges: Long = LocalGraph.KneeEdges): DataFrame = {
     // materialize the edge projection ONCE: `edges` may be an expensive
     // derived plan (e.g. the event-window graph), and both the
     // undirected relation and the node seeding need it — deriving both
     // from one checkpoint halves the input evaluations (r7→r8 drift
     // forensics: the raw-endpoint seeding had added a second full
     // evaluation of the input plan)
-    val raw = edges.select("src", "dst").ckpt()
+    val (raw, nRaw) = edges.select("src", "dst").ckptCount()
     // scale knee: the output (node → min id of its component) is fully
     // SET-determined — any correct algorithm emits identical rows — so
     // a union-find under the cap is a pure execution-engine switch
-    if (longEndpoints(raw) &&
-        graft.plan.Knee.gate("connectedComponents", raw.count(), maxDriverEdges)) {
-      val rows = raw.collect().map(r => (r.getLong(0), r.getLong(1)))
-      val spark = raw.sparkSession
-      import spark.implicits._
-      return ccDriver(rows).toSeq.toDF("node", "comp")
+    for (g <- LocalGraph.fetch("connectedComponents", raw, nRaw, maxDriverEdges,
+        guard = longEndpoints(raw))) {
+      val uf = new UnionFind(g.n)
+      for (i <- g.src.indices) uf.union(g.src(i), g.dst(i))
+      return labels(raw, g, Array.tabulate(g.n)(uf.find), "comp")
     }
     val und = undirected(raw).ckpt()
     // node set from the RAW endpoints: a node whose only edges are
@@ -227,74 +217,67 @@ object Graphs {
 
   /** Iterative Tarjan with comp = min member id — the same rows the
     * distributed FW-BW-MIN peeling converges to (set-determined,
-    * integers). Explicit work stack: no recursion-depth limit on
-    * chain-shaped graphs. Self-loop-only nodes become singletons from
-    * the raw endpoint set, as in the distributed path. */
-  private def sccDriver(es: Array[(Long, Long)]): Map[Long, Long] = {
-    val ns = (es.iterator.map(_._1) ++ es.iterator.map(_._2)).toArray.distinct
-    val adj = es.iterator.filter(e => e._1 != e._2).toArray.distinct
-      .groupBy(_._1).map { case (k, v) => k -> v.map(_._2) }
-    val indexOf = scala.collection.mutable.Map.empty[Long, Int]
-    val low = scala.collection.mutable.Map.empty[Long, Int]
-    val stack = scala.collection.mutable.ArrayBuffer.empty[Long]
-    val onStack = scala.collection.mutable.Set.empty[Long]
-    val comp = scala.collection.mutable.Map.empty[Long, Long]
+    * integers). Explicit work stack (node, next slot): no recursion-depth
+    * limit on chain-shaped graphs. Self-loop-only nodes are singletons. */
+  private def sccDriver(g: LocalGraph): Array[Int] = {
+    val o = g.out
+    val index = Array.fill(g.n)(-1)
+    val low = new Array[Int](g.n)
+    val onStack = new Array[Boolean](g.n)
+    val comp = new Array[Int](g.n)
+    val stack = scala.collection.mutable.ArrayBuffer.empty[Int]
+    val work = scala.collection.mutable.ArrayBuffer.empty[(Int, Int)]
     var counter = 0
-    val work = scala.collection.mutable.Stack.empty[(Long, Iterator[Long])]
-    def open(v: Long): Unit = {
-      indexOf(v) = counter; low(v) = counter; counter += 1
-      stack += v; onStack += v
-      work.push((v, adj.getOrElse(v, Array.empty[Long]).iterator))
+    def open(v: Int): Unit = {
+      index(v) = counter; low(v) = counter; counter += 1
+      stack += v; onStack(v) = true; work += ((v, o.off(v)))
     }
-    for (root <- ns if !indexOf.contains(root)) {
+    for (root <- 0 until g.n if index(root) < 0) {
       open(root)
       while (work.nonEmpty) {
-        val (v, it) = work.top
-        if (it.hasNext) {
-          val w = it.next()
-          if (!indexOf.contains(w)) open(w)
-          else if (onStack(w)) low(v) = math.min(low(v), indexOf(w))
+        val (v, p) = work.last
+        if (p < o.off(v + 1)) {
+          work(work.length - 1) = (v, p + 1)
+          val w = o.tgt(p)
+          if (index(w) < 0) open(w) else if (onStack(w)) low(v) = math.min(low(v), index(w))
         } else {
-          work.pop()
-          if (work.nonEmpty) {
-            val p = work.top._1
-            low(p) = math.min(low(p), low(v))
-          }
-          if (low(v) == indexOf(v)) {
-            val members = scala.collection.mutable.ArrayBuffer.empty[Long]
-            var w = 0L
-            while ({ w = stack.remove(stack.length - 1); onStack -= w
-                     members += w; w != v }) ()
-            val m = members.min
-            members.foreach(x => comp(x) = m)
+          work.remove(work.length - 1)
+          if (work.nonEmpty) low(work.last._1) = math.min(low(work.last._1), low(v))
+          if (low(v) == index(v)) { // v roots a component: the stack from v up
+            val members = stack.drop(stack.lastIndexOf(v))
+            stack.dropRightInPlace(members.length)
+            val m = members.min // dense-id order is key order
+            members.foreach { w => onStack(w) = false; comp(w) = m }
           }
         }
       }
     }
-    comp.toMap
+    comp
   }
 
-  /** Union-find connected components with comp = min member id — the
-    * same rows the distributed min-propagation converges to (the
-    * output is set-determined, integers only: no float or heuristic
-    * divergence is possible between the two engines). */
-  private def ccDriver(es: Array[(Long, Long)]): Map[Long, Long] = {
-    val parent = scala.collection.mutable.Map.empty[Long, Long]
-    def find(x: Long): Long = {
+  /** (node, `name`) rows of a driver labelling: node v → node lab(v). */
+  private def labels(like: DataFrame, g: LocalGraph, lab: Array[Int], name: String): DataFrame =
+    LocalGraph.toDF(like.sparkSession, lab.indices.map(v => Row(g.key(v), g.key(lab(v)))),
+      StructField("node", LongType, false), StructField(name, LongType, false))
+
+  /** Union-find over dense ids. A union points the larger root at the
+    * smaller, so every root is its set's minimum id — with sorted keys,
+    * the min-id component label the distributed loops converge to
+    * (set-determined integers: no divergence between the engines). */
+  private final class UnionFind(n: Int) {
+    private val parent = Array.range(0, n)
+    def find(x: Int): Int = {
       var r = x
-      while (parent.getOrElse(r, r) != r) r = parent(r)
+      while (parent(r) != r) r = parent(r)
       var c = x
-      while (parent.getOrElse(c, c) != c) { val nxt = parent(c); parent(c) = r; c = nxt }
+      while (parent(c) != c) { val nxt = parent(c); parent(c) = r; c = nxt }
       r
     }
-    for ((s, d) <- es) {
-      parent.getOrElseUpdate(s, s); parent.getOrElseUpdate(d, d)
-      val (rs, rd) = (find(s), find(d))
-      if (rs != rd) parent(math.max(rs, rd)) = math.min(rs, rd)
+    /** False when `a` and `b` were already joined. */
+    def union(a: Int, b: Int): Boolean = {
+      val (ra, rb) = (find(a), find(b))
+      ra != rb && { parent(math.max(ra, rb)) = math.min(ra, rb); true }
     }
-    // roots are already component minima (union always points the
-    // larger root at the smaller one)
-    parent.keys.map(v => v -> find(v)).toMap
   }
 
   /** LabelPropagation (algos/label_propagation.rs): synchronous rounds;
@@ -302,23 +285,19 @@ object Graphs {
     * the smaller label for determinism.
     */
   def labelPropagation(edges: DataFrame, iters: Int = 5,
-                       maxDriverEdges: Long = 2000000L): DataFrame =
+                       maxDriverEdges: Long = LocalGraph.KneeEdges): DataFrame =
     labelPropagationOnUnd(undirected(edges).ckpt(), iters, maxDriverEdges)
 
   /** Label propagation over a PREPARED (already materialized) distinct
     * undirected pair set — the (src, dst) projection of
     * [[undirectedWeighted]] is exactly this relation. */
   def labelPropagationOnUnd(und: DataFrame, iters: Int = 5,
-                            maxDriverEdges: Long = 2000000L): DataFrame = {
+                            maxDriverEdges: Long = LocalGraph.KneeEdges): DataFrame = {
     // scale knee: votes are integers and the tie-break is total, so
     // the in-memory mirror is bit-identical to the distributed rounds
-    if (longEndpoints(und) &&
-        graft.plan.Knee.gate("labelPropagation", und.count(), maxDriverEdges)) {
-      val rows = und.collect().map(r => (r.getLong(0), r.getLong(1))).sorted
-      val spark = und.sparkSession
-      import spark.implicits._
-      return lpDriver(rows, iters).toSeq.toDF("node", "label")
-    }
+    for (g <- LocalGraph.fetch("labelPropagation", und, und.count(), maxDriverEdges,
+        guard = longEndpoints(und)))
+      return labels(und, g, lpDriver(g, iters), "label")
     var lab = nodes(und).withColumn("label", col("node")).ckpt()
     var i = 0
     while (i < iters) {
@@ -341,16 +320,14 @@ object Graphs {
   /** In-memory mirror of the labelPropagation rounds: majority neighbor
     * label over the undirected distinct edge set, ties to the smaller
     * label, synchronous. Integer votes → identical output. */
-  private def lpDriver(und: Array[(Long, Long)], iters: Int): Map[Long, Long] = {
-    val adj = und.groupBy(_._1)
-    val ns = und.map(_._1).distinct.sorted
-    var lab: Map[Long, Long] = ns.iterator.map(v => v -> v).toMap
+  private def lpDriver(g: LocalGraph, iters: Int): Array[Int] = {
+    var lab = Array.range(0, g.n)
     for (_ <- 0 until iters) {
-      lab = ns.iterator.map { n =>
-        val votes = scala.collection.mutable.Map.empty[Long, Int].withDefaultValue(0)
-        for ((_, d) <- adj(n)) votes(lab(d)) += 1
-        n -> votes.minBy { case (l, c) => (-c, l) }._1
-      }.toMap
+      val prev = lab
+      lab = Array.tabulate(g.n) { v =>
+        val votes = g.out.nbrs(v).groupMapReduce(prev(_))(_ => 1)(_ + _)
+        if (votes.isEmpty) v else votes.minBy { case (l, c) => (-c, l) }._1
+      }
     }
     lab
   }
@@ -360,14 +337,14 @@ object Graphs {
     * `maxHops`. Returns (start, node, depth).
     */
   def bfs(edges: DataFrame, starts: DataFrame, maxHops: Int,
-          maxDriverEdges: Long = 2000000L): DataFrame = {
+          maxDriverEdges: Long = LocalGraph.KneeEdges): DataFrame = {
     // scale knee (the same pattern as pageRank/louvain/topSort — the
     // reference's bfs.rs walks a fully materialized graph): below the
     // cap the level walk runs in memory with identical min-hop
     // semantics; distributed shapes (bitmap levels, meetMin fallback)
     // above it
     val (e, nE) = edges.select("src", "dst").distinct().ckptCount()
-    if (graft.plan.Knee.gate("bfs", nE, maxDriverEdges)) return bfsDriver(e, starts, maxHops)
+    for (g <- LocalGraph.fetch("bfs", e, nE, maxDriverEdges)) return bfsDriver(g, starts, maxHops)
     bfsLevels(e, starts, maxHops).getOrElse {
       val base = starts.select(col("start"), col("start").as("node"), lit(0).as("depth"))
       Fixpoint.meetMin(base,
@@ -378,110 +355,29 @@ object Graphs {
     }
   }
 
-  /** Generic (Any-keyed — FixedRules pass string graphs) collected
-    * adjacency of a DISTINCT (src, dst) edge relation. */
-  private def collectAdjAny(e: DataFrame): scala.collection.mutable.HashMap[Any, scala.collection.mutable.ArrayBuffer[Any]] = {
-    val adj = scala.collection.mutable.HashMap.empty[Any, scala.collection.mutable.ArrayBuffer[Any]]
-    e.collect().foreach { r =>
-      adj.getOrElseUpdate(r.get(0), scala.collection.mutable.ArrayBuffer.empty[Any]) += r.get(1)
-    }
-    adj
-  }
-
   /** In-memory mirror of the level-synchronous BFS: min hop count per
     * (start, node), bounded at maxHops, base (start, start, 0) rows for
     * every start (in-graph or not) — exactly the bitmap/meetMin result.
-    * Long-keyed graphs (every bench graph) take a dense-int CSR walk —
-    * the Any-boxed HashMap walk costs ~50 ns/edge-visit in boxing alone,
-    * which a many-source sweep (closeness probes hundreds of sources)
-    * turns into whole seconds. */
-  private def bfsDriver(e: DataFrame, starts: DataFrame, maxHops: Int): DataFrame = {
-    import org.apache.spark.sql.types.LongType
-    val spark = e.sparkSession
-    if (e.schema("src").dataType == LongType && e.schema("dst").dataType == LongType &&
-        starts.schema("start").dataType == LongType)
-      return bfsDriverLong(e, starts, maxHops)
-    val adj = collectAdjAny(e)
+    * A dense-id CSR walk for every key type: a boxed hash-map walk costs
+    * ~50 ns/edge-visit in boxing alone, which a many-source sweep turns
+    * into whole seconds. */
+  private def bfsDriver(g: LocalGraph, starts: DataFrame, maxHops: Int): DataFrame = {
     val st = starts.select(col("start")).distinct().collect().map(_.get(0))
-    val out = scala.collection.mutable.ArrayBuffer.empty[org.apache.spark.sql.Row]
+    val depth = Array.fill(g.n)(-1)
+    val queue = new Array[Int](g.n)
+    val out = scala.collection.mutable.ArrayBuffer.empty[Row]
     for (s <- st) {
-      val depthOf = scala.collection.mutable.HashMap[Any, Int](s -> 0)
-      var frontier: Seq[Any] = Seq(s)
-      var d = 0
-      while (frontier.nonEmpty && d < maxHops) {
-        d += 1
-        val next = scala.collection.mutable.ArrayBuffer.empty[Any]
-        for (v <- frontier; w <- adj.getOrElse(v, Nil)) if (!depthOf.contains(w)) {
-          depthOf(w) = d; next += w
-        }
-        frontier = next.toSeq
-      }
-      depthOf.foreach { case (n, dep) => out += org.apache.spark.sql.Row(s, n, dep) }
-    }
-    val schema = org.apache.spark.sql.types.StructType(Seq(
-      org.apache.spark.sql.types.StructField("start", starts.schema("start").dataType),
-      org.apache.spark.sql.types.StructField("node", e.schema("src").dataType),
-      org.apache.spark.sql.types.StructField("depth", org.apache.spark.sql.types.IntegerType, nullable = false)))
-    spark.createDataFrame(spark.sparkContext.parallelize(out.toSeq,
-      math.max(1, math.min(spark.sparkContext.defaultParallelism, out.size / 4096 + 1))), schema)
-  }
-
-  private def bfsDriverLong(e: DataFrame, starts: DataFrame, maxHops: Int): DataFrame = {
-    val spark = e.sparkSession
-    import spark.implicits._
-    val es = e.collect().map(r => (r.getLong(0), r.getLong(1)))
-    val st = starts.select(col("start")).distinct().collect().map(_.getLong(0))
-    // dense ids
-    val dict = new java.util.HashMap[Long, Int]()
-    def idx(x: Long): Unit = if (!dict.containsKey(x)) dict.put(x, dict.size())
-    es.foreach { case (a, b) => idx(a); idx(b) }
-    val n = dict.size()
-    val ids = new Array[Long](n)
-    dict.forEach((k, v) => ids(v) = k)
-    // CSR adjacency
-    val deg = new Array[Int](n)
-    es.foreach { case (a, _) => deg(dict.get(a)) += 1 }
-    val off = new Array[Int](n + 1)
-    var i = 0
-    while (i < n) { off(i + 1) = off(i) + deg(i); i += 1 }
-    val fill = off.clone()
-    val tgt = new Array[Int](es.length)
-    es.foreach { case (a, b) => val ai = dict.get(a); tgt(fill(ai)) = dict.get(b); fill(ai) += 1 }
-    val depth = new Array[Int](n)
-    java.util.Arrays.fill(depth, -1)
-    val queue = new Array[Int](n)
-    val touched = new Array[Int](n)
-    val out = scala.collection.mutable.ArrayBuffer.empty[(Long, Long, Int)]
-    for (s <- st) {
-      var nTouched = 0
-      val si = if (dict.containsKey(s)) dict.get(s) else -1
-      out += ((s, s, 0))
-      if (si >= 0) {
-        depth(si) = 0; queue(0) = si; touched(nTouched) = si; nTouched += 1
-        var head = 0; var tail = 1
-        while (head < tail) {
-          val v = queue(head); head += 1
-          val dv = depth(v)
-          if (dv < maxHops) {
-            var p = off(v)
-            while (p < off(v + 1)) {
-              val w = tgt(p)
-              if (depth(w) < 0) {
-                depth(w) = dv + 1
-                queue(tail) = w; tail += 1
-                touched(nTouched) = w; nTouched += 1
-                out += ((s, ids(w), dv + 1))
-              }
-              p += 1
-            }
-          }
-        }
-        // reset only the touched slots for the next source
-        var t = 0
-        while (t < nTouched) { depth(touched(t)) = -1; t += 1 }
+      out += Row(s, s, 0)
+      val si = g.id(s)
+      if (si >= 0) for (v <- queue.take(g.out.bfs(si, maxHops, depth, queue))) {
+        if (v != si) out += Row(s, g.key(v), depth(v))
+        depth(v) = -1
       }
     }
-    out.toSeq.toDF("start", "node", "depth")
+    LocalGraph.toDF(starts.sparkSession, out.toSeq,
+      LocalGraph.keyField("start", starts.schema("start").dataType),
+      LocalGraph.keyField("node", g.keyType),
+      StructField("depth", IntegerType, false))
   }
 
   /** Level-synchronous multi-source BFS over the bitmap frontier —
@@ -570,12 +466,12 @@ object Graphs {
     * as the semi-naive transitive-closure shape of eval.rs:571-610.
     */
   def reachable(edges: DataFrame, starts: DataFrame, hops: Int,
-                maxDriverEdges: Long = 2000000L): DataFrame = {
+                maxDriverEdges: Long = LocalGraph.KneeEdges): DataFrame = {
     val (e, nE) = edges.select("src", "dst").distinct().ckptCount()
     // scale knee: ≤ `hops` reachability over a driver-sized graph is
     // the bfsDriver walk minus the depth column (same base rows)
-    if (graft.plan.Knee.gate("reachable", nE, maxDriverEdges))
-      return bfsDriver(e, starts, hops).select("start", "node")
+    for (g <- LocalGraph.fetch("reachable", e, nE, maxDriverEdges))
+      return bfsDriver(g, starts, hops).select("start", "node")
     val base = starts.select(col("start"), col("start").as("node"))
     Fixpoint.boundedExpand(base,
       delta => delta.join(e, delta("node") === e("src"))
@@ -590,7 +486,7 @@ object Graphs {
     * partitions. Unweighted edges get weight 1. Returns (start, node, cost).
     */
   def shortestPaths(edges: DataFrame, starts: DataFrame, maxIter: Int = 30,
-                    maxDriverEdges: Long = 2000000L): DataFrame = {
+                    maxDriverEdges: Long = LocalGraph.KneeEdges): DataFrame = {
     // unit weights: min cost ≡ min hops — the bfs knee/bitmap chain
     // applies directly (bfs carries its own driver knee)
     if (!edges.columns.contains("weight"))
@@ -603,7 +499,8 @@ object Graphs {
     // one edge, folded with min; costs accumulate along the path in the
     // same order, so values are bit-identical, including the maxIter
     // hop bound
-    if (graft.plan.Knee.gate("shortestPaths", nE, maxDriverEdges)) return sspDriver(e, starts, maxIter)
+    for (g <- LocalGraph.fetch("shortestPaths", e, nE, maxDriverEdges, weighted = true))
+      return sspDriver(g, starts, maxIter)
     val base = starts.select(col("start"), col("start").as("node"), lit(0.0).as("cost"))
     Fixpoint.meetMin(base,
       delta => delta.join(e, delta("node") === e("src"))
@@ -612,45 +509,28 @@ object Graphs {
   }
 
   /** In-memory mirror of the weighted meetMin loop (see shortestPaths). */
-  private def sspDriver(e: DataFrame, starts: DataFrame, maxIter: Int): DataFrame = {
-    val spark = e.sparkSession
-    val adj = scala.collection.mutable.HashMap.empty[Any, scala.collection.mutable.ArrayBuffer[(Any, Double)]]
-    e.collect().foreach { r =>
-      adj.getOrElseUpdate(r.get(0), scala.collection.mutable.ArrayBuffer.empty[(Any, Double)]) +=
-        ((r.get(1), r.getDouble(2)))
-    }
+  private def sspDriver(g: LocalGraph, starts: DataFrame, maxIter: Int): DataFrame = {
     val st = starts.select(col("start")).distinct().collect().map(_.get(0))
-    val out = scala.collection.mutable.ArrayBuffer.empty[org.apache.spark.sql.Row]
-    for (s <- st) {
-      val dist = scala.collection.mutable.HashMap[Any, Double](s -> 0.0)
-      var delta: Iterable[Any] = Seq(s)
+    val out = scala.collection.mutable.ArrayBuffer.empty[Row]
+    for (s <- st; si = g.id(s)) {
+      val dist = scala.collection.mutable.HashMap.empty[Int, Double]
+      if (si < 0) out += Row(s, s, 0.0) else dist(si) = 0.0
+      var delta: Iterable[Int] = dist.keys.toSeq
       var iter = 0
       while (delta.nonEmpty && iter < maxIter) {
-        // fold the round's candidates with min BEFORE comparing to the
-        // total, like meetMin's groupBy-min over (start, node)
-        val cand = scala.collection.mutable.HashMap.empty[Any, Double]
-        for (v <- delta; (w, wt) <- adj.getOrElse(v, Nil)) {
-          val c = dist(v) + wt
+        val cand = scala.collection.mutable.HashMap.empty[Int, Double]
+        for (v <- delta; p <- g.out.row(v); w = g.out.tgt(p); c = dist(v) + g.out.wt(p))
           if (!cand.get(w).exists(_ <= c)) cand(w) = c
-        }
-        val improved = scala.collection.mutable.ArrayBuffer.empty[Any]
-        for ((w, c) <- cand) if (!dist.get(w).exists(_ <= c)) {
-          dist(w) = c; improved += w
-        }
-        delta = improved
+        delta = cand.filter { case (w, c) => !dist.get(w).exists(_ <= c) }.keys
+        delta.foreach(w => dist(w) = cand(w))
         iter += 1
       }
-      dist.foreach { case (n, c) => out += org.apache.spark.sql.Row(s, n, c) }
+      for ((v, c) <- dist) out += Row(s, g.key(v), c)
     }
-    val schema = org.apache.spark.sql.types.StructType(Seq(
-      org.apache.spark.sql.types.StructField("start", starts.schema("start").dataType),
-      org.apache.spark.sql.types.StructField("node", e.schema("src").dataType),
-      org.apache.spark.sql.types.StructField("cost", org.apache.spark.sql.types.DoubleType, nullable = false)))
-    // size the output partitions like bfsDriver (r12 ADVICE: a single
-    // slice funnels every downstream stage of shortestPaths through one
-    // task for an output that can be sources × reachable nodes)
-    spark.createDataFrame(
-      spark.sparkContext.parallelize(out.toSeq, (out.size / 4096 + 1).toInt), schema)
+    LocalGraph.toDF(starts.sparkSession, out.toSeq,
+      LocalGraph.keyField("start", starts.schema("start").dataType),
+      LocalGraph.keyField("node", g.keyType),
+      StructField("cost", DoubleType, false))
   }
 
   /** TopSort (algos/top_sort.rs): Kahn peeling of zero-in-degree layers.
@@ -661,17 +541,16 @@ object Graphs {
     * bound the input's depth (sample/cut) rather than raising maxIter.
     */
   def topSort(edges: DataFrame, maxIter: Int = 100,
-              maxDriverEdges: Long = 2000000L): DataFrame = {
-    val distinctEdges = edges.select("src", "dst").distinct().ckpt()
+              maxDriverEdges: Long = LocalGraph.KneeEdges): DataFrame = {
+    val (distinctEdges, nD) = edges.select("src", "dst").distinct().ckptCount()
     // scale knee: the layer assignment (Kahn peel round = longest path
     // from a source) is set-determined, so the in-memory peel emits
     // identical rows — and the same cycle/maxIter error contracts
-    if (longEndpoints(distinctEdges) &&
-        graft.plan.Knee.gate("topSort", distinctEdges.count(), maxDriverEdges)) {
-      val rows = distinctEdges.collect().map(r => (r.getLong(0), r.getLong(1)))
+    for (g <- LocalGraph.fetch("topSort", distinctEdges, nD, maxDriverEdges,
+        guard = longEndpoints(distinctEdges))) {
       val spark = distinctEdges.sparkSession
       import spark.implicits._
-      return topSortDriver(rows, maxIter).toDF("node", "layer")
+      return topSortDriver(g, maxIter).toDF("node", "layer")
     }
     var remaining = distinctEdges
     var live = nodes(remaining).ckpt()
@@ -685,17 +564,10 @@ object Graphs {
     val layers = scala.collection.mutable.ArrayBuffer.empty[DataFrame]
     var layer = 0
     while (liveCount > 0) {
-      if (layer >= maxIter)
-        throw new IllegalStateException(
-          s"TopSort: not complete after $maxIter layers ($liveCount nodes left) — " +
-            "the longest path exceeds maxIter; raise it or bound the input's depth")
       val peeled = live
         .join(remaining.select(col("dst").as("node")).distinct(), Seq("node"), "left_anti")
         .withColumn("layer", lit(layer)).ckptLazy()
-      val n = peeled.count()
-      if (n == 0)
-        throw new IllegalArgumentException(
-          s"TopSort: graph contains a cycle ($liveCount nodes cannot be peeled)")
+      val n = topSortPeel(layer, maxIter, liveCount, peeled.count())
       layers += peeled
       liveCount -= n
       if (liveCount > 0) {
@@ -709,29 +581,35 @@ object Graphs {
     else layers.reduce(_ union _)
   }
 
+  /** TopSort's two error contracts around one layer's peel of `live`
+    * nodes: maxIter exhaustion before it, a cycle (nothing peeled) after.
+    * Returns the peeled count. */
+  private def topSortPeel(layer: Int, maxIter: Int, live: Long, peel: => Long): Long = {
+    if (layer >= maxIter)
+      throw new IllegalStateException(
+        s"TopSort: not complete after $maxIter layers ($live nodes left) — " +
+          "the longest path exceeds maxIter; raise it or bound the input's depth")
+    val n = peel
+    if (n == 0)
+      throw new IllegalArgumentException(
+        s"TopSort: graph contains a cycle ($live nodes cannot be peeled)")
+    n
+  }
+
   /** In-memory mirror of the topSort peel (Kahn layering), identical
-    * rows and identical cycle / maxIter error contracts. */
-  private def topSortDriver(es: Array[(Long, Long)], maxIter: Int): Seq[(Long, Int)] = {
+    * rows and identical cycle / maxIter error contracts: a layer is
+    * every live node whose in-degree the previous layers brought to 0. */
+  private def topSortDriver(g: LocalGraph, maxIter: Int): Seq[(Long, Int)] = {
     val out = scala.collection.mutable.ArrayBuffer.empty[(Long, Int)]
-    val indeg = scala.collection.mutable.Map.empty[Long, Int].withDefaultValue(0)
-    val adj = es.groupBy(_._1)
-    val live = scala.collection.mutable.Set.empty[Long]
-    for ((s, d) <- es) { live += s; live += d; indeg(d) += 1 }
+    val indeg = Array.tabulate(g.n)(g.in.deg)
+    var peeled: Seq[Int] = (0 until g.n).filter(indeg(_) == 0)
+    var live = g.n
     var layer = 0
-    while (live.nonEmpty) {
-      if (layer >= maxIter)
-        throw new IllegalStateException(
-          s"TopSort: not complete after $maxIter layers (${live.size} nodes left) — " +
-            "the longest path exceeds maxIter; raise it or bound the input's depth")
-      val peeled = live.iterator.filter(v => indeg(v) == 0).toArray
-      if (peeled.isEmpty)
-        throw new IllegalArgumentException(
-          s"TopSort: graph contains a cycle (${live.size} nodes cannot be peeled)")
-      for (v <- peeled) {
-        out += ((v, layer))
-        live -= v
-        for ((_, d) <- adj.getOrElse(v, Array.empty[(Long, Long)])) indeg(d) -= 1
-      }
+    while (live > 0) {
+      topSortPeel(layer, maxIter, live, peeled.length)
+      out ++= peeled.map(v => (g.long(v), layer))
+      live -= peeled.length
+      peeled = peeled.flatMap(g.out.nbrs).filter { d => indeg(d) -= 1; indeg(d) == 0 }
       layer += 1
     }
     out.toSeq
@@ -749,20 +627,15 @@ object Graphs {
     * member id.
     */
   def stronglyConnectedComponents(edges: DataFrame, maxRounds: Int = 20,
-                                  maxDriverEdges: Long = 2000000L): DataFrame = {
+                                  maxDriverEdges: Long = LocalGraph.KneeEdges): DataFrame = {
     // one evaluation of the (possibly derived) input plan; live edges
     // and the node seeding both read the checkpoint
-    val raw = edges.select("src", "dst").ckpt()
+    val (raw, nRaw) = edges.select("src", "dst").ckptCount()
     // scale knee: (node → min member of its SCC) is set-determined, so
     // iterative Tarjan under the cap emits identical rows to the
     // distributed FW-BW-MIN peeling
-    if (longEndpoints(raw) &&
-        graft.plan.Knee.gate("scc", raw.count(), maxDriverEdges)) {
-      val rows = raw.collect().map(r => (r.getLong(0), r.getLong(1)))
-      val spark = raw.sparkSession
-      import spark.implicits._
-      return sccDriver(rows).toSeq.toDF("node", "comp")
-    }
+    for (g <- LocalGraph.fetch("scc", raw, nRaw, maxDriverEdges, guard = longEndpoints(raw)))
+      return labels(raw, g, sccDriver(g), "comp")
     var live = raw.filter(col("src") =!= col("dst"))
       .distinct().ckpt()
     // raw endpoints: self-loop-only nodes are singleton SCCs (the
@@ -865,7 +738,7 @@ object Graphs {
     * `und`. Returns (tag, q). One und⋈assign⋈assign + aggregate
     * replaces a separate join+agg program per assignment. */
   def modularityByTag(und: DataFrame, tagged: DataFrame,
-                      maxDriverEdges: Long = 2000000L): DataFrame = {
+                      maxDriverEdges: Long = LocalGraph.KneeEdges): DataFrame = {
     // scale knee (same pattern and gate as louvain/labelPropagation —
     // both of which already collect this exact relation at bench SFs):
     // the fold below is two collects + exact integer-in-double sums,
@@ -874,31 +747,29 @@ object Graphs {
     // join semantics mirrored: a row contributes only when BOTH
     // endpoints carry the tag's assignment. Pinned driver==distributed
     // by GraphsSpec.
-    if (longEndpoints(und) &&
-        und.schema("w").dataType == org.apache.spark.sql.types.DoubleType &&
-        tagged.schema("node").dataType == org.apache.spark.sql.types.LongType &&
-        tagged.schema("comm").dataType == org.apache.spark.sql.types.LongType &&
-        graft.plan.Knee.gate("modularity", und.count(), maxDriverEdges)) {
-      val edges = und.select(col("src"), col("dst"), col("w")).collect()
-        .map(r => (r.getLong(0), r.getLong(1), r.getDouble(2)))
+    for (g <- LocalGraph.fetch("modularity", und.select(col("src"), col("dst"), col("w")),
+        und.count(), maxDriverEdges, weighted = true,
+        guard = longEndpoints(und) &&
+          und.schema("w").dataType == DoubleType &&
+          tagged.schema("node").dataType == LongType &&
+          tagged.schema("comm").dataType == LongType)) {
       val byTag = tagged.select(col("tag"), col("node"), col("comm")).collect()
         .groupBy(_.getString(0))
-        .map { case (t, rows) =>
-          t -> rows.iterator.map(r => r.getLong(1) -> r.getLong(2)).toMap
-        }
       val spark = und.sparkSession
       import spark.implicits._
-      val out = byTag.toSeq.sortBy(_._1).map { case (t, assign) =>
+      val out = byTag.toSeq.sortBy(_._1).map { case (t, rows) =>
+        val comm = new Array[java.lang.Long](g.n) // null = unassigned
+        for (r <- rows; v = g.id(r.getLong(1)) if v >= 0) comm(v) = r.getLong(2)
         var m2 = 0.0
         val tot = scala.collection.mutable.Map.empty[Long, Double].withDefaultValue(0.0)
         val inw = scala.collection.mutable.Map.empty[Long, Double].withDefaultValue(0.0)
-        for ((s, d, w) <- edges) {
+        for (i <- g.src.indices) { // edge (fetch) order: the same float sums
+          val (ca, cb, w) = (comm(g.src(i)), comm(g.dst(i)), g.w(i))
           m2 += w
-          (assign.get(s), assign.get(d)) match {
-            case (Some(ca), Some(cb)) =>
-              tot(ca) += w
-              if (ca == cb) inw(ca) += w
-            case _ => // inner-join drop: either endpoint unassigned
+          // inner-join drop: either endpoint unassigned
+          if (ca != null && cb != null) {
+            tot(ca) += w
+            if (ca == cb) inw(ca) += w
           }
         }
         // groupBy(tag) over an empty per-community frame yields no rows
@@ -933,7 +804,7 @@ object Graphs {
     * nodes and repeats. Returns (node, community).
     */
   def louvain(edges: DataFrame, maxOuter: Int = 3, maxInner: Int = 8,
-              maxDriverEdges: Long = 2000000L): DataFrame =
+              maxDriverEdges: Long = LocalGraph.KneeEdges): DataFrame =
     louvainOnUnd(undirectedWeighted(edges).ckpt(), maxOuter, maxInner, maxDriverEdges)
 
   /** Louvain over a PREPARED (and already materialized)
@@ -941,7 +812,7 @@ object Graphs {
     * ckpt across louvain + labelPropagation + three modularity
     * referees instead of five derivations of the same graph. */
   def louvainOnUnd(und0: DataFrame, maxOuter: Int = 3, maxInner: Int = 8,
-                   maxDriverEdges: Long = 2000000L): DataFrame = {
+                   maxDriverEdges: Long = LocalGraph.KneeEdges): DataFrame = {
     // mapping original node -> current community (refined per level).
     // Built LAZILY (null until first needed): when the level-0 knee
     // fires — every bench SF — the driver map's keys are exactly
@@ -957,7 +828,7 @@ object Graphs {
     var level = 0
     var improvedOuter = true
     val longIds = longEndpoints(g) &&
-      g.schema("w").dataType == org.apache.spark.sql.types.DoubleType
+      g.schema("w").dataType == DoubleType
     var done = false
     while (level < maxOuter && improvedOuter && !done) {
       // one count job per level doubles as the emptiness probe (was a
@@ -974,10 +845,10 @@ object Graphs {
       // semantics (gain formula, parity gating, tie-breaks, thresholds,
       // convergence protocol) are mirrored line-for-line; only float
       // summation order differs, as it already does between AQE plans.
-      if (longIds && graft.plan.Knee.gate("louvain", gCount, maxDriverEdges)) {
-        val rows = g.select(col("src"), col("dst"), col("w")).collect()
-          .map(r => (r.getLong(0), r.getLong(1), r.getDouble(2)))
-          .sortBy(t => (t._1, t._2)) // run-deterministic float accumulation
+      for (lg <- LocalGraph.fetch("louvain", g.select(col("src"), col("dst"), col("w")), gCount,
+          maxDriverEdges, weighted = true, guard = longIds).map(_.sorted())) {
+        // sorted (src, dst): run-deterministic float accumulation
+        val rows = lg.src.indices.map(i => (lg.long(lg.src(i)), lg.long(lg.dst(i)), lg.w(i))).toArray
         val remap = louvainDriver(rows, maxOuter - level, maxInner)
         val spark = g.sparkSession
         import spark.implicits._
@@ -1127,33 +998,53 @@ object Graphs {
   /** DepthFirstSearch (algos/dfs.rs): DFS preorder from each start.
     * DFS order is inherently a sequential pointer walk — the reference
     * materializes the graph in memory and walks it; we do the same on
-    * the driver over the collected (capped) edge list. Only for graphs
-    * that fit the driver (DFS *order* is meaningless at 100 TB; use
-    * bfs/reachable for distributed traversal). Returns
-    * (start, node, order).
+    * the driver over the collected edge list (at most `maxEdges` edges,
+    * else an error). Only for graphs that fit the driver (DFS *order* is
+    * meaningless at 100 TB; use bfs/reachable for distributed
+    * traversal). Returns (start, node, order).
     */
   def dfs(edges: DataFrame, starts: DataFrame, maxDepth: Int = Int.MaxValue,
-          maxEdges: Long = 10000000L): DataFrame = {
+          maxEdges: Long = LocalGraph.WalkEdges): DataFrame = {
     val spark = edges.sparkSession
     import spark.implicits._
-    val es = edges.select(col("src").cast("long"), col("dst").cast("long"))
-      .limit(math.min(maxEdges, Int.MaxValue).toInt).as[(Long, Long)].collect()
-    val adj = es.groupBy(_._1).map { case (s, arr) => s -> arr.map(_._2).sorted }.toMap
+    val g = LocalGraph.walk("dfs",
+      edges.select(col("src").cast("long"), col("dst").cast("long")), maxEdges).sorted()
     val ss = starts.select(col("start").cast("long")).as[Long].collect().sorted
     val out = scala.collection.mutable.ArrayBuffer.empty[(Long, Long, Long)]
     ss.foreach { s =>
-      val seen = scala.collection.mutable.HashSet.empty[Long]
       var order = 0L
-      def walk(v: Long, depth: Int): Unit = {
-        if (depth <= maxDepth && !seen(v)) {
-          seen += v
-          out += ((s, v, order)); order += 1
-          adj.getOrElse(v, Array.empty[Long]).foreach(walk(_, depth + 1))
-        }
-      }
-      walk(s, 0)
+      val si = g.id(s)
+      if (si >= 0) preorder(g, si, maxDepth, _ => false, v => { out += ((s, g.long(v), order)); order += 1 })
+      else if (maxDepth >= 0) out += ((s, s, 0L))
     }
     out.toSeq.toDF("start", "node", "order")
+  }
+
+  /** The recursive preorder walk from `start` (children in row order)
+    * on an explicit (node, depth, next slot) stack, so chains of any
+    * length fit: a node is entered — `enter` sees it — when its depth
+    * is within `maxDepth` and it is unseen. Entering a `goal` node ends
+    * the walk with the path to it. */
+  private def preorder(g: LocalGraph, start: Int, maxDepth: Int, goal: Int => Boolean,
+                       enter: Int => Unit): Option[Seq[Int]] = {
+    val o = g.out
+    val seen = new Array[Boolean](g.n)
+    val stack = scala.collection.mutable.ArrayBuffer.empty[(Int, Int, Int)]
+    def hit(v: Int, depth: Int): Boolean = depth <= maxDepth && !seen(v) && {
+      seen(v) = true
+      enter(v)
+      goal(v) || { stack += ((v, depth, o.off(v))); false }
+    }
+    if (hit(start, 0)) return Some(Seq(start))
+    while (stack.nonEmpty) {
+      val (v, depth, p) = stack.last
+      if (p == o.off(v + 1)) stack.remove(stack.length - 1)
+      else {
+        stack(stack.length - 1) = (v, depth, p + 1)
+        if (hit(o.tgt(p), depth + 1)) return Some(stack.map(_._1).toSeq :+ o.tgt(p))
+      }
+    }
+    None
   }
 
   /** Goal-directed BFS with witness paths (algos/bfs.rs shape: inputs
@@ -1201,27 +1092,19 @@ object Graphs {
     * visited in sorted order; returns the first preorder path reaching
     * a goal, per start. Driver-side with a maxEdges cap; generic ids. */
   def pathDfs(edges: DataFrame, starts: DataFrame, goals: DataFrame,
-              maxEdges: Long = 10000000L): DataFrame = {
+              maxEdges: Long = LocalGraph.WalkEdges): DataFrame = {
     val spark = edges.sparkSession
     import spark.implicits._
-    val es = edges.select(col("src").cast("string"), col("dst").cast("string"))
-      .limit(math.min(maxEdges, Int.MaxValue).toInt).as[(String, String)].collect()
-    val adj = es.groupBy(_._1).map { case (s, arr) => s -> arr.map(_._2).distinct.sorted }.toMap
+    val g = LocalGraph.walk("pathDfs",
+      edges.select(col("src").cast("string"), col("dst").cast("string")), maxEdges).sorted()
     val goalSet = goals.select(col(goals.columns.head).cast("string")).as[String].collect().toSet
+    val isGoal = Array.tabulate(g.n)(v => goalSet(g.key(v).asInstanceOf[String]))
     val ss = starts.select(col("start").cast("string")).as[String].collect().sorted
-    val out = scala.collection.mutable.ArrayBuffer.empty[(String, String, Seq[String])]
-    ss.foreach { s =>
-      val seen = scala.collection.mutable.HashSet.empty[String]
-      var hit = false
-      def walk(v: String, path: List[String]): Unit = {
-        if (!hit && !seen(v)) {
-          seen += v
-          val p = v :: path
-          if (goalSet(v)) { out += ((s, v, p.reverse)); hit = true }
-          else adj.getOrElse(v, Array.empty[String]).foreach(walk(_, p))
-        }
-      }
-      walk(s, Nil)
+    val out = ss.flatMap { s =>
+      val si = g.id(s)
+      if (si < 0) Option.when(goalSet(s))((s, s, Seq(s)))
+      else preorder(g, si, Int.MaxValue, isGoal, _ => ())
+        .map(_.map(g.key(_).asInstanceOf[String])).map(p => (s, p.last, p))
     }
     out.toSeq.toDF("start", "goal", "path")
   }
@@ -1290,7 +1173,7 @@ object Graphs {
     * (src, dst, weight) with src < dst.
     */
   def minimumSpanningForest(edges: DataFrame, maxRounds: Int = 30,
-                            maxDriverEdges: Long = 2000000L): DataFrame = {
+                            maxDriverEdges: Long = LocalGraph.KneeEdges): DataFrame = {
     val w = if (edges.columns.contains("weight")) col("weight").cast("double") else lit(1.0)
     // canonical undirected edges a<b, min weight per pair
     val (es, esN) = edges.select(least(col("src"), col("dst")).as("a"),
@@ -1307,26 +1190,14 @@ object Graphs {
     // distinct-weight graph is unique. O(E log E) in memory beats
     // O(log V) distributed rounds of joins by ~two orders of magnitude
     // at this scale; the Borůvka loop below stays the 100 TB path.
-    if (graft.plan.Knee.gate("mst", esN, maxDriverEdges) &&
-        es.schema("a").dataType == org.apache.spark.sql.types.LongType &&
-        es.schema("b").dataType == org.apache.spark.sql.types.LongType) {
-      val rows = es.collect().map(r => (r.getDouble(2), r.getLong(0), r.getLong(1)))
-      java.util.Arrays.sort(rows, Ordering.Tuple3[Double, Long, Long])
-      val parent = scala.collection.mutable.Map.empty[Long, Long]
-      def find(x: Long): Long = {
-        var r = x
-        while (parent.getOrElse(r, r) != r) r = parent(r)
-        var c = x
-        while (parent.getOrElse(c, c) != c) { val nx = parent(c); parent(c) = r; c = nx }
-        r
-      }
-      val keep = rows.filter { case (_, a, b) =>
-        val (ra, rb) = (find(a), find(b))
-        if (ra == rb) false else { parent(math.max(ra, rb)) = math.min(ra, rb); true }
-      }
+    for (g <- LocalGraph.fetch("mst", es, esN, maxDriverEdges, weighted = true,
+        post = es.schema("a").dataType == LongType && es.schema("b").dataType == LongType)) {
+      val uf = new UnionFind(g.n)
+      val keep = g.src.indices.sortBy(i => (g.w(i), g.src(i), g.dst(i)))
+        .filter(i => uf.union(g.src(i), g.dst(i)))
       val spark = es.sparkSession
       import spark.implicits._
-      return keep.toSeq.map { case (wt, a, b) => (a, b, wt) }.toDF("src", "dst", "weight")
+      return keep.map(i => (g.long(g.src(i)), g.long(g.dst(i)), g.w(i))).toDF("src", "dst", "weight")
     }
     // Live edges CARRY their endpoints' current component labels
     // (ca/cb) instead of a node→comp side table: the old shape re-joined
@@ -1427,7 +1298,7 @@ object Graphs {
     */
   def closenessCentrality(edges: DataFrame, maxIter: Int = 30,
                           sample: Int = 1000,
-                          maxDriverEdges: Long = 2000000L): DataFrame = {
+                          maxDriverEdges: Long = LocalGraph.KneeEdges): DataFrame = {
     // scale knee: the multi-source sweep's OUTPUT is sources × reach
     // pairs, so the generic bfs knee would ship corpus²-ish rows off the
     // driver just to sum them — closeness aggregates per NODE, so the
@@ -1435,9 +1306,27 @@ object Graphs {
     // per node. Hop counts are exact integers, the closing division is
     // the same single IEEE op. Distributed sweep above the cap.
     val (und, nUnd) = undirected(edges).select("src", "dst").distinct().ckptCount()
-    import org.apache.spark.sql.types.LongType
-    if (graft.plan.Knee.gate("closeness", nUnd, maxDriverEdges) && und.schema("src").dataType == LongType)
-      return closenessDriver(und, nodes(edges), maxIter, sample)
+    // the node universe comes from the RAW edge relation (self-loop-only
+    // nodes count toward n and the sample); und endpoints are a subset
+    for (g <- LocalGraph.fetch("closeness", und, nUnd, maxDriverEdges,
+        post = und.schema("src").dataType == LongType, nodes = nodes(edges))) {
+      // the mirror: same hash-sampled sources, same bounded BFS hops,
+      // same (n−1)·s / (n·Σd) closing division
+      val spark = und.sparkSession
+      import spark.implicits._
+      val sources = g.sample(spark, sample)
+      val total = new Array[Double](g.n)
+      val depth = Array.fill(g.n)(-1)
+      val queue = new Array[Int](g.n)
+      for (si <- sources; v <- queue.take(g.out.bfs(si, maxIter, depth, queue))) {
+        if (v != si) total(v) += depth(v).toDouble
+        depth(v) = -1
+      }
+      val num = (g.n - 1).toDouble * sources.length
+      return (0 until g.n).map { v =>
+        (g.long(v), if (total(v) > 0) num / (g.n.toDouble * total(v)) else 0.0)
+      }.toDF("node", "closeness")
+    }
     // node set of the RAW edges: undirected() drops self-loops, but a
     // self-loop-only node still counts toward n and the sample (it just
     // reaches nothing)
@@ -1460,124 +1349,46 @@ object Graphs {
           .otherwise(lit(0.0)).as("closeness"))
   }
 
-  /** In-memory mirror of the sampled multi-source closeness sweep:
-    * same hash-sampled sources, same bounded BFS hops, same
-    * (n−1)·s / (n·Σd) closing division. */
-  private def closenessDriver(und: DataFrame, ns: DataFrame,
-                              maxIter: Int, sample: Int): DataFrame = {
-    val spark = und.sparkSession
-    import spark.implicits._
-    val es = und.collect().map(r => (r.getLong(0), r.getLong(1)))
-    // the node universe comes from the RAW edge relation (self-loop-only
-    // nodes count toward n and the sample); und endpoints are a subset
-    val dict = new java.util.HashMap[Long, Int]()
-    def idx(x: Long): Unit = if (!dict.containsKey(x)) dict.put(x, dict.size())
-    ns.collect().foreach(r => idx(r.getLong(0)))
-    es.foreach { case (a, b) => idx(a); idx(b) }
-    val n = dict.size()
-    val ids = new Array[Long](n)
-    dict.forEach((k, v) => ids(v) = k)
-    val s = math.min(sample.toLong, n.toLong).toInt
-    val srcIdx: Array[Int] =
-      if (s >= n) (0 until n).toArray
-      else {
-        // same sample as orderBy(xxhash64(node), node).limit(s): hashes
-        // computed BY Spark so the draw matches the distributed plan
-        val hs = spark.createDataset(ids.toSeq).toDF("node")
-          .select(col("node"), xxhash64(col("node")).as("__h"))
-          .collect().map(r => (r.getLong(0), r.getLong(1))).toMap
-        ids.zipWithIndex.sortBy { case (id, _) => (hs(id), id) }.take(s).map(_._2)
-      }
-    val deg = new Array[Int](n)
-    es.foreach { case (a, _) => deg(dict.get(a)) += 1 }
-    val off = new Array[Int](n + 1)
-    var i = 0
-    while (i < n) { off(i + 1) = off(i) + deg(i); i += 1 }
-    val fill = off.clone()
-    val tgt = new Array[Int](es.length)
-    es.foreach { case (a, b) => val ai = dict.get(a); tgt(fill(ai)) = dict.get(b); fill(ai) += 1 }
-    val total = new Array[Double](n)
-    val depth = new Array[Int](n)
-    java.util.Arrays.fill(depth, -1)
-    val queue = new Array[Int](n)
-    for (si <- srcIdx) {
-      depth(si) = 0; queue(0) = si
-      var head = 0; var tail = 1
-      while (head < tail) {
-        val v = queue(head); head += 1
-        val dv = depth(v)
-        if (dv < maxIter) {
-          var p = off(v)
-          while (p < off(v + 1)) {
-            val w = tgt(p)
-            if (depth(w) < 0) { depth(w) = dv + 1; queue(tail) = w; tail += 1 }
-            p += 1
-          }
-        }
-      }
-      var t = 0
-      while (t < tail) {
-        val v = queue(t)
-        if (v != si) total(v) += depth(v).toDouble
-        depth(v) = -1
-        t += 1
-      }
-    }
-    val num = (n - 1).toDouble * s
-    val out = (0 until n).map { v =>
-      (ids(v), if (total(v) > 0) num / (n.toDouble * total(v)) else 0.0)
-    }
-    out.toDF("node", "closeness")
-  }
-
   /** BetweennessCentrality — Brandes' accumulation is inherently
     * order-sensitive; like the reference (all_pairs_shortest_path.rs)
     * we run it on a materialized graph on the driver, capped. Returns
-    * (node, betweenness) for the undirected unweighted graph.
+    * (node, betweenness) for the undirected unweighted graph: every
+    * non-loop edge counts in both directions, parallel entries included.
     */
-  def betweennessCentrality(edges: DataFrame, maxEdges: Long = 10000000L): DataFrame = {
+  def betweennessCentrality(edges: DataFrame, maxEdges: Long = LocalGraph.WalkEdges): DataFrame = {
     val spark = edges.sparkSession
     import spark.implicits._
-    val es = edges.select(col("src").cast("long"), col("dst").cast("long"))
-      .limit(math.min(maxEdges, Int.MaxValue).toInt).as[(Long, Long)].collect()
-    val adj = scala.collection.mutable.HashMap.empty[Long, scala.collection.mutable.ArrayBuffer[Long]]
-    es.foreach { case (a, b) =>
-      if (a != b) {
-        adj.getOrElseUpdate(a, scala.collection.mutable.ArrayBuffer.empty) += b
-        adj.getOrElseUpdate(b, scala.collection.mutable.ArrayBuffer.empty) += a
+    val g = LocalGraph.walk("betweennessCentrality",
+      edges.select(col("src").cast("long"), col("dst").cast("long")), maxEdges)
+    val vs = (0 until g.n).filter(g.und.deg(_) > 0)
+    val bc = brandes(g.und, vs, Int.MaxValue)
+    vs.map(v => (g.long(v), bc(v) / 2.0)).toDF("node", "betweenness")
+  }
+
+  /** Brandes' dependency accumulation over the rows of `u`, summed over
+    * `sources`: per source a BFS bounded at `maxIter` hops counts
+    * shortest paths (sigma, exact integers), then each node, deepest
+    * first, pulls delta(v) = Σ_{w ∈ u(v), depth(w) = depth(v)+1}
+    * σv/σw·(1+δw) — the level-synchronous sweep of
+    * betweennessCentralityApprox, in memory. */
+  private def brandes(u: LocalGraph.Csr, sources: Seq[Int], maxIter: Int): Array[Double] = {
+    val acc = new Array[Double](u.n)
+    val depth = Array.fill(u.n)(-1)
+    val queue = new Array[Int](u.n)
+    val sigma = new Array[Double](u.n)
+    val delta = new Array[Double](u.n)
+    def next(v: Int) = u.nbrs(v).filter(depth(_) == depth(v) + 1)
+    for (s <- sources) {
+      val visited = queue.take(u.bfs(s, maxIter, depth, queue))
+      sigma(s) = 1.0
+      for (v <- visited; w <- next(v)) sigma(w) += sigma(v)
+      for (v <- visited.reverseIterator) {
+        for (w <- next(v)) delta(v) += sigma(v) / sigma(w) * (1.0 + delta(w))
+        if (v != s) acc(v) += delta(v)
       }
+      for (v <- visited) { depth(v) = -1; sigma(v) = 0.0; delta(v) = 0.0 }
     }
-    val vs = adj.keys.toArray.sorted
-    val bc = scala.collection.mutable.HashMap.empty[Long, Double].withDefaultValue(0.0)
-    vs.foreach { s =>
-      // Brandes single-source accumulation
-      val stack = scala.collection.mutable.Stack.empty[Long]
-      val preds = scala.collection.mutable.HashMap.empty[Long, scala.collection.mutable.ArrayBuffer[Long]]
-      val sigma = scala.collection.mutable.HashMap.empty[Long, Double].withDefaultValue(0.0)
-      val dist = scala.collection.mutable.HashMap.empty[Long, Long]
-      sigma(s) = 1.0; dist(s) = 0L
-      val queue = scala.collection.mutable.Queue(s)
-      while (queue.nonEmpty) {
-        val v = queue.dequeue()
-        stack.push(v)
-        adj.getOrElse(v, Nil).foreach { u =>
-          if (!dist.contains(u)) { dist(u) = dist(v) + 1; queue += u }
-          if (dist(u) == dist(v) + 1) {
-            sigma(u) += sigma(v)
-            preds.getOrElseUpdate(u, scala.collection.mutable.ArrayBuffer.empty) += v
-          }
-        }
-      }
-      val delta = scala.collection.mutable.HashMap.empty[Long, Double].withDefaultValue(0.0)
-      while (stack.nonEmpty) {
-        val u = stack.pop()
-        preds.getOrElse(u, Nil).foreach { v =>
-          delta(v) += sigma(v) / sigma(u) * (1.0 + delta(u))
-        }
-        if (u != s) bc(u) += delta(u)
-      }
-    }
-    vs.map(v => (v, bc(v) / 2.0)).toSeq.toDF("node", "betweenness")
+    acc
   }
 
   /** Distributed (optionally sampled) Brandes betweenness: the
@@ -1592,7 +1403,7 @@ object Graphs {
     * undirected /2 convention as the driver version. */
   def betweennessCentralityApprox(edges: DataFrame, sample: Int = 1000,
                                   maxIter: Int = 30,
-                                  maxDriverEdges: Long = 2000000L): DataFrame = {
+                                  maxDriverEdges: Long = LocalGraph.KneeEdges): DataFrame = {
     val spark = edges.sparkSession
     val (und, nUnd) = undirected(edges).select("src", "dst").distinct().ckptCount()
     // scale knee: below the cap the SAME level-synchronous forward /
@@ -1600,8 +1411,13 @@ object Graphs {
     // delta sums differ from the distributed groupBy only in float
     // summation order, which the 1e-6-relative referees tolerate — as
     // AQE plan changes already did). Distributed sweeps above the cap.
-    if (graft.plan.Knee.gate("betweenness", nUnd, maxDriverEdges))
-      return betweennessDriverLevels(und, sample, maxIter)
+    for (g <- LocalGraph.fetch("betweenness", und, nUnd, maxDriverEdges)) {
+      val sources = g.sample(spark, sample)
+      val acc = brandes(g.out, sources, maxIter)
+      val scale = if (sources.nonEmpty) g.n.toDouble / sources.length else 1.0
+      return LocalGraph.toDF(spark, (0 until g.n).map(v => Row(g.key(v), acc(v) * scale / 2.0)),
+        LocalGraph.keyField("node", g.keyType), StructField("betweenness", DoubleType, false))
+    }
     val ns = nodes(und).ckptLazy()
     val n = ns.count()
     val s = math.min(sample.toLong, n)
@@ -1667,70 +1483,6 @@ object Graphs {
       .select(col("node"), coalesce(col("betweenness"), lit(0.0)).as("betweenness"))
   }
 
-  /** In-memory mirror of the level-synchronous Brandes sweeps (see
-    * betweennessCentralityApprox): same sampled sources (smallest
-    * (xxhash64(node), node)), same per-level sigma accumulation, same
-    * backward delta(v) = Σ_{(v,w) edge, depth(w)=depth(v)+1}
-    * σv/σw·(1+δw), same n/s scaling and /2 convention. */
-  private def betweennessDriverLevels(und: DataFrame, sample: Int,
-                                      maxIter: Int): DataFrame = {
-    val spark = und.sparkSession
-    val adj = collectAdjAny(und)
-    val withHash = und.select(col("src").as("node"))
-      .union(und.select(col("dst").as("node"))).distinct()
-      .select(col("node"), xxhash64(col("node")).as("__h"))
-      .collect().map(r => (r.get(0), r.getLong(1)))
-    val nodesAll = withHash.map(_._1)
-    val n = nodesAll.length
-    val s = math.min(sample.toLong, n.toLong).toInt
-    val sources =
-      if (s >= n) nodesAll.toSeq
-      else withHash.sortBy { case (nd, h) => (h, nd.toString) }.take(s).map(_._1).toSeq
-    // NOTE: the distributed sample orders by (xxhash64(node), node) with
-    // node's native ordering; hash ties are 2^-64 events, so the
-    // toString tiebreak is unreachable in practice
-    val acc = scala.collection.mutable.HashMap.empty[Any, Double]
-    for (src <- sources) {
-      val depth = scala.collection.mutable.HashMap[Any, Int](src -> 0)
-      val sigma = scala.collection.mutable.HashMap[Any, Double](src -> 1.0)
-      var levels = List[Seq[Any]](Seq(src))
-      var frontier: Seq[Any] = Seq(src)
-      var d = 0
-      while (frontier.nonEmpty && d < maxIter) {
-        d += 1
-        val nextSigma = scala.collection.mutable.LinkedHashMap.empty[Any, Double]
-        for (v <- frontier; w <- adj.getOrElse(v, Nil)) if (!depth.contains(w) || depth(w) == d) {
-          if (!depth.contains(w)) depth(w) = d
-          nextSigma(w) = nextSigma.getOrElse(w, 0.0) + sigma(v)
-        }
-        // only nodes FIRST reached at this level keep a sigma (the
-        // left_anti against visited in the distributed sweep)
-        val lvl = nextSigma.keys.filter(w => depth(w) == d).toSeq
-        lvl.foreach(w => sigma(w) = nextSigma(w))
-        frontier = lvl
-        if (lvl.nonEmpty) levels = lvl :: levels
-        else frontier = Nil
-      }
-      // backward: levels is deepest-first
-      val delta = scala.collection.mutable.HashMap.empty[Any, Double]
-      for (lvl <- levels; v <- lvl) {
-        var dv = 0.0
-        for (w <- adj.getOrElse(v, Nil)) if (depth.contains(w) && depth(w) == depth(v) + 1)
-          dv += sigma(v) / sigma(w) * (1.0 + delta.getOrElse(w, 0.0))
-        if (dv != 0.0) delta(v) = dv
-        if (v != src) acc(v) = acc.getOrElse(v, 0.0) + delta.getOrElse(v, 0.0)
-      }
-    }
-    val scale = if (s > 0) n.toDouble / s.toDouble else 1.0
-    val out = nodesAll.map(nd =>
-      org.apache.spark.sql.Row(nd, acc.getOrElse(nd, 0.0) * scale / 2.0))
-    val schema = org.apache.spark.sql.types.StructType(Seq(
-      org.apache.spark.sql.types.StructField("node", und.schema("src").dataType),
-      org.apache.spark.sql.types.StructField("betweenness",
-        org.apache.spark.sql.types.DoubleType, nullable = false)))
-    spark.createDataFrame(spark.sparkContext.parallelize(out.toSeq, 1), schema)
-  }
-
   /** ShortestPathAStar (algos/astar.rs): driver-side A* over the
     * collected graph, like the reference's in-memory walk. `heuristic`
     * gives an admissible estimate to the goal (default 0 = Dijkstra).
@@ -1738,53 +1490,41 @@ object Graphs {
     */
   def aStar(edges: DataFrame, queries: Seq[(Long, Long)],
             heuristic: (Long, Long) => Double = (_, _) => 0.0,
-            maxEdges: Long = 10000000L): DataFrame = {
+            maxEdges: Long = LocalGraph.WalkEdges): DataFrame = {
     val spark = edges.sparkSession
     import spark.implicits._
-    val w = if (edges.columns.contains("weight")) col("weight").cast("double") else lit(1.0)
-    val es = edges.select(col("src").cast("long"), col("dst").cast("long"), w)
-      .limit(math.min(maxEdges, Int.MaxValue).toInt)
-      .as[(Long, Long, Double)].collect()
-    val adj = es.groupBy(_._1).map { case (s, arr) => s -> arr.map(t => (t._2, t._3)) }.toMap
+    val g = LocalGraph.walk("aStar",
+      edges.select(col("src").cast("long"), col("dst").cast("long"), weightCol(edges)),
+      maxEdges, weighted = true)
     // independent per-pair searches fan out over executors against the
-    // broadcast adjacency (the heuristic is goal-specific, so pairs —
-    // not starts — are the unit); results identical to the sequential
-    // loop, per-pair determinism unchanged
-    val sc = spark.sparkContext
-    val bc = sc.broadcast(adj)
-    val width = math.max(1, math.min(queries.length, sc.defaultParallelism * 2))
-    val out = sc.parallelize(queries.toIndexedSeq, width).flatMap { case (start, goal) =>
-      astarOne(bc.value, start, goal, heuristic).map { case (cost, path) => (start, goal, cost, path) }
+    // broadcast graph (the heuristic is goal-specific, so pairs — not
+    // starts — are the unit); results identical to the sequential loop
+    val out = fanOut(spark, g, queries) { (g, d, pairs) =>
+      pairs.flatMap { case (start, goal) =>
+        g.kShortest(d, start, goal, 1, v => heuristic(g.long(v), goal))
+          .map { case (cost, path) => (start, goal, cost, path.map(_.asInstanceOf[Long])) }
+      }
     }
     out.toDF("start", "goal", "cost", "path")
   }
 
-  private def astarOne(adj: Map[Long, Array[(Long, Double)]], start: Long, goal: Long,
-                       h: (Long, Long) => Double): Option[(Double, Seq[Long])] = {
-    val dist = scala.collection.mutable.HashMap.empty[Long, Double]
-    val prev = scala.collection.mutable.HashMap.empty[Long, Long]
-    val pq = scala.collection.mutable.PriorityQueue.empty[(Double, Double, Long)](
-      Ordering.by[(Double, Double, Long), Double](_._1).reverse)
-    dist(start) = 0.0
-    pq.enqueue((h(start, goal), 0.0, start))
-    while (pq.nonEmpty) {
-      val (_, d, v) = pq.dequeue()
-      if (v == goal) {
-        var path = List(goal); var cur = goal
-        while (cur != start) { cur = prev(cur); path = cur :: path }
-        return Some((d, path))
-      }
-      if (d <= dist.getOrElse(v, Double.MaxValue)) {
-        adj.getOrElse(v, Array.empty[(Long, Double)]).foreach { case (u, wu) =>
-          val nd = d + wu
-          if (nd < dist.getOrElse(u, Double.MaxValue)) {
-            dist(u) = nd; prev(u) = v
-            pq.enqueue((nd + h(u, goal), nd, u))
-          }
-        }
-      }
+  /** `weight` as a double, or 1.0 for an unweighted relation. */
+  private def weightCol(edges: DataFrame) =
+    if (edges.columns.contains("weight")) col("weight").cast("double") else lit(1.0)
+
+  /** Independent searches over one broadcast graph: `items` spread over
+    * executors, each partition running `run` with its own reusable
+    * [[LocalGraph.Dijkstra]] state. */
+  private def fanOut[A: scala.reflect.ClassTag, B: scala.reflect.ClassTag](
+      spark: SparkSession, g: LocalGraph, items: Seq[A])(
+      run: (LocalGraph, LocalGraph.Dijkstra, Iterator[A]) => Iterator[B]): org.apache.spark.rdd.RDD[B] = {
+    g.out // built once on the driver, shipped with the broadcast
+    val sc = spark.sparkContext
+    val bc = sc.broadcast(g)
+    val width = math.max(1, math.min(items.length, sc.defaultParallelism * 2))
+    sc.parallelize(items.toIndexedSeq, width).mapPartitions { it =>
+      run(bc.value, new LocalGraph.Dijkstra(bc.value.out), it)
     }
-    None
   }
 
   /** ShortestPathDijkstra in the reference's fixed-rule shape
@@ -1794,12 +1534,10 @@ object Graphs {
     * walk). Returns (src, dst, cost, path array<string>).
     */
   def dijkstraPaths(edges: DataFrame, starts: DataFrame, goals: DataFrame,
-                    maxEdges: Long = 10000000L): DataFrame = {
+                    maxEdges: Long = LocalGraph.WalkEdges): DataFrame = {
     val spark = edges.sparkSession
     import spark.implicits._
-    val adj = collectAdj(edges, maxEdges)
-    val ss = starts.select(starts.columns.head).collect().map(_.get(0).toString)
-    val gs = goals.select(goals.columns.head).collect().map(_.get(0).toString)
+    val (g, ss, gs) = pathInputs("dijkstraPaths", edges, starts, goals, maxEdges)
     // One single-source run per START, not one goal-terminated run per
     // (start, goal) PAIR: with h = 0 the pair run's pop sequence is a
     // prefix of the single-source run's, and dist/prev entries on a
@@ -1807,53 +1545,33 @@ object Graphs {
     // (non-negative weights — no post-pop strict improvement), so
     // reading each goal off the full run returns the IDENTICAL
     // (cost, path). Starts fan out over executors against the broadcast
-    // adjacency — the per-source searches are independent, and the
-    // collected graph is bounded by maxEdges exactly like the
-    // reference's driver walk. Measured at sf1 (600 starts × 600
-    // goals): 473 s driver-sequential pair loop → the per-start
-    // distributed sweep (360 000 pair answers unchanged).
-    val bc = spark.sparkContext.broadcast((adj, gs))
-    val width = math.max(1, math.min(ss.length,
-      spark.sparkContext.defaultParallelism * 2))
-    val out = spark.sparkContext.parallelize(ss.toIndexedSeq, width).flatMap { s =>
-      val (adjB, goalsB) = bc.value
-      val (dist, prev) = dijkstraFrom(adjB, s)
-      goalsB.iterator.flatMap { g =>
-        dist.get(g).map { d =>
-          var path = List(g); var cur = g
-          while (cur != s) { cur = prev(cur); path = cur :: path }
-          (s, g, d, path: Seq[String])
+    // graph (at sf1, 600 × 600 pairs: 473 s as a driver pair loop).
+    val out = fanOut(spark, g, ss) { (g, d, it) =>
+      it.flatMap { s =>
+        val si = g.id(s)
+        if (si >= 0) d.run(si)
+        gs.iterator.flatMap { goal =>
+          val v = g.id(goal)
+          if (si < 0) Option.when(goal == s)((s, goal, 0.0, Seq(s)))
+          else Option.when(v >= 0 && d.dist(v) < Double.MaxValue)(
+            (s, goal, d.dist(v), d.path(v, si).map(g.key(_).asInstanceOf[String])))
         }
       }
     }
     out.toDF("src", "dst", "cost", "path")
   }
 
-  /** Full single-source Dijkstra with [[astarBannedS]]'s exact relaxation
-    * and tie-break (no bans): strict-improvement prev updates, (cost,
-    * tiebreak) heap. Returns the final dist/prev maps. */
-  private def dijkstraFrom(adj: Map[String, Array[(String, Double)]], start: String)
-      : (scala.collection.mutable.HashMap[String, Double],
-         scala.collection.mutable.HashMap[String, String]) = {
-    val dist = scala.collection.mutable.HashMap.empty[String, Double]
-    val prev = scala.collection.mutable.HashMap.empty[String, String]
-    val pq = scala.collection.mutable.PriorityQueue.empty[(Double, Double, String)](
-      Ordering.by[(Double, Double, String), Double](_._1).reverse)
-    dist(start) = 0.0
-    pq.enqueue((0.0, 0.0, start))
-    while (pq.nonEmpty) {
-      val (_, d, v) = pq.dequeue()
-      if (d <= dist.getOrElse(v, Double.MaxValue)) {
-        adj.getOrElse(v, Array.empty[(String, Double)]).foreach { case (u, wu) =>
-          val nd = d + wu
-          if (nd < dist.getOrElse(u, Double.MaxValue)) {
-            dist(u) = nd; prev(u) = v
-            pq.enqueue((nd, nd, u))
-          }
-        }
-      }
-    }
-    (dist, prev)
+  /** The string-keyed inputs of the reference-shape path rules: the
+    * weighted graph — columns (from, to[, weight]) by position, each row
+    * sorted by (weight, target) — and the start and goal keys. */
+  private def pathInputs(op: String, edges: DataFrame, starts: DataFrame, goals: DataFrame,
+                         maxEdges: Long): (LocalGraph, Array[String], Array[String]) = {
+    val cs = edges.columns
+    val g = LocalGraph.walk(op, edges.select(col(cs(0)).cast("string"), col(cs(1)).cast("string"),
+        if (cs.length >= 3) col(cs(2)).cast("double") else weightCol(edges)),
+      maxEdges, weighted = true).sorted(byWeight = true)
+    def keys(df: DataFrame) = df.select(df.columns.head).collect().map(_.get(0).toString)
+    (g, keys(starts), keys(goals))
   }
 
   /** KShortestPathYen in the reference's fixed-rule shape:
@@ -1864,107 +1582,19 @@ object Graphs {
     * graph_dijkstra 473 s at sf1 before r11's fix). Per-pair results are
     * identical to the sequential loop. */
   def yenPaths(edges: DataFrame, starts: DataFrame, goals: DataFrame, k: Int,
-               maxEdges: Long = 10000000L): DataFrame = {
+               maxEdges: Long = LocalGraph.WalkEdges): DataFrame = {
     val spark = edges.sparkSession
     import spark.implicits._
-    val adj = collectAdj(edges, maxEdges)
-    val ss = starts.select(starts.columns.head).collect().map(_.get(0).toString)
-    val gs = goals.select(goals.columns.head).collect().map(_.get(0).toString)
-    val pairs = for { s <- ss.toIndexedSeq; g <- gs.toIndexedSeq } yield (s, g)
-    val sc = spark.sparkContext
-    val bc = sc.broadcast(adj)
-    val width = math.max(1, math.min(pairs.length, sc.defaultParallelism * 2))
-    val out = sc.parallelize(pairs, width).flatMap { case (s, g) =>
-      yenOneS(bc.value, s, g, k).zipWithIndex.map { case ((c, p), i) =>
-        (s, g, (i + 1).toLong, c, p)
+    val (g, ss, gs) = pathInputs("yenPaths", edges, starts, goals, maxEdges)
+    val pairs = for { s <- ss.toIndexedSeq; goal <- gs.toIndexedSeq } yield (s, goal)
+    val out = fanOut(spark, g, pairs) { (g, d, it) =>
+      it.flatMap { case (s, goal) =>
+        g.kShortest(d, s, goal, k).zipWithIndex.map { case ((c, p), i) =>
+          (s, goal, (i + 1).toLong, c, p.map(_.asInstanceOf[String]))
+        }
       }
     }
     out.toDF("src", "dst", "rank", "cost", "path")
-  }
-
-  private def collectAdj(edges: DataFrame, maxEdges: Long): Map[String, Array[(String, Double)]] = {
-    val spark = edges.sparkSession
-    import spark.implicits._
-    val w = if (edges.columns.contains("weight")) col("weight").cast("double") else lit(1.0)
-    val cs = edges.columns
-    edges.select(col(cs(0)).cast("string"), col(cs(1)).cast("string"),
-        (if (cs.length >= 3) col(cs(2)).cast("double") else w))
-      .limit(math.min(maxEdges, Int.MaxValue).toInt)
-      .as[(String, String, Double)].collect()
-      .groupBy(_._1).map { case (s, arr) => s -> arr.map(t => (t._2, t._3)).sortBy(x => (x._2, x._1)) }
-  }
-
-  /** [[astarOne]]'s string-keyed twin with h = 0 and (edge, node) bans applied during
-    * relaxation — semantically identical to running it on an adjacency
-    * with those entries removed, without materializing that copy. */
-  private def astarBannedS(adj: Map[String, Array[(String, Double)]],
-                           start: String, goal: String,
-                           banned: Set[(String, String)],
-                           bannedNodes: Set[String]): Option[(Double, Seq[String])] = {
-    val dist = scala.collection.mutable.HashMap.empty[String, Double]
-    val prev = scala.collection.mutable.HashMap.empty[String, String]
-    val pq = scala.collection.mutable.PriorityQueue.empty[(Double, Double, String)](
-      Ordering.by[(Double, Double, String), Double](_._1).reverse)
-    dist(start) = 0.0
-    pq.enqueue((0.0, 0.0, start))
-    while (pq.nonEmpty) {
-      val (_, d, v) = pq.dequeue()
-      if (v == goal) {
-        var path = List(goal); var cur = goal
-        while (cur != start) { cur = prev(cur); path = cur :: path }
-        return Some((d, path))
-      }
-      if (d <= dist.getOrElse(v, Double.MaxValue)) {
-        adj.getOrElse(v, Array.empty[(String, Double)]).foreach { case (u, wu) =>
-          if (!banned.contains((v, u)) && !bannedNodes.contains(u)) {
-            val nd = d + wu
-            if (nd < dist.getOrElse(u, Double.MaxValue)) {
-              dist(u) = nd; prev(u) = v
-              pq.enqueue((nd, nd, u))
-            }
-          }
-        }
-      }
-    }
-    None
-  }
-
-  private def yenOneS(adj: Map[String, Array[(String, Double)]], start: String, goal: String,
-                      k: Int): Seq[(Double, Seq[String])] = {
-    // ban checks live INSIDE the relaxation (astarBannedS) — copying the
-    // whole filtered adjacency map per spur search was O(E) per spur
-    // (r11 verdict #5); skipping a banned edge at relax time visits the
-    // identical node sequence (h = 0, same heap order)
-    def shortest(banned: Set[(String, String)], bannedNodes: Set[String],
-                 from: String): Option[(Double, Seq[String])] =
-      if (bannedNodes.contains(from)) None
-      else astarBannedS(adj, from, goal, banned, bannedNodes)
-    val found = scala.collection.mutable.ArrayBuffer.empty[(Double, Seq[String])]
-    val candidates = scala.collection.mutable.PriorityQueue.empty[(Double, Seq[String])](
-      Ordering.by[(Double, Seq[String]), Double](_._1).reverse)
-    shortest(Set.empty, Set.empty, start).foreach(found += _)
-    var i = 1
-    while (i < k && found.nonEmpty && i <= found.length) {
-      val (_, prevPath) = found(i - 1)
-      for (j <- prevPath.indices.dropRight(1)) {
-        val spurNode = prevPath(j)
-        val rootPath = prevPath.take(j + 1)
-        val banned = found.map(_._2).filter(p => p.length > j + 1 && p.take(j + 1) == rootPath)
-          .map(p => (p(j), p(j + 1))).toSet
-        val bannedNodes = rootPath.dropRight(1).toSet
-        shortest(banned, bannedNodes, spurNode).foreach { case (spurCost, spurPath) =>
-          val rootCost = rootPath.sliding(2).collect { case Seq(a, b) =>
-            adj.getOrElse(a, Array.empty[(String, Double)]).find(_._1 == b).map(_._2).getOrElse(0.0)
-          }.sum
-          val full = (rootCost + spurCost, rootPath.dropRight(1) ++ spurPath)
-          if (!found.exists(_._2 == full._2) && !candidates.exists(_._2 == full._2))
-            candidates.enqueue(full)
-        }
-      }
-      if (candidates.nonEmpty) found += candidates.dequeue()
-      i += 1
-    }
-    found.toSeq
   }
 
   /** KShortestPathYen (algos/yen.rs): Yen's algorithm on the driver
@@ -1972,50 +1602,17 @@ object Graphs {
     * (start, goal, rank, cost, path).
     */
   def kShortestPaths(edges: DataFrame, start: Long, goal: Long, k: Int,
-                     maxEdges: Long = 10000000L): DataFrame = {
+                     maxEdges: Long = LocalGraph.WalkEdges): DataFrame = {
     val spark = edges.sparkSession
     import spark.implicits._
-    val w = if (edges.columns.contains("weight")) col("weight").cast("double") else lit(1.0)
-    val es = edges.select(col("src").cast("long"), col("dst").cast("long"), w)
-      .limit(math.min(maxEdges, Int.MaxValue).toInt)
-      .as[(Long, Long, Double)].collect()
-    val baseAdj = es.groupBy(_._1).map { case (s, arr) => s -> arr.map(t => (t._2, t._3)) }.toMap
-    def shortest(banned: Set[(Long, Long)], bannedNodes: Set[Long],
-                 from: Long): Option[(Double, Seq[Long])] = {
-      val adj = baseAdj.map { case (s, arr) =>
-        s -> arr.filter { case (u, _) => !banned.contains((s, u)) && !bannedNodes.contains(u) }
+    val g = LocalGraph.walk("kShortestPaths",
+      edges.select(col("src").cast("long"), col("dst").cast("long"), weightCol(edges)),
+      maxEdges, weighted = true)
+    g.kShortest(new LocalGraph.Dijkstra(g.out), start, goal, k).zipWithIndex
+      .map { case ((cost, path), rank) =>
+        (start, goal, (rank + 1).toLong, cost, path.map(_.asInstanceOf[Long]))
       }
-      if (bannedNodes.contains(from)) None else astarOne(adj, from, goal, (_, _) => 0.0)
-    }
-    val found = scala.collection.mutable.ArrayBuffer.empty[(Double, Seq[Long])]
-    val candidates = scala.collection.mutable.PriorityQueue.empty[(Double, Seq[Long])](
-      Ordering.by[(Double, Seq[Long]), Double](_._1).reverse)
-    shortest(Set.empty, Set.empty, start).foreach(found += _)
-    var i = 1
-    while (i < k && found.nonEmpty) {
-      val (_, prevPath) = found(i - 1)
-      for (j <- prevPath.indices.dropRight(1)) {
-        val spurNode = prevPath(j)
-        val rootPath = prevPath.take(j + 1)
-        val banned = found.map(_._2).filter(_.take(j + 1) == rootPath)
-          .filter(_.length > j + 1)
-          .map(p => (p(j), p(j + 1))).toSet
-        val bannedNodes = rootPath.dropRight(1).toSet
-        shortest(banned, bannedNodes, spurNode).foreach { case (spurCost, spurPath) =>
-          val rootCost = rootPath.sliding(2).collect { case Seq(a, b) =>
-            baseAdj.getOrElse(a, Array.empty[(Long, Double)]).find(_._1 == b).map(_._2).getOrElse(0.0)
-          }.sum
-          val full = (rootCost + spurCost, rootPath.dropRight(1) ++ spurPath)
-          if (!found.exists(_._2 == full._2) && !candidates.exists(_._2 == full._2))
-            candidates.enqueue(full)
-        }
-      }
-      if (candidates.isEmpty) i = k
-      else { found += candidates.dequeue(); i += 1 }
-    }
-    found.zipWithIndex
-      .map { case ((cost, path), rank) => (start, goal, (rank + 1).toLong, cost, path) }
-      .toSeq.toDF("start", "goal", "rank", "cost", "path")
+      .toDF("start", "goal", "rank", "cost", "path")
   }
 
   /** RandomWalk (algos/random_walk.rs) made deterministic: at each step
@@ -2024,20 +1621,18 @@ object Graphs {
     * cluster sizes (true RNG per task is not).
     */
   def randomWalk(edges: DataFrame, starts: DataFrame, steps: Int,
-                 maxDriverEdges: Long = 2000000L): DataFrame = {
-    val e = edges.select("src", "dst").distinct().ckpt()
+                 maxDriverEdges: Long = LocalGraph.KneeEdges): DataFrame = {
+    val (e, nE) = edges.select("src", "dst").distinct().ckptCount()
     // scale knee (same gate as the other driver mirrors): the walk's
     // "randomness" is xxhash64(walk_id, step, dst) — pure integer
     // arithmetic — so the driver mirror is EXACT, not merely
     // rounding-equivalent: per live walk it picks the dst minimizing
     // (h, dst), the same total order min_by used. Pinned
     // driver==distributed by GraphsSpec.
-    if (longEndpoints(e) &&
-        starts.schema("walk_id").dataType == org.apache.spark.sql.types.LongType &&
-        starts.schema("start").dataType == org.apache.spark.sql.types.LongType &&
-        graft.plan.Knee.gate("randomWalk", e.count(), maxDriverEdges)) {
-      val adj = e.collect().map(r => (r.getLong(0), r.getLong(1)))
-        .groupBy(_._1).map { case (s0, arr) => s0 -> arr.map(_._2) }
+    for (g <- LocalGraph.fetch("randomWalk", e, nE, maxDriverEdges,
+        guard = longEndpoints(e) && starts.schema("walk_id").dataType == LongType &&
+          starts.schema("start").dataType == LongType)) {
+      val o = g.out
       val st = starts.select(col("walk_id"), col("start")).collect()
         .map(r => (r.getLong(0), r.getLong(1))).sortBy(identity)
       import org.apache.spark.sql.catalyst.expressions.XXH64
@@ -2048,21 +1643,17 @@ object Graphs {
         XXH64.hashLong(dst, XXH64.hashInt(step, XXH64.hashLong(wid, 42L)))
       val out = scala.collection.mutable.ArrayBuffer.empty[(Long, Long, Long, Int)]
       for ((wid, start) <- st) out += ((wid, start, start, 0))
-      var frontier: Array[(Long, Long, Long)] = st.map { case (wid, s0) => (wid, s0, s0) }
+      // (walk, start, node id); a sink or a start outside the graph ends its walk
+      var frontier = st.map { case (wid, s0) => (wid, s0, g.id(s0)) }
       var s = 0
       while (s < steps && frontier.nonEmpty) {
-        frontier = frontier.flatMap { case (wid, start, node) =>
-          adj.get(node) match {
-            case Some(ds) =>
-              // __h hashes the PRE-increment step (the frontier's step
-              // column), exactly as the DataFrame select computed it
-              val best = ds.iterator.map(d => (h3(wid, s, d), d)).min
-              Some((wid, start, best._2))
-            case None => None // sink: the walk ends here
-          }
+        frontier = frontier.filter(f => f._3 >= 0 && o.deg(f._3) > 0).map { case (wid, start, v) =>
+          // __h hashes the PRE-increment step (the frontier's step
+          // column), exactly as the DataFrame select computed it
+          (wid, start, o.nbrs(v).minBy(d => (h3(wid, s, g.long(d)), d)))
         }
         s += 1
-        for ((wid, start, node) <- frontier) out += ((wid, start, node, s))
+        for ((wid, start, v) <- frontier) out += ((wid, start, g.long(v), s))
       }
       val spark = e.sparkSession
       import spark.implicits._

@@ -242,6 +242,16 @@ class GraphFuzzSpec extends AnyFunSuite {
   }
 
   test("driver knees ≡ distributed loops: bfs / reachable / shortestPaths / betweenness (5 seeds)") {
+    // every row's values, numbers widened to long: one shape for Long-
+    // and string-keyed graphs and for int/long depth columns
+    def rows(df: org.apache.spark.sql.DataFrame): Set[Seq[Any]] =
+      df.collect().map(_.toSeq.map { case i: java.lang.Integer => i.toLong; case x => x }).toSet
+    def scores(df: org.apache.spark.sql.DataFrame): Map[Any, Double] =
+      df.collect().map(r => r.get(0) -> r.getDouble(1)).toMap
+    def close(a: Map[Any, Double], b: Map[Any, Double], what: String): Unit = {
+      assert(a.keySet == b.keySet, s"$what keys")
+      for ((k, x) <- a) assert(math.abs(x - b(k)) <= 1e-9 * (math.abs(b(k)) + 1.0), s"$what node $k")
+    }
     for (seed <- 0 until 5) {
       val rnd = new scala.util.Random(seed * 104729 + 11)
       val raw = randEdges(rnd, 8 + rnd.nextInt(6), 14 + rnd.nextInt(14)).filter(e => e._1 != e._2)
@@ -272,8 +282,52 @@ class GraphFuzzSpec extends AnyFunSuite {
         assert(drvB.keySet == distB.keySet, s"btw keys seed $seed")
         for ((k, a) <- drvB; b = distB(k))
           assert(math.abs(a - b) <= 1e-9 * (math.abs(b) + 1.0), s"btw seed $seed node $k: $a vs $b")
+        // closeness: exact integer hop sums and one closing division on
+        // both engines, so the scores match exactly — all sources (seed
+        // 0), and a 3-source hash sample (seed 1)
+        if (seed < 2) {
+          val sample = Seq(1000, 3)(seed)
+          assert(scores(Graphs.closenessCentrality(e, sample = sample)) ==
+            scores(Graphs.closenessCentrality(e, sample = sample, maxDriverEdges = 0L)),
+            s"closeness sample $sample seed $seed")
+        }
+        // the same graph with string node ids (the generic-key driver
+        // paths the FixedRules string graphs take)
+        if (seed == 0) {
+          val se = raw.map { case (a, b) => (s"n$a", s"n$b") }.toDF("src", "dst")
+          val sst = raw.map(t => s"n${t._1}").distinct.take(3).toDF("start")
+          assert(rows(Graphs.bfs(se, sst, 3)) == rows(Graphs.bfs(se, sst, 3, maxDriverEdges = 0L)),
+            s"string bfs seed $seed")
+          assert(rows(Graphs.reachable(se, sst, 3)) ==
+            rows(Graphs.reachable(se, sst, 3, maxDriverEdges = 0L)), s"string reach seed $seed")
+          val swe = raw.map { case (a, b) => (s"n$a", s"n$b", ((a * 7 + b * 13) % 5 + 1).toDouble) }
+            .toDF("src", "dst", "weight")
+          assert(rows(Graphs.shortestPaths(swe, sst, maxIter = 6)) ==
+            rows(Graphs.shortestPaths(swe, sst, maxIter = 6, maxDriverEdges = 0L)),
+            s"string ssp seed $seed")
+          close(scores(Graphs.betweennessCentralityApprox(se, sample = Int.MaxValue)),
+            scores(Graphs.betweennessCentralityApprox(se, sample = Int.MaxValue, maxDriverEdges = 0L)),
+            s"string btw seed $seed")
+        }
       }
     }
+    // the gate boundary: n distinct edges against maxDriverEdges = n
+    // (driver) and n - 1 (distributed) — identical rows, and the logged
+    // knee decision flips
+    val e = randEdges(new scala.util.Random(7), 10, 20).filter(t => t._1 != t._2).toDF("src", "dst")
+    val starts = Seq(0L, 1L, 2L).toDF("start")
+    val n = e.distinct().count()
+    val err = new java.io.ByteArrayOutputStream()
+    val stderr = System.err
+    System.setErr(new java.io.PrintStream(err, true))
+    val (atGate, belowGate) = try {
+      (rows(Graphs.bfs(e, starts, 3, maxDriverEdges = n)),
+        rows(Graphs.bfs(e, starts, 3, maxDriverEdges = n - 1)))
+    } finally System.setErr(stderr)
+    assert(atGate == belowGate, "bfs at the gate boundary")
+    val logged = err.toString.linesIterator.toSet
+    assert(logged(s"graft.knee op=bfs n=$n gate=$n branch=driver"), logged)
+    assert(logged(s"graft.knee op=bfs n=$n gate=${n - 1} branch=distributed"), logged)
   }
 
   test("distributed Borůvka ≡ driver Kruskal on unique-weight graphs (6 seeds)") {

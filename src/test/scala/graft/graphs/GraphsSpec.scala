@@ -109,6 +109,30 @@ class GraphsSpec extends AnyFunSuite {
     assert(order == Seq(1L, 2L, 4L, 3L)) // children visited in sorted order
   }
 
+  test("driver walks raise past maxEdges instead of walking a truncated prefix") {
+    val starts = Seq(1L).toDF("start")
+    val goals = Seq(4L).toDF("goal")
+    for ((op, run) <- Seq[(String, () => Any)](
+        "dijkstraPaths" -> (() => Graphs.dijkstraPaths(wEdges, starts, goals, maxEdges = 2)),
+        "dfs" -> (() => Graphs.dfs(wEdges, starts, maxEdges = 2)),
+        "yenPaths" -> (() => Graphs.yenPaths(wEdges, starts, goals, 2, maxEdges = 2)))) {
+      val e = intercept[IllegalStateException](run())
+      assert(e.getMessage.contains(op) && e.getMessage.contains("maxEdges = 2"), e.getMessage)
+    }
+    // the whole graph at the cap: the shortest 1→4 path is found
+    val r = Graphs.dijkstraPaths(wEdges, starts, goals, maxEdges = 5).collect().head
+    assert(r.getDouble(2) == 3.0 && r.getSeq[String](3) == Seq("1", "2", "3", "4"))
+  }
+
+  test("pathDfs walks a 100,000-node chain without recursion") {
+    val n = 100000L
+    val chain = (0L until n - 1).map(i => (i, i + 1)).toDF("src", "dst")
+    val rows = Graphs.pathDfs(chain, Seq(0L).toDF("start"), Seq(n - 1).toDF("goal")).collect()
+    assert(rows.length == 1)
+    val path = rows.head.getSeq[String](2)
+    assert(path.length == n && path.head == "0" && path.last == (n - 1).toString)
+  }
+
   test("louvain groups two cliques joined by one edge") {
     val clique1 = for (a <- 1L to 4L; b <- 1L to 4L if a < b) yield (a, b)
     val clique2 = for (a <- 11L to 14L; b <- 11L to 14L if a < b) yield (a, b)
