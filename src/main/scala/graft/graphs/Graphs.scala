@@ -15,12 +15,12 @@ import org.apache.spark.sql.types.{DoubleType, IntegerType, LongType, StructFiel
   * optional `weight` (DoubleType). The reference materializes edges into
   * a compact in-memory graph before running (fixed_rule/mod.rs:136-260).
   * Here most algorithms are a scale knee (`graft.plan.Knee`): a graph
-  * with at most `maxDriverEdges` edges is fetched once into a
+  * with at most `Knee.GraphEdges` edges is fetched once into a
   * [[LocalGraph]] and the same algorithm runs in memory on the driver;
   * above the gate a sequence of joins/aggregations partitions across
   * executors. The inherently sequential walks (DFS order, exact
   * Brandes, A*, Dijkstra/Yen witness paths) always run on a
-  * [[LocalGraph]] and raise an error past `maxEdges`.
+  * [[LocalGraph]] and raise an error past `Knee.WalkEdges`.
   *
   * Scale notes: all self-joins are equi-joins on node ids (shuffle-hash
   * or broadcast via AQE); iterative algorithms localCheckpoint per round
@@ -81,14 +81,13 @@ object Graphs {
     * dangling-mass redistribution, `iters` synchronous rounds.
     * Returns (node, rank) with ranks summing to ~1.
     */
-  def pageRank(edges: DataFrame, iters: Int = 10, damping: Double = 0.85,
-               maxDriverEdges: Long = LocalGraph.KneeEdges): DataFrame = {
+  def pageRank(edges: DataFrame, iters: Int = 10, damping: Double = 0.85): DataFrame = {
     val (e, nE) = edges.select("src", "dst").distinct().ckptCount()
     // scale knee: a graph that fits the driver runs the identical
     // synchronous iteration in memory — the reference is in-memory
     // always; above the cap the distributed loop below takes over.
     // Edges are SORTED so float accumulation order is run-deterministic.
-    for (g <- LocalGraph.fetch("pageRank", e, nE, maxDriverEdges, guard = longEndpoints(e)))
+    for (g <- LocalGraph.fetch("pageRank", e, nE, guard = longEndpoints(e)))
       return pageRankDriver(e.sparkSession, g.sorted(), iters, damping)
     val ns = nodes(e).ckpt()
     val n = ns.count().toDouble
@@ -162,8 +161,7 @@ object Graphs {
   private def numericCol(df: DataFrame, c: String): Boolean =
     df.schema(c).dataType.isInstanceOf[org.apache.spark.sql.types.NumericType]
 
-  def connectedComponents(edges: DataFrame, maxIter: Int = 50,
-                          maxDriverEdges: Long = LocalGraph.KneeEdges): DataFrame = {
+  def connectedComponents(edges: DataFrame, maxIter: Int = 50): DataFrame = {
     // materialize the edge projection ONCE: `edges` may be an expensive
     // derived plan (e.g. the event-window graph), and both the
     // undirected relation and the node seeding need it — deriving both
@@ -174,8 +172,7 @@ object Graphs {
     // scale knee: the output (node → min id of its component) is fully
     // SET-determined — any correct algorithm emits identical rows — so
     // a union-find under the cap is a pure execution-engine switch
-    for (g <- LocalGraph.fetch("connectedComponents", raw, nRaw, maxDriverEdges,
-        guard = longEndpoints(raw))) {
+    for (g <- LocalGraph.fetch("connectedComponents", raw, nRaw, guard = longEndpoints(raw))) {
       val uf = new UnionFind(g.n)
       for (i <- g.src.indices) uf.union(g.src(i), g.dst(i))
       return labels(raw, g, Array.tabulate(g.n)(uf.find), "comp")
@@ -284,19 +281,16 @@ object Graphs {
     * each node adopts the most frequent neighbor label, ties broken by
     * the smaller label for determinism.
     */
-  def labelPropagation(edges: DataFrame, iters: Int = 5,
-                       maxDriverEdges: Long = LocalGraph.KneeEdges): DataFrame =
-    labelPropagationOnUnd(undirected(edges).ckpt(), iters, maxDriverEdges)
+  def labelPropagation(edges: DataFrame, iters: Int = 5): DataFrame =
+    labelPropagationOnUnd(undirected(edges).ckpt(), iters)
 
   /** Label propagation over a PREPARED (already materialized) distinct
     * undirected pair set — the (src, dst) projection of
     * [[undirectedWeighted]] is exactly this relation. */
-  def labelPropagationOnUnd(und: DataFrame, iters: Int = 5,
-                            maxDriverEdges: Long = LocalGraph.KneeEdges): DataFrame = {
+  def labelPropagationOnUnd(und: DataFrame, iters: Int = 5): DataFrame = {
     // scale knee: votes are integers and the tie-break is total, so
     // the in-memory mirror is bit-identical to the distributed rounds
-    for (g <- LocalGraph.fetch("labelPropagation", und, und.count(), maxDriverEdges,
-        guard = longEndpoints(und)))
+    for (g <- LocalGraph.fetch("labelPropagation", und, und.count(), guard = longEndpoints(und)))
       return labels(und, g, lpDriver(g, iters), "label")
     var lab = nodes(und).withColumn("label", col("node")).ckpt()
     var i = 0
@@ -336,15 +330,14 @@ object Graphs {
     * hop count from each start node, frontier-expanded, bounded by
     * `maxHops`. Returns (start, node, depth).
     */
-  def bfs(edges: DataFrame, starts: DataFrame, maxHops: Int,
-          maxDriverEdges: Long = LocalGraph.KneeEdges): DataFrame = {
+  def bfs(edges: DataFrame, starts: DataFrame, maxHops: Int): DataFrame = {
     // scale knee (the same pattern as pageRank/louvain/topSort — the
     // reference's bfs.rs walks a fully materialized graph): below the
     // cap the level walk runs in memory with identical min-hop
     // semantics; distributed shapes (bitmap levels, meetMin fallback)
     // above it
     val (e, nE) = edges.select("src", "dst").distinct().ckptCount()
-    for (g <- LocalGraph.fetch("bfs", e, nE, maxDriverEdges)) return bfsDriver(g, starts, maxHops)
+    for (g <- LocalGraph.fetch("bfs", e, nE)) return bfsDriver(g, starts, maxHops)
     bfsLevels(e, starts, maxHops).getOrElse {
       val base = starts.select(col("start"), col("start").as("node"), lit(0).as("depth"))
       Fixpoint.meetMin(base,
@@ -465,12 +458,11 @@ object Graphs {
     * ≤ `hops` edges. Equivalent to bfs(...).select(start,node) but kept
     * as the semi-naive transitive-closure shape of eval.rs:571-610.
     */
-  def reachable(edges: DataFrame, starts: DataFrame, hops: Int,
-                maxDriverEdges: Long = LocalGraph.KneeEdges): DataFrame = {
+  def reachable(edges: DataFrame, starts: DataFrame, hops: Int): DataFrame = {
     val (e, nE) = edges.select("src", "dst").distinct().ckptCount()
     // scale knee: ≤ `hops` reachability over a driver-sized graph is
     // the bfsDriver walk minus the depth column (same base rows)
-    for (g <- LocalGraph.fetch("reachable", e, nE, maxDriverEdges))
+    for (g <- LocalGraph.fetch("reachable", e, nE))
       return bfsDriver(g, starts, hops).select("start", "node")
     val base = starts.select(col("start"), col("start").as("node"))
     Fixpoint.boundedExpand(base,
@@ -485,12 +477,11 @@ object Graphs {
     * on a materialized graph; a PQ is driver-sequential, relaxation
     * partitions. Unweighted edges get weight 1. Returns (start, node, cost).
     */
-  def shortestPaths(edges: DataFrame, starts: DataFrame, maxIter: Int = 30,
-                    maxDriverEdges: Long = LocalGraph.KneeEdges): DataFrame = {
+  def shortestPaths(edges: DataFrame, starts: DataFrame, maxIter: Int = 30): DataFrame = {
     // unit weights: min cost ≡ min hops — the bfs knee/bitmap chain
     // applies directly (bfs carries its own driver knee)
     if (!edges.columns.contains("weight"))
-      return bfs(edges, starts, maxIter, maxDriverEdges)
+      return bfs(edges, starts, maxIter)
         .select(col("start"), col("node"), col("depth").cast("double").as("cost"))
     val (e, nE) = edges.select(col("src"), col("dst"), col("weight").cast("double").as("weight"))
       .distinct().ckptCount()
@@ -499,7 +490,7 @@ object Graphs {
     // one edge, folded with min; costs accumulate along the path in the
     // same order, so values are bit-identical, including the maxIter
     // hop bound
-    for (g <- LocalGraph.fetch("shortestPaths", e, nE, maxDriverEdges, weighted = true))
+    for (g <- LocalGraph.fetch("shortestPaths", e, nE, weighted = true))
       return sspDriver(g, starts, maxIter)
     val base = starts.select(col("start"), col("start").as("node"), lit(0.0).as("cost"))
     Fixpoint.meetMin(base,
@@ -540,13 +531,12 @@ object Graphs {
     * as a complete grading. Layer count = longest path, so at scale
     * bound the input's depth (sample/cut) rather than raising maxIter.
     */
-  def topSort(edges: DataFrame, maxIter: Int = 100,
-              maxDriverEdges: Long = LocalGraph.KneeEdges): DataFrame = {
+  def topSort(edges: DataFrame, maxIter: Int = 100): DataFrame = {
     val (distinctEdges, nD) = edges.select("src", "dst").distinct().ckptCount()
     // scale knee: the layer assignment (Kahn peel round = longest path
     // from a source) is set-determined, so the in-memory peel emits
     // identical rows — and the same cycle/maxIter error contracts
-    for (g <- LocalGraph.fetch("topSort", distinctEdges, nD, maxDriverEdges,
+    for (g <- LocalGraph.fetch("topSort", distinctEdges, nD,
         guard = longEndpoints(distinctEdges))) {
       val spark = distinctEdges.sparkSession
       import spark.implicits._
@@ -626,15 +616,14 @@ object Graphs {
     * few rounds on real graphs. Returns (node, comp) with comp = min
     * member id.
     */
-  def stronglyConnectedComponents(edges: DataFrame, maxRounds: Int = 20,
-                                  maxDriverEdges: Long = LocalGraph.KneeEdges): DataFrame = {
+  def stronglyConnectedComponents(edges: DataFrame, maxRounds: Int = 20): DataFrame = {
     // one evaluation of the (possibly derived) input plan; live edges
     // and the node seeding both read the checkpoint
     val (raw, nRaw) = edges.select("src", "dst").ckptCount()
     // scale knee: (node → min member of its SCC) is set-determined, so
     // iterative Tarjan under the cap emits identical rows to the
     // distributed FW-BW-MIN peeling
-    for (g <- LocalGraph.fetch("scc", raw, nRaw, maxDriverEdges, guard = longEndpoints(raw)))
+    for (g <- LocalGraph.fetch("scc", raw, nRaw, guard = longEndpoints(raw)))
       return labels(raw, g, sccDriver(g), "comp")
     var live = raw.filter(col("src") =!= col("dst"))
       .distinct().ckpt()
@@ -737,8 +726,7 @@ object Graphs {
     * one assignment per distinct tag, each covering every endpoint of
     * `und`. Returns (tag, q). One und⋈assign⋈assign + aggregate
     * replaces a separate join+agg program per assignment. */
-  def modularityByTag(und: DataFrame, tagged: DataFrame,
-                      maxDriverEdges: Long = LocalGraph.KneeEdges): DataFrame = {
+  def modularityByTag(und: DataFrame, tagged: DataFrame): DataFrame = {
     // scale knee (same pattern and gate as louvain/labelPropagation —
     // both of which already collect this exact relation at bench SFs):
     // the fold below is two collects + exact integer-in-double sums,
@@ -748,7 +736,7 @@ object Graphs {
     // endpoints carry the tag's assignment. Pinned driver==distributed
     // by GraphsSpec.
     for (g <- LocalGraph.fetch("modularity", und.select(col("src"), col("dst"), col("w")),
-        und.count(), maxDriverEdges, weighted = true,
+        und.count(), weighted = true,
         guard = longEndpoints(und) &&
           und.schema("w").dataType == DoubleType &&
           tagged.schema("node").dataType == LongType &&
@@ -803,16 +791,14 @@ object Graphs {
     * determinism); after convergence the graph contracts communities to
     * nodes and repeats. Returns (node, community).
     */
-  def louvain(edges: DataFrame, maxOuter: Int = 3, maxInner: Int = 8,
-              maxDriverEdges: Long = LocalGraph.KneeEdges): DataFrame =
-    louvainOnUnd(undirectedWeighted(edges).ckpt(), maxOuter, maxInner, maxDriverEdges)
+  def louvain(edges: DataFrame, maxOuter: Int = 3, maxInner: Int = 8): DataFrame =
+    louvainOnUnd(undirectedWeighted(edges).ckpt(), maxOuter, maxInner)
 
   /** Louvain over a PREPARED (and already materialized)
     * [[undirectedWeighted]] relation — lets graph_louvain share one
     * ckpt across louvain + labelPropagation + three modularity
     * referees instead of five derivations of the same graph. */
-  def louvainOnUnd(und0: DataFrame, maxOuter: Int = 3, maxInner: Int = 8,
-                   maxDriverEdges: Long = LocalGraph.KneeEdges): DataFrame = {
+  def louvainOnUnd(und0: DataFrame, maxOuter: Int = 3, maxInner: Int = 8): DataFrame = {
     // mapping original node -> current community (refined per level).
     // Built LAZILY (null until first needed): when the level-0 knee
     // fires — every bench SF — the driver map's keys are exactly
@@ -846,7 +832,7 @@ object Graphs {
       // convergence protocol) are mirrored line-for-line; only float
       // summation order differs, as it already does between AQE plans.
       for (lg <- LocalGraph.fetch("louvain", g.select(col("src"), col("dst"), col("w")), gCount,
-          maxDriverEdges, weighted = true, guard = longIds).map(_.sorted())) {
+          weighted = true, guard = longIds).map(_.sorted())) {
         // sorted (src, dst): run-deterministic float accumulation
         val rows = lg.src.indices.map(i => (lg.long(lg.src(i)), lg.long(lg.dst(i)), lg.w(i))).toArray
         val remap = louvainDriver(rows, maxOuter - level, maxInner)
@@ -927,7 +913,7 @@ object Graphs {
   }
 
   /** In-memory mirror of louvain's distributed level loop, used for
-    * levels whose graph fits under `maxDriverEdges`. Every decision is
+    * levels whose graph fits under `Knee.GraphEdges`. Every decision is
     * the same computation the DataFrame program performs — gain
     * k_in − k·σ_adj/2m over the node's NEIGHBORING communities only,
     * synchronous moves, xxhash-parity gating per round, (gain desc,
@@ -998,17 +984,16 @@ object Graphs {
   /** DepthFirstSearch (algos/dfs.rs): DFS preorder from each start.
     * DFS order is inherently a sequential pointer walk — the reference
     * materializes the graph in memory and walks it; we do the same on
-    * the driver over the collected edge list (at most `maxEdges` edges,
+    * the driver over the collected edge list (at most `Knee.WalkEdges` edges,
     * else an error). Only for graphs that fit the driver (DFS *order* is
     * meaningless at 100 TB; use bfs/reachable for distributed
     * traversal). Returns (start, node, order).
     */
-  def dfs(edges: DataFrame, starts: DataFrame, maxDepth: Int = Int.MaxValue,
-          maxEdges: Long = LocalGraph.WalkEdges): DataFrame = {
+  def dfs(edges: DataFrame, starts: DataFrame, maxDepth: Int = Int.MaxValue): DataFrame = {
     val spark = edges.sparkSession
     import spark.implicits._
     val g = LocalGraph.walk("dfs",
-      edges.select(col("src").cast("long"), col("dst").cast("long")), maxEdges).sorted()
+      edges.select(col("src").cast("long"), col("dst").cast("long"))).sorted()
     val ss = starts.select(col("start").cast("long")).as[Long].collect().sorted
     val out = scala.collection.mutable.ArrayBuffer.empty[(Long, Long, Long)]
     ss.foreach { s =>
@@ -1090,13 +1075,12 @@ object Graphs {
   /** Goal-directed DFS with witness paths (algos/dfs.rs — the reference
     * also materializes the graph and walks it sequentially). Children
     * visited in sorted order; returns the first preorder path reaching
-    * a goal, per start. Driver-side with a maxEdges cap; generic ids. */
-  def pathDfs(edges: DataFrame, starts: DataFrame, goals: DataFrame,
-              maxEdges: Long = LocalGraph.WalkEdges): DataFrame = {
+    * a goal, per start. Driver-side under the `Knee.WalkEdges` cap; generic ids. */
+  def pathDfs(edges: DataFrame, starts: DataFrame, goals: DataFrame): DataFrame = {
     val spark = edges.sparkSession
     import spark.implicits._
     val g = LocalGraph.walk("pathDfs",
-      edges.select(col("src").cast("string"), col("dst").cast("string")), maxEdges).sorted()
+      edges.select(col("src").cast("string"), col("dst").cast("string"))).sorted()
     val goalSet = goals.select(col(goals.columns.head).cast("string")).as[String].collect().toSet
     val isGoal = Array.tabulate(g.n)(v => goalSet(g.key(v).asInstanceOf[String]))
     val ss = starts.select(col("start").cast("string")).as[String].collect().sorted
@@ -1172,8 +1156,7 @@ object Graphs {
     * (weight, src, dst) for determinism. Returns the forest's edges
     * (src, dst, weight) with src < dst.
     */
-  def minimumSpanningForest(edges: DataFrame, maxRounds: Int = 30,
-                            maxDriverEdges: Long = LocalGraph.KneeEdges): DataFrame = {
+  def minimumSpanningForest(edges: DataFrame, maxRounds: Int = 30): DataFrame = {
     val w = if (edges.columns.contains("weight")) col("weight").cast("double") else lit(1.0)
     // canonical undirected edges a<b, min weight per pair
     val (es, esN) = edges.select(least(col("src"), col("dst")).as("a"),
@@ -1190,8 +1173,8 @@ object Graphs {
     // distinct-weight graph is unique. O(E log E) in memory beats
     // O(log V) distributed rounds of joins by ~two orders of magnitude
     // at this scale; the Borůvka loop below stays the 100 TB path.
-    for (g <- LocalGraph.fetch("mst", es, esN, maxDriverEdges, weighted = true,
-        post = es.schema("a").dataType == LongType && es.schema("b").dataType == LongType)) {
+    for (g <- LocalGraph.fetch("mst", es, esN, weighted = true,
+        guard = es.schema("a").dataType == LongType && es.schema("b").dataType == LongType)) {
       val uf = new UnionFind(g.n)
       val keep = g.src.indices.sortBy(i => (g.w(i), g.src(i), g.dst(i)))
         .filter(i => uf.union(g.src(i), g.dst(i)))
@@ -1297,8 +1280,7 @@ object Graphs {
     * exists.
     */
   def closenessCentrality(edges: DataFrame, maxIter: Int = 30,
-                          sample: Int = 1000,
-                          maxDriverEdges: Long = LocalGraph.KneeEdges): DataFrame = {
+                          sample: Int = 1000): DataFrame = {
     // scale knee: the multi-source sweep's OUTPUT is sources × reach
     // pairs, so the generic bfs knee would ship corpus²-ish rows off the
     // driver just to sum them — closeness aggregates per NODE, so the
@@ -1308,8 +1290,8 @@ object Graphs {
     val (und, nUnd) = undirected(edges).select("src", "dst").distinct().ckptCount()
     // the node universe comes from the RAW edge relation (self-loop-only
     // nodes count toward n and the sample); und endpoints are a subset
-    for (g <- LocalGraph.fetch("closeness", und, nUnd, maxDriverEdges,
-        post = und.schema("src").dataType == LongType, nodes = nodes(edges))) {
+    for (g <- LocalGraph.fetch("closeness", und, nUnd,
+        guard = und.schema("src").dataType == LongType, nodes = nodes(edges))) {
       // the mirror: same hash-sampled sources, same bounded BFS hops,
       // same (n−1)·s / (n·Σd) closing division
       val spark = und.sparkSession
@@ -1355,11 +1337,11 @@ object Graphs {
     * (node, betweenness) for the undirected unweighted graph: every
     * non-loop edge counts in both directions, parallel entries included.
     */
-  def betweennessCentrality(edges: DataFrame, maxEdges: Long = LocalGraph.WalkEdges): DataFrame = {
+  def betweennessCentrality(edges: DataFrame): DataFrame = {
     val spark = edges.sparkSession
     import spark.implicits._
     val g = LocalGraph.walk("betweennessCentrality",
-      edges.select(col("src").cast("long"), col("dst").cast("long")), maxEdges)
+      edges.select(col("src").cast("long"), col("dst").cast("long")))
     val vs = (0 until g.n).filter(g.und.deg(_) > 0)
     val bc = brandes(g.und, vs, Int.MaxValue)
     vs.map(v => (g.long(v), bc(v) / 2.0)).toDF("node", "betweenness")
@@ -1402,8 +1384,7 @@ object Graphs {
     * samples use the standard n/s contribution scaling. Same
     * undirected /2 convention as the driver version. */
   def betweennessCentralityApprox(edges: DataFrame, sample: Int = 1000,
-                                  maxIter: Int = 30,
-                                  maxDriverEdges: Long = LocalGraph.KneeEdges): DataFrame = {
+                                  maxIter: Int = 30): DataFrame = {
     val spark = edges.sparkSession
     val (und, nUnd) = undirected(edges).select("src", "dst").distinct().ckptCount()
     // scale knee: below the cap the SAME level-synchronous forward /
@@ -1411,7 +1392,7 @@ object Graphs {
     // delta sums differ from the distributed groupBy only in float
     // summation order, which the 1e-6-relative referees tolerate — as
     // AQE plan changes already did). Distributed sweeps above the cap.
-    for (g <- LocalGraph.fetch("betweenness", und, nUnd, maxDriverEdges)) {
+    for (g <- LocalGraph.fetch("betweenness", und, nUnd)) {
       val sources = g.sample(spark, sample)
       val acc = brandes(g.out, sources, maxIter)
       val scale = if (sources.nonEmpty) g.n.toDouble / sources.length else 1.0
@@ -1489,13 +1470,12 @@ object Graphs {
     * Returns (start, goal, cost, path).
     */
   def aStar(edges: DataFrame, queries: Seq[(Long, Long)],
-            heuristic: (Long, Long) => Double = (_, _) => 0.0,
-            maxEdges: Long = LocalGraph.WalkEdges): DataFrame = {
+            heuristic: (Long, Long) => Double = (_, _) => 0.0): DataFrame = {
     val spark = edges.sparkSession
     import spark.implicits._
     val g = LocalGraph.walk("aStar",
       edges.select(col("src").cast("long"), col("dst").cast("long"), weightCol(edges)),
-      maxEdges, weighted = true)
+      weighted = true)
     // independent per-pair searches fan out over executors against the
     // broadcast graph (the heuristic is goal-specific, so pairs — not
     // starts — are the unit); results identical to the sequential loop
@@ -1533,11 +1513,10 @@ object Graphs {
     * (stringly keyed on the driver, like the reference's in-memory
     * walk). Returns (src, dst, cost, path array<string>).
     */
-  def dijkstraPaths(edges: DataFrame, starts: DataFrame, goals: DataFrame,
-                    maxEdges: Long = LocalGraph.WalkEdges): DataFrame = {
+  def dijkstraPaths(edges: DataFrame, starts: DataFrame, goals: DataFrame): DataFrame = {
     val spark = edges.sparkSession
     import spark.implicits._
-    val (g, ss, gs) = pathInputs("dijkstraPaths", edges, starts, goals, maxEdges)
+    val (g, ss, gs) = pathInputs("dijkstraPaths", edges, starts, goals)
     // One single-source run per START, not one goal-terminated run per
     // (start, goal) PAIR: with h = 0 the pair run's pop sequence is a
     // prefix of the single-source run's, and dist/prev entries on a
@@ -1564,12 +1543,12 @@ object Graphs {
   /** The string-keyed inputs of the reference-shape path rules: the
     * weighted graph — columns (from, to[, weight]) by position, each row
     * sorted by (weight, target) — and the start and goal keys. */
-  private def pathInputs(op: String, edges: DataFrame, starts: DataFrame, goals: DataFrame,
-                         maxEdges: Long): (LocalGraph, Array[String], Array[String]) = {
+  private def pathInputs(op: String, edges: DataFrame, starts: DataFrame,
+                         goals: DataFrame): (LocalGraph, Array[String], Array[String]) = {
     val cs = edges.columns
     val g = LocalGraph.walk(op, edges.select(col(cs(0)).cast("string"), col(cs(1)).cast("string"),
         if (cs.length >= 3) col(cs(2)).cast("double") else weightCol(edges)),
-      maxEdges, weighted = true).sorted(byWeight = true)
+      weighted = true).sorted(byWeight = true)
     def keys(df: DataFrame) = df.select(df.columns.head).collect().map(_.get(0).toString)
     (g, keys(starts), keys(goals))
   }
@@ -1581,11 +1560,10 @@ object Graphs {
     * driver-sequential double loop was the same shape that cost
     * graph_dijkstra 473 s at sf1 before r11's fix). Per-pair results are
     * identical to the sequential loop. */
-  def yenPaths(edges: DataFrame, starts: DataFrame, goals: DataFrame, k: Int,
-               maxEdges: Long = LocalGraph.WalkEdges): DataFrame = {
+  def yenPaths(edges: DataFrame, starts: DataFrame, goals: DataFrame, k: Int): DataFrame = {
     val spark = edges.sparkSession
     import spark.implicits._
-    val (g, ss, gs) = pathInputs("yenPaths", edges, starts, goals, maxEdges)
+    val (g, ss, gs) = pathInputs("yenPaths", edges, starts, goals)
     val pairs = for { s <- ss.toIndexedSeq; goal <- gs.toIndexedSeq } yield (s, goal)
     val out = fanOut(spark, g, pairs) { (g, d, it) =>
       it.flatMap { case (s, goal) =>
@@ -1601,13 +1579,12 @@ object Graphs {
     * over the collected graph (loopless k-shortest paths). Returns
     * (start, goal, rank, cost, path).
     */
-  def kShortestPaths(edges: DataFrame, start: Long, goal: Long, k: Int,
-                     maxEdges: Long = LocalGraph.WalkEdges): DataFrame = {
+  def kShortestPaths(edges: DataFrame, start: Long, goal: Long, k: Int): DataFrame = {
     val spark = edges.sparkSession
     import spark.implicits._
     val g = LocalGraph.walk("kShortestPaths",
       edges.select(col("src").cast("long"), col("dst").cast("long"), weightCol(edges)),
-      maxEdges, weighted = true)
+      weighted = true)
     g.kShortest(new LocalGraph.Dijkstra(g.out), start, goal, k).zipWithIndex
       .map { case ((cost, path), rank) =>
         (start, goal, (rank + 1).toLong, cost, path.map(_.asInstanceOf[Long]))
@@ -1620,8 +1597,7 @@ object Graphs {
     * seeded pseudo-random choice that is reproducible across engines and
     * cluster sizes (true RNG per task is not).
     */
-  def randomWalk(edges: DataFrame, starts: DataFrame, steps: Int,
-                 maxDriverEdges: Long = LocalGraph.KneeEdges): DataFrame = {
+  def randomWalk(edges: DataFrame, starts: DataFrame, steps: Int): DataFrame = {
     val (e, nE) = edges.select("src", "dst").distinct().ckptCount()
     // scale knee (same gate as the other driver mirrors): the walk's
     // "randomness" is xxhash64(walk_id, step, dst) — pure integer
@@ -1629,7 +1605,7 @@ object Graphs {
     // rounding-equivalent: per live walk it picks the dst minimizing
     // (h, dst), the same total order min_by used. Pinned
     // driver==distributed by GraphsSpec.
-    for (g <- LocalGraph.fetch("randomWalk", e, nE, maxDriverEdges,
+    for (g <- LocalGraph.fetch("randomWalk", e, nE,
         guard = longEndpoints(e) && starts.schema("walk_id").dataType == LongType &&
           starts.schema("start").dataType == LongType)) {
       val o = g.out

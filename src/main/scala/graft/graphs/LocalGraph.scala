@@ -105,29 +105,24 @@ private[graphs] final class LocalGraph(val keyType: DataType, keys: Array[AnyRef
 }
 
 private[graphs] object LocalGraph {
-  /** The default caps: `maxDriverEdges` of every knee mirror and
-    * `maxEdges` of the driver-only walks. */
-  final val KneeEdges = 2000000L
-  final val WalkEdges = 10000000L
-
-  /** The knee: logs `Knee.gate(op, n, max)` when `guard` holds and, on
-    * the driver branch (and when `post` holds), collects `e` — columns
-    * (src, dst[, weight]) by position — plus the node keys of `nodes`.
-    * None = run the distributed program. */
-  def fetch(op: String, e: DataFrame, n: => Long, max: Long, weighted: Boolean = false,
-            guard: Boolean = true, post: Boolean = true,
-            nodes: DataFrame = null): Option[LocalGraph] =
-    Option.when(guard && Knee.gate(op, n, max) && post)(
+  /** The knee: a `Knee.GraphEdges` gate on `n` when `guard` holds and,
+    * on the driver branch, collects `e` — columns (src, dst[,
+    * weight]) by position — plus the node keys of `nodes`. None = run
+    * the distributed program. */
+  def fetch(op: String, e: DataFrame, n: => Long, weighted: Boolean = false,
+            guard: Boolean = true, nodes: DataFrame = null): Option[LocalGraph] =
+    Option.when(guard && Knee.gate(op, n, Knee.GraphEdges))(
       apply(e, e.collect(), weighted, if (nodes == null) Array.empty else nodes.collect()))
 
   /** The whole edge relation of a driver-only walk, or an error naming
-    * `op` and the cap when it has more than `maxEdges` rows: a walk over
-    * a truncated prefix would return confident wrong answers. */
-  def walk(op: String, e: DataFrame, maxEdges: Long, weighted: Boolean = false): LocalGraph = {
-    val rows = e.limit(math.max(0L, math.min(maxEdges, Int.MaxValue - 1L)).toInt + 1).collect()
-    if (rows.length > maxEdges)
-      throw new IllegalStateException(s"$op: the edge relation has more than maxEdges = " +
-        s"$maxEdges rows; the driver walk needs the whole graph — raise maxEdges")
+    * `op` and the `WalkEdges` limit when it has more rows: a walk over a
+    * truncated prefix would return confident wrong answers. */
+  def walk(op: String, e: DataFrame, weighted: Boolean = false): LocalGraph = {
+    val max = Knee.WalkEdges.value
+    val rows = e.limit(math.max(0L, math.min(max, Int.MaxValue - 1L)).toInt + 1).collect()
+    if (rows.length > max)
+      throw new IllegalStateException(s"$op: the edge relation has more than WalkEdges = " +
+        s"$max rows; the driver walk needs the whole graph")
     apply(e, rows, weighted, Array.empty)
   }
 

@@ -865,7 +865,7 @@ class CozoDb(val spark: SparkSession) {
   private val indexCacheLock = new Object
   /** The artifact of every index target that has one, stamped with the
     * relation version it was built for. An FTS or walkable HNSW index
-    * whose estimated heap footprint is at most [[driverIndexGateBytes]]
+    * whose estimated heap footprint is at most [[Knee.DriverIndexBytes]]
     * (a [[graft.plan.Knee.gate]] decision per build, logged as
     * `op=fts_index|hnsw_index`) is held on the driver: FTS as
     * [[graft.search.DriverFts]] maps, HNSW as the same 32 hash-bucket
@@ -877,9 +877,6 @@ class CozoDb(val spark: SparkSession) {
     * HNSW graphs, restored once per version for probes to walk. Both
     * branches return the same results (DriverIndexSpec). */
   private val indexArtifacts = mutable.HashMap.empty[String, (Long, IndexArtifact)]
-  /** The driver-index byte gate: 1/16 of the driver heap. Tests set a
-    * negative value to pin the distributed branch. */
-  private[lang] var driverIndexGateBytes: Long = Runtime.getRuntime.maxMemory / 16
 
   /** The artifact of `target` if it was built for version `ver`. */
   private def cachedAt(target: String, ver: Long): Option[IndexArtifact] =
@@ -1007,7 +1004,7 @@ class CozoDb(val spark: SparkSession) {
         val st = corpus.agg(count(lit(1)), sum(size(col("vec")))).head()
         val bytes = graft.similarity.HnswBuckets.estimateBytes(
           st.getLong(0), if (st.isNullAt(1)) 0L else st.getLong(1), mEff)
-        if (graft.plan.Knee.gate("hnsw_index", bytes, driverIndexGateBytes)) {
+        if (Knee.gate("hnsw_index", bytes, Knee.DriverIndexBytes)) {
           val b = graft.similarity.HnswBuckets.build(
             corpus.filter(col("vec").isNotNull).collect().toSeq
               .map(r => (r.getLong(0), r.getSeq[Float](1).toArray)),
@@ -1104,9 +1101,8 @@ class CozoDb(val spark: SparkSession) {
         val driver = singleKey(spec.rel) && {
           val st = docs.agg(count(lit(1)), sum(length(col(spec.extractor)))).head()
           val chars = if (st.isNullAt(1)) 0L else st.getLong(1)
-          graft.plan.Knee.gate("fts_index", graft.search.DriverFts.estimateBytes(
-            st.getLong(0), graft.search.DriverFts.tokenBound(chars, spec.pipe)),
-            driverIndexGateBytes)
+          Knee.gate("fts_index", graft.search.DriverFts.estimateBytes(
+            st.getLong(0), graft.search.DriverFts.tokenBound(chars, spec.pipe)), Knee.DriverIndexBytes)
         }
         if (driver) {
           val d = graft.search.DriverFts.empty(spec.pipe).patch(Nil,
@@ -1988,8 +1984,7 @@ class CozoDb(val spark: SparkSession) {
         }
         // set semantics apply to const rules too (utilities/constant.rs
         // pre-evaluates into a deduped store)
-        CozoDb.constRelation(spark, rows,
-          if (head.nonEmpty) Some(head.map(_.v)) else paramNames, maxDriverPatchKeys)
+        CozoDb.constRelation(spark, rows, if (head.nonEmpty) Some(head.map(_.v)) else paramNames)
       case FixedApply(_, head, algo, rels, opts) =>
         val impl = FixedRules.get(algo)
           .getOrElse(throw CompileException(s"unknown fixed rule $algo"))
@@ -2533,11 +2528,7 @@ class CozoDb(val spark: SparkSession) {
     val local: Option[DataFrame] =
       if (isLocal(coerced)) Some(coerced)
       else if (!overlayable) None
-      else {
-        val rows = coerced.limit(maxDriverPatchKeys + 1).collect()
-        if (rows.length > maxDriverPatchKeys) None
-        else Some(localFrame(rows.toSeq, coerced.schema.fields.toSeq: _*))
-      }
+      else patchRows(coerced).map(rs => localFrame(rs, coerced.schema.fields.toSeq: _*))
     val delta = local.getOrElse(coerced.ckptLazy())
     // first FULL-WIDTH data into a schema-only relation: adopt the
     // delta's Spark schema (the placeholder's column NAMES stay
@@ -2639,6 +2630,12 @@ class CozoDb(val spark: SparkSession) {
     if (out.forall(_.isDefined)) Some(out.map(_.get)) else None
   }
 
+  /** The rows of `df` when it has at most [[Knee.PatchKeys]] of them. */
+  private def patchRows(df: DataFrame): Option[Seq[Row]] = {
+    val max = Knee.PatchKeys.value.toInt
+    Some(df.limit(max + 1).collect().toSeq).filter(_.length <= max)
+  }
+
   /** Apply a row write to `rel`'s write overlay. `delta` is driver-local.
     * put and rm run no job; insert, delete and update collect the base
     * rows of the keys the overlay does not hold ([[overlayMatch]], one
@@ -2646,7 +2643,7 @@ class CozoDb(val spark: SparkSession) {
     * errors with the state unchanged. Returns false — the caller folds
     * — when the write would change a column type, holds two rows for
     * one key, has a key the overlay cannot hold, takes the overlay past
-    * [[maxDriverPatchKeys]] keys, or probes a key the base holds twice. */
+    * [[Knee.PatchKeys]] keys, or probes a key the base holds twice. */
   private def overlayWrite(op: String, rel: String, delta: DataFrame): Boolean = {
     val r = stored(rel)
     val keys = r.keys
@@ -2666,7 +2663,7 @@ class CozoDb(val spark: SparkSession) {
     // the delta's rows in the relation's types, readable by name
     val typed = delta.select(target.schema.map(f => col(f.name).cast(f.dataType).as(f.name)): _*)
       .collect().toSeq
-    if (typed.length > maxDriverPatchKeys) return false
+    if (typed.length > Knee.PatchKeys.value) return false
     val keyTypes = keys.map(k => target.schema(k).dataType)
     val keyOpts = typed.map(r => overlayKey(keys.map(k => r.getAs[Any](k)), keyTypes))
     if (keyOpts.exists(_.isEmpty)) return false
@@ -2680,7 +2677,7 @@ class CozoDb(val spark: SparkSession) {
            _: org.apache.spark.sql.catalyst.plans.logical.LocalRelation => cur
       case _ => cur.ckptLazy()
     }, Map.empty))
-    if ((ov.rows.keySet ++ deltaKeys).size > maxDriverPatchKeys) return false
+    if ((ov.rows.keySet ++ deltaKeys).size > Knee.PatchKeys.value) return false
     // base rows of the keys the overlay does not hold, for the ops that
     // check existence or read old rows
     val unknown = deltaKeys.distinct.filterNot(ov.rows.contains)
@@ -2736,9 +2733,6 @@ class CozoDb(val spark: SparkSession) {
     * compaction analogue). `::replace` and schema changes re-register
     * the relation, which bumps its version and drops its caches. */
   private[lang] val ftsMaxDeltas = 32
-  /** Above this many changed keys a driver index is dropped instead of
-    * patched: the next probe rebuilds it (and re-decides its branch). */
-  private[lang] var maxDriverPatchKeys: Int = CozoDb.maxLocalRows
   private[lang] var indexFullBuilds = 0 // full builds, both branches; observability for tests
   private[lang] var indexPatches = 0    // distributed HNSW partition patches, for tests
   private[lang] var indexGraphLoads = 0 // distributed HNSW restore shuffles, for tests
@@ -2769,24 +2763,20 @@ class CozoDb(val spark: SparkSession) {
     // rows, in the relation's column types: a put/insert's rows are its
     // delta (no read of the new relation), an update's are read back,
     // an rm's are none. A write that changes the relation's column types
-    // or touches more than maxDriverPatchKeys keys drops them instead
+    // or touches more than Knee.PatchKeys keys drops them instead
     // (the next probe rebuilds and re-decides the branch).
     val driverPatchable = patchable &&
       schemaBefore.map(_.map(f => f.name -> f.dataType)) ==
         Some(relation(rel).schema.map(f => f.name -> f.dataType))
     /** (changed keys as `keyCol` reads them, their post-mutation rows
       * through `project`, whose first column is `keyCol`), or None past
-      * maxDriverPatchKeys. */
+      * Knee.PatchKeys. */
     def driverDelta(keyCol: Column)(project: DataFrame => DataFrame)
         : Option[(Seq[Any], Seq[Row])] = {
-      def bounded(df: DataFrame): Option[Seq[Row]] = {
-        val rs = df.limit(maxDriverPatchKeys + 1).collect().toSeq
-        if (rs.length > maxDriverPatchKeys) None else Some(rs)
-      }
       if (op == "put" || op == "insert")
-        bounded(project(delta.select(relation(rel).schema.map(f =>
+        patchRows(project(delta.select(relation(rel).schema.map(f =>
           col(f.name).cast(f.dataType)): _*))).map(rs => (rs.map(_.get(0)).distinct, rs))
-      else bounded(delta.select(keyCol)).map(_.map(_.get(0)).distinct).map { keys =>
+      else patchRows(delta.select(keyCol)).map(_.map(_.get(0)).distinct).map { keys =>
         val rows =
           if (op != "update") Nil
           else project(relation(rel).filter(col(key).isin(keys: _*))).collect().toSeq
@@ -2795,7 +2785,7 @@ class CozoDb(val spark: SparkSession) {
     }
     /** A patched driver index that still fits the byte gate. */
     def gated[A](gate: String, bytes: A => Long)(patched: Option[A]): Option[A] =
-      patched.filter(a => graft.plan.Knee.gate(gate, bytes(a), driverIndexGateBytes))
+      patched.filter(a => Knee.gate(gate, bytes(a), Knee.DriverIndexBytes))
         .map { a => indexDriverPatches += 1; a }
     for ((target, (spec, _)) <- targets) indexArtifacts(target) match {
       case (v, _) if v >= cur => ()
@@ -2938,30 +2928,26 @@ object CozoDb {
   val meetAggrs: Set[String] =
     Set("min", "max", "min_cost", "shortest", "choice", "and", "or", "bit_and", "bit_or")
 
-  /** Row count up to which literal rows become a driver-local relation
-    * (a `LocalRelation`: no Spark job to read, exact statistics), and
-    * up to which a write goes to a relation's write overlay. */
-  private[lang] val maxLocalRows = 10000
-
   /** Build a DataFrame from rows of literals (const rules `<-`,
     * Constant fixed rule). Column types are inferred column-wise with
     * Long+Double unifying to Double; names default to _0.._n. Up to
-    * [[maxLocalRows]] rows the frame is driver-local.
+    * [[Knee.LocalRows]] rows the frame is driver-local (a
+    * `LocalRelation`: no Spark job to read, exact statistics).
     */
   def rowsToDf(spark: SparkSession, rows: Seq[Any], names: Option[Seq[String]]): DataFrame = {
     val (schema, data) = typedRows(rows, names)
-    frame(spark, schema, data, maxLocalRows)
+    frame(spark, schema, data)
   }
 
   /** A const rule's relation: [[rowsToDf]] under set semantics. Up to
-    * `localMax` rows dedupe on the driver into a local relation, with
+    * [[Knee.LocalRows]] rows dedupe on the driver into a local relation, with
     * `dropDuplicates`' identity and output: floats normalized (-0.0 is
     * 0.0, every NaN the one NaN), also inside arrays. Larger inputs run
     * `dropDuplicates` as a Spark job. */
   private[lang] def constRelation(spark: SparkSession, rows: Seq[Any],
-                                  names: Option[Seq[String]], localMax: Int): DataFrame = {
+                                  names: Option[Seq[String]]): DataFrame = {
     val (schema, data) = typedRows(rows, names)
-    if (data.length > localMax) frame(spark, schema, data, localMax).dropDuplicates()
+    if (data.length > Knee.LocalRows.value) frame(spark, schema, data).dropDuplicates()
     else {
       def norm(v: Any): Any = v match {
         case d: Double => if (d.isNaN) Double.NaN else if (d == 0.0) 0.0 else d
@@ -2978,13 +2964,12 @@ object CozoDb {
       }
       val seen = mutable.HashSet.empty[Any]
       val distinct = data.map(r => Row.fromSeq(r.toSeq.map(norm))).filter(r => seen.add(ident(r.toSeq)))
-      frame(spark, schema, distinct, localMax)
+      frame(spark, schema, distinct)
     }
   }
 
-  private def frame(spark: SparkSession, schema: StructType, data: Seq[Row],
-                    localMax: Int): DataFrame =
-    if (data.length <= localMax) spark.createDataFrame(data.asJava, schema)
+  private def frame(spark: SparkSession, schema: StructType, data: Seq[Row]): DataFrame =
+    if (data.length <= Knee.LocalRows.value) spark.createDataFrame(data.asJava, schema)
     else spark.createDataFrame(
       spark.sparkContext.parallelize(data, math.max(1, data.length / 10000)), schema)
 

@@ -1,6 +1,7 @@
 package graft.pipeline
 
 import graft.functions.{TextFunctions => TF}
+import graft.plan.Knee
 import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.functions._
 
@@ -190,8 +191,7 @@ object Classifier {
     */
   def train(sample: DataFrame, idCol: String, textCol: String,
             labelCol: String, buckets: Int = 64, iters: Int = 5,
-            lr: Double = 2.0, ngrams: Int = 1,
-            maxDriverFeatureBytes: Long = 256L * 1024 * 1024): Model = {
+            lr: Double = 2.0, ngrams: Int = 1): Model = {
     // Driver-knee probe (r13, guide §1 job floor): (id, grams, label)
     // is a ZERO-SHUFFLE projection; one agg job measures the doc count
     // and the collected payload (gram count + character volume). Under
@@ -214,7 +214,7 @@ object Classifier {
     val n = st.getLong(0).toDouble
     val gramsN = if (st.isNullAt(1)) 0L else st.getLong(1)
     val charsN = if (st.isNullAt(2)) 0L else st.getLong(2)
-    if (graft.plan.Knee.gate("classifierTrain", gramsN * 16L + charsN * 2L, maxDriverFeatureBytes))
+    if (Knee.gate("classifierTrain", gramsN * 16L + charsN * 2L, Knee.ClassifierFeatureBytes))
       return trainDriver(gr, buckets, iters, lr, ngrams, n)
     val y = sample.select(col(idCol).as("__id"),
       col(labelCol).cast("double").as("__y"))

@@ -271,7 +271,7 @@ object Ann {
     * Returns (cell 0..nCells-1, cvec).
     */
   def ivfCentroids(corpus: DataFrame, nCells: Int, iters: Int = 2,
-                   seed: Int = 0, maxDriverVecs: Long = 200000L): DataFrame = {
+                   seed: Int = 0): DataFrame = {
     import org.apache.spark.sql.expressions.Window
     import graft.plan._
     val base = Parallelism.ensureIngestParallelism(corpus, Seq(col("id")), light = true)
@@ -291,7 +291,7 @@ object Ann {
     // keys, which must fall through to the type-agnostic distributed
     // loop instead of throwing ClassCastException.
     if (base.schema("id").dataType == org.apache.spark.sql.types.LongType &&
-        graft.plan.Knee.gate("ivfCentroids", base.count(), maxDriverVecs))
+        Knee.gate("ivfCentroids", base.count(), Knee.IvfVectors))
       return ivfCentroidsDriver(base, nCells, iters, seed)
     var cents = base
       .withColumn("__h", xxhash64(col("id"), lit(seed)))
@@ -505,18 +505,19 @@ object Ann {
     // (trainN ≤ 65536) the sample is driver-safe by construction, but a
     // caller raising trainN toward 2M could otherwise collect multi-GB
     // of full vectors, so above the default one cheap take(1) probes
-    // the dimension and the knee only engages under ~512 MiB estimated.
+    // the dimension — only when the row gate would admit the sample —
+    // and the knee only engages under Knee.PqSampleBytes estimated.
+    // Both checks come before the gate, so its line names the branch
+    // that runs.
     val longIds = corpus.schema("id").dataType == org.apache.spark.sql.types.LongType
-    def sampleFitsDriver: Boolean =
-      if (trainN <= 65536) true
-      else {
-        val dim = corpus.select(size(col("vec"))).take(1) match {
-          case Array(r) if !r.isNullAt(0) => r.getInt(0).toLong
-          case _ => 0L
-        }
-        trainN.toLong * (dim * 4L + 48L) <= 512L * 1024 * 1024
+    def sampleTooBig: Boolean = trainN > 65536 && trainN <= Knee.PqTrainRows.value && {
+      val dim = corpus.select(size(col("vec"))).take(1) match {
+        case Array(r) if !r.isNullAt(0) => r.getInt(0).toLong
+        case _ => 0L
       }
-    if (graft.plan.Knee.gate("pqCodebooks", trainN, 2000000L) && longIds && sampleFitsDriver)
+      trainN.toLong * (dim * 4L + 48L) > Knee.PqSampleBytes.value
+    }
+    if (longIds && !sampleTooBig && Knee.gate("pqCodebooks", trainN, Knee.PqTrainRows))
       return pqCodebooksDriver(corpus, subspaces, codes, iters, trainN, seed)
     val train = corpus.select(col("id"), col("vec"))
       .withColumn("__h", xxhash64(col("id"), lit(seed)))

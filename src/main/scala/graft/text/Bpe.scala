@@ -81,7 +81,7 @@ object Bpe {
     * (left, right). Returns the rules in rank order.
     */
   def train(docs: DataFrame, textCol: String, numMerges: Int,
-            batch: Int = 1, maxDriverWords: Long = 1000000L): Seq[Merge] = {
+            batch: Int = 1): Seq[Merge] = {
     require(numMerges >= 0 && batch >= 1)
     // Scale knee: training state is the VOCABULARY (distinct words +
     // frequencies), not the corpus — one corpus pass aggregates it, and
@@ -93,7 +93,7 @@ object Bpe {
     // merges cost ~60 jobs where the driver loop costs two.
     if (batch == 1) {
       val (wf, nWords) = wordFreqs(docs, textCol).ckptCount()
-      if (graft.plan.Knee.gate("bpe", nWords, maxDriverWords)) {
+      if (Knee.gate("bpe", nWords, Knee.BpeWords)) {
         val rows = wf.collect().map(r => (r.getString(0), r.getLong(1)))
         wf.unckpt()
         return trainDriver(rows, numMerges)

@@ -1,6 +1,7 @@
 package graft.graphs
 
 import graft.SparkFixture
+import graft.plan.Knee
 import org.scalatest.funsuite.AnyFunSuite
 
 /** Differential fuzz of the distributed graph kernels on random small
@@ -12,6 +13,9 @@ import org.scalatest.funsuite.AnyFunSuite
 class GraphFuzzSpec extends AnyFunSuite {
   lazy val spark = SparkFixture.spark
   import spark.implicits._
+
+  /** `body` with every graph knee pinned to its distributed branch. */
+  private def distributed[A](body: => A): A = Knee.withLimits(Knee.GraphEdges -> 0L)(body)
 
   private def randEdges(rnd: scala.util.Random, n: Int, m: Int): Seq[(Long, Long)] =
     (0 until m).map(_ => (rnd.nextInt(n).toLong, rnd.nextInt(n).toLong)).distinct
@@ -262,23 +266,22 @@ class GraphFuzzSpec extends AnyFunSuite {
           df.collect().map(r => (r.getLong(0), r.getLong(1),
             r.get(2).asInstanceOf[Number].longValue)).toSet
         assert(rows3(Graphs.bfs(e, starts, 3)) ==
-          rows3(Graphs.bfs(e, starts, 3, maxDriverEdges = 0L)), s"bfs seed $seed")
+          distributed(rows3(Graphs.bfs(e, starts, 3))), s"bfs seed $seed")
         def rows2(df: org.apache.spark.sql.DataFrame): Set[(Long, Long)] =
           df.collect().map(r => (r.getLong(0), r.getLong(1))).toSet
         assert(rows2(Graphs.reachable(e, starts, 3)) ==
-          rows2(Graphs.reachable(e, starts, 3, maxDriverEdges = 0L)), s"reach seed $seed")
+          distributed(rows2(Graphs.reachable(e, starts, 3))), s"reach seed $seed")
         val we = raw.map { case (a, b) => (a, b, ((a * 7 + b * 13) % 5 + 1).toDouble) }
           .toDF("src", "dst", "weight")
         def costs(df: org.apache.spark.sql.DataFrame): Set[(Long, Long, Double)] =
           df.collect().map(r => (r.getLong(0), r.getLong(1), r.getDouble(2))).toSet
         assert(costs(Graphs.shortestPaths(we, starts, maxIter = 6)) ==
-          costs(Graphs.shortestPaths(we, starts, maxIter = 6, maxDriverEdges = 0L)),
+          distributed(costs(Graphs.shortestPaths(we, starts, maxIter = 6))),
           s"ssp seed $seed")
         val drvB = Graphs.betweennessCentralityApprox(e, sample = Int.MaxValue)
           .collect().map(r => r.getLong(0) -> r.getDouble(1)).toMap
-        val distB = Graphs.betweennessCentralityApprox(e, sample = Int.MaxValue,
-            maxDriverEdges = 0L)
-          .collect().map(r => r.getLong(0) -> r.getDouble(1)).toMap
+        val distB = distributed(Graphs.betweennessCentralityApprox(e, sample = Int.MaxValue)
+          .collect()).map(r => r.getLong(0) -> r.getDouble(1)).toMap
         assert(drvB.keySet == distB.keySet, s"btw keys seed $seed")
         for ((k, a) <- drvB; b = distB(k))
           assert(math.abs(a - b) <= 1e-9 * (math.abs(b) + 1.0), s"btw seed $seed node $k: $a vs $b")
@@ -288,7 +291,7 @@ class GraphFuzzSpec extends AnyFunSuite {
         if (seed < 2) {
           val sample = Seq(1000, 3)(seed)
           assert(scores(Graphs.closenessCentrality(e, sample = sample)) ==
-            scores(Graphs.closenessCentrality(e, sample = sample, maxDriverEdges = 0L)),
+            distributed(scores(Graphs.closenessCentrality(e, sample = sample))),
             s"closeness sample $sample seed $seed")
         }
         // the same graph with string node ids (the generic-key driver
@@ -296,43 +299,39 @@ class GraphFuzzSpec extends AnyFunSuite {
         if (seed == 0) {
           val se = raw.map { case (a, b) => (s"n$a", s"n$b") }.toDF("src", "dst")
           val sst = raw.map(t => s"n${t._1}").distinct.take(3).toDF("start")
-          assert(rows(Graphs.bfs(se, sst, 3)) == rows(Graphs.bfs(se, sst, 3, maxDriverEdges = 0L)),
+          assert(rows(Graphs.bfs(se, sst, 3)) == distributed(rows(Graphs.bfs(se, sst, 3))),
             s"string bfs seed $seed")
           assert(rows(Graphs.reachable(se, sst, 3)) ==
-            rows(Graphs.reachable(se, sst, 3, maxDriverEdges = 0L)), s"string reach seed $seed")
+            distributed(rows(Graphs.reachable(se, sst, 3))), s"string reach seed $seed")
           val swe = raw.map { case (a, b) => (s"n$a", s"n$b", ((a * 7 + b * 13) % 5 + 1).toDouble) }
             .toDF("src", "dst", "weight")
           assert(rows(Graphs.shortestPaths(swe, sst, maxIter = 6)) ==
-            rows(Graphs.shortestPaths(swe, sst, maxIter = 6, maxDriverEdges = 0L)),
+            distributed(rows(Graphs.shortestPaths(swe, sst, maxIter = 6))),
             s"string ssp seed $seed")
           close(scores(Graphs.betweennessCentralityApprox(se, sample = Int.MaxValue)),
-            scores(Graphs.betweennessCentralityApprox(se, sample = Int.MaxValue, maxDriverEdges = 0L)),
+            distributed(scores(Graphs.betweennessCentralityApprox(se, sample = Int.MaxValue))),
             s"string btw seed $seed")
         }
       }
     }
-    // the gate boundary: n distinct edges against maxDriverEdges = n
+    // the gate boundary: n distinct edges against GraphEdges = n
     // (driver) and n - 1 (distributed) — identical rows, and the logged
     // knee decision flips
     val e = randEdges(new scala.util.Random(7), 10, 20).filter(t => t._1 != t._2).toDF("src", "dst")
     val starts = Seq(0L, 1L, 2L).toDF("start")
     val n = e.distinct().count()
-    val err = new java.io.ByteArrayOutputStream()
-    val stderr = System.err
-    System.setErr(new java.io.PrintStream(err, true))
-    val (atGate, belowGate) = try {
-      (rows(Graphs.bfs(e, starts, 3, maxDriverEdges = n)),
-        rows(Graphs.bfs(e, starts, 3, maxDriverEdges = n - 1)))
-    } finally System.setErr(stderr)
+    val ((atGate, belowGate), lines) = graft.plan.KneeLog.capture(
+      (Knee.withLimits(Knee.GraphEdges -> n)(rows(Graphs.bfs(e, starts, 3))),
+        Knee.withLimits(Knee.GraphEdges -> (n - 1))(rows(Graphs.bfs(e, starts, 3)))))
     assert(atGate == belowGate, "bfs at the gate boundary")
-    val logged = err.toString.linesIterator.toSet
+    val logged = lines.toSet
     assert(logged(s"graft.knee op=bfs n=$n gate=$n branch=driver"), logged)
     assert(logged(s"graft.knee op=bfs n=$n gate=${n - 1} branch=distributed"), logged)
   }
 
   test("distributed Borůvka ≡ driver Kruskal on unique-weight graphs (6 seeds)") {
     // unique weights → the MSF is unique, so the two paths must return
-    // the exact same edge SET (maxDriverEdges = 0 forces the distributed
+    // the exact same edge SET (GraphEdges = 0 forces the distributed
     // loop, which the driver knee otherwise shadows at test scale)
     for (seed <- 0 until 6) {
       val rnd = new scala.util.Random(seed * 7919 + 5)
@@ -343,8 +342,8 @@ class GraphFuzzSpec extends AnyFunSuite {
       }
       if (es.nonEmpty) {
         val df = es.toDF("src", "dst", "weight")
-        val boruvka = Graphs.minimumSpanningForest(df, maxDriverEdges = 0L)
-          .collect().map(r => (r.getLong(0), r.getLong(1), r.getDouble(2))).toSet
+        val boruvka = distributed(Graphs.minimumSpanningForest(df).collect())
+          .map(r => (r.getLong(0), r.getLong(1), r.getDouble(2))).toSet
         val kruskal = Graphs.minimumSpanningForest(df)
           .collect().map(r => (r.getLong(0), r.getLong(1), r.getDouble(2))).toSet
         assert(boruvka == kruskal, s"seed $seed: $boruvka vs $kruskal")

@@ -1,12 +1,16 @@
 package graft.graphs
 
 import graft.SparkFixture
+import graft.plan.Knee
 import org.scalatest.funsuite.AnyFunSuite
 import org.apache.spark.sql.functions._
 
 class GraphsSpec extends AnyFunSuite {
   lazy val spark = SparkFixture.spark
   import spark.implicits._
+
+  /** `body` with every graph knee pinned to its distributed branch. */
+  private def distributed[A](body: => A): A = Knee.withLimits(Knee.GraphEdges -> 0L)(body)
 
   // weighted diamond + tail: 1→2 (1), 1→3 (4), 2→3 (1), 3→4 (1), 2→4 (5)
   def wEdges = Seq((1L, 2L, 1.0), (1L, 3L, 4.0), (2L, 3L, 1.0), (3L, 4L, 1.0), (2L, 4L, 5.0))
@@ -109,19 +113,29 @@ class GraphsSpec extends AnyFunSuite {
     assert(order == Seq(1L, 2L, 4L, 3L)) // children visited in sorted order
   }
 
-  test("driver walks raise past maxEdges instead of walking a truncated prefix") {
+  test("driver walks raise past WalkEdges instead of walking a truncated prefix") {
     val starts = Seq(1L).toDF("start")
     val goals = Seq(4L).toDF("goal")
     for ((op, run) <- Seq[(String, () => Any)](
-        "dijkstraPaths" -> (() => Graphs.dijkstraPaths(wEdges, starts, goals, maxEdges = 2)),
-        "dfs" -> (() => Graphs.dfs(wEdges, starts, maxEdges = 2)),
-        "yenPaths" -> (() => Graphs.yenPaths(wEdges, starts, goals, 2, maxEdges = 2)))) {
-      val e = intercept[IllegalStateException](run())
-      assert(e.getMessage.contains(op) && e.getMessage.contains("maxEdges = 2"), e.getMessage)
+        "dijkstraPaths" -> (() => Graphs.dijkstraPaths(wEdges, starts, goals)),
+        "dfs" -> (() => Graphs.dfs(wEdges, starts)),
+        "yenPaths" -> (() => Graphs.yenPaths(wEdges, starts, goals, 2)))) {
+      val e = intercept[IllegalStateException](Knee.withLimits(Knee.WalkEdges -> 2L)(run()))
+      assert(e.getMessage.contains(op) && e.getMessage.contains("WalkEdges = 2"), e.getMessage)
     }
     // the whole graph at the cap: the shortest 1→4 path is found
-    val r = Graphs.dijkstraPaths(wEdges, starts, goals, maxEdges = 5).collect().head
+    val r = Knee.withLimits(Knee.WalkEdges -> 5L)(
+      Graphs.dijkstraPaths(wEdges, starts, goals).collect().head)
     assert(r.getDouble(2) == 3.0 && r.getSeq[String](3) == Seq("1", "2", "3", "4"))
+  }
+
+  test("string-keyed mst and closeness log no driver knee line for the distributed run") {
+    val se = Seq(("a", "b", 1.0), ("b", "c", 2.0), ("a", "c", 3.0)).toDF("src", "dst", "weight")
+    val (mst, lines) = graft.plan.KneeLog.capture((
+      Graphs.minimumSpanningForest(se).collect().map(r => (r.getString(0), r.getString(1))).toSet,
+      Graphs.closenessCentrality(se.select("src", "dst")).count()))
+    assert(mst == ((Set(("a", "b"), ("b", "c")), 3L)))
+    assert(!lines.exists(l => l.contains("op=mst ") || l.contains("op=closeness ")), lines)
   }
 
   test("pathDfs walks a 100,000-node chain without recursion") {
@@ -153,20 +167,20 @@ class GraphsSpec extends AnyFunSuite {
       def rows(df: org.apache.spark.sql.DataFrame): Set[(Long, Long)] =
         df.collect().map(r => (r.getLong(0), r.getLong(1))).toSet
       assert(rows(Graphs.connectedComponents(e)) ==
-        rows(Graphs.connectedComponents(e, maxDriverEdges = 0)), s"CC seed $seed")
+        distributed(rows(Graphs.connectedComponents(e))), s"CC seed $seed")
       assert(rows(Graphs.stronglyConnectedComponents(e)) ==
-        rows(Graphs.stronglyConnectedComponents(e, maxDriverEdges = 0)), s"SCC seed $seed")
+        distributed(rows(Graphs.stronglyConnectedComponents(e))), s"SCC seed $seed")
       assert(rows(Graphs.labelPropagation(e, iters = 4)) ==
-        rows(Graphs.labelPropagation(e, iters = 4, maxDriverEdges = 0)), s"LP seed $seed")
+        distributed(rows(Graphs.labelPropagation(e, iters = 4))), s"LP seed $seed")
       val dagE = e.filter(col("src") < col("dst"))
       assert(rows(Graphs.topSort(dagE).select(col("node"), col("layer").cast("long"))) ==
-        rows(Graphs.topSort(dagE, maxDriverEdges = 0)
-          .select(col("node"), col("layer").cast("long"))), s"TopSort seed $seed")
+        distributed(rows(Graphs.topSort(dagE)
+          .select(col("node"), col("layer").cast("long")))), s"TopSort seed $seed")
     }
     // error contracts hold on BOTH paths
     val cyc = Seq((1L, 2L), (2L, 3L), (3L, 1L)).toDF("src", "dst")
     intercept[IllegalArgumentException](Graphs.topSort(cyc).count())
-    intercept[IllegalArgumentException](Graphs.topSort(cyc, maxDriverEdges = 0).count())
+    intercept[IllegalArgumentException](distributed(Graphs.topSort(cyc).count()))
   }
 
   test("pageRank driver path matches the distributed loop far inside the oracle grid") {
@@ -178,7 +192,7 @@ class GraphsSpec extends AnyFunSuite {
       val e = es.toDF("src", "dst")
       val drv = Graphs.pageRank(e).collect()
         .map(r => r.getLong(0) -> r.getDouble(1)).toMap
-      val dist = Graphs.pageRank(e, maxDriverEdges = 0).collect()
+      val dist = distributed(Graphs.pageRank(e).collect())
         .map(r => r.getLong(0) -> r.getDouble(1)).toMap
       assert(drv.keySet == dist.keySet)
       for ((k, v) <- drv)
@@ -199,8 +213,8 @@ class GraphsSpec extends AnyFunSuite {
       val e = es.toDF("src", "dst")
       val drv = Graphs.louvain(e, maxOuter = 2, maxInner = 5)
         .collect().map(r => r.getLong(0) -> r.getLong(1)).toMap
-      val dist = Graphs.louvain(e, maxOuter = 2, maxInner = 5, maxDriverEdges = 0)
-        .collect().map(r => r.getLong(0) -> r.getLong(1)).toMap
+      val dist = distributed(Graphs.louvain(e, maxOuter = 2, maxInner = 5).collect())
+        .map(r => r.getLong(0) -> r.getLong(1)).toMap
       assert(drv == dist, s"seed $seed: driver and distributed louvain diverged")
     }
   }
@@ -217,7 +231,7 @@ class GraphsSpec extends AnyFunSuite {
       def rows(df: org.apache.spark.sql.DataFrame): Set[(Long, Long, Long, Int)] =
         df.collect().map(r => (r.getLong(0), r.getLong(1), r.getLong(2), r.getInt(3))).toSet
       assert(rows(Graphs.randomWalk(e, starts, steps = 4)) ==
-        rows(Graphs.randomWalk(e, starts, steps = 4, maxDriverEdges = 0L)),
+        distributed(rows(Graphs.randomWalk(e, starts, steps = 4))),
         s"seed $seed: walk diverged")
     }
   }
@@ -241,7 +255,7 @@ class GraphsSpec extends AnyFunSuite {
       def q(df: org.apache.spark.sql.DataFrame): Map[String, Double] =
         df.collect().map(r => r.getString(0) -> r.getDouble(1)).toMap
       val drv = q(Graphs.modularityByTag(und, tagged))
-      val dist = q(Graphs.modularityByTag(und, tagged, maxDriverEdges = 0L))
+      val dist = distributed(q(Graphs.modularityByTag(und, tagged)))
       assert(drv.keySet == dist.keySet, s"seed $seed: tag sets diverged")
       for ((t, v) <- drv)
         assert(math.abs(v - dist(t)) <= 1e-12,

@@ -1,6 +1,7 @@
 package graft.lang
 
 import graft.SparkFixture
+import graft.plan.Knee
 import org.scalatest.funsuite.AnyFunSuite
 
 /** Concurrent script execution against ONE CozoDb: writers serialize,
@@ -101,9 +102,8 @@ class ConcurrencySpec extends AnyFunSuite {
   }
 
   test("concurrent FTS and HNSW probes while a writer patches the indexes see whole snapshots") {
-    for (gate <- Seq(Runtime.getRuntime.maxMemory / 16, -1L)) {
+    for (gate <- Seq(Knee.DriverIndexBytes.default, -1L)) Knee.withLimits(Knee.DriverIndexBytes -> gate) {
       val db = new CozoDb(spark)
-      db.driverIndexGateBytes = gate
       def v(i: Int) = Seq(math.sin(i * 0.7), math.cos(i * 1.3), math.sin(i * 0.29 + 1))
         .map(x => f"$x%.4f").mkString("vec([", ", ", "])")
       db.run("?[k, t] <- [[0, 'seed marker']] :create cd {k => t}")
@@ -136,6 +136,7 @@ class ConcurrencySpec extends AnyFunSuite {
       val nearest = db.run(s"?[k] := ~ce:g{k | query: ${v(100 + writes)}, k: 1}")
         .collect().map(_.getLong(0)).toSeq
       assert(nearest == Seq(100L + writes), s"gate $gate")
+      if (gate < 0) assert(db.indexDriverBuilds == 0, "an index build took the driver branch")
     }
   }
 }

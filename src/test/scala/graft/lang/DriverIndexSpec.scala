@@ -1,6 +1,7 @@
 package graft.lang
 
 import graft.SparkFixture
+import graft.plan.Knee
 import org.scalatest.funsuite.AnyFunSuite
 
 /** Driver-resident FTS/HNSW indexes against the distributed branch.
@@ -20,16 +21,17 @@ import org.scalatest.funsuite.AnyFunSuite
 class DriverIndexSpec extends AnyFunSuite {
   lazy val spark = SparkFixture.spark
 
-  /** (driver-branch db, distributed-branch db). */
-  private def pair(): (CozoDb, CozoDb) = {
-    val d = new CozoDb(spark)
-    val x = new CozoDb(spark)
-    x.driverIndexGateBytes = -1L
-    (d, x)
+  /** A database and the knee limits every call on it runs under. */
+  private final class Side(val db: CozoDb, pins: (Knee.Limit, Long)*) {
+    def apply[A](body: CozoDb => A): A = Knee.withLimits(pins: _*)(body(db))
   }
 
-  private def both(dbs: (CozoDb, CozoDb))(script: String): Unit = {
-    dbs._1.run(script).collect(); dbs._2.run(script).collect()
+  /** (driver-branch side, distributed-branch side). */
+  private def pair(): (Side, Side) =
+    (new Side(new CozoDb(spark)), new Side(new CozoDb(spark), Knee.DriverIndexBytes -> -1L))
+
+  private def both(dbs: (Side, Side))(script: String): Unit = {
+    dbs._1(_.run(script).collect()); dbs._2(_.run(script).collect())
   }
 
   /** Result rows, doubles rounded to 9 decimals, sorted. */
@@ -40,9 +42,9 @@ class DriverIndexSpec extends AnyFunSuite {
       case v => String.valueOf(v)
     }.mkString("|")).sorted
 
-  private def assertSame(dbs: (CozoDb, CozoDb), script: String): Seq[String] = {
-    val a = rows(dbs._1, script)
-    val b = rows(dbs._2, script)
+  private def assertSame(dbs: (Side, Side), script: String): Seq[String] = {
+    val a = dbs._1(rows(_, script))
+    val b = dbs._2(rows(_, script))
     assert(a == b, s"driver != distributed for\n$script\ndriver:      $a\ndistributed: $b")
     a
   }
@@ -83,8 +85,8 @@ class DriverIndexSpec extends AnyFunSuite {
     for (kind <- Seq("tf_idf", "tf", "bm25"))
       assertSame(dbs, s"qs[q] <- [$stream]\n" +
         s"?[q, k, s] := qs[q], ~docs:fts{k | query: q, k: 60, score_kind: '$kind', bind_score: s}")
-    assert(dbs._1.indexDriverBuilds == 1 && dbs._1.indexDriverProbes > 0)
-    assert(dbs._2.indexDriverBuilds == 0 && dbs._2.indexDriverProbes == 0)
+    assert(dbs._1.db.indexDriverBuilds == 1 && dbs._1.db.indexDriverProbes > 0)
+    assert(dbs._2.db.indexDriverBuilds == 0 && dbs._2.db.indexDriverProbes == 0)
     // the index internals scan the same postings
     assertSame(dbs, "?[w, k, p, n] := *docs:fts{word: w, src_k: k, position: p, total_length: n}")
   }
@@ -95,7 +97,7 @@ class DriverIndexSpec extends AnyFunSuite {
     both(dbs)("::fts create docs:fts {extractor: v, tokenizer: Simple, filters: [Lowercase]}")
     val probe = "?[k, s] := ~docs:fts{k | query: 'apple OR berry OR ap*', k: 40, bind_score: s}"
     assertSame(dbs, probe)
-    val builds = dbs._1.indexFullBuilds
+    val builds = dbs._1.db.indexFullBuilds
     val more = docRows(45, 3).drop(30)
     both(dbs)(s"?[k, v, g] <- [${docLits(more)}] :put docs {k => v, g}")
     assertSame(dbs, probe)
@@ -106,8 +108,9 @@ class DriverIndexSpec extends AnyFunSuite {
     both(dbs)("?[k, v] <- [[4, 'berry berry']] :update docs {k => v}")
     val hits = assertSame(dbs, probe)
     assert(hits.exists(_.startsWith("4|")) && !hits.exists(_.startsWith("1|")))
-    assert(dbs._1.indexFullBuilds == builds, "mutations patch the driver index")
-    assert(dbs._1.indexDriverPatches == 4)
+    assert(dbs._1.db.indexFullBuilds == builds, "mutations patch the driver index")
+    assert(dbs._1.db.indexDriverPatches == 4)
+    assert(dbs._2.db.indexDriverBuilds == 0, "an index build took the driver branch")
   }
 
   private def vec(i: Int, salt: Double): String =
@@ -129,8 +132,8 @@ class DriverIndexSpec extends AnyFunSuite {
         s"?[q, k, d] := qs[q], *vs{k: q, v}, ~vs:$ix{k | query: v, k: 4, bind_distance: d}")
     }
     check()
-    assert(dbs._1.indexDriverBuilds == 4 && dbs._2.indexDriverBuilds == 0)
-    val builds = dbs._1.indexFullBuilds
+    assert(dbs._1.db.indexDriverBuilds == 4 && dbs._2.db.indexDriverBuilds == 0)
+    val builds = dbs._1.db.indexFullBuilds
     both(dbs)(s"?[k, v, w, g] <- [[100, ${vec(100, 0)}, ${vec(100, 1)}, 0], " +
       s"[5, ${vec(500, 0)}, ${vec(501, 0)}, 1]] :put vs {k => v, w, g}")
     check()
@@ -138,9 +141,9 @@ class DriverIndexSpec extends AnyFunSuite {
     check()
     both(dbs)(s"?[k, v] <- [[9, ${vec(900, 0)}]] :update vs {k => v}")
     check()
-    assert(dbs._1.indexFullBuilds == builds, "mutations patch the driver graphs")
+    assert(dbs._1.db.indexFullBuilds == builds, "mutations patch the driver graphs")
     // an aborted transaction's writes leave no trace in either branch
-    for (db <- Seq(dbs._1, dbs._2)) {
+    for (side <- Seq(dbs._1, dbs._2)) side { db =>
       val tx = db.multiTransaction()
       tx.run(s"?[k, v, w, g] <- [[200, ${vec(3, 0.2)}, ${vec(3, 0.2)}, 0]] :put vs {k => v, w, g}")
       assert(tx.run(s"?[k] := ~vs:cos{k | query: ${vec(3, 0.2)}, k: 1}")
@@ -148,15 +151,14 @@ class DriverIndexSpec extends AnyFunSuite {
       tx.abort()
     }
     check()
-    assert(!rows(dbs._1, s"?[k] := ~vs:cos{k | query: ${vec(3, 0.2)}, k: 3}").contains("200"))
+    assert(!dbs._1(rows(_, s"?[k] := ~vs:cos{k | query: ${vec(3, 0.2)}, k: 3}")).contains("200"))
     // the graph relation scans identically
     assertSame(dbs, "?[l, a, b, d] := *vs:cos{layer: l, fr_k: a, to_k: b, dist: d}")
   }
 
   test("a write to one relation never rebuilds or reloads another relation's index") {
-    for (gate <- Seq(Runtime.getRuntime.maxMemory / 16, -1L)) {
+    for (gate <- Seq(Knee.DriverIndexBytes.default, -1L)) Knee.withLimits(Knee.DriverIndexBytes -> gate) {
       val db = new CozoDb(spark)
-      db.driverIndexGateBytes = gate
       db.run(s"?[k, v, g] <- [${docLits(docRows(20, 4))}] :create docs {k => v, g}")
       db.run(s"?[k, v] <- [${(0 until 30).map(i => s"[$i, ${vec(i, 0)}]").mkString(", ")}] :create vs {k => v}")
       db.run("?[a, b] <- [[1, 2]] :create other {a => b}")
@@ -178,14 +180,14 @@ class DriverIndexSpec extends AnyFunSuite {
       db.run("?[k, v, g] <- [[500, 'apple pie', 0]] :put docs {k => v, g}")
       probeAll()
       assert(db.indexFullBuilds == builds && db.indexGraphLoads == loads, s"gate $gate")
+      if (gate < 0) assert(db.indexDriverBuilds == 0, "an index build took the driver branch")
     }
   }
 
   test("re-registration, import, restore, remove + re-create and abort never serve a stale index") {
-    for (gate <- Seq(Runtime.getRuntime.maxMemory / 16, -1L)) {
+    for (gate <- Seq(Knee.DriverIndexBytes.default, -1L)) Knee.withLimits(Knee.DriverIndexBytes -> gate) {
       import spark.implicits._
       val db = new CozoDb(spark)
-      db.driverIndexGateBytes = gate
       def ftsHits(q: String): Set[Long] =
         db.run(s"?[k] := ~d:fts{k | query: '$q', k: 10}").collect().map(_.getLong(0)).toSet
       def vecHits(): Seq[Long] =
@@ -233,6 +235,7 @@ class DriverIndexSpec extends AnyFunSuite {
       assert(ftsHits("apple") == Set(7L, 11L))
       tx.abort()
       assert(ftsHits("apple") == Set(7L), s"gate $gate: abort")
+      if (gate < 0) assert(db.indexDriverBuilds == 0, "an index build took the driver branch")
     }
   }
 }

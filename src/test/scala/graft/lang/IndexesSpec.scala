@@ -1,6 +1,7 @@
 package graft.lang
 
 import graft.SparkFixture
+import graft.plan.Knee
 import org.scalatest.funsuite.AnyFunSuite
 
 /** Index sys-ops and `~rel:idx{...}` probes, analogues of the
@@ -10,6 +11,16 @@ import org.scalatest.funsuite.AnyFunSuite
   */
 class IndexesSpec extends AnyFunSuite {
   lazy val spark = SparkFixture.spark
+
+  /** `body` on a fresh database whose index knees are pinned to the
+    * distributed branch (whose counters these tests assert); checks
+    * that no index build took the driver branch. */
+  private def onDistributedIndexes(body: CozoDb => Unit): Unit =
+    Knee.withLimits(Knee.DriverIndexBytes -> -1L) {
+      val db = new CozoDb(spark)
+      body(db)
+      assert(db.indexDriverBuilds == 0, "an index build took the driver branch")
+    }
 
   def rows(db: CozoDb, s: String): Seq[Seq[Any]] = db.run(s).collect().toSeq.map(_.toSeq)
 
@@ -200,42 +211,42 @@ class IndexesSpec extends AnyFunSuite {
   }
 
   test("::hnsw create with m: opts the probe into the real graph walk (agrees with exact scan)") {
-    val db = new CozoDb(spark)
-    db.driverIndexGateBytes = -1L // the distributed branch: its counters are asserted
-    // deterministic 4-dim vectors over a numeric key
-    val rows = (0 until 60).map { i =>
-      val v = Seq(math.sin(i * 0.7), math.cos(i * 1.3),
-        math.sin(i * 0.29 + 1), math.cos(i * 0.11)).map(x => f"$x%.4f")
-      s"[$i, vec([${v.mkString(", ")}])]"
-    }.mkString(", ")
-    db.run(s"?[k, v] <- [$rows] :create vecs {k => v}")
-    db.run("::hnsw create vecs:exact { fields: [v], distance: Cosine, dim: 4 }")
-    db.run("::hnsw create vecs:graph { fields: [v], distance: Cosine, dim: 4, m: 8, ef_construction: 64 }")
-    val probe = "query: vec([0.5, -0.5, 0.25, 0.9]), k: 5, bind_distance: d"
-    def hits(idx: String): Seq[(Long, Double)] =
-      db.run(s"?[k, d] := ~vecs:$idx{k | $probe}").collect()
-        .map(r => (r.getLong(0), BigDecimal(r.getDouble(1))
-          .setScale(6, BigDecimal.RoundingMode.HALF_UP).toDouble)).toSeq.sortBy(_._1)
-    // small corpus: the graph walk must reproduce the exact scan
-    assert(hits("graph") == hits("exact"))
-    // the persisted graph is cached per epoch: a second probe reuses
-    // it, and a mutation PATCHES only the affected hash partitions
-    // (no full rebuild — the FTS/LSH incremental-maintenance trade)
-    val builds0 = db.indexFullBuilds
-    val patches0 = db.indexPatches
-    hits("graph")
-    assert(db.indexFullBuilds == builds0)
-    db.run("?[k, v] <- [[999, vec([1.0, 1.0, 1.0, 1.0])]] :put vecs {k => v}")
-    hits("graph")
-    assert(db.indexFullBuilds == builds0, "a put must not force a full rebuild")
-    assert(db.indexPatches == patches0 + 1, "the put patches the affected partition")
-    assert(hits("graph") == hits("exact")) // still agreeing post-mutation
-    // a removal patches too, and the removed key stops matching
-    db.run("?[k] <- [[999]] :rm vecs {k}")
-    assert(hits("graph") == hits("exact"))
-    assert(db.indexFullBuilds == builds0)
-    assert(db.indexPatches == patches0 + 2)
-    assert(!hits("graph").exists(_._1 == 999L))
+    onDistributedIndexes { db =>
+      // deterministic 4-dim vectors over a numeric key
+      val rows = (0 until 60).map { i =>
+        val v = Seq(math.sin(i * 0.7), math.cos(i * 1.3),
+          math.sin(i * 0.29 + 1), math.cos(i * 0.11)).map(x => f"$x%.4f")
+        s"[$i, vec([${v.mkString(", ")}])]"
+      }.mkString(", ")
+      db.run(s"?[k, v] <- [$rows] :create vecs {k => v}")
+      db.run("::hnsw create vecs:exact { fields: [v], distance: Cosine, dim: 4 }")
+      db.run("::hnsw create vecs:graph { fields: [v], distance: Cosine, dim: 4, m: 8, ef_construction: 64 }")
+      val probe = "query: vec([0.5, -0.5, 0.25, 0.9]), k: 5, bind_distance: d"
+      def hits(idx: String): Seq[(Long, Double)] =
+        db.run(s"?[k, d] := ~vecs:$idx{k | $probe}").collect()
+          .map(r => (r.getLong(0), BigDecimal(r.getDouble(1))
+            .setScale(6, BigDecimal.RoundingMode.HALF_UP).toDouble)).toSeq.sortBy(_._1)
+      // small corpus: the graph walk must reproduce the exact scan
+      assert(hits("graph") == hits("exact"))
+      // the persisted graph is cached per epoch: a second probe reuses
+      // it, and a mutation PATCHES only the affected hash partitions
+      // (no full rebuild — the FTS/LSH incremental-maintenance trade)
+      val builds0 = db.indexFullBuilds
+      val patches0 = db.indexPatches
+      hits("graph")
+      assert(db.indexFullBuilds == builds0)
+      db.run("?[k, v] <- [[999, vec([1.0, 1.0, 1.0, 1.0])]] :put vecs {k => v}")
+      hits("graph")
+      assert(db.indexFullBuilds == builds0, "a put must not force a full rebuild")
+      assert(db.indexPatches == patches0 + 1, "the put patches the affected partition")
+      assert(hits("graph") == hits("exact")) // still agreeing post-mutation
+      // a removal patches too, and the removed key stops matching
+      db.run("?[k] <- [[999]] :rm vecs {k}")
+      assert(hits("graph") == hits("exact"))
+      assert(db.indexFullBuilds == builds0)
+      assert(db.indexPatches == patches0 + 2)
+      assert(!hits("graph").exists(_._1 == 999L))
+    }
   }
 
   test("L2 and IP ::hnsw with m: also walk the graph and agree with exact scan") {
@@ -266,32 +277,32 @@ class IndexesSpec extends AnyFunSuite {
 
   test("multi-field ::hnsw with m: walks one graph node per (key, field) and agrees with exact scan") {
     import spark.implicits._
-    val db = new CozoDb(spark)
-    db.driverIndexGateBytes = -1L // the distributed branch: its counters are asserted
-    val data = (0 until 50).map { i =>
-      val v1 = Array(math.sin(i * 0.7), math.cos(i * 1.3), math.sin(i * 0.29 + 1), math.cos(i * 0.11)).map(_.toFloat)
-      (i.toLong, v1, v1.map(x => -x * 0.5f)) // v2: different direction AND norm
+    onDistributedIndexes { db =>
+      val data = (0 until 50).map { i =>
+        val v1 = Array(math.sin(i * 0.7), math.cos(i * 1.3), math.sin(i * 0.29 + 1), math.cos(i * 0.11)).map(_.toFloat)
+        (i.toLong, v1, v1.map(x => -x * 0.5f)) // v2: different direction AND norm
+      }
+      db.registerTable("mfv", data.toDF("k", "v1", "v2"), Seq("k"))
+      db.run("::hnsw create mfv:ex { fields: [v1, v2], distance: Cosine, dim: 4 }")
+      db.run("::hnsw create mfv:gr { fields: [v1, v2], distance: Cosine, dim: 4, m: 8, ef_construction: 64 }")
+      def hits(idx: String): Seq[(Long, Double)] =
+        db.run(s"?[k, d] := ~mfv:$idx{k | query: vec([0.5, -0.5, 0.25, 0.9]), k: 5, bind_distance: d}")
+          .collect().map(r => (r.getLong(0), BigDecimal(r.getDouble(1))
+            .setScale(4, BigDecimal.RoundingMode.HALF_UP).toDouble)).toSeq.sortBy(_._1)
+      assert(hits("gr") == hits("ex"))
+      // stream probes against the multi-field graph
+      def streamHits(idx: String): Set[(Long, Long, Double)] =
+        db.run(s"?[p, k, d] := *mfv[p, q, w], ~mfv:$idx{k | query: q, k: 3, bind_distance: d}")
+          .collect().map(r => (r.getLong(0), r.getLong(1), BigDecimal(r.getDouble(2))
+            .setScale(4, BigDecimal.RoundingMode.HALF_UP).toDouble)).toSet
+      assert(streamHits("gr") == streamHits("ex"))
+      // a mutation patches the multi-field graph (both fields' nodes)
+      val patches0 = db.indexPatches
+      db.run("?[k, v1, v2] <- [[999, vec([0.5, -0.5, 0.25, 0.9]), vec([0.0, 0.0, 0.0, 1.0])]] :put mfv {k}")
+      assert(hits("gr") == hits("ex"))
+      assert(db.indexPatches == patches0 + 1)
+      assert(hits("gr").exists(_._1 == 999L)) // the new row's v1 IS the probe
     }
-    db.registerTable("mfv", data.toDF("k", "v1", "v2"), Seq("k"))
-    db.run("::hnsw create mfv:ex { fields: [v1, v2], distance: Cosine, dim: 4 }")
-    db.run("::hnsw create mfv:gr { fields: [v1, v2], distance: Cosine, dim: 4, m: 8, ef_construction: 64 }")
-    def hits(idx: String): Seq[(Long, Double)] =
-      db.run(s"?[k, d] := ~mfv:$idx{k | query: vec([0.5, -0.5, 0.25, 0.9]), k: 5, bind_distance: d}")
-        .collect().map(r => (r.getLong(0), BigDecimal(r.getDouble(1))
-          .setScale(4, BigDecimal.RoundingMode.HALF_UP).toDouble)).toSeq.sortBy(_._1)
-    assert(hits("gr") == hits("ex"))
-    // stream probes against the multi-field graph
-    def streamHits(idx: String): Set[(Long, Long, Double)] =
-      db.run(s"?[p, k, d] := *mfv[p, q, w], ~mfv:$idx{k | query: q, k: 3, bind_distance: d}")
-        .collect().map(r => (r.getLong(0), r.getLong(1), BigDecimal(r.getDouble(2))
-          .setScale(4, BigDecimal.RoundingMode.HALF_UP).toDouble)).toSet
-    assert(streamHits("gr") == streamHits("ex"))
-    // a mutation patches the multi-field graph (both fields' nodes)
-    val patches0 = db.indexPatches
-    db.run("?[k, v1, v2] <- [[999, vec([0.5, -0.5, 0.25, 0.9]), vec([0.0, 0.0, 0.0, 1.0])]] :put mfv {k}")
-    assert(hits("gr") == hits("ex"))
-    assert(db.indexPatches == patches0 + 1)
-    assert(hits("gr").exists(_._1 == 999L)) // the new row's v1 IS the probe
   }
 
   test("list-of-vectors fields index per element; bind_field/bind_field_idx/bind_vector (hnsw.rs:694-705, 958-996)") {
@@ -393,41 +404,41 @@ class IndexesSpec extends AnyFunSuite {
 
   test("randomized put/rm/probe interleave keeps graph ≡ exact across epochs (cache-invalidation stress)") {
     import spark.implicits._
-    val db = new CozoDb(spark)
-    db.driverIndexGateBytes = -1L // the distributed branch: its counters are asserted
-    val rng = new scala.util.Random(7)
-    def v4(seed: Int): Array[Float] = Array(math.sin(seed * 0.7), math.cos(seed * 1.1),
-      math.sin(seed * 0.37 + 1), math.cos(seed * 0.19)).map(_.toFloat)
-    var live = (0 until 30).map(_.toLong).toSet
-    db.registerTable("mx", live.toSeq.sorted.map(i => (i, v4(i.toInt))).toDF("k", "v"), Seq("k"))
-    db.run("::hnsw create mx:ex { fields: [v], distance: Cosine, dim: 4 }")
-    db.run("::hnsw create mx:gr { fields: [v], distance: Cosine, dim: 4, m: 8, ef_construction: 48 }")
-    def probe(idx: String, s: Int): Seq[(Long, Double)] = {
-      val q = v4(s).map(x => f"$x%.4f").mkString(", ")
-      db.run(s"?[k, d] := ~mx:$idx{k | query: vec([$q]), k: 6, bind_distance: d}")
-        .collect().map(r => (r.getLong(0), BigDecimal(r.getDouble(1))
-          .setScale(4, BigDecimal.RoundingMode.HALF_UP).toDouble)).toSeq.sortBy(_._1)
-    }
-    assert(probe("gr", 1) == probe("ex", 1)) // first probe pays the ONE lazy build
-    val builds0 = db.indexFullBuilds
-    var next = 100L
-    for (step <- 0 until 15) {
-      rng.nextInt(3) match {
-        case 0 => // put a fresh row
-          val vs = v4(next.toInt).map(x => f"$x%.4f").mkString(", ")
-          db.run(s"?[k, v] <- [[$next, vec([$vs])]] :put mx {k}")
-          live += next; next += 1
-        case 1 if live.size > 5 => // rm a random live row
-          val victim = live.toSeq.sorted.apply(rng.nextInt(live.size))
-          db.run(s"?[k] <- [[$victim]] :rm mx {k}")
-          live -= victim
-        case _ => ()
+    onDistributedIndexes { db =>
+      val rng = new scala.util.Random(7)
+      def v4(seed: Int): Array[Float] = Array(math.sin(seed * 0.7), math.cos(seed * 1.1),
+        math.sin(seed * 0.37 + 1), math.cos(seed * 0.19)).map(_.toFloat)
+      var live = (0 until 30).map(_.toLong).toSet
+      db.registerTable("mx", live.toSeq.sorted.map(i => (i, v4(i.toInt))).toDF("k", "v"), Seq("k"))
+      db.run("::hnsw create mx:ex { fields: [v], distance: Cosine, dim: 4 }")
+      db.run("::hnsw create mx:gr { fields: [v], distance: Cosine, dim: 4, m: 8, ef_construction: 48 }")
+      def probe(idx: String, s: Int): Seq[(Long, Double)] = {
+        val q = v4(s).map(x => f"$x%.4f").mkString(", ")
+        db.run(s"?[k, d] := ~mx:$idx{k | query: vec([$q]), k: 6, bind_distance: d}")
+          .collect().map(r => (r.getLong(0), BigDecimal(r.getDouble(1))
+            .setScale(4, BigDecimal.RoundingMode.HALF_UP).toDouble)).toSeq.sortBy(_._1)
       }
-      val s = rng.nextInt(1000)
-      assert(probe("gr", s) == probe("ex", s), s"step $step")
+      assert(probe("gr", 1) == probe("ex", 1)) // first probe pays the ONE lazy build
+      val builds0 = db.indexFullBuilds
+      var next = 100L
+      for (step <- 0 until 15) {
+        rng.nextInt(3) match {
+          case 0 => // put a fresh row
+            val vs = v4(next.toInt).map(x => f"$x%.4f").mkString(", ")
+            db.run(s"?[k, v] <- [[$next, vec([$vs])]] :put mx {k}")
+            live += next; next += 1
+          case 1 if live.size > 5 => // rm a random live row
+            val victim = live.toSeq.sorted.apply(rng.nextInt(live.size))
+            db.run(s"?[k] <- [[$victim]] :rm mx {k}")
+            live -= victim
+          case _ => ()
+        }
+        val s = rng.nextInt(1000)
+        assert(probe("gr", s) == probe("ex", s), s"step $step")
+      }
+      // the whole interleave never forced a full graph rebuild
+      assert(db.indexFullBuilds == builds0, "mutations must patch, not rebuild")
     }
-    // the whole interleave never forced a full graph rebuild
-    assert(db.indexFullBuilds == builds0, "mutations must patch, not rebuild")
   }
 
   test("bound-variable FTS probe: one top-k BM25 per stream query, constant-probe-identical (FtsSearchRA, ra.rs:628)") {
@@ -537,28 +548,28 @@ class IndexesSpec extends AnyFunSuite {
 
   test("repeated graph probes reuse executor-cached restored graphs: one restore shuffle per epoch") {
     import spark.implicits._
-    val db = new CozoDb(spark)
-    db.driverIndexGateBytes = -1L // the distributed branch: its counters are asserted
-    val data = (0 until 60).map { i =>
-      (i.toLong, Array(math.sin(i * 0.9), math.cos(i * 0.4),
-        math.sin(i * 0.17 + 2), math.cos(i * 0.31)).map(_.toFloat))
+    onDistributedIndexes { db =>
+      val data = (0 until 60).map { i =>
+        (i.toLong, Array(math.sin(i * 0.9), math.cos(i * 0.4),
+          math.sin(i * 0.17 + 2), math.cos(i * 0.31)).map(_.toFloat))
+      }
+      db.registerTable("cg", data.toDF("k", "v"), Seq("k"))
+      db.run("::hnsw create cg:ex { fields: [v], distance: Cosine, dim: 4 }")
+      db.run("::hnsw create cg:g { fields: [v], distance: Cosine, dim: 4, m: 8, ef_construction: 48 }")
+      val loads0 = db.indexGraphLoads
+      def probe(idx: String, q: String): Seq[(Long, Double)] =
+        db.run(s"?[k, d] := ~cg:$idx{k | query: vec([$q]), k: 5, bind_distance: d}")
+          .collect().map(r => (r.getLong(0), BigDecimal(r.getDouble(1))
+            .setScale(4, BigDecimal.RoundingMode.HALF_UP).toDouble)).toSeq.sortBy(_._1)
+      for (q <- Seq("1.0, 0.0, 0.0, 0.0", "0.0, 1.0, 0.0, 0.0", "0.3, -0.4, 0.5, 0.1"))
+        assert(probe("g", q) == probe("ex", q), s"query $q")
+      // three probes, ONE restore (the walk reuses the cached graphs)
+      assert(db.indexGraphLoads == loads0 + 1)
+      // a mutation patches the artifact and triggers exactly one reload
+      db.run("?[k, v] <- [[999, vec([1.0, 0.0, 0.0, 0.0])]] :put cg {k}")
+      assert(probe("g", "1.0, 0.0, 0.0, 0.0") == probe("ex", "1.0, 0.0, 0.0, 0.0"))
+      assert(db.indexGraphLoads == loads0 + 2)
     }
-    db.registerTable("cg", data.toDF("k", "v"), Seq("k"))
-    db.run("::hnsw create cg:ex { fields: [v], distance: Cosine, dim: 4 }")
-    db.run("::hnsw create cg:g { fields: [v], distance: Cosine, dim: 4, m: 8, ef_construction: 48 }")
-    val loads0 = db.indexGraphLoads
-    def probe(idx: String, q: String): Seq[(Long, Double)] =
-      db.run(s"?[k, d] := ~cg:$idx{k | query: vec([$q]), k: 5, bind_distance: d}")
-        .collect().map(r => (r.getLong(0), BigDecimal(r.getDouble(1))
-          .setScale(4, BigDecimal.RoundingMode.HALF_UP).toDouble)).toSeq.sortBy(_._1)
-    for (q <- Seq("1.0, 0.0, 0.0, 0.0", "0.0, 1.0, 0.0, 0.0", "0.3, -0.4, 0.5, 0.1"))
-      assert(probe("g", q) == probe("ex", q), s"query $q")
-    // three probes, ONE restore (the walk reuses the cached graphs)
-    assert(db.indexGraphLoads == loads0 + 1)
-    // a mutation patches the artifact and triggers exactly one reload
-    db.run("?[k, v] <- [[999, vec([1.0, 0.0, 0.0, 0.0])]] :put cg {k}")
-    assert(probe("g", "1.0, 0.0, 0.0, 0.0") == probe("ex", "1.0, 0.0, 0.0, 0.0"))
-    assert(db.indexGraphLoads == loads0 + 2)
   }
 
   test("composite-key ::hnsw with m: serves probes through the exact scan (graph node ids need a unique single key)") {
@@ -625,41 +636,41 @@ class IndexesSpec extends AnyFunSuite {
   }
 
   test("bound-variable probe STREAM routes through the graph walk and agrees with exact scan (VERDICT r6 #1)") {
-    val db = new CozoDb(spark)
-    db.driverIndexGateBytes = -1L // the distributed branch: its counters are asserted
-    val rows = (0 until 60).map { i =>
-      val v = Seq(math.sin(i * 0.7), math.cos(i * 1.3),
-        math.sin(i * 0.29 + 1), math.cos(i * 0.11)).map(x => f"$x%.4f")
-      s"[$i, vec([${v.mkString(", ")}])]"
-    }.mkString(", ")
-    db.run(s"?[k, v] <- [$rows] :create vecs {k => v}")
-    db.run("::hnsw create vecs:exact { fields: [v], distance: Cosine, dim: 4 }")
-    db.run("::hnsw create vecs:graph { fields: [v], distance: Cosine, dim: 4, m: 8, ef_construction: 64 }")
-    // 60 distinct query vectors driven through the left stream — the
-    // shape that used to crossJoin-brute-force per probe
-    // 4-decimal rounding: the walker normalizes in Float, the exact
-    // scan scores in Double — they can differ in the last ulp
-    def hits(idx: String): Set[(Long, Long, Double)] =
-      db.run(s"?[p, k, d] := *vecs[p, q], ~vecs:$idx{k | query: q, k: 3, bind_distance: d}")
-        .collect().map(r => (r.getLong(0), r.getLong(1), BigDecimal(r.getDouble(2))
-          .setScale(4, BigDecimal.RoundingMode.HALF_UP).toDouble)).toSet
-    val g = hits("graph")
-    assert(g == hits("exact"), "graph-walked stream probes reproduce the exact scan")
-    // the routed plan never crossJoins the corpus with the probe
-    // stream: broadcast probe batch -> partition-local walks -> top-k
-    val plan = db.run(
-      "?[p, k, d] := *vecs[p, q], ~vecs:graph{k | query: q, k: 3, bind_distance: d}")
-      .queryExecution.executedPlan.toString
-    assert(!plan.contains("CartesianProduct") && !plan.contains("BroadcastNestedLoopJoin"),
-      s"stream probe plan must be crossJoin-free:\n$plan")
-    // every probe finds itself at distance 0 (no self-exclusion for
-    // synthetic query ids)
-    assert((0 until 60).forall(i => g.exists(t => t._1 == i && t._2 == i && t._3 == 0.0)))
-    // the persisted graph is reused across stream probes (no per-probe
-    // or per-query rebuilds)
-    val builds0 = db.indexFullBuilds
-    hits("graph")
-    assert(db.indexFullBuilds == builds0)
+    onDistributedIndexes { db =>
+      val rows = (0 until 60).map { i =>
+        val v = Seq(math.sin(i * 0.7), math.cos(i * 1.3),
+          math.sin(i * 0.29 + 1), math.cos(i * 0.11)).map(x => f"$x%.4f")
+        s"[$i, vec([${v.mkString(", ")}])]"
+      }.mkString(", ")
+      db.run(s"?[k, v] <- [$rows] :create vecs {k => v}")
+      db.run("::hnsw create vecs:exact { fields: [v], distance: Cosine, dim: 4 }")
+      db.run("::hnsw create vecs:graph { fields: [v], distance: Cosine, dim: 4, m: 8, ef_construction: 64 }")
+      // 60 distinct query vectors driven through the left stream — the
+      // shape that used to crossJoin-brute-force per probe
+      // 4-decimal rounding: the walker normalizes in Float, the exact
+      // scan scores in Double — they can differ in the last ulp
+      def hits(idx: String): Set[(Long, Long, Double)] =
+        db.run(s"?[p, k, d] := *vecs[p, q], ~vecs:$idx{k | query: q, k: 3, bind_distance: d}")
+          .collect().map(r => (r.getLong(0), r.getLong(1), BigDecimal(r.getDouble(2))
+            .setScale(4, BigDecimal.RoundingMode.HALF_UP).toDouble)).toSet
+      val g = hits("graph")
+      assert(g == hits("exact"), "graph-walked stream probes reproduce the exact scan")
+      // the routed plan never crossJoins the corpus with the probe
+      // stream: broadcast probe batch -> partition-local walks -> top-k
+      val plan = db.run(
+        "?[p, k, d] := *vecs[p, q], ~vecs:graph{k | query: q, k: 3, bind_distance: d}")
+        .queryExecution.executedPlan.toString
+      assert(!plan.contains("CartesianProduct") && !plan.contains("BroadcastNestedLoopJoin"),
+        s"stream probe plan must be crossJoin-free:\n$plan")
+      // every probe finds itself at distance 0 (no self-exclusion for
+      // synthetic query ids)
+      assert((0 until 60).forall(i => g.exists(t => t._1 == i && t._2 == i && t._3 == 0.0)))
+      // the persisted graph is reused across stream probes (no per-probe
+      // or per-query rebuilds)
+      val builds0 = db.indexFullBuilds
+      hits("graph")
+      assert(db.indexFullBuilds == builds0)
+    }
   }
 
   test("turkish FTS round-trip: harmony-stemmed index and query agree") {
@@ -687,25 +698,25 @@ class IndexesSpec extends AnyFunSuite {
   }
 
   test("FTS index absorbs put/rm as deltas — no full rebuild per mutation") {
-    val db = new CozoDb(spark)
-    db.driverIndexGateBytes = -1L // the distributed branch: its counters are asserted
-    db.run("?[k, v] <- [['a', 'red apples'], ['b', 'green pears']] :create d {k}")
-    db.run("::fts create d:fts { extractor: v, tokenizer: Simple, filters: [Lowercase] }")
-    def search(q: String): Set[Any] =
-      rows(db, s"?[k] := ~d:fts{k | query: '$q', k: 10}").map(_.head).toSet
-    assert(search("apples") == Set("a"))
-    assert(db.indexFullBuilds == 1)
-    // put: new doc + overwrite of an existing one
-    db.run("?[k, v] <- [['c', 'red grapes'], ['a', 'yellow bananas']] :put d {k}")
-    assert(search("red") == Set("c"))       // a's old text is gone
-    assert(search("bananas") == Set("a"))   // a's new text is found
-    assert(search("grapes") == Set("c"))
-    // rm: document drops out of the index
-    db.run("?[k] <- [['b']] :rm d {k}")
-    assert(search("pears") == Set())
-    assert(search("bananas") == Set("a"))
-    // every mutation above was absorbed as a delta on the single build
-    assert(db.indexFullBuilds == 1)
+    onDistributedIndexes { db =>
+      db.run("?[k, v] <- [['a', 'red apples'], ['b', 'green pears']] :create d {k}")
+      db.run("::fts create d:fts { extractor: v, tokenizer: Simple, filters: [Lowercase] }")
+      def search(q: String): Set[Any] =
+        rows(db, s"?[k] := ~d:fts{k | query: '$q', k: 10}").map(_.head).toSet
+      assert(search("apples") == Set("a"))
+      assert(db.indexFullBuilds == 1)
+      // put: new doc + overwrite of an existing one
+      db.run("?[k, v] <- [['c', 'red grapes'], ['a', 'yellow bananas']] :put d {k}")
+      assert(search("red") == Set("c"))       // a's old text is gone
+      assert(search("bananas") == Set("a"))   // a's new text is found
+      assert(search("grapes") == Set("c"))
+      // rm: document drops out of the index
+      db.run("?[k] <- [['b']] :rm d {k}")
+      assert(search("pears") == Set())
+      assert(search("bananas") == Set("a"))
+      // every mutation above was absorbed as a delta on the single build
+      assert(db.indexFullBuilds == 1)
+    }
   }
 
   test("LSH band table absorbs put/rm as deltas and keeps probing correctly") {
@@ -742,22 +753,22 @@ class IndexesSpec extends AnyFunSuite {
   }
 
   test("FTS delta chain compacts to a fresh build after ftsMaxDeltas mutations") {
-    val db = new CozoDb(spark)
-    db.driverIndexGateBytes = -1L // the distributed branch: its counters are asserted
-    db.run("?[k, v] <- [[0, 'seed document']] :create d {k}")
-    db.run("::fts create d:fts { extractor: v, tokenizer: Simple, filters: [Lowercase] }")
-    def search(q: String): Set[Any] =
-      rows(db, s"?[k] := ~d:fts{k | query: '$q', k: 50}").map(_.head).toSet
-    assert(search("seed") == Set(0L))
-    assert(db.indexFullBuilds == 1)
-    for (i <- 1 to db.ftsMaxDeltas + 1)
-      db.run(s"?[k, v] <- [[$i, 'doc number word$i']] :put d {k}")
-    // the chain hit the bound: the cache was dropped mid-stream and the
-    // next probe recompacted (exactly one extra full build)
-    assert(search("word1") == Set(1L))
-    assert(search(s"word${db.ftsMaxDeltas + 1}") == Set((db.ftsMaxDeltas + 1).toLong))
-    assert(search("number").size == db.ftsMaxDeltas + 1)
-    assert(db.indexFullBuilds == 2)
+    onDistributedIndexes { db =>
+      db.run("?[k, v] <- [[0, 'seed document']] :create d {k}")
+      db.run("::fts create d:fts { extractor: v, tokenizer: Simple, filters: [Lowercase] }")
+      def search(q: String): Set[Any] =
+        rows(db, s"?[k] := ~d:fts{k | query: '$q', k: 50}").map(_.head).toSet
+      assert(search("seed") == Set(0L))
+      assert(db.indexFullBuilds == 1)
+      for (i <- 1 to db.ftsMaxDeltas + 1)
+        db.run(s"?[k, v] <- [[$i, 'doc number word$i']] :put d {k}")
+      // the chain hit the bound: the cache was dropped mid-stream and the
+      // next probe recompacted (exactly one extra full build)
+      assert(search("word1") == Set(1L))
+      assert(search(s"word${db.ftsMaxDeltas + 1}") == Set((db.ftsMaxDeltas + 1).toLong))
+      assert(search("number").size == db.ftsMaxDeltas + 1)
+      assert(db.indexFullBuilds == 2)
+    }
   }
 
   test("::index create registers a scannable permuted copy; ::indices lists; drop removes") {

@@ -1,6 +1,7 @@
 package graft.lang
 
 import graft.SparkFixture
+import graft.plan.Knee
 import org.scalatest.funsuite.AnyFunSuite
 
 /** Differential fuzz of the keyed mutation sinks (program.rs:195-205,
@@ -20,14 +21,19 @@ import org.scalatest.funsuite.AnyFunSuite
 class MutationFuzzSpec extends AnyFunSuite {
   lazy val spark = SparkFixture.spark
 
+  /** `body` with write overlays and const rules bounded to `bound` rows
+    * (None: the default bounds). */
+  private def underBound[A](bound: Option[Int])(body: => A): A =
+    Knee.withLimits(bound.toSeq.flatMap(b =>
+      Seq(Knee.PatchKeys -> b.toLong, Knee.LocalRows -> b.toLong)): _*)(body)
+
   /** Divergences of `seeds` random chains of `steps` ops from the model,
     * on databases whose overlay bound is `bound` (None: the default). */
-  private def fuzz(seeds: Int, steps: Int, bound: Option[Int]): Seq[String] = {
+  private def fuzz(seeds: Int, steps: Int, bound: Option[Int]): Seq[String] = underBound(bound) {
     val failures = scala.collection.mutable.ArrayBuffer.empty[String]
     for (seed <- 0 until seeds) {
       val rnd = new scala.util.Random(seed * 30011 + 101)
       val db = new CozoDb(spark)
-      bound.foreach(db.maxDriverPatchKeys = _)
       db.run(s"?[k, a, b] <- [[0, 0, 0]] :create m$seed {k => a, b}")
       val model = scala.collection.mutable.Map(Option(0L) -> ((0L, 0L)))
       val log = scala.collection.mutable.ArrayBuffer.empty[String]
@@ -103,9 +109,8 @@ class MutationFuzzSpec extends AnyFunSuite {
   /** Sorted rows of `script` on a default-bound and a bound-0 database
     * after the same `setup` scripts. */
   private def bothPaths(setup: Seq[String], script: String): (Seq[String], Seq[String]) = {
-    def on(bound: Option[Int]) = {
+    def on(bound: Option[Int]) = underBound(bound) {
       val db = new CozoDb(spark)
-      bound.foreach(db.maxDriverPatchKeys = _)
       setup.foreach(db.run(_))
       db.run(script).collect().map(_.toSeq.mkString("|")).toSeq.sorted
     }

@@ -1,6 +1,7 @@
 package graft.lang
 
 import graft.SparkFixture
+import graft.plan.Knee
 import org.apache.spark.sql.graftbridge.ListenerBridge
 import org.scalatest.funsuite.AnyFunSuite
 import scala.collection.mutable.ArrayBuffer
@@ -24,12 +25,11 @@ class WriteOverlaySpec extends AnyFunSuite {
   private def rows(db: CozoDb, script: String): Seq[String] =
     db.run(script).collect().map(_.toSeq.mkString("|")).toSeq.sorted
 
-  /** (default bound, bound 0). */
-  private def pair(): Seq[CozoDb] = {
-    val folding = new CozoDb(spark)
-    folding.maxDriverPatchKeys = 0
-    Seq(new CozoDb(spark), folding)
-  }
+  /** `body` on a fresh database under the default bounds, then on one
+    * under bound 0 (write overlays and local const rules hold no row). */
+  private def bothBounds[A](body: CozoDb => A): Seq[A] =
+    Seq(body(new CozoDb(spark)),
+      Knee.withLimits(Knee.PatchKeys -> 0L, Knee.LocalRows -> 0L)(body(new CozoDb(spark))))
 
   private def orders(db: CozoDb): Unit =
     db.registerTable("o", spark.range(0, 200)
@@ -52,7 +52,7 @@ class WriteOverlaySpec extends AnyFunSuite {
   }
 
   test("NULL-keyed :put, :rm, :update, :insert and :delete keep one row per key value") {
-    for (db <- pair()) {
+    bothBounds { db =>
       db.registerTable("na", Seq((Option(1L), "x"), (Option.empty[Long], "y")).toDF("k", "v"), Seq("k"))
       def state = rows(db, "?[k, v] := *na{k, v}")
       db.run("?[k, v] <- [[null, 'z']] :put na {k => v}")
@@ -83,8 +83,7 @@ class WriteOverlaySpec extends AnyFunSuite {
 
   test("a validity :put is seen by an @ t read") {
     def ts(s: String) = java.sql.Timestamp.from(java.time.Instant.parse(s))
-    val dbs = pair()
-    for (db <- dbs) {
+    val writes = bothBounds { db =>
       db.registerTable("hist",
         Seq((1L, "a", ts("2024-01-01T00:00:00Z"), true)).toDF("id", "v", "vld", "op"),
         keys = Seq("id", "vld", "op"), validity = Some("vld"), validityAssert = Some("op"))
@@ -94,12 +93,13 @@ class WriteOverlaySpec extends AnyFunSuite {
       assert(at("2024-01-15T00:00:00Z") == Seq("1|a"))
       assert(at("2024-02-15T00:00:00Z") == Seq("1|b"))
       assert(at("2024-03-15T00:00:00Z").isEmpty)
+      db.overlayWrites
     }
-    assert(dbs.head.overlayWrites == 2 && dbs(1).overlayWrites == 0)
+    assert(writes == Seq(2, 0))
   }
 
   test("trigger and callback _new/_old rows are those of the folding path") {
-    val seen = pair().map { db =>
+    val seen = bothBounds { db =>
       val log = ArrayBuffer.empty[String]
       db.registerTable("t", Seq((1L, "a"), (2L, "b")).toDF("k", "v"), Seq("k"))
       db.registerTable("tlog", Seq.empty[(String, Long, String)].toDF("kind", "k", "v"), Seq("kind", "k"))
@@ -163,24 +163,25 @@ class WriteOverlaySpec extends AnyFunSuite {
 
   test("writes past the bound fold once, then the overlay starts over") {
     val db = new CozoDb(spark)
-    db.maxDriverPatchKeys = 3
     orders(db)
-    for (k <- 300 until 303) db.run(s"?[k, v, s] <- [[$k, 0, 'n']] :put o {k => v, s}")
-    assert(db.overlayWrites == 3 && db.overlayFolds == 0)
-    db.run("?[k, v, s] <- [[303, 0, 'n']] :put o {k => v, s}")
-    assert(db.overlayFolds == 1)
-    db.run("?[k] <- [[300]] :rm o {k}")
-    assert(db.overlayWrites == 4 && db.overlayFolds == 1)
-    assert(rows(db, "?[k] := *o{k, s: 'n'}") == Seq("301", "302", "303"))
+    Knee.withLimits(Knee.PatchKeys -> 3L) {
+      for (k <- 300 until 303) db.run(s"?[k, v, s] <- [[$k, 0, 'n']] :put o {k => v, s}")
+      assert(db.overlayWrites == 3 && db.overlayFolds == 0)
+      db.run("?[k, v, s] <- [[303, 0, 'n']] :put o {k => v, s}")
+      assert(db.overlayFolds == 1)
+      db.run("?[k] <- [[300]] :rm o {k}")
+      assert(db.overlayWrites == 4 && db.overlayFolds == 1)
+      assert(rows(db, "?[k] := *o{k, s: 'n'}") == Seq("301", "302", "303"))
+    }
   }
 
   test("const rules dedupe on the driver exactly like dropDuplicates, -0.0 and NaN included") {
     val params = Map[String, Any]("nan" -> Double.NaN, "nz" -> -0.0)
     val script = "?[a, b] <- [[$nan, 1], [$nan, 1], [0.0, 2], [$nz, 2], [$nz, 3], [1.5, 1], [1.5, 1]]"
-    val Seq(local, folded) = pair().map(db =>
+    val Seq(local, folded) = bothBounds(db =>
       db.run(script, params).collect().map(_.toSeq.mkString("|")).toSeq.sorted)
     assert(local == folded)
     assert(local == Seq("0.0|2", "0.0|3", "1.5|1", "NaN|1"))
-    assert(jobs(pair().head.run(script, params).collect()) == 0)
+    assert(jobs(new CozoDb(spark).run(script, params).collect()) == 0)
   }
 }

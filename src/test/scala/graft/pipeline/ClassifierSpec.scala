@@ -1,6 +1,7 @@
 package graft.pipeline
 
 import graft.SparkFixture
+import graft.plan.Knee
 import org.apache.spark.sql.functions._
 import org.scalatest.funsuite.AnyFunSuite
 
@@ -90,10 +91,10 @@ class ClassifierSpec extends AnyFunSuite {
     import spark.implicits._
     val docs = corpus(200)
     val df = docs.toDF("id", "text", "label")
-    // maxDriverFeatureBytes = 0 forces the distributed treeAggregate
+    // ClassifierFeatureBytes = 0 forces the distributed treeAggregate
     // loop (the default would take the r13 driver knee on this corpus)
-    val model = Classifier.train(df, "id", "text", "label",
-      buckets = 32, iters = 3, lr = 2.0, maxDriverFeatureBytes = 0L)
+    val model = Knee.withLimits(Knee.ClassifierFeatureBytes -> 0L)(
+      Classifier.train(df, "id", "text", "label", buckets = 32, iters = 3, lr = 2.0))
     val (refW, refLosses) = refTrain(docs, buckets = 32, iters = 3, lr = 2.0)
     assert(model.weights.keySet == refW.keySet)
     for ((b, w) <- refW)
@@ -115,8 +116,8 @@ class ClassifierSpec extends AnyFunSuite {
       val df = docs.toDF("id", "text", "label")
       val drv = Classifier.train(df, "id", "text", "label",
         buckets = 32, iters = 4, lr = 2.0, ngrams = ng)
-      val dist = Classifier.train(df, "id", "text", "label",
-        buckets = 32, iters = 4, lr = 2.0, ngrams = ng, maxDriverFeatureBytes = 0L)
+      val dist = Knee.withLimits(Knee.ClassifierFeatureBytes -> 0L)(Classifier.train(df, "id",
+        "text", "label", buckets = 32, iters = 4, lr = 2.0, ngrams = ng))
       assert(drv.weights.keySet == dist.weights.keySet, s"ngrams=$ng")
       for ((b, w) <- dist.weights)
         assert(math.abs(drv.weights(b) - w) <= 1.01e-6, s"ngrams=$ng bucket $b")

@@ -247,6 +247,16 @@ class AnnSpec extends AnyFunSuite {
     }
   }
 
+  test("string-keyed pqCodebooks logs no driver knee line for the distributed run") {
+    import spark.implicits._
+    val corpus = (0 until 12).map(i => (s"d$i", Array.tabulate(4)(j => ((i * 7 + j * 3) % 5).toFloat)))
+      .toDF("id", "vec")
+    val (cb, lines) = graft.plan.KneeLog.capture(
+      Ann.pqCodebooks(corpus, subspaces = 2, codes = 3, iters = 1).count())
+    assert(cb > 0)
+    assert(!lines.exists(_.contains("op=pqCodebooks ")), lines)
+  }
+
   test("bruteForceTopK excludes self and ranks by cosine") {
     val emb = graft.Tables.load(spark, "/root/testdata/sf0.001", "embeddings")
     val corpus = emb.select(col("vec_id").as("id"), col("embedding").as("vec"))

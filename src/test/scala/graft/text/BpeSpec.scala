@@ -1,6 +1,7 @@
 package graft.text
 
 import graft.SparkFixture
+import graft.plan.Knee
 import org.apache.spark.sql.functions._
 import org.scalatest.funsuite.AnyFunSuite
 
@@ -69,10 +70,11 @@ class BpeSpec extends AnyFunSuite {
   }
 
   test("driver trainer == distributed batch-1 loop on real text") {
-    // maxDriverWords = 0 forces the distributed rounds the driver loop shadows
+    // BpeWords = 0 forces the distributed rounds the driver loop shadows
     val sample = docs.filter(col("doc_id") < 60)
     val drv = Bpe.train(sample, "text", 25).map(m => (m.left, m.right))
-    val dist = Bpe.train(sample, "text", 25, maxDriverWords = 0L).map(m => (m.left, m.right))
+    val dist = Knee.withLimits(Knee.BpeWords -> 0L)(Bpe.train(sample, "text", 25))
+      .map(m => (m.left, m.right))
     assert(drv == dist)
   }
 
