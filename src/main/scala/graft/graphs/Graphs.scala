@@ -82,13 +82,14 @@ object Graphs {
     * Returns (node, rank) with ranks summing to ~1.
     */
   def pageRank(edges: DataFrame, iters: Int = 10, damping: Double = 0.85): DataFrame = {
-    val (e, nE) = edges.select("src", "dst").distinct().ckptCount()
+    val in = LocalGraph.Edges(edges.select("src", "dst").distinct())
     // scale knee: a graph that fits the driver runs the identical
     // synchronous iteration in memory — the reference is in-memory
     // always; above the cap the distributed loop below takes over.
     // Edges are SORTED so float accumulation order is run-deterministic.
-    for (g <- LocalGraph.fetch("pageRank", e, nE, guard = longEndpoints(e)))
-      return pageRankDriver(e.sparkSession, g.sorted(), iters, damping)
+    for (g <- LocalGraph.fetch("pageRank", in, guard = longEndpoints(in.frame)))
+      return pageRankDriver(edges.sparkSession, g.sorted(), iters, damping)
+    val e = in.df
     val ns = nodes(e).ckpt()
     val n = ns.count().toDouble
     val outDeg = e.groupBy(col("src").as("node")).agg(count(lit(1)).as("deg")).ckpt()
@@ -168,15 +169,16 @@ object Graphs {
     // from one checkpoint halves the input evaluations (r7→r8 drift
     // forensics: the raw-endpoint seeding had added a second full
     // evaluation of the input plan)
-    val (raw, nRaw) = edges.select("src", "dst").ckptCount()
+    val in = LocalGraph.Edges(edges.select("src", "dst"))
     // scale knee: the output (node → min id of its component) is fully
     // SET-determined — any correct algorithm emits identical rows — so
     // a union-find under the cap is a pure execution-engine switch
-    for (g <- LocalGraph.fetch("connectedComponents", raw, nRaw, guard = longEndpoints(raw))) {
+    for (g <- LocalGraph.fetch("connectedComponents", in, guard = longEndpoints(in.frame))) {
       val uf = new UnionFind(g.n)
       for (i <- g.src.indices) uf.union(g.src(i), g.dst(i))
-      return labels(raw, g, Array.tabulate(g.n)(uf.find), "comp")
+      return labels(edges, g, Array.tabulate(g.n)(uf.find), "comp")
     }
+    val raw = in.df
     val und = undirected(raw).ckpt()
     // node set from the RAW endpoints: a node whose only edges are
     // self-loops is still a graph node (its own singleton component) —
@@ -290,7 +292,8 @@ object Graphs {
   def labelPropagationOnUnd(und: DataFrame, iters: Int = 5): DataFrame = {
     // scale knee: votes are integers and the tie-break is total, so
     // the in-memory mirror is bit-identical to the distributed rounds
-    for (g <- LocalGraph.fetch("labelPropagation", und, und.count(), guard = longEndpoints(und)))
+    for (g <- LocalGraph.fetch("labelPropagation", LocalGraph.Edges.counted(und, und.count()),
+        guard = longEndpoints(und)))
       return labels(und, g, lpDriver(g, iters), "label")
     var lab = nodes(und).withColumn("label", col("node")).ckpt()
     var i = 0
@@ -336,8 +339,9 @@ object Graphs {
     // cap the level walk runs in memory with identical min-hop
     // semantics; distributed shapes (bitmap levels, meetMin fallback)
     // above it
-    val (e, nE) = edges.select("src", "dst").distinct().ckptCount()
-    for (g <- LocalGraph.fetch("bfs", e, nE)) return bfsDriver(g, starts, maxHops)
+    val in = LocalGraph.Edges(edges.select("src", "dst").distinct())
+    for (g <- LocalGraph.fetch("bfs", in)) return bfsDriver(g, starts, maxHops)
+    val e = in.df
     bfsLevels(e, starts, maxHops).getOrElse {
       val base = starts.select(col("start"), col("start").as("node"), lit(0).as("depth"))
       Fixpoint.meetMin(base,
@@ -355,7 +359,7 @@ object Graphs {
     * ~50 ns/edge-visit in boxing alone, which a many-source sweep turns
     * into whole seconds. */
   private def bfsDriver(g: LocalGraph, starts: DataFrame, maxHops: Int): DataFrame = {
-    val st = starts.select(col("start")).distinct().collect().map(_.get(0))
+    val st = LocalGraph.rowsOf(starts.select(col("start")).distinct()).map(_.get(0))
     val depth = Array.fill(g.n)(-1)
     val queue = new Array[Int](g.n)
     val out = scala.collection.mutable.ArrayBuffer.empty[Row]
@@ -459,11 +463,12 @@ object Graphs {
     * as the semi-naive transitive-closure shape of eval.rs:571-610.
     */
   def reachable(edges: DataFrame, starts: DataFrame, hops: Int): DataFrame = {
-    val (e, nE) = edges.select("src", "dst").distinct().ckptCount()
+    val in = LocalGraph.Edges(edges.select("src", "dst").distinct())
     // scale knee: ≤ `hops` reachability over a driver-sized graph is
     // the bfsDriver walk minus the depth column (same base rows)
-    for (g <- LocalGraph.fetch("reachable", e, nE))
+    for (g <- LocalGraph.fetch("reachable", in))
       return bfsDriver(g, starts, hops).select("start", "node")
+    val e = in.df
     val base = starts.select(col("start"), col("start").as("node"))
     Fixpoint.boundedExpand(base,
       delta => delta.join(e, delta("node") === e("src"))
@@ -483,15 +488,16 @@ object Graphs {
     if (!edges.columns.contains("weight"))
       return bfs(edges, starts, maxIter)
         .select(col("start"), col("node"), col("depth").cast("double").as("cost"))
-    val (e, nE) = edges.select(col("src"), col("dst"), col("weight").cast("double").as("weight"))
-      .distinct().ckptCount()
+    val in = LocalGraph.Edges(edges.select(col("src"), col("dst"),
+      col("weight").cast("double").as("weight")).distinct())
     // scale knee: the in-memory loop mirrors the meetMin relaxation
     // round-for-round — per round, candidates = improved set extended by
     // one edge, folded with min; costs accumulate along the path in the
     // same order, so values are bit-identical, including the maxIter
     // hop bound
-    for (g <- LocalGraph.fetch("shortestPaths", e, nE, weighted = true))
+    for (g <- LocalGraph.fetch("shortestPaths", in, weighted = true))
       return sspDriver(g, starts, maxIter)
+    val e = in.df
     val base = starts.select(col("start"), col("start").as("node"), lit(0.0).as("cost"))
     Fixpoint.meetMin(base,
       delta => delta.join(e, delta("node") === e("src"))
@@ -501,7 +507,7 @@ object Graphs {
 
   /** In-memory mirror of the weighted meetMin loop (see shortestPaths). */
   private def sspDriver(g: LocalGraph, starts: DataFrame, maxIter: Int): DataFrame = {
-    val st = starts.select(col("start")).distinct().collect().map(_.get(0))
+    val st = LocalGraph.rowsOf(starts.select(col("start")).distinct()).map(_.get(0))
     val out = scala.collection.mutable.ArrayBuffer.empty[Row]
     for (s <- st; si = g.id(s)) {
       val dist = scala.collection.mutable.HashMap.empty[Int, Double]
@@ -532,16 +538,16 @@ object Graphs {
     * bound the input's depth (sample/cut) rather than raising maxIter.
     */
   def topSort(edges: DataFrame, maxIter: Int = 100): DataFrame = {
-    val (distinctEdges, nD) = edges.select("src", "dst").distinct().ckptCount()
+    val in = LocalGraph.Edges(edges.select("src", "dst").distinct())
     // scale knee: the layer assignment (Kahn peel round = longest path
     // from a source) is set-determined, so the in-memory peel emits
     // identical rows — and the same cycle/maxIter error contracts
-    for (g <- LocalGraph.fetch("topSort", distinctEdges, nD,
-        guard = longEndpoints(distinctEdges))) {
-      val spark = distinctEdges.sparkSession
+    for (g <- LocalGraph.fetch("topSort", in, guard = longEndpoints(in.frame))) {
+      val spark = edges.sparkSession
       import spark.implicits._
       return topSortDriver(g, maxIter).toDF("node", "layer")
     }
+    val distinctEdges = in.df
     var remaining = distinctEdges
     var live = nodes(remaining).ckpt()
     // drive the loop off DRIVER-side arithmetic (liveCount -= peeled):
@@ -619,12 +625,13 @@ object Graphs {
   def stronglyConnectedComponents(edges: DataFrame, maxRounds: Int = 20): DataFrame = {
     // one evaluation of the (possibly derived) input plan; live edges
     // and the node seeding both read the checkpoint
-    val (raw, nRaw) = edges.select("src", "dst").ckptCount()
+    val in = LocalGraph.Edges(edges.select("src", "dst"))
     // scale knee: (node → min member of its SCC) is set-determined, so
     // iterative Tarjan under the cap emits identical rows to the
     // distributed FW-BW-MIN peeling
-    for (g <- LocalGraph.fetch("scc", raw, nRaw, guard = longEndpoints(raw)))
-      return labels(raw, g, sccDriver(g), "comp")
+    for (g <- LocalGraph.fetch("scc", in, guard = longEndpoints(in.frame)))
+      return labels(edges, g, sccDriver(g), "comp")
+    val raw = in.df
     var live = raw.filter(col("src") =!= col("dst"))
       .distinct().ckpt()
     // raw endpoints: self-loop-only nodes are singleton SCCs (the
@@ -735,8 +742,8 @@ object Graphs {
     // join semantics mirrored: a row contributes only when BOTH
     // endpoints carry the tag's assignment. Pinned driver==distributed
     // by GraphsSpec.
-    for (g <- LocalGraph.fetch("modularity", und.select(col("src"), col("dst"), col("w")),
-        und.count(), weighted = true,
+    for (g <- LocalGraph.fetch("modularity", LocalGraph.Edges.counted(
+          und.select(col("src"), col("dst"), col("w")), und.count()), weighted = true,
         guard = longEndpoints(und) &&
           und.schema("w").dataType == DoubleType &&
           tagged.schema("node").dataType == LongType &&
@@ -831,7 +838,8 @@ object Graphs {
       // semantics (gain formula, parity gating, tie-breaks, thresholds,
       // convergence protocol) are mirrored line-for-line; only float
       // summation order differs, as it already does between AQE plans.
-      for (lg <- LocalGraph.fetch("louvain", g.select(col("src"), col("dst"), col("w")), gCount,
+      for (lg <- LocalGraph.fetch("louvain",
+          LocalGraph.Edges.counted(g.select(col("src"), col("dst"), col("w")), gCount),
           weighted = true, guard = longIds).map(_.sorted())) {
         // sorted (src, dst): run-deterministic float accumulation
         val rows = lg.src.indices.map(i => (lg.long(lg.src(i)), lg.long(lg.dst(i)), lg.w(i))).toArray
@@ -1159,11 +1167,10 @@ object Graphs {
   def minimumSpanningForest(edges: DataFrame, maxRounds: Int = 30): DataFrame = {
     val w = if (edges.columns.contains("weight")) col("weight").cast("double") else lit(1.0)
     // canonical undirected edges a<b, min weight per pair
-    val (es, esN) = edges.select(least(col("src"), col("dst")).as("a"),
+    val in = LocalGraph.Edges(edges.select(least(col("src"), col("dst")).as("a"),
         greatest(col("src"), col("dst")).as("b"), w.as("weight"))
       .filter(col("a") =!= col("b"))
-      .groupBy("a", "b").agg(min(col("weight")).as("weight"))
-      .ckptCount()
+      .groupBy("a", "b").agg(min(col("weight")).as("weight")))
     // scale knee (same pattern as pageRank/topSort/betweenness — the
     // reference's kruskal.rs/prim.rs materialize the whole graph
     // always): below the cap, driver Kruskal over the (weight, a, b)
@@ -1173,15 +1180,17 @@ object Graphs {
     // distinct-weight graph is unique. O(E log E) in memory beats
     // O(log V) distributed rounds of joins by ~two orders of magnitude
     // at this scale; the Borůvka loop below stays the 100 TB path.
-    for (g <- LocalGraph.fetch("mst", es, esN, weighted = true,
-        guard = es.schema("a").dataType == LongType && es.schema("b").dataType == LongType)) {
+    for (g <- LocalGraph.fetch("mst", in, weighted = true,
+        guard = in.frame.schema("a").dataType == LongType &&
+          in.frame.schema("b").dataType == LongType)) {
       val uf = new UnionFind(g.n)
       val keep = g.src.indices.sortBy(i => (g.w(i), g.src(i), g.dst(i)))
         .filter(i => uf.union(g.src(i), g.dst(i)))
-      val spark = es.sparkSession
+      val spark = edges.sparkSession
       import spark.implicits._
       return keep.map(i => (g.long(g.src(i)), g.long(g.dst(i)), g.w(i))).toDF("src", "dst", "weight")
     }
+    val es = in.df
     // Live edges CARRY their endpoints' current component labels
     // (ca/cb) instead of a node→comp side table: the old shape re-joined
     // the full edge set against the component table twice per round (two
@@ -1287,14 +1296,14 @@ object Graphs {
     // mirror accumulates the distance sums in memory and emits one row
     // per node. Hop counts are exact integers, the closing division is
     // the same single IEEE op. Distributed sweep above the cap.
-    val (und, nUnd) = undirected(edges).select("src", "dst").distinct().ckptCount()
+    val in = LocalGraph.Edges(undirected(edges).select("src", "dst").distinct())
     // the node universe comes from the RAW edge relation (self-loop-only
     // nodes count toward n and the sample); und endpoints are a subset
-    for (g <- LocalGraph.fetch("closeness", und, nUnd,
-        guard = und.schema("src").dataType == LongType, nodes = nodes(edges))) {
+    for (g <- LocalGraph.fetch("closeness", in,
+        guard = in.frame.schema("src").dataType == LongType, nodes = nodes(edges))) {
       // the mirror: same hash-sampled sources, same bounded BFS hops,
       // same (n−1)·s / (n·Σd) closing division
-      val spark = und.sparkSession
+      val spark = edges.sparkSession
       import spark.implicits._
       val sources = g.sample(spark, sample)
       val total = new Array[Double](g.n)
@@ -1312,6 +1321,7 @@ object Graphs {
     // node set of the RAW edges: undirected() drops self-loops, but a
     // self-loop-only node still counts toward n and the sample (it just
     // reaches nothing)
+    val und = in.df
     val ns = nodes(edges).ckptLazy()
     val n = ns.count()
     val s = math.min(sample.toLong, n)
@@ -1386,19 +1396,20 @@ object Graphs {
   def betweennessCentralityApprox(edges: DataFrame, sample: Int = 1000,
                                   maxIter: Int = 30): DataFrame = {
     val spark = edges.sparkSession
-    val (und, nUnd) = undirected(edges).select("src", "dst").distinct().ckptCount()
+    val in = LocalGraph.Edges(undirected(edges).select("src", "dst").distinct())
     // scale knee: below the cap the SAME level-synchronous forward /
     // backward sweeps run in memory (sigma counts are exact integers;
     // delta sums differ from the distributed groupBy only in float
     // summation order, which the 1e-6-relative referees tolerate — as
     // AQE plan changes already did). Distributed sweeps above the cap.
-    for (g <- LocalGraph.fetch("betweenness", und, nUnd)) {
+    for (g <- LocalGraph.fetch("betweenness", in)) {
       val sources = g.sample(spark, sample)
       val acc = brandes(g.out, sources, maxIter)
       val scale = if (sources.nonEmpty) g.n.toDouble / sources.length else 1.0
       return LocalGraph.toDF(spark, (0 until g.n).map(v => Row(g.key(v), acc(v) * scale / 2.0)),
         LocalGraph.keyField("node", g.keyType), StructField("betweenness", DoubleType, false))
     }
+    val und = in.df
     val ns = nodes(und).ckptLazy()
     val n = ns.count()
     val s = math.min(sample.toLong, n)
@@ -1598,18 +1609,18 @@ object Graphs {
     * cluster sizes (true RNG per task is not).
     */
   def randomWalk(edges: DataFrame, starts: DataFrame, steps: Int): DataFrame = {
-    val (e, nE) = edges.select("src", "dst").distinct().ckptCount()
+    val in = LocalGraph.Edges(edges.select("src", "dst").distinct())
     // scale knee (same gate as the other driver mirrors): the walk's
     // "randomness" is xxhash64(walk_id, step, dst) — pure integer
     // arithmetic — so the driver mirror is EXACT, not merely
     // rounding-equivalent: per live walk it picks the dst minimizing
     // (h, dst), the same total order min_by used. Pinned
     // driver==distributed by GraphsSpec.
-    for (g <- LocalGraph.fetch("randomWalk", e, nE,
-        guard = longEndpoints(e) && starts.schema("walk_id").dataType == LongType &&
+    for (g <- LocalGraph.fetch("randomWalk", in,
+        guard = longEndpoints(in.frame) && starts.schema("walk_id").dataType == LongType &&
           starts.schema("start").dataType == LongType)) {
       val o = g.out
-      val st = starts.select(col("walk_id"), col("start")).collect()
+      val st = LocalGraph.rowsOf(starts.select(col("walk_id"), col("start")))
         .map(r => (r.getLong(0), r.getLong(1))).sortBy(identity)
       import org.apache.spark.sql.catalyst.expressions.XXH64
       // xxhash64(walk_id: long, step: int, dst: long) with the default
@@ -1631,10 +1642,11 @@ object Graphs {
         s += 1
         for ((wid, start, v) <- frontier) out += ((wid, start, g.long(v), s))
       }
-      val spark = e.sparkSession
+      val spark = edges.sparkSession
       import spark.implicits._
       return out.toSeq.toDF("walk_id", "start", "node", "step")
     }
+    val e = in.df
     var walk = starts.select(col("walk_id"), col("start"), col("start").as("node"), lit(0).as("step"))
       .ckpt()
     var frontier = walk

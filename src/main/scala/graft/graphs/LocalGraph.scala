@@ -1,6 +1,6 @@
 package graft.graphs
 
-import graft.plan.Knee
+import graft.plan._
 import org.apache.spark.sql.{DataFrame, Row, SparkSession}
 import org.apache.spark.sql.functions.{col, xxhash64}
 import org.apache.spark.sql.types.{DataType, LongType, StructField, StructType}
@@ -105,21 +105,46 @@ private[graphs] final class LocalGraph(val keyType: DataType, keys: Array[AnyRef
 }
 
 private[graphs] object LocalGraph {
-  /** The knee: a `Knee.GraphEdges` gate on `n` when `guard` holds and,
-    * on the driver branch, collects `e` — columns (src, dst[,
-    * weight]) by position — plus the node keys of `nodes`. None = run
-    * the distributed program. */
-  def fetch(op: String, e: DataFrame, n: => Long, weighted: Boolean = false,
+  /** A mirror's edge projection `frame`: driver rows computed straight
+    * from a relation's driver copy or local rows when `frame` reads only
+    * those (no job), else
+    * the frame checkpointed with its row count on first use — by the
+    * knee or by the distributed program. */
+  final class Edges private (val frame: DataFrame, materialize: => (DataFrame, Long)) {
+    lazy val resident: Option[Array[Row]] = DriverPlan.localExternalRows(frame, Knee.GraphEdges.value)
+    private lazy val counted = materialize
+    def df: DataFrame = counted._1
+    def n: Long = counted._2
+  }
+  object Edges {
+    def apply(frame: DataFrame): Edges = new Edges(frame, frame.ckptCount())
+    /** A frame the caller already materialized, with its row count. */
+    def counted(df: DataFrame, n: => Long): Edges = new Edges(df, (df, n))
+  }
+
+  /** The knee: a `Knee.GraphEdges` gate on the edge count when `guard`
+    * holds and, on the driver branch, the edges — columns (src, dst[,
+    * weight]) by position — plus the node keys of `nodes`. The rows come
+    * from driver memory when `e` is resident, else from one collect.
+    * None = run the distributed program. */
+  def fetch(op: String, e: Edges, weighted: Boolean = false,
             guard: Boolean = true, nodes: DataFrame = null): Option[LocalGraph] =
-    Option.when(guard && Knee.gate(op, n, Knee.GraphEdges))(
-      apply(e, e.collect(), weighted, if (nodes == null) Array.empty else nodes.collect()))
+    Option.when(guard && Knee.gate(op, e.resident.fold(e.n)(_.length.toLong), Knee.GraphEdges))(
+      apply(e.frame, e.resident.getOrElse(e.df.collect()), weighted,
+        if (nodes == null) Array.empty else rowsOf(nodes)))
+
+  /** The rows of `df`: computed on the driver when it reads only a
+    * relation copy or local rows, else collected. */
+  def rowsOf(df: DataFrame): Array[Row] =
+    DriverPlan.localExternalRows(df, Knee.GraphEdges.value).getOrElse(df.collect())
 
   /** The whole edge relation of a driver-only walk, or an error naming
     * `op` and the `WalkEdges` limit when it has more rows: a walk over a
     * truncated prefix would return confident wrong answers. */
   def walk(op: String, e: DataFrame, weighted: Boolean = false): LocalGraph = {
     val max = Knee.WalkEdges.value
-    val rows = e.limit(math.max(0L, math.min(max, Int.MaxValue - 1L)).toInt + 1).collect()
+    val rows = DriverPlan.localExternalRows(e, max).getOrElse(
+      e.limit(math.max(0L, math.min(max, Int.MaxValue - 1L)).toInt + 1).collect())
     if (rows.length > max)
       throw new IllegalStateException(s"$op: the edge relation has more than WalkEdges = " +
         s"$max rows; the driver walk needs the whole graph")

@@ -3,6 +3,9 @@ package graft.lang
 import graft.plan._
 import Ast._
 import graft.operators.Mutations
+import org.apache.spark.sql.graftbridge
+import org.apache.spark.sql.catalyst.InternalRow
+import org.apache.spark.sql.catalyst.expressions.{Ascending, BoundReference, InterpretedOrdering, SortOrder}
 import org.apache.spark.sql.{Column, DataFrame, Row, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types._
@@ -47,6 +50,7 @@ class CozoDb(val spark: SparkSession) {
 
   /** Every stored relation by name (see [[StoredRelation]]). */
   private val records = mutable.LinkedHashMap.empty[String, StoredRelation]
+  DriverPlan.Planning.install(spark) // graph fixed rules read relation copies through ResidentScan
 
   private def stored(name: String): StoredRelation =
     records.getOrElse(name, throw CompileException(s"stored relation *$name not found"))
@@ -782,15 +786,14 @@ class CozoDb(val spark: SparkSession) {
       val recursive = scc.size > 1 || deps(scc.head).contains(scc.head)
       if (!recursive) {
         val name = scc.head
-        evalRule(byName(name), n => evaluated.get(n), params).foreach(evaluated(name) = _)
+        evalRule(byName(name), n => evaluated.get(n), params).foreach(df => evaluated(name) = localized(df))
       } else {
         // goal-directed seeding (magic-set adornment, query/magic.rs:55-67):
         // single-rule recursion whose callers all bind a position to a
         // constant, and whose recursive clauses thread that position
         // unchanged, evaluates only the seeds' cone — not the full closure
-        val magic: Map[String, DataFrame => DataFrame] =
-          magicSeedFilter(scc, byName, params, evaluated)
-            .map(f => scc.map(_ -> f).toMap).getOrElse(Map.empty)
+        val magic = (stored: String => Option[DataFrame]) =>
+          magicSeedFilter(scc, byName, params, evaluated, stored)
         // limit early-termination (eval.rs:33-61, db.rs:1529-1539): an
         // unsorted `:limit n` query whose entry is a PASS-THROUGH of a
         // rule in this component (`?[vars] := rec[same vars]`, a
@@ -904,6 +907,41 @@ class CozoDb(val spark: SparkSession) {
     * indexes whose definition is already gone. */
   private def dropRelationIndexCaches(rel: String): Unit =
     cachedIndexTargets.filter(_.takeWhile(_ != ':') == rel).foreach(dropIndexCaches) // rel:name
+
+  private[lang] var relationCopyBuilds = 0 // driver copies of stored relations built, for tests
+
+  /** The driver copy of stored relation `rel` at its current version:
+    * every row in Spark's internal format, sorted by the key columns,
+    * when their bytes are at most [[Knee.DriverIndexBytes]] (the heap
+    * budget of the driver indexes; a `Knee.gate` decision logged as
+    * `op=relation_copy`). Fetched in one bounded collect — past
+    * `limit / minRowBytes` rows the bytes exceed the gate whatever the
+    * rows hold — and cached in [[indexArtifacts]] under the relation's
+    * name, so a write, `::rename`, removal or an aborted transaction
+    * retires it like an index artifact. A refusal is cached too: an
+    * over-gate relation is probed once per version. Readers are the
+    * driver fixpoint and the graph fixed rules; no Spark plan reads the
+    * copy. */
+  private def relationCopy(rel: String): Option[DriverRows] = indexCacheLock.synchronized {
+    val r = records.getOrElse(rel, return None)
+    cachedAt(rel, r.version) match {
+      case Some(RelationCopy(rows)) => rows
+      case _ =>
+        val schema = r.view.schema
+        val cap = math.min(Knee.DriverIndexBytes.value / DriverPlan.minRowBytes(schema), Int.MaxValue - 1L)
+        val fetched = new DriverRows(schema,
+          graftbridge.PlanBridge.collectInternal(r.view.limit(math.max(cap + 1, 0L).toInt)))
+        val copy = Option.when(Knee.gate("relation_copy", fetched.bytes, Knee.DriverIndexBytes)) {
+          val keyIdx = r.keys.map(schema.fieldIndex)
+          val ord = new InterpretedOrdering(keyIdx.map(i =>
+            SortOrder(BoundReference(i, schema(i).dataType, nullable = true), Ascending)))
+          relationCopyBuilds += 1
+          new DriverRows(schema, fetched.rows.sorted(ord))
+        }
+        indexArtifacts(rel) = (r.version, RelationCopy(copy))
+        copy
+    }
+  }
 
   /** The restored graphs of a distributed walk-eligible index, kept in
     * its artifact until a patch or a rebuild replaces it. */
@@ -1931,6 +1969,15 @@ class CozoDb(val spark: SparkSession) {
     Seq(("created", target)).toDF("status", "index")
   }
 
+  /** A rule's frame evaluated on the driver into a local frame when it
+    * reads only local frames — const rules, driver fixpoint results,
+    * driver graph results — and no step of its plan holds more than
+    * [[Knee.LocalRows]] rows: reading it then runs no job. Else, and
+    * for anything [[DriverPlan]] does not evaluate, the frame as is. */
+  private def localized(df: DataFrame): DataFrame =
+    DriverPlan.localRows(df, Knee.LocalRows.value)
+      .fold(df)(rows => DriverPlan.frame(spark, new DriverRows(df.schema, rows)))
+
   /** Evaluate one rule (all its clauses). Aggregation semantics follow
     * the reference's aggregation store (eval.rs + aggr.rs): the
     * aggregate folds over the BAG-union of all clause bodies' rows —
@@ -1992,7 +2039,7 @@ class CozoDb(val spark: SparkSession) {
           case FixedRuleRel(n) => resolve(n)
             .getOrElse(throw CompileException(s"fixed rule input $n not evaluated"))
           case FixedStoredRel(n, cols) =>
-            val df = relation(n)
+            val df = if (FixedRules.graphRules(algo)) graphInput(n) else relation(n)
             if (cols.nonEmpty && cols.forall(df.columns.contains))
               df.select(cols.map(col): _*)
             else df
@@ -2010,6 +2057,14 @@ class CozoDb(val spark: SparkSession) {
           out.toDF(head.map(_.v): _*)
         } else out
     }
+  }
+
+  /** A graph fixed rule's stored input: over the relation's driver copy
+    * when it has one — a [[ResidentScan]] that `LocalGraph` reads on the
+    * driver and Spark plans as the relation itself. */
+  private def graphInput(rel: String): DataFrame = {
+    val view = relation(rel)
+    relationCopy(rel).fold(view)(c => DriverPlan.scan(spark, c, c.schema, Some(view)))
   }
 
   private def evalAggRule(clauses: Seq[HornClause], resolve: String => Option[DataFrame],
@@ -2106,7 +2161,8 @@ class CozoDb(val spark: SparkSession) {
     * graph's. */
   private def magicSeedFilter(scc: Seq[String], byName: Map[String, Seq[RuleDef]],
                               params: Map[String, Any],
-                              evaluated: collection.Map[String, DataFrame]): Option[DataFrame => DataFrame] = {
+                              evaluated: collection.Map[String, DataFrame],
+                              stored: String => Option[DataFrame]): Option[DataFrame => DataFrame] = {
     val inScc = scc.toSet
     val memberClauses: Map[String, Seq[HornClause]] = scc.map { n =>
       val defs = byName(n)
@@ -2143,8 +2199,8 @@ class CozoDb(val spark: SparkSession) {
       * binding relation's whole column works even before the caller's
       * own joins/filters run. */
     def seedSource(body: Seq[Atom], v: String): Option[DataFrame] = {
-      def availDf(name: String, stored: Boolean): Option[DataFrame] =
-        if (stored) records.get(name).map(_.view) else evaluated.get(name)
+      def availDf(name: String, isStored: Boolean): Option[DataFrame] =
+        if (isStored) stored(name) else evaluated.get(name)
       body.collectFirst {
         case RelApply(name2, args2, stored2, None)
             if !inScc(name2) && args2.contains(V(v)) &&
@@ -2157,7 +2213,7 @@ class CozoDb(val spark: SparkSession) {
           val f = pairs2.collectFirst {
             case (f0, b) if b.contains(V(v)) || (b.isEmpty && f0 == v) => f0
           }.get
-          records(name2).view.select(col(f).as("__seed"))
+          stored(name2).get.select(col(f).as("__seed"))
       }
     }
     // a position seeds when EVERY caller either passes a compile-time
@@ -2252,20 +2308,39 @@ class CozoDb(val spark: SparkSession) {
     * evaluates base clauses; each later round re-evaluates, per clause,
     * one variant per recursive atom with THAT atom bound to the previous
     * round's delta and the others to the totals. New facts =
-    * derived − total (one anti-shuffle per rule per round, and it IS the
+    * derived − total (one anti-diff per rule per round, and it IS the
     * convergence signal — an empty delta ends the loop, no separate
     * growth check). Meet-aggregated rules (min/max/min_cost/shortest —
     * idempotent, commutative, monotone, aggr.rs:1190-1206) fold the
     * meet over totals ∪ derived instead of set-union, with the changed
     * keys as the delta; that is how Dijkstra-in-Datalog converges.
-    * Per-round LAZY `.ckptLazy()` truncates lineage and drops inherited
-    * stats; the delta `count()` is the single job that materializes the
-    * round's checkpoints (doCheckpoint fills every marked ancestor).
+    *
+    * One round driver, two backends. This method writes the
+    * stratification checks, the magic restriction, the per-round stats,
+    * the `earlyLimit` stop and the `maxIter` error once; a [[FixBackend]]
+    * only evaluates a clause variant, dedups or meet-folds, and diffs.
+    * The Spark backend works on DataFrames: a per-round LAZY
+    * `.ckptLazy()` truncates lineage, and the delta `count()` is the
+    * single job that materializes the round's checkpoints. The driver
+    * backend is cozo's in-memory evaluation: it interprets each
+    * variant's analyzed plan — the one `Compiler` builds for Spark — on
+    * driver rows ([[DriverPlan]]), with stored atoms reading the
+    * relation's driver copy ([[relationCopy]]) and in-SCC atoms the
+    * driver totals and deltas, so its rounds run no Spark job. A
+    * component starts on the driver when its clauses stay in the
+    * fragment (positive atoms without validity, `Cond`, `Unify`,
+    * `min`/`max` meets), every stored atom has an admitted copy and
+    * every earlier-stratum rule it reads is a local frame. Once a
+    * member holds more than [[Knee.FixpointRows]] rows (a `Knee.gate`,
+    * logged as `op=fixpoint` when that happens or when the component
+    * converges on the driver), or on anything the driver cannot
+    * evaluate, it hands off at the round boundary to the Spark loop,
+    * seeded with the driver totals and deltas as local frames.
     */
   private def evalRecursive(scc: Seq[String], byName: Map[String, Seq[RuleDef]],
                             evaluated: mutable.HashMap[String, DataFrame],
                             params: Map[String, Any],
-                            magic: Map[String, DataFrame => DataFrame],
+                            magic: (String => Option[DataFrame]) => Option[DataFrame => DataFrame],
                             maxIter: Int = 200,
                             earlyLimit: Option[(String, Long)] = None): Unit = {
     val inScc = scc.toSet
@@ -2289,10 +2364,8 @@ class CozoDb(val spark: SparkSession) {
     }
     val horns: Map[String, Seq[HornClause]] =
       scc.map(n => n -> byName(n).map(_.asInstanceOf[HornClause])).toMap
-
-    val totals = mutable.HashMap.empty[String, DataFrame]
-    val deltas = mutable.HashMap.empty[String, DataFrame]
-    val stats = mutable.ArrayBuffer.empty[Map[String, Long]]
+    def sccOccurrences(body: Seq[Atom]): Int =
+      body.flatMap(collectRuleApplies).count(a => inScc(a.name))
 
     /** Per-key meet fold of totals (if any) with this round's derived
       * rows. `choice` is the one meet whose semantics are positional
@@ -2322,109 +2395,247 @@ class CozoDb(val spark: SparkSession) {
       folded.select(cols.map(col): _*)
     }
 
-    /** Evaluate one clause with the `deltaOcc`-th in-SCC atom reference
-      * resolved to its rule's delta, the others to totals (None = all
-      * totals, the round-0 shape). In-SCC occurrences are counted in
-      * resolution order; an atom whose delta/total is absent throws
-      * EmptyRelation, which skips the variant (or just the Or branch). */
-    def evalVariant(h: HornClause, deltaOcc: Option[Int]): Option[DataFrame] = {
-      var occ = -1
-      val resolve: String => Option[DataFrame] = name =>
-        if (inScc(name)) {
-          occ += 1
-          deltaOcc match {
-            case Some(j) if occ == j => deltas.get(name)
-            case _ => totals.get(name)
-          }
-        } else evaluated.get(name)
-      try {
-        val c = compiler(resolve, params)
-        Some(c.applyHead(h.head, c.compileBody(h.body)))
-      } catch { case _: Compiler.EmptyRelation => None }
+    /** The Spark backend: facts as checkpointed DataFrames. */
+    final class SparkFix extends FixBackend[DataFrame] {
+      private val restrict = magic(n => records.get(n).map(_.view))
+
+      /** Evaluate one clause with the `deltaOcc`-th in-SCC atom reference
+        * resolved to its rule's delta, the others to totals (None = all
+        * totals, the round-0 shape). In-SCC occurrences are counted in
+        * resolution order; an atom whose delta/total is absent throws
+        * EmptyRelation, which skips the variant (or just the Or branch). */
+      def variant(h: HornClause, deltaOcc: Option[Int]): Option[DataFrame] = {
+        var occ = -1
+        val resolve: String => Option[DataFrame] = name =>
+          if (inScc(name)) {
+            occ += 1
+            deltaOcc match {
+              case Some(j) if occ == j => deltas.get(name)
+              case _ => totals.get(name)
+            }
+          } else evaluated.get(name)
+        try {
+          val c = compiler(resolve, params)
+          Some(c.applyHead(h.head, c.compileBody(h.body)))
+        } catch { case _: Compiler.EmptyRelation => None }
+      }
+      def derive(n: String, variants: Seq[DataFrame]): DataFrame = {
+        val cols = totals.get(n).map(_.columns).getOrElse(variants.head.columns)
+        val u = variants.map(_.toDF(cols.toIndexedSeq: _*)).reduce(_ unionByName _)
+        restrict.fold(u)(_(u))
+      }
+      def init(n: String, derived: DataFrame): (Long, Option[(DataFrame, DataFrame)]) = {
+        val t = (if (meetRules(n)) meetFold(n, None, derived) else derived.dropDuplicates()).ckptLazy()
+        val cnt = t.count()
+        (cnt, Option.when(cnt > 0)((t, t)))
+      }
+      def advance(n: String, tot: DataFrame, derived: DataFrame): (Long, Option[(DataFrame, DataFrame)]) =
+        if (!meetRules(n)) {
+          val delta = derived.dropDuplicates().except(tot).ckptLazy()
+          val cnt = delta.count()
+          (cnt, Option.when(cnt > 0)((tot.unionByName(delta).ckptLazy(), delta)))
+        } else {
+          val folded = meetFold(n, Some(tot), derived).ckptLazy()
+          val delta = folded.except(tot).ckptLazy()
+          val cnt = delta.count()
+          (cnt, Option.when(cnt > 0)((folded, delta)))
+        }
+      def frame(r: DataFrame): DataFrame = r
     }
 
-    def sccOccurrences(body: Seq[Atom]): Int =
-      body.flatMap(collectRuleApplies).count(a => inScc(a.name))
+    /** The driver backend: facts as driver rows. */
+    final class DriverFix extends FixBackend[DriverRows] {
+      /** Row keys of each non-meet total, for the diff. */
+      private var keys = Map.empty[String, Set[IndexedSeq[Any]]]
+      private def copyScan(rel: String): DataFrame = {
+        relation(rel) // access and existence, as the Spark scan checks them
+        relationCopy(rel).fold(throw new FixBackend.Decline)(c => DriverPlan.scan(spark, c, c.schema))
+      }
+      private val restrict = magic(n => records.get(n).map(_ => copyScan(n)))
+      private val restrictPlans = mutable.HashMap.empty[String, (AnyRef, org.apache.spark.sql.catalyst.plans.logical.LogicalPlan)]
+      private val memo = new DriverPlan.Memo // the copies' side of every round's joins
+      private val plans = mutable.HashMap.empty[(HornClause, Option[Int]),
+        Option[(org.apache.spark.sql.catalyst.plans.logical.LogicalPlan, StructType, Seq[FixBackend.Slot])]]
 
-    def restricted(n: String, df: DataFrame): DataFrame =
-      magic.get(n).fold(df)(f => f(df))
+      /** The variant's analyzed plan, built once: in-SCC atoms are slots
+        * over their rule's (fixed) total schema. */
+      private def plan(h: HornClause, deltaOcc: Option[Int]) = {
+        var occ = -1
+        val slots = mutable.ArrayBuffer.empty[FixBackend.Slot]
+        val resolve: String => Option[DataFrame] = name =>
+          if (inScc(name)) {
+            occ += 1
+            val s = new FixBackend.Slot(name, deltaOcc.contains(occ))
+            slots += s
+            Some(DriverPlan.scan(spark, s, totals(name).schema))
+          } else evaluated.get(name)
+        try {
+          val c = new Compiler(spark, copyScan, resolve, params, validityScan)
+          val df = c.applyHead(h.head, c.compileBody(h.body))
+          Some((df.queryExecution.analyzed, df.schema, slots.toSeq))
+        } catch { case _: Compiler.EmptyRelation => None }
+      }
+      def variant(h: HornClause, deltaOcc: Option[Int]): Option[DriverRows] =
+        if (!h.body.flatMap(collectRuleApplies).forall(a => !inScc(a.name) || totals.contains(a.name))) None
+        else plans.getOrElseUpdate((h, deltaOcc), plan(h, deltaOcc)).flatMap { case (p, schema, slots) =>
+          Option.when(slots.forall(s => !s.delta || deltas.contains(s.name)))(
+            new DriverRows(schema, DriverPlan.eval(p, {
+              case s: FixBackend.Slot => (if (s.delta) deltas(s.name) else totals(s.name)).rows
+            }, memo = memo)))
+        }
+      def derive(n: String, variants: Seq[DriverRows]): DriverRows = {
+        val schema = totals.get(n).map(_.schema).getOrElse(DriverPlan.nullable(variants.head.schema))
+        // a union Spark would widen: leave it to Spark
+        if (variants.exists(v => !DriverPlan.nullable(v.schema).map(_.dataType).sameElements(schema.map(_.dataType))))
+          throw new FixBackend.Decline
+        val rows = variants.flatMap(_.rows).toIndexedSeq
+        restrict.fold(new DriverRows(schema, rows)) { f =>
+          val (key, p) = restrictPlans.getOrElseUpdate(n, {
+            val key = new Object
+            (key, f(DriverPlan.scan(spark, key, schema)).queryExecution.analyzed)
+          })
+          new DriverRows(schema, DriverPlan.eval(p, { case k if k eq key => rows }))
+        }
+      }
+      private def fold(n: String, rows: Iterator[InternalRow], schema: StructType): DriverRows = {
+        val head = horns(n).head.head
+        new DriverRows(schema, DriverPlan.meetFold(rows, schema,
+          head.indices.filter(head(_).aggr.isEmpty), i => head(i).aggr.contains("min")))
+      }
+      def init(n: String, derived: DriverRows): (Long, Option[(DriverRows, DriverRows)]) = {
+        val t =
+          if (meetRules(n)) fold(n, derived.rows.iterator, derived.schema)
+          else {
+            val d = new DriverRows(derived.schema, DriverPlan.distinct(derived.rows, derived.schema))
+            keys += n -> d.rows.map(DriverPlan.rowKey(_, d.schema)).toSet
+            d
+          }
+        (t.rows.length.toLong, Option.when(t.rows.nonEmpty)((t, t)))
+      }
+      def advance(n: String, tot: DriverRows, derived: DriverRows): (Long, Option[(DriverRows, DriverRows)]) = {
+        val schema = tot.schema
+        if (!meetRules(n)) {
+          val seen = keys(n)
+          val fresh = DriverPlan.distinct(derived.rows, schema).filterNot(r => seen(DriverPlan.rowKey(r, schema)))
+          if (fresh.nonEmpty) keys += n -> (seen ++ fresh.map(DriverPlan.rowKey(_, schema)))
+          (fresh.length.toLong, Option.when(fresh.nonEmpty)(
+            (new DriverRows(schema, tot.rows ++ fresh), new DriverRows(schema, fresh))))
+        } else {
+          val folded = fold(n, tot.rows.iterator ++ derived.rows.iterator, schema)
+          val old = tot.rows.iterator.map(DriverPlan.rowKey(_, schema)).toSet
+          val delta = folded.rows.filterNot(r => old(DriverPlan.rowKey(r, schema)))
+          (delta.length.toLong, Option.when(delta.nonEmpty)((folded, new DriverRows(schema, delta))))
+        }
+      }
+      def frame(r: DriverRows): DataFrame = DriverPlan.frame(spark, r)
 
-    // — round 0: base clauses (recursive clauses see no totals and drop)
-    val round0 = mutable.HashMap.empty[String, Long]
-    for (n <- scc) {
-      val outs = horns(n).flatMap(h => evalVariant(h, None))
-      if (outs.nonEmpty) {
-        val cols = outs.head.columns
-        val unioned = restricted(n, outs.map(_.toDF(cols: _*)).reduce(_ unionByName _))
-        val init = (if (meetRules(n)) meetFold(n, None, unioned) else unioned.dropDuplicates()).ckptLazy()
-        val cnt = init.count()
-        round0(n) = cnt
-        if (cnt > 0) { totals(n) = init; deltas(n) = init }
+      /** The rows the largest member holds. */
+      def held: Long = totals.values.map(_.rows.length.toLong).maxOption.getOrElse(0L)
+      def save(): (Map[String, DriverRows], Map[String, DriverRows], Map[String, Set[IndexedSeq[Any]]]) =
+        (totals.toMap, deltas.toMap, keys)
+      def restore(s: (Map[String, DriverRows], Map[String, DriverRows], Map[String, Set[IndexedSeq[Any]]])): Unit = {
+        totals.clear(); totals ++= s._1; deltas.clear(); deltas ++= s._2; keys = s._3
+      }
+      /** The Spark backend seeded with these totals and deltas as local frames. */
+      def handOff(): SparkFix = {
+        val s = new SparkFix
+        val frames = totals.map { case (n, r) => r -> frame(r) }.toMap
+        totals.foreach { case (n, r) => s.totals(n) = frames(r) }
+        deltas.foreach { case (n, r) => s.deltas(n) = frames.getOrElse(r, frame(r)) }
+        s
       }
     }
-    stats += round0.toMap
 
+    def inFragment(a: Atom): Boolean = a match {
+      case RelApply(_, _, _, None) | NamedApply(_, _, None) | _: Cond | _: Unify => true
+      case _ => false
+    }
+    val clauses = horns.values.flatten.toSeq
+    val driver: Option[DriverFix] =
+      if (Knee.FixpointRows.value >= 1 &&
+          clauses.forall(h => h.body.forall(inFragment) &&
+            h.head.flatMap(_.aggr).forall(a => a == "min" || a == "max")) &&
+          clauses.flatMap(_.body).forall {
+            case RelApply(n, _, false, _) => inScc(n) || evaluated.get(n).forall(isLocal)
+            case RelApply(n, _, true, _) => relationCopy(n).isDefined
+            case NamedApply(n, _, _) => relationCopy(n).isDefined
+            case _ => true
+          })
+        try Some(new DriverFix) catch { case _: FixBackend.Decline => None }
+      else None
+
+    val stats = mutable.ArrayBuffer.empty[Map[String, Long]]
     // limit early-termination bookkeeping: the running fact count of
     // the watched rule comes free from the per-round delta counts (no
     // extra jobs). Meet rules are excluded — a meet value can still
     // IMPROVE in later rounds, so row count is not a stopping bound.
     val limitActive = earlyLimit.filterNot { case (n, _) => meetRules(n) }
-    var entryCount = limitActive.map { case (n, _) => round0.getOrElse(n, 0L) }.getOrElse(0L)
-    var stoppedEarly = limitActive.exists { case (_, l) => entryCount >= l }
+    var entryCount = 0L
+    var stoppedEarly = false
+    var changed = false
 
-    var changed = totals.nonEmpty && !stoppedEarly
-    var iter = 0
-    while (changed && iter < maxIter) {
-      changed = false
+    /** One round on `b`; round 0 (`first`) evaluates every clause with
+      * all in-SCC atoms on the totals. Totals update as each rule is
+      * done (later rules of the round read them); deltas at the end. */
+    def round[R](b: FixBackend[R], first: Boolean): Unit = {
       val roundStats = mutable.HashMap.empty[String, Long]
-      val newDeltas = mutable.HashMap.empty[String, DataFrame]
+      val newDeltas = mutable.HashMap.empty[String, R]
       for (n <- scc) {
         val variants = horns(n).flatMap { h =>
-          (0 until sccOccurrences(h.body)).flatMap(j => evalVariant(h, Some(j)))
+          if (first) b.variant(h, None).toSeq
+          else (0 until sccOccurrences(h.body)).flatMap(j => b.variant(h, Some(j)))
         }
         if (variants.nonEmpty) {
-          val cols = totals.get(n).map(_.columns).getOrElse(variants.head.columns)
-          val derived = restricted(n, variants.map(_.toDF(cols.toIndexedSeq: _*)).reduce(_ unionByName _))
-          totals.get(n) match {
-            case None =>
-              val init = (if (meetRules(n)) meetFold(n, None, derived) else derived.dropDuplicates()).ckptLazy()
-              val cnt = init.count()
-              roundStats(n) = cnt
-              if (cnt > 0) { changed = true; totals(n) = init; newDeltas(n) = init }
-            case Some(tot) =>
-              if (!meetRules(n)) {
-                val delta = derived.dropDuplicates().except(tot).ckptLazy()
-                val cnt = delta.count()
-                roundStats(n) = cnt
-                if (cnt > 0) {
-                  changed = true
-                  totals(n) = tot.unionByName(delta).ckptLazy()
-                  newDeltas(n) = delta
-                }
-              } else {
-                val folded = meetFold(n, Some(tot), derived).ckptLazy()
-                val delta = folded.except(tot).ckptLazy()
-                val cnt = delta.count()
-                roundStats(n) = cnt
-                if (cnt > 0) { changed = true; totals(n) = folded; newDeltas(n) = delta }
-              }
-          }
+          val derived = b.derive(n, variants)
+          val (cnt, next) = b.totals.get(n).fold(b.init(n, derived))(b.advance(n, _, derived))
+          roundStats(n) = cnt
+          next.foreach { case (t, d) => b.totals(n) = t; newDeltas(n) = d }
         }
       }
       // only rules that derived new facts carry a delta into the next
       // round — delta-variants over converged rules short-circuit
-      deltas.clear(); deltas ++= newDeltas
+      b.deltas.clear(); b.deltas ++= newDeltas
       stats += roundStats.toMap
+      changed = roundStats.values.exists(_ > 0)
       limitActive.foreach { case (n, l) =>
         entryCount += roundStats.getOrElse(n, 0L)
-        if (entryCount >= l) { stoppedEarly = true; changed = false }
+        if (entryCount >= l) stoppedEarly = true
       }
+      if (stoppedEarly) changed = false
+    }
+
+    var backend: Either[DriverFix, SparkFix] = driver.toLeft(new SparkFix)
+    def runRound(first: Boolean): Unit = backend match {
+      case Left(d) =>
+        val saved = d.save()
+        try round(d, first)
+        catch {
+          case _: FixBackend.Decline | _: DriverPlan.Unsupported =>
+            d.restore(saved)
+            backend = Right(d.handOff())
+            runRound(first)
+        }
+      case Right(s) => round(s, first)
+    }
+    def atBoundary(): Unit = backend match {
+      case Left(d) if (!changed || d.held > Knee.FixpointRows.value) &&
+          !Knee.gate("fixpoint", d.held, Knee.FixpointRows) =>
+        backend = Right(d.handOff())
+      case _ =>
+    }
+    runRound(first = true)
+    atBoundary()
+    var iter = 0
+    while (changed && iter < maxIter) {
+      runRound(first = false)
       iter += 1
+      atBoundary()
     }
     if (iter >= maxIter && !stoppedEarly)
       throw CompileException(s"recursion did not converge in $maxIter rounds: ${scc.mkString(",")}")
     lastFixpointStats = stats.toSeq
-    scc.foreach(n => totals.get(n).foreach(evaluated(n) = _))
+    backend.fold(d => scc.foreach(n => d.totals.get(n).foreach(t => evaluated(n) = d.frame(t))),
+      s => scc.foreach(n => s.totals.get(n).foreach(evaluated(n) = _)))
   }
 
   private def bodyDepsInScc(body: Seq[Atom], inScc: Set[String]): Boolean = {
@@ -2916,6 +3127,31 @@ class CozoDb(val spark: SparkSession) {
     nodes.sorted.foreach(v => if (!index.contains(v)) strongconnect(v))
     out.toSeq
   }
+}
+
+/** One backend of [[CozoDb]]'s fixpoint round driver: it evaluates a
+  * clause variant, folds a rule's derived facts into its total and diffs
+  * them, on facts of type `R`; the driver owns every other decision. */
+private[lang] abstract class FixBackend[R] {
+  val totals = mutable.HashMap.empty[String, R]
+  val deltas = mutable.HashMap.empty[String, R]
+  /** The facts of clause `h` with its `deltaOcc`-th in-SCC atom on the
+    * delta and the others on totals (None: all on totals); None when a
+    * rule it reads has no facts. */
+  def variant(h: HornClause, deltaOcc: Option[Int]): Option[R]
+  /** A rule's derived facts: its variants' union, magic-restricted. */
+  def derive(n: String, variants: Seq[R]): R
+  /** A first total (deduped or meet-folded): its size, and (total, delta) when non-empty. */
+  def init(n: String, derived: R): (Long, Option[(R, R)])
+  /** The new facts' count, and (new total, delta) when there are any. */
+  def advance(n: String, tot: R, derived: R): (Long, Option[(R, R)])
+  def frame(r: R): DataFrame
+}
+private[lang] object FixBackend {
+  /** The driver backend cannot go on: hand off to Spark. */
+  final class Decline extends RuntimeException(null, null, false, false)
+  /** A driver plan's placeholder leaf for an in-SCC atom: its rule's delta or total. */
+  final class Slot(val name: String, val delta: Boolean)
 }
 
 object CozoDb {

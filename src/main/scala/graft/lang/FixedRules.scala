@@ -30,6 +30,16 @@ object FixedRules {
     * FixedRulesAritySpec runs every rule and asserts these. */
   def arity(name: String): Option[Int] = declaredArity.getOrElse(name, None)
 
+  /** The graph algorithms: they read their stored inputs through
+    * `graft.graphs.LocalGraph`, which takes a relation's driver copy
+    * (CozoDb's per-version copy) instead of running a job. */
+  val graphRules: Set[String] = Set("PageRank", "ConnectedComponents",
+    "StronglyConnectedComponent", "StronglyConnectedComponents", "SCC",
+    "CommunityDetectionLouvain", "LabelPropagation", "TopSort", "BFS", "DFS",
+    "BreadthFirstSearch", "DepthFirstSearch", "ShortestPathBFS", "ShortestPathDijkstra",
+    "RandomWalk", "MinimumSpanningTreePrim", "MinimumSpanningForestKruskal",
+    "ClosenessCentrality", "BetweennessCentrality", "ShortestPathAStar", "KShortestPathYen")
+
   private def edges(rels: Seq[DataFrame]): DataFrame = {
     val e = rels.headOption.getOrElse(
       throw Compiler.CompileException("graph fixed rule needs an edges relation"))

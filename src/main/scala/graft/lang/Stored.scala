@@ -59,7 +59,8 @@ private[lang] final case class VecIdx(rel: String, fields: Seq[String], distance
                                       keepPruned: Boolean = false) extends IndexSpec
 private[lang] final case class PlainIdx(rel: String, cols: Seq[String]) extends IndexSpec
 
-/** The cached artifact of one index: driver-resident under the byte
+/** The cached artifact of one index, or of one relation (its driver
+  * copy, under the relation's own name): driver-resident under the byte
   * gate, else distributed. `deltas` counts the mutations a distributed
   * FTS or LSH artifact absorbed since its full build. */
 private[lang] sealed trait IndexArtifact
@@ -69,6 +70,10 @@ private[lang] object IndexArtifact {
   final case class LshBands(df: DataFrame, deltas: Int) extends IndexArtifact
   final case class DriverHnsw(b: graft.similarity.HnswBuckets) extends IndexArtifact
   /** Persisted graphs, and the executor-cached restored ones. */
+  /** The relation's rows sorted by its key columns, or None when they
+    * did not fit the gate (a refusal, cached so the next reader of the
+    * same version does not probe again). */
+  final case class RelationCopy(rows: Option[graft.plan.DriverRows]) extends IndexArtifact
   final case class DistHnsw(dir: String,
                             loaded: Option[org.apache.spark.rdd.RDD[graft.similarity.HnswIndex]])
       extends IndexArtifact

@@ -24,9 +24,15 @@ object Knee {
   val PqSampleBytes = new Limit(512L << 20) // its bytes, past the default size
   val BpeWords = new Limit(1000000L) // BPE vocabulary words
   val ClassifierFeatureBytes = new Limit(256L << 20) // collected classifier features
-  val DriverIndexBytes = new Limit(Runtime.getRuntime.maxMemory / 16) // a driver FTS/HNSW index
+  // the driver heap budget of one driver FTS/HNSW index or one stored
+  // relation's driver copy (CozoDb.relationCopy)
+  val DriverIndexBytes = new Limit(Runtime.getRuntime.maxMemory / 16)
   val PatchKeys = new Limit(10000L) // write overlay keys, driver index patch keys
   val LocalRows = new Limit(10000L) // literal rows kept as a local relation
+  // rows one member of a recursive component may hold in the driver
+  // fixpoint; past it the component hands off to the Spark loop, and
+  // below 1 every fixpoint runs on Spark from its first round
+  val FixpointRows = new Limit(10000L)
 
   private val overrides = new DynamicVariable(Map.empty[Limit, Long])
 

@@ -25,6 +25,21 @@ class LangSpec extends AnyFunSuite {
   def rows(db: CozoDb, script: String): Seq[Seq[Any]] =
     db.run(script).collect().toSeq.map(_.toSeq)
 
+  /** Runs `body` twice — on the default path, where its fixpoints start
+    * on the driver, and pinned to the Spark loop (`FixpointRows -> 0`) —
+    * so the asserts inside hold on both; then checks that both paths
+    * gave the same rows and the same `lastFixpointStats` for each query
+    * `body` reports, and that only the default path ran a fixpoint on
+    * the driver. */
+  def onBothFixpoints(body: => Seq[(Seq[Seq[Any]], Seq[Map[String, Long]])]): Unit = {
+    import graft.plan.{Knee, KneeLog}
+    val (driver, dLines) = KneeLog.capture(body)
+    val (sparkLoop, sLines) = KneeLog.capture(Knee.withLimits(Knee.FixpointRows -> 0L)(body))
+    assert(dLines.exists(l => l.contains("op=fixpoint") && l.endsWith("branch=driver")), dLines)
+    assert(!sLines.exists(_.contains("op=fixpoint")), sLines)
+    assert(driver.map { case (r, st) => (r.toSet, st) } == sparkLoop.map { case (r, st) => (r.toSet, st) })
+  }
+
   test("const rule returns literal rows") {
     val db = freshDb()
     assert(rows(db, "?[a, b] <- [[1, 'x'], [2, 'y']]").toSet ==
@@ -279,7 +294,7 @@ class LangSpec extends AnyFunSuite {
     assert(res == Set(2L))
   }
 
-  test("semi-naive: per-round delta counts track the frontier, not the total") {
+  test("semi-naive: per-round delta counts track the frontier, not the total") { onBothFixpoints {
     val db = new CozoDb(spark)
     val n = 12
     db.registerTable("chain",
@@ -297,9 +312,10 @@ class LangSpec extends AnyFunSuite {
     assert(active == active.sorted.reverse && active.distinct.length > 2,
       s"per-round deltas should strictly shrink, got $deltas")
     assert(deltas.sum == res.length.toLong)
-  }
+    Seq((res, db.lastFixpointStats))
+  }}
 
-  test("limit early-termination: unsorted :limit stops the fixpoint before closure") {
+  test("limit early-termination: unsorted :limit stops the fixpoint before closure") { onBothFixpoints {
     val db = new CozoDb(spark)
     val n = 30
     db.registerTable("chain",
@@ -317,11 +333,13 @@ class LangSpec extends AnyFunSuite {
       "every returned pair is a sound reachability fact")
     assert(db.lastFixpointStats.length <= 3,
       s"expected early stop, ran ${db.lastFixpointStats.length} rounds")
+    val early = db.lastFixpointStats
     // a SORTED limit needs the true fixpoint: order is over ALL facts
     val sorted = rows(db, prog + "\n:sort a, c\n:limit 5")
     assert(db.lastFixpointStats.length >= n - 2,
       s"sorted query must run to closure, ran ${db.lastFixpointStats.length} rounds")
     assert(sorted == Seq(Seq(1L, 2L), Seq(1L, 3L), Seq(1L, 4L), Seq(1L, 5L), Seq(1L, 6L)))
+    val closure = db.lastFixpointStats
     // a PROJECTING entry (?[a] := reach[a, c]) must NOT early-stop:
     // post-projection dedup can shrink below the limit
     rows(db, """reach[a, c] := *chain[a, c]
@@ -330,9 +348,11 @@ class LangSpec extends AnyFunSuite {
                |:limit 40""".stripMargin)
     assert(db.lastFixpointStats.length >= n - 2,
       s"projecting entry must run to closure, ran ${db.lastFixpointStats.length} rounds")
-  }
+    // which 40 facts an unsorted limit returns is the engine's choice
+    Seq((Seq(Seq(res.length)), early), (sorted, closure), (Nil, db.lastFixpointStats))
+  }}
 
-  test("magic-set seeding restricts recursion to the caller's constant") {
+  test("magic-set seeding restricts recursion to the caller's constant") { onBothFixpoints {
     val db = new CozoDb(spark)
     val n = 10
     db.registerTable("chain",
@@ -347,9 +367,10 @@ class LangSpec extends AnyFunSuite {
     val deltas = db.lastFixpointStats.map(_.getOrElse("reach", 0L))
     assert(deltas.max == 1L, s"magic seeding should bound deltas to the cone, got $deltas")
     assert(deltas.sum == 3L)
-  }
+    Seq((res.toSeq.map(Seq(_)), db.lastFixpointStats))
+  }}
 
-  test("magic-set seeding from a VARIABLE bound by a stored relation (seed-relation adornment)") {
+  test("magic-set seeding from a VARIABLE bound by a stored relation (seed-relation adornment)") { onBothFixpoints {
     val db = new CozoDb(spark)
     val n = 12
     db.registerTable("chain2",
@@ -365,9 +386,10 @@ class LangSpec extends AnyFunSuite {
     val deltas = db.lastFixpointStats.map(_.getOrElse("reach", 0L))
     assert(deltas.max == 1L, s"var-bound seeding should bound deltas to the cone, got $deltas")
     assert(deltas.sum == 3L)
-  }
+    Seq((res.toSeq.map(Seq(_)), db.lastFixpointStats))
+  }}
 
-  test("magic-set seeding through MUTUAL recursion (multi-rule SCC)") {
+  test("magic-set seeding through MUTUAL recursion (multi-rule SCC)") { onBothFixpoints {
     val db = new CozoDb(spark)
     val n = 12
     db.registerTable("chain3",
@@ -384,9 +406,10 @@ class LangSpec extends AnyFunSuite {
     val oddDeltas = db.lastFixpointStats.map(_.getOrElse("odd", 0L))
     assert((evenDeltas ++ oddDeltas).max <= 1L,
       s"mutual seeding should bound both members to the cone, got even=$evenDeltas odd=$oddDeltas")
-  }
+    Seq((res.toSeq.map(Seq(_)), db.lastFixpointStats))
+  }}
 
-  test("magic-set seeding does not fire when recursion rebinds the position") {
+  test("magic-set seeding does not fire when recursion rebinds the position") { onBothFixpoints {
     val db = freshDb()
     // sssp-shape: head n comes from the edge, not the recursive atom —
     // restricting to the entry constant would be unsound, so deltas must
@@ -396,7 +419,8 @@ class LangSpec extends AnyFunSuite {
         |sp[n, min(c)] := sp[m, c0], *edge[m, n], c = c0 + 1
         |?[c] := sp[4, c]""".stripMargin)
     assert(costs == Seq(Seq(3L)))
-  }
+    Seq((costs, db.lastFixpointStats))
+  }}
 
   test("validity scan hides retracted keys at @ t (value.rs:112-131, ra.rs:1124-1241)") {
     def ts(s: String) = java.sql.Timestamp.from(java.time.Instant.parse(s))

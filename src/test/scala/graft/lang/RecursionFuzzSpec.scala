@@ -21,9 +21,29 @@ class RecursionFuzzSpec extends AnyFunSuite {
     db
   }
 
+  /** The Spark fixpoint loop alone: no component starts on the driver. */
+  private def sparkFixpoint[T](body: => T): T =
+    graft.plan.Knee.withLimits(graft.plan.Knee.FixpointRows -> 0L)(body)
+
   test("random recursive programs agree with an independent naive fixpoint (60 seeds × 5 templates)") {
+    naiveAgreement(0 until 60)
+  }
+
+  test("the Spark fixpoint loop agrees with the naive fixpoint too (FixpointRows -> 0, 60 seeds × 5 templates)") {
+    sparkFixpoint(naiveAgreement(0 until 60))
+  }
+
+  test(":limit under recursion early-stops to a SUBSET of the full fixpoint, of the right size (20 seeds)") {
+    limitSubset(0 until 20)
+  }
+
+  test(":limit on the Spark fixpoint loop early-stops to a subset of the right size (FixpointRows -> 0, 20 seeds)") {
+    sparkFixpoint(limitSubset(0 until 20))
+  }
+
+  private def naiveAgreement(seeds: Range): Unit = {
     val failures = scala.collection.mutable.ArrayBuffer.empty[String]
-    for (seed <- 0 until 60) {
+    for (seed <- seeds) {
       val rnd = new scala.util.Random(seed * 104729 + 13)
       val nNodes = 6 + rnd.nextInt(7)
       val nEdges = 10 + rnd.nextInt(18)
@@ -127,9 +147,9 @@ class RecursionFuzzSpec extends AnyFunSuite {
     assert(failures.isEmpty, s"${failures.length} diverging seeds:\n${failures.mkString("\n\n")}")
   }
 
-  test(":limit under recursion early-stops to a SUBSET of the full fixpoint, of the right size (20 seeds)") {
+  private def limitSubset(seeds: Range): Unit = {
     val failures = scala.collection.mutable.ArrayBuffer.empty[String]
-    for (seed <- 0 until 20) {
+    for (seed <- seeds) {
       val rnd = new scala.util.Random(seed * 7717 + 5)
       val nNodes = 6 + rnd.nextInt(6)
       val edges = (0 until 12 + rnd.nextInt(14)).map { _ =>

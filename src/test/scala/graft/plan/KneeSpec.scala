@@ -14,7 +14,7 @@ class KneeSpec extends AnyFunSuite {
     val want = Seq(GraphEdges -> 2000000L, WalkEdges -> 10000000L, IvfVectors -> 200000L,
       PqTrainRows -> 2000000L, PqSampleBytes -> 512 * mib, BpeWords -> 1000000L,
       ClassifierFeatureBytes -> 256 * mib, DriverIndexBytes -> Runtime.getRuntime.maxMemory / 16,
-      PatchKeys -> 10000L, LocalRows -> 10000L)
+      PatchKeys -> 10000L, LocalRows -> 10000L, FixpointRows -> 10000L)
     for (((limit, v), i) <- want.zipWithIndex)
       assert(limit.value == v && limit.default == v, s"limit #$i")
   }
@@ -26,6 +26,15 @@ class KneeSpec extends AnyFunSuite {
     assert(lines == Seq(
       "graft.knee op=bfs n=2000000 gate=2000000 branch=driver",
       "graft.knee op=bfs n=2000001 gate=2000000 branch=distributed"))
+  }
+
+  test("fixpoint gate: n = FixpointRows stays on the driver, + 1 hands off to Spark") {
+    val (decisions, lines) = KneeLog.capture(
+      Seq(gate("fixpoint", 10000L, FixpointRows), gate("fixpoint", 10001L, FixpointRows)))
+    assert(decisions == Seq(true, false))
+    assert(lines == Seq(
+      "graft.knee op=fixpoint n=10000 gate=10000 branch=driver",
+      "graft.knee op=fixpoint n=10001 gate=10000 branch=distributed"))
   }
 
   test("withLimits overrides inside its block, nests, and restores on exit and on a throw") {
@@ -55,7 +64,8 @@ class KneeSpec extends AnyFunSuite {
 
   test("every Knee.gate call in the library passes a named limit; no maxDriver parameter is left") {
     val limits = Set("GraphEdges", "WalkEdges", "IvfVectors", "PqTrainRows", "PqSampleBytes",
-      "BpeWords", "ClassifierFeatureBytes", "DriverIndexBytes", "PatchKeys", "LocalRows")
+      "BpeWords", "ClassifierFeatureBytes", "DriverIndexBytes", "PatchKeys", "LocalRows",
+      "FixpointRows")
     val root = java.nio.file.Paths.get("src/main/scala")
     assert(java.nio.file.Files.isDirectory(root), s"no sources at ${root.toAbsolutePath}")
     val files = java.nio.file.Files.walk(root).toArray.map(_.asInstanceOf[java.nio.file.Path])
@@ -72,7 +82,7 @@ class KneeSpec extends AnyFunSuite {
     // a new gate site is a new knee decision: add it here on purpose
     assert(sites.groupBy(_._1).map { case (f, s) => f -> s.size } == Map(
       "LocalGraph.scala" -> 1, "Ann.scala" -> 2, "Bpe.scala" -> 1, "Classifier.scala" -> 1,
-      "CozoDb.scala" -> 3))
+      "CozoDb.scala" -> 5))
   }
 
   /** The last top-level argument of the call whose argument list starts

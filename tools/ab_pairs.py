@@ -11,6 +11,12 @@ many pairs the change won (ties count for neither side), and whether the
 gap between the medians exceeds the parent's interquartile range. Every
 run's result line is appended to --out when given. Each checkout builds
 into its own `.bench_build/`; nothing is written under `perfbench/`.
+
+With --by-op it also reads each run's
+`.bench_build/work/<workload>-<seed>-trace0/measurements.jsonl` and prints,
+per op class, both sides' median wall time over the first op cycle after
+the warm-up (the cycle `items_per_s` measures), so an A/B shows which op
+classes moved.
 """
 import argparse
 import json
@@ -39,6 +45,48 @@ def run_one(root, workload, seed, seconds):
     res = json.loads(lines[-1])
     return {"correct": res["correct"], "failed": res["failed"], "attempted": res["attempted"],
             "metrics": {k: v["value"] for k, v in res["metrics"].items()}}
+
+
+def first_cycle_ms(root, workload, seed):
+    """Wall ms per op class (median within the class) over the first op
+    cycle of one run's main pass; {} when its measurements are missing."""
+    path = os.path.join(root, ".bench_build", "work", f"{workload}-{seed}-trace0",
+                        "measurements.jsonl")
+    if not os.path.exists(path):
+        return {}
+    sys.dont_write_bytecode = True  # import the cycle table without writing under perfbench/
+    sys.path.insert(0, os.path.join(root, "perfbench"))
+    try:
+        import gen
+        cycle = len(gen.CYCLES.get(workload, [None]))
+    finally:
+        sys.path.pop(0)
+        sys.modules.pop("gen", None)
+    with open(path) as f:
+        ops = [r for r in map(json.loads, f) if r.get("type") == "op" and r.get("pass") == "main"]
+    by_cls = {}
+    for o in sorted(ops, key=lambda o: o["id"])[:cycle]:
+        by_cls.setdefault(o["cls"], []).append((o["end"] - o["start"]) / 1000.0)
+    return {c: statistics.median(ms) for c, ms in by_cls.items()}
+
+
+def print_by_op(pairs):
+    """Both sides' median over the runs of each class's first-cycle ms."""
+    classes = []
+    for p, c in pairs:
+        for cls in list(p.get("by_op", {})) + list(c.get("by_op", {})):
+            if cls not in classes:
+                classes.append(cls)
+    print(f"\nfirst-cycle ms per op class (median over runs)")
+    print(f"{'op class':<14} {'parent':>10} {'change':>10} {'Δ':>8}")
+    for cls in classes:
+        a = [p["by_op"][cls] for p, _ in pairs if cls in p.get("by_op", {})]
+        b = [c["by_op"][cls] for _, c in pairs if cls in c.get("by_op", {})]
+        if not a or not b:
+            continue
+        am, bm = statistics.median(a), statistics.median(b)
+        d = f"{(bm - am) / am:+.1%}" if am else "n/a"
+        print(f"{cls:<14} {am:>10.1f} {bm:>10.1f} {d:>8}")
 
 
 def quartiles(xs):
@@ -79,6 +127,8 @@ def main():
     ap.add_argument("--seeds", required=True, help="e.g. 1-10 or 2,4,6")
     ap.add_argument("--seconds", type=float, default=20)
     ap.add_argument("--out", help="append every run's result as a JSON line")
+    ap.add_argument("--by-op", action="store_true",
+                    help="also print first-cycle per-op-class medians for both sides")
     a = ap.parse_args()
 
     with open(os.path.join(a.change, "BENCHMARK.json")) as f:
@@ -91,6 +141,8 @@ def main():
         got = {}
         for side, root in order:
             got[side] = run_one(root, a.workload, seed, a.seconds)
+            if a.by_op:
+                got[side]["by_op"] = first_cycle_ms(root, a.workload, seed)
             line = {"workload": a.workload, "seed": seed, "pair": i, "side": side, **got[side]}
             print(json.dumps(line), flush=True)
             if a.out:
@@ -108,6 +160,8 @@ def main():
         d = f"{r['change_vs_parent']:+.1%}" if r["change_vs_parent"] is not None else "n/a"
         print(f"{r['metric']:<14} {fmt(r['parent']):<28} {fmt(r['change']):<28} {d:>8} "
               f"{r['wins']:>3}/{r['pairs']:<2} {'yes' if r['beats_parent_iqr'] else 'no':>5}")
+    if a.by_op:
+        print_by_op(pairs)
 
 
 if __name__ == "__main__":
