@@ -12,6 +12,7 @@ import org.apache.spark.sql.types._
 import scala.collection.immutable.VectorMap
 import scala.collection.mutable
 import scala.jdk.CollectionConverters._
+import scala.util.control.NonFatal
 
 /** The queryable engine facade: stored relations + `run(script)`.
   *
@@ -909,34 +910,38 @@ class CozoDb(val spark: SparkSession) {
     cachedIndexTargets.filter(_.takeWhile(_ != ':') == rel).foreach(dropIndexCaches) // rel:name
 
   private[lang] var relationCopyBuilds = 0 // driver copies of stored relations built, for tests
+  private[lang] var driverFixpointRounds = 0 // fixpoint rounds completed on the driver, for tests
 
   /** The driver copy of stored relation `rel` at its current version:
-    * every row in Spark's internal format, sorted by the key columns,
-    * when their bytes are at most [[Knee.DriverIndexBytes]] (the heap
-    * budget of the driver indexes; a `Knee.gate` decision logged as
-    * `op=relation_copy`). Fetched in one bounded collect — past
-    * `limit / minRowBytes` rows the bytes exceed the gate whatever the
-    * rows hold — and cached in [[indexArtifacts]] under the relation's
-    * name, so a write, `::rename`, removal or an aborted transaction
-    * retires it like an index artifact. A refusal is cached too: an
-    * over-gate relation is probed once per version. Readers are the
-    * driver fixpoint and the graph fixed rules; no Spark plan reads the
-    * copy. */
-  private def relationCopy(rel: String): Option[DriverRows] = indexCacheLock.synchronized {
+    * every row as an UnsafeRow, sorted by the key columns. The copies
+    * share one heap budget, [[Knee.DriverIndexBytes]] (the one a driver
+    * index has): a copy is admitted when its bytes plus those of the
+    * copies already held are at most the limit (a `Knee.gate` decision
+    * logged as `op=relation_copy`, n the bytes held with it). The bytes
+    * are summed on the executors first, so a refused relation ships no
+    * row; an admitted one is fetched in one collect. Copies of an older
+    * version no reader can reach are dropped before a probe. The copy
+    * is cached in [[indexArtifacts]] under the relation's name, so a
+    * write, `::rename`, removal or an aborted transaction retires it
+    * like an index artifact. A refusal is cached too: an over-gate
+    * relation is probed once per version. Readers are the driver
+    * fixpoint and the graph fixed rules; no Spark plan reads the copy. */
+  private[lang] def relationCopy(rel: String): Option[DriverRows] = indexCacheLock.synchronized {
     val r = records.getOrElse(rel, return None)
     cachedAt(rel, r.version) match {
       case Some(RelationCopy(rows)) => rows
       case _ =>
-        val schema = r.view.schema
-        val cap = math.min(Knee.DriverIndexBytes.value / DriverPlan.minRowBytes(schema), Int.MaxValue - 1L)
-        val fetched = new DriverRows(schema,
-          graftbridge.PlanBridge.collectInternal(r.view.limit(math.max(cap + 1, 0L).toInt)))
-        val copy = Option.when(Knee.gate("relation_copy", fetched.bytes, Knee.DriverIndexBytes)) {
+        indexArtifacts.filterInPlace { case (t, (v, a)) =>
+          !a.isInstanceOf[RelationCopy] || (t != rel && records.get(t).exists(_.version == v)) }
+        val held = indexArtifacts.values.collect { case (_, RelationCopy(Some(c))) => c.bytes }.sum
+        val bytes = graftbridge.PlanBridge.internalBytes(r.view)
+        val copy = Option.when(Knee.gate("relation_copy", held + bytes, Knee.DriverIndexBytes)) {
+          val schema = r.view.schema
           val keyIdx = r.keys.map(schema.fieldIndex)
           val ord = new InterpretedOrdering(keyIdx.map(i =>
             SortOrder(BoundReference(i, schema(i).dataType, nullable = true), Ascending)))
           relationCopyBuilds += 1
-          new DriverRows(schema, fetched.rows.sorted(ord))
+          new DriverRows(schema, graftbridge.PlanBridge.collectInternal(r.view).sorted(ord))
         }
         indexArtifacts(rel) = (r.version, RelationCopy(copy))
         copy
@@ -1972,8 +1977,11 @@ class CozoDb(val spark: SparkSession) {
   /** A rule's frame evaluated on the driver into a local frame when it
     * reads only local frames — const rules, driver fixpoint results,
     * driver graph results — and no step of its plan holds more than
-    * [[Knee.LocalRows]] rows: reading it then runs no job. Else, and
-    * for anything [[DriverPlan]] does not evaluate, the frame as is. */
+    * [[Knee.LocalRows]] rows: reading it then runs no job. Spark's own
+    * ConvertToLocalRelation folds only projections and filters; the
+    * head's dedup, a join or an aggregate over local frames would each
+    * run jobs. Else, and for anything [[DriverPlan]] does not evaluate
+    * (or that raises on the driver), the frame as is. */
   private def localized(df: DataFrame): DataFrame =
     DriverPlan.localRows(df, Knee.LocalRows.value)
       .fold(df)(rows => DriverPlan.frame(spark, new DriverRows(df.schema, rows)))
@@ -2039,7 +2047,7 @@ class CozoDb(val spark: SparkSession) {
           case FixedRuleRel(n) => resolve(n)
             .getOrElse(throw CompileException(s"fixed rule input $n not evaluated"))
           case FixedStoredRel(n, cols) =>
-            val df = if (FixedRules.graphRules(algo)) graphInput(n) else relation(n)
+            val df = if (FixedRules.isGraph(algo)) graphInput(n) else relation(n)
             if (cols.nonEmpty && cols.forall(df.columns.contains))
               df.select(cols.map(col): _*)
             else df
@@ -2333,9 +2341,14 @@ class CozoDb(val spark: SparkSession) {
     * every earlier-stratum rule it reads is a local frame. Once a
     * member holds more than [[Knee.FixpointRows]] rows (a `Knee.gate`,
     * logged as `op=fixpoint` when that happens or when the component
-    * converges on the driver), or on anything the driver cannot
-    * evaluate, it hands off at the round boundary to the Spark loop,
-    * seeded with the driver totals and deltas as local frames.
+    * converges on the driver), it hands off at the round boundary to
+    * the Spark loop, seeded with the driver totals and deltas as local
+    * frames. A round that cannot finish on the driver — a step whose
+    * rows pass the [[Knee.DriverIndexBytes]] heap budget (checked as
+    * they are built), anything [[DriverPlan]] does not evaluate, or an
+    * error Spark may never raise on its optimized plan — is dropped and
+    * run again on the Spark loop, seeded with the totals and deltas the
+    * round started from.
     */
   private def evalRecursive(scc: Seq[String], byName: Map[String, Seq[RuleDef]],
                             evaluated: mutable.HashMap[String, DataFrame],
@@ -2454,6 +2467,9 @@ class CozoDb(val spark: SparkSession) {
       private val restrict = magic(n => records.get(n).map(_ => copyScan(n)))
       private val restrictPlans = mutable.HashMap.empty[String, (AnyRef, org.apache.spark.sql.catalyst.plans.logical.LogicalPlan)]
       private val memo = new DriverPlan.Memo // the copies' side of every round's joins
+      /** Heap bytes any one step of a round may hold: a round whose rows
+        * pass it hands off before it is built. */
+      private val maxBytes = Knee.DriverIndexBytes.value
       private val plans = mutable.HashMap.empty[(HornClause, Option[Int]),
         Option[(org.apache.spark.sql.catalyst.plans.logical.LogicalPlan, StructType, Seq[FixBackend.Slot])]]
 
@@ -2481,12 +2497,14 @@ class CozoDb(val spark: SparkSession) {
           Option.when(slots.forall(s => !s.delta || deltas.contains(s.name)))(
             new DriverRows(schema, DriverPlan.eval(p, {
               case s: FixBackend.Slot => (if (s.delta) deltas(s.name) else totals(s.name)).rows
-            }, memo = memo)))
+            }, memo = memo, maxBytes = maxBytes)))
         }
       def derive(n: String, variants: Seq[DriverRows]): DriverRows = {
         val schema = totals.get(n).map(_.schema).getOrElse(DriverPlan.nullable(variants.head.schema))
         // a union Spark would widen: leave it to Spark
         if (variants.exists(v => !DriverPlan.nullable(v.schema).map(_.dataType).sameElements(schema.map(_.dataType))))
+          throw new FixBackend.Decline
+        if (variants.map(_.rows.length.toLong).sum > maxBytes / DriverPlan.heapRowBytes(schema))
           throw new FixBackend.Decline
         val rows = variants.flatMap(_.rows).toIndexedSeq
         restrict.fold(new DriverRows(schema, rows)) { f =>
@@ -2494,7 +2512,7 @@ class CozoDb(val spark: SparkSession) {
             val key = new Object
             (key, f(DriverPlan.scan(spark, key, schema)).queryExecution.analyzed)
           })
-          new DriverRows(schema, DriverPlan.eval(p, { case k if k eq key => rows }))
+          new DriverRows(schema, DriverPlan.eval(p, { case k if k eq key => rows }, maxBytes = maxBytes))
         }
       }
       private def fold(n: String, rows: Iterator[InternalRow], schema: StructType): DriverRows = {
@@ -2561,7 +2579,7 @@ class CozoDb(val spark: SparkSession) {
             case NamedApply(n, _, _) => relationCopy(n).isDefined
             case _ => true
           })
-        try Some(new DriverFix) catch { case _: FixBackend.Decline => None }
+        try Some(new DriverFix) catch { case NonFatal(_) => None }
       else None
 
     val stats = mutable.ArrayBuffer.empty[Map[String, Long]]
@@ -2608,9 +2626,11 @@ class CozoDb(val spark: SparkSession) {
     def runRound(first: Boolean): Unit = backend match {
       case Left(d) =>
         val saved = d.save()
-        try round(d, first)
+        try { round(d, first); driverFixpointRounds += 1 }
         catch {
-          case _: FixBackend.Decline | _: DriverPlan.Unsupported =>
+          // also any error: Spark may never evaluate what raised it (a
+          // pruned binding, a pushed-down filter), and else raises it itself
+          case NonFatal(_) =>
             d.restore(saved)
             backend = Right(d.handOff())
             runRound(first)

@@ -17,9 +17,10 @@ object FixedRules {
   type Impl = (Seq[DataFrame], Map[String, Any], SparkSession) => DataFrame
 
   private val registry = scala.collection.concurrent.TrieMap.empty[String, Impl]
+  private val graphNames = scala.collection.concurrent.TrieMap.empty[String, Unit]
 
-  def register(name: String, impl: Impl): Unit = registry(name) = impl
-  def unregister(name: String): Unit = registry.remove(name)
+  def register(name: String, impl: Impl): Unit = { registry(name) = impl; graphNames.remove(name) }
+  def unregister(name: String): Unit = { registry.remove(name); graphNames.remove(name) }
   def get(name: String): Option[Impl] = registry.get(name)
   def names: Seq[String] = registry.keys.toSeq.sorted
 
@@ -30,15 +31,13 @@ object FixedRules {
     * FixedRulesAritySpec runs every rule and asserts these. */
   def arity(name: String): Option[Int] = declaredArity.getOrElse(name, None)
 
-  /** The graph algorithms: they read their stored inputs through
+  /** True for the graph algorithms (those registered by
+    * [[registerGraph]]): they read their stored inputs through
     * `graft.graphs.LocalGraph`, which takes a relation's driver copy
     * (CozoDb's per-version copy) instead of running a job. */
-  val graphRules: Set[String] = Set("PageRank", "ConnectedComponents",
-    "StronglyConnectedComponent", "StronglyConnectedComponents", "SCC",
-    "CommunityDetectionLouvain", "LabelPropagation", "TopSort", "BFS", "DFS",
-    "BreadthFirstSearch", "DepthFirstSearch", "ShortestPathBFS", "ShortestPathDijkstra",
-    "RandomWalk", "MinimumSpanningTreePrim", "MinimumSpanningForestKruskal",
-    "ClosenessCentrality", "BetweennessCentrality", "ShortestPathAStar", "KShortestPathYen")
+  def isGraph(name: String): Boolean = graphNames.contains(name)
+
+  private def registerGraph(name: String, impl: Impl): Unit = { register(name, impl); graphNames(name) = () }
 
   private def edges(rels: Seq[DataFrame]): DataFrame = {
     val e = rels.headOption.getOrElse(
@@ -69,21 +68,21 @@ object FixedRules {
   }
 
   // graph algorithm suite (fixed_rule/algos/*.rs)
-  register("PageRank", (rels, o, _) =>
+  registerGraph("PageRank", (rels, o, _) =>
     Graphs.pageRank(edges(rels), iters = optInt(o, "iterations", 10),
       damping = optDouble(o, "theta", 0.85)))
   register("DegreeCentrality", (rels, _, _) => Graphs.degreeCentrality(edges(rels)))
-  register("ConnectedComponents", (rels, _, _) => Graphs.connectedComponents(edges(rels)))
-  register("StronglyConnectedComponent", (rels, _, _) => Graphs.stronglyConnectedComponents(edges(rels)))
-  register("StronglyConnectedComponents", (rels, _, _) => Graphs.stronglyConnectedComponents(edges(rels)))
+  registerGraph("ConnectedComponents", (rels, _, _) => Graphs.connectedComponents(edges(rels)))
+  registerGraph("StronglyConnectedComponent", (rels, _, _) => Graphs.stronglyConnectedComponents(edges(rels)))
+  registerGraph("StronglyConnectedComponents", (rels, _, _) => Graphs.stronglyConnectedComponents(edges(rels)))
   // reference registers the short alias too (fixed_rule/mod.rs:795)
-  register("SCC", (rels, _, _) => Graphs.stronglyConnectedComponents(edges(rels)))
-  register("CommunityDetectionLouvain", (rels, o, _) =>
+  registerGraph("SCC", (rels, _, _) => Graphs.stronglyConnectedComponents(edges(rels)))
+  registerGraph("CommunityDetectionLouvain", (rels, o, _) =>
     Graphs.louvain(edges(rels), maxOuter = optInt(o, "max_iter", 5)))
-  register("LabelPropagation", (rels, o, _) =>
+  registerGraph("LabelPropagation", (rels, o, _) =>
     Graphs.labelPropagation(edges(rels), iters = optInt(o, "max_iter", 5)))
   register("ClusteringCoefficients", (rels, _, _) => Graphs.clusteringCoefficients(edges(rels)))
-  register("TopSort", (rels, _, _) => Graphs.topSort(edges(rels)))
+  registerGraph("TopSort", (rels, _, _) => Graphs.topSort(edges(rels)))
   /** Compile a `condition:`/`heuristic:` expression option against a
     * nodes relation's columns (fixed_rule payload expr options). */
   private def condCol(e: Ast.Expr, spark: org.apache.spark.sql.SparkSession) =
@@ -113,7 +112,7 @@ object FixedRules {
       run(edges(rels), st, edges(rels).select(col("dst")).distinct())
     }
 
-  register("BFS", (rels, o, spark) =>
+  registerGraph("BFS", (rels, o, spark) =>
     if (rels.length >= 3)
       goalSearch(rels, o, spark, (e, s, g) =>
         Graphs.pathBfs(e, s, g, maxHops = optInt(o, "limit", 30)), "BFS")
@@ -122,7 +121,7 @@ object FixedRules {
         throw Compiler.CompileException("BFS needs a starting-nodes relation"))
       Graphs.bfs(edges(rels), st, maxHops = optInt(o, "limit", 10))
     })
-  register("DFS", (rels, o, spark) =>
+  registerGraph("DFS", (rels, o, spark) =>
     if (rels.length >= 3)
       goalSearch(rels, o, spark, (e, s, g) => Graphs.pathDfs(e, s, g), "DFS")
     else {
@@ -131,14 +130,14 @@ object FixedRules {
       Graphs.dfs(edges(rels), st, maxDepth = optInt(o, "limit", 10))
     })
   // long-form aliases (fixed_rule/mod.rs:730, 740)
-  register("BreadthFirstSearch", registry("BFS"))
-  register("DepthFirstSearch", registry("DFS"))
-  register("ShortestPathBFS", (rels, _, _) => {
+  registerGraph("BreadthFirstSearch", registry("BFS"))
+  registerGraph("DepthFirstSearch", registry("DFS"))
+  registerGraph("ShortestPathBFS", (rels, _, _) => {
     val st = starts(rels, 1).getOrElse(
       throw Compiler.CompileException("ShortestPathBFS needs starting nodes"))
     Graphs.shortestPaths(edges(rels), st)
   })
-  register("ShortestPathDijkstra", (rels, _, _) =>
+  registerGraph("ShortestPathDijkstra", (rels, _, _) =>
     // with an ending relation: the reference shape (src, dst, cost,
     // path); with starts only: distributed (start, node, cost)
     if (rels.length >= 3) Graphs.dijkstraPaths(edges(rels), rels(1), rels(2))
@@ -147,27 +146,27 @@ object FixedRules {
         throw Compiler.CompileException("ShortestPathDijkstra needs starting nodes"))
       Graphs.shortestPaths(edges(rels), st)
     })
-  register("RandomWalk", (rels, o, _) => {
+  registerGraph("RandomWalk", (rels, o, _) => {
     val st = starts(rels, 1).getOrElse(
       throw Compiler.CompileException("RandomWalk needs starting nodes"))
     Graphs.randomWalk(edges(rels), st.withColumn("walk_id", col("start")),
       steps = optInt(o, "steps", 10))
   })
 
-  register("MinimumSpanningTreePrim", (rels, _, _) => Graphs.minimumSpanningForest(edges(rels)))
-  register("MinimumSpanningForestKruskal", (rels, _, _) => Graphs.minimumSpanningForest(edges(rels)))
+  registerGraph("MinimumSpanningTreePrim", (rels, _, _) => Graphs.minimumSpanningForest(edges(rels)))
+  registerGraph("MinimumSpanningForestKruskal", (rels, _, _) => Graphs.minimumSpanningForest(edges(rels)))
   // all-pairs BFS is a scale killer — `sample:` bounds the source set
   // (Eppstein–Wang estimate); exact only when it covers every node
-  register("ClosenessCentrality", (rels, o, _) =>
+  registerGraph("ClosenessCentrality", (rels, o, _) =>
     Graphs.closenessCentrality(edges(rels), sample = optInt(o, "sample", 1000)))
   // a `sample:` option switches to the fully distributed Brandes
   // (multi-source forward BFS + level-synchronous backward sweep);
   // without it, exact driver-side Brandes like the reference
-  register("BetweennessCentrality", (rels, o, _) =>
+  registerGraph("BetweennessCentrality", (rels, o, _) =>
     if (o.contains("sample"))
       Graphs.betweennessCentralityApprox(edges(rels), sample = optInt(o, "sample", 1000))
     else Graphs.betweennessCentrality(edges(rels)))
-  register("ShortestPathAStar", (rels, o, _) => {
+  registerGraph("ShortestPathAStar", (rels, o, _) => {
     val e = edges(rels)
     // reference shape: (edges, nodes_with_coords, starting, goal,
     // heuristic: expr). The expression heuristic isn't compiled here —
@@ -181,7 +180,7 @@ object FixedRules {
         "ShortestPathAStar needs starting/goal relations or starting:/goal: options")
     }
   })
-  register("KShortestPathYen", (rels, o, _) => {
+  registerGraph("KShortestPathYen", (rels, o, _) => {
     val e = edges(rels)
     if (rels.length >= 3) Graphs.yenPaths(e, rels(1), rels(2), optInt(o, "k", 3))
     else (o.get("starting"), o.get("goal")) match {

@@ -54,6 +54,12 @@ object DriverPlan {
   /** Smallest UnsafeRow of `schema`: the null bitset plus one 8-byte slot a column. */
   def minRowBytes(schema: StructType): Long = 8L * ((schema.length + 63) / 64 + schema.length)
 
+  /** Estimated heap bytes of one row the evaluator holds: a row and its
+    * value array (32) plus a reference and a boxed value a column (24).
+    * Variable-width values count as a box: those read from a copy share
+    * its buffers. */
+  def heapRowBytes(schema: StructType): Long = 32L + 24L * schema.length
+
   /** A DataFrame over a [[ResidentScan]] of `schema` under `key`, whose
     * Spark plan is `base` (an empty local relation when None). */
   def scan(spark: SparkSession, key: AnyRef, schema: StructType,
@@ -122,20 +128,25 @@ object DriverPlan {
   private type Table = mutable.HashMap[IndexedSeq[Any], mutable.ArrayBuffer[InternalRow]]
 
   /** The rows of `plan`; `bind` maps placeholder keys to their rows.
-    * Past `maxRows` rows at any step it throws [[Unsupported]]. */
+    * Past `maxRows` rows, or rows of more than `maxBytes` estimated heap
+    * bytes ([[heapRowBytes]]), at any step it throws [[Unsupported]]; a
+    * join stops as soon as its output passes the bound. */
   def eval(plan: LogicalPlan, bind: PartialFunction[AnyRef, IndexedSeq[InternalRow]],
-           maxRows: Long = Long.MaxValue, memo: Memo = null): IndexedSeq[InternalRow] = {
+           maxRows: Long = Long.MaxValue, memo: Memo = null,
+           maxBytes: Long = Long.MaxValue): IndexedSeq[InternalRow] = {
+    def cap(p: LogicalPlan): Long = math.min(maxRows, maxBytes / heapRowBytes(p.schema))
     def go(p: LogicalPlan): IndexedSeq[InternalRow] = {
       val rows =
         if (memo == null || !memo.constant(p)) node(p)
         else Option(memo.rows.get(p)).getOrElse { val r = node(p); memo.rows.put(p, r); r }
-      if (rows.length > maxRows) throw new Unsupported(s"more than $maxRows rows")
+      if (rows.length > cap(p)) throw new Unsupported(s"more than ${cap(p)} rows")
       rows
     }
     def node(p: LogicalPlan): IndexedSeq[InternalRow] = p match {
       case ResidentScan(d: DriverRows, _, _) => d.rows
       case ResidentScan(k, _, _) if bind.isDefinedAt(k) => bind(k)
       case l: LocalRelation if l.stream.isEmpty => l.data.toIndexedSeq
+      case r: Range if r.numElements > cap(r) => throw new Unsupported(s"more than ${cap(r)} rows")
       case r: Range => r.start.until(r.end, r.step).map(v => InternalRow(v))
       case SubqueryAlias(_, child) => go(child)
       case ResolvedHint(child, _) => go(child)
@@ -149,7 +160,7 @@ object DriverPlan {
       case Deduplicate(keys, child) if AttributeSet(keys) == child.outputSet =>
         distinct(go(child), child.schema)
       case Distinct(child) => distinct(go(child), child.schema)
-      case j: Join => join(j, go(j.left), go(j.right), maxRows, memo)
+      case j: Join => join(j, go(j.left), go(j.right), cap(j), memo)
       case a: Aggregate => aggregate(a, go(a.child))
       case other => throw new Unsupported(other.nodeName)
     }

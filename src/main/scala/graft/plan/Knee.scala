@@ -24,8 +24,9 @@ object Knee {
   val PqSampleBytes = new Limit(512L << 20) // its bytes, past the default size
   val BpeWords = new Limit(1000000L) // BPE vocabulary words
   val ClassifierFeatureBytes = new Limit(256L << 20) // collected classifier features
-  // the driver heap budget of one driver FTS/HNSW index or one stored
-  // relation's driver copy (CozoDb.relationCopy)
+  // the driver heap budget of one driver FTS/HNSW index, of the stored
+  // relations' driver copies together (CozoDb.relationCopy), and of
+  // each step of a driver fixpoint round
   val DriverIndexBytes = new Limit(Runtime.getRuntime.maxMemory / 16)
   val PatchKeys = new Limit(10000L) // write overlay keys, driver index patch keys
   val LocalRows = new Limit(10000L) // literal rows kept as a local relation

@@ -10,7 +10,8 @@ import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart, SparkLi
   *
   * Counts the Spark jobs (and their planned stages) submitted while a
   * thunk runs, and accumulates the shuffle read/write bytes and task
-  * time of every task in those jobs' stages. Wall time on this box is
+  * time and the result bytes shipped to the driver of every task in
+  * those jobs' stages. Wall time on this box is
   * noise (documented 1.2-2× windows); job counts catch "one extra
   * action" drift and shuffle bytes catch the scale-relevant drift class
   * — an unpushed filter or an injected repartition moves megabytes that
@@ -42,7 +43,8 @@ object ListenerBridge {
   final case class Counts(jobs: Int, stages: Int,
                           shuffleReadBytes: Long = 0L,
                           shuffleWriteBytes: Long = 0L,
-                          taskTimeMs: Long = 0L)
+                          taskTimeMs: Long = 0L,
+                          resultBytes: Long = 0L)
 
   def measure(sc: SparkContext, group: String)(thunk: => Unit): Counts = {
     val jobs = new AtomicInteger(0)
@@ -50,6 +52,7 @@ object ListenerBridge {
     val shRead = new AtomicLong(0L)
     val shWrite = new AtomicLong(0L)
     val taskMs = new AtomicLong(0L)
+    val results = new AtomicLong(0L)
     val groupStages = java.util.concurrent.ConcurrentHashMap.newKeySet[Int]()
     val listener = new SparkListener {
       override def onJobStart(j: SparkListenerJobStart): Unit =
@@ -67,6 +70,7 @@ object ListenerBridge {
           shRead.addAndGet(m.shuffleReadMetrics.totalBytesRead)
           shWrite.addAndGet(m.shuffleWriteMetrics.bytesWritten)
           taskMs.addAndGet(m.executorRunTime)
+          results.addAndGet(m.resultSize)
           ()
         }
     }
@@ -89,6 +93,6 @@ object ListenerBridge {
       sc.setLocalProperty("graft.meter.group", prevMeter)
       sc.removeSparkListener(listener)
     }
-    Counts(jobs.get, stages.get, shRead.get, shWrite.get, taskMs.get)
+    Counts(jobs.get, stages.get, shRead.get, shWrite.get, taskMs.get, results.get)
   }
 }

@@ -1,7 +1,9 @@
 package org.apache.spark.sql.graftbridge
 
+import org.apache.spark.rdd.RDD
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.catalyst.InternalRow
+import org.apache.spark.sql.catalyst.expressions.{UnsafeProjection, UnsafeRow}
 import org.apache.spark.sql.catalyst.plans.logical.LogicalPlan
 import org.apache.spark.sql.classic
 
@@ -12,8 +14,24 @@ object PlanBridge {
   def frame(spark: SparkSession, plan: LogicalPlan): DataFrame =
     classic.Dataset.ofRows(spark.asInstanceOf[classic.SparkSession], plan)
 
-  /** Every row of `df` in Spark's internal format (UnsafeRows, copied
-    * off the executors' reused buffers), in one job. */
+  /** Every row of `df` as an UnsafeRow (copied off the executors'
+    * reused buffers), in one job. */
   def collectInternal(df: DataFrame): Array[InternalRow] =
-    df.queryExecution.toRdd.mapPartitions(_.map(_.copy())).collect()
+    unsafeRows(df).map(_.copy(): InternalRow).collect()
+
+  /** The bytes [[collectInternal]] would fetch, summed on the executors
+    * in one job that ships no row. */
+  def internalBytes(df: DataFrame): Long =
+    unsafeRows(df).map(_.getSizeInBytes.toLong).fold(0L)(_ + _)
+
+  private def unsafeRows(df: DataFrame): RDD[UnsafeRow] = {
+    val schema = df.schema
+    df.queryExecution.toRdd.mapPartitions { it =>
+      lazy val toUnsafe = UnsafeProjection.create(schema)
+      it.map {
+        case u: UnsafeRow => u
+        case r => toUnsafe(r)
+      }
+    }
+  }
 }

@@ -72,6 +72,60 @@ class DriverFixpointSpec extends AnyFunSuite {
     assert(atStats == sparkStats && pastStats == sparkStats)
   }
 
+  /** Like [[run]] on an `n`-node chain with the driver heap budget
+    * `bytes`: also the rounds finished on the driver and the copies built. */
+  private def runBudget(script: String, n: Int, bytes: Long): (Set[Seq[Any]], Seq[Map[String, Long]], Seq[String], Int, Int) =
+    Knee.withLimits(Knee.DriverIndexBytes -> bytes) {
+      val db = chainDb(n)
+      val (rows, lines) = KneeLog.capture(db.run(script).collect().toSeq.map(_.toSeq))
+      (rows.toSet, db.lastFixpointStats, lines.filter(_.contains("op=fixpoint")),
+        db.driverFixpointRounds, db.relationCopyBuilds)
+    }
+
+  test("a round whose rows pass the driver heap budget hands off before it is built") {
+    // a 30-chain's copy is 29 UnsafeRows of 24 bytes (696 bytes): admitted
+    // under both budgets. At 1,000 bytes round 0's scan of it (29 rows at an
+    // estimated 80 heap bytes) is already past the budget; at 4,000 bytes the
+    // scans fit and the cross join (841 rows) stops once its output passes it
+    val pairs =
+      """p[a, d] := *chain[a, _], *chain[_, d]
+        |p[a, d] := p[a, b], *chain[b, d]
+        |?[a, d] := p[a, d]""".stripMargin
+    for ((script, bytes, size) <- Seq((closure, 1000L, 435), (pairs, 4000L, 841))) {
+      val (sparkRows, sparkStats, _) = Knee.withLimits(Knee.FixpointRows -> 0L)(
+        runBudget(script, 30, Long.MaxValue) match { case (r, s, l, _, _) => (r, s, l) })
+      val (rows, stats, lines, rounds, copies) = runBudget(script, 30, bytes)
+      assert(sparkRows.size == size)
+      assert(rows == sparkRows && stats == sparkStats)
+      assert(copies == 1 && rounds == 0 && lines.isEmpty, (copies, rounds, lines))
+      val (freeRows, _, _, freeRounds, _) = runBudget(script, 30, Long.MaxValue)
+      assert(freeRows == sparkRows && freeRounds > 0, "unpinned, the same fixpoint runs on the driver")
+    }
+  }
+
+  test("an error the driver raises on a binding Spark prunes hands the round to Spark") {
+    // `x` is in no head: Spark's optimized plan never adds, the driver's
+    // analyzed plan overflows on it. The chain is a range, not local rows:
+    // Spark folds a projection over local rows before it prunes columns
+    def run(bound: String, limit: Long): (Set[Seq[Any]], Seq[Map[String, Long]], Int) =
+      Knee.withLimits(Knee.FixpointRows -> limit) {
+        val db = new CozoDb(spark)
+        db.registerTable("chain", spark.range(1, 12).select($"id".as("fr"), ($"id" + 1).as("to")),
+          Seq("fr", "to"))
+        val rows = db.run(
+          s"""r[a, b] := *chain[a, b], x = $bound + a
+             |r[a, c] := r[a, b], *chain[b, c]
+             |?[a, b] := r[a, b]""".stripMargin).collect().map(_.toSeq).toSet
+        (rows, db.lastFixpointStats, db.driverFixpointRounds)
+      }
+    val (sparkRows, sparkStats, _) = run("9223372036854775807", 0L)
+    val (rows, stats, rounds) = run("9223372036854775807", 10000L)
+    assert(sparkRows.size == 66 && rows == sparkRows && stats == sparkStats)
+    assert(rounds == 0, "round 0 was handed to Spark")
+    val (plainRows, _, plainRounds) = run("1", 10000L)
+    assert(plainRows == sparkRows && plainRounds > 0, "without the overflow the fixpoint runs on the driver")
+  }
+
   test("a round the driver cannot evaluate (a union Spark widens) hands off to Spark at its start") {
     // round 0 derives longs, round 1 doubles: Spark widens the union
     val widening =

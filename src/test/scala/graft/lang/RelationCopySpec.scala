@@ -2,6 +2,7 @@ package graft.lang
 
 import graft.SparkFixture
 import graft.plan.{Knee, KneeLog}
+import org.apache.spark.sql.graftbridge.ListenerBridge
 import org.scalatest.funsuite.AnyFunSuite
 
 /** The per-version driver copy of a stored relation, read by the driver
@@ -92,5 +93,45 @@ class RelationCopySpec extends AnyFunSuite {
     assert(lines.exists(_.matches("graft.knee op=relation_copy n=\\d+ gate=1 branch=distributed")), lines)
     assert(!lines.exists(_.contains("op=fixpoint")), lines)
     assert(db.relationCopyBuilds == 0)
+  }
+
+  private def copyBytes(line: String): Long =
+    "n=(\\d+)".r.findFirstMatchIn(line).get.group(1).toLong
+
+  test("a wide-row relation over the byte gate is refused without fetching its rows") {
+    // 200 rows of ~2 KB: the row count alone (8 bytes a column) would admit
+    // 2,730 rows under 64 KiB and fetch all ~400 KB
+    val db = new CozoDb(spark)
+    val note = "x" * 2000
+    db.registerTable("wide", (1 to 200).map(i => (i.toLong, i.toLong + 1, s"$note$i")).toDF("src", "dst", "note"),
+      Seq("src", "dst"))
+    val limit = 64L << 10
+    val (counts, lines) = KneeLog.capture(Knee.withLimits(Knee.DriverIndexBytes -> limit) {
+      ListenerBridge.measure(spark.sparkContext, "relation-copy-wide")(assert(db.relationCopy("wide").isEmpty))
+    })
+    assert(counts.jobs == 1 && counts.resultBytes < limit, counts)
+    assert(lines.length == 1 && lines.head.endsWith(s"gate=$limit branch=distributed"), lines)
+    assert(copyBytes(lines.head) > 200L * 2000, lines)
+    assert(db.relationCopyBuilds == 0)
+    // a new version under a gate it fits: every row, in key order
+    db.run("?[src, dst, note] <- [[0, 1, 'n']] :put wide {src, dst => note}").collect()
+    val copy = db.relationCopy("wide").get
+    assert(copy.rows.length == 201 && copy.rows.map(_.getLong(0)) == (0L to 200L))
+  }
+
+  test("the copies share one heap budget; a copy of an older version no longer counts") {
+    val db = new CozoDb(spark)
+    for (rel <- Seq("a", "b", "c"))
+      db.registerTable(rel, (1 to 10).map(i => (i.toLong, i.toLong)).toDF("src", "dst"), Seq("src", "dst"))
+    val (_, one) = KneeLog.capture(db.relationCopy("a"))
+    val bytes = copyBytes(one.head)
+    val (_, lines) = KneeLog.capture(Knee.withLimits(Knee.DriverIndexBytes -> (bytes * 3 / 2)) {
+      assert(db.relationCopy("b").isEmpty, "a and b together pass the budget")
+      db.run("?[src, dst] <- [[11, 11]] :put a {src, dst}").collect()
+      assert(db.relationCopy("c").isDefined, "the copy of a's old version is dropped")
+    })
+    assert(lines == Seq(
+      s"graft.knee op=relation_copy n=${2 * bytes} gate=${bytes * 3 / 2} branch=distributed",
+      s"graft.knee op=relation_copy n=$bytes gate=${bytes * 3 / 2} branch=driver"), lines)
   }
 }
