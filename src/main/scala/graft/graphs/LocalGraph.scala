@@ -3,6 +3,7 @@ package graft.graphs
 import graft.plan._
 import org.apache.spark.sql.{DataFrame, Row, SparkSession}
 import org.apache.spark.sql.functions.{col, xxhash64}
+import org.apache.spark.sql.catalyst.plans.logical.LocalRelation
 import org.apache.spark.sql.types.{DataType, LongType, StructField, StructType}
 import scala.collection.mutable
 import scala.jdk.CollectionConverters._
@@ -42,16 +43,33 @@ private[graphs] final class LocalGraph(val keyType: DataType, keys: Array[AnyRef
   }
 
   /** The same graph with its edges sorted by (src, dst), or by (src,
-    * weight, dst): every row then lists its targets in key order. */
-  def sorted(byWeight: Boolean = false): LocalGraph = {
-    val ix = Array.tabulate[Integer](src.length)(Int.box)
-    java.util.Arrays.sort(ix, (a: Integer, b: Integer) => {
-      val c = Integer.compare(src(a), src(b))
-      val cw = if (c == 0 && byWeight) java.lang.Double.compare(w(a), w(b)) else c
-      if (cw != 0) cw else Integer.compare(dst(a), dst(b))
+    * weight, dst): every row then lists its targets in key order. Equal
+    * edges keep their order (a stable sort), so float sums over the
+    * sorted edges do not move. Built once per graph. */
+  def sorted(byWeight: Boolean = false): LocalGraph = if (byWeight) byWeightSorted else bySrcDst
+  private lazy val bySrcDst: LocalGraph =
+    if (w == null) { // equal (src, dst) edges are indistinguishable: sort them packed
+      val packed = Array.tabulate(src.length)(i => src(i).toLong << 32 | dst(i))
+      java.util.Arrays.sort(packed)
+      new LocalGraph(keyType, keys, packed.map(p => (p >>> 32).toInt), packed.map(_.toInt), null)
+    } else permuted((a, b) => {
+      val c = Integer.compare(src(a), src(b)); if (c != 0) c else Integer.compare(dst(a), dst(b))
     })
+  private lazy val byWeightSorted: LocalGraph = permuted((a, b) => {
+    val c = Integer.compare(src(a), src(b))
+    val cw = if (c == 0) java.lang.Double.compare(w(a), w(b)) else c
+    if (cw != 0) cw else Integer.compare(dst(a), dst(b))
+  })
+  /** The graph with its edges stably sorted by `cmp` over edge indices. */
+  private def permuted(cmp: (Int, Int) => Int): LocalGraph = {
+    val ix = LocalGraph.stableOrder(src.length, cmp)
     new LocalGraph(keyType, keys, ix.map(src(_)), ix.map(dst(_)), if (w == null) null else ix.map(w(_)))
   }
+
+  /** Estimated heap bytes of the graph with everything it builds on
+    * demand: a boxed key, its index entry and CSR offsets a node; the
+    * edge arrays, three CSRs and two sorted copies an edge. */
+  def bytes: Long = 96L * n + (if (w == null) 8L else 16L) * 8 * src.length
 
   /** All nodes when `s >= n`, else the `s` smallest by
     * (xxhash64(node), node) — the distributed `orderBy(...).limit(s)`
@@ -125,13 +143,35 @@ private[graphs] object LocalGraph {
   /** The knee: a `Knee.GraphEdges` gate on the edge count when `guard`
     * holds and, on the driver branch, the edges — columns (src, dst[,
     * weight]) by position — plus the node keys of `nodes`. The rows come
-    * from driver memory when `e` is resident, else from one collect.
-    * None = run the distributed program. */
+    * from driver memory when `e` is resident, else from one collect. A
+    * graph over a relation copy (no `nodes`) is built once per copy and
+    * projection and kept with the copy ([[DriverRows.derived]]), so the
+    * gate then reads its edge count. None = run the distributed program. */
   def fetch(op: String, e: Edges, weighted: Boolean = false,
             guard: Boolean = true, nodes: DataFrame = null): Option[LocalGraph] =
-    Option.when(guard && Knee.gate(op, e.resident.fold(e.n)(_.length.toLong), Knee.GraphEdges))(
-      apply(e.frame, e.resident.getOrElse(e.df.collect()), weighted,
-        if (nodes == null) Array.empty else rowsOf(nodes)))
+    if (!guard) None
+    else {
+      val held = if (nodes == null) overCopy(e.frame, weighted) else None
+      val kept = held.flatMap { case (c, k) => c.keptAs[LocalGraph](k) }
+      val n = kept.fold(e.resident.fold(e.n)(_.length.toLong))(_.src.length.toLong)
+      Option.when(Knee.gate(op, n, Knee.GraphEdges))(kept.getOrElse {
+        def build = apply(e.frame, e.resident.getOrElse(e.df.collect()), weighted,
+          if (nodes == null) Array.empty else rowsOf(nodes))
+        held.fold(build) { case (c, k) => c.derived(k) { val g = build; (g, g.bytes) } }
+      })
+    }
+
+  /** The relation copy `frame` reads (its one leaf) and the key of a
+    * graph over it: the canonical projection above the copy, and
+    * `weighted`. */
+  private def overCopy(frame: DataFrame, weighted: Boolean): Option[(DriverRows, Any)] = {
+    val plan = frame.queryExecution.analyzed
+    plan.collectLeaves() match {
+      case Seq(ResidentScan(c: DriverRows, _, _)) if c.keyIdx.nonEmpty =>
+        Some((c, (plan.transformUp { case r: ResidentScan => LocalRelation(r.output) }.canonicalized, weighted)))
+      case _ => None
+    }
+  }
 
   /** The rows of `df`: computed on the driver when it reads only a
     * relation copy or local rows, else collected. */
@@ -180,6 +220,31 @@ private[graphs] object LocalGraph {
   /** A node-key column: non-null for LongType keys (as tuple encoders
     * declare a Long), nullable for any other key type. */
   def keyField(name: String, t: DataType): StructField = StructField(name, t, t != LongType)
+
+  /** `0 until m` stably sorted by `cmp`: a bottom-up merge sort over
+    * primitive indices. */
+  private def stableOrder(m: Int, cmp: (Int, Int) => Int): Array[Int] = {
+    var a = Array.range(0, m)
+    var b = new Array[Int](m)
+    var width = 1
+    while (width < m) {
+      var lo = 0
+      while (lo < m) {
+        val mid = math.min(lo + width, m)
+        val hi = math.min(lo + 2 * width, m)
+        var i = lo; var j = mid; var k = lo
+        while (k < hi) {
+          if (i < mid && (j >= hi || cmp(a(i), a(j)) <= 0)) { b(k) = a(i); i += 1 }
+          else { b(k) = a(j); j += 1 }
+          k += 1
+        }
+        lo = hi
+      }
+      val t = a; a = b; b = t
+      width *= 2
+    }
+    a
+  }
 
   /** Compressed sparse rows over dense ids: node v's edges are the
     * slots `off(v) until off(v + 1)` of `tgt` (and `wt`). */

@@ -5,7 +5,7 @@ import Ast._
 import graft.operators.Mutations
 import org.apache.spark.sql.graftbridge
 import org.apache.spark.sql.catalyst.InternalRow
-import org.apache.spark.sql.catalyst.expressions.{Ascending, BoundReference, InterpretedOrdering, SortOrder}
+import org.apache.spark.sql.catalyst.expressions.{Ascending, BoundReference, InterpretedOrdering, SortOrder, UnsafeRow}
 import org.apache.spark.sql.{Column, DataFrame, Row, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types._
@@ -787,7 +787,10 @@ class CozoDb(val spark: SparkSession) {
       val recursive = scc.size > 1 || deps(scc.head).contains(scc.head)
       if (!recursive) {
         val name = scc.head
-        evalRule(byName(name), n => evaluated.get(n), params).foreach(df => evaluated(name) = localized(df))
+        val resolve = (n: String) => evaluated.get(n)
+        overCopies(byName(name), resolve, params)
+          .orElse(evalRule(byName(name), resolve, params).map(localized))
+          .foreach(evaluated(name) = _)
       } else {
         // goal-directed seeding (magic-set adornment, query/magic.rs:55-67):
         // single-rule recursion whose callers all bind a position to a
@@ -833,9 +836,16 @@ class CozoDb(val spark: SparkSession) {
     })
   }
 
-  private def compiler(resolve: String => Option[DataFrame], params: Map[String, Any]) =
-    new Compiler(spark, relation, resolve, params, validityScan,
-      (n, p, o, fr) => searchProbe(n, p, o, params, fr), chooseIndex)
+  /** The compiler of a rule body; with `copies`, its stored atoms read
+    * those relation copies (and it has no validity, search or index
+    * reads). */
+  private def compiler(resolve: String => Option[DataFrame], params: Map[String, Any],
+                       copies: Map[String, DriverRows] = Map.empty) =
+    if (copies.isEmpty)
+      new Compiler(spark, relation, resolve, params, validityScan,
+        (n, p, o, fr) => searchProbe(n, p, o, params, fr), chooseIndex)
+    else new Compiler(spark, n => { relation(n); DriverPlan.scan(spark, copies(n), copies(n).schema) },
+      resolve, params)
 
   // ———————————————— indexes (parse/sys.rs:391-655) ————————————————
 
@@ -910,6 +920,7 @@ class CozoDb(val spark: SparkSession) {
     cachedIndexTargets.filter(_.takeWhile(_ != ':') == rel).foreach(dropIndexCaches) // rel:name
 
   private[lang] var relationCopyBuilds = 0 // driver copies of stored relations built, for tests
+  private[lang] var localGraphBuilds = 0 // graphs built over a relation copy, for tests
   private[lang] var driverFixpointRounds = 0 // fixpoint rounds completed on the driver, for tests
 
   /** The driver copy of stored relation `rel` at its current version:
@@ -924,8 +935,12 @@ class CozoDb(val spark: SparkSession) {
     * is cached in [[indexArtifacts]] under the relation's name, so a
     * write, `::rename`, removal or an aborted transaction retires it
     * like an index artifact. A refusal is cached too: an over-gate
-    * relation is probed once per version. Readers are the driver
-    * fixpoint and the graph fixed rules; no Spark plan reads the copy. */
+    * relation is probed once per version. The driver fixpoint, the
+    * graph fixed rules and non-recursive rules whose stored atoms all
+    * have copies read it on the driver ([[graft.plan.DriverPlan]], in
+    * key order where a join or a filter binds a key prefix); a graph
+    * built over it is kept with it ([[chargeCopy]]). Spark plans a
+    * read of the copy as the relation's own view. */
   private[lang] def relationCopy(rel: String): Option[DriverRows] = indexCacheLock.synchronized {
     val r = records.getOrElse(rel, return None)
     cachedAt(rel, r.version) match {
@@ -933,19 +948,35 @@ class CozoDb(val spark: SparkSession) {
       case _ =>
         indexArtifacts.filterInPlace { case (t, (v, a)) =>
           !a.isInstanceOf[RelationCopy] || (t != rel && records.get(t).exists(_.version == v)) }
-        val held = indexArtifacts.values.collect { case (_, RelationCopy(Some(c))) => c.bytes }.sum
         val bytes = graftbridge.PlanBridge.internalBytes(r.view)
-        val copy = Option.when(Knee.gate("relation_copy", held + bytes, Knee.DriverIndexBytes)) {
+        val copy = Option.when(Knee.gate("relation_copy", heldCopyBytes + bytes, Knee.DriverIndexBytes)) {
           val schema = r.view.schema
-          val keyIdx = r.keys.map(schema.fieldIndex)
+          val keyIdx = r.keys.map(schema.fieldIndex).toIndexedSeq
           val ord = new InterpretedOrdering(keyIdx.map(i =>
             SortOrder(BoundReference(i, schema(i).dataType, nullable = true), Ascending)))
           relationCopyBuilds += 1
-          new DriverRows(schema, graftbridge.PlanBridge.collectInternal(r.view).sorted(ord))
+          new DriverRows(schema, graftbridge.PlanBridge.collectInternal(r.view).sorted(ord), keyIdx, chargeCopy)
         }
         indexArtifacts(rel) = (r.version, RelationCopy(copy))
         copy
     }
+  }
+
+  /** The copy of `rel` if one is held for its current version: never
+    * probes or fetches. */
+  private def heldCopy(rel: String): Option[DriverRows] = indexCacheLock.synchronized {
+    records.get(rel).flatMap(r => cachedAt(rel, r.version)).collect { case RelationCopy(Some(c)) => c }
+  }
+
+  /** Heap bytes of the copies held and of what is kept with them. */
+  private def heldCopyBytes: Long =
+    indexArtifacts.values.collect { case (_, RelationCopy(Some(c))) => c.heldBytes }.sum
+
+  /** Whether a graph of `bytes` built over a copy is kept with it: when
+    * the copies with what they keep still fit [[Knee.DriverIndexBytes]]. */
+  private def chargeCopy(bytes: Long): Boolean = indexCacheLock.synchronized {
+    localGraphBuilds += 1
+    heldCopyBytes + bytes <= Knee.DriverIndexBytes.value
   }
 
   /** The restored graphs of a distributed walk-eligible index, kept in
@@ -1982,9 +2013,46 @@ class CozoDb(val spark: SparkSession) {
     * head's dedup, a join or an aggregate over local frames would each
     * run jobs. Else, and for anything [[DriverPlan]] does not evaluate
     * (or that raises on the driver), the frame as is. */
-  private def localized(df: DataFrame): DataFrame =
+  private def localized(df: DataFrame): DataFrame = local(df).getOrElse(df)
+
+  /** `df` evaluated on the driver into a local frame, if it can be (see [[localized]]). */
+  private def local(df: DataFrame): Option[DataFrame] =
     DriverPlan.localRows(df, Knee.LocalRows.value)
-      .fold(df)(rows => DriverPlan.frame(spark, new DriverRows(df.schema, rows)))
+      .map(rows => DriverPlan.frame(spark, new DriverRows(df.schema, rows)))
+
+  /** A non-recursive rule evaluated on the driver over relation copies,
+    * when every stored atom of its clauses has a copy held at its
+    * relation's current version (none is probed or fetched here) and no
+    * atom reads a validity or a search index: the rule compiled over
+    * those copies and evaluated by [[DriverPlan.localRows]], whose prefix
+    * joins and key slices read each copy in key order — a read by key
+    * runs no job. Rule atoms are read as they were evaluated. None when
+    * that does not apply, when the driver declines, or when compiling
+    * or evaluating raises: the caller then compiles the rule over the
+    * views, as Spark must see it (Spark may never raise what the driver
+    * raised, or raise it itself). */
+  private def overCopies(defs: Seq[RuleDef], resolve: String => Option[DataFrame],
+                         params: Map[String, Any]): Option[DataFrame] = {
+    val horn = defs.collect { case h: HornClause => h }
+    val stored = mutable.Set.empty[String]
+    var fits = horn.length == defs.length &&
+      horn.forall(_.head.flatMap(_.aggr).forall(a => a == "min" || a == "max"))
+    def visit(a: Atom): Unit = a match {
+      case RelApply(n, _, true, None) => stored += n
+      case NamedApply(n, _, None) => stored += n
+      case RelApply(_, _, false, _) =>
+      case _: RelApply | _: NamedApply | _: SearchApply => fits = false
+      case Neg(inner) => visit(inner)
+      case Or(alts) => alts.flatten.foreach(visit)
+      case _ =>
+    }
+    horn.foreach(_.body.foreach(visit))
+    if (!fits || stored.isEmpty) return None
+    val copies = stored.toSeq.flatMap(n => heldCopy(n).map(n -> _)).toMap
+    if (copies.size < stored.size) None
+    else try evalRule(defs, resolve, params, copies).flatMap(local)
+    catch { case NonFatal(_) => None }
+  }
 
   /** Evaluate one rule (all its clauses). Aggregation semantics follow
     * the reference's aggregation store (eval.rs + aggr.rs): the
@@ -1995,11 +2063,12 @@ class CozoDb(val spark: SparkSession) {
     * set-semantic: per-clause project + dedup + union.
     */
   private def evalRule(defs: Seq[RuleDef], resolve: String => Option[DataFrame],
-                       params: Map[String, Any]): Option[DataFrame] = {
+                       params: Map[String, Any],
+                       copies: Map[String, DriverRows] = Map.empty): Option[DataFrame] = {
     val horn = defs.collect { case h: HornClause => h }
     if (horn.length == defs.length && horn.head.head.exists(_.aggr.isDefined))
-      return evalAggRule(horn, resolve, params)
-    val dfs = defs.flatMap { d => try Some(evalOneDef(d, resolve, params))
+      return evalAggRule(horn, resolve, params, copies)
+    val dfs = defs.flatMap { d => try Some(evalOneDef(d, resolve, params, copies))
       catch { case _: Compiler.EmptyRelation => None } }
     if (dfs.isEmpty) None
     else if (dfs.length == 1) Some(dfs.head)
@@ -2014,10 +2083,10 @@ class CozoDb(val spark: SparkSession) {
   }
 
   private def evalOneDef(d: RuleDef, resolve: String => Option[DataFrame],
-                         params: Map[String, Any]): DataFrame = {
+                         params: Map[String, Any], copies: Map[String, DriverRows]): DataFrame = {
     d match {
       case HornClause(_, head, body) =>
-        val c = compiler(resolve, params)
+        val c = compiler(resolve, params, copies)
         c.applyHead(head, c.compileBody(body))
       case ConstRule(_, head, data) =>
         val rows = evalConst(data, params) match {
@@ -2076,20 +2145,20 @@ class CozoDb(val spark: SparkSession) {
   }
 
   private def evalAggRule(clauses: Seq[HornClause], resolve: String => Option[DataFrame],
-                          params: Map[String, Any]): Option[DataFrame] = {
+                          params: Map[String, Any], copies: Map[String, DriverRows]): Option[DataFrame] = {
     val h0 = clauses.head.head
     clauses.foreach { h =>
       if (h.head.map(_.aggr) != h0.map(_.aggr))
         throw CompileException(
           s"rule ${h.name}: all clauses must share the same aggregation shape")
     }
-    val c0 = compiler(resolve, params)
+    val c0 = compiler(resolve, params, copies)
     // project each clause body to positional columns so clauses may use
     // different variable names, and a var may appear both plain and
     // aggregated (?[region, count(region)])
     val bodies = clauses.flatMap { h =>
       try {
-        val c = compiler(resolve, params)
+        val c = compiler(resolve, params, copies)
         val b = c.compileBody(h.body)
         h.head.foreach { a =>
           if (!b.columns.contains(a.v))
@@ -2459,14 +2528,14 @@ class CozoDb(val spark: SparkSession) {
     /** The driver backend: facts as driver rows. */
     final class DriverFix extends FixBackend[DriverRows] {
       /** Row keys of each non-meet total, for the diff. */
-      private var keys = Map.empty[String, Set[IndexedSeq[Any]]]
+      private var keys = Map.empty[String, Set[UnsafeRow]]
       private def copyScan(rel: String): DataFrame = {
         relation(rel) // access and existence, as the Spark scan checks them
         relationCopy(rel).fold(throw new FixBackend.Decline)(c => DriverPlan.scan(spark, c, c.schema))
       }
       private val restrict = magic(n => records.get(n).map(_ => copyScan(n)))
       private val restrictPlans = mutable.HashMap.empty[String, (AnyRef, org.apache.spark.sql.catalyst.plans.logical.LogicalPlan)]
-      private val memo = new DriverPlan.Memo // the copies' side of every round's joins
+      private val memo = new DriverPlan.Memo // the rows of subtrees no round changes
       /** Heap bytes any one step of a round may hold: a round whose rows
         * pass it hands off before it is built. */
       private val maxBytes = Knee.DriverIndexBytes.value
@@ -2525,7 +2594,7 @@ class CozoDb(val spark: SparkSession) {
           if (meetRules(n)) fold(n, derived.rows.iterator, derived.schema)
           else {
             val d = new DriverRows(derived.schema, DriverPlan.distinct(derived.rows, derived.schema))
-            keys += n -> d.rows.map(DriverPlan.rowKey(_, d.schema)).toSet
+            keys += n -> d.rows.map(_.asInstanceOf[UnsafeRow]).toSet
             d
           }
         (t.rows.length.toLong, Option.when(t.rows.nonEmpty)((t, t)))
@@ -2534,14 +2603,16 @@ class CozoDb(val spark: SparkSession) {
         val schema = tot.schema
         if (!meetRules(n)) {
           val seen = keys(n)
-          val fresh = DriverPlan.distinct(derived.rows, schema).filterNot(r => seen(DriverPlan.rowKey(r, schema)))
-          if (fresh.nonEmpty) keys += n -> (seen ++ fresh.map(DriverPlan.rowKey(_, schema)))
+          // distinct rows are their own keys
+          val fresh = DriverPlan.distinct(derived.rows, schema).map(_.asInstanceOf[UnsafeRow]).filterNot(seen)
+          if (fresh.nonEmpty) keys += n -> (seen ++ fresh)
           (fresh.length.toLong, Option.when(fresh.nonEmpty)(
             (new DriverRows(schema, tot.rows ++ fresh), new DriverRows(schema, fresh))))
         } else {
           val folded = fold(n, tot.rows.iterator ++ derived.rows.iterator, schema)
-          val old = tot.rows.iterator.map(DriverPlan.rowKey(_, schema)).toSet
-          val delta = folded.rows.filterNot(r => old(DriverPlan.rowKey(r, schema)))
+          val rowKey = DriverPlan.Keys.of(schema)
+          val old = tot.rows.iterator.map(rowKey(_)).toSet
+          val delta = folded.rows.filterNot(r => old(rowKey(r)))
           (delta.length.toLong, Option.when(delta.nonEmpty)((folded, new DriverRows(schema, delta))))
         }
       }
@@ -2549,9 +2620,9 @@ class CozoDb(val spark: SparkSession) {
 
       /** The rows the largest member holds. */
       def held: Long = totals.values.map(_.rows.length.toLong).maxOption.getOrElse(0L)
-      def save(): (Map[String, DriverRows], Map[String, DriverRows], Map[String, Set[IndexedSeq[Any]]]) =
+      def save(): (Map[String, DriverRows], Map[String, DriverRows], Map[String, Set[UnsafeRow]]) =
         (totals.toMap, deltas.toMap, keys)
-      def restore(s: (Map[String, DriverRows], Map[String, DriverRows], Map[String, Set[IndexedSeq[Any]]])): Unit = {
+      def restore(s: (Map[String, DriverRows], Map[String, DriverRows], Map[String, Set[UnsafeRow]])): Unit = {
         totals.clear(); totals ++= s._1; deltas.clear(); deltas ++= s._2; keys = s._3
       }
       /** The Spark backend seeded with these totals and deltas as local frames. */

@@ -8,21 +8,80 @@ import org.apache.spark.sql.catalyst.expressions.aggregate.{AggregateExpression,
 import org.apache.spark.sql.catalyst.plans.{Cross, Inner, LeftAnti, LeftSemi}
 import org.apache.spark.sql.catalyst.plans.logical._
 import org.apache.spark.sql.catalyst.types.DataTypeUtils
-import org.apache.spark.sql.catalyst.util.{ArrayData, GenericArrayData, TypeUtils}
+import org.apache.spark.sql.catalyst.util.TypeUtils
 import org.apache.spark.sql.execution.{ProjectExec, SparkPlan, SparkStrategy}
 import org.apache.spark.sql.graftbridge.PlanBridge
 import org.apache.spark.sql.types._
 import scala.collection.mutable
 
 /** Rows held on the driver, in Spark's internal format: a stored
-  * relation's per-version copy, or a fixpoint's totals and deltas. */
-final class DriverRows(val schema: StructType, val rows: IndexedSeq[InternalRow]) {
+  * relation's per-version copy, or a fixpoint's totals and deltas. A
+  * copy is sorted by the columns at `keyIdx` (its key, ascending, NULLs
+  * first), so the rows binding a leading prefix of them are one run
+  * ([[keyRange]]); other rows have no sort key. Structures derived from
+  * the rows may be kept with them ([[derived]]) while `charge`, handed
+  * each one's heap bytes, admits them. */
+final class DriverRows(val schema: StructType, val rows: IndexedSeq[InternalRow],
+                       val keyIdx: IndexedSeq[Int] = IndexedSeq.empty,
+                       charge: Long => Boolean = _ => false) {
   override def toString: String = s"DriverRows(${rows.length} rows)"
   /** Heap bytes of the rows as UnsafeRows (estimated for other rows). */
   lazy val bytes: Long = rows.iterator.map {
     case u: UnsafeRow => u.getSizeInBytes.toLong
     case _ => DriverPlan.minRowBytes(schema)
   }.sum
+
+  private val kept = new java.util.concurrent.ConcurrentHashMap[Any, AnyRef]
+  // builds lock this, not the row set: `charge` takes the owner's lock,
+  // under which the owner may read this row set's lazy `bytes`
+  private val building = new Object
+  @volatile private var keptBytes = 0L
+  /** Heap bytes of the rows and of the structures kept with them. */
+  def heldBytes: Long = bytes + keptBytes
+
+  /** The structure under `key` derived from these rows: the one kept,
+    * else the one `build` makes with its heap bytes, kept when `charge`
+    * admits them. What is kept goes with the rows: whatever retires a
+    * copy retires it too. */
+  def derived[T <: AnyRef](key: Any)(build: => (T, Long)): T = building.synchronized {
+    kept.get(key) match {
+      case null =>
+        val (t, b) = build
+        if (charge(b)) { kept.put(key, t); keptBytes += b }
+        t
+      case t => t.asInstanceOf[T]
+    }
+  }
+
+  /** The structure kept under `key`, if any. */
+  def keptAs[T <: AnyRef](key: Any): Option[T] = Option(kept.get(key)).map(_.asInstanceOf[T])
+
+  private lazy val keyOrder = keyIdx.map(i => TypeUtils.getInterpretedOrdering(schema(i).dataType))
+  /** The run `[lo, hi)` of rows whose first `vs.length` key columns
+    * equal `vs` (NULL matching NULL) under the sort order. */
+  def keyRange(vs: Array[Any]): (Int, Int) = {
+    def cmp(r: InternalRow): Int = {
+      var i = 0; var c = 0
+      while (c == 0 && i < vs.length) {
+        val k = keyIdx(i)
+        val x = if (r.isNullAt(k)) null else r.get(k, schema(k).dataType)
+        c = if (x == null) { if (vs(i) == null) 0 else -1 }
+            else if (vs(i) == null) 1 else keyOrder(i).compare(x, vs(i))
+        i += 1
+      }
+      c
+    }
+    def bound(past: Boolean): Int = {
+      var lo = 0; var hi = rows.length
+      while (lo < hi) {
+        val m = (lo + hi) >>> 1
+        val c = cmp(rows(m))
+        if (c < 0 || (past && c == 0)) lo = m + 1 else hi = m
+      }
+      lo
+    }
+    (bound(past = false), bound(past = true))
+  }
 }
 
 /** A leaf whose rows the driver holds under `key`: a [[DriverRows]] or
@@ -44,7 +103,12 @@ final case class ResidentScan(key: AnyRef, output: Seq[Attribute], base: Logical
   * filters, equi- and cross joins (inner, semi, anti), unions,
   * set-dedup and min/max aggregation over [[ResidentScan]], local
   * relations and ranges; any other node or an unevaluable expression
-  * throws [[DriverPlan.Unsupported]]. Dedup, grouping and join keys
+  * throws [[DriverPlan.Unsupported]]. A relation copy read through
+  * renames is read in key order, as cozo reads its sorted store
+  * (ra.rs:1306-1395): an inner equi-join whose keys bind a leading
+  * prefix of the copy's key binary-searches the copy per row of the
+  * other side, and literal equalities on such a prefix read one run of
+  * it; other joins are hash joins. Dedup, grouping and join keys
   * compare as Spark's do after float normalization: -0.0 is 0.0, every
   * NaN is one NaN, NULLs are equal in `<=>` keys only.
   */
@@ -113,19 +177,18 @@ object DriverPlan {
 
   /** What stays the same while plans are evaluated again and again over
     * changing placeholder rows (a fixpoint's rounds): the rows of every
-    * subtree that reads no placeholder, and the join hash tables built
-    * over such subtrees. */
+    * subtree that reads no placeholder. A copy read in key order (a
+    * prefix join's copy side, a key slice) is never materialized, so
+    * never held here. */
   final class Memo {
     private[DriverPlan] val rows = new java.util.IdentityHashMap[LogicalPlan, IndexedSeq[InternalRow]]
-    private[DriverPlan] val tables = new java.util.IdentityHashMap[Join, Table]
-    private[DriverPlan] val fixed = new java.util.IdentityHashMap[LogicalPlan, java.lang.Boolean]
+    private val fixed = new java.util.IdentityHashMap[LogicalPlan, java.lang.Boolean]
     private[DriverPlan] def constant(p: LogicalPlan): Boolean =
       fixed.computeIfAbsent(p, _ => p.collectLeaves().forall {
         case ResidentScan(k, _, _) => k.isInstanceOf[DriverRows]
         case _ => true
       })
   }
-  private type Table = mutable.HashMap[IndexedSeq[Any], mutable.ArrayBuffer[InternalRow]]
 
   /** The rows of `plan`; `bind` maps placeholder keys to their rows.
     * Past `maxRows` rows, or rows of more than `maxBytes` estimated heap
@@ -150,17 +213,19 @@ object DriverPlan {
       case r: Range => r.start.until(r.end, r.step).map(v => InternalRow(v))
       case SubqueryAlias(_, child) => go(child)
       case ResolvedHint(child, _) => go(child)
+      case Project(list, child) if list == child.output => go(child)
       case Project(list, child) =>
-        val ex = prepare(list, child.output)
-        go(child).map(r => new GenericInternalRow(ex.map(_.eval(r)).toArray): InternalRow)
+        val ex = prepare(list, child.output).toArray
+        go(child).map(r => new GenericInternalRow(ex.map(_.eval(r))): InternalRow)
       case Filter(cond, child) =>
         val pred = prepare(Seq(cond), child.output).head
-        go(child).filter(r => pred.eval(r) == true)
+        copyPath(child).flatMap(_.slice(cond)).getOrElse(go(child)).filter(r => pred.eval(r) == true)
       case u: Union => u.children.flatMap(go).toIndexedSeq
       case Deduplicate(keys, child) if AttributeSet(keys) == child.outputSet =>
         distinct(go(child), child.schema)
       case Distinct(child) => distinct(go(child), child.schema)
-      case j: Join => join(j, go(j.left), go(j.right), cap(j), memo)
+      case j: Join =>
+        prefixJoin(j, go, cap(j)).getOrElse(join(j, go(j.left), go(j.right), cap(j)))
       case a: Aggregate => aggregate(a, go(a.child))
       case other => throw new Unsupported(other.nodeName)
     }
@@ -184,64 +249,46 @@ object DriverPlan {
       b
     }
 
+  /** The values of `r` (of column `types`) into `into` from `at`. */
+  private def fill(r: InternalRow, types: Array[DataType], into: Array[Any], at: Int): Unit = {
+    var i = 0
+    while (i < types.length) {
+      into(at + i) = if (r.isNullAt(i)) null else r.get(i, types(i))
+      i += 1
+    }
+  }
+
   // ————— keys: Spark's grouping/join identity —————
 
-  /** The value as a hash key, equal exactly when Spark groups the two
-    * values together: floats normalized, arrays and structs compared by
-    * content. Maps and collated strings are [[Unsupported]]. */
-  private def keyOf(v: Any, dt: DataType): Any = if (v == null) null else dt match {
-    // by bits: Scala's == on boxed doubles says NaN != NaN
-    case DoubleType => java.lang.Double.doubleToLongBits(normalize(v, dt).asInstanceOf[Double])
-    case FloatType => ("f", java.lang.Float.floatToIntBits(normalize(v, dt).asInstanceOf[Float]))
+  /** Grouping keys: `exprs` (bound, evaluable) over a row as an UnsafeRow
+    * of their float-normalized values — two keys are equal exactly when
+    * Spark groups the two rows together (its hash aggregate compares the
+    * same bytes). Maps and collated strings are [[Unsupported]]. */
+  final class Keys(exprs: Seq[Expression]) {
+    exprs.foreach(e => checkKey(e.dataType))
+    private val proj = UnsafeProjection.create(exprs.map(PlanBridge.normalizeFloats))
+    def apply(r: InternalRow): UnsafeRow = proj(r).copy()
+  }
+  object Keys {
+    /** Keys of whole rows of `schema`. */
+    def of(schema: StructType): Keys =
+      new Keys(schema.fields.indices.map(i => BoundReference(i, schema(i).dataType, nullable = true)))
+  }
+
+  private def checkKey(dt: DataType): Unit = dt match {
     case s: StringType if s.typeName != "string" => throw new Unsupported(s"collated $s key")
-    case BinaryType => v.asInstanceOf[Array[Byte]].toSeq
-    case ArrayType(et, _) =>
-      val a = v.asInstanceOf[ArrayData]
-      IndexedSeq.tabulate(a.numElements())(i => keyOf(if (a.isNullAt(i)) null else a.get(i, et), et))
-    case st: StructType =>
-      val r = v.asInstanceOf[InternalRow]
-      st.fields.indices.map(i => keyOf(if (r.isNullAt(i)) null else r.get(i, st(i).dataType), st(i).dataType))
+    case ArrayType(et, _) => checkKey(et)
+    case st: StructType => st.fields.foreach(f => checkKey(f.dataType))
     case _: MapType | _: UserDefinedType[_] | _: VariantType => throw new Unsupported(s"$dt key")
-    case _ => v
+    case _ =>
   }
 
-  /** `v` as Spark's grouping outputs it: -0.0 as 0.0 and every NaN as
-    * the one NaN, also inside arrays and structs. */
-  private def normalize(v: Any, dt: DataType): Any = if (v == null) null else dt match {
-    case DoubleType =>
-      val d = v.asInstanceOf[Double]; if (d.isNaN) Double.NaN else if (d == 0.0) 0.0 else d
-    case FloatType =>
-      val f = v.asInstanceOf[Float]; if (f.isNaN) Float.NaN else if (f == 0.0f) 0.0f else f
-    case ArrayType(et, _) if hasFloats(et) =>
-      val a = v.asInstanceOf[ArrayData]
-      new GenericArrayData(Array.tabulate[Any](a.numElements())(i =>
-        if (a.isNullAt(i)) null else normalize(a.get(i, et), et)))
-    case st: StructType if hasFloats(st) => normalizeRow(v.asInstanceOf[InternalRow], st)
-    case _ => v
-  }
-
-  private def hasFloats(dt: DataType): Boolean = dt match {
-    case DoubleType | FloatType => true
-    case ArrayType(et, _) => hasFloats(et)
-    case st: StructType => st.fields.exists(f => hasFloats(f.dataType))
-    case MapType(k, v, _) => hasFloats(k) || hasFloats(v)
-    case _ => false
-  }
-
-  private def normalizeRow(r: InternalRow, schema: StructType): InternalRow =
-    if (!hasFloats(schema)) r
-    else new GenericInternalRow(Array.tabulate[Any](schema.length)(i =>
-      if (r.isNullAt(i)) null else normalize(r.get(i, schema(i).dataType), schema(i).dataType)))
-
-  /** The key of a whole row (see [[keyOf]]). */
-  def rowKey(r: InternalRow, schema: StructType): IndexedSeq[Any] =
-    schema.fields.indices.map(i =>
-      keyOf(if (r.isNullAt(i)) null else r.get(i, schema(i).dataType), schema(i).dataType))
-
-  /** `dropDuplicates()`: the first row of each key, normalized. */
+  /** `dropDuplicates()`: the first row of each key, normalized (as the
+    * UnsafeRow that is its key). */
   def distinct(rows: IndexedSeq[InternalRow], schema: StructType): IndexedSeq[InternalRow] = {
-    val seen = mutable.HashSet.empty[IndexedSeq[Any]]
-    rows.filter(r => seen.add(rowKey(r, schema))).map(normalizeRow(_, schema))
+    val keys = Keys.of(schema)
+    val seen = new java.util.HashSet[UnsafeRow]
+    rows.iterator.map(keys(_)).filter(seen.add).toIndexedSeq
   }
 
   /** The meet fold of `rows` (cozo's meet aggregations, aggr.rs:1190-1206):
@@ -250,19 +297,22 @@ object DriverPlan {
     * non-NULL values under Spark's ordering, first-seen key order. */
   def meetFold(rows: Iterator[InternalRow], schema: StructType, keyIdx: Seq[Int],
                isMin: Int => Boolean): IndexedSeq[InternalRow] = {
+    val types = schema.map(_.dataType).toArray
+    val keys = new Keys(keyIdx.map(i => BoundReference(i, types(i), nullable = true)))
     val aggIdx = schema.indices.filterNot(keyIdx.contains)
-    val ords = aggIdx.map(i => TypeUtils.getInterpretedOrdering(schema(i).dataType))
-    val groups = mutable.LinkedHashMap.empty[IndexedSeq[Any], Array[Any]]
+    val ords = aggIdx.map(i => TypeUtils.getInterpretedOrdering(types(i)))
+    val groups = mutable.LinkedHashMap.empty[UnsafeRow, Array[Any]]
     rows.foreach { r =>
-      val vals = r.toSeq(schema)
-      val k = keyIdx.map(i => keyOf(vals(i), schema(i).dataType)).toIndexedSeq
+      val k = keys(r)
       groups.get(k) match {
         case None =>
-          groups(k) = Array.tabulate(schema.length)(i =>
-            if (keyIdx.contains(i)) normalize(vals(i), schema(i).dataType) else vals(i))
+          val acc = new Array[Any](types.length)
+          fill(r, types, acc, 0)
+          for ((i, j) <- keyIdx.zipWithIndex) acc(i) = if (k.isNullAt(j)) null else k.get(j, types(i))
+          groups(k) = acc
         case Some(acc) =>
           for ((i, ord) <- aggIdx.zip(ords)) {
-            val v = vals(i)
+            val v = if (r.isNullAt(i)) null else r.get(i, types(i))
             if (v != null && (acc(i) == null || {
               val c = ord.compare(v, acc(i)); if (isMin(i)) c < 0 else c > 0
             })) acc(i) = v
@@ -282,13 +332,160 @@ object DriverPlan {
     case other => other
   }
 
+  // ————— copies read in key order —————
+
+  /** Types whose sort order ties exactly the values Spark's `=` equates:
+    * the rows binding such a key value are one run of a sorted copy. */
+  private def runKey(dt: DataType): Boolean = dt match {
+    case s: StringType => s.typeName == "string"
+    case _: NumericType | BooleanType | BinaryType | DateType | TimestampType | TimestampNTZType => true
+    case _ => false
+  }
+
+  /** A relation copy with a sort key read through renames only (aliases,
+    * reorderings, dropped columns): column i of `out` is column
+    * `cols(i)` of `copy`. */
+  private final class CopyPath(val copy: DriverRows, val out: Seq[Attribute], val cols: Array[Int]) {
+    private val types = cols.map(copy.schema(_).dataType)
+    private val whole = cols.sameElements(copy.schema.indices)
+    /** Copy row `r`'s values in `out`'s layout, into `into` from `at`. */
+    def fill(r: InternalRow, into: Array[Any], at: Int): Unit = {
+      var i = 0
+      while (i < cols.length) {
+        into(at + i) = if (r.isNullAt(cols(i))) null else r.get(cols(i), types(i))
+        i += 1
+      }
+    }
+    def row(r: InternalRow): InternalRow =
+      if (whole) r else { val a = new Array[Any](cols.length); fill(r, a, 0); new GenericInternalRow(a) }
+
+    /** The copy column behind `e` when it is a bare attribute of `out`
+      * of a [[runKey]] type, else -1. */
+    def column(e: Expression): Int = e match {
+      case a: Attribute if runKey(a.dataType) =>
+        val i = out.indexWhere(_.exprId == a.exprId); if (i < 0) -1 else cols(i)
+      case _ => -1
+    }
+
+    /** For each leading sort-key column in turn, the first `binding` that
+      * binds it, up to the first key column none binds. */
+    def prefix[T](binding: Seq[(Int, T)]): IndexedSeq[T] =
+      copy.keyIdx.iterator.map(k => binding.collectFirst { case (`k`, t) => t })
+        .takeWhile(_.isDefined).map(_.get).toIndexedSeq
+
+    /** The rows `cond` may keep when its literal `=`/`<=>` conjuncts bind
+      * a leading prefix of the key: one run of the copy, in copy order
+      * (the filter itself still runs over them). None when they bind none. */
+    def slice(cond: Expression): Option[IndexedSeq[InternalRow]] = {
+      val lits = splitAnd(cond).flatMap {
+        case EqualTo(a, b) => Seq((a, b), (b, a))
+        case EqualNullSafe(a, b) => Seq((a, b), (b, a))
+        case _ => Nil
+      }.collect { case (a, v) if column(a) >= 0 && v.foldable && v.deterministic && v.references.isEmpty =>
+        (column(a), v)
+      }
+      val bound = prefix(lits)
+      Option.when(bound.nonEmpty) {
+        val (lo, hi) = copy.keyRange(bound.map(_.eval()).toArray)
+        copy.rows.slice(lo, hi).map(row)
+      }
+    }
+  }
+
+  private def copyPath(p: LogicalPlan): Option[CopyPath] = p match {
+    case ResidentScan(d: DriverRows, out, _) if d.keyIdx.nonEmpty =>
+      Some(new CopyPath(d, out, out.indices.toArray))
+    case SubqueryAlias(_, c) => copyPath(c).map(cp => new CopyPath(cp.copy, p.output, cp.cols))
+    case Project(list, c) => copyPath(c).flatMap { cp =>
+      val at = list.map {
+        case a: Attribute => c.output.indexWhere(_.exprId == a.exprId)
+        case Alias(a: Attribute, _) => c.output.indexWhere(_.exprId == a.exprId)
+        case _ => -1
+      }
+      Option.when(at.forall(_ >= 0))(new CopyPath(cp.copy, p.output, at.map(cp.cols).toArray))
+    }
+    case _ => None
+  }
+
   // ————— joins —————
 
-  /** A hash join: the table is built over the side that stays the same
-    * between evaluations (kept in `memo`), else over the smaller side;
-    * semi and anti joins build over the right. */
+  /** An inner equi-join whose one side is a [[CopyPath]] and whose keys
+    * bind a leading prefix of that copy's sort key: each row of the other
+    * side reads its run of the copy ([[DriverRows.keyRange]]) and the
+    * whole join condition decides each pair, so NULLs match only under
+    * `<=>`. The copy side is never materialized. Rows come in the order
+    * [[join]] emits them; None when the join has no such side. */
+  private def prefixJoin(j: Join, go: LogicalPlan => IndexedSeq[InternalRow],
+                         maxRows: Long): Option[IndexedSeq[InternalRow]] = {
+    if (j.joinType != Inner || j.condition.isEmpty) return None
+    val conjuncts = splitAnd(j.condition.get)
+    /** The copy side's path and the other side's expressions binding its key prefix. */
+    def keyed(copySide: LogicalPlan, other: LogicalPlan): Option[(CopyPath, IndexedSeq[Expression])] =
+      copyPath(copySide).flatMap { cp =>
+        val binding = conjuncts.flatMap {
+          case EqualTo(a, b) => Seq((a, b), (b, a))
+          case EqualNullSafe(a, b) => Seq((a, b), (b, a))
+          case _ => Nil
+        }.collect { case (a, e) if cp.column(a) >= 0 && e.references.subsetOf(other.outputSet) &&
+            e.dataType == a.dataType => (cp.column(a), e) }
+        Option(cp.prefix(binding)).filter(_.nonEmpty).map((cp, _))
+      }
+    val found = keyed(j.right, j.left).map((_, false)).orElse(keyed(j.left, j.right).map((_, true)))
+    found.map { case ((cp, keyEx), copyLeft) =>
+      val other = if (copyLeft) j.right else j.left
+      val probe = go(other)
+      val pk = prepare(keyEx, other.output).toArray
+      // the condition over (copy row, probe row) or (probe row, copy row)
+      val copyAttrs = DataTypeUtils.toAttributes(cp.copy.schema)
+      val sub = cp.out.zip(cp.cols).map { case (a, c) => a.exprId -> copyAttrs(c) }.toMap
+      val cond = j.condition.get.transform { case a: Attribute if sub.contains(a.exprId) => sub(a.exprId) }
+      val test = prepare(Seq(cond), if (copyLeft) copyAttrs ++ other.output else other.output ++ copyAttrs).head
+      val rows = cp.copy.rows
+      val joined = new JoinedRow
+      val pairs = mutable.ArrayBuilder.make[Long] // probe index << 32 | copy index
+      var n = 0L
+      val vs = new Array[Any](pk.length)
+      for (pi <- probe.indices) {
+        val p = probe(pi)
+        for (i <- pk.indices) vs(i) = pk(i).eval(p)
+        val (lo, hi) = cp.copy.keyRange(vs)
+        var ci = lo
+        while (ci < hi) {
+          if (test.eval(if (copyLeft) joined(rows(ci), p) else joined(p, rows(ci))) == true) {
+            pairs += (pi.toLong << 32 | ci)
+            n += 1
+            if (n > maxRows) throw new Unsupported(s"more than $maxRows rows")
+          }
+          ci += 1
+        }
+      }
+      // [[join]] walks the right side when it builds over the left (the
+      // smaller side), else the left; walking the copy lists its rows in
+      // copy order, each with its partners in probe order
+      val buildLeft = (if (copyLeft) rows.length else probe.length) <
+        (if (copyLeft) probe.length else rows.length)
+      val order = pairs.result()
+      if (copyLeft != buildLeft) { // copy-major: sort with the halves swapped
+        order.mapInPlace(java.lang.Long.rotateLeft(_, 32))
+        java.util.Arrays.sort(order)
+        order.mapInPlace(java.lang.Long.rotateLeft(_, 32))
+      }
+      val probeTypes = other.output.map(_.dataType).toArray
+      val width = cp.cols.length + probeTypes.length
+      order.toIndexedSeq.map { code =>
+        val (p, c) = (probe((code >>> 32).toInt), rows((code & 0xffffffffL).toInt))
+        val a = new Array[Any](width)
+        if (copyLeft) { cp.fill(c, a, 0); fill(p, probeTypes, a, cp.cols.length) }
+        else { fill(p, probeTypes, a, 0); cp.fill(c, a, probeTypes.length) }
+        new GenericInternalRow(a): InternalRow
+      }
+    }
+  }
+
+  /** A hash join over the smaller side; semi and anti joins build over
+    * the right. */
   private def join(j: Join, l: IndexedSeq[InternalRow], r: IndexedSeq[InternalRow],
-                   maxRows: Long, memo: Memo): IndexedSeq[InternalRow] = {
+                   maxRows: Long): IndexedSeq[InternalRow] = {
     if (!Seq(Inner, Cross, LeftSemi, LeftAnti).contains(j.joinType))
       throw new Unsupported(s"${j.joinType} join")
     val (lo, ro) = (j.left.outputSet, j.right.outputSet)
@@ -305,45 +502,41 @@ object DriverPlan {
     }
     val keys = keyed.flatten
     val residual = conjuncts.zip(keyed).collect { case (c, None) => c }.reduceOption(And)
-    val lk = prepare(keys.map(_._1), j.left.output)
-    val rk = prepare(keys.map(_._2), j.right.output)
-    val types = keys.map(_._1.dataType)
-    val nullSafe = keys.map(_._3)
-    val joinedOut = j.left.output ++ j.right.output
-    val res = residual.map(c => prepare(Seq(c), joinedOut).head)
-    def key(r: InternalRow, ex: IndexedSeq[Expression]): Option[IndexedSeq[Any]] = {
-      val vs = ex.indices.map(i => keyOf(ex(i).eval(r), types(i)))
-      if (vs.indices.exists(i => vs(i) == null && !nullSafe(i))) None else Some(vs)
+    val lk = new Keys(prepare(keys.map(_._1), j.left.output))
+    val rk = new Keys(prepare(keys.map(_._2), j.right.output))
+    val strict = keys.indices.filterNot(keys(_)._3)
+    val res = residual.map(c => prepare(Seq(c), j.left.output ++ j.right.output).head)
+    /** The key of `r`; null when a `=` key is NULL (it matches nothing). */
+    def key(r: InternalRow, ks: Keys): UnsafeRow = {
+      val k = ks(r); if (strict.exists(k.isNullAt)) null else k
     }
-    val inner = j.joinType == Inner || j.joinType == Cross
-    val (constL, constR) = if (memo == null) (false, false) else (memo.constant(j.left), memo.constant(j.right))
-    val buildLeft = inner && ((constL && !constR) || (constL == constR && l.length < r.length))
-    def build(rows: IndexedSeq[InternalRow], ex: IndexedSeq[Expression]): Table = {
-      val t: Table = mutable.HashMap.empty
-      rows.foreach(row => key(row, ex).foreach(k => t.getOrElseUpdate(k, mutable.ArrayBuffer.empty) += row))
-      t
+    val buildLeft = (j.joinType == Inner || j.joinType == Cross) && l.length < r.length
+    val table = new java.util.HashMap[UnsafeRow, mutable.ArrayBuffer[InternalRow]]
+    (if (buildLeft) l else r).foreach { row =>
+      val k = key(row, if (buildLeft) lk else rk)
+      if (k != null) table.computeIfAbsent(k, _ => mutable.ArrayBuffer.empty) += row
     }
-    val table =
-      if (buildLeft) { if (constL) memo.tables.computeIfAbsent(j, _ => build(l, lk)) else build(l, lk) }
-      else if (constR) memo.tables.computeIfAbsent(j, _ => build(r, rk))
-      else build(r, rk)
-    val (ls, rs) = (j.left.schema, j.right.schema)
-    def matches(a: InternalRow, b: InternalRow): Boolean = res.forall(_.eval(new JoinedRow(a, b)) == true)
-    /** Right rows matching left row `a` (a table over the right). */
-    def rightOf(a: InternalRow): Iterator[InternalRow] =
-      key(a, lk).flatMap(table.get).iterator.flatten.filter(matches(a, _))
+    val joined = new JoinedRow
+    def matches(a: InternalRow, b: InternalRow): Boolean = res.forall(_.eval(joined(a, b)) == true)
+    /** The build side's rows under `row`'s key. */
+    def partners(row: InternalRow, ks: Keys): Iterator[InternalRow] = {
+      val k = key(row, ks)
+      if (k == null) Iterator.empty else Option(table.get(k)).iterator.flatten
+    }
     j.joinType match {
-      case LeftSemi => l.filter(a => rightOf(a).hasNext)
-      case LeftAnti => l.filter(a => !rightOf(a).hasNext)
+      case LeftSemi => l.filter(a => partners(a, lk).exists(matches(a, _)))
+      case LeftAnti => l.filter(a => !partners(a, lk).exists(matches(a, _)))
       case _ =>
+        val (lt, rt) = (j.left.output.map(_.dataType).toArray, j.right.output.map(_.dataType).toArray)
         val out = mutable.ArrayBuffer.empty[InternalRow]
-        def emit(a: InternalRow, b: InternalRow): Unit = {
-          out += new GenericInternalRow((a.toSeq(ls) ++ b.toSeq(rs)).toArray)
+        def emit(a: InternalRow, b: InternalRow): Unit = if (matches(a, b)) {
+          val v = new Array[Any](lt.length + rt.length)
+          fill(a, lt, v, 0); fill(b, rt, v, lt.length)
+          out += new GenericInternalRow(v)
           if (out.length > maxRows) throw new Unsupported(s"more than $maxRows rows")
         }
-        if (buildLeft)
-          r.foreach(b => key(b, rk).flatMap(table.get).iterator.flatten.foreach(a => if (matches(a, b)) emit(a, b)))
-        else l.foreach(a => rightOf(a).foreach(emit(a, _)))
+        if (buildLeft) r.foreach(b => partners(b, rk).foreach(emit(_, b)))
+        else l.foreach(a => partners(a, lk).foreach(emit(a, _)))
         out.toIndexedSeq
     }
   }
@@ -361,16 +554,14 @@ object DriverPlan {
       case AggregateExpression(f @ (_: Min | _: Max), _, false, None, _) => f
       case other => throw new Unsupported(s"aggregate $other")
     }
-    val groupEx = prepare(a.groupingExpressions, a.child.output)
+    val groupKeys = new Keys(prepare(a.groupingExpressions, a.child.output))
     val valueEx = prepare(fns.map(_.children.head), a.child.output)
     val orderings = fns.map(f => TypeUtils.getInterpretedOrdering(f.children.head.dataType))
     val isMin = fns.map(_.isInstanceOf[Min])
-    val gTypes = a.groupingExpressions.map(_.dataType)
-    val groups = mutable.LinkedHashMap.empty[IndexedSeq[Any], (IndexedSeq[Any], Array[Any])]
+    val gTypes = a.groupingExpressions.map(_.dataType).toArray
+    val groups = mutable.LinkedHashMap.empty[UnsafeRow, Array[Any]]
     in.foreach { r =>
-      val g = groupEx.map(_.eval(r))
-      val (_, acc) = groups.getOrElseUpdate(g.indices.map(i => keyOf(g(i), gTypes(i))),
-        (g.indices.map(i => normalize(g(i), gTypes(i))), new Array[Any](fns.length)))
+      val acc = groups.getOrElseUpdate(groupKeys(r), new Array[Any](fns.length))
       for (i <- fns.indices) {
         val v = valueEx(i).eval(r)
         if (v != null && (acc(i) == null || {
@@ -379,9 +570,9 @@ object DriverPlan {
       }
     }
     if (groups.isEmpty && a.groupingExpressions.isEmpty)
-      groups(IndexedSeq.empty) = (IndexedSeq.empty, new Array[Any](fns.length))
+      groups(groupKeys(InternalRow.empty)) = new Array[Any](fns.length)
     // result expressions over (grouping values ++ aggregate values)
-    val nG = a.groupingExpressions.length
+    val nG = gTypes.length
     val result = a.aggregateExpressions.map { e =>
       val b = e.transformDown {
         case ae: AggregateExpression => BoundReference(nG + aggs.indexOf(ae), ae.dataType, nullable = true)
@@ -390,10 +581,13 @@ object DriverPlan {
           BoundReference(i, x.dataType, x.nullable)
       }
       prepare(Seq(b), Nil).head
-    }
-    groups.values.map { case (g, acc) =>
-      val row = new GenericInternalRow((g ++ acc).toArray)
-      new GenericInternalRow(result.map(_.eval(row)).toArray): InternalRow
+    }.toArray
+    groups.iterator.map { case (g, acc) =>
+      val v = new Array[Any](nG + acc.length)
+      fill(g, gTypes, v, 0)
+      System.arraycopy(acc, 0, v, nG, acc.length)
+      val row = new GenericInternalRow(v)
+      new GenericInternalRow(result.map(_.eval(row))): InternalRow
     }.toIndexedSeq
   }
 }

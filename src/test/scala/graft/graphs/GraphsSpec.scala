@@ -16,6 +16,31 @@ class GraphsSpec extends AnyFunSuite {
   def wEdges = Seq((1L, 2L, 1.0), (1L, 3L, 4.0), (2L, 3L, 1.0), (3L, 4L, 1.0), (2L, 4L, 5.0))
     .toDF("src", "dst", "weight")
 
+  test("LocalGraph.sorted orders edges as a stable sort by (src, dst) or (src, weight, dst)") {
+    val rng = new scala.util.Random(3)
+    for (weighted <- Seq(false, true)) {
+      // few nodes and weights: many equal (src, dst) and (src, weight) runs, -0.0 and NaN included
+      val m = 3000
+      val (src, dst) = (Array.fill(m)(rng.nextInt(40)), Array.fill(m)(rng.nextInt(40)))
+      val w = if (weighted) Array.fill(m)(Seq(0.0, -0.0, Double.NaN, 1.5, 2.5)(rng.nextInt(5))) else null
+      val g = new LocalGraph(org.apache.spark.sql.types.LongType, Array.tabulate[AnyRef](40)(i => Long.box(i.toLong)),
+        src, dst, w)
+      for (byWeight <- if (weighted) Seq(false, true) else Seq(false)) {
+        val cmp = (a: Int, b: Int) => {
+          val c = Integer.compare(src(a), src(b))
+          val cw = if (c == 0 && byWeight) java.lang.Double.compare(w(a), w(b)) else c
+          if (cw != 0) cw else Integer.compare(dst(a), dst(b))
+        }
+        val ix = Array.range(0, m).sortWith(cmp(_, _) < 0) // stable
+        val s = g.sorted(byWeight)
+        assert(s.src.sameElements(ix.map(src)) && s.dst.sameElements(ix.map(dst)), s"byWeight=$byWeight")
+        if (weighted) assert(s.w.map(java.lang.Double.doubleToRawLongBits)
+          .sameElements(ix.map(i => java.lang.Double.doubleToRawLongBits(w(i)))), s"byWeight=$byWeight")
+        assert(g.sorted(byWeight) eq s, "the sorted view is kept")
+      }
+    }
+  }
+
   test("minimumSpanningForest picks the light edges (Borůvka)") {
     val mst = Graphs.minimumSpanningForest(wEdges)
       .collect().map(r => (r.getLong(0), r.getLong(1), r.getDouble(2))).toSet

@@ -6,7 +6,8 @@ import org.apache.spark.sql.graftbridge.ListenerBridge
 import org.scalatest.funsuite.AnyFunSuite
 
 /** The per-version driver copy of a stored relation, read by the driver
-  * fixpoint and the graph fixed rules: built once per version, retired
+  * fixpoint, the graph fixed rules and non-recursive rules over copies:
+  * built once per version with one graph per edge projection, retired
   * by every change of the rows, and answering as the relation itself
   * does — checked against a db whose copies are all refused
   * (`DriverIndexBytes -> 0`, so every read runs on Spark). */
@@ -32,11 +33,24 @@ class RelationCopySpec extends AnyFunSuite {
   private def cc(rel: String) =
     s"""cc[n, c] <~ ConnectedComponents(*$rel[])
        |?[n, c] := cc[n, c]""".stripMargin
+  private def sssp(rel: String) =
+    s"""s[u] <- [[1]]
+       |?[start, node, cost] <~ ShortestPathDijkstra(*$rel[], s[])""".stripMargin
+  private def hop1(rel: String) = s"?[t] := *$rel{src: 2, dst: t}"
+  private def hop2(rel: String) =
+    s"""l1[t] := *$rel{src: 1, dst: t}
+       |?[t] := l1[f], *$rel{src: f, dst: t}""".stripMargin
 
-  /** reach and PageRank of `rel` (ranks rounded past float noise). */
-  private def answers(db: CozoDb, rel: String): (Set[Seq[Any]], Map[Any, Long]) = (
-    db.run(reach(rel)).collect().map(_.toSeq).toSet,
-    db.run(pageRank(rel)).collect().map(r => r.get(0) -> math.round(r.getDouble(1) * 1e9)).toMap)
+  private def rows(db: CozoDb, q: String): Set[Seq[Any]] = db.run(q).collect().map(_.toSeq).toSet
+
+  /** reach, PageRank (ranks rounded past float noise), CC, SSSP and the
+    * two hop rules over `rel`. */
+  private def answers(db: CozoDb, rel: String): Map[String, Any] = Map(
+    "reach" -> rows(db, reach(rel)),
+    "pagerank" -> db.run(pageRank(rel)).collect().map(r => r.get(0) -> math.round(r.getDouble(1) * 1e9)).toMap,
+    "cc" -> rows(db, cc(rel)), "sssp" -> rows(db, sssp(rel)),
+    "hop1" -> rows(db, hop1(rel)), "hop2" -> rows(db, hop2(rel)))
+  private def reached(db: CozoDb, rel: String): Set[Seq[Any]] = rows(db, reach(rel))
 
   test("the default db builds the edges copy once across repeated reach, PageRank and CC reads") {
     val db = mkDb()
@@ -46,6 +60,67 @@ class RelationCopySpec extends AnyFunSuite {
     assert(db.relationCopyBuilds == 1)
     assert(lines.count(_.contains("op=relation_copy")) == 1, lines)
     assert(lines.count(_.contains("op=fixpoint")) == 2, lines)
+  }
+
+  test("one graph per copy version and edge projection across repeated PageRank, CC and ShortestPathDijkstra") {
+    val db = mkDb()
+    val graphs = Seq(pageRank("edges"), cc("edges"), sssp("edges"))
+    val first = graphs.map(q => rows(db, q))
+    val builds = db.localGraphBuilds
+    // PageRank and the unit-weight SSSP (a BFS) read the distinct edges, CC all of them
+    assert(builds == 2)
+    val (_, lines) = KneeLog.capture(for (_ <- 1 to 2) assert(graphs.map(q => rows(db, q)) == first))
+    assert(db.localGraphBuilds == builds, "no graph is rebuilt while the copy is unchanged")
+    // a cached graph still logs its knee decision per op, with its edge count
+    assert(lines.count(_.startsWith("graft.knee op=pageRank n=5 ")) == 2, lines)
+    assert(lines.count(_.startsWith("graft.knee op=connectedComponents n=5 ")) == 2, lines)
+    assert(lines.count(_.startsWith("graft.knee op=bfs n=5 ")) == 2, lines)
+    db.run("?[src, dst] <- [[6, 7]] :put edges {src, dst}").collect()
+    graphs.foreach(q => rows(db, q))
+    assert(db.localGraphBuilds == 2 * builds, "a new version builds its graphs once")
+  }
+
+  test("a graph that would pass the copies' shared budget is built per op and not kept") {
+    val db = mkDb()
+    val copy = db.relationCopy("edges").get
+    Knee.withLimits(Knee.DriverIndexBytes -> copy.heldBytes) {
+      for (_ <- 1 to 2) db.run(pageRank("edges")).collect()
+    }
+    assert(db.localGraphBuilds == 2 && copy.heldBytes == copy.bytes)
+    for (_ <- 1 to 2) db.run(pageRank("edges")).collect()
+    assert(db.localGraphBuilds == 3 && copy.heldBytes > copy.bytes)
+  }
+
+  test("once the copy is held, the hop rules run no Spark job and answer as the relation does") {
+    val db = mkDb()
+    val pinned = Knee.withLimits(Knee.DriverIndexBytes -> 0L)(mkDb())
+    db.run(reach("edges")).collect() // the copy is built by a reader that probes for it
+    for (q <- Seq(hop1("edges"), hop2("edges"))) {
+      var got = Set.empty[Seq[Any]]
+      val counts = ListenerBridge.measure(spark.sparkContext, "relation-copy-hops") { got = rows(db, q) }
+      assert(counts.jobs == 0, s"$q: $counts")
+      assert(got == Knee.withLimits(Knee.DriverIndexBytes -> 0L)(rows(pinned, q)), q)
+    }
+    assert(rows(db, hop1("edges")) == Set(Seq(3L)) && rows(db, hop2("edges")) == Set(Seq(3L)))
+  }
+
+  test("a rule over copies whose unused binding overflows ends as the db without copies ends") {
+    val overflow = "?[a, b] := *chain[a, b], x = 9223372036854775807 + a"
+    val registrations: Seq[(String, () => org.apache.spark.sql.DataFrame)] = Seq(
+      "local rows" -> (() => (1 until 12).map(i => (i.toLong, i.toLong + 1)).toDF("fr", "to")),
+      "spark.range" -> (() => spark.range(1, 12).selectExpr("id AS fr", "id + 1 AS to")))
+    for ((how, chain) <- registrations) {
+      def outcome(db: CozoDb) = scala.util.Try(rows(db, overflow)).toEither.left.map(_ => "error")
+      val db = new CozoDb(spark)
+      db.registerTable("chain", chain(), Seq("fr", "to"))
+      assert(db.relationCopy("chain").isDefined)
+      val want = Knee.withLimits(Knee.DriverIndexBytes -> 0L) {
+        val pinned = new CozoDb(spark)
+        pinned.registerTable("chain", chain(), Seq("fr", "to"))
+        outcome(pinned)
+      }
+      assert(outcome(db) == want, how)
+    }
   }
 
   test("after :put/:rm, ::rename, ::remove and an aborted write, reach and PageRank equal a db without copies") {
@@ -63,9 +138,9 @@ class RelationCopySpec extends AnyFunSuite {
     both("edges")(_ => ())
     val builds = db.relationCopyBuilds
     both("edges")(_.run("?[src, dst] <- [[3, 5], [6, 1]] :put edges {src, dst}").collect())
-    assert(answers(db, "edges")._1.contains(Seq(1L, 6L)), "the put reached the copy")
+    assert(reached(db, "edges").contains(Seq(1L, 6L)), "the put reached the copy")
     both("edges")(_.run("?[src, dst] <- [[2, 3]] :rm edges {src, dst}").collect())
-    assert(!answers(db, "edges")._1.contains(Seq(1L, 4L)), "the rm reached the copy")
+    assert(!reached(db, "edges").contains(Seq(1L, 4L)), "the rm reached the copy")
     both("moved")(_.run("::rename edges moved").collect())
     intercept[Exception](db.run(reach("edges")).collect())
     both("moved") { d =>
@@ -73,12 +148,12 @@ class RelationCopySpec extends AnyFunSuite {
       tx.run("?[src, dst] <- [[1, 9]] :put moved {src, dst}").collect()
       tx.abort()
     }
-    assert(!answers(db, "moved")._1.contains(Seq(1L, 9L)), "the aborted put left the copy")
+    assert(!reached(db, "moved").contains(Seq(1L, 9L)), "the aborted put left the copy")
     both("edges") { d =>
       d.run("::remove moved").collect()
       d.registerTable("edges", Seq((1L, 7L), (7L, 8L)).toDF("src", "dst"), Seq("src", "dst"))
     }
-    assert(answers(db, "edges")._1 == Set(Seq(1L, 1L), Seq(1L, 7L), Seq(1L, 8L)))
+    assert(reached(db, "edges") == Set(Seq(1L, 1L), Seq(1L, 7L), Seq(1L, 8L)))
     // one copy per version read: put, rm, rename, abort, re-register
     assert(db.relationCopyBuilds == builds + 5)
     assert(pinned.relationCopyBuilds == 0)
