@@ -4,8 +4,8 @@ import graft.plan._
 import Ast._
 import graft.operators.Mutations
 import org.apache.spark.sql.graftbridge
-import org.apache.spark.sql.catalyst.InternalRow
-import org.apache.spark.sql.catalyst.expressions.{Ascending, BoundReference, InterpretedOrdering, SortOrder, UnsafeRow}
+import org.apache.spark.sql.catalyst.{CatalystTypeConverters, InternalRow}
+import org.apache.spark.sql.catalyst.expressions.{Ascending, BoundReference, InterpretedOrdering, SortOrder, UnsafeProjection, UnsafeRow}
 import org.apache.spark.sql.{Column, DataFrame, Row, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types._
@@ -635,9 +635,11 @@ class CozoDb(val spark: SparkSession) {
         // compacted artifact
         overlayFolds += records.values.count(_.overlay.isDefined)
         records.mapValuesInPlace((_, r) => r.copy(view = r.view.ckpt(), overlay = None))
+        // relation copies and their refusals are measured again over
+        // the compacted base
         indexCacheLock.synchronized {
           indexArtifacts.filterInPlace { case (_, (_, a)) =>
-            !a.isInstanceOf[DistFts] && !a.isInstanceOf[LshBands] }
+            !a.isInstanceOf[DistFts] && !a.isInstanceOf[LshBands] && !a.isInstanceOf[RelationCopy] }
         }
         Seq(Tuple1("ok")).toDF("status")
       case "running" =>
@@ -932,22 +934,25 @@ class CozoDb(val spark: SparkSession) {
     * are summed on the executors first, so a refused relation ships no
     * row; an admitted one is fetched in one collect. Copies of an older
     * version no reader can reach are dropped before a probe. The copy
-    * is cached in [[indexArtifacts]] under the relation's name, so a
-    * write, `::rename`, removal or an aborted transaction retires it
-    * like an index artifact. A refusal is cached too: an over-gate
-    * relation is probed once per version. The driver fixpoint, the
-    * graph fixed rules and non-recursive rules whose stored atoms all
-    * have copies read it on the driver ([[graft.plan.DriverPlan]], in
-    * key order where a join or a filter binds a key prefix); a graph
-    * built over it is kept with it ([[chargeCopy]]). Spark plans a
-    * read of the copy as the relation's own view. */
+    * is cached in [[indexArtifacts]] under the relation's name. A row
+    * write the overlay absorbs patches it to the new version
+    * ([[patchCopy]]); a fold, `::compact`, re-registration, `::rename`,
+    * removal or an aborted transaction retires it like an index
+    * artifact. A refusal is cached too, and stands across overlay
+    * writes: an over-gate relation is probed once per base. The driver
+    * fixpoint, the graph fixed rules and non-recursive rules over
+    * copies ([[overCopies]]) read it on the driver
+    * ([[graft.plan.DriverPlan]], in key order where a join or a filter
+    * binds a key prefix); a graph built over it is kept with it
+    * ([[chargeCopy]]). Spark plans a read of the copy as the relation's
+    * own view. */
   private[lang] def relationCopy(rel: String): Option[DriverRows] = indexCacheLock.synchronized {
     val r = records.getOrElse(rel, return None)
     cachedAt(rel, r.version) match {
       case Some(RelationCopy(rows)) => rows
       case _ =>
-        indexArtifacts.filterInPlace { case (t, (v, a)) =>
-          !a.isInstanceOf[RelationCopy] || (t != rel && records.get(t).exists(_.version == v)) }
+        indexArtifacts.remove(rel)
+        dropStaleCopies()
         val bytes = graftbridge.PlanBridge.internalBytes(r.view)
         val copy = Option.when(Knee.gate("relation_copy", heldCopyBytes + bytes, Knee.DriverIndexBytes)) {
           val schema = r.view.schema
@@ -971,6 +976,65 @@ class CozoDb(val spark: SparkSession) {
   /** Heap bytes of the copies held and of what is kept with them. */
   private def heldCopyBytes: Long =
     indexArtifacts.values.collect { case (_, RelationCopy(Some(c))) => c.heldBytes }.sum
+
+  /** Drop the copies (and refusals) of a version no reader can reach. */
+  private def dropStaleCopies(): Unit = indexArtifacts.filterInPlace { case (t, (v, a)) =>
+    !a.isInstanceOf[RelationCopy] || records.get(t).exists(_.version == v) }
+
+  private[lang] var relationCopyPatches = 0 // copies patched by a row write, for tests
+
+  /** Patch the copy of `rel` for a row write its overlay absorbed, which
+    * moved the relation from version `prev` to `cur`: `written` pairs
+    * each written key (an overlay key) with its live row in the
+    * relation's column order, None for a removed key. A copy stamped
+    * `prev` becomes one stamped `cur`, each written key's run replaced
+    * by its row ([[DriverRows.patched]]); no job runs. The patched copy
+    * is gated on the copies' shared budget again (logged as
+    * `op=copy_patch`) and cached as a refusal when it no longer fits;
+    * what was kept with the old copy is not carried over. A refusal
+    * stamped `prev` is re-stamped. Anything else — no copy or a stale
+    * one — is left to retire. */
+  private def patchCopy(rel: String, prev: Long, cur: Long,
+                        written: Seq[(Seq[Any], Option[Row])]): Unit = indexCacheLock.synchronized {
+    cachedAt(rel, prev) match {
+      case Some(RelationCopy(None)) => restampCopy(rel, prev, cur)
+      case Some(RelationCopy(Some(c))) =>
+        // the written rows have the copy's columns and types (those of
+        // the view it was built from); any of them may now be NULL
+        val schema = DriverPlan.nullable(c.schema)
+        val toRow = CatalystTypeConverters.createToCatalystConverter(schema)
+        val unsafe = UnsafeProjection.create(schema)
+        val writes = written.toMap.toSeq.map { case (k, row) =>
+          (k.map(CatalystTypeConverters.convertToCatalyst).toArray,
+            row.map(r => unsafe(toRow(r).asInstanceOf[InternalRow]).copy(): InternalRow))
+        }
+        val next = c.patched(schema, writes)
+        indexArtifacts.remove(rel)
+        dropStaleCopies()
+        val fits = Knee.gate("copy_patch", heldCopyBytes + next.bytes, Knee.DriverIndexBytes)
+        indexArtifacts(rel) = (cur, RelationCopy(Option.when(fits)(next)))
+        if (fits) relationCopyPatches += 1
+      case _ => ()
+    }
+  }
+
+  /** Re-stamp the copy or refusal of `rel` at version `prev` as `cur`:
+    * `rel` went from one to the other with its rows unchanged. */
+  private def restampCopy(rel: String, prev: Long, cur: Long): Unit = indexCacheLock.synchronized {
+    cachedAt(rel, prev).collect { case c: RelationCopy => indexArtifacts(rel) = (cur, c) }
+  }
+
+  /** The rows the held copy of `rel` at version `ver` has under each of
+    * `keys` (overlay keys), as external rows; None without such a copy.
+    * Runs no job. */
+  private def copyRows(rel: String, ver: Long, keys: Seq[Seq[Any]]): Option[Map[Seq[Any], Seq[Row]]] =
+    indexCacheLock.synchronized(cachedAt(rel, ver)).collect { case RelationCopy(Some(c)) =>
+      val toRow = CatalystTypeConverters.createToScalaConverter(c.schema)
+      keys.map { k =>
+        val (lo, hi) = c.keyRange(k.map(CatalystTypeConverters.convertToCatalyst).toArray)
+        k -> (lo until hi).map(i => toRow(c.rows(i)).asInstanceOf[Row])
+      }.toMap
+    }
 
   /** Whether a graph of `bytes` built over a copy is kept with it: when
     * the copies with what they keep still fit [[Knee.DriverIndexBytes]]. */
@@ -2021,26 +2085,29 @@ class CozoDb(val spark: SparkSession) {
       .map(rows => DriverPlan.frame(spark, new DriverRows(df.schema, rows)))
 
   /** A non-recursive rule evaluated on the driver over relation copies,
-    * when every stored atom of its clauses has a copy held at its
-    * relation's current version (none is probed or fetched here) and no
-    * atom reads a validity or a search index: the rule compiled over
-    * those copies and evaluated by [[DriverPlan.localRows]], whose prefix
-    * joins and key slices read each copy in key order — a read by key
-    * runs no job. Rule atoms are read as they were evaluated. None when
-    * that does not apply, when the driver declines, or when compiling
-    * or evaluating raises: the caller then compiles the rule over the
+    * when no atom reads a validity or a search index and every stored
+    * atom reads a copy: one held at its relation's current version, or
+    * — for a relation some key-anchored atom reads ([[anchored]]) while
+    * every rule atom reads local rows — one [[relationCopy]] probes and
+    * fetches. The rule is compiled over those copies and
+    * evaluated by [[DriverPlan.localRows]], whose prefix joins and key
+    * slices read each copy in key order — a read by key runs no job.
+    * Rule atoms are read as they were evaluated. None when that does
+    * not apply, when the driver declines, or when compiling or
+    * evaluating raises: the caller then compiles the rule over the
     * views, as Spark must see it (Spark may never raise what the driver
     * raised, or raise it itself). */
   private def overCopies(defs: Seq[RuleDef], resolve: String => Option[DataFrame],
                          params: Map[String, Any]): Option[DataFrame] = {
     val horn = defs.collect { case h: HornClause => h }
     val stored = mutable.Set.empty[String]
+    val rules = mutable.Set.empty[String]
     var fits = horn.length == defs.length &&
       horn.forall(_.head.flatMap(_.aggr).forall(a => a == "min" || a == "max"))
     def visit(a: Atom): Unit = a match {
       case RelApply(n, _, true, None) => stored += n
       case NamedApply(n, _, None) => stored += n
-      case RelApply(_, _, false, _) =>
+      case RelApply(n, _, false, None) => rules += n
       case _: RelApply | _: NamedApply | _: SearchApply => fits = false
       case Neg(inner) => visit(inner)
       case Or(alts) => alts.flatten.foreach(visit)
@@ -2048,10 +2115,54 @@ class CozoDb(val spark: SparkSession) {
     }
     horn.foreach(_.body.foreach(visit))
     if (!fits || stored.isEmpty) return None
-    val copies = stored.toSeq.flatMap(n => heldCopy(n).map(n -> _)).toMap
+    val held = stored.toSeq.flatMap(n => heldCopy(n).map(n -> _)).toMap
+    val missing = stored.toSet -- held.keySet
+    // copies are built only where the driver can then evaluate the rule
+    lazy val localRules = rules.filter(n => resolve(n).forall(isLocal))
+    val build =
+      if (missing.isEmpty || localRules.size < rules.size) Set.empty[String]
+      else horn.flatMap(h => anchored(h.body, localRules, params)).toSet & missing
+    // an unanchored atom over a relation without a copy: Spark reads it
+    if ((missing -- build).nonEmpty) return None
+    val copies = held ++ build.flatMap(n => relationCopy(n).map(n -> _))
     if (copies.size < stored.size) None
     else try evalRule(defs, resolve, params, copies).flatMap(local)
     catch { case NonFatal(_) => None }
+  }
+
+  /** The relations of the key-anchored stored atoms of a clause body: an
+    * atom is key-anchored when its relation's leading key column is
+    * bound by a literal, a `$param`, or a variable of a rule atom over
+    * `localRules` or of another key-anchored atom — cozo's point lookups
+    * and prefix-join chains over its key-sorted store (ra.rs:1259-1395).
+    * Only top-level atoms anchor; full scans and joins between
+    * unanchored atoms are not anchored. */
+  private def anchored(body: Seq[Atom], localRules: collection.Set[String],
+                       params: Map[String, Any]): Set[String] = {
+    def vars(es: Seq[Expr]): Seq[String] = es.collect { case V(v) if v != "_" => v }
+    val bound = mutable.Set.empty[String]
+    body.foreach { case RelApply(n, args, false, None) if localRules(n) => bound ++= vars(args); case _ => }
+    // each stored atom's relation, leading key expression and variables
+    val atoms = body.collect {
+      case RelApply(n, args, true, None) =>
+        (n, records.get(n).flatMap(r => args.lift(r.view.columns.indexOf(r.keys.head))), vars(args))
+      case NamedApply(n, pairs, None) =>
+        val es = pairs.map { case (f, e) => f -> e.getOrElse(V(f)) }
+        (n, records.get(n).flatMap(r => es.collectFirst { case (f, e) if f == r.keys.head => e }),
+          vars(es.map(_._2)))
+    }
+    val found = mutable.Set.empty[Int]
+    var grew = true
+    while (grew) {
+      grew = false
+      for (((_, lead, vs), i) <- atoms.zipWithIndex if !found(i) && lead.exists {
+        case Lit(_) => true
+        case Param(p) => params.contains(p)
+        case V(v) => bound(v)
+        case _ => false
+      }) { found += i; bound ++= vs; grew = true }
+    }
+    found.map(atoms(_)._1).toSet
   }
 
   /** Evaluate one rule (all its clauses). Aggregation semantics follow
@@ -2853,7 +2964,7 @@ class CozoDb(val spark: SparkSession) {
         // callbacks (stored.rs:714; an immutable plan over the view
         // before the write)
         val old = Mutations.keyFilter(relation(rel), delta, meta.keys, "left_semi")
-        if (!(overlayable && local.isDefined && overlayWrite(op, rel, delta))) {
+        if (!(overlayable && local.isDefined && overlayWrite(op, rel, delta, prevVersion, thisVersion))) {
           val cur = relation(rel)
           val next = (op match {
             case "put" => Mutations.put(cur, delta, meta.keys)
@@ -2938,15 +3049,18 @@ class CozoDb(val spark: SparkSession) {
     Some(df.limit(max + 1).collect().toSeq).filter(_.length <= max)
   }
 
-  /** Apply a row write to `rel`'s write overlay. `delta` is driver-local.
-    * put and rm run no job; insert, delete and update collect the base
-    * rows of the keys the overlay does not hold ([[overlayMatch]], one
-    * job) to check existence or fetch the old rows. Raises the op's
-    * errors with the state unchanged. Returns false — the caller folds
-    * — when the write would change a column type, holds two rows for
-    * one key, has a key the overlay cannot hold, takes the overlay past
-    * [[Knee.PatchKeys]] keys, or probes a key the base holds twice. */
-  private def overlayWrite(op: String, rel: String, delta: DataFrame): Boolean = {
+  /** Apply a row write to `rel`'s write overlay, which moves it from
+    * version `prevVer` to `thisVer`. `delta` is driver-local. put and rm
+    * run no job; insert, delete and update read the rows of the keys the
+    * overlay does not hold to check existence or fetch the old rows:
+    * from the copy held at `prevVer` by key range, no job, else from the
+    * base ([[overlayMatch]], one job). The written keys then patch that
+    * copy ([[patchCopy]]). Raises the op's errors with the rows
+    * unchanged. Returns false — the caller folds — when the write would
+    * change a column type, holds two rows for one key, has a key the
+    * overlay cannot hold, takes the overlay past [[Knee.PatchKeys]]
+    * keys, or probes a key the base holds twice. */
+  private def overlayWrite(op: String, rel: String, delta: DataFrame, prevVer: Long, thisVer: Long): Boolean = {
     val r = stored(rel)
     val keys = r.keys
     val cur = relation(rel)
@@ -2985,15 +3099,21 @@ class CozoDb(val spark: SparkSession) {
     val unknown = deltaKeys.distinct.filterNot(ov.rows.contains)
     val baseRows: Map[Seq[Any], Row] =
       if (op == "put" || op == "rm" || unknown.isEmpty) Map.empty
-      else {
-        val got = overlayMatch(ov.base, keys, unknown, hit = true).collect().toSeq
-        val byKey = got.flatMap(r => overlayKey(keys.map(r.getAs[Any](_)), keyTypes).map(_ -> r)).toMap
-        // more rows than keys: the base holds a key twice — fold
-        if (got.length > unknown.length || byKey.size != got.length) return false
-        byKey
+      else copyRows(rel, prevVer, unknown) match {
+        case Some(runs) =>
+          // a run of two rows: the base holds a key twice — fold
+          if (runs.values.exists(_.length > 1)) return false
+          runs.collect { case (k, Seq(r)) => k -> r }
+        case None =>
+          val got = overlayMatch(ov.base, keys, unknown, hit = true).collect().toSeq
+          val byKey = got.flatMap(r => overlayKey(keys.map(r.getAs[Any](_)), keyTypes).map(_ -> r)).toMap
+          // more rows than keys: the base holds a key twice — fold
+          if (got.length > unknown.length || byKey.size != got.length) return false
+          byKey
       }
     def current(k: Seq[Any]): Option[Row] = ov.rows.getOrElse(k, baseRows.get(k))
-    val written: Seq[(Seq[Any], Option[Row])] = op match {
+    // a failed write leaves the rows, and so the copy, as they were
+    val written: Seq[(Seq[Any], Option[Row])] = try op match {
       case "put" => deltaKeys.zip(typed.map(Some(_)))
       case "rm" => deltaKeys.map(_ -> None)
       case "insert" =>
@@ -3013,9 +3133,10 @@ class CozoDb(val spark: SparkSession) {
           at.foreach { case (j, c) => vs(j) = r.getAs[Any](c) }
           k -> Some(new org.apache.spark.sql.catalyst.expressions.GenericRowWithSchema(vs, schema))
         }
-    }
+    } catch { case e: IllegalStateException => restampCopy(rel, prevVer, thisVer); throw e }
     val next = Overlay(ov.base, ov.rows ++ written)
     update(rel)(_.copy(overlay = Some(next), view = overlayView(keys, next)))
+    patchCopy(rel, prevVer, thisVer, written)
     overlayWrites += 1
     true
   }

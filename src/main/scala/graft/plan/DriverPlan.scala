@@ -23,13 +23,14 @@ import scala.collection.mutable
   * each one's heap bytes, admits them. */
 final class DriverRows(val schema: StructType, val rows: IndexedSeq[InternalRow],
                        val keyIdx: IndexedSeq[Int] = IndexedSeq.empty,
-                       charge: Long => Boolean = _ => false) {
+                       charge: Long => Boolean = _ => false, knownBytes: Long = -1L) {
   override def toString: String = s"DriverRows(${rows.length} rows)"
   /** Heap bytes of the rows as UnsafeRows (estimated for other rows). */
-  lazy val bytes: Long = rows.iterator.map {
+  lazy val bytes: Long = if (knownBytes >= 0) knownBytes else rows.iterator.map(rowBytes).sum
+  private def rowBytes(r: InternalRow): Long = r match {
     case u: UnsafeRow => u.getSizeInBytes.toLong
     case _ => DriverPlan.minRowBytes(schema)
-  }.sum
+  }
 
   private val kept = new java.util.concurrent.ConcurrentHashMap[Any, AnyRef]
   // builds lock this, not the row set: `charge` takes the owner's lock,
@@ -57,6 +58,10 @@ final class DriverRows(val schema: StructType, val rows: IndexedSeq[InternalRow]
   def keptAs[T <: AnyRef](key: Any): Option[T] = Option(kept.get(key)).map(_.asInstanceOf[T])
 
   private lazy val keyOrder = keyIdx.map(i => TypeUtils.getInterpretedOrdering(schema(i).dataType))
+  /** Key column i's values `x` and `y` compared under the sort order (NULLs first). */
+  private def cmpKey(i: Int, x: Any, y: Any): Int =
+    if (x == null) { if (y == null) 0 else -1 } else if (y == null) 1 else keyOrder(i).compare(x, y)
+
   /** The run `[lo, hi)` of rows whose first `vs.length` key columns
     * equal `vs` (NULL matching NULL) under the sort order. */
   def keyRange(vs: Array[Any]): (Int, Int) = {
@@ -64,9 +69,7 @@ final class DriverRows(val schema: StructType, val rows: IndexedSeq[InternalRow]
       var i = 0; var c = 0
       while (c == 0 && i < vs.length) {
         val k = keyIdx(i)
-        val x = if (r.isNullAt(k)) null else r.get(k, schema(k).dataType)
-        c = if (x == null) { if (vs(i) == null) 0 else -1 }
-            else if (vs(i) == null) 1 else keyOrder(i).compare(x, vs(i))
+        c = cmpKey(i, if (r.isNullAt(k)) null else r.get(k, schema(k).dataType), vs(i))
         i += 1
       }
       c
@@ -81,6 +84,32 @@ final class DriverRows(val schema: StructType, val rows: IndexedSeq[InternalRow]
       lo
     }
     (bound(past = false), bound(past = true))
+  }
+
+  /** These rows, read as `schema` (the same columns and types), with the
+    * run of each key in `writes` — its values for every sort-key column,
+    * keys distinct — replaced by its row, or removed for None: one merge
+    * pass in key order, O(rows + writes log writes). Nothing kept with
+    * these rows goes with the result. */
+  def patched(schema: StructType, writes: Seq[(Array[Any], Option[InternalRow])]): DriverRows = {
+    val runs = writes.sortWith { case ((a, _), (b, _)) =>
+      var i = 0; var c = 0
+      while (c == 0 && i < a.length) { c = cmpKey(i, a(i), b(i)); i += 1 }
+      c < 0
+    }.map { case (k, row) => (keyRange(k), row) }
+    val src = rows.toArray[InternalRow]
+    val out = new Array[InternalRow](
+      src.length + runs.map { case ((lo, hi), row) => row.size - (hi - lo) }.sum)
+    var n = 0; var at = 0
+    var held = bytes
+    def keep(until: Int): Unit = { System.arraycopy(src, at, out, n, until - at); n += until - at; at = until }
+    for (((lo, hi), row) <- runs) {
+      keep(lo)
+      while (at < hi) { held -= rowBytes(src(at)); at += 1 }
+      row.foreach { r => out(n) = r; n += 1; held += rowBytes(r) }
+    }
+    keep(src.length)
+    new DriverRows(schema, scala.collection.immutable.ArraySeq.unsafeWrapArray(out), keyIdx, charge, held)
   }
 }
 

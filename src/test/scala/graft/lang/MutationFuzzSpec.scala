@@ -16,7 +16,9 @@ import org.scalatest.funsuite.AnyFunSuite
   * The model runs against both write paths: the default bound (small
   * writes go to the relation's write overlay), a bound of 0 (every
   * write folds into the base) and a bound of 3 with longer chains, so
-  * overlays fill and fold mid-sequence.
+  * overlays fill and fold mid-sequence. After every op, each key of the
+  * pool is also read by key: such a read builds the relation's driver
+  * copy, so later writes patch that copy (or retire it as they fold).
   */
 class MutationFuzzSpec extends AnyFunSuite {
   lazy val spark = SparkFixture.spark
@@ -37,6 +39,7 @@ class MutationFuzzSpec extends AnyFunSuite {
       db.run(s"?[k, a, b] <- [[0, 0, 0]] :create m$seed {k => a, b}")
       val model = scala.collection.mutable.Map(Option(0L) -> ((0L, 0L)))
       val log = scala.collection.mutable.ArrayBuffer.empty[String]
+      val pool = None +: (0L until 6L).map(Option(_))
       for (step <- 0 until steps) {
         val k = Option(rnd.nextInt(7).toLong).filter(_ < 6)
         val kl = k.fold("null")(_.toString)
@@ -85,6 +88,14 @@ class MutationFuzzSpec extends AnyFunSuite {
           .map(r => Option(r.get(0)).map(_.asInstanceOf[Long]) -> ((r.getLong(1), r.getLong(2))))
         if (got.length != got.toMap.size || got.toMap != model.toMap) {
           failures += s"seed $seed step $step: state diverged\n  got:   ${got.toSeq}\n  model: ${model.toMap}\n  ${log.mkString("\n  ")}"
+        }
+        // a read by key: the first builds the relation's copy, and each
+        // later write patches it (or, when it folds, retires it)
+        for (key <- pool) {
+          val at = db.run(s"?[a, b] := *m$seed{k: ${key.fold("null")(_.toString)}, a, b}").collect()
+            .map(r => (r.getLong(0), r.getLong(1))).toSeq
+          if (at != model.get(key).toSeq)
+            failures += s"seed $seed step $step: read of key $key diverged\n  got:   $at\n  model: ${model.get(key)}\n  ${log.mkString("\n  ")}"
         }
       }
     }

@@ -106,20 +106,23 @@ class RelationCopySpec extends AnyFunSuite {
 
   test("a rule over copies whose unused binding overflows ends as the db without copies ends") {
     val overflow = "?[a, b] := *chain[a, b], x = 9223372036854775807 + a"
+    // key-anchored: the read builds the copy it reads
+    val anchoredOverflow = "?[b] := *chain{fr: 3, to: b}, x = 9223372036854775807 + b"
     val registrations: Seq[(String, () => org.apache.spark.sql.DataFrame)] = Seq(
       "local rows" -> (() => (1 until 12).map(i => (i.toLong, i.toLong + 1)).toDF("fr", "to")),
       "spark.range" -> (() => spark.range(1, 12).selectExpr("id AS fr", "id + 1 AS to")))
-    for ((how, chain) <- registrations) {
-      def outcome(db: CozoDb) = scala.util.Try(rows(db, overflow)).toEither.left.map(_ => "error")
+    for ((how, chain) <- registrations; (q, held) <- Seq(overflow -> true, anchoredOverflow -> false)) {
+      def outcome(db: CozoDb) = scala.util.Try(rows(db, q)).toEither.left.map(_ => "error")
       val db = new CozoDb(spark)
       db.registerTable("chain", chain(), Seq("fr", "to"))
-      assert(db.relationCopy("chain").isDefined)
+      if (held) assert(db.relationCopy("chain").isDefined)
       val want = Knee.withLimits(Knee.DriverIndexBytes -> 0L) {
         val pinned = new CozoDb(spark)
         pinned.registerTable("chain", chain(), Seq("fr", "to"))
         outcome(pinned)
       }
-      assert(outcome(db) == want, how)
+      assert(outcome(db) == want, s"$q over $how")
+      assert(db.relationCopyBuilds == 1, s"$q over $how")
     }
   }
 
@@ -141,6 +144,10 @@ class RelationCopySpec extends AnyFunSuite {
     assert(reached(db, "edges").contains(Seq(1L, 6L)), "the put reached the copy")
     both("edges")(_.run("?[src, dst] <- [[2, 3]] :rm edges {src, dst}").collect())
     assert(!reached(db, "edges").contains(Seq(1L, 4L)), "the rm reached the copy")
+    assert(db.relationCopyBuilds == builds && db.relationCopyPatches == 2, "put and rm patch the copy")
+    val patched = db.relationCopy("edges").get
+    assert(patched.bytes == new graft.plan.DriverRows(patched.schema, patched.rows).bytes,
+      "a patch keeps the copy's bytes exact")
     both("moved")(_.run("::rename edges moved").collect())
     intercept[Exception](db.run(reach("edges")).collect())
     both("moved") { d =>
@@ -154,9 +161,11 @@ class RelationCopySpec extends AnyFunSuite {
       d.registerTable("edges", Seq((1L, 7L), (7L, 8L)).toDF("src", "dst"), Seq("src", "dst"))
     }
     assert(reached(db, "edges") == Set(Seq(1L, 1L), Seq(1L, 7L), Seq(1L, 8L)))
-    // one copy per version read: put, rm, rename, abort, re-register
-    assert(db.relationCopyBuilds == builds + 5)
-    assert(pinned.relationCopyBuilds == 0)
+    // put and rm patch the copy (so does the aborted put, before the
+    // abort retires it); rename, abort and re-register build a new one
+    assert(db.relationCopyBuilds == builds + 3)
+    assert(db.relationCopyPatches == 3)
+    assert(pinned.relationCopyBuilds == 0 && pinned.relationCopyPatches == 0)
   }
 
   test("an over-gate relation is probed once per version, and its reads run on Spark") {
@@ -188,8 +197,11 @@ class RelationCopySpec extends AnyFunSuite {
     assert(lines.length == 1 && lines.head.endsWith(s"gate=$limit branch=distributed"), lines)
     assert(copyBytes(lines.head) > 200L * 2000, lines)
     assert(db.relationCopyBuilds == 0)
-    // a new version under a gate it fits: every row, in key order
+    // the refusal stands across an overlay write; a new base (the write
+    // compacted) under a gate it fits: every row, in key order
     db.run("?[src, dst, note] <- [[0, 1, 'n']] :put wide {src, dst => note}").collect()
+    assert(db.relationCopy("wide").isEmpty)
+    db.run("::compact").collect()
     val copy = db.relationCopy("wide").get
     assert(copy.rows.length == 201 && copy.rows.map(_.getLong(0)) == (0L to 200L))
   }
@@ -202,11 +214,46 @@ class RelationCopySpec extends AnyFunSuite {
     val bytes = copyBytes(one.head)
     val (_, lines) = KneeLog.capture(Knee.withLimits(Knee.DriverIndexBytes -> (bytes * 3 / 2)) {
       assert(db.relationCopy("b").isEmpty, "a and b together pass the budget")
-      db.run("?[src, dst] <- [[11, 11]] :put a {src, dst}").collect()
+      db.registerTable("a", (1 to 11).map(i => (i.toLong, i.toLong)).toDF("src", "dst"), Seq("src", "dst"))
       assert(db.relationCopy("c").isDefined, "the copy of a's old version is dropped")
     })
     assert(lines == Seq(
       s"graft.knee op=relation_copy n=${2 * bytes} gate=${bytes * 3 / 2} branch=distributed",
       s"graft.knee op=relation_copy n=$bytes gate=${bytes * 3 / 2} branch=driver"), lines)
+  }
+
+  test("a patch that takes the copies past the budget retires the copy; reads then match a db without copies") {
+    val db = mkDb()
+    val pinned = Knee.withLimits(Knee.DriverIndexBytes -> 0L)(mkDb())
+    val limit = db.relationCopy("edges").get.bytes
+    val put = "?[src, dst] <- [[6, 7]] :put edges {src, dst}"
+    val (_, lines) = KneeLog.capture(Knee.withLimits(Knee.DriverIndexBytes -> limit) {
+      db.run(put).collect()
+      for (q <- Seq(hop1("edges"), reach("edges"))) assert(db.run(q).collect().nonEmpty)
+    })
+    assert(lines.count(_.contains("branch=distributed")) == 1, lines)
+    assert(lines.exists(_.matches(s"graft.knee op=copy_patch n=\\d+ gate=$limit branch=distributed")), lines)
+    assert(db.relationCopyPatches == 0 && db.relationCopyBuilds == 1)
+    Knee.withLimits(Knee.DriverIndexBytes -> 0L)(pinned.run(put).collect())
+    Knee.withLimits(Knee.DriverIndexBytes -> limit)(assert(answers(db, "edges") ==
+      Knee.withLimits(Knee.DriverIndexBytes -> 0L)(answers(pinned, "edges"))))
+  }
+
+  test("an over-gate relation is probed once across writes and reads, and again after ::compact") {
+    val db = mkDb()
+    val (_, lines) = KneeLog.capture(Knee.withLimits(Knee.DriverIndexBytes -> 1L) {
+      for (i <- 1 to 2) {
+        db.run(s"?[src, dst] <- [[$i, 10]] :put edges {src, dst}").collect()
+        assert(rows(db, hop1("edges")).nonEmpty)
+      }
+    })
+    assert(lines.count(_.contains("op=relation_copy")) == 1, lines)
+    assert(lines.exists(_.matches("graft.knee op=relation_copy n=\\d+ gate=1 branch=distributed")), lines)
+    val (_, after) = KneeLog.capture(Knee.withLimits(Knee.DriverIndexBytes -> 1L) {
+      db.run("::compact").collect()
+      rows(db, hop1("edges"))
+    })
+    assert(after.count(_.contains("op=relation_copy")) == 1, after)
+    assert(db.relationCopyBuilds == 0 && db.relationCopyPatches == 0)
   }
 }

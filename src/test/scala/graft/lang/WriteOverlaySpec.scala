@@ -81,6 +81,40 @@ class WriteOverlaySpec extends AnyFunSuite {
     }
   }
 
+  test("with a held copy, one-row :update, :insert and :delete run no Spark job and match a db without copies") {
+    def setup(db: CozoDb): CozoDb = {
+      db.registerTable("hn", Seq((Option(1L), "a"), (Option(2L), "b"), (Option.empty[Long], "c"))
+        .toDF("k", "v"), Seq("k"))
+      db.registerTable("hz", Seq((-0.0, "a"), (1.5, "b"), (2.5, "c")).toDF("k", "v"), Seq("k"))
+      db
+    }
+    val db = setup(new CozoDb(spark))
+    val pinned = Knee.withLimits(Knee.DriverIndexBytes -> 0L)(setup(new CozoDb(spark)))
+    // reads by key build the copies
+    assert(rows(db, "?[v] := *hn{k: 1, v}") == Seq("a") && rows(db, "?[v] := *hz{k: 1.5, v}") == Seq("b"))
+    def state(d: CozoDb) = Seq("hn", "hz").map(r => rows(d, s"?[k, v] := *$r{k, v}"))
+    // each write reaches a key the overlay does not hold yet
+    for (script <- Seq(
+        "?[k, v] <- [[null, 'w']] :update hn {k => v}",
+        "?[k, v] <- [[9, 'x']] :update hn {k => v}", // missing key
+        "?[k] <- [[1]] :delete hn {k}",
+        "?[k] <- [[8]] :delete hn {k}", // missing key
+        "?[k, v] <- [[2, 'x']] :insert hn {k => v}", // existing key
+        "?[k, v] <- [[5, 'n']] :insert hn {k => v}",
+        "?[k, v] <- [[0.0, 'z']] :update hz {k => v}", // the stored -0.0 is the key 0.0
+        "?[k, v] <- [[2.5, 'x']] :insert hz {k => v}", // existing key
+        "?[k] <- [[1.5]] :delete hz {k}")) {
+      var failed = false
+      assert(jobs { failed = scala.util.Try(db.run(script).collect()).isFailure } == 0, script)
+      val want = Knee.withLimits(Knee.DriverIndexBytes -> 0L) {
+        (scala.util.Try(pinned.run(script).collect()).isFailure, state(pinned))
+      }
+      assert((failed, state(db)) == want, script)
+    }
+    assert(state(db) == Seq(Seq("2|b", "5|n", "null|w"), Seq("0.0|z", "2.5|c")))
+    assert(db.overlayFolds == 0 && db.relationCopyBuilds == 2 && db.relationCopyPatches == 5)
+  }
+
   test("a validity :put is seen by an @ t read") {
     def ts(s: String) = java.sql.Timestamp.from(java.time.Instant.parse(s))
     val writes = bothBounds { db =>
