@@ -3,9 +3,8 @@ package graft.lang
 import graft.plan._
 import Ast._
 import graft.operators.Mutations
-import org.apache.spark.sql.graftbridge
-import org.apache.spark.sql.catalyst.{CatalystTypeConverters, InternalRow}
-import org.apache.spark.sql.catalyst.expressions.{Ascending, BoundReference, InterpretedOrdering, SortOrder, UnsafeProjection, UnsafeRow}
+import org.apache.spark.sql.catalyst.InternalRow
+import org.apache.spark.sql.catalyst.expressions.UnsafeRow
 import org.apache.spark.sql.{Column, DataFrame, Row, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types._
@@ -23,19 +22,11 @@ import scala.util.control.NonFatal
   * production, in-memory registered here) and a script run builds one
   * Catalyst plan per rule stratum.
   *
-  * State is one map of immutable [[StoredRelation]] records (rows,
-  * overlay, keys, validity, defaults, access, description, version,
-  * indexes, triggers) plus one cache of index artifacts stamped with
-  * the relation version they were built for. A write or sys op replaces
-  * a record, removal drops it, `::rename` re-keys it, and a transaction
-  * snapshot copies the map. A relation's rows are an unchanged base
-  * plus a driver-resident write overlay (key → row, or a tombstone):
-  * small `:put`/`:rm`/`:update`/`:insert`/`:delete` writes touch only
-  * their keys in the overlay and run no job beyond an existence probe,
-  * and reads see `base ANTI JOIN overlay keys UNION overlay rows`. A
-  * write the overlay cannot take folds: the base is rewritten through
-  * the key-equi joins of [[graft.operators.Mutations]] and the overlay
-  * resets.
+  * State is the [[Store]]: immutable [[StoredRelation]] records, and
+  * the artifacts derived from their rows (relation copies, indexes),
+  * which every row write patches from its one delta and every other
+  * change of the rows retires. This class parses, stratifies, evaluates
+  * and probes, and reads artifacts only through the Store.
   *
   * Rule evaluation is stratified bottom-up: rules are grouped into
   * strongly-connected components (query/stratify.rs:225), evaluated in
@@ -47,16 +38,14 @@ import scala.util.control.NonFatal
 class CozoDb(val spark: SparkSession) {
 
   import Compiler.CompileException
-  import IndexArtifact._
 
-  /** Every stored relation by name (see [[StoredRelation]]). */
-  private val records = mutable.LinkedHashMap.empty[String, StoredRelation]
+  /** The stored relations and everything derived from their rows. */
+  private[lang] val store = new Store(spark)
+  private def records = store.records
   DriverPlan.Planning.install(spark) // graph fixed rules read relation copies through ResidentScan
 
   private def stored(name: String): StoredRelation =
     records.getOrElse(name, throw CompileException(s"stored relation *$name not found"))
-  private def update(name: String)(f: StoredRelation => StoredRelation): Unit =
-    records(name) = f(stored(name))
 
   /** Register a stored relation. A validity column (+ optional assert
     * flag column) makes the relation time-travelable: both become part
@@ -77,12 +66,10 @@ class CozoDb(val spark: SparkSession) {
       if (!df.columns.contains(a))
         throw CompileException(s"assert column $a not in $name")
     }
-    dropRelationIndexCaches(name)
-    val r = StoredRelation(df, if (keys.nonEmpty) keys else df.columns.toSeq,
-      versionCounter.incrementAndGet(), validity = validity, assertCol = validityAssert)
-    records(name) = records.get(name).fold(r)(_.copy(view = r.view, keys = r.keys,
-      version = r.version, overlay = None, validity = validity,
-      assertCol = validityAssert, bare = false))
+    val ks = if (keys.nonEmpty) keys else df.columns.toSeq
+    store.register(name)(_.fold(StoredRelation(df, ks, 0L, validity = validity,
+      assertCol = validityAssert))(_.copy(view = df, keys = ks, overlay = None,
+      validity = validity, assertCol = validityAssert, bare = false)))
   }
 
   /** `*rel[...] @ t` (StoredWithValidityRA, data/value.rs:112-131,
@@ -164,10 +151,7 @@ class CozoDb(val spark: SparkSession) {
   def relationNames: Seq[String] = records.keys.toSeq
   /** Drop a relation with all of its metadata, indexes and cached
     * index artifacts. */
-  def removeRelation(name: String): Unit = {
-    dropRelationIndexCaches(name)
-    records.remove(name)
-  }
+  def removeRelation(name: String): Unit = store.remove(name)
 
   /** Export stored relations as DataFrames (db.rs:448-474
     * export_relations). */
@@ -239,7 +223,7 @@ class CozoDb(val spark: SparkSession) {
       java.nio.file.Files.readString(ddlPath).split("\n").filter(_.nonEmpty).foreach { line =>
         line.split("\t", -1) match {
           case Array("IDX", _, b) => run(unb64s(b))
-          case Array("TRG", rel, kind, b) => update(rel) { r =>
+          case Array("TRG", rel, kind, b) => store.update(rel) { r =>
             val (p, rm, rp) = r.triggers
             val q = unb64s(b)
             r.copy(triggers = kind match {
@@ -248,12 +232,12 @@ class CozoDb(val spark: SparkSession) {
               case _ => (p, rm, rp :+ q)
             })
           }
-          case Array("ACC", rel, lvl) => update(rel)(_.copy(access = lvl))
-          case Array("DESC", rel, b) => update(rel)(_.copy(description = unb64s(b)))
+          case Array("ACC", rel, lvl) => store.update(rel)(_.copy(access = lvl))
+          case Array("DESC", rel, b) => store.update(rel)(_.copy(description = unb64s(b)))
           case Array("DEF", rel, b) =>
             val in = new java.io.ObjectInputStream(new java.io.ByteArrayInputStream(unb64(b)))
             val (declared, defaults) = in.readObject().asInstanceOf[(Seq[String], Map[String, Expr])]
-            update(rel)(_.copy(declared = declared, defaults = defaults))
+            store.update(rel)(_.copy(declared = declared, defaults = defaults))
           case _ => ()
         }
       }
@@ -268,8 +252,8 @@ class CozoDb(val spark: SparkSession) {
 
   /** Register a trigger fired after a put/rm mutation on `rel` with the
     * mutation delta (relation.rs:553-585). */
-  def onPut(rel: String)(f: DataFrame => Unit): Unit = update(rel)(r => r.copy(onPut = f :: r.onPut))
-  def onRm(rel: String)(f: DataFrame => Unit): Unit = update(rel)(r => r.copy(onRm = f :: r.onRm))
+  def onPut(rel: String)(f: DataFrame => Unit): Unit = store.update(rel)(r => r.copy(onPut = f :: r.onPut))
+  def onRm(rel: String)(f: DataFrame => Unit): Unit = store.update(rel)(r => r.copy(onRm = f :: r.onRm))
 
   // ——————————— script triggers + change callbacks (db.rs:789-830) ———————————
 
@@ -335,7 +319,7 @@ class CozoDb(val spark: SparkSession) {
     * cleanup for the whole session (temps are tx-scoped, db.rs:298).
     * Prefer [[transact]], which closes in a finally. */
   final class Transaction private[CozoDb] () {
-    private val snapshot = records.clone()
+    private val snapshot = store.snapshot()
     private var done = false
     openTxCount.incrementAndGet()
     def run(script: String, params: Map[String, Any] = Map.empty): DataFrame = {
@@ -353,14 +337,10 @@ class CozoDb(val spark: SparkSession) {
     def commit(): Unit = if (!done) close()
     def abort(): Unit = {
       if (!done) {
-        // relations whose rows or indexes the transaction changed lose
-        // their index caches (patched to the aborted state, or built for
-        // an aborted index) and get a new version
-        val changed = (records.keySet ++ snapshot.keySet).filterNot(n =>
-          records.get(n).exists(r => snapshot.get(n).exists(s =>
-            (s.view eq r.view) && (s.indexes eq r.indexes))))
-        records.clear(); records ++= snapshot
-        changed.foreach { n => dropRelationIndexCaches(n); bumpVersion(n) }
+        // relations whose rows or indexes the transaction changed retire
+        // their artifacts (patched to the aborted state, or built for an
+        // aborted index)
+        store.rollback(snapshot)
         close()
       }
     }
@@ -615,7 +595,7 @@ class CozoDb(val spark: SparkSession) {
         if (!Seq("normal", "protected", "read_only", "hidden").contains(level))
           throw CompileException(s"unknown access level $level")
         val rels = parts.drop(2).map(_.stripPrefix("*"))
-        rels.foreach(update(_)(_.copy(access = level)))
+        rels.foreach(store.update(_)(_.copy(access = level)))
         rels.map((_, level)).toDF("relation", "access_level")
       // ::describe rel 'text' stores documentation (sys.rs DescribeRelation)
       case "describe" =>
@@ -623,24 +603,16 @@ class CozoDb(val spark: SparkSession) {
         relation(rel)
         val desc = op.stripPrefix("describe").trim.stripPrefix(parts(1)).trim
           .stripPrefix("'").stripSuffix("'")
-        update(rel)(_.copy(description = desc))
+        store.update(rel)(_.copy(description = desc))
         Seq(("described", rel)).toDF("status", "relation")
       // storage housekeeping is a no-op on immutable parquet state
       case "compact" =>
         // the Spark-native analogue of the reference's storage
         // compaction (db.rs Compact → RocksDB): eagerly materialize
         // every stored relation, collapsing accumulated mutation-chain
-        // lineage and every write overlay into checkpoint blocks, and
-        // drop index delta chains so the next probe serves a freshly
-        // compacted artifact
-        overlayFolds += records.values.count(_.overlay.isDefined)
-        records.mapValuesInPlace((_, r) => r.copy(view = r.view.ckpt(), overlay = None))
-        // relation copies and their refusals are measured again over
-        // the compacted base
-        indexCacheLock.synchronized {
-          indexArtifacts.filterInPlace { case (_, (_, a)) =>
-            !a.isInstanceOf[DistFts] && !a.isInstanceOf[LshBands] && !a.isInstanceOf[RelationCopy] }
-        }
+        // lineage and every write overlay into checkpoint blocks, so the
+        // next read builds each artifact over the compacted base
+        store.compact()
         Seq(Tuple1("ok")).toDF("status")
       case "running" =>
         runningQueries.asScala.toSeq.map { case (id, desc) => (id, desc) }
@@ -679,7 +651,7 @@ class CozoDb(val spark: SparkSession) {
         relation(from) // must exist and be readable
         val r = stored(from)
         removeRelation(from)
-        records(to) = r.copy(indexes = VectorMap.empty, version = versionCounter.incrementAndGet())
+        store.register(to)(_ => r.copy(indexes = VectorMap.empty))
         Seq(("renamed", from, to)).toDF("status", "from", "to")
       case "explain" =>
         val inner = op.stripPrefix("explain").trim.stripPrefix("{").stripSuffix("}")
@@ -739,7 +711,7 @@ class CozoDb(val spark: SparkSession) {
       }
       ws()
     }
-    update(rel)(_.copy(triggers = (puts, rms, reps)))
+    store.update(rel)(_.copy(triggers = (puts, rms, reps)))
     Seq(("ok", rel, puts.length.toLong, rms.length.toLong, reps.length.toLong))
       .toDF("status", "relation", "put_triggers", "rm_triggers", "replace_triggers")
   }
@@ -855,336 +827,6 @@ class CozoDb(val spark: SparkSession) {
   private def indexSpec(target: String): Option[IndexSpec] =
     records.get(target.takeWhile(_ != ':')).flatMap(_.indexes.get(target)).map(_._1)
 
-  /** Draws every relation version, so a number is never reused — not
-    * even by a removed and re-created relation. A relation gets a new
-    * version on every change of its rows: a mutation, a
-    * (re-)registration (`:create`/`:replace`, [[registerTable]],
-    * [[importRelations]], [[restore]]), `::rename`, and a transaction
-    * abort that restores it. Every index artifact caches against the
-    * version of ITS OWN relation, so a write to one relation never
-    * rebuilds or reloads another relation's index. A probe after a put
-    * sees the new rows (the reference updates indexes inside the
-    * mutating tx, stored.rs:322-328): the mutation patches the cached
-    * artifact, or the next probe rebuilds it. */
-  private val versionCounter = new java.util.concurrent.atomic.AtomicLong(0)
-  private def versionOf(rel: String): Long = records.get(rel).fold(0L)(_.version)
-  private def bumpVersion(rel: String): Long = {
-    val v = versionCounter.incrementAndGet()
-    records.get(rel).foreach(r => records(rel) = r.copy(version = v))
-    v
-  }
-  /** Guards the probe-time get-or-build of the artifact cache: cache
-    * fills happen under the SHARED read lock (concurrent readers), so
-    * they need their own monitor; mutation-path refreshes run under
-    * the exclusive write lock and take this monitor too for the same
-    * happens-before edge. */
-  private val indexCacheLock = new Object
-  /** The artifact of every index target that has one, stamped with the
-    * relation version it was built for. An FTS or walkable HNSW index
-    * whose estimated heap footprint is at most [[Knee.DriverIndexBytes]]
-    * (a [[graft.plan.Knee.gate]] decision per build, logged as
-    * `op=fts_index|hnsw_index`) is held on the driver: FTS as
-    * [[graft.search.DriverFts]] maps, HNSW as the same 32 hash-bucket
-    * graphs the distributed build writes ([[graft.similarity.HnswBuckets]]).
-    * A probe then walks driver memory — no Spark job for the index
-    * side — and a mutation patches the index in place from the changed
-    * rows. Larger indexes are distributed: FTS postings, LSH band tables
-    * (minhash signatures are pure per-document state) and persisted
-    * HNSW graphs, restored once per version for probes to walk. Both
-    * branches return the same results (DriverIndexSpec). */
-  private val indexArtifacts = mutable.HashMap.empty[String, (Long, IndexArtifact)]
-
-  /** The artifact of `target` if it was built for version `ver`. */
-  private def cachedAt(target: String, ver: Long): Option[IndexArtifact] =
-    indexArtifacts.get(target).collect { case (v, a) if v == ver => a }
-
-  /** Targets holding any cached artifact, and the persisted HNSW graph
-    * directories (test hooks for cache cleanup). */
-  private[lang] def cachedIndexTargets: Set[String] =
-    indexCacheLock.synchronized(indexArtifacts.keySet.toSet)
-  private[lang] def indexArtifactDirs: Seq[String] = indexCacheLock.synchronized(
-    indexArtifacts.values.collect { case (_, DistHnsw(dir, _)) => dir }.toSeq)
-
-  /** Drop the cached artifact of one index, with the executor-cached
-    * graphs and the graph directory of a distributed HNSW index. */
-  private def dropIndexCaches(target: String): Unit = indexCacheLock.synchronized {
-    indexArtifacts.remove(target).foreach {
-      case (_, DistHnsw(dir, loaded)) =>
-        loaded.foreach(_.unpersist(blocking = false))
-        scala.util.Try(org.apache.commons.io.FileUtils.deleteDirectory(new java.io.File(dir)))
-      case _ => ()
-    }
-  }
-
-  /** Drop the cached artifacts of every index over `rel`, including
-    * indexes whose definition is already gone. */
-  private def dropRelationIndexCaches(rel: String): Unit =
-    cachedIndexTargets.filter(_.takeWhile(_ != ':') == rel).foreach(dropIndexCaches) // rel:name
-
-  private[lang] var relationCopyBuilds = 0 // driver copies of stored relations built, for tests
-  private[lang] var localGraphBuilds = 0 // graphs built over a relation copy, for tests
-  private[lang] var driverFixpointRounds = 0 // fixpoint rounds completed on the driver, for tests
-
-  /** The driver copy of stored relation `rel` at its current version:
-    * every row as an UnsafeRow, sorted by the key columns. The copies
-    * share one heap budget, [[Knee.DriverIndexBytes]] (the one a driver
-    * index has): a copy is admitted when its bytes plus those of the
-    * copies already held are at most the limit (a `Knee.gate` decision
-    * logged as `op=relation_copy`, n the bytes held with it). The bytes
-    * are summed on the executors first, so a refused relation ships no
-    * row; an admitted one is fetched in one collect. Copies of an older
-    * version no reader can reach are dropped before a probe. The copy
-    * is cached in [[indexArtifacts]] under the relation's name. A row
-    * write the overlay absorbs patches it to the new version
-    * ([[patchCopy]]); a fold, `::compact`, re-registration, `::rename`,
-    * removal or an aborted transaction retires it like an index
-    * artifact. A refusal is cached too, and stands across overlay
-    * writes: an over-gate relation is probed once per base. The driver
-    * fixpoint, the graph fixed rules and non-recursive rules over
-    * copies ([[overCopies]]) read it on the driver
-    * ([[graft.plan.DriverPlan]], in key order where a join or a filter
-    * binds a key prefix); a graph built over it is kept with it
-    * ([[chargeCopy]]). Spark plans a read of the copy as the relation's
-    * own view. */
-  private[lang] def relationCopy(rel: String): Option[DriverRows] = indexCacheLock.synchronized {
-    val r = records.getOrElse(rel, return None)
-    cachedAt(rel, r.version) match {
-      case Some(RelationCopy(rows)) => rows
-      case _ =>
-        indexArtifacts.remove(rel)
-        dropStaleCopies()
-        val bytes = graftbridge.PlanBridge.internalBytes(r.view)
-        val copy = Option.when(Knee.gate("relation_copy", heldCopyBytes + bytes, Knee.DriverIndexBytes)) {
-          val schema = r.view.schema
-          val keyIdx = r.keys.map(schema.fieldIndex).toIndexedSeq
-          val ord = new InterpretedOrdering(keyIdx.map(i =>
-            SortOrder(BoundReference(i, schema(i).dataType, nullable = true), Ascending)))
-          relationCopyBuilds += 1
-          new DriverRows(schema, graftbridge.PlanBridge.collectInternal(r.view).sorted(ord), keyIdx, chargeCopy)
-        }
-        indexArtifacts(rel) = (r.version, RelationCopy(copy))
-        copy
-    }
-  }
-
-  /** The copy of `rel` if one is held for its current version: never
-    * probes or fetches. */
-  private def heldCopy(rel: String): Option[DriverRows] = indexCacheLock.synchronized {
-    records.get(rel).flatMap(r => cachedAt(rel, r.version)).collect { case RelationCopy(Some(c)) => c }
-  }
-
-  /** Heap bytes of the copies held and of what is kept with them. */
-  private def heldCopyBytes: Long =
-    indexArtifacts.values.collect { case (_, RelationCopy(Some(c))) => c.heldBytes }.sum
-
-  /** Drop the copies (and refusals) of a version no reader can reach. */
-  private def dropStaleCopies(): Unit = indexArtifacts.filterInPlace { case (t, (v, a)) =>
-    !a.isInstanceOf[RelationCopy] || records.get(t).exists(_.version == v) }
-
-  private[lang] var relationCopyPatches = 0 // copies patched by a row write, for tests
-
-  /** Patch the copy of `rel` for a row write its overlay absorbed, which
-    * moved the relation from version `prev` to `cur`: `written` pairs
-    * each written key (an overlay key) with its live row in the
-    * relation's column order, None for a removed key. A copy stamped
-    * `prev` becomes one stamped `cur`, each written key's run replaced
-    * by its row ([[DriverRows.patched]]); no job runs. The patched copy
-    * is gated on the copies' shared budget again (logged as
-    * `op=copy_patch`) and cached as a refusal when it no longer fits;
-    * what was kept with the old copy is not carried over. A refusal
-    * stamped `prev` is re-stamped. Anything else — no copy or a stale
-    * one — is left to retire. */
-  private def patchCopy(rel: String, prev: Long, cur: Long,
-                        written: Seq[(Seq[Any], Option[Row])]): Unit = indexCacheLock.synchronized {
-    cachedAt(rel, prev) match {
-      case Some(RelationCopy(None)) => restampCopy(rel, prev, cur)
-      case Some(RelationCopy(Some(c))) =>
-        // the written rows have the copy's columns and types (those of
-        // the view it was built from); any of them may now be NULL
-        val schema = DriverPlan.nullable(c.schema)
-        val toRow = CatalystTypeConverters.createToCatalystConverter(schema)
-        val unsafe = UnsafeProjection.create(schema)
-        val writes = written.toMap.toSeq.map { case (k, row) =>
-          (k.map(CatalystTypeConverters.convertToCatalyst).toArray,
-            row.map(r => unsafe(toRow(r).asInstanceOf[InternalRow]).copy(): InternalRow))
-        }
-        val next = c.patched(schema, writes)
-        indexArtifacts.remove(rel)
-        dropStaleCopies()
-        val fits = Knee.gate("copy_patch", heldCopyBytes + next.bytes, Knee.DriverIndexBytes)
-        indexArtifacts(rel) = (cur, RelationCopy(Option.when(fits)(next)))
-        if (fits) relationCopyPatches += 1
-      case _ => ()
-    }
-  }
-
-  /** Re-stamp the copy or refusal of `rel` at version `prev` as `cur`:
-    * `rel` went from one to the other with its rows unchanged. */
-  private def restampCopy(rel: String, prev: Long, cur: Long): Unit = indexCacheLock.synchronized {
-    cachedAt(rel, prev).collect { case c: RelationCopy => indexArtifacts(rel) = (cur, c) }
-  }
-
-  /** The rows the held copy of `rel` at version `ver` has under each of
-    * `keys` (overlay keys), as external rows; None without such a copy.
-    * Runs no job. */
-  private def copyRows(rel: String, ver: Long, keys: Seq[Seq[Any]]): Option[Map[Seq[Any], Seq[Row]]] =
-    indexCacheLock.synchronized(cachedAt(rel, ver)).collect { case RelationCopy(Some(c)) =>
-      val toRow = CatalystTypeConverters.createToScalaConverter(c.schema)
-      keys.map { k =>
-        val (lo, hi) = c.keyRange(k.map(CatalystTypeConverters.convertToCatalyst).toArray)
-        k -> (lo until hi).map(i => toRow(c.rows(i)).asInstanceOf[Row])
-      }.toMap
-    }
-
-  /** Whether a graph of `bytes` built over a copy is kept with it: when
-    * the copies with what they keep still fit [[Knee.DriverIndexBytes]]. */
-  private def chargeCopy(bytes: Long): Boolean = indexCacheLock.synchronized {
-    localGraphBuilds += 1
-    heldCopyBytes + bytes <= Knee.DriverIndexBytes.value
-  }
-
-  /** The restored graphs of a distributed walk-eligible index, kept in
-    * its artifact until a patch or a rebuild replaces it. */
-  private def hnswLoadedGraphs(target: String, dir: String)
-      : org.apache.spark.rdd.RDD[graft.similarity.HnswIndex] = indexCacheLock.synchronized {
-    indexArtifacts.get(target) match {
-      case Some((_, DistHnsw(_, Some(rdd)))) => rdd
-      case entry =>
-        val rdd = graft.similarity.Ann.hnswLoadIndex(spark, dir)
-        entry.foreach { case (ver, _) => indexArtifacts(target) = (ver, DistHnsw(dir, Some(rdd))) }
-        indexGraphLoads += 1
-        rdd
-    }
-  }
-
-  /** Distance names the partition-local graph walk supports
-    * (hnsw.rs:66-108 metric set), mapped to HnswIndex metric ids. */
-  private def hnswWalkMetric(distance: String): Option[String] =
-    distance.toLowerCase match {
-      case "cosine" => Some("cosine")
-      case "l2" => Some("l2")
-      case "ip" | "innerproduct" => Some("ip")
-      case _ => None
-    }
-
-  /** Index-level walk eligibility of a vector index (probe-level parts
-    * — per-probe filter/radius — are checked at the probe). Multi-field
-    * indexes walk too: one graph node per (key, field), best-field
-    * collapse at the merge (the reference's graph likewise holds one
-    * entry per indexed vector, hnsw.rs). */
-  private def hnswIndexEligible(v: VecIdx): Boolean =
-    v.m.isDefined && v.fields.nonEmpty &&
-      hnswWalkMetric(v.distance).isDefined &&
-      v.fields.forall(f => relation(v.rel).columns.contains(f) &&
-        !isListVecField(v.rel, f)) &&
-      keyTypeIntegral(v.rel)
-
-  /** A `fields:` entry holding a LIST of vectors (array<array<float>>;
-    * hnsw.rs:699-705 indexes each element under its sub-index). List
-    * fields probe through the exact scan — the element count is
-    * data-dependent, so they don't fit the fixed gid encoding of the
-    * persisted graphs. */
-  private def isListVecField(rel: String, f: String): Boolean =
-    relation(rel).schema(f).dataType match {
-      case ArrayType(ArrayType(_, _), _) => true
-      case _ => false
-    }
-
-  /** The walkable corpus of a vector index: every indexed field's
-    * vector as its own graph node under the composite node id
-    * `key*nFields + fieldIdx` (a graph node id must be UNIQUE — the
-    * persisted adjacency is id-keyed — so multi-field rows can't reuse
-    * the raw key). [[graft.similarity.Ann.hnswProbeIndex]] decodes the
-    * payload key back out with floorDiv. Overflows only for
-    * |key| > 2^63/nFields — beyond any practical key domain. */
-  private def hnswCorpus(v: VecIdx, admitted: DataFrame, key: String): DataFrame = {
-    val n = v.fields.length
-    v.fields.zipWithIndex.map { case (f, i) =>
-      admitted.select((col(key).cast("long") * n + lit(i.toLong)).as("id"),
-        col(f).cast("array<float>").as("vec"))
-    }.reduce(_ unionByName _)
-  }
-
-  /** The index-admitted rows of a vector index (the create-time
-    * admission filter is param-free by construction). */
-  private def hnswAdmitted(v: VecIdx): DataFrame =
-    v.filter.fold(relation(v.rel))(e =>
-      relation(v.rel).filter(compiler(_ => None, Map.empty).compileExpr(e)))
-
-  /** (m, ef_construction) as the graph builds use them: the reference
-    * accepts ef_construction < m; HnswIndex needs a beam at least m
-    * wide. */
-  private def hnswBuildParams(v: VecIdx): (Int, Int) = {
-    val mEff = math.max(v.m.get, 2)
-    (mEff, math.max(v.efConstruction.getOrElse(mEff * 6), mEff))
-  }
-
-  /** The graphs of a walk-eligible vector index at its relation's
-    * current version, built on first use: driver-resident when the
-    * corpus fits the byte gate, else persisted partition-local graphs
-    * (a directory of [[graft.similarity.Ann.hnswWriteIndex]] artifacts).
-    * Shared by probes and the index-internals graph scan. */
-  private def hnswIndexOf(target: String, v: VecIdx)
-      : Either[graft.similarity.HnswBuckets, String] = indexCacheLock.synchronized {
-    val ver = versionOf(v.rel)
-    cachedAt(target, ver) match {
-      case Some(DriverHnsw(b)) => Left(b)
-      case Some(DistHnsw(d, _)) => Right(d)
-      case _ =>
-        // reclaim the superseded version's artifacts before rebuilding
-        // (long sessions with many mutations would otherwise
-        // accumulate dead graph dirs)
-        dropIndexCaches(target)
-        val corpus = hnswCorpus(v, hnswAdmitted(v), keyColOf(v.rel))
-        val (mEff, efcEff) = hnswBuildParams(v)
-        val metric = hnswWalkMetric(v.distance).get
-        indexFullBuilds += 1
-        val st = corpus.agg(count(lit(1)), sum(size(col("vec")))).head()
-        val bytes = graft.similarity.HnswBuckets.estimateBytes(
-          st.getLong(0), if (st.isNullAt(1)) 0L else st.getLong(1), mEff)
-        if (Knee.gate("hnsw_index", bytes, Knee.DriverIndexBytes)) {
-          val b = graft.similarity.HnswBuckets.build(
-            corpus.filter(col("vec").isNotNull).collect().toSeq
-              .map(r => (r.getLong(0), r.getSeq[Float](1).toArray)),
-            mEff, efcEff, metric = metric,
-            extendCandidates = v.extendCandidates, keepPruned = v.keepPruned)
-          indexArtifacts(target) = (ver, DriverHnsw(b))
-          indexDriverBuilds += 1
-          Left(b)
-        } else {
-          val d = java.nio.file.Files.createTempDirectory("graft_hnsw").toString
-          graft.similarity.Ann.hnswWriteIndex(d, corpus, mEff, efcEff, metric = metric,
-            extendCandidates = v.extendCandidates, keepPruned = v.keepPruned)
-          indexArtifacts(target) = (ver, DistHnsw(d, None))
-          Right(d)
-        }
-    }
-  }
-
-  /** The graph node ids a set of changed KEYS touches: one per field. */
-  private def hnswChangedGids(v: VecIdx, changedIds: DataFrame, key: String): DataFrame = {
-    val n = v.fields.length
-    v.fields.indices.map(i => changedIds
-      .select((col(key).cast("long") * n + lit(i.toLong)).as("id")))
-      .reduce(_ unionByName _)
-  }
-
-  /** Graph node ids derive from THE key column, so the walk needs a
-    * relation keyed by exactly one integral column — a composite key's
-    * first column is not unique and two rows would share a node id
-    * (same corruption class as duplicate multi-field ids). Composite
-    * keys fall back to the exact scan. */
-  private def keyTypeIntegral(rel: String): Boolean =
-    singleKey(rel) &&
-      (relation(rel).schema(keyColOf(rel)).dataType match {
-        case org.apache.spark.sql.types.LongType |
-             org.apache.spark.sql.types.IntegerType |
-             org.apache.spark.sql.types.ShortType => true
-        case _ => false
-      })
-
-  private def keyColOf(rel: String): String = stored(rel).keys.head
-
   /** find_optimal_params (minhash_lsh.rs:259-289, itself adapted from
     * the MIT-licensed rust-minhash): choose (bands, rows) with
     * b·r ≤ nPerm minimizing the weighted false-positive +
@@ -1220,88 +862,6 @@ class CozoDb(val spark: SparkSession) {
     best
   }
 
-  /** The FTS index of `target` at its relation's current version, built
-    * on first use: driver-resident ([[graft.search.DriverFts]]) when the
-    * relation has a single key column and the index fits the byte gate
-    * (estimated from the extractor text length, one scan), else the
-    * distributed postings/lens frames. */
-  private def ftsIndex(target: String, spec: FtsIdx)
-      : Either[graft.search.DriverFts, graft.search.Fts.Index] = indexCacheLock.synchronized {
-    val ver = versionOf(spec.rel)
-    cachedAt(target, ver) match {
-      case Some(DriverFts(d)) => Left(d)
-      case Some(DistFts(ix, _)) => Right(ix)
-      case _ =>
-        dropIndexCaches(target)
-        val key = keyColOf(spec.rel)
-        val docs = extractFiltered(relation(spec.rel), spec.extractor, spec.extractFilter)
-        indexFullBuilds += 1
-        val driver = singleKey(spec.rel) && {
-          val st = docs.agg(count(lit(1)), sum(length(col(spec.extractor)))).head()
-          val chars = if (st.isNullAt(1)) 0L else st.getLong(1)
-          Knee.gate("fts_index", graft.search.DriverFts.estimateBytes(
-            st.getLong(0), graft.search.DriverFts.tokenBound(chars, spec.pipe)), Knee.DriverIndexBytes)
-        }
-        if (driver) {
-          val d = graft.search.DriverFts.empty(spec.pipe).patch(Nil,
-            graft.search.DriverFts.tokenRows(graft.search.DriverFts.docTokens(
-              docs, key, spec.extractor, spec.pipe).collect().toSeq))
-          indexArtifacts(target) = (ver, DriverFts(d))
-          indexDriverBuilds += 1
-          Left(d)
-        } else {
-          val ix = graft.search.Fts.Index.build(docs, key, spec.extractor, spec.pipe)
-          indexArtifacts(target) = (ver, DistFts(ix, 0))
-          Right(ix)
-        }
-    }
-  }
-
-  /** The relation is keyed by exactly one column, so its key column
-    * identifies a row (the driver indexes map key → document). */
-  private def singleKey(rel: String): Boolean = stored(rel).keys.lengthIs == 1
-
-  /** extract_filter semantics (parse/sys.rs:374-382): rows failing
-    * the condition get a NULL extractor value — no tokens, no
-    * shingles, absent from the index. */
-  private def extractFiltered(docs: DataFrame, extractor: String,
-                              ef: Option[Expr]): DataFrame =
-    ef.fold(docs)(e => docs.withColumn(extractor,
-      when(compiler(_ => None, Map.empty).compileExpr(e), col(extractor))))
-
-  /** A document's LSH shingles: TOKEN n-grams through the index's
-    * tokenizer pipeline (unique_ngrams, tokenizer_impl.rs:105-123). */
-  private def lshDocShingles(l: LshIdx): Column =
-    graft.search.Fts.lshShingles(col(l.extractor), l.pipe, l.nGram)
-
-  /** The per-document (key, band) table of an LSH index. Shingles and
-    * signature are STAGED as columns: lshBandKeys inlines its input once
-    * per band, and inlining the tokenizer pipeline tree that many times
-    * would blow up Catalyst analysis. minhashSignature is one kernel
-    * pass over the staged shingles (each hashed once, not once per
-    * permutation). */
-  private def lshBandsOf(docs: DataFrame, key: String, l: LshIdx): DataFrame = {
-    import graft.functions.{TextFunctions => TF}
-    val nPerm = l.bands * l.rowsPerBand
-    extractFiltered(docs, l.extractor, l.extractFilter)
-      .select(col(key), lshDocShingles(l).as("__sh"))
-      .select(col(key), TF.minhashSignature(col("__sh"), nPerm).as("__sig"))
-      .select(col(key), explode(TF.lshBandKeys(col("__sig"),
-        l.bands, l.rowsPerBand)).as("band"))
-  }
-
-  private def lshBandTable(target: String, l: LshIdx): DataFrame = indexCacheLock.synchronized {
-    val ver = versionOf(l.rel)
-    cachedAt(target, ver) match {
-      case Some(LshBands(df, _)) => df
-      case _ =>
-        val df = lshBandsOf(relation(l.rel), keyColOf(l.rel), l).ckptLazy()
-        indexArtifacts(target) = (ver, LshBands(df, 0))
-        indexFullBuilds += 1 // shared observability counter for tests
-        df
-    }
-  }
-
   /** `*rel:idx{...}` — scan the index's own relation (the reference
     * exposes index internals as scannable relations). */
   private def indexInternals(target: String, spec: IndexSpec): DataFrame = spec match {
@@ -1314,8 +874,8 @@ class CozoDb(val spark: SparkSession) {
       // offset lists scan as NULL (documented divergence) — position
       // lists and per-document token totals are exact. `tf` is an
       // extra column beyond the reference (BM25's term frequency).
-      val key = keyColOf(f.rel)
-      val ix = ftsIndex(target, f)
+      val key = store.keyCol(f.rel)
+      val ix = store.ftsIndex(target, f)
         .fold(_.toIndex(spark, relation(f.rel).schema(key).dataType), identity)
       ix.postings.join(ix.lens, Seq("id"))
         .select(col("term").as("word"), col("id").as(s"src_$key"),
@@ -1329,11 +889,11 @@ class CozoDb(val spark: SparkSession) {
       // (hash: Bytes, src_<key>) — one row per band bucket per source
       // row. Our band keys are 8-byte xxhash64 values, surfaced as
       // their big-endian bytes.
-      val key = keyColOf(l.rel)
-      lshBandsOf(relation(l.rel), key, l)
+      val key = store.keyCol(l.rel)
+      store.lshBandsOf(relation(l.rel), key, l)
         .select(unhex(lpad(hex(col("band")), 16, "0")).as("hash"),
           col(key).as(s"src_$key"))
-    case v: VecIdx if hnswIndexEligible(v) =>
+    case v: VecIdx if store.hnswIndexEligible(v) =>
       // the reference's scannable HNSW surface (runtime/relation.rs:
       // 1063-1131): the proximity graph itself — layer (0 = bottom,
       // NEGATIVE going up), fr_<key>/to_<key> + __field/__sub_idx,
@@ -1346,8 +906,8 @@ class CozoDb(val spark: SparkSession) {
       // conflict-detection vector hash — internal, emitted as NULL.
       import org.apache.spark.sql.functions.{explode, sequence}
       val nF = v.fields.length
-      val key = keyColOf(v.rel)
-      val rows = hnswIndexOf(target, v) match {
+      val key = store.keyCol(v.rel)
+      val rows = store.hnswIndexOf(target, v) match {
         case Left(b) => spark.createDataFrame(b.rows.map { case (p, id, vec, lvl, ns, el) =>
             Row(p, id, vec, lvl, ns, el)
           }.toSeq.asJava, graft.similarity.Ann.graphSchema)
@@ -1401,7 +961,7 @@ class CozoDb(val spark: SparkSession) {
       // non-walkable vector index (no m:, non-integral key, …): no
       // graph exists, so the scannable surface is the flat admitted
       // set (key, vectors) — a semantic subset of the reference's
-      hnswAdmitted(v).select(col(keyColOf(v.rel)) +: v.fields.map(col): _*)
+      store.hnswAdmitted(v, relation(v.rel)).select(col(store.keyCol(v.rel)) +: v.fields.map(col): _*)
     case p: PlainIdx =>
       // the reference's covering index stores the named columns plus the
       // REMAINING KEY columns only (runtime/relation.rs:1232) — enough
@@ -1440,6 +1000,8 @@ class CozoDb(val spark: SparkSession) {
   private def localFrame(rows: Seq[Row], fields: StructField*): DataFrame =
     spark.createDataFrame(rows.asJava, StructType(fields))
 
+  private[lang] var indexDriverProbes = 0 // probes served by a driver-resident index, for tests
+
   /** `~rel:idx{cols | query: …, k: …, bind_…: var}` probes
     * (search_apply; HnswSearchRA/FtsSearchRA/LshSearchRA,
     * query/ra.rs:896-1066). The probe is a top-k search joined back to
@@ -1452,7 +1014,7 @@ class CozoDb(val spark: SparkSession) {
     val spec = indexSpec(target).getOrElse(
       throw CompileException(s"no search index $target (::fts/::lsh/::hnsw create first)"))
     val base = relation(spec.rel)
-    val key = keyColOf(spec.rel)
+    val key = store.keyCol(spec.rel)
     // the reference rejects leftover probe parameters (program.rs
     // "Extra parameters for ..."/"Unexpected parameters for HNSW") —
     // a typo'd bind_ or option must not be silently ignored.
@@ -1502,7 +1064,7 @@ class CozoDb(val spark: SparkSession) {
         df.filter(compiler(_ => None, params).compileExpr(e)))
     spec match {
       case f: FtsIdx =>
-        val handle = ftsIndex(target, f)
+        val handle = store.ftsIndex(target, f)
         // `score_kind:` (program.rs:1283-1297): 'tf_idf' (default) and
         // 'tf' are the reference's scorers (fts/indexing.rs:231-247 —
         // its BM25 was never implemented, k1/b are commented out);
@@ -1592,10 +1154,10 @@ class CozoDb(val spark: SparkSession) {
                 TF.minhashSignature(col("__qsh"), nPerm).as("__sig"))
               .select(col("__q"), explode(TF.lshBandKeys(col("__sig"),
                 l.bands, l.rowsPerBand)).as("band"))
-            val candidates = lshBandTable(target, l).join(qBands, Seq("band"))
+            val candidates = store.lshBandTable(target, l).join(qBands, Seq("band"))
               .select(col("__q"), col(key)).distinct()
             val scored = base.join(candidates, Seq(key))
-              .withColumn("__sim", TF.jaccard(lshDocShingles(l), qSh))
+              .withColumn("__sim", TF.jaccard(Store.lshDocShingles(l), qSh))
             val top = graft.operators.TopK.perGroup(probeFilter(scored), Seq("__q"),
               Seq(col("__sim").desc, col(key).asc), kOpt.getOrElse(Int.MaxValue))
             top.select((col("__q").as(n) +: (pairs.map { case (c, vr) => col(c).as(vr) } ++
@@ -1620,13 +1182,13 @@ class CozoDb(val spark: SparkSession) {
                 .select(TF.minhashSignature(qArr, nPerm).as("__sig"))
                 .select(explode(TF.lshBandKeys(col("__sig"),
                   l.bands, l.rowsPerBand)).as("band"))
-              val candidates = lshBandTable(target, l).join(broadcast(qBands), Seq("band"))
+              val candidates = store.lshBandTable(target, l).join(broadcast(qBands), Seq("band"))
                 .select(key).distinct()
               // exact-similarity verify on the candidate set only
               // (linear) — our deterministic refinement of the
               // reference's storage-order early-stop
               val ordered = probeFilter(base.join(candidates, Seq(key))
-                .withColumn("__sim", TF.jaccard(lshDocShingles(l), qArr)))
+                .withColumn("__sim", TF.jaccard(Store.lshDocShingles(l), qArr)))
                 .orderBy(col("__sim").desc, col(key).asc)
               // k is OPTIONAL for LSH probes: absent = no cut
               val scored = kOpt.fold(ordered)(ordered.limit)
@@ -1652,7 +1214,7 @@ class CozoDb(val spark: SparkSession) {
           * (hnsw.rs:707-709) and drop out of exact scans too. */
         def bestTo(q: Column): Column = {
           val parts = v.fields.zipWithIndex.map { case (f, fi) =>
-            if (!isListVecField(v.rel, f)) {
+            if (!store.isListVecField(v.rel, f)) {
               val x = col(f).cast("array<float>")
               when(x.isNotNull, struct(elemDist(x, q).as("d"), lit(fi).as("fi"),
                 lit(-1L).as("s"), lit(f).as("name"), x.as("v")))
@@ -1696,8 +1258,8 @@ class CozoDb(val spark: SparkSession) {
         // stream must never crossJoin the corpus.
         // all three reference metrics walk (hnsw.rs:66-108): cosine and
         // ip as dot-product scores, l2 as negative squared distance
-        val walkMetric: Option[String] = hnswWalkMetric(v.distance)
-        val graphEligible = hnswIndexEligible(v) &&
+        val walkMetric: Option[String] = Store.hnswWalkMetric(v.distance)
+        val graphEligible = store.hnswIndexEligible(v) &&
           opts.get("filter").isEmpty && optConst("radius").isEmpty
         /** walker score (higher = closer) → this index's distance:
           * cosine/ip = 1 - score, l2 = -score (squared L2, the same
@@ -1746,7 +1308,7 @@ class CozoDb(val spark: SparkSession) {
               // suppresses a legitimate match and a probe can still
               // return its own stored row (the reference does).
               import graft.plan._
-              val handle = hnswIndexOf(target, v)
+              val handle = store.hnswIndexOf(target, v)
               val (qids, walked) = handle match {
                 case Left(b) =>
                   indexDriverProbes += 1
@@ -1764,7 +1326,7 @@ class CozoDb(val spark: SparkSession) {
                       monotonically_increasing_id() + lit(Long.MinValue))
                     .ckpt()
                   (qids, graft.similarity.Ann.hnswProbeLoaded(
-                    hnswLoadedGraphs(target, dir),
+                    store.hnswLoadedGraphs(target, dir),
                     qids.select(col("__qid").as("query_id"),
                       col("__qvec").cast("array<float>").as("vec")),
                     k, efSearch = efS, fieldsPerId = v.fields.length))
@@ -1802,7 +1364,7 @@ class CozoDb(val spark: SparkSession) {
             if (graphEligible) {
               import spark.implicits._
               // query id outside any plausible key domain (see above)
-              val handle = hnswIndexOf(target, v)
+              val handle = store.hnswIndexOf(target, v)
               val walked = handle match {
                 case Left(b) =>
                   indexDriverProbes += 1
@@ -1810,7 +1372,7 @@ class CozoDb(val spark: SparkSession) {
                     v.fields.length))
                 case Right(dir) =>
                   graft.similarity.Ann.hnswProbeLoaded(
-                    hnswLoadedGraphs(target, dir),
+                    store.hnswLoadedGraphs(target, dir),
                     Seq((Long.MinValue, qvec.toArray)).toDF("query_id", "vec"), k,
                     efSearch = efS, fieldsPerId = v.fields.length)
               }
@@ -1843,12 +1405,12 @@ class CozoDb(val spark: SparkSession) {
     val rel = target.split(":")(0)
     if (sub == "drop") {
       val existed = indexSpec(target).isDefined
-      if (existed) update(rel)(r => r.copy(indexes = r.indexes - target))
-      dropIndexCaches(target)
+      if (existed) store.update(rel)(r => r.copy(indexes = r.indexes - target))
+      store.dropArtifact(target)
       return Seq(((if (existed) "dropped" else "absent"), target)).toDF("status", "index")
     }
     relation(rel) // must exist
-    dropIndexCaches(target) // a re-created index must not serve the old one's artifacts
+    store.dropArtifact(target) // a re-created index must not serve the old one's artifacts
     def asStr(e: Expr): String = e match {
       case Lit(s: String) => s
       case V(n) => n
@@ -2065,7 +1627,7 @@ class CozoDb(val spark: SparkSession) {
           keepPruned = boolHnswOpt("keep_pruned_connections"))
       case other => throw CompileException(s"unknown index kind ::$other")
     }
-    update(rel)(r => r.copy(indexes = r.indexes.updated(target, (spec, text))))
+    store.update(rel)(r => r.copy(indexes = r.indexes.updated(target, (spec, text))))
     Seq(("created", target)).toDF("status", "index")
   }
 
@@ -2115,16 +1677,16 @@ class CozoDb(val spark: SparkSession) {
     }
     horn.foreach(_.body.foreach(visit))
     if (!fits || stored.isEmpty) return None
-    val held = stored.toSeq.flatMap(n => heldCopy(n).map(n -> _)).toMap
+    val held = stored.toSeq.flatMap(n => store.heldCopy(n).map(n -> _)).toMap
     val missing = stored.toSet -- held.keySet
     // copies are built only where the driver can then evaluate the rule
-    lazy val localRules = rules.filter(n => resolve(n).forall(isLocal))
+    lazy val localRules = rules.filter(n => resolve(n).forall(Store.isLocal))
     val build =
       if (missing.isEmpty || localRules.size < rules.size) Set.empty[String]
       else horn.flatMap(h => anchored(h.body, localRules, params)).toSet & missing
     // an unanchored atom over a relation without a copy: Spark reads it
     if ((missing -- build).nonEmpty) return None
-    val copies = held ++ build.flatMap(n => relationCopy(n).map(n -> _))
+    val copies = held ++ build.flatMap(n => store.relationCopy(n).map(n -> _))
     if (copies.size < stored.size) None
     else try evalRule(defs, resolve, params, copies).flatMap(local)
     catch { case NonFatal(_) => None }
@@ -2252,7 +1814,7 @@ class CozoDb(val spark: SparkSession) {
     * driver and Spark plans as the relation itself. */
   private def graphInput(rel: String): DataFrame = {
     val view = relation(rel)
-    relationCopy(rel).fold(view)(c => DriverPlan.scan(spark, c, c.schema, Some(view)))
+    store.relationCopy(rel).fold(view)(c => DriverPlan.scan(spark, c, c.schema, Some(view)))
   }
 
   private def evalAggRule(clauses: Seq[HornClause], resolve: String => Option[DataFrame],
@@ -2491,6 +2053,8 @@ class CozoDb(val spark: SparkSession) {
     case _ => None
   }
 
+  private[lang] var driverFixpointRounds = 0 // fixpoint rounds completed on the driver, for tests
+
   /** Semi-naive bottom-up fixpoint for a recursive component
     * (eval.rs:113-303, delta threading eval.rs:571-610): round 0
     * evaluates base clauses; each later round re-evaluates, per clause,
@@ -2642,7 +2206,7 @@ class CozoDb(val spark: SparkSession) {
       private var keys = Map.empty[String, Set[UnsafeRow]]
       private def copyScan(rel: String): DataFrame = {
         relation(rel) // access and existence, as the Spark scan checks them
-        relationCopy(rel).fold(throw new FixBackend.Decline)(c => DriverPlan.scan(spark, c, c.schema))
+        store.relationCopy(rel).fold(throw new FixBackend.Decline)(c => DriverPlan.scan(spark, c, c.schema))
       }
       private val restrict = magic(n => records.get(n).map(_ => copyScan(n)))
       private val restrictPlans = mutable.HashMap.empty[String, (AnyRef, org.apache.spark.sql.catalyst.plans.logical.LogicalPlan)]
@@ -2756,9 +2320,9 @@ class CozoDb(val spark: SparkSession) {
           clauses.forall(h => h.body.forall(inFragment) &&
             h.head.flatMap(_.aggr).forall(a => a == "min" || a == "max")) &&
           clauses.flatMap(_.body).forall {
-            case RelApply(n, _, false, _) => inScc(n) || evaluated.get(n).forall(isLocal)
-            case RelApply(n, _, true, _) => relationCopy(n).isDefined
-            case NamedApply(n, _, _) => relationCopy(n).isDefined
+            case RelApply(n, _, false, _) => inScc(n) || evaluated.get(n).forall(Store.isLocal)
+            case RelApply(n, _, true, _) => store.relationCopy(n).isDefined
+            case NamedApply(n, _, _) => store.relationCopy(n).isDefined
             case _ => true
           })
         try Some(new DriverFix) catch { case NonFatal(_) => None }
@@ -2903,11 +2467,7 @@ class CozoDb(val spark: SparkSession) {
   private def relationMutation(op: String, rel: String, spec: SchemaSpec,
                                delta0: DataFrame, bare: Boolean = false): DataFrame = {
     if (op != "create") requireAccess(rel, "normal", s":$op")
-    val rowOp = Seq("put", "insert", "update", "rm", "delete").contains(op)
     val before = records.get(rel)
-    // a row-changing op stales this relation's index caches (only)
-    val prevVersion = versionOf(rel)
-    val thisVersion = if (rowOp) bumpVersion(rel) else prevVersion
     // :create/:replace take their declared columns, defaults and
     // validity from the schema braces: `col: Validity` makes the
     // relation time-travelable, with the assert flag in a synthesized
@@ -2931,25 +2491,19 @@ class CozoDb(val spark: SparkSession) {
         }.select(meta.declared.map(col): _*)
       } else delta0
     val coerced = coerceValidity(rel, meta.validity, meta.assertCol, withDefaults)
-    val overlayable = rowOp && !meta.bare
-    // The delta as a driver-local frame: as it is when it already is one
-    // (a const rule), else fetched in one bounded collect when the write
-    // may go to the overlay. Anything else is checkpointed lazily so
-    // repeated reads of the relation don't recompute its defining query
-    // — note that under AQE `localCheckpoint(eager = false)` still runs
-    // every shuffle map stage when the checkpoint is created.
-    val local: Option[DataFrame] =
-      if (isLocal(coerced)) Some(coerced)
-      else if (!overlayable) None
-      else patchRows(coerced).map(rs => localFrame(rs, coerced.schema.fields.toSeq: _*))
-    val delta = local.getOrElse(coerced.ckptLazy())
     // first FULL-WIDTH data into a schema-only relation: adopt the
     // delta's Spark schema (the placeholder's column NAMES stay
     // authoritative). A keys-only rm/delete must NOT narrow the schema
     // (tests.rs deletion: a failed partial delete used to corrupt the
     // relation to its key columns).
-    if (meta.bare && meta.declared.forall(delta.columns.contains))
-      update(rel)(_.copy(view = delta.limit(0), bare = false))
+    if (meta.bare && meta.declared.forall(coerced.columns.contains))
+      store.register(rel)(_ => meta.copy(view = localFrame(Nil, coerced.schema.fields.toSeq: _*),
+        overlay = None, bare = false))
+    // Anything not driver-local is checkpointed lazily so repeated reads
+    // of the relation don't recompute its defining query — note that
+    // under AQE `localCheckpoint(eager = false)` still runs every
+    // shuffle map stage when the checkpoint is created.
+    lazy val delta = if (Store.isLocal(coerced)) coerced else coerced.ckptLazy()
     op match {
       case "create" | "replace" =>
         if (op == "create" && before.isDefined)
@@ -2957,305 +2511,21 @@ class CozoDb(val spark: SparkSession) {
         registerTable(rel, delta,
           if (spec.keys.nonEmpty) spec.keys else before.fold(delta.columns.toSeq)(_.keys),
           meta.validity, meta.assertCol)
-        update(rel)(_.copy(declared = meta.declared, defaults = meta.defaults, bare = bare))
+        store.update(rel)(_.copy(declared = meta.declared, defaults = meta.defaults, bare = bare))
         before.foreach(b => fireMutation(rel, "replace", delta, b.view))
-      case _ if rowOp =>
-        // rows about to be replaced/removed — `_old` for triggers and
+        delta
+      case "put" | "insert" | "update" | "rm" | "delete" =>
+        val view = relation(rel)
+        val written = store.write(rel, op, coerced)
+        // the rows replaced or removed — `_old` for triggers and
         // callbacks (stored.rs:714; an immutable plan over the view
         // before the write)
-        val old = Mutations.keyFilter(relation(rel), delta, meta.keys, "left_semi")
-        if (!(overlayable && local.isDefined && overlayWrite(op, rel, delta, prevVersion, thisVersion))) {
-          val cur = relation(rel)
-          val next = (op match {
-            case "put" => Mutations.put(cur, delta, meta.keys)
-            case "insert" => Mutations.insert(cur, delta, meta.keys)
-            case "update" => Mutations.update(cur, delta, meta.keys)
-            case "rm" => Mutations.rm(cur, delta, meta.keys)
-            case _ => Mutations.delete(cur, delta, meta.keys)
-          }).ckptLazy()
-          update(rel)(_.copy(view = next, overlay = None))
-          overlayFolds += 1
-        }
-        fireMutation(rel, if (op == "rm" || op == "delete") "rm" else "put", delta, old)
-      case "ensure" => Mutations.ensure(relation(rel), delta)
-      case "ensure_not" => Mutations.ensureNot(relation(rel), delta)
+        fireMutation(rel, if (op == "rm" || op == "delete") "rm" else "put", written,
+          Mutations.keyFilter(view, written, meta.keys, "left_semi"))
+        written
+      case "ensure" => Mutations.ensure(relation(rel), delta); delta
+      case "ensure_not" => Mutations.ensureNot(relation(rel), delta); delta
       case other => throw CompileException(s"unknown relation op :$other")
-    }
-    if (rowOp) maintainIndexes(rel, op, delta, prevVersion, thisVersion, before.map(_.view.schema))
-    delta
-  }
-
-  /** True when `df` plans to a driver-local relation: collecting it
-    * runs no Spark job, and its statistics are exact. */
-  private def isLocal(df: DataFrame): Boolean =
-    df.queryExecution.optimizedPlan.isInstanceOf[org.apache.spark.sql.catalyst.plans.logical.LocalRelation]
-
-  private[lang] var overlayWrites = 0 // row writes the overlay absorbed, for tests
-  private[lang] var overlayFolds = 0  // base rewrites: folded row writes and compacted overlays
-
-  /** `base` minus every overlay key, plus the overlay's live rows. */
-  private def overlayView(keys: Seq[String], ov: Overlay): DataFrame = {
-    val kept = overlayMatch(ov.base, keys, ov.rows.keys, hit = false)
-    val live = ov.rows.values.flatten.toSeq
-    if (live.isEmpty) kept
-    else kept.unionByName(localFrame(live, ov.base.schema.fields.map(_.copy(nullable = true)).toSeq: _*))
-  }
-
-  /** The rows of `base` whose key is (`hit`) or is not among `keySet`
-    * (keys of [[overlayKey]]), matched as Spark's NULL-safe `<=>` does,
-    * by an IN filter, which adds no job to a read: over the key column
-    * when there is one, else over the struct of the key columns
-    * (compared field by field, NULLs equal). */
-  private def overlayMatch(base: DataFrame, keys: Seq[String], keySet: Iterable[Seq[Any]],
-                           hit: Boolean): DataFrame = {
-    val types = keys.map(k => base.schema(k).dataType)
-    val tuples = keySet.toSeq
-    val matched =
-      if (keys.length == 1) {
-        val vs = tuples.map(_.head)
-        // a hashed IN compares floats by boxed equality: list -0.0 beside 0.0
-        val lits = vs.filter(_ != null).flatMap {
-          case d: Double if d == 0.0 => Seq(0.0, -0.0)
-          case f: Float if f == 0.0f => Seq(0.0f, -0.0f)
-          case v => Seq(v)
-        }.map(lit(_).cast(types.head))
-        val in = if (lits.isEmpty) lit(false) else coalesce(col(keys.head).isin(lits: _*), lit(false))
-        if (vs.contains(null)) in || col(keys.head).isNull else in
-      } else if (tuples.isEmpty) lit(false)
-      else struct(keys.indices.map(i => col(keys(i)).as(s"_$i")): _*).isin(tuples.map(vs =>
-        struct(vs.indices.map(i => lit(vs(i)).cast(types(i)).as(s"_$i")): _*)): _*)
-    base.filter(if (hit) matched else !matched)
-  }
-
-  /** The overlay key of `values` (types as the relation's key columns),
-    * or None when the overlay and [[overlayMatch]] could disagree on it:
-    * a NaN, or a type whose driver equality is not Spark's (a key of
-    * such a type takes the fold path). */
-  private def overlayKey(values: Seq[Any], types: Seq[DataType]): Option[Seq[Any]] = {
-    val out = values.zip(types).map {
-      case (null, _) => Some(null)
-      case (d: Double, _) => if (d.isNaN) None else Some(if (d == 0.0) 0.0 else d)
-      case (f: Float, _) => if (f.isNaN) None else Some(if (f == 0.0f) 0.0f else f)
-      case (v, LongType | IntegerType | ShortType | ByteType | StringType | BooleanType |
-               DateType | TimestampType | TimestampNTZType) => Some(v)
-      case _ => None
-    }
-    if (out.forall(_.isDefined)) Some(out.map(_.get)) else None
-  }
-
-  /** The rows of `df` when it has at most [[Knee.PatchKeys]] of them. */
-  private def patchRows(df: DataFrame): Option[Seq[Row]] = {
-    val max = Knee.PatchKeys.value.toInt
-    Some(df.limit(max + 1).collect().toSeq).filter(_.length <= max)
-  }
-
-  /** Apply a row write to `rel`'s write overlay, which moves it from
-    * version `prevVer` to `thisVer`. `delta` is driver-local. put and rm
-    * run no job; insert, delete and update read the rows of the keys the
-    * overlay does not hold to check existence or fetch the old rows:
-    * from the copy held at `prevVer` by key range, no job, else from the
-    * base ([[overlayMatch]], one job). The written keys then patch that
-    * copy ([[patchCopy]]). Raises the op's errors with the rows
-    * unchanged. Returns false — the caller folds — when the write would
-    * change a column type, holds two rows for one key, has a key the
-    * overlay cannot hold, takes the overlay past [[Knee.PatchKeys]]
-    * keys, or probes a key the base holds twice. */
-  private def overlayWrite(op: String, rel: String, delta: DataFrame, prevVer: Long, thisVer: Long): Boolean = {
-    val r = stored(rel)
-    val keys = r.keys
-    val cur = relation(rel)
-    val cols = op match {
-      case "put" | "insert" => cur.columns.toSeq
-      case "update" => keys ++ delta.columns.filterNot(keys.contains)
-      case _ => keys
-    }
-    if (!cols.forall(c => delta.columns.contains(c) && cur.columns.contains(c))) return false
-    val target = cur.select(cols.map(col): _*)
-    // a write that would change a column type folds (the union's types
-    // come from analysis alone, no job)
-    val unionTypes = scala.util.Try(
-      target.unionByName(delta.select(cols.map(col): _*)).schema.map(_.dataType)).toOption
-    if (!unionTypes.contains(target.schema.map(_.dataType))) return false
-    // the delta's rows in the relation's types, readable by name
-    val typed = delta.select(target.schema.map(f => col(f.name).cast(f.dataType).as(f.name)): _*)
-      .collect().toSeq
-    if (typed.length > Knee.PatchKeys.value) return false
-    val keyTypes = keys.map(k => target.schema(k).dataType)
-    val keyOpts = typed.map(r => overlayKey(keys.map(k => r.getAs[Any](k)), keyTypes))
-    if (keyOpts.exists(_.isEmpty)) return false
-    val deltaKeys = keyOpts.flatten
-    if (op != "rm" && op != "delete" && deltaKeys.distinct.length != deltaKeys.length) return false
-    // a new overlay pins its base lazily — the next read materializes it,
-    // no job here — so reads of a written relation scan checkpoint blocks
-    // instead of recomputing the base's defining plan
-    val ov = r.overlay.getOrElse(Overlay(cur.queryExecution.logical match {
-      case _: org.apache.spark.sql.execution.LogicalRDD |
-           _: org.apache.spark.sql.catalyst.plans.logical.LocalRelation => cur
-      case _ => cur.ckptLazy()
-    }, Map.empty))
-    if ((ov.rows.keySet ++ deltaKeys).size > Knee.PatchKeys.value) return false
-    // base rows of the keys the overlay does not hold, for the ops that
-    // check existence or read old rows
-    val unknown = deltaKeys.distinct.filterNot(ov.rows.contains)
-    val baseRows: Map[Seq[Any], Row] =
-      if (op == "put" || op == "rm" || unknown.isEmpty) Map.empty
-      else copyRows(rel, prevVer, unknown) match {
-        case Some(runs) =>
-          // a run of two rows: the base holds a key twice — fold
-          if (runs.values.exists(_.length > 1)) return false
-          runs.collect { case (k, Seq(r)) => k -> r }
-        case None =>
-          val got = overlayMatch(ov.base, keys, unknown, hit = true).collect().toSeq
-          val byKey = got.flatMap(r => overlayKey(keys.map(r.getAs[Any](_)), keyTypes).map(_ -> r)).toMap
-          // more rows than keys: the base holds a key twice — fold
-          if (got.length > unknown.length || byKey.size != got.length) return false
-          byKey
-      }
-    def current(k: Seq[Any]): Option[Row] = ov.rows.getOrElse(k, baseRows.get(k))
-    // a failed write leaves the rows, and so the copy, as they were
-    val written: Seq[(Seq[Any], Option[Row])] = try op match {
-      case "put" => deltaKeys.zip(typed.map(Some(_)))
-      case "rm" => deltaKeys.map(_ -> None)
-      case "insert" =>
-        val clash = deltaKeys.count(current(_).isDefined)
-        if (clash > 0) throw new IllegalStateException(s"insert: $clash key(s) already exist")
-        deltaKeys.zip(typed.map(Some(_)))
-      case "delete" =>
-        val missing = deltaKeys.count(current(_).isEmpty)
-        if (missing > 0) throw new IllegalStateException(s"delete: $missing key(s) not present")
-        deltaKeys.map(_ -> None)
-      case _ => // update: the old row with the delta's non-key columns
-        val schema = StructType(cur.schema.fields)
-        val at = cols.filterNot(keys.contains).map(c => cur.columns.indexOf(c) -> c)
-        deltaKeys.zip(typed).map { case (k, r) =>
-          val vs = current(k).getOrElse(
-            throw new IllegalStateException("update: key to update does not exist")).toSeq.toArray
-          at.foreach { case (j, c) => vs(j) = r.getAs[Any](c) }
-          k -> Some(new org.apache.spark.sql.catalyst.expressions.GenericRowWithSchema(vs, schema))
-        }
-    } catch { case e: IllegalStateException => restampCopy(rel, prevVer, thisVer); throw e }
-    val next = Overlay(ov.base, ov.rows ++ written)
-    update(rel)(_.copy(overlay = Some(next), view = overlayView(keys, next)))
-    patchCopy(rel, prevVer, thisVer, written)
-    overlayWrites += 1
-    true
-  }
-
-  /** Incremental search-index maintenance on mutation (the reference
-    * updates index entries inside the mutation tx, fts/indexing.rs).
-    * Driver-resident indexes patch in place from the changed rows: the
-    * changed keys and their post-mutation rows are collected (one small
-    * job each), FTS re-tokenizes those documents, HNSW rebuilds only the
-    * hash buckets they touch. A distributed FTS index or LSH band table
-    * absorbs the mutation as a broadcast anti-join on the changed keys
-    * plus an O(|delta|) tokenization/signature pass over the new rows —
-    * NOT the full-corpus recompute a cache drop would cost on the next
-    * probe. Distributed chains are bounded: after [[ftsMaxDeltas]]
-    * stacked deltas the cache is dropped and the next probe compacts to
-    * a freshly built artifact (checkpoint-block hygiene — the LSM
-    * compaction analogue). `::replace` and schema changes re-register
-    * the relation, which bumps its version and drops its caches. */
-  private[lang] val ftsMaxDeltas = 32
-  private[lang] var indexFullBuilds = 0 // full builds, both branches; observability for tests
-  private[lang] var indexPatches = 0    // distributed HNSW partition patches, for tests
-  private[lang] var indexGraphLoads = 0 // distributed HNSW restore shuffles, for tests
-  private[lang] var indexDriverBuilds = 0  // full builds that chose the driver branch
-  private[lang] var indexDriverPatches = 0 // driver-index patches (FTS and HNSW)
-  private[lang] var indexDriverProbes = 0  // probes served by a driver-resident index
-  private def maintainIndexes(rel: String, op: String, delta: DataFrame, prev: Long, cur: Long,
-                              schemaBefore: Option[StructType]): Unit = indexCacheLock.synchronized {
-    // indexes with nothing cached rebuild fresh on their next probe
-    val targets = records.get(rel).toSeq.flatMap(_.indexes).filter(t => indexArtifacts.contains(t._1))
-    if (targets.isEmpty) return
-    val key = keyColOf(rel)
-    // A cache may be patched ONLY if it was current right before this
-    // mutation (stamped `prev`) and the relation still is at this
-    // mutation's version. Anything older is stale (an interleaved
-    // mutation, a tx abort) — applying a delta to it and re-stamping
-    // would launder the staleness into a "fresh" wrong index, so drop
-    // it instead. Anything stamped `cur` or later (a trigger probed and
-    // rebuilt mid-mutation, which sees post-mutation data) is already
-    // correct — leave it alone.
-    val patchable = delta.columns.contains(key) && versionOf(rel) == cur
-    lazy val changedIds = delta.select(col(key)).dropDuplicates().ckptLazy()
-    // post-mutation rows for the changed keys: present for put/insert/
-    // update, naturally empty for rm/delete
-    lazy val added = relation(rel).join(changedIds, Seq(key), "left_semi")
-    def hasCol(c: String) = relation(rel).columns.contains(c)
-    // Driver indexes patch from the changed keys and their post-mutation
-    // rows, in the relation's column types: a put/insert's rows are its
-    // delta (no read of the new relation), an update's are read back,
-    // an rm's are none. A write that changes the relation's column types
-    // or touches more than Knee.PatchKeys keys drops them instead
-    // (the next probe rebuilds and re-decides the branch).
-    val driverPatchable = patchable &&
-      schemaBefore.map(_.map(f => f.name -> f.dataType)) ==
-        Some(relation(rel).schema.map(f => f.name -> f.dataType))
-    /** (changed keys as `keyCol` reads them, their post-mutation rows
-      * through `project`, whose first column is `keyCol`), or None past
-      * Knee.PatchKeys. */
-    def driverDelta(keyCol: Column)(project: DataFrame => DataFrame)
-        : Option[(Seq[Any], Seq[Row])] = {
-      if (op == "put" || op == "insert")
-        patchRows(project(delta.select(relation(rel).schema.map(f =>
-          col(f.name).cast(f.dataType)): _*))).map(rs => (rs.map(_.get(0)).distinct, rs))
-      else patchRows(delta.select(keyCol)).map(_.map(_.get(0)).distinct).map { keys =>
-        val rows =
-          if (op != "update") Nil
-          else project(relation(rel).filter(col(key).isin(keys: _*))).collect().toSeq
-        (keys, rows)
-      }
-    }
-    /** A patched driver index that still fits the byte gate. */
-    def gated[A](gate: String, bytes: A => Long)(patched: Option[A]): Option[A] =
-      patched.filter(a => Knee.gate(gate, bytes(a), Knee.DriverIndexBytes))
-        .map { a => indexDriverPatches += 1; a }
-    for ((target, (spec, _)) <- targets) indexArtifacts(target) match {
-      case (v, _) if v >= cur => ()
-      case (v, artifact) =>
-        val next: Option[IndexArtifact] = if (v != prev || !patchable) None else (spec, artifact) match {
-          case (f: FtsIdx, DistFts(ix, n)) if hasCol(f.extractor) && n < ftsMaxDeltas =>
-            Some(DistFts(graft.search.Fts.Index.applyDelta(ix, changedIds,
-              extractFiltered(added, f.extractor, f.extractFilter), key, f.extractor), n + 1))
-          case (f: FtsIdx, DriverFts(d)) if driverPatchable && hasCol(f.extractor) =>
-            gated[graft.search.DriverFts]("fts_index", _.bytes)(driverDelta(col(key))(df =>
-              graft.search.DriverFts.docTokens(extractFiltered(df, f.extractor, f.extractFilter),
-                key, f.extractor, f.pipe)).map { case (keys, rows) =>
-              d.patch(keys, graft.search.DriverFts.tokenRows(rows))
-            }).map(DriverFts)
-          case (l: LshIdx, LshBands(bands, n)) if hasCol(l.extractor) && n < ftsMaxDeltas =>
-            Some(LshBands(bands.join(broadcast(changedIds), Seq(key), "left_anti")
-              .unionByName(lshBandsOf(added, key, l)).ckptLazy(), n + 1))
-          // HNSW graphs: rows hash to their bucket by node id, so a
-          // mutation rebuilds ONLY the affected buckets' graphs — and a
-          // patched index equals a full rebuild exactly (per-bucket
-          // insertion order is pinned), so no delta chain and no
-          // compaction bound apply; the next probe reloads the graphs.
-          case (vi: VecIdx, DistHnsw(dir, loaded)) if hnswIndexEligible(vi) =>
-            val (mEff, efcEff) = hnswBuildParams(vi)
-            graft.similarity.Ann.hnswPatchIndex(dir, hnswCorpus(vi, hnswAdmitted(vi), key),
-              hnswChangedGids(vi, changedIds, key),
-              mEff, efcEff, metric = hnswWalkMetric(vi.distance).get,
-              extendCandidates = vi.extendCandidates, keepPruned = vi.keepPruned)
-            indexPatches += 1
-            loaded.foreach(_.unpersist(blocking = false))
-            Some(DistHnsw(dir, None))
-          case (vi: VecIdx, DriverHnsw(b)) if driverPatchable && hnswIndexEligible(vi) =>
-            val nF = vi.fields.length
-            val admitted = vi.filter.fold(lit(true))(e =>
-              coalesce(compiler(_ => None, Map.empty).compileExpr(e), lit(false)))
-            gated[graft.similarity.HnswBuckets]("hnsw_index", _.bytes)(
-              driverDelta(col(key).cast("long"))(_.select(col(key).cast("long") +: vi.fields.map(f =>
-                when(admitted, col(f).cast("array<float>"))): _*)).map { case (keys, rows) =>
-                b.patch(
-                  keys.flatMap(k => (0 until nF).map(i => k.asInstanceOf[Long] * nF + i)),
-                  rows.flatMap(r => (0 until nF).collect { case i if !r.isNullAt(i + 1) =>
-                    (r.getLong(0) * nF + i, r.getSeq[Float](i + 1).toArray)
-                  }))._1
-              }).map(DriverHnsw)
-          case _ => None
-        }
-        next.fold(dropIndexCaches(target))(a => indexArtifacts(target) = (cur, a))
     }
   }
 

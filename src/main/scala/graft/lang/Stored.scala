@@ -8,12 +8,12 @@ import scala.collection.immutable.VectorMap
   * kept beside them — cozo's one metadata record per relation
   * (`StoredRelationMetadata { keys, non_keys }`, relation.rs:121-124)
   * plus access level, description, indexes and triggers. An immutable
-  * value: [[CozoDb]]'s lifecycle paths replace, remove or re-key it, and
-  * a transaction snapshot is a copy of the map that holds it. */
+  * value held by the [[Store]], whose transitions replace, remove or
+  * re-key it; a transaction snapshot is a copy of the map that holds it. */
 private[lang] final case class StoredRelation(
     view: DataFrame,                 // the base, or the view over base and overlay
     keys: Seq[String],
-    version: Long,                   // new on every change of the rows; artifacts cache on it
+    version: Long,                   // new on every Store transition; artifacts are stamped with it
     overlay: Option[Overlay] = None,
     validity: Option[String] = None,
     assertCol: Option[String] = None,
@@ -30,7 +30,8 @@ private[lang] final case class StoredRelation(
 /** A relation's write overlay: per key (the key columns' values, in
   * the relation's key order, floats with -0.0 read as 0.0), the
   * written row in the relation's column order and types, or None for
-  * a removed key. Readers see `CozoDb.overlayView`. */
+  * a removed key. Readers see `Store.overlayView`: the base minus the
+  * overlay keys, plus the live rows. */
 private[lang] final case class Overlay(base: DataFrame, rows: Map[Seq[Any], Option[Row]])
 
 private[lang] sealed trait IndexSpec { def rel: String }
@@ -61,19 +62,21 @@ private[lang] final case class PlainIdx(rel: String, cols: Seq[String]) extends 
 
 /** The cached artifact of one index, or of one relation (its driver
   * copy, under the relation's own name): driver-resident under the byte
-  * gate, else distributed. `deltas` counts the mutations a distributed
-  * FTS or LSH artifact absorbed since its full build. */
+  * gate, else distributed. A row write the overlay absorbs patches every
+  * kind from its one delta; a fold patches the distributed kinds and
+  * retires the driver ones. `deltas` counts the writes a distributed FTS
+  * or LSH artifact absorbed since its full build. */
 private[lang] sealed trait IndexArtifact
 private[lang] object IndexArtifact {
   final case class DriverFts(d: graft.search.DriverFts) extends IndexArtifact
   final case class DistFts(ix: graft.search.Fts.Index, deltas: Int) extends IndexArtifact
   final case class LshBands(df: DataFrame, deltas: Int) extends IndexArtifact
   final case class DriverHnsw(b: graft.similarity.HnswBuckets) extends IndexArtifact
-  /** Persisted graphs, and the executor-cached restored ones. */
   /** The relation's rows sorted by its key columns, or None when they
     * did not fit the gate (a refusal, cached so the next reader of the
     * same version does not probe again). */
   final case class RelationCopy(rows: Option[graft.plan.DriverRows]) extends IndexArtifact
+  /** Persisted graphs, and the executor-cached restored ones. */
   final case class DistHnsw(dir: String,
                             loaded: Option[org.apache.spark.rdd.RDD[graft.similarity.HnswIndex]])
       extends IndexArtifact

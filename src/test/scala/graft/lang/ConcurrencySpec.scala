@@ -56,7 +56,7 @@ class ConcurrencySpec extends AnyFunSuite {
       assert(hits == Set("a", "b"))
     }
     // exactly one build served every prober
-    assert(db.indexFullBuilds == 1L)
+    assert(db.store.indexFullBuilds == 1L)
   }
 
   test("::kill from another thread interrupts a writer holding the exclusive lock") {
@@ -136,7 +136,7 @@ class ConcurrencySpec extends AnyFunSuite {
       val nearest = db.run(s"?[k] := ~ce:g{k | query: ${v(100 + writes)}, k: 1}")
         .collect().map(_.getLong(0)).toSeq
       assert(nearest == Seq(100L + writes), s"gate $gate")
-      if (gate < 0) assert(db.indexDriverBuilds == 0, "an index build took the driver branch")
+      if (gate < 0) assert(db.store.indexDriverBuilds == 0, "an index build took the driver branch")
     }
   }
 }

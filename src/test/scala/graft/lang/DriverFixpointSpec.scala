@@ -79,7 +79,7 @@ class DriverFixpointSpec extends AnyFunSuite {
       val db = chainDb(n)
       val (rows, lines) = KneeLog.capture(db.run(script).collect().toSeq.map(_.toSeq))
       (rows.toSet, db.lastFixpointStats, lines.filter(_.contains("op=fixpoint")),
-        db.driverFixpointRounds, db.relationCopyBuilds)
+        db.driverFixpointRounds, db.store.relationCopyBuilds)
     }
 
   test("a round whose rows pass the driver heap budget hands off before it is built") {

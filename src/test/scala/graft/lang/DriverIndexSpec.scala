@@ -2,6 +2,7 @@ package graft.lang
 
 import graft.SparkFixture
 import graft.plan.Knee
+import org.apache.spark.sql.graftbridge.ListenerBridge
 import org.scalatest.funsuite.AnyFunSuite
 
 /** Driver-resident FTS/HNSW indexes against the distributed branch.
@@ -16,7 +17,7 @@ import org.scalatest.funsuite.AnyFunSuite
   * relation never rebuilds or reloads another's index, and every way of
   * replacing a relation's rows (re-registration, import, restore,
   * remove + re-create, transaction abort) stops a probe from serving the
-  * old rows.
+  * old rows, while a failed write or a trigger's probe rebuilds nothing.
   */
 class DriverIndexSpec extends AnyFunSuite {
   lazy val spark = SparkFixture.spark
@@ -85,8 +86,8 @@ class DriverIndexSpec extends AnyFunSuite {
     for (kind <- Seq("tf_idf", "tf", "bm25"))
       assertSame(dbs, s"qs[q] <- [$stream]\n" +
         s"?[q, k, s] := qs[q], ~docs:fts{k | query: q, k: 60, score_kind: '$kind', bind_score: s}")
-    assert(dbs._1.db.indexDriverBuilds == 1 && dbs._1.db.indexDriverProbes > 0)
-    assert(dbs._2.db.indexDriverBuilds == 0 && dbs._2.db.indexDriverProbes == 0)
+    assert(dbs._1.db.store.indexDriverBuilds == 1 && dbs._1.db.indexDriverProbes > 0)
+    assert(dbs._2.db.store.indexDriverBuilds == 0 && dbs._2.db.indexDriverProbes == 0)
     // the index internals scan the same postings
     assertSame(dbs, "?[w, k, p, n] := *docs:fts{word: w, src_k: k, position: p, total_length: n}")
   }
@@ -97,7 +98,7 @@ class DriverIndexSpec extends AnyFunSuite {
     both(dbs)("::fts create docs:fts {extractor: v, tokenizer: Simple, filters: [Lowercase]}")
     val probe = "?[k, s] := ~docs:fts{k | query: 'apple OR berry OR ap*', k: 40, bind_score: s}"
     assertSame(dbs, probe)
-    val builds = dbs._1.db.indexFullBuilds
+    val builds = dbs._1.db.store.indexFullBuilds
     val more = docRows(45, 3).drop(30)
     both(dbs)(s"?[k, v, g] <- [${docLits(more)}] :put docs {k => v, g}")
     assertSame(dbs, probe)
@@ -108,9 +109,73 @@ class DriverIndexSpec extends AnyFunSuite {
     both(dbs)("?[k, v] <- [[4, 'berry berry']] :update docs {k => v}")
     val hits = assertSame(dbs, probe)
     assert(hits.exists(_.startsWith("4|")) && !hits.exists(_.startsWith("1|")))
-    assert(dbs._1.db.indexFullBuilds == builds, "mutations patch the driver index")
-    assert(dbs._1.db.indexDriverPatches == 4)
-    assert(dbs._2.db.indexDriverBuilds == 0, "an index build took the driver branch")
+    assert(dbs._1.db.store.indexFullBuilds == builds, "mutations patch the driver index")
+    assert(dbs._1.db.store.indexDriverPatches == 4)
+    assert(dbs._2.db.store.indexDriverBuilds == 0, "an index build took the driver branch")
+  }
+
+  test("FTS: a :put whose rows repeat a key keeps one row per key; driver == distributed") {
+    val dbs = pair()
+    both(dbs)(s"?[k, v, g] <- [${docLits(docRows(10, 5))}] :create docs {k => v, g}")
+    both(dbs)("::fts create docs:fts {extractor: v, tokenizer: Simple, filters: [Lowercase]}")
+    val probe = "?[k, s] := ~docs:fts{k | query: 'apple OR banana', k: 20, bind_score: s}"
+    assertSame(dbs, probe)
+    both(dbs)("?[k, v, g] <- [[3, 'apple', 0], [3, 'banana banana', 0]] :put docs {k => v, g}")
+    assert(assertSame(dbs, "?[v] := *docs{k: 3, v}") == Seq("banana banana"))
+    assertSame(dbs, probe)
+  }
+
+  test("a failed :insert or :delete rebuilds no index and no relation copy") {
+    val sides = Seq("driver" -> new Side(new CozoDb(spark)),
+      "distributed" -> new Side(new CozoDb(spark), Knee.DriverIndexBytes -> -1L),
+      "fold" -> new Side(new CozoDb(spark), Knee.PatchKeys -> 0L))
+    for ((name, side) <- sides) side { db =>
+      db.run(s"?[k, v, g] <- [${docLits(docRows(20, 6))}] :create docs {k => v, g}")
+      db.run("::fts create docs:fts {extractor: v}")
+      def read(): Unit = {
+        db.run("?[k] := ~docs:fts{k | query: 'apple', k: 5}").collect()
+        db.run("?[v] := *docs{k: 4, v}").collect()
+      }
+      read()
+      val built = (db.store.indexFullBuilds, db.store.relationCopyBuilds)
+      for (failing <- Seq("?[k, v, g] <- [[2, 'fig', 0]] :insert docs {k => v, g}",
+                          "?[k] <- [[99]] :delete docs {k}")) {
+        intercept[Exception](db.run(failing).collect())
+        read()
+        assert((db.store.indexFullBuilds, db.store.relationCopyBuilds) == built, s"$name: $failing")
+      }
+    }
+  }
+
+  test("a put trigger's probe sees the patched index: no full build, one driver patch") {
+    val db = new CozoDb(spark)
+    db.run("?[k, v] <- [[1, 'apple pie'], [2, 'banana split']] :create docs {k => v}")
+    db.run("?[k, n] <- [[0, 0]] :create hits {k => n}")
+    db.run("::fts create docs:fts {extractor: v}")
+    db.run("?[k] := ~docs:fts{k | query: 'apple', k: 5}").collect()
+    db.run("""::set_triggers docs
+             |on put { ?[k, n] := ~docs:fts{k | query: 'cherry', k: 5}, n = 1 :put hits {k => n} }""".stripMargin)
+    val builds = db.store.indexFullBuilds
+    db.run("?[k, v] <- [[3, 'cherry tart']] :put docs {k => v}").collect()
+    assert(rows(db, "?[k, n] := *hits{k, n}") == Seq("0|0", "3|1"))
+    assert(db.store.indexFullBuilds == builds && db.store.indexDriverPatches == 1)
+  }
+
+  test(":update of a driver-indexed relation over spark.range runs no Spark job") {
+    val db = new CozoDb(spark)
+    db.registerTable("docs", spark.range(0, 40).selectExpr("id AS k", "concat('doc ', id) AS v"), Seq("k"))
+    db.run("::fts create docs:fts {extractor: v}")
+    db.run("?[k] := ~docs:fts{k | query: 'doc', k: 1}").collect()
+    db.run("?[v] := *docs{k: 3, v}").collect() // builds the copy the update reads the old row from
+    // with another key in the overlay, a read of the updated key scans the base
+    db.run("?[k, v] <- [[100, 'fig']] :put docs {k => v}").collect()
+    val builds = db.store.indexFullBuilds
+    val jobs = ListenerBridge.measure(spark.sparkContext, "driver-index-update") {
+      db.run("?[k, v] <- [[3, 'cherry tart']] :update docs {k => v}").collect()
+    }.jobs
+    assert(jobs == 0)
+    assert(rows(db, "?[k] := ~docs:fts{k | query: 'cherry', k: 5}") == Seq("3"))
+    assert(db.store.indexFullBuilds == builds && db.store.indexDriverPatches == 2)
   }
 
   private def vec(i: Int, salt: Double): String =
@@ -132,8 +197,8 @@ class DriverIndexSpec extends AnyFunSuite {
         s"?[q, k, d] := qs[q], *vs{k: q, v}, ~vs:$ix{k | query: v, k: 4, bind_distance: d}")
     }
     check()
-    assert(dbs._1.db.indexDriverBuilds == 4 && dbs._2.db.indexDriverBuilds == 0)
-    val builds = dbs._1.db.indexFullBuilds
+    assert(dbs._1.db.store.indexDriverBuilds == 4 && dbs._2.db.store.indexDriverBuilds == 0)
+    val builds = dbs._1.db.store.indexFullBuilds
     both(dbs)(s"?[k, v, w, g] <- [[100, ${vec(100, 0)}, ${vec(100, 1)}, 0], " +
       s"[5, ${vec(500, 0)}, ${vec(501, 0)}, 1]] :put vs {k => v, w, g}")
     check()
@@ -141,7 +206,7 @@ class DriverIndexSpec extends AnyFunSuite {
     check()
     both(dbs)(s"?[k, v] <- [[9, ${vec(900, 0)}]] :update vs {k => v}")
     check()
-    assert(dbs._1.db.indexFullBuilds == builds, "mutations patch the driver graphs")
+    assert(dbs._1.db.store.indexFullBuilds == builds, "mutations patch the driver graphs")
     // an aborted transaction's writes leave no trace in either branch
     for (side <- Seq(dbs._1, dbs._2)) side { db =>
       val tx = db.multiTransaction()
@@ -170,17 +235,17 @@ class DriverIndexSpec extends AnyFunSuite {
       }
       probeAll()
       val (builds, loads, patches, dpatches) =
-        (db.indexFullBuilds, db.indexGraphLoads, db.indexPatches, db.indexDriverPatches)
+        (db.store.indexFullBuilds, db.store.indexGraphLoads, db.store.indexPatches, db.store.indexDriverPatches)
       db.run("?[a, b] <- [[2, 3]] :put other {a => b}")
       db.run("?[a] <- [[1]] :rm other {a}")
       probeAll()
-      assert((db.indexFullBuilds, db.indexGraphLoads, db.indexPatches, db.indexDriverPatches) ==
+      assert((db.store.indexFullBuilds, db.store.indexGraphLoads, db.store.indexPatches, db.store.indexDriverPatches) ==
         (builds, loads, patches, dpatches), s"gate $gate: other's writes touched an index")
       // a write to docs patches docs' index only; vs' graphs are not reloaded
       db.run("?[k, v, g] <- [[500, 'apple pie', 0]] :put docs {k => v, g}")
       probeAll()
-      assert(db.indexFullBuilds == builds && db.indexGraphLoads == loads, s"gate $gate")
-      if (gate < 0) assert(db.indexDriverBuilds == 0, "an index build took the driver branch")
+      assert(db.store.indexFullBuilds == builds && db.store.indexGraphLoads == loads, s"gate $gate")
+      if (gate < 0) assert(db.store.indexDriverBuilds == 0, "an index build took the driver branch")
     }
   }
 
@@ -219,10 +284,10 @@ class DriverIndexSpec extends AnyFunSuite {
       db.restore(dir)
       assert(ftsHits("apple") == Set(3L) && vecHits() == Seq(5L), s"gate $gate: restore")
       // ::remove, then re-create the relation and its index
-      val dirs = db.indexArtifactDirs
+      val dirs = db.store.indexArtifactDirs
       db.run("::remove d")
       db.run("::remove p")
-      assert(db.cachedIndexTargets.isEmpty, s"gate $gate: removal leaks index caches")
+      assert(db.store.cachedIndexTargets.isEmpty, s"gate $gate: removal leaks index caches")
       assert(dirs.forall(d => !new java.io.File(d).exists), s"gate $gate: removal leaks graph dirs")
       db.run("?[k, v] <- [[7, 'fresh apple']] :create d {k => v}")
       db.run("::fts create d:fts {extractor: v}")
@@ -235,7 +300,7 @@ class DriverIndexSpec extends AnyFunSuite {
       assert(ftsHits("apple") == Set(7L, 11L))
       tx.abort()
       assert(ftsHits("apple") == Set(7L), s"gate $gate: abort")
-      if (gate < 0) assert(db.indexDriverBuilds == 0, "an index build took the driver branch")
+      if (gate < 0) assert(db.store.indexDriverBuilds == 0, "an index build took the driver branch")
     }
   }
 }

@@ -19,7 +19,7 @@ class IndexesSpec extends AnyFunSuite {
     Knee.withLimits(Knee.DriverIndexBytes -> -1L) {
       val db = new CozoDb(spark)
       body(db)
-      assert(db.indexDriverBuilds == 0, "an index build took the driver branch")
+      assert(db.store.indexDriverBuilds == 0, "an index build took the driver branch")
     }
 
   def rows(db: CozoDb, s: String): Seq[Seq[Any]] = db.run(s).collect().toSeq.map(_.toSeq)
@@ -231,20 +231,20 @@ class IndexesSpec extends AnyFunSuite {
       // the persisted graph is cached per epoch: a second probe reuses
       // it, and a mutation PATCHES only the affected hash partitions
       // (no full rebuild — the FTS/LSH incremental-maintenance trade)
-      val builds0 = db.indexFullBuilds
-      val patches0 = db.indexPatches
+      val builds0 = db.store.indexFullBuilds
+      val patches0 = db.store.indexPatches
       hits("graph")
-      assert(db.indexFullBuilds == builds0)
+      assert(db.store.indexFullBuilds == builds0)
       db.run("?[k, v] <- [[999, vec([1.0, 1.0, 1.0, 1.0])]] :put vecs {k => v}")
       hits("graph")
-      assert(db.indexFullBuilds == builds0, "a put must not force a full rebuild")
-      assert(db.indexPatches == patches0 + 1, "the put patches the affected partition")
+      assert(db.store.indexFullBuilds == builds0, "a put must not force a full rebuild")
+      assert(db.store.indexPatches == patches0 + 1, "the put patches the affected partition")
       assert(hits("graph") == hits("exact")) // still agreeing post-mutation
       // a removal patches too, and the removed key stops matching
       db.run("?[k] <- [[999]] :rm vecs {k}")
       assert(hits("graph") == hits("exact"))
-      assert(db.indexFullBuilds == builds0)
-      assert(db.indexPatches == patches0 + 2)
+      assert(db.store.indexFullBuilds == builds0)
+      assert(db.store.indexPatches == patches0 + 2)
       assert(!hits("graph").exists(_._1 == 999L))
     }
   }
@@ -297,10 +297,10 @@ class IndexesSpec extends AnyFunSuite {
             .setScale(4, BigDecimal.RoundingMode.HALF_UP).toDouble)).toSet
       assert(streamHits("gr") == streamHits("ex"))
       // a mutation patches the multi-field graph (both fields' nodes)
-      val patches0 = db.indexPatches
+      val patches0 = db.store.indexPatches
       db.run("?[k, v1, v2] <- [[999, vec([0.5, -0.5, 0.25, 0.9]), vec([0.0, 0.0, 0.0, 1.0])]] :put mfv {k}")
       assert(hits("gr") == hits("ex"))
-      assert(db.indexPatches == patches0 + 1)
+      assert(db.store.indexPatches == patches0 + 1)
       assert(hits("gr").exists(_._1 == 999L)) // the new row's v1 IS the probe
     }
   }
@@ -419,7 +419,7 @@ class IndexesSpec extends AnyFunSuite {
             .setScale(4, BigDecimal.RoundingMode.HALF_UP).toDouble)).toSeq.sortBy(_._1)
       }
       assert(probe("gr", 1) == probe("ex", 1)) // first probe pays the ONE lazy build
-      val builds0 = db.indexFullBuilds
+      val builds0 = db.store.indexFullBuilds
       var next = 100L
       for (step <- 0 until 15) {
         rng.nextInt(3) match {
@@ -437,7 +437,7 @@ class IndexesSpec extends AnyFunSuite {
         assert(probe("gr", s) == probe("ex", s), s"step $step")
       }
       // the whole interleave never forced a full graph rebuild
-      assert(db.indexFullBuilds == builds0, "mutations must patch, not rebuild")
+      assert(db.store.indexFullBuilds == builds0, "mutations must patch, not rebuild")
     }
   }
 
@@ -556,7 +556,7 @@ class IndexesSpec extends AnyFunSuite {
       db.registerTable("cg", data.toDF("k", "v"), Seq("k"))
       db.run("::hnsw create cg:ex { fields: [v], distance: Cosine, dim: 4 }")
       db.run("::hnsw create cg:g { fields: [v], distance: Cosine, dim: 4, m: 8, ef_construction: 48 }")
-      val loads0 = db.indexGraphLoads
+      val loads0 = db.store.indexGraphLoads
       def probe(idx: String, q: String): Seq[(Long, Double)] =
         db.run(s"?[k, d] := ~cg:$idx{k | query: vec([$q]), k: 5, bind_distance: d}")
           .collect().map(r => (r.getLong(0), BigDecimal(r.getDouble(1))
@@ -564,11 +564,11 @@ class IndexesSpec extends AnyFunSuite {
       for (q <- Seq("1.0, 0.0, 0.0, 0.0", "0.0, 1.0, 0.0, 0.0", "0.3, -0.4, 0.5, 0.1"))
         assert(probe("g", q) == probe("ex", q), s"query $q")
       // three probes, ONE restore (the walk reuses the cached graphs)
-      assert(db.indexGraphLoads == loads0 + 1)
+      assert(db.store.indexGraphLoads == loads0 + 1)
       // a mutation patches the artifact and triggers exactly one reload
       db.run("?[k, v] <- [[999, vec([1.0, 0.0, 0.0, 0.0])]] :put cg {k}")
       assert(probe("g", "1.0, 0.0, 0.0, 0.0") == probe("ex", "1.0, 0.0, 0.0, 0.0"))
-      assert(db.indexGraphLoads == loads0 + 2)
+      assert(db.store.indexGraphLoads == loads0 + 2)
     }
   }
 
@@ -667,9 +667,9 @@ class IndexesSpec extends AnyFunSuite {
       assert((0 until 60).forall(i => g.exists(t => t._1 == i && t._2 == i && t._3 == 0.0)))
       // the persisted graph is reused across stream probes (no per-probe
       // or per-query rebuilds)
-      val builds0 = db.indexFullBuilds
+      val builds0 = db.store.indexFullBuilds
       hits("graph")
-      assert(db.indexFullBuilds == builds0)
+      assert(db.store.indexFullBuilds == builds0)
     }
   }
 
@@ -704,7 +704,7 @@ class IndexesSpec extends AnyFunSuite {
       def search(q: String): Set[Any] =
         rows(db, s"?[k] := ~d:fts{k | query: '$q', k: 10}").map(_.head).toSet
       assert(search("apples") == Set("a"))
-      assert(db.indexFullBuilds == 1)
+      assert(db.store.indexFullBuilds == 1)
       // put: new doc + overwrite of an existing one
       db.run("?[k, v] <- [['c', 'red grapes'], ['a', 'yellow bananas']] :put d {k}")
       assert(search("red") == Set("c"))       // a's old text is gone
@@ -715,7 +715,7 @@ class IndexesSpec extends AnyFunSuite {
       assert(search("pears") == Set())
       assert(search("bananas") == Set("a"))
       // every mutation above was absorbed as a delta on the single build
-      assert(db.indexFullBuilds == 1)
+      assert(db.store.indexFullBuilds == 1)
     }
   }
 
@@ -726,14 +726,14 @@ class IndexesSpec extends AnyFunSuite {
     def probe(q: String): Set[Any] =
       rows(db, s"?[k] := ~d:lsh{k | query: '$q', k: 5}").map(_.head).toSet
     assert(probe("the quick brown fox jumps over the lazy dog") == Set("a"))
-    val builds = db.indexFullBuilds
+    val builds = db.store.indexFullBuilds
     // near-duplicate added by put is found through the delta path
     db.run("?[k, v] <- [['b', 'the quick brown fox jumps over the lazy cat']] :put d {k}")
     assert(probe("the quick brown fox jumps over the lazy cat").contains("b"))
     // removing a doc drops its bands
     db.run("?[k] <- [['a']] :rm d {k}")
     assert(!probe("the quick brown fox jumps over the lazy dog").contains("a"))
-    assert(db.indexFullBuilds == builds, "mutations must not trigger a band-table rebuild")
+    assert(db.store.indexFullBuilds == builds, "mutations must not trigger a band-table rebuild")
   }
 
   test(":replace staleness is not laundered by a later put's delta") {
@@ -759,15 +759,15 @@ class IndexesSpec extends AnyFunSuite {
       def search(q: String): Set[Any] =
         rows(db, s"?[k] := ~d:fts{k | query: '$q', k: 50}").map(_.head).toSet
       assert(search("seed") == Set(0L))
-      assert(db.indexFullBuilds == 1)
-      for (i <- 1 to db.ftsMaxDeltas + 1)
+      assert(db.store.indexFullBuilds == 1)
+      for (i <- 1 to db.store.ftsMaxDeltas + 1)
         db.run(s"?[k, v] <- [[$i, 'doc number word$i']] :put d {k}")
       // the chain hit the bound: the cache was dropped mid-stream and the
       // next probe recompacted (exactly one extra full build)
       assert(search("word1") == Set(1L))
-      assert(search(s"word${db.ftsMaxDeltas + 1}") == Set((db.ftsMaxDeltas + 1).toLong))
-      assert(search("number").size == db.ftsMaxDeltas + 1)
-      assert(db.indexFullBuilds == 2)
+      assert(search(s"word${db.store.ftsMaxDeltas + 1}") == Set((db.store.ftsMaxDeltas + 1).toLong))
+      assert(search("number").size == db.store.ftsMaxDeltas + 1)
+      assert(db.store.indexFullBuilds == 2)
     }
   }
 

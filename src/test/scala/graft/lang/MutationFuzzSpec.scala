@@ -11,7 +11,10 @@ import org.scalatest.funsuite.AnyFunSuite
   * every error branch (insert on existing key, update on missing key —
   * the reference's "key to update does not exist", stored.rs:590-597 —
   * delete on missing key), with state UNCHANGED after a failed op. The
-  * key pool holds NULL, an ordinary key value in cozo.
+  * key pool holds NULL, an ordinary key value in cozo. Multi-row steps
+  * often repeat a key: a put or update keeps, per key, the row a
+  * tuple-by-tuple upsert of the sorted rows writes last (the greatest),
+  * and an insert whose rows repeat a key raises.
   *
   * The model runs against both write paths: the default bound (small
   * writes go to the relation's write overlay), a bound of 0 (every
@@ -45,7 +48,16 @@ class MutationFuzzSpec extends AnyFunSuite {
         val kl = k.fold("null")(_.toString)
         val a = rnd.nextInt(100).toLong
         val b = rnd.nextInt(100).toLong
-        val op = rnd.nextInt(6)
+        val op = rnd.nextInt(9)
+        // two or three rows over two keys: the multi-row steps' rows
+        val multi = {
+          val ks = Seq(k, Option(rnd.nextInt(7).toLong).filter(_ < 6))
+          Seq.fill(2 + rnd.nextInt(2))(
+            (ks(rnd.nextInt(2)), rnd.nextInt(100).toLong, rnd.nextInt(100).toLong)).distinct
+        }
+        def lits(cols: ((Option[Long], Long, Long)) => Seq[Any]) =
+          multi.map(r => cols(r).map(_.toString).mkString("[", ", ", "]")).mkString(", ")
+        def key(r: (Option[Long], Long, Long)) = r._1.fold("null")(_.toString)
         val (script, apply): (String, () => Unit) = op match {
           case 0 =>
             (s"?[k, a, b] <- [[$kl, $a, $b]] :put m$seed {k => a, b}",
@@ -70,7 +82,25 @@ class MutationFuzzSpec extends AnyFunSuite {
               })
           case 4 =>
             (s"?[k] <- [[$kl]] :rm m$seed {k}", () => { model.remove(k); () })
-          case _ =>
+          case 6 =>
+            (s"?[k, a, b] <- [${lits(r => Seq(key(r), r._2, r._3))}] :put m$seed {k => a, b}",
+              () => multi.groupBy(_._1).foreach { case (kk, rs) => model(kk) = rs.map(r => (r._2, r._3)).max })
+          case 7 =>
+            (s"?[k, a, b] <- [${lits(r => Seq(key(r), r._2, r._3))}] :insert m$seed {k => a, b}",
+              () => {
+                if (multi.map(_._1).distinct.length < multi.length || multi.exists(r => model.contains(r._1)))
+                  throw new IllegalStateException("dup")
+                multi.foreach(r => model(r._1) = ((r._2, r._3)))
+              })
+          case 8 =>
+            val rows = multi.map(r => (r._1, r._2)).distinct
+            (s"?[k, a] <- [${rows.map(r => s"[${r._1.fold("null")(_.toString)}, ${r._2}]").mkString(", ")}] " +
+              s":update m$seed {k, a}",
+              () => {
+                if (rows.exists(r => !model.contains(r._1))) throw new IllegalStateException("missing")
+                rows.groupBy(_._1).foreach { case (kk, rs) => model(kk) = ((rs.map(_._2).max, model(kk)._2)) }
+              })
+          case 5 =>
             (s"?[k] <- [[$kl]] :delete m$seed {k}",
               () => {
                 if (!model.contains(k)) throw new IllegalStateException("missing")
@@ -139,11 +169,12 @@ class MutationFuzzSpec extends AnyFunSuite {
       "?[k, n] <- [[1, 1], [2, 2]] :create w {k => n}",
       "?[k, n] <- [[1, 0.5]] :put w {k => n}"), "?[k, n] := *w{k, n}")
     assert(c == d && c == Seq("1|0.5", "2|2.0"))
-    // one delta, two rows for one key: both are kept, on both paths
+    // one delta, two rows for one key: the put keeps the row written
+    // last in sorted order, on both paths
     val (e, f) = bothPaths(Seq(
       "?[k, v] <- [[1, 'a'], [2, 'b']] :create w {k => v}",
-      "?[k, v] <- [[1, 'x'], [1, 'y']] :put w {k => v}"), "?[k, v] := *w{k, v}")
-    assert(e == f && e == Seq("1|x", "1|y", "2|b"))
+      "?[k, v] <- [[1, 'y'], [1, 'x']] :put w {k => v}"), "?[k, v] := *w{k, v}")
+    assert(e == f && e == Seq("1|y", "2|b"))
   }
 
   test("update on a missing key errors with the reference's message; state unchanged") {

@@ -57,7 +57,7 @@ class RelationCopySpec extends AnyFunSuite {
     val (_, lines) = KneeLog.capture {
       for (_ <- 1 to 2; q <- Seq(reach("edges"), pageRank("edges"), cc("edges"))) db.run(q).collect()
     }
-    assert(db.relationCopyBuilds == 1)
+    assert(db.store.relationCopyBuilds == 1)
     assert(lines.count(_.contains("op=relation_copy")) == 1, lines)
     assert(lines.count(_.contains("op=fixpoint")) == 2, lines)
   }
@@ -66,29 +66,29 @@ class RelationCopySpec extends AnyFunSuite {
     val db = mkDb()
     val graphs = Seq(pageRank("edges"), cc("edges"), sssp("edges"))
     val first = graphs.map(q => rows(db, q))
-    val builds = db.localGraphBuilds
+    val builds = db.store.localGraphBuilds
     // PageRank and the unit-weight SSSP (a BFS) read the distinct edges, CC all of them
     assert(builds == 2)
     val (_, lines) = KneeLog.capture(for (_ <- 1 to 2) assert(graphs.map(q => rows(db, q)) == first))
-    assert(db.localGraphBuilds == builds, "no graph is rebuilt while the copy is unchanged")
+    assert(db.store.localGraphBuilds == builds, "no graph is rebuilt while the copy is unchanged")
     // a cached graph still logs its knee decision per op, with its edge count
     assert(lines.count(_.startsWith("graft.knee op=pageRank n=5 ")) == 2, lines)
     assert(lines.count(_.startsWith("graft.knee op=connectedComponents n=5 ")) == 2, lines)
     assert(lines.count(_.startsWith("graft.knee op=bfs n=5 ")) == 2, lines)
     db.run("?[src, dst] <- [[6, 7]] :put edges {src, dst}").collect()
     graphs.foreach(q => rows(db, q))
-    assert(db.localGraphBuilds == 2 * builds, "a new version builds its graphs once")
+    assert(db.store.localGraphBuilds == 2 * builds, "a new version builds its graphs once")
   }
 
   test("a graph that would pass the copies' shared budget is built per op and not kept") {
     val db = mkDb()
-    val copy = db.relationCopy("edges").get
+    val copy = db.store.relationCopy("edges").get
     Knee.withLimits(Knee.DriverIndexBytes -> copy.heldBytes) {
       for (_ <- 1 to 2) db.run(pageRank("edges")).collect()
     }
-    assert(db.localGraphBuilds == 2 && copy.heldBytes == copy.bytes)
+    assert(db.store.localGraphBuilds == 2 && copy.heldBytes == copy.bytes)
     for (_ <- 1 to 2) db.run(pageRank("edges")).collect()
-    assert(db.localGraphBuilds == 3 && copy.heldBytes > copy.bytes)
+    assert(db.store.localGraphBuilds == 3 && copy.heldBytes > copy.bytes)
   }
 
   test("once the copy is held, the hop rules run no Spark job and answer as the relation does") {
@@ -115,14 +115,14 @@ class RelationCopySpec extends AnyFunSuite {
       def outcome(db: CozoDb) = scala.util.Try(rows(db, q)).toEither.left.map(_ => "error")
       val db = new CozoDb(spark)
       db.registerTable("chain", chain(), Seq("fr", "to"))
-      if (held) assert(db.relationCopy("chain").isDefined)
+      if (held) assert(db.store.relationCopy("chain").isDefined)
       val want = Knee.withLimits(Knee.DriverIndexBytes -> 0L) {
         val pinned = new CozoDb(spark)
         pinned.registerTable("chain", chain(), Seq("fr", "to"))
         outcome(pinned)
       }
       assert(outcome(db) == want, s"$q over $how")
-      assert(db.relationCopyBuilds == 1, s"$q over $how")
+      assert(db.store.relationCopyBuilds == 1, s"$q over $how")
     }
   }
 
@@ -139,13 +139,13 @@ class RelationCopySpec extends AnyFunSuite {
       }
     }
     both("edges")(_ => ())
-    val builds = db.relationCopyBuilds
+    val builds = db.store.relationCopyBuilds
     both("edges")(_.run("?[src, dst] <- [[3, 5], [6, 1]] :put edges {src, dst}").collect())
     assert(reached(db, "edges").contains(Seq(1L, 6L)), "the put reached the copy")
     both("edges")(_.run("?[src, dst] <- [[2, 3]] :rm edges {src, dst}").collect())
     assert(!reached(db, "edges").contains(Seq(1L, 4L)), "the rm reached the copy")
-    assert(db.relationCopyBuilds == builds && db.relationCopyPatches == 2, "put and rm patch the copy")
-    val patched = db.relationCopy("edges").get
+    assert(db.store.relationCopyBuilds == builds && db.store.relationCopyPatches == 2, "put and rm patch the copy")
+    val patched = db.store.relationCopy("edges").get
     assert(patched.bytes == new graft.plan.DriverRows(patched.schema, patched.rows).bytes,
       "a patch keeps the copy's bytes exact")
     both("moved")(_.run("::rename edges moved").collect())
@@ -163,9 +163,9 @@ class RelationCopySpec extends AnyFunSuite {
     assert(reached(db, "edges") == Set(Seq(1L, 1L), Seq(1L, 7L), Seq(1L, 8L)))
     // put and rm patch the copy (so does the aborted put, before the
     // abort retires it); rename, abort and re-register build a new one
-    assert(db.relationCopyBuilds == builds + 3)
-    assert(db.relationCopyPatches == 3)
-    assert(pinned.relationCopyBuilds == 0 && pinned.relationCopyPatches == 0)
+    assert(db.store.relationCopyBuilds == builds + 3)
+    assert(db.store.relationCopyPatches == 3)
+    assert(pinned.store.relationCopyBuilds == 0 && pinned.store.relationCopyPatches == 0)
   }
 
   test("an over-gate relation is probed once per version, and its reads run on Spark") {
@@ -176,7 +176,7 @@ class RelationCopySpec extends AnyFunSuite {
     assert(lines.count(_.contains("op=relation_copy")) == 1, lines)
     assert(lines.exists(_.matches("graft.knee op=relation_copy n=\\d+ gate=1 branch=distributed")), lines)
     assert(!lines.exists(_.contains("op=fixpoint")), lines)
-    assert(db.relationCopyBuilds == 0)
+    assert(db.store.relationCopyBuilds == 0)
   }
 
   private def copyBytes(line: String): Long =
@@ -191,18 +191,18 @@ class RelationCopySpec extends AnyFunSuite {
       Seq("src", "dst"))
     val limit = 64L << 10
     val (counts, lines) = KneeLog.capture(Knee.withLimits(Knee.DriverIndexBytes -> limit) {
-      ListenerBridge.measure(spark.sparkContext, "relation-copy-wide")(assert(db.relationCopy("wide").isEmpty))
+      ListenerBridge.measure(spark.sparkContext, "relation-copy-wide")(assert(db.store.relationCopy("wide").isEmpty))
     })
     assert(counts.jobs == 1 && counts.resultBytes < limit, counts)
     assert(lines.length == 1 && lines.head.endsWith(s"gate=$limit branch=distributed"), lines)
     assert(copyBytes(lines.head) > 200L * 2000, lines)
-    assert(db.relationCopyBuilds == 0)
+    assert(db.store.relationCopyBuilds == 0)
     // the refusal stands across an overlay write; a new base (the write
     // compacted) under a gate it fits: every row, in key order
     db.run("?[src, dst, note] <- [[0, 1, 'n']] :put wide {src, dst => note}").collect()
-    assert(db.relationCopy("wide").isEmpty)
+    assert(db.store.relationCopy("wide").isEmpty)
     db.run("::compact").collect()
-    val copy = db.relationCopy("wide").get
+    val copy = db.store.relationCopy("wide").get
     assert(copy.rows.length == 201 && copy.rows.map(_.getLong(0)) == (0L to 200L))
   }
 
@@ -210,12 +210,12 @@ class RelationCopySpec extends AnyFunSuite {
     val db = new CozoDb(spark)
     for (rel <- Seq("a", "b", "c"))
       db.registerTable(rel, (1 to 10).map(i => (i.toLong, i.toLong)).toDF("src", "dst"), Seq("src", "dst"))
-    val (_, one) = KneeLog.capture(db.relationCopy("a"))
+    val (_, one) = KneeLog.capture(db.store.relationCopy("a"))
     val bytes = copyBytes(one.head)
     val (_, lines) = KneeLog.capture(Knee.withLimits(Knee.DriverIndexBytes -> (bytes * 3 / 2)) {
-      assert(db.relationCopy("b").isEmpty, "a and b together pass the budget")
+      assert(db.store.relationCopy("b").isEmpty, "a and b together pass the budget")
       db.registerTable("a", (1 to 11).map(i => (i.toLong, i.toLong)).toDF("src", "dst"), Seq("src", "dst"))
-      assert(db.relationCopy("c").isDefined, "the copy of a's old version is dropped")
+      assert(db.store.relationCopy("c").isDefined, "the copy of a's old version is dropped")
     })
     assert(lines == Seq(
       s"graft.knee op=relation_copy n=${2 * bytes} gate=${bytes * 3 / 2} branch=distributed",
@@ -225,7 +225,7 @@ class RelationCopySpec extends AnyFunSuite {
   test("a patch that takes the copies past the budget retires the copy; reads then match a db without copies") {
     val db = mkDb()
     val pinned = Knee.withLimits(Knee.DriverIndexBytes -> 0L)(mkDb())
-    val limit = db.relationCopy("edges").get.bytes
+    val limit = db.store.relationCopy("edges").get.bytes
     val put = "?[src, dst] <- [[6, 7]] :put edges {src, dst}"
     val (_, lines) = KneeLog.capture(Knee.withLimits(Knee.DriverIndexBytes -> limit) {
       db.run(put).collect()
@@ -233,7 +233,7 @@ class RelationCopySpec extends AnyFunSuite {
     })
     assert(lines.count(_.contains("branch=distributed")) == 1, lines)
     assert(lines.exists(_.matches(s"graft.knee op=copy_patch n=\\d+ gate=$limit branch=distributed")), lines)
-    assert(db.relationCopyPatches == 0 && db.relationCopyBuilds == 1)
+    assert(db.store.relationCopyPatches == 0 && db.store.relationCopyBuilds == 1)
     Knee.withLimits(Knee.DriverIndexBytes -> 0L)(pinned.run(put).collect())
     Knee.withLimits(Knee.DriverIndexBytes -> limit)(assert(answers(db, "edges") ==
       Knee.withLimits(Knee.DriverIndexBytes -> 0L)(answers(pinned, "edges"))))
@@ -254,6 +254,6 @@ class RelationCopySpec extends AnyFunSuite {
       rows(db, hop1("edges"))
     })
     assert(after.count(_.contains("op=relation_copy")) == 1, after)
-    assert(db.relationCopyBuilds == 0 && db.relationCopyPatches == 0)
+    assert(db.store.relationCopyBuilds == 0 && db.store.relationCopyPatches == 0)
   }
 }

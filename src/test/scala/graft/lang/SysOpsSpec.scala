@@ -288,9 +288,9 @@ class SysOpsSpec extends AnyFunSuite {
     db.run("::fts create r:ix {extractor: v}")
     assert(db.run("?[k] := ~r:ix{k | query: 'fox', k: 5}").count() == 2)
     // a live write overlay
-    val writes = db.overlayWrites
+    val writes = db.store.overlayWrites
     db.run("?[k, vt, v] <- [[3, 'ASSERT', 'three']] :put r {k, vt => v}")
-    assert(db.overlayWrites == writes + 1)
+    assert(db.store.overlayWrites == writes + 1)
     db.run("::set_triggers r on put { ?[k] := _new[k, vt, v, d, a] :put log {k} }")
     db.run("::describe r 'renamed relation'")
     db.run("::access_level protected r")
@@ -307,7 +307,7 @@ class SysOpsSpec extends AnyFunSuite {
     assert(!db.relationNames.contains("r"))
     // the indexes over the old name are gone with their cached artifacts
     assert(db.run("::indices s").isEmpty && db.run("::indices r").isEmpty)
-    assert(!db.cachedIndexTargets.exists(_.startsWith("r:")))
+    assert(!db.store.cachedIndexTargets.exists(_.startsWith("r:")))
     intercept[Exception](db.run("?[k] := ~r:ix{k | query: 'fox', k: 5}"))
     // the triggers fire and the defaults fill on the new name
     db.run("::access_level normal s")

@@ -48,7 +48,7 @@ class WriteOverlaySpec extends AnyFunSuite {
     assert(jobs(db.run("?[k, s] <- [[7, 'y']] :update o {k => s}").collect()) == 0)
     assert(rows(db, "?[v, s] := *o{k: 7, v, s}") == Seq("99|y"))
     assert(rows(db, "?[count(k)] := *o{k}") == Seq("200"))
-    assert(db.overlayWrites == 4 && db.overlayFolds == 0)
+    assert(db.store.overlayWrites == 4 && db.store.overlayFolds == 0)
   }
 
   test("NULL-keyed :put, :rm, :update, :insert and :delete keep one row per key value") {
@@ -112,7 +112,7 @@ class WriteOverlaySpec extends AnyFunSuite {
       assert((failed, state(db)) == want, script)
     }
     assert(state(db) == Seq(Seq("2|b", "5|n", "null|w"), Seq("0.0|z", "2.5|c")))
-    assert(db.overlayFolds == 0 && db.relationCopyBuilds == 2 && db.relationCopyPatches == 5)
+    assert(db.store.overlayFolds == 0 && db.store.relationCopyBuilds == 2 && db.store.relationCopyPatches == 5)
   }
 
   test("a validity :put is seen by an @ t read") {
@@ -127,7 +127,7 @@ class WriteOverlaySpec extends AnyFunSuite {
       assert(at("2024-01-15T00:00:00Z") == Seq("1|a"))
       assert(at("2024-02-15T00:00:00Z") == Seq("1|b"))
       assert(at("2024-03-15T00:00:00Z").isEmpty)
-      db.overlayWrites
+      db.store.overlayWrites
     }
     assert(writes == Seq(2, 0))
   }
@@ -164,11 +164,11 @@ class WriteOverlaySpec extends AnyFunSuite {
     def state = rows(db, "?[k, t] := *docs{k, t}")
     val before = state
     assert(probe("apple") == Seq("1") && probe("cherry").isEmpty)
-    val writes = db.overlayWrites
+    val writes = db.store.overlayWrites
     val tx = db.multiTransaction()
     tx.run("?[k, t] <- [[3, 'cherry tart']] :put docs {k => t}")
     tx.run("?[k] <- [[1]] :rm docs {k}")
-    assert(db.overlayWrites == writes + 2)
+    assert(db.store.overlayWrites == writes + 2)
     assert(probe("cherry") == Seq("3") && probe("apple").isEmpty)
     tx.abort()
     assert(state == before)
@@ -186,9 +186,9 @@ class WriteOverlaySpec extends AnyFunSuite {
     db.run("?[k] <- [[4], [5]] :rm o {k}")
     db.run("?[k, v] <- [[6, -6]] :update o {k => v}")
     val before = rows(db, "?[k, v, s] := *o{k, v, s}")
-    val folds = db.overlayFolds
+    val folds = db.store.overlayFolds
     db.run("::compact")
-    assert(db.overlayFolds == folds + 1)
+    assert(db.store.overlayFolds == folds + 1)
     assert(rows(db, "?[k, v, s] := *o{k, v, s}") == before)
     // after compaction a small write goes to a fresh overlay
     assert(jobs(db.run("?[k] <- [[500]] :rm o {k}").collect()) == 0)
@@ -200,11 +200,11 @@ class WriteOverlaySpec extends AnyFunSuite {
     orders(db)
     Knee.withLimits(Knee.PatchKeys -> 3L) {
       for (k <- 300 until 303) db.run(s"?[k, v, s] <- [[$k, 0, 'n']] :put o {k => v, s}")
-      assert(db.overlayWrites == 3 && db.overlayFolds == 0)
+      assert(db.store.overlayWrites == 3 && db.store.overlayFolds == 0)
       db.run("?[k, v, s] <- [[303, 0, 'n']] :put o {k => v, s}")
-      assert(db.overlayFolds == 1)
+      assert(db.store.overlayFolds == 1)
       db.run("?[k] <- [[300]] :rm o {k}")
-      assert(db.overlayWrites == 4 && db.overlayFolds == 1)
+      assert(db.store.overlayWrites == 4 && db.store.overlayFolds == 1)
       assert(rows(db, "?[k] := *o{k, s: 'n'}") == Seq("301", "302", "303"))
     }
   }
