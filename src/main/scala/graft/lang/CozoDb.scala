@@ -819,7 +819,27 @@ class CozoDb(val spark: SparkSession) {
       new Compiler(spark, relation, resolve, params, validityScan,
         (n, p, o, fr) => searchProbe(n, p, o, params, fr), chooseIndex)
     else new Compiler(spark, n => { relation(n); DriverPlan.scan(spark, copies(n), copies(n).schema) },
-      resolve, params)
+      resolve, params, (n, t) => { relation(n); copyAsOf(n, copies(n), t) })
+
+  /** [[validityScan]] over the copy of `name`: per logical key, the
+    * newest version at `t` if it asserts ([[DriverRows.asOf]]), in key
+    * order, so a key bound reads a run of it. The copy's key must be the
+    * logical key, then the validity (a timestamp), then the assert flag
+    * if it is a key column, and `t` must be a constant the driver can
+    * evaluate; else the driver declines. */
+  private def copyAsOf(name: String, copy: DriverRows, asOf: Column): DataFrame = {
+    val r = records.get(name).filter(_.validity.isDefined).getOrElse(throw new DriverPlan.Unsupported("validity"))
+    val (vcol, acol) = (r.validity.get, r.assertCol)
+    val rest = r.keys.filterNot(c => c == vcol || acol.contains(c))
+    val schema = copy.schema
+    val t = spark.range(1).select(asOf.cast("timestamp").as("t")).queryExecution.analyzed.expressions.head
+      .children.head
+    if (r.keys != rest ++ (vcol +: acol.filter(r.keys.contains).toSeq) || schema(vcol).dataType != TimestampType ||
+        !t.foldable || t.exists(_.isInstanceOf[org.apache.spark.sql.catalyst.expressions.CurrentTimestampLike]))
+      throw new DriverPlan.Unsupported(s"as-of read of $name at $t")
+    val visible = copy.asOf(rest.length, t.eval(), acol.map(schema.fieldIndex))
+    DriverPlan.scan(spark, visible, schema)
+  }
 
   // ———————————————— indexes (parse/sys.rs:391-655) ————————————————
 
@@ -1664,11 +1684,10 @@ class CozoDb(val spark: SparkSession) {
     val horn = defs.collect { case h: HornClause => h }
     val stored = mutable.Set.empty[String]
     val rules = mutable.Set.empty[String]
-    var fits = horn.length == defs.length &&
-      horn.forall(_.head.flatMap(_.aggr).forall(a => a == "min" || a == "max"))
+    var fits = horn.length == defs.length
     def visit(a: Atom): Unit = a match {
-      case RelApply(n, _, true, None) => stored += n
-      case NamedApply(n, _, None) => stored += n
+      case RelApply(n, _, true, _) => stored += n
+      case NamedApply(n, _, _) => stored += n
       case RelApply(n, _, false, None) => rules += n
       case _: RelApply | _: NamedApply | _: SearchApply => fits = false
       case Neg(inner) => visit(inner)
@@ -1694,21 +1713,35 @@ class CozoDb(val spark: SparkSession) {
 
   /** The relations of the key-anchored stored atoms of a clause body: an
     * atom is key-anchored when its relation's leading key column is
-    * bound by a literal, a `$param`, or a variable of a rule atom over
-    * `localRules` or of another key-anchored atom — cozo's point lookups
-    * and prefix-join chains over its key-sorted store (ra.rs:1259-1395).
-    * Only top-level atoms anchor; full scans and joins between
-    * unanchored atoms are not anchored. */
+    * bound by a literal, a `$param`, a variable with a literal or
+    * `$param` lower and upper bound among the body's conditions, or a
+    * variable of a rule atom over `localRules` or of another key-anchored
+    * atom — cozo's point lookups, key-range scans and prefix-join chains
+    * over its key-sorted store (ra.rs:1259-1395). Only top-level atoms
+    * anchor; full scans and joins between unanchored atoms are not
+    * anchored. */
   private def anchored(body: Seq[Atom], localRules: collection.Set[String],
                        params: Map[String, Any]): Set[String] = {
     def vars(es: Seq[Expr]): Seq[String] = es.collect { case V(v) if v != "_" => v }
+    def constant(e: Expr): Boolean = e match {
+      case Lit(_) => true
+      case Param(p) => params.contains(p)
+      case Un("-", x) => constant(x)
+      case _ => false
+    }
+    // (variable, is a lower bound) of each literal comparison
+    val ranges = body.collect {
+      case Cond(Bin(op @ ("<" | "<=" | ">" | ">="), V(v), c)) if constant(c) => (v, op.startsWith(">"))
+      case Cond(Bin(op @ ("<" | "<=" | ">" | ">="), c, V(v))) if constant(c) => (v, op.startsWith("<"))
+    }
     val bound = mutable.Set.empty[String]
+    bound ++= ranges.groupBy(_._1).collect { case (v, bs) if bs.map(_._2).distinct.length == 2 => v }
     body.foreach { case RelApply(n, args, false, None) if localRules(n) => bound ++= vars(args); case _ => }
     // each stored atom's relation, leading key expression and variables
     val atoms = body.collect {
-      case RelApply(n, args, true, None) =>
+      case RelApply(n, args, true, _) =>
         (n, records.get(n).flatMap(r => args.lift(r.view.columns.indexOf(r.keys.head))), vars(args))
-      case NamedApply(n, pairs, None) =>
+      case NamedApply(n, pairs, _) =>
         val es = pairs.map { case (f, e) => f -> e.getOrElse(V(f)) }
         (n, records.get(n).flatMap(r => es.collectFirst { case (f, e) if f == r.keys.head => e }),
           vars(es.map(_._2)))

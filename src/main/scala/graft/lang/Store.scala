@@ -134,8 +134,10 @@ private[lang] final class Store(spark: SparkSession) {
         overlayWrites += 1
         (r.copy(overlay = Some(ov), view = overlayView(r.keys, ov)), Some(written), localFrame(kept, delta.schema))
       case None =>
-        val raw = rows.fold(delta)(localFrame(_, delta.schema))
-        val d = lastPerKey(op, if (isLocal(raw)) raw else raw.ckptLazy(), r.keys)
+        val d = rows.flatMap(keptRows(op, _, delta.schema, r.keys)).map(localFrame(_, delta.schema)).getOrElse {
+          val raw = rows.fold(delta)(localFrame(_, delta.schema))
+          lastPerKey(op, if (isLocal(raw)) raw else raw.ckptLazy(), r.keys)
+        }
         val view = (op match {
           case "put" => Mutations.put(r.view, d, r.keys)
           case "insert" => Mutations.insert(r.view, d, r.keys)
@@ -253,10 +255,11 @@ private[lang] final class Store(spark: SparkSession) {
     if (!cols.forall(c => delta.columns.contains(c) && cur.columns.contains(c))) return None
     val target = cur.select(cols.map(col): _*)
     // a write that would change a column type folds (the union's types
-    // come from analysis alone, no job)
+    // come from analysis alone, no job), unless its values all cast
+    // exactly to the relation's types: the relation then keeps them
     val unionTypes = scala.util.Try(
       target.unionByName(delta.select(cols.map(col): _*)).schema.map(_.dataType)).toOption
-    if (!unionTypes.contains(target.schema.map(_.dataType))) return None
+    if (!unionTypes.contains(target.schema.map(_.dataType)) && !castsExactly(delta, target.schema)) return None
     // the delta's rows in the relation's types, readable by name (a local frame: no job)
     val typed = delta.select(target.schema.map(f => col(f.name).cast(f.dataType).as(f.name)): _*)
       .collect().toSeq
@@ -311,12 +314,33 @@ private[lang] final class Store(spark: SparkSession) {
     Some((Overlay(ov.base, ov.rows ++ written), written, at.map(rows)))
   }
 
+  /** Whether every value of the local frame `delta` in the columns of
+    * `target` casts to the column's type there and back unchanged (a
+    * NULL only from a NULL); no job runs. */
+  private def castsExactly(delta: DataFrame, target: StructType): Boolean = scala.util.Try {
+    target.fields.toSeq.filter(f => delta.schema(f.name).dataType != f.dataType).map { f =>
+      col(f.name).try_cast(f.dataType).cast(delta.schema(f.name).dataType) <=> col(f.name)
+    }.reduceOption(_ && _).exists(exact => delta.filter(!exact).collect().isEmpty)
+  }.getOrElse(false)
+
+  /** [[lastPerKey]] of the fetched delta `rows` (of `schema`), their keys
+    * compared as Spark groups them ([[DriverPlan.Keys]]): the rows kept.
+    * None when a key column is missing or cannot be a grouping key. */
+  private def keptRows(op: String, rows: Seq[Row], schema: StructType, keys: Seq[String]): Option[Seq[Row]] =
+    Option.when(keys.forall(schema.fieldNames.contains))(keys.map(schema.fieldIndex)).flatMap { idx =>
+      try {
+        val keyOf = new DriverPlan.Keys(idx.map(i => BoundReference(i, schema(i).dataType, nullable = true)))
+        val toRow = CatalystTypeConverters.createToCatalystConverter(schema)
+        Some(lastPerKey(op, rows.map(r => keyOf(toRow(r).asInstanceOf[InternalRow])), rows, schema).map(rows))
+      } catch { case _: DriverPlan.Unsupported => None }
+    }
+
   /** The indices of the delta `rows` (of `schema`, keyed by `keys`) that
     * a row write keeps, in order. A put or update keeps, per key, the
     * row a tuple-by-tuple upsert of the rows in sorted order writes
     * last: the greatest under Spark's ordering of the orderable columns.
     * An insert whose rows repeat a key raises. rm and delete keep all. */
-  private def lastPerKey(op: String, keys: Seq[Seq[Any]], rows: Seq[Row], schema: StructType): Seq[Int] =
+  private def lastPerKey(op: String, keys: Seq[Any], rows: Seq[Row], schema: StructType): Seq[Int] =
     if (op == "rm" || op == "delete") keys.indices
     else {
       val groups = keys.indices.groupBy(keys)

@@ -4,7 +4,7 @@ import org.apache.spark.sql.{DataFrame, Row, SparkSession}
 import org.apache.spark.sql.catalyst.{CatalystTypeConverters, InternalRow}
 import org.apache.spark.sql.catalyst.analysis.MultiInstanceRelation
 import org.apache.spark.sql.catalyst.expressions._
-import org.apache.spark.sql.catalyst.expressions.aggregate.{AggregateExpression, Max, Min}
+import org.apache.spark.sql.catalyst.expressions.aggregate.{AggregateExpression, DeclarativeAggregate}
 import org.apache.spark.sql.catalyst.plans.{Cross, Inner, LeftAnti, LeftSemi}
 import org.apache.spark.sql.catalyst.plans.logical._
 import org.apache.spark.sql.catalyst.types.DataTypeUtils
@@ -61,29 +61,70 @@ final class DriverRows(val schema: StructType, val rows: IndexedSeq[InternalRow]
   /** Key column i's values `x` and `y` compared under the sort order (NULLs first). */
   private def cmpKey(i: Int, x: Any, y: Any): Int =
     if (x == null) { if (y == null) 0 else -1 } else if (y == null) 1 else keyOrder(i).compare(x, y)
+  /** Key column i of `r`, null for NULL. */
+  private def keyAt(r: InternalRow, i: Int): Any = {
+    val k = keyIdx(i)
+    if (r.isNullAt(k)) null else r.get(k, schema(k).dataType)
+  }
+  /** The first `vs.length` key columns of `r` compared with `vs`. */
+  private def cmpPrefix(r: InternalRow, vs: Array[Any]): Int = {
+    var i = 0; var c = 0
+    while (c == 0 && i < vs.length) { c = cmpKey(i, keyAt(r, i), vs(i)); i += 1 }
+    c
+  }
+  /** The first index in `[from, until)` where `below` fails, `below`
+    * holding on a leading run of those rows. */
+  private def search(from: Int, until: Int)(below: InternalRow => Boolean): Int = {
+    var lo = from; var hi = until
+    while (lo < hi) {
+      val m = (lo + hi) >>> 1
+      if (below(rows(m))) lo = m + 1 else hi = m
+    }
+    lo
+  }
 
   /** The run `[lo, hi)` of rows whose first `vs.length` key columns
     * equal `vs` (NULL matching NULL) under the sort order. */
-  def keyRange(vs: Array[Any]): (Int, Int) = {
-    def cmp(r: InternalRow): Int = {
-      var i = 0; var c = 0
-      while (c == 0 && i < vs.length) {
-        val k = keyIdx(i)
-        c = cmpKey(i, if (r.isNullAt(k)) null else r.get(k, schema(k).dataType), vs(i))
-        i += 1
-      }
-      c
+  def keyRange(vs: Array[Any]): (Int, Int) =
+    (search(0, rows.length)(cmpPrefix(_, vs) < 0), search(0, rows.length)(cmpPrefix(_, vs) <= 0))
+
+  /** The part of the run of `vs` ([[keyRange]]) whose next key column is
+    * above every `lower` and below every `upper` bound (a value, and
+    * whether the bound itself is in) under the sort order, NULLs lowest:
+    * empty for a NULL bound or an inverted range. */
+  def keySlice(vs: Array[Any], lower: Seq[(Any, Boolean)], upper: Seq[(Any, Boolean)]): (Int, Int) = {
+    val (from, until) = keyRange(vs)
+    if ((lower ++ upper).exists(_._1 == null)) return (from, from)
+    val i = vs.length
+    def at(v: Any, past: Boolean): Int = search(from, until) { r =>
+      val c = cmpKey(i, keyAt(r, i), v); c < 0 || (past && c == 0)
     }
-    def bound(past: Boolean): Int = {
-      var lo = 0; var hi = rows.length
-      while (lo < hi) {
-        val m = (lo + hi) >>> 1
-        val c = cmp(rows(m))
-        if (c < 0 || (past && c == 0)) lo = m + 1 else hi = m
+    val lo = lower.foldLeft(from) { case (m, (v, in)) => math.max(m, at(v, past = !in)) }
+    val hi = upper.foldLeft(until) { case (m, (v, in)) => math.min(m, at(v, past = in)) }
+    (lo, math.max(lo, hi))
+  }
+
+  /** The rows visible at validity `t` (cozo's as-of scan,
+    * ra.rs:1124-1241): per run of rows sharing their first `rest` key
+    * columns, the last row whose next key column — the validity — is at
+    * most `t`: the newest version, and when a flag is the key column
+    * after it, an assert over a retract at the same instant (false sorts
+    * first). It is kept when its validity is not NULL and its flag (the
+    * column at `flag`, if any) is true. The rows keep key order. */
+  def asOf(rest: Int, t: Any, flag: Option[Int]): DriverRows = {
+    val out = IndexedSeq.newBuilder[InternalRow]
+    var i = 0
+    while (i < rows.length) {
+      val vs = Array.tabulate[Any](rest)(keyAt(rows(i), _))
+      val end = search(i, rows.length)(cmpPrefix(_, vs) <= 0)
+      val at = if (t == null) i else search(i, end)(r => cmpKey(rest, keyAt(r, rest), t) <= 0)
+      if (at > i) {
+        val r = rows(at - 1)
+        if (!r.isNullAt(keyIdx(rest)) && flag.forall(f => !r.isNullAt(f) && r.getBoolean(f))) out += r
       }
-      lo
+      i = end
     }
-    (bound(past = false), bound(past = true))
+    new DriverRows(schema, out.result(), keyIdx)
   }
 
   /** These rows, read as `schema` (the same columns and types), with the
@@ -130,16 +171,18 @@ final case class ResidentScan(key: AnyRef, output: Seq[Attribute], base: Logical
   * against rows the driver holds, with Catalyst's own expressions (so
   * both engines share one expression semantics). It covers projections,
   * filters, equi- and cross joins (inner, semi, anti), unions,
-  * set-dedup and min/max aggregation over [[ResidentScan]], local
-  * relations and ranges; any other node or an unevaluable expression
-  * throws [[DriverPlan.Unsupported]]. A relation copy read through
-  * renames is read in key order, as cozo reads its sorted store
-  * (ra.rs:1306-1395): an inner equi-join whose keys bind a leading
-  * prefix of the copy's key binary-searches the copy per row of the
-  * other side, and literal equalities on such a prefix read one run of
-  * it; other joins are hash joins. Dedup, grouping and join keys
-  * compare as Spark's do after float normalization: -0.0 is 0.0, every
-  * NaN is one NaN, NULLs are equal in `<=>` keys only.
+  * set-dedup and Catalyst's declarative aggregates over
+  * [[ResidentScan]], local relations and ranges; any other node or an
+  * unevaluable expression throws [[DriverPlan.Unsupported]]. A relation
+  * copy read through renames is read in key order, as cozo reads its
+  * sorted store (ra.rs:1306-1395): an inner equi-join whose keys bind a
+  * leading prefix of the copy's key binary-searches the copy per row of
+  * the other side, and literal equalities on such a prefix, with literal
+  * range bounds on the key column after it, read one run of it (an
+  * aggregate folds that run as it reads it); other joins are hash
+  * joins. Dedup, grouping and join keys compare as Spark's do after
+  * float normalization: -0.0 is 0.0, every NaN is one NaN, NULLs are
+  * equal in `<=>` keys only.
   */
 object DriverPlan {
   final class Unsupported(what: String) extends RuntimeException(what, null, false, false)
@@ -242,23 +285,58 @@ object DriverPlan {
       case r: Range => r.start.until(r.end, r.step).map(v => InternalRow(v))
       case SubqueryAlias(_, child) => go(child)
       case ResolvedHint(child, _) => go(child)
-      case Project(list, child) if list == child.output => go(child)
-      case Project(list, child) =>
-        val ex = prepare(list, child.output).toArray
-        go(child).map(r => new GenericInternalRow(ex.map(_.eval(r))): InternalRow)
-      case Filter(cond, child) =>
-        val pred = prepare(Seq(cond), child.output).head
-        copyPath(child).flatMap(_.slice(cond)).getOrElse(go(child)).filter(r => pred.eval(r) == true)
+      case Project(list, child) => project(list, child, go(child).iterator).toIndexedSeq
+      case f @ Filter(cond, child) =>
+        sliced(f).getOrElse(filter(cond, child, go(child).iterator)).toIndexedSeq
       case u: Union => u.children.flatMap(go).toIndexedSeq
       case Deduplicate(keys, child) if AttributeSet(keys) == child.outputSet =>
         distinct(go(child), child.schema)
       case Distinct(child) => distinct(go(child), child.schema)
       case j: Join =>
         prefixJoin(j, go, cap(j)).getOrElse(join(j, go(j.left), go(j.right), cap(j)))
-      case a: Aggregate => aggregate(a, go(a.child))
+      case a: Aggregate => aggregate(a, streamed(a.child).getOrElse(go(a.child).iterator))
       case other => throw new Unsupported(other.nodeName)
     }
+    /** The rows of a Project/Filter chain over a [[sliced]] run of a copy,
+      * computed as they are read: an aggregate over it folds a run of
+      * more rows than the cap (the copy's own rows), which then applies
+      * to its groups. None for any other plan. */
+    def streamed(p: LogicalPlan): Option[Iterator[InternalRow]] = p match {
+      case SubqueryAlias(_, child) => streamed(child)
+      case ResolvedHint(child, _) => streamed(child)
+      case Project(list, child) => streamed(child).map(project(list, child, _))
+      case f @ Filter(cond, child) => sliced(f).orElse(streamed(child).map(filter(cond, child, _)))
+      case _ => None
+    }
     go(plan)
+  }
+
+  private def project(list: Seq[NamedExpression], child: LogicalPlan,
+                      in: Iterator[InternalRow]): Iterator[InternalRow] =
+    if (list == child.output) in
+    else {
+      val ex = prepare(list, child.output).toArray
+      in.map(r => new GenericInternalRow(ex.map(_.eval(r))): InternalRow)
+    }
+
+  private def filter(cond: Expression, child: LogicalPlan, in: Iterator[InternalRow]): Iterator[InternalRow] = {
+    val pred = prepare(Seq(cond), child.output).head
+    in.filter(r => pred.eval(r) == true)
+  }
+
+  /** A stack of Filters over a copy read through renames whose conjuncts
+    * together bound a run of it ([[CopyPath.slice]]): the rows of that
+    * run the filters keep, innermost filter first, in copy order. */
+  private def sliced(f: Filter): Option[Iterator[InternalRow]] = {
+    def stack(p: LogicalPlan, conds: List[Expression]): (List[Expression], LogicalPlan) = p match {
+      case Filter(c, child) => stack(child, c :: conds)
+      case other => (conds, other)
+    }
+    val (conds, below) = stack(f, Nil)
+    copyPath(below).flatMap(_.slice(conds.flatMap(splitAnd))).map { run =>
+      val preds = prepare(conds, below.output)
+      run.iterator.filter(r => preds.forall(_.eval(r) == true))
+    }
   }
 
   /** Bound, evaluable forms of `es` over `input`: runtime-replaceable
@@ -402,20 +480,32 @@ object DriverPlan {
       copy.keyIdx.iterator.map(k => binding.collectFirst { case (`k`, t) => t })
         .takeWhile(_.isDefined).map(_.get).toIndexedSeq
 
-    /** The rows `cond` may keep when its literal `=`/`<=>` conjuncts bind
-      * a leading prefix of the key: one run of the copy, in copy order
-      * (the filter itself still runs over them). None when they bind none. */
-    def slice(cond: Expression): Option[IndexedSeq[InternalRow]] = {
-      val lits = splitAnd(cond).flatMap {
-        case EqualTo(a, b) => Seq((a, b), (b, a))
-        case EqualNullSafe(a, b) => Seq((a, b), (b, a))
+    /** The rows a filter of `conjuncts` may keep, when they bound a run
+      * of the copy: literal `=`/`<=>` conjuncts binding a leading prefix
+      * of the key, and literal `<`/`<=`/`>`/`>=` bounds on the key column
+      * after it, read one binary-searched run, in copy order (the filter
+      * itself still runs over it). A literal is a foldable of the
+      * column's type. None when they bound nothing. */
+    def slice(conjuncts: Seq[Expression]): Option[IndexedSeq[InternalRow]] = {
+      // (copy column, comparison, literal, whether the column is its right side)
+      val sides = conjuncts.flatMap {
+        case c: BinaryComparison => Seq((c, c.left, c.right, false), (c, c.right, c.left, true))
         case _ => Nil
-      }.collect { case (a, v) if column(a) >= 0 && v.foldable && v.deterministic && v.references.isEmpty =>
-        (column(a), v)
-      }
-      val bound = prefix(lits)
-      Option.when(bound.nonEmpty) {
-        val (lo, hi) = copy.keyRange(bound.map(_.eval()).toArray)
+      }.collect { case (c, a, v, right) if column(a) >= 0 && v.foldable && v.deterministic &&
+          v.references.isEmpty && v.dataType == a.dataType => (column(a), c, v, right) }
+      val bound = prefix(sides.collect { case (k, _: EqualTo | _: EqualNullSafe, v, _) => (k, v) })
+      val next = copy.keyIdx.lift(bound.length)
+      // (is a lower bound, bound included, literal) on the next key column
+      val ranges = sides.collect { case (k, c, v, right) if next.contains(k) => c match {
+        case _: GreaterThan => Some((!right, false, v))
+        case _: GreaterThanOrEqual => Some((!right, true, v))
+        case _: LessThan => Some((right, false, v))
+        case _: LessThanOrEqual => Some((right, true, v))
+        case _ => None
+      } }.flatten
+      Option.when(bound.nonEmpty || ranges.nonEmpty) {
+        def side(lower: Boolean) = ranges.collect { case (`lower`, in, v) => (v.eval(), in) }
+        val (lo, hi) = copy.keySlice(bound.map(_.eval()).toArray, side(lower = true), side(lower = false))
         copy.rows.slice(lo, hi).map(row)
       }
     }
@@ -575,32 +665,40 @@ object DriverPlan {
     case other => Seq(other)
   }
 
-  // ————— min/max aggregation —————
+  // ————— aggregation —————
 
-  private def aggregate(a: Aggregate, in: IndexedSeq[InternalRow]): IndexedSeq[InternalRow] = {
+  /** `a` over its input rows `in` with Catalyst's own definitions of its
+    * aggregates: each group's buffer starts at the functions'
+    * `initialValues`, every row goes through their `updateExpressions`
+    * (Spark's Complete mode) and `evaluateExpression` gives the value.
+    * Only [[DeclarativeAggregate]]s (sum, count, avg, min, max, …)
+    * without DISTINCT or FILTER; anything else is [[Unsupported]]. Groups
+    * come in first-seen order; with no grouping key, no rows give one
+    * row of initial values. */
+  private def aggregate(a: Aggregate, in: Iterator[InternalRow]): IndexedSeq[InternalRow] = {
     val aggs = a.aggregateExpressions.flatMap(_.collect { case ae: AggregateExpression => ae }).distinct
     val fns = aggs.map {
-      case AggregateExpression(f @ (_: Min | _: Max), _, false, None, _) => f
+      case AggregateExpression(f: DeclarativeAggregate, _, false, None, _) => f
       case other => throw new Unsupported(s"aggregate $other")
     }
+    val buffer = fns.flatMap(_.aggBufferAttributes)
+    val init = prepare(fns.flatMap(_.initialValues), Nil).toArray
+    val update = prepare(fns.flatMap(_.updateExpressions), buffer ++ a.child.output).toArray
+    val evaluate = prepare(fns.map(_.evaluateExpression), buffer).toArray
     val groupKeys = new Keys(prepare(a.groupingExpressions, a.child.output))
-    val valueEx = prepare(fns.map(_.children.head), a.child.output)
-    val orderings = fns.map(f => TypeUtils.getInterpretedOrdering(f.children.head.dataType))
-    val isMin = fns.map(_.isInstanceOf[Min])
-    val gTypes = a.groupingExpressions.map(_.dataType).toArray
-    val groups = mutable.LinkedHashMap.empty[UnsafeRow, Array[Any]]
+    val groups = mutable.LinkedHashMap.empty[UnsafeRow, GenericInternalRow]
+    def fresh() = new GenericInternalRow(init.map(_.eval()))
+    val joined = new JoinedRow
     in.foreach { r =>
-      val acc = groups.getOrElseUpdate(groupKeys(r), new Array[Any](fns.length))
-      for (i <- fns.indices) {
-        val v = valueEx(i).eval(r)
-        if (v != null && (acc(i) == null || {
-          val c = orderings(i).compare(v, acc(i)); if (isMin(i)) c < 0 else c > 0
-        })) acc(i) = v
-      }
+      val buf = groups.getOrElseUpdate(groupKeys(r), fresh())
+      joined(buf, r)
+      // every new value from the old buffer
+      val next = update.map(_.eval(joined))
+      System.arraycopy(next, 0, buf.values, 0, next.length)
     }
-    if (groups.isEmpty && a.groupingExpressions.isEmpty)
-      groups(groupKeys(InternalRow.empty)) = new Array[Any](fns.length)
+    if (groups.isEmpty && a.groupingExpressions.isEmpty) groups(groupKeys(InternalRow.empty)) = fresh()
     // result expressions over (grouping values ++ aggregate values)
+    val gTypes = a.groupingExpressions.map(_.dataType).toArray
     val nG = gTypes.length
     val result = a.aggregateExpressions.map { e =>
       val b = e.transformDown {
@@ -611,10 +709,10 @@ object DriverPlan {
       }
       prepare(Seq(b), Nil).head
     }.toArray
-    groups.iterator.map { case (g, acc) =>
-      val v = new Array[Any](nG + acc.length)
+    groups.iterator.map { case (g, buf) =>
+      val v = new Array[Any](nG + evaluate.length)
       fill(g, gTypes, v, 0)
-      System.arraycopy(acc, 0, v, nG, acc.length)
+      for (i <- evaluate.indices) v(nG + i) = evaluate(i).eval(buf)
       val row = new GenericInternalRow(v)
       new GenericInternalRow(result.map(_.eval(row))): InternalRow
     }.toIndexedSeq

@@ -1,6 +1,7 @@
 package graft.lang
 
 import graft.SparkFixture
+import graft.plan.Knee
 import org.scalatest.funsuite.AnyFunSuite
 
 /** Differential fuzzing of the CozoScript front end: random
@@ -11,12 +12,17 @@ import org.scalatest.funsuite.AnyFunSuite
   * script compiler, so any divergence in join construction, condition
   * compilation, set semantics (dedup), or aggregation grouping
   * (aggregate over DISTINCT full bindings — Datalog set semantics)
-  * surfaces as a failed seed with its program printed.
+  * surfaces as a failed seed with its program printed. Every query
+  * runs on a db holding relation copies and on one without.
   */
 class DifferentialFuzzSpec extends AnyFunSuite {
   lazy val spark = SparkFixture.spark
 
-  private lazy val db: CozoDb = {
+  /** The fuzz tables on a db holding their relation copies (rules over
+    * them run on the driver where it can), and on a db without copies
+    * (`DriverIndexBytes -> 0`: every read on Spark), each with the limits
+    * its runs take. */
+  private lazy val dbs: Seq[(String, CozoDb, Seq[(Knee.Limit, Long)])] = {
     import spark.implicits._
     val t = (0 until 60).map(i => ((i % 13).toLong, ((i * 7) % 17).toLong, s"s${i % 5}"))
       .distinct.toDF("a", "b", "c")
@@ -24,11 +30,20 @@ class DifferentialFuzzSpec extends AnyFunSuite {
       .distinct.toDF("x", "y")
     t.createOrReplaceTempView("fuzz_t")
     s2.createOrReplaceTempView("fuzz_s2")
-    val d = new CozoDb(spark)
-    d.registerTable("t", t, Seq("a", "b", "c"))
-    d.registerTable("s2", s2, Seq("x", "y"))
-    d
+    def mk(): CozoDb = {
+      val d = new CozoDb(spark)
+      d.registerTable("t", t, Seq("a", "b", "c"))
+      d.registerTable("s2", s2, Seq("x", "y"))
+      d
+    }
+    val held = mk()
+    assert(held.store.relationCopy("t").isDefined && held.store.relationCopy("s2").isDefined)
+    Seq(("copies", held, Nil), ("no copies", mk(), Seq(Knee.DriverIndexBytes -> 0L)))
   }
+
+  /** `script`'s rows on each db of [[dbs]], by the db's name. */
+  private def runAll(script: String): Seq[(String, Seq[org.apache.spark.sql.Row])] =
+    dbs.map { case (name, d, limits) => name -> Knee.withLimits(limits: _*)(d.run(script).collect().toSeq) }
 
   private def norm(rows: Seq[org.apache.spark.sql.Row]): Set[Seq[Any]] =
     rows.map(_.toSeq.map {
@@ -107,11 +122,14 @@ class DifferentialFuzzSpec extends AnyFunSuite {
         }
 
       try {
-        val got = norm(db.run(script).collect().toSeq)
+        val runs = runAll(script) // first: it registers the SQL side's views
         val want = norm(spark.sql(sql).collect().toSeq)
-        if (got != want)
-          failures += s"seed $seed:\n  script: $script\n  sql: $sql\n  " +
-            s"only-script: ${(got -- want).take(3)}\n  only-sql: ${(want -- got).take(3)}"
+        for ((name, rows) <- runs) {
+          val got = norm(rows)
+          if (got != want)
+            failures += s"seed $seed ($name):\n  script: $script\n  sql: $sql\n  " +
+              s"only-script: ${(got -- want).take(3)}\n  only-sql: ${(want -- got).take(3)}"
+        }
       } catch {
         case e: Throwable =>
           failures += s"seed $seed THREW ${e.getClass.getSimpleName}: ${e.getMessage}\n  script: $script\n  sql: $sql"
@@ -165,12 +183,14 @@ class DifferentialFuzzSpec extends AnyFunSuite {
         s"""SELECT * FROM (SELECT DISTINCT $selectCols $sqlFrom WHERE $cond)
            |ORDER BY $orderBy LIMIT $limit""".stripMargin
       try {
-        val got = db.run(script).collect().toSeq.map(_.toSeq.map {
-          case n: java.lang.Number => n.doubleValue(); case o => o })
+        val runs = runAll(script)
         val want = spark.sql(sql).collect().toSeq.map(_.toSeq.map {
           case n: java.lang.Number => n.doubleValue(); case o => o })
-        if (got != want) // ORDERED compare: sort+limit must agree row-for-row
-          failures += s"seed $seed:\n  script: ${script.replace("\n", " ")}\n  sql: ${sql.replace("\n", " ")}\n  got: ${got.take(4)}\n  want: ${want.take(4)}"
+        for ((name, rows) <- runs) {
+          val got = rows.map(_.toSeq.map { case n: java.lang.Number => n.doubleValue(); case o => o })
+          if (got != want) // ORDERED compare: sort+limit must agree row-for-row
+            failures += s"seed $seed ($name):\n  script: ${script.replace("\n", " ")}\n  sql: ${sql.replace("\n", " ")}\n  got: ${got.take(4)}\n  want: ${want.take(4)}"
+        }
       } catch {
         case e: Throwable =>
           failures += s"seed $seed THREW ${e.getClass.getSimpleName}: ${String.valueOf(e.getMessage).take(200)}\n  script: ${script.replace("\n", " ")}\n  sql: ${sql.replace("\n", " ")}"

@@ -125,6 +125,25 @@ class DriverIndexSpec extends AnyFunSuite {
     assertSame(dbs, probe)
   }
 
+  test("FTS over a Double key: a :put of 0.0 replaces the base's -0.0 document; driver == distributed == view") {
+    import spark.implicits._
+    val dbs = pair()
+    for (side <- Seq(dbs._1, dbs._2)) side { db =>
+      db.registerTable("docs", Seq((-0.0, "apple pie", 0L), (1.5, "cherry", 1L)).toDF("k", "v", "g"), Seq("k"))
+      db.run("::fts create docs:fts {extractor: v, tokenizer: Simple, filters: [Lowercase]}").collect()
+    }
+    def probe(term: String) = s"?[k] := ~docs:fts{k | query: '$term', k: 10}"
+    def view(term: String) = s"?[k] := *docs{k, v}, str_includes(v, '$term')"
+    assert(assertSame(dbs, probe("apple")).length == 1)
+    both(dbs)("?[k, v, g] <- [[0.0, 'banana split', 0]] :put docs {k => v, g}")
+    for (term <- Seq("apple", "banana", "cherry")) {
+      val hits = assertSame(dbs, probe(term))
+      assert(hits == dbs._1(rows(_, view(term))), s"$term: the index answers as the view reads")
+    }
+    assert(dbs._1(rows(_, probe("apple"))).isEmpty)
+    assert(dbs._1.db.store.indexDriverPatches == 1)
+  }
+
   test("a failed :insert or :delete rebuilds no index and no relation copy") {
     val sides = Seq("driver" -> new Side(new CozoDb(spark)),
       "distributed" -> new Side(new CozoDb(spark), Knee.DriverIndexBytes -> -1L),

@@ -27,14 +27,16 @@ class MutationFuzzSpec extends AnyFunSuite {
   lazy val spark = SparkFixture.spark
 
   /** `body` with write overlays and const rules bounded to `bound` rows
-    * (None: the default bounds). */
-  private def underBound[A](bound: Option[Int])(body: => A): A =
+    * (None: the default bounds), and with no relation copy unless `copies`. */
+  private def underBound[A](bound: Option[Int], copies: Boolean = true)(body: => A): A =
     Knee.withLimits(bound.toSeq.flatMap(b =>
-      Seq(Knee.PatchKeys -> b.toLong, Knee.LocalRows -> b.toLong)): _*)(body)
+      Seq(Knee.PatchKeys -> b.toLong, Knee.LocalRows -> b.toLong)) ++
+      Option.when(!copies)(Knee.DriverIndexBytes -> 0L): _*)(body)
 
   /** Divergences of `seeds` random chains of `steps` ops from the model,
-    * on databases whose overlay bound is `bound` (None: the default). */
-  private def fuzz(seeds: Int, steps: Int, bound: Option[Int]): Seq[String] = underBound(bound) {
+    * on databases whose overlay bound is `bound` (None: the default),
+    * with relation copies unless `copies` is false. */
+  private def fuzz(seeds: Int, steps: Int, bound: Option[Int], copies: Boolean = true): Seq[String] = underBound(bound, copies) {
     val failures = scala.collection.mutable.ArrayBuffer.empty[String]
     for (seed <- 0 until seeds) {
       val rnd = new scala.util.Random(seed * 30011 + 101)
@@ -127,6 +129,14 @@ class MutationFuzzSpec extends AnyFunSuite {
           if (at != model.get(key).toSeq)
             failures += s"seed $seed step $step: read of key $key diverged\n  got:   $at\n  model: ${model.get(key)}\n  ${log.mkString("\n  ")}"
         }
+        // a key-range aggregate: with a copy, a slice of it folded on the driver
+        val inRange = model.toSeq.collect { case (Some(kk), v) if kk >= 1 && kk < 4 => v }
+        val wantAgg = (inRange.length.toLong, Option.when(inRange.nonEmpty)(inRange.map(_._1).sum),
+          Option.when(inRange.nonEmpty)(inRange.map(_._2).max))
+        val gotAgg = db.run(s"?[count(k), sum(a), max(b)] := *m$seed{k, a, b}, k >= 1, k < 4").collect().toSeq
+          .map(r => (r.getLong(0), Option(r.get(1)), Option(r.get(2))))
+        if (gotAgg != Seq(wantAgg))
+          failures += s"seed $seed step $step: range aggregate diverged\n  got:   $gotAgg\n  model: $wantAgg\n  ${log.mkString("\n  ")}"
       }
     }
     failures.toSeq
@@ -145,6 +155,10 @@ class MutationFuzzSpec extends AnyFunSuite {
 
   test("the keyed model holds when chains fill and fold a 3-key overlay") {
     assertNone(fuzz(8, 40, Some(3)))
+  }
+
+  test("the keyed model holds with no relation copy (every read on Spark)") {
+    assertNone(fuzz(10, 14, None, copies = false))
   }
 
   /** Sorted rows of `script` on a default-bound and a bound-0 database

@@ -104,6 +104,77 @@ class RelationCopySpec extends AnyFunSuite {
     assert(rows(db, hop1("edges")) == Set(Seq(3L)) && rows(db, hop2("edges")) == Set(Seq(3L)))
   }
 
+  private val day = 86400000000L
+  private val t0 = 1704067200000000L // 2024-01-01T00:00:00Z in µs
+  private def ts(us: Long) = new java.sql.Timestamp(us / 1000)
+
+  /** Order lines keyed by (l_orderkey, l_linenumber), some flags and
+    * quantities NULL; a price history keyed by (k, vld, is_assert) with
+    * validity vld: NULL validities and flags, and an assert beside a
+    * retract (and a NULL flag) at one instant. */
+  private def keyRangeDb(): CozoDb = {
+    val db = new CozoDb(spark)
+    val lines = for (ok <- 0L until 400L; ln <- 1L to ok % 7 + 1) yield
+      (ok, ln, Option(Seq("R", "A", "N")(((ok + ln) % 3).toInt)).filter(_ => ok % 11 != 0),
+        Option((ok * ln % 50) + 0.5).filter(_ => ok * ln % 13 != 0))
+    db.registerTable("lineitem", lines.toDF("l_orderkey", "l_linenumber", "l_returnflag", "l_quantity"),
+      Seq("l_orderkey", "l_linenumber"))
+    val versions = for (k <- 0L until 60L; j <- 0L to k % 5) yield
+      (k, Option(ts(t0 + (k * 7 + j * 13) % 50 * day)).filter(_ => !(k % 17 == 3 && j == 0)),
+        Option(j == 0 || (k + j) % 3 != 0).filter(_ => !(k % 19 == 5 && j == 1)), k * 10.0 + j)
+    val ties = Seq((60L, Some(ts(t0 + 5 * day)), Some(false), 1.0), (60L, Some(ts(t0 + 5 * day)), Some(true), 2.0),
+      (61L, Some(ts(t0 + 5 * day)), None, 3.0), (61L, Some(ts(t0 + 5 * day)), Some(false), 4.0))
+    db.registerTable("prices", (versions ++ ties).toDF("k", "vld", "is_assert", "p"), Seq("k", "vld", "is_assert"),
+      validity = Some("vld"), validityAssert = Some("is_assert"))
+    db
+  }
+  private def agg(lo: Long, hi: Long) =
+    s"?[f, sum(q), count(ln)] := *lineitem{l_orderkey: k, l_linenumber: ln, l_returnflag: f, l_quantity: q}, " +
+      s"k >= $lo, k < $hi"
+  private def asof(t: Any, lo: Long) = s"?[k, p] := *prices{k, p @ $t}, k >= $lo, k < ${lo + 40}"
+
+  /** `q`'s rows on `db`, checked to run no Spark job, and on `pinned` (no copies). */
+  private def driverRows(db: CozoDb, pinned: CozoDb, q: String): Set[Seq[Any]] = {
+    var got = Set.empty[Seq[Any]]
+    val counts = ListenerBridge.measure(spark.sparkContext, "relation-copy-ranges") { got = rows(db, q) }
+    assert(counts.jobs == 0, s"$q: $counts")
+    assert(got == Knee.withLimits(Knee.DriverIndexBytes -> 0L)(rows(pinned, q)), q)
+    got
+  }
+
+  test("agg- and asof-shaped key-range rules build their copies once, then run no Spark job, also after a :put") {
+    val db = keyRangeDb()
+    val pinned = Knee.withLimits(Knee.DriverIndexBytes -> 0L)(keyRangeDb())
+    val (_, built) = KneeLog.capture { rows(db, agg(0, 10)); rows(db, asof(t0, 0)) }
+    assert(built.count(_.contains("op=relation_copy")) == 2 && db.store.relationCopyBuilds == 2, built)
+    for ((lo, hi) <- Seq((0L, 10L), (37L, 300L), (395L, 500L), (-5L, 3L), (50L, 40L), (400L, 401L)))
+      driverRows(db, pinned, agg(lo, hi))
+    // past the local-rows cap the slice is folded as it is read
+    Knee.withLimits(Knee.LocalRows -> 100L)(assert(driverRows(db, pinned, agg(0, 400)).size == 4))
+    for (t <- Seq(t0 - day, t0, t0 + 5 * day, t0 + 20 * day + 1, t0 + 60 * day, "'END'"); lo <- Seq(-10L, 0L, 25L))
+      driverRows(db, pinned, asof(t, lo))
+    assert(driverRows(db, pinned, asof(t0 + 5 * day, 30)).contains(Seq(60L, 2.0)), "the assert outranks the retract")
+    for (put <- Seq(s"?[k, vld, p] <- [[3, [${t0 + day}, true], 9.5]] :put prices {k, vld => p}",
+                    s"?[k, vld, p] <- [[4, [${t0 + 2 * day}, false], 1.5]] :put prices {k, vld => p}")) {
+      db.run(put).collect()
+      Knee.withLimits(Knee.DriverIndexBytes -> 0L)(pinned.run(put).collect())
+      for (t <- Seq(t0 + day, t0 + 3 * day)) driverRows(db, pinned, asof(t, 0))
+    }
+    assert(db.store.relationCopyBuilds == 2 && db.store.relationCopyPatches == 2)
+    // an as-of time the driver does not evaluate: Spark reads the copy's relation
+    assert(rows(db, asof("'NOW'", 0)) == Knee.withLimits(Knee.DriverIndexBytes -> 0L)(rows(pinned, asof("'NOW'", 0))))
+  }
+
+  test("a one-sided key bound reads only a copy already held") {
+    val db = keyRangeDb()
+    rows(db, "?[ln] := *lineitem{l_orderkey: k, l_linenumber: ln}, k >= 390")
+    rows(db, "?[k, p] := *prices{k, p @ 'END'}, k < 3")
+    assert(db.store.relationCopyBuilds == 0)
+    rows(db, agg(0, 1))
+    val pinned = Knee.withLimits(Knee.DriverIndexBytes -> 0L)(keyRangeDb())
+    driverRows(db, pinned, "?[ln] := *lineitem{l_orderkey: k, l_linenumber: ln}, k >= 390")
+  }
+
   test("a rule over copies whose unused binding overflows ends as the db without copies ends") {
     val overflow = "?[a, b] := *chain[a, b], x = 9223372036854775807 + a"
     // key-anchored: the read builds the copy it reads

@@ -1,6 +1,7 @@
 package graft.lang
 
 import graft.SparkFixture
+import graft.plan.Knee
 import org.scalatest.funsuite.AnyFunSuite
 
 /** Time-travel differential fuzz + the exact `@ spec` coercion table of
@@ -11,7 +12,9 @@ import org.scalatest.funsuite.AnyFunSuite
   * "END" are sentinels, other strings must parse RFC3339 (str2vld,
   * functions.rs:2520), floats are accepted only when integral, and
   * everything else — including non-constant expressions — is "bad
-  * specification of validity".
+  * specification of validity". Random histories are read both on a db
+  * whose key-range reads run on the driver over the relation's copy and
+  * on one without copies.
   */
 class ValidityFuzzSpec extends AnyFunSuite {
   lazy val spark = SparkFixture.spark
@@ -39,8 +42,13 @@ class ValidityFuzzSpec extends AnyFunSuite {
     val failures = scala.collection.mutable.ArrayBuffer.empty[String]
     for (seed <- 0 until 40) {
       val rnd = new scala.util.Random(seed * 6007 + 29)
-      val db = new CozoDb(spark)
-      db.run(s":create h$seed {k, v: Validity => d}")
+      // one db reads its key ranges on the driver over the relation's
+      // copy, the other holds no copy (every read on Spark)
+      val dbs = Seq(("copies", new CozoDb(spark), Seq.empty[(Knee.Limit, Long)]),
+        ("no copies", new CozoDb(spark), Seq(Knee.DriverIndexBytes -> 0L)))
+      def onAll[A](body: CozoDb => A): Seq[(String, A)] =
+        dbs.map { case (name, db, limits) => name -> Knee.withLimits(limits: _*)(body(db)) }
+      onAll(_.run(s":create h$seed {k, v: Validity => d}"))
       val nKeys = 2 + rnd.nextInt(4)
       // distinct (key, ts) pairs — same-instant double writes are a
       // keyed upsert, not history
@@ -49,19 +57,21 @@ class ValidityFuzzSpec extends AnyFunSuite {
         .take(8 + rnd.nextInt(20))
         .map { case (k, ts) => (k.toLong, ts.toLong, rnd.nextInt(3) != 0, rnd.nextInt(100).toLong) }
       val lits = events.map { case (k, ts, a, d) => s"[$k, [$ts, $a], $d]" }.mkString(", ")
-      db.run(s"?[k, v, d] <- [$lits] :put h$seed {k, v => d}")
+      onAll(_.run(s"?[k, v, d] <- [$lits] :put h$seed {k, v => d}"))
       for (_ <- 0 until 4) {
         val t = 1 + rnd.nextInt(45)
-        val got = db.run(s"?[k, d] := *h$seed{k, d @ $t}").collect()
-          .map(r => (r.getLong(0), r.getLong(1))).toSet
+        val lo = t % nKeys
         // naive: per key, the latest event at ts ≤ t; visible iff assert
         val want = events.groupBy(_._1).flatMap { case (k, es) =>
           es.filter(_._2 <= t).sortBy(_._2).lastOption.collect {
             case (_, _, true, d) => (k, d)
           }
         }.toSet
-        if (got != want)
-          failures += s"seed $seed @ $t µs: got $got want $want\n  events: $events"
+        for ((q, wanted) <- Seq(s"?[k, d] := *h$seed{k, d @ $t}" -> want,
+                               s"?[k, d] := *h$seed{k, d @ $t}, k >= $lo, k < $nKeys" -> want.filter(_._1 >= lo));
+             (name, got) <- onAll(_.run(q).collect().map(r => (r.getLong(0), r.getLong(1))).toSet)
+             if got != wanted)
+          failures += s"seed $seed @ $t µs ($name): $q got $got want $wanted\n  events: $events"
       }
     }
     assert(failures.isEmpty, s"${failures.length} diverging seeds:\n${failures.mkString("\n")}")

@@ -195,6 +195,39 @@ class WriteOverlaySpec extends AnyFunSuite {
     assert(rows(db, "?[count(k)] := *o{k}") == Seq("199"))
   }
 
+  test("integer literals put into an int column are absorbed and keep its type; a value past int folds") {
+    val db = new CozoDb(spark)
+    db.registerTable("lab", spark.range(0, 20).selectExpr("id as k", "cast(id % 10 as int) as label"), Seq("k"))
+    def labelType = db.store.records("lab").view.schema("label").dataType
+    db.run("?[k, label] <- [[100, 7], [3, -2]] :put lab {k => label}").collect()
+    assert(db.store.overlayWrites == 1 && db.store.overlayFolds == 0)
+    assert(labelType == org.apache.spark.sql.types.IntegerType)
+    assert(rows(db, "?[k, label] := *lab{k, label}, k > 2, k < 5") == Seq("3|-2", "4|4"))
+    assert(rows(db, "?[label] := *lab{k: 100, label}") == Seq("7"))
+    db.run(s"?[k, label] <- [[101, ${1L << 40}]] :put lab {k => label}").collect()
+    assert(db.store.overlayWrites == 1 && db.store.overlayFolds == 1)
+    assert(rows(db, "?[label] := *lab{k: 101, label}") == Seq((1L << 40).toString))
+    assert(rows(db, "?[label] := *lab{k: 100, label}") == Seq("7"))
+  }
+
+  test("a folded write of a fetched delta keeps one row per key on the driver") {
+    val big = 1L << 40 // past int: each first write to an int column folds
+    val db = new CozoDb(spark)
+    for (rel <- Seq("f", "g", "h"))
+      db.registerTable(rel, spark.range(0, 50).selectExpr("id as k", "cast(id as int) as v"), Seq("k"))
+    val put = jobs(db.run(s"?[k, v] <- [[1, $big], [1, 5], [60, 7]] :put f {k => v}").collect())
+    val insert = jobs(db.run(s"?[k, v] <- [[70, $big], [71, 2]] :insert g {k => v}").collect())
+    // the window (:put) and the grouping job (:insert) over the delta took 4 jobs each
+    assert(put <= 1 && insert <= 2, s"folded :put $put jobs, folded :insert $insert")
+    assert(db.store.overlayFolds == 2 && db.store.overlayWrites == 0)
+    assert(rows(db, "?[v] := *f{k: 1, v}") == Seq(big.toString))
+    assert(rows(db, "?[k, v] := *f{k, v}, k > 55") == Seq("60|7"))
+    assert(rows(db, "?[k, v] := *g{k, v}, k > 55") == Seq(s"70|$big", "71|2"))
+    val e = intercept[Exception](db.run(s"?[k, v] <- [[80, $big], [80, 1]] :insert h {k => v}").collect())
+    assert(e.getMessage.contains("repeat a key"), e)
+    assert(rows(db, "?[count(k)] := *h{k}") == Seq("50") && db.store.overlayFolds == 2)
+  }
+
   test("writes past the bound fold once, then the overlay starts over") {
     val db = new CozoDb(spark)
     orders(db)

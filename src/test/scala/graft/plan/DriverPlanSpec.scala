@@ -117,6 +117,103 @@ class DriverPlanSpec extends AnyFunSuite {
     }
   }
 
+  test("literal range bounds after an equality prefix read one run of the copy, as the filter path keeps them") {
+    for (shape <- shapes; seed <- 1 to 4) {
+      val rng = new Random(seed)
+      val (sorted, plain) = copies(shape, shape.rows(rng, 300))
+      def pick(pool: Seq[Any]): Any = pool(1 + rng.nextInt(pool.length - 1))
+      val (ta, tb) = (shape.a._1, shape.b._1)
+      val Seq(a, a2) = Seq.fill(2)(pick(shape.a._2))
+      val (b, b2) = (pick(shape.b._2), pick(shape.b._2))
+      val (lo, hi) = (lit(a).cast(ta), lit(a2).cast(ta)) // either order: some ranges are inverted
+      val filters: Seq[(String, DataFrame => DataFrame)] = Seq(
+        "a > v" -> (_.filter(col("a") > lo)),
+        "a >= v" -> (_.filter(col("a") >= lo)),
+        "a < v" -> (_.filter(col("a") < lo)),
+        "a <= v" -> (_.filter(col("a") <= lo)),
+        "v > a (flipped)" -> (_.filter(lo > col("a"))),
+        "v <= a (flipped)" -> (_.filter(lo <= col("a"))),
+        "v <= a < w" -> (_.filter(col("a") >= lo && col("a") < hi)),
+        "v < a <= w, stacked" -> (_.filter(col("a") > lo).filter(col("a") <= hi)),
+        "v < a < v (empty)" -> (_.filter(col("a") > lo && col("a") < lo)),
+        "a > null" -> (_.filter(col("a") > lit(null).cast(ta))),
+        "a = v, b > w" -> (_.filter(col("a") === lo && col("b") > lit(b).cast(tb))),
+        "a = v, w <= b <= x, stacked" -> (_.filter(col("a") === lo).filter(col("b") >= lit(b).cast(tb))
+          .filter(col("b") <= lit(b2).cast(tb))),
+        "a <=> null, b < w" -> (_.filter(col("a") <=> lit(null).cast(ta) && col("b") < lit(b).cast(tb))),
+        "renamed, range, residual" -> (_.select(col("b").as("bb"), col("a").as("aa"), col("c"))
+          .filter(col("aa") >= lo).filter(col("c").isNotNull)),
+        "only b ranged" -> (_.filter(col("b") > lit(b).cast(tb))))
+      for ((name, q) <- filters)
+        check(s"${shape.name} seed $seed: $name", sorted, plain, 299L, inPlace = name != "only b ranged")(q)
+    }
+    // NaN is above every double and -0.0 is 0.0, as Spark compares them
+    val shape = shapes.last
+    val (sorted, plain) = copies(shape, shape.rows(new Random(11), 300))
+    for ((name, q) <- Seq[(String, DataFrame => DataFrame)](
+        "a >= NaN" -> (_.filter(col("a") >= lit(Double.NaN))),
+        "a < NaN" -> (_.filter(col("a") < lit(Double.NaN))),
+        "a >= -0.0" -> (_.filter(col("a") >= lit(-0.0))),
+        "-0.0 < a <= 0.0" -> (_.filter(col("a") > lit(-0.0) && col("a") <= lit(0.0)))))
+      check(s"double bound: $name", sorted, plain, 299L, inPlace = true)(q)
+  }
+
+  test("an aggregate over a key slice folds it as it reads it: the cap then applies to the groups") {
+    val shape = shapes.head
+    val (sorted, plain) = copies(shape, shape.rows(new Random(3), 300))
+    val q: DataFrame => DataFrame = _.filter(col("a") >= lit(1L)).filter(col("a") < lit(5L))
+      .groupBy(col("b")).agg(org.apache.spark.sql.functions.count(lit(1)), org.apache.spark.sql.functions.sum(col("a")))
+    val run = eval(q(frame(sorted)).select(org.apache.spark.sql.functions.sum(col("count(1)")))).head.getLong(0)
+    assert(run > 100, "the slice holds more rows than the cap below")
+    assert(values(eval(q(frame(sorted)), 20L), q(frame(sorted)).schema) ==
+      values(eval(q(frame(plain))), q(frame(plain)).schema))
+    intercept[DriverPlan.Unsupported](eval(q(frame(plain)), 20L))
+    intercept[DriverPlan.Unsupported](eval(q(frame(sorted)), 3L)) // five groups
+  }
+
+  test("sum, count, mean, min and max over int, long, double and decimal equal Spark's") {
+    import org.apache.spark.sql.functions.{avg, count, max, min, sum}
+    val schema = StructType(Seq(StructField("g", StringType), StructField("i", IntegerType),
+      StructField("l", LongType), StructField("d", DoubleType), StructField("m", DecimalType(10, 2))))
+    val rng = new Random(5)
+    def maybe[A](a: => A): Any = if (rng.nextInt(5) == 0) null else a
+    // doubles are multiples of 1/4 and longs below 2^43, so every
+    // summation order of a double sum or a long mean is exact
+    val rows = IndexedSeq.fill(200)(new GenericInternalRow(Array[Any](
+      maybe(UTF8String.fromString(Seq("x", "y", "z")(rng.nextInt(3)))), maybe(rng.nextInt(2000) - 1000),
+      maybe(rng.nextLong() >> 20), maybe((rng.nextInt(4000) - 2000) / 4.0),
+      maybe(org.apache.spark.sql.types.Decimal(BigDecimal(rng.nextInt(100000) - 50000, 2), 10, 2)))): InternalRow)
+    val data = DriverPlan.frame(spark, new DriverRows(schema, rows))
+    val aggs = Seq("i", "l", "d", "m").flatMap(c => Seq(sum(col(c)), avg(col(c)), min(col(c)), max(col(c)), count(col(c)))) :+
+      count(lit(1))
+    def external(df: DataFrame): Seq[Seq[Any]] = {
+      val conv = org.apache.spark.sql.catalyst.CatalystTypeConverters.createToScalaConverter(df.schema)
+      eval(df).map(conv(_).asInstanceOf[org.apache.spark.sql.Row].toSeq).sortBy(_.toString)
+    }
+    val empty = data.filter(lit(false))
+    for ((name, df) <- Seq(
+        "grouped" -> data.groupBy(col("g")).agg(aggs.head, aggs.tail: _*),
+        "global" -> data.agg(aggs.head, aggs.tail: _*),
+        "empty, grouped" -> empty.groupBy(col("g")).agg(aggs.head, aggs.tail: _*),
+        "empty, global" -> empty.agg(aggs.head, aggs.tail: _*),
+        "all NULL" -> data.filter(col("i").isNull && col("l").isNull).agg(aggs.head, aggs.tail: _*))) {
+      assert(external(df) == df.collect().map(_.toSeq).toSeq.sortBy(_.toString), name)
+    }
+    // an ANSI overflow raises on both engines (the driver then hands the plan to Spark)
+    val big = DriverPlan.frame(spark, new DriverRows(StructType(Seq(StructField("l", LongType))),
+      IndexedSeq(Long.MaxValue, 1L).map(v => new GenericInternalRow(Array[Any](v)): InternalRow)))
+    def overflows(body: => Any): Unit = {
+      val e = intercept[Exception](body)
+      assert(Iterator.iterate[Throwable](e)(_.getCause).takeWhile(_ != null)
+        .exists(_.isInstanceOf[ArithmeticException]), e)
+    }
+    overflows(eval(big.agg(sum(col("l")))))
+    overflows(big.agg(sum(col("l"))).collect())
+    // an aggregate Catalyst does not define declaratively is refused
+    intercept[DriverPlan.Unsupported](eval(data.agg(org.apache.spark.sql.functions.collect_list(col("i")))))
+    intercept[DriverPlan.Unsupported](eval(data.agg(org.apache.spark.sql.functions.countDistinct(col("i")))))
+  }
+
   test("non-prefix keys, a cast on the copy key and non-inner joins take the hash path") {
     val shape = shapes.head
     val rng = new Random(7)

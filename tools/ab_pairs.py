@@ -14,9 +14,11 @@ into its own `.bench_build/`; nothing is written under `perfbench/`.
 
 With --by-op it also reads each run's
 `.bench_build/work/<workload>-<seed>-trace0/measurements.jsonl` and prints,
-per op class, both sides' median wall time over the first op cycle after
-the warm-up (the cycle `items_per_s` measures), so an A/B shows which op
-classes moved.
+per op of the first op cycle after the warm-up (the cycle `items_per_s`
+measures), both sides' median wall time over the runs. An op is named by
+its class and its position among that class's ops in the cycle (`hnsw#1`,
+`hnsw#2`, `fts#1`, ...), so a cost that only the first probe after a write
+pays is not averaged away, and an A/B shows which ops moved.
 """
 import argparse
 import json
@@ -48,8 +50,9 @@ def run_one(root, workload, seed, seconds):
 
 
 def first_cycle_ms(root, workload, seed):
-    """Wall ms per op class (median within the class) over the first op
-    cycle of one run's main pass; {} when its measurements are missing."""
+    """Wall ms of each op of the first op cycle of one run's main pass,
+    keyed `<class>#<n>` for the class's n-th op in the cycle; {} when its
+    measurements are missing."""
     path = os.path.join(root, ".bench_build", "work", f"{workload}-{seed}-trace0",
                         "measurements.jsonl")
     if not os.path.exists(path):
@@ -64,29 +67,30 @@ def first_cycle_ms(root, workload, seed):
         sys.modules.pop("gen", None)
     with open(path) as f:
         ops = [r for r in map(json.loads, f) if r.get("type") == "op" and r.get("pass") == "main"]
-    by_cls = {}
+    out, seen = {}, {}
     for o in sorted(ops, key=lambda o: o["id"])[:cycle]:
-        by_cls.setdefault(o["cls"], []).append((o["end"] - o["start"]) / 1000.0)
-    return {c: statistics.median(ms) for c, ms in by_cls.items()}
+        seen[o["cls"]] = seen.get(o["cls"], 0) + 1
+        out[f"{o['cls']}#{seen[o['cls']]}"] = (o["end"] - o["start"]) / 1000.0
+    return out
 
 
 def print_by_op(pairs):
-    """Both sides' median over the runs of each class's first-cycle ms."""
-    classes = []
+    """Both sides' median over the runs of each first-cycle op's ms."""
+    names = []
     for p, c in pairs:
-        for cls in list(p.get("by_op", {})) + list(c.get("by_op", {})):
-            if cls not in classes:
-                classes.append(cls)
-    print(f"\nfirst-cycle ms per op class (median over runs)")
-    print(f"{'op class':<14} {'parent':>10} {'change':>10} {'Δ':>8}")
-    for cls in classes:
-        a = [p["by_op"][cls] for p, _ in pairs if cls in p.get("by_op", {})]
-        b = [c["by_op"][cls] for _, c in pairs if cls in c.get("by_op", {})]
+        for op in list(p.get("by_op", {})) + list(c.get("by_op", {})):
+            if op not in names:
+                names.append(op)
+    print("\nfirst-cycle ms per op (median over runs)")
+    print(f"{'op':<16} {'parent':>10} {'change':>10} {'Δ':>8}")
+    for op in names:
+        a = [p["by_op"][op] for p, _ in pairs if op in p.get("by_op", {})]
+        b = [c["by_op"][op] for _, c in pairs if op in c.get("by_op", {})]
         if not a or not b:
             continue
         am, bm = statistics.median(a), statistics.median(b)
         d = f"{(bm - am) / am:+.1%}" if am else "n/a"
-        print(f"{cls:<14} {am:>10.1f} {bm:>10.1f} {d:>8}")
+        print(f"{op:<16} {am:>10.1f} {bm:>10.1f} {d:>8}")
 
 
 def quartiles(xs):
@@ -128,7 +132,7 @@ def main():
     ap.add_argument("--seconds", type=float, default=20)
     ap.add_argument("--out", help="append every run's result as a JSON line")
     ap.add_argument("--by-op", action="store_true",
-                    help="also print first-cycle per-op-class medians for both sides")
+                    help="also print both sides' first-cycle medians per op (class#position)")
     a = ap.parse_args()
 
     with open(os.path.join(a.change, "BENCHMARK.json")) as f:
